@@ -1,11 +1,12 @@
 """Build file of the benchmark: compiles the engine (src/main/scala) and the
 benchmark (perfbench/scala) from source with the Scala compiler that ships
-in Spark's jars directory, into .bench_build/perfbench/classes.
+in Spark's jars directory, into .bench_build/perfbench/perfbench.jar.
 
     python3 perfbench/build.py      # build if sources changed; print classpath
 
 A stamp of the source contents skips the compile when nothing changed.
-SPARK_HOME defaults to /opt/spark.
+Spark's jars come from $SPARK_HOME/jars, or else from the jars directory
+the repository's build.sbt declares as its unmanaged base.
 """
 import glob
 import hashlib
@@ -14,11 +15,18 @@ import re
 import shutil
 import subprocess
 import sys
+import zipfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 OUT = os.path.join(ROOT, ".bench_build", "perfbench")
 ENGINE_SRC = os.path.join(ROOT, "src", "main", "scala")
+JAR = os.path.join(OUT, "perfbench.jar")
+# the JVM class-data archive recorded against this jar (run.py); a new
+# jar invalidates it
+ARCHIVE = os.path.join(OUT, "classes.jsa")
+# build.sbt's Spark jars directory: unmanagedBase := file("<dir>")
+SBT_JARS = re.compile(r'unmanagedBase\s*:=\s*file\("([^"]+)"\)')
 
 
 class BuildError(Exception):
@@ -26,10 +34,21 @@ class BuildError(Exception):
 
 
 def spark_jars():
-    home = os.environ.get("SPARK_HOME", "/opt/spark")
-    jars = sorted(glob.glob(os.path.join(home, "jars", "*.jar")))
+    home = os.environ.get("SPARK_HOME")
+    if home:
+        where = os.path.join(home, "jars")
+    else:
+        try:
+            with open(os.path.join(ROOT, "build.sbt")) as f:
+                m = SBT_JARS.search(f.read())
+        except OSError:
+            m = None
+        if m is None:
+            raise BuildError("no Spark jars: set SPARK_HOME")
+        where = m.group(1)
+    jars = sorted(glob.glob(os.path.join(where, "*.jar")))
     if not jars:
-        raise BuildError(f"no Spark jars under {home}/jars")
+        raise BuildError(f"no Spark jars under {where}")
     return jars
 
 
@@ -53,14 +72,13 @@ def build():
         with open(s, "rb") as f:
             digest.update(f.read())
     stamp = digest.hexdigest()
-    classes = os.path.join(OUT, "classes")
     stamp_file = os.path.join(OUT, "stamp")
-    if os.path.exists(stamp_file) and os.path.isdir(classes):
+    if os.path.exists(stamp_file) and os.path.exists(JAR):
         with open(stamp_file) as f:
             if f.read() == stamp:
-                return [classes] + jars
+                return [JAR] + jars
     os.makedirs(OUT, exist_ok=True)
-    tmp = classes + ".tmp"
+    tmp = os.path.join(OUT, "classes.tmp")
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     args = os.path.join(OUT, "sources.args")
@@ -74,11 +92,20 @@ def build():
            "-d", tmp, "@" + args]
     if subprocess.run(cmd, stdout=sys.stderr).returncode != 0:
         raise BuildError("scalac failed")
-    shutil.rmtree(classes, ignore_errors=True)
-    os.rename(tmp, classes)
+    # a jar, not a directory: the JVM archives classes only from jars
+    for stale in (ARCHIVE, ARCHIVE + ".failed", stamp_file):
+        if os.path.exists(stale):
+            os.remove(stale)
+    with zipfile.ZipFile(JAR + ".tmp", "w", zipfile.ZIP_DEFLATED) as z:
+        for d, _, files in os.walk(tmp):
+            for f in sorted(files):
+                path = os.path.join(d, f)
+                z.write(path, os.path.relpath(path, tmp))
+    os.replace(JAR + ".tmp", JAR)
+    shutil.rmtree(tmp)
     with open(stamp_file, "w") as f:
         f.write(stamp)
-    return [classes] + jars
+    return [JAR] + jars
 
 
 if __name__ == "__main__":

@@ -46,9 +46,16 @@ trait Workload {
   def setup(ctx: Ctx): Unit
   /** One complete batch operation, input to collected result. */
   def batch(ctx: Ctx): BatchOut
+  /** The untimed warm-up before the timed batches: first-run codegen and
+    * JIT are not what a user pays per batch. A workload whose output
+    * checks need a reference computed by the batch's own code builds it
+    * here, once. */
+  def warmup(ctx: Ctx): Unit = batch(ctx): Unit
   /** One closed-loop single query; `None` when the workload's per-item
     * latencies come from [[BatchOut.itemMs]] instead. */
   def query: Option[(Ctx, Int) => Unit]
+  /** The most queries, warm-up included, one set-up can serve. */
+  def maxQueries: Int = Int.MaxValue
   /** Output checks against references, on the last batch's output. */
   def check(ctx: Ctx, last: BatchOut, dropRow: Boolean): Seq[Check]
   /** Workload-specific end-to-end figures (recall, storage ratios). */
@@ -73,13 +80,14 @@ object Main {
     "stream_dedup" -> (() => new StreamDedup))
 
   val SetupReps = 3
-  val MinBatchReps = 2
+  /** Timed batches at least: one, and a traced run alternates a traced
+    * and an untraced one. */
+  def minBatchReps(trace: Boolean): Int = if (trace) 2 else 1
   val MinQueries = 10
-  val WarmQueries = 5
-  val WarmSeconds = 15.0
+  val WarmQueries = 2
   /** Workload-specific per-layer ratios; a workload without one reads 0. */
   val Ratios = Seq("ops.scan_amp", "io.files_written", "ext.vector.scan_frac",
-    "streaming.index_files")
+    "streaming.state_files")
 
   private val json = new ObjectMapper().registerModule(DefaultScalaModule)
   def toJson(v: Any): String = json.writeValueAsString(v)
@@ -99,20 +107,46 @@ object Main {
     s
   }
 
+  /** Runs one workload. A comma-separated list runs each in turn, each
+    * on a fresh session: the class-loading pass whose classes run.py
+    * records into the JVM's class-data archive. */
   def main(args: Array[String]): Unit = {
     val opts = Opts.parse(args)
-    val make = Workloads.getOrElse(opts.workload,
-      throw new IllegalArgumentException(s"unknown workload ${opts.workload}"))
-    val work = s"${opts.root}/.bench_build/work/${opts.workload}-" +
-      ProcessHandle.current().pid()
-    val code =
-      try run(opts, make(), work)
-      finally Files.rmTree(new java.io.File(work))
+    val names = opts.workload.split(',').toSeq
+    val codes = names.map { w =>
+      val make = Workloads.getOrElse(w,
+        throw new IllegalArgumentException(s"unknown workload $w"))
+      val work = s"${opts.root}/.bench_build/work/$w-" +
+        ProcessHandle.current().pid()
+      try {
+        if (names.size > 1) classPass(opts.copy(workload = w), make(), work)
+        else run(opts, make(), work)
+      } catch {
+        case NonFatal(e) =>
+          e.printStackTrace()
+          1
+      } finally {
+        if (names.size > 1) SparkSession.getDefaultSession.foreach(_.stop())
+        Files.rmTree(new java.io.File(work))
+      }
+    }
     System.out.flush()
-    System.exit(code)
+    System.exit(codes.max)
   }
 
   private def median(xs: collection.Seq[Double]): Double = Stats.quantile(xs, 0.5)
+
+  /** Each call of the workload once, untimed: the classes a run loads. */
+  private def classPass(opts: Opts, wl: Workload, work: String): Int = {
+    val ctx = newCtx(session(opts, 4, work), opts, work, trace = false)
+    wl.setup(ctx)
+    wl.warmup(ctx)
+    val out = wl.batch(ctx)
+    wl.query.foreach(q => q(ctx, 0))
+    val ok = wl.check(ctx, out, dropRow = false).forall(_.ok)
+    wl.figures(ctx)
+    if (ok) 0 else 1
+  }
 
   def newCtx(spark: SparkSession, opts: Opts, work: String,
       trace: Boolean): Ctx = {
@@ -122,17 +156,18 @@ object Main {
   }
 
   /** Runs `op` repeatedly until `seconds` have passed and at least `min`
-    * runs are done; returns the wall time of each successful run and the
-    * number that threw. `before` and `after` run untimed around each. */
-  private def loop[T](seconds: Double, min: Int, before: () => Unit = () => (),
-      after: () => Unit = () => ())(op: Int => T)
+    * runs are done, but at most `max` times; returns the wall time of each
+    * successful run and the number that threw. `before` and `after` run
+    * untimed around each. */
+  private def loop[T](seconds: Double, min: Int, max: Int = Int.MaxValue,
+      before: () => Unit = () => (), after: () => Unit = () => ())(op: Int => T)
       : (ArrayBuffer[Double], ArrayBuffer[T], Int) = {
     val times = ArrayBuffer.empty[Double]
     val outs = ArrayBuffer.empty[T]
     var failed = 0
     val end = System.nanoTime() + (seconds * 1e9).toLong
     var i = 0
-    while (i < min || System.nanoTime() < end) {
+    while (i < max && (i < min || System.nanoTime() < end)) {
       before()
       val t0 = System.nanoTime()
       try {
@@ -174,18 +209,14 @@ object Main {
       (System.nanoTime() - s0) / 1e9
     }
     phase("setup")
-    // warm-up: first-run codegen and JIT are not what a user pays per
-    // batch; a cheap batch runs until the warm-up time is spent
-    val warmEnd = System.nanoTime() + (WarmSeconds * 1e9).toLong
-    do tracer.paused(wl.batch(ctx)) while (System.nanoTime() < warmEnd)
-    wl.query.foreach(q => (1 to WarmQueries).foreach(i => tracer.paused(q(ctx, -i))))
+    tracer.paused(wl.warmup(ctx))
     phase("warmup")
 
     val batchSecs = if (wl.query.isDefined) opts.seconds / 2 else opts.seconds
     // traced runs alternate traced and untraced reps so that the
     // overhead of tracing is measured on the same host state
-    val (batchMs, outs, batchFailed) = loop(batchSecs, MinBatchReps,
-        () => storage.startRep(), () => storage.endRep()) { i =>
+    val (batchMs, outs, batchFailed) = loop(batchSecs, minBatchReps(opts.trace),
+        before = () => storage.startRep(), after = () => storage.endRep()) { i =>
       val traced = opts.trace && i % 2 == 0
       val o = if (traced) tracer.span("spark", "batch")(wl.batch(ctx))
               else tracer.paused(wl.batch(ctx))
@@ -196,9 +227,12 @@ object Main {
     val plainMs = batchMs.zip(outs).collect { case (t, (false, _)) => t }
     val itemMs = outs.flatMap(_._2.itemMs)
     val (queryMs, _, queryFailed) = wl.query match {
-      case Some(q) => loop(opts.seconds - batchSecs, MinQueries) { i =>
-        tracer.span("spark", "query")(q(ctx, i))
-      }
+      case Some(q) =>
+        (1 to WarmQueries).foreach(i => tracer.paused(q(ctx, -i)))
+        loop(opts.seconds - batchSecs, MinQueries,
+            wl.maxQueries - WarmQueries) { i =>
+          tracer.span("spark", "query")(q(ctx, i))
+        }
       case None => (ArrayBuffer.empty[Double], ArrayBuffer.empty[Unit], 0)
     }
     phase("queries")
@@ -229,10 +263,13 @@ object Main {
       if (!opts.trace) Map.empty
       else {
         val summary = tracer.summary(cores = 4)
-        val oneCore = singleCore(opts, wl, work, spark)
+        // the ratios read the four-core run's files, before the one-core
+        // run writes its own
+        val ratios = wl.ratios(ctx, summary)
+        val oneCore = singleCore(opts, wl, s"$work/local1", spark)
         checks :+= Check("output hash identical on local[1]",
           oneCore._1 == last.hash, s"${oneCore._1} vs ${last.hash}")
-        summary.metrics ++ Ratios.map(_ -> 0.0) ++ wl.ratios(ctx, summary) ++ Map(
+        summary.metrics ++ Ratios.map(_ -> 0.0) ++ ratios ++ Map(
           "trace.overhead_frac" -> (median(tracedMs) / median(plainMs) - 1),
           "speedup_4v1" -> oneCore._2 / median(plainMs))
       }
@@ -269,9 +306,10 @@ object Main {
     if (correct) 0 else 1
   }
 
-  /** Re-runs the workload's batch once on a one-core session: the output
-    * must not depend on the partition count, and the time ratio is the
-    * four-core speed-up. Returns (hash, wall ms). */
+  /** Re-runs the workload's batch once on a one-core session, in a work
+    * directory of its own: the output must not depend on the partition
+    * count, and the time ratio is the four-core speed-up. Returns (hash,
+    * wall ms). */
   private def singleCore(opts: Opts, wl: Workload, work: String,
       four: SparkSession): (String, Double) = {
     four.stop()

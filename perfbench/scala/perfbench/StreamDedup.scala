@@ -116,6 +116,9 @@ final class StreamDedup extends Workload {
     "stored_bytes_per_input_byte",
     Files.usage(index(ctx))._1.toDouble / textBytes, "x", 1))
 
+  /** The files the stream keeps between micro-batches: its index and its
+    * checkpoint. */
   def ratios(ctx: Ctx, t: TraceSummary): Map[String, Double] = Map(
-    "streaming.index_files" -> Files.usage(index(ctx))._2.toDouble)
+    "streaming.state_files" -> (Files.usage(index(ctx))._2 +
+      Files.usage(s"${dir(ctx)}/ckpt")._2).toDouble)
 }

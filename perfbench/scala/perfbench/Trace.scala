@@ -42,7 +42,7 @@ object Layers {
 
 object LayerUnits {
   def of(metric: String): String = metric.split('.').last match {
-    case "jobs" | "tasks" | "scan_rows" | "index_files" | "files_written" =>
+    case "jobs" | "tasks" | "scan_rows" | "state_files" | "files_written" =>
       "count"
     case "shuffle_mb" | "spill_mb" => "MB"
     case "skew_max" | "scan_amp" | "speedup_4v1" => "x"
@@ -166,6 +166,9 @@ final class Tracer(spark: SparkSession, val enabled: Boolean) {
     if (!enabled || pausedDepth > 0) body
     else {
       val sc = spark.sparkContext
+      // plan events of the parent's queries are delivered asynchronously
+      // and read `current`: deliver them before the child opens
+      PerfbenchBus.drain(sc)
       val parent = current
       val rec = synchronized {
         val r = new SpanRec(spans.size, parent, layer, name,
@@ -191,6 +194,7 @@ final class Tracer(spark: SparkSession, val enabled: Boolean) {
   def paused[T](body: => T): T = {
     if (!enabled) return body
     val sc = spark.sparkContext
+    PerfbenchBus.drain(sc)
     val prev = sc.getLocalProperty(Key)
     val prevCurrent = current
     sc.setLocalProperty(Key, null)
@@ -387,9 +391,9 @@ object Noise {
   }
 
   def sample(): Sample = {
-    spin(); spin()
-    val calib = Seq.fill(5)(spin()).min
-    val calib4 = Seq.fill(3)(spin4()).min
+    spin()
+    val calib = Seq.fill(3)(spin()).min
+    val calib4 = Seq.fill(2)(spin4()).min
     val load = scala.util.Try(scala.io.Source.fromFile("/proc/loadavg")
       .getLines().next().split(' ').head.toDouble).getOrElse(-1.0)
     Sample(calib, calib4, load)
