@@ -932,18 +932,24 @@ object SparkEntry {
 
   /** Run independent Spark actions from a small thread pool so the next
     * job's tasks back-fill executors freed by the current job's tail
-    * (guide §2.6). FIFO scheduling keeps the earlier job first; any
-    * failure propagates to the caller after all threads settle. */
-  private def concurrently[T](items: Seq[T])(f: T => Unit): Unit = {
+    * (guide §2.6). FIFO scheduling keeps the earlier job first. Every
+    * task is awaited before the first failure is rethrown (later ones
+    * ride along as suppressed), so a failed build never returns — and
+    * gets retried — while a sibling is still writing its output. */
+  private[graft] def concurrently[T](items: Seq[T])(f: T => Unit): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(items.size, 4))
     try {
       import scala.concurrent.{Await, ExecutionContext, Future}
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutorService(pool)
-      Await.result(
-        Future.sequence(items.map(it => Future(f(it)))),
-        scala.concurrent.duration.Duration.Inf): Unit
+      val failures = items.map(it => Future(f(it))).flatMap(t =>
+        scala.util.Try(Await.result(t, scala.concurrent.duration.Duration.Inf))
+          .failed.toOption)
+      failures.headOption.foreach { e =>
+        failures.tail.foreach(e.addSuppressed)
+        throw e
+      }
     } finally pool.shutdown()
   }
 
@@ -4629,8 +4635,15 @@ object SparkEntry {
       // pinned scored frame (ExtSpec pins equality against the five-pass
       // formulation rebuilt inline).
       val cuts = Seq(8, 16, 32, 64)
+      // the d = cuts.max cut stands in for full width only if every vector
+      // is exactly that wide: fail loudly in the projection (no extra job)
+      val width = size(col("embedding"))
       val base = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("_v"))
+        .select(col("vec_id"),
+          when(col("embedding").isNotNull && width =!= cuts.max,
+            raise_error(concat(lit("emb_dim_truncate: embedding width "),
+              width.cast("string"), lit(s" != ${cuts.max}"))))
+            .otherwise(col("embedding").cast("array<double>")).as("_v"))
       val q = base.where(col("vec_id") < 32)
         .select(col("vec_id").as("query_id"), col("_v").as("_qv"))
       val scored = graft.ext.Pin.pin(base.repartition(col("vec_id"))

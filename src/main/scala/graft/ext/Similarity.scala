@@ -652,23 +652,53 @@ object Similarity {
       .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 
-  /** Persist a trained IVF index: `<path>/centroids.json` (nLists×dims
-    * doubles) + `<path>/corpus/` parquet PARTITIONED BY list, norms
-    * precomputed. Train once, probe many — the index build amortizes the
-    * k-means cost, and the partitioned layout is what makes the index
-    * real at 100 TB: a probe reads only the probed lists' directories
-    * (static partition pruning), i.e. ~nProbe/nLists of the BYTES on
-    * disk, not just of the in-memory comparisons. */
+  /** Persist a trained IVF index. The layout under `path`:
+    *  - `centroids.json`: nLists×dims doubles;
+    *  - `corpus/`: parquet PARTITIONED BY list, norms precomputed (`_n`);
+    *  - `schema.json`: the corpus schema, taken from the analysed frame
+    *    being written (no read-back, no job), so every later corpus read
+    *    ([[readIvfCorpus]]) skips parquet schema inference.
+    * Train once, probe many — the index build amortizes the k-means cost,
+    * and the partitioned layout is what makes the index real at 100 TB: a
+    * probe reads only the probed lists' directories (static partition
+    * pruning), i.e. ~nProbe/nLists of the BYTES on disk, not just of the
+    * in-memory comparisons. */
   def buildIvfIndex(candidates: DataFrame, idCol: String, vecCol: String,
       path: String, nLists: Int = 16, iters: Int = 3): Unit = {
     val spark = candidates.sparkSession
     val cents = learnCentroidArrays(candidates, idCol, vecCol, nLists, iters)
-    asDouble(candidates, vecCol)
+    writeIvfCorpus(asDouble(candidates, vecCol)
       .withColumn("_n", norm(col(vecCol)))
-      .withColumn("list", nearestList(col(vecCol), cents))
-      .write.mode("overwrite").partitionBy("list").parquet(s"$path/corpus")
+      .withColumn("list", nearestList(col(vecCol), cents)), path)
     writeJson(spark, s"$path/centroids.json",
       cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
+  }
+
+  /** Write `corpus` as `<path>/corpus/` partitioned by list and record
+    * its schema as `<path>/schema.json`. Parquet moves the partition
+    * column last, so the recorded schema does too. */
+  private def writeIvfCorpus(corpus: DataFrame, path: String): Unit = {
+    corpus.write.mode("overwrite").partitionBy("list").parquet(s"$path/corpus")
+    val (list, data) = corpus.schema.fields.partition(_.name == "list")
+    writeJson(corpus.sparkSession, s"$path/schema.json",
+      org.apache.spark.sql.types.StructType(data ++ list).json)
+  }
+
+  /** The `<path>/corpus/` frame of a persisted IVF index, read with the
+    * schema recorded at build time: no parquet footer job. An index
+    * without `schema.json` (built before the schema was recorded) falls
+    * back to the inferred read. Appends, compaction and retrain keep the
+    * build's columns, so the recorded schema stays valid across them. */
+  private[graft] def readIvfCorpus(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/schema.json")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val reader =
+      if (fs.exists(p)) spark.read.schema(
+        org.apache.spark.sql.types.DataType.fromJson(readText(spark, p))
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+      else spark.read
+    reader.parquet(s"$path/corpus")
   }
 
   /** Distance of a vector to its assigned list's centroid (row-local:
@@ -736,26 +766,39 @@ object Similarity {
     val cents = loadIvfCentroids(spark, path)
     def meanDist(corpus: DataFrame): (Long, Double) =
       corpusDistStats(corpus, vecCol, cents)
-    val (nBefore, distBefore) = meanDist(spark.read.parquet(s"$path/corpus"))
+    val corpus = readIvfCorpus(spark, path)
+    val (nBefore, distBefore) = meanDist(corpus)
     val assigned = asDouble(newVectors, vecCol)
       .withColumn("_n", norm(col(vecCol)))
       .withColumn("list", nearestList(col(vecCol), cents))
+    requireCorpusTypes(corpus, assigned)
     assigned.write.mode("append").partitionBy("list").parquet(s"$path/corpus")
-    val (nAfter, distAfter) = meanDist(spark.read.parquet(s"$path/corpus"))
+    val (nAfter, distAfter) = meanDist(readIvfCorpus(spark, path))
     IvfAppendStats(nBefore, nAfter - nBefore, distBefore, distAfter)
+  }
+
+  /** Appended rows must carry the corpus's types in every column they
+    * share with it: the corpus is read with one schema, so a column
+    * written under another type would fail (or be misread) at probe time.
+    * Columns the corpus lacks are dropped on read, columns the rows lack
+    * read as null — as with any parquet table. Driver-side, no job. */
+  private def requireCorpusTypes(corpus: DataFrame, rows: DataFrame): Unit = {
+    // catalogString leaves nullability out, as a parquet read does
+    val types = corpus.schema.fields
+      .map(f => f.name -> f.dataType.catalogString).toMap
+    rows.schema.fields.foreach { f =>
+      val t = f.dataType.catalogString
+      types.get(f.name).foreach { want =>
+        require(t == want,
+          s"appended column ${f.name} is $t, the index corpus has $want")
+      }
+    }
   }
 
   /** Centroids of a persisted index. */
   def loadIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Double]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/centroids.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    mapper.readValue(new String(bytes, "UTF-8"), classOf[Array[Array[Double]]])
-  }
+      path: String): Array[Array[Double]] =
+    readJson(spark, s"$path/centroids.json", classOf[Array[Array[Double]]])
 
   /** Rewrite a persisted index's corpus into one file per list partition.
     * Every [[ivfAppend]] adds files inside the `list=` directories; after
@@ -781,7 +824,7 @@ object Similarity {
   def ivfCompact(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     recoverCorpus(spark, path)
-    val corpus = spark.read.parquet(s"$path/corpus")
+    val corpus = readIvfCorpus(spark, path)
     val tmp = s"$path/corpus_compacting"
     // hash-repartition on list: each list lands in exactly one task, so
     // each `list=` directory is rewritten as one file
@@ -815,7 +858,7 @@ object Similarity {
       vecCol: String): Array[(Int, Long, Double)] = {
     recoverCorpus(spark, path)
     val cents = loadIvfCentroids(spark, path)
-    spark.read.parquet(s"$path/corpus")
+    readIvfCorpus(spark, path)
       .select(col("list"),
         distToCentroid(col(vecCol), col("list"), cents).as("_d"))
       .groupBy(col("list"))
@@ -881,7 +924,7 @@ object Similarity {
       picked.map(s => s._2.toDouble * s._3).sum / picked.map(_._2).sum
     }
     // the only data read of the whole retrain: the drifted partitions
-    val rows = spark.read.parquet(s"$path/corpus")
+    val rows = readIvfCorpus(spark, path)
       .where(col("list").isin(dSet: _*))
       .drop("list")
     val newCents = learnCentroidArrays(rows, idCol, vecCol,
@@ -923,7 +966,7 @@ object Similarity {
     // post-stat reads the drifted partitions only (pruned, like the
     // rewrite itself — never a full-index pass)
     val after = {
-      val r = spark.read.parquet(s"$path/corpus")
+      val r = readIvfCorpus(spark, path)
         .where(col("list").isin(dSet: _*))
         .select(distToCentroid(col(vecCol), col("list"), cents).as("_d"))
         .agg(graft.ops.Resample.detMean(col("_d")).as("m")).head()
@@ -933,24 +976,39 @@ object Similarity {
       stats.filter(s => drifted.contains(s._1)).map(_._2).sum, before, after)
   }
 
-  /** Probe a persisted IVF index. The probed list ids are collected
-    * first (≤ nLists values — bounded by the index, never by the data)
-    * and applied as an `isin` filter, so the parquet scan statically
-    * prunes to the probed partitions; the probe join and per-query top-k
-    * are the only shuffles. Same scoring/tie-break semantics as
-    * [[ivfTopKLearned]] — identical results for identical centroids. */
+  /** Probe a persisted IVF index with one driver round-trip before the
+    * query itself. The query side is collected once as (query_id, qvec,
+    * _qn, nearest lists) — no job at all for a driver-built query frame.
+    * From it the driver takes the probed list ids (≤ nLists values,
+    * bounded by the index, never by the data), applied as an `isin`
+    * filter so the parquet scan statically prunes to the probed
+    * partitions, and the exploded probe rows, which join the corpus as a
+    * broadcast local relation. A query whose list array is null (null
+    * vector) contributes no probe rows, as `explode(null)` would. The
+    * corpus is read with the schema recorded at build
+    * ([[readIvfCorpus]]); an older index without `schema.json` falls back
+    * to the inferred read. The per-query top-k is the only shuffle. Same
+    * scoring/tie-break semantics as [[ivfTopKLearned]] — identical
+    * results for identical centroids. */
   def ivfProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nProbe: Int = 4, roundScale: Int = 6): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
     recoverCorpus(spark, path)
     val cents = loadIvfCentroids(spark, path)
-    val corpus = spark.read.parquet(s"$path/corpus")
-    val qProbes = asDouble(queries, vecCol)
+    val corpus = readIvfCorpus(spark, path)
+    val q = asDouble(queries, vecCol)
       .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
         norm(col(vecCol)).as("_qn"),
-        explode(nearestLists(col(vecCol), cents, nProbe)).as("list"))
-    val probedLists = qProbes.select(col("list")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+        nearestLists(col(vecCol), cents, nProbe).as("list"))
+    val probes = q.collect().toSeq.filterNot(_.isNullAt(3)).flatMap { r =>
+      r.getSeq[Int](3).map(l => Row(r.get(0), r.get(1), r.get(2), l))
+    }
+    val probedLists = probes.map(_.getInt(3)).distinct.sorted
+    val qProbes = spark.createDataFrame(probes.asJava, StructType(
+      q.schema.fields.init :+ StructField("list", IntegerType, nullable = false)))
     val scored = corpus.where(col("list").isin(probedLists: _*))
       .join(broadcast(qProbes), Seq("list"))
       .where(col(idCol) =!= col("query_id"))
@@ -1019,9 +1077,8 @@ object Similarity {
       // ever re-read here, pruned by list partition + id predicate
       // pushdown, so the full vectors cost ~R·|queries| row-group reads,
       // not a corpus scan.
-      assigned.withColumn("_n", norm(col(vecCol)))
-        .select(col(idCol), col(vecCol), col("_n"), col("list"))
-        .write.mode("overwrite").partitionBy("list").parquet(s"$path/corpus")
+      writeIvfCorpus(assigned.withColumn("_n", norm(col(vecCol)))
+        .select(col(idCol), col(vecCol), col("_n"), col("list")), path)
       assigned.unpersist()
       writeJson(spark, s"$path/centroids.json",
         cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
@@ -1067,7 +1124,7 @@ object Similarity {
     val cents = loadIvfCentroids(spark, path)
     val codebooks = loadPqCodebooks(spark, path)
     def meanDist(): (Long, Double) =
-      corpusDistStats(spark.read.parquet(s"$path/corpus"), vecCol, cents)
+      corpusDistStats(readIvfCorpus(spark, path), vecCol, cents)
     val (nBefore, distBefore) = meanDist()
     val assigned = asDouble(newVectors, vecCol)
       .withColumn("list", nearestList(col(vecCol), cents))
@@ -1107,18 +1164,24 @@ object Similarity {
     out.close()
   }
 
+  /** Text of a small index metadata file. */
+  private def readText(spark: org.apache.spark.sql.SparkSession,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+    finally in.close()
+  }
+
+  private def readJson[T](spark: org.apache.spark.sql.SparkSession,
+      path: String, cls: Class[T]): T =
+    new com.fasterxml.jackson.databind.ObjectMapper().readValue(
+      readText(spark, new org.apache.hadoop.fs.Path(path)), cls)
+
   /** Pruning radii of a persisted index (written by [[buildIvfPqIndex]],
     * maintained by [[ivfPqAppend]]). */
   def loadRadii(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Double] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/radii.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    mapper.readValue(new String(bytes, "UTF-8"), classOf[Array[Double]])
-  }
+      path: String): Array[Double] =
+    readJson(spark, s"$path/radii.json", classOf[Array[Double]])
 
   /** [[loadRadii]] with graceful degradation for indexes persisted
     * before radii existed (or built externally): a missing radii.json
@@ -1135,16 +1198,8 @@ object Similarity {
 
   /** Codebooks of a persisted PQ index. */
   def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Array[Double]]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/codebooks.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    mapper.readValue(new String(bytes, "UTF-8"),
-      classOf[Array[Array[Array[Double]]]])
-  }
+      path: String): Array[Array[Array[Double]]] =
+    readJson(spark, s"$path/codebooks.json", classOf[Array[Array[Array[Double]]]])
 
   /** Probe a [[buildIvfPqIndex]] index: same routing and static partition
     * pruning as [[ivfProbeIndex]], but the corpus side reads only
@@ -1247,7 +1302,7 @@ object Similarity {
       .limit(1025).collect()
     val candIds =
       if (idRows.length <= 1024) idRows.map(_.get(0)).toSeq else Seq.empty
-    val pruned = spark.read.parquet(s"$path/corpus")
+    val pruned = readIvfCorpus(spark, path)
       .where(col("list").isin(lists: _*))
     val corpus = (if (candIds.nonEmpty)
         pruned.where(col(idCol).isin(candIds: _*)) else pruned)

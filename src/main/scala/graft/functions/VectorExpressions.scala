@@ -818,8 +818,10 @@ object NearestCentroidDecimal {
         }
         j += 1
       }
-      // all-null terms → NULL distance; the relational window's argmin
-      // ignored such centroids (NULLS LAST under ascending order)
+      // all-null terms → NULL distance: such a centroid never wins the
+      // argmin. This is the kernel's own rule, not an equivalence with an
+      // ascending window (Spark sorts NULLS FIRST by default); it only
+      // matters for non-finite vectors, which the contract excludes.
       if (acc != null) {
         val d = math.floor(acc.doubleValue() * 1000000.0 + 0.5) / 1000000.0
         if (d < bestD) { bestD = d; bestJ = i }

@@ -30,7 +30,7 @@ object StreamingAnn {
       idCol: String, vecCol: String, indexPath: String, k: Int,
       nProbe: Int = 4, roundScale: Int = 6): DataFrame = {
     val cents = Similarity.loadIvfCentroids(spark, indexPath)
-    val corpus = spark.read.parquet(s"$indexPath/corpus")
+    val corpus = Similarity.readIvfCorpus(spark, indexPath)
     val qProbes = queries
       .select(col(idCol).cast("long").as("query_id"),
         transform(col(vecCol), x => x.cast("double")).as("qvec"))

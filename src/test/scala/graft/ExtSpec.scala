@@ -330,6 +330,16 @@ class ExtSpec extends SparkSpec {
     assert(rewritten == reference)
   }
 
+  test("dim-truncation audit fails loudly on vectors wider than its largest cut") {
+    val dir = "/tmp/graft_test_dim_truncate_wide"
+    emb.select(col("vec_id"),
+        concat(col("embedding"), array(lit(0.5f))).as("embedding"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val e = intercept[Exception](
+      SparkEntry.queries("emb_dim_truncate")(spark, dir).collect())
+    assert(e.getMessage.contains("embedding width 65 != 64"), e.getMessage)
+  }
+
   test("exact pruned IVF/PQ search == brute force on adversarial uniform data") {
     // the embeddings fixture is near-orthogonal uniform noise — ANN's
     // statistically hardest case, where the triangle-inequality bound
@@ -464,6 +474,83 @@ class ExtSpec extends SparkSpec {
       .findAllMatchIn(plan).map(_.group(1)).toSeq
     assert(partitionFilters.exists(_.contains("list")),
       s"expected partition pruning on list in:\n${plan.take(1500)}")
+  }
+
+  /** Jobs started while `body` runs: the stage names (call sites) of each. */
+  private def jobsDuring[T](body: => T): (T, Seq[Seq[String]]) = {
+    import org.apache.spark.graftbridge.ListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name))
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBus.drain(spark.sparkContext)
+      (out, jobs.toArray(Array.empty[Seq[String]]).toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete(): Unit
+  }
+
+  test("IVF probe of a driver-built query: <= 3 jobs, no schema-inference job; fallback without schema.json") {
+    val path = "/tmp/graft_test_ivf_jobs"
+    rmTree(new java.io.File(path))
+    Similarity.buildIvfIndex(emb, "vec_id", "embedding", path,
+      nLists = 16, iters = 2)
+    val queries = emb.where(col("vec_id") < 2)
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSeq
+      .toDF("vec_id", "embedding")
+    def probe() = Similarity.ivfProbeIndex(spark, path, queries,
+        "vec_id", "embedding", k = 5, nProbe = 4)
+      .select("query_id", "rank", "candidate_id", "cosine")
+      .as[(Long, Int, Long, Double)].collect().toSet
+    val (rows, jobs) = jobsDuring(probe())
+    def schemaReads(js: Seq[Seq[String]]) =
+      js.filter(_.exists(_.startsWith("parquet at")))
+    assert(rows.size == 10, rows.toString)
+    assert(jobs.size <= 3, s"${jobs.size} jobs: $jobs")
+    assert(schemaReads(jobs).isEmpty, s"schema-inference job in $jobs")
+    // an index built before schema.json existed: same rows through the
+    // inferred read, which pays its footer job again
+    assert(new java.io.File(s"$path/schema.json").delete())
+    val (fallback, fallbackJobs) = jobsDuring(probe())
+    assert(fallback == rows)
+    assert(schemaReads(fallbackJobs).nonEmpty, s"no inferred read in $fallbackJobs")
+  }
+
+  test("schema.json describes the IVF corpus through append, compact and retrain") {
+    val p = "/tmp/graft_test_ivf_schema"
+    rmTree(new java.io.File(p))
+    def assertRecorded(stage: String): Unit =
+      assert(Similarity.readIvfCorpus(spark, p).schema ==
+        spark.read.parquet(s"$p/corpus").schema, s"after $stage")
+    Similarity.buildIvfIndex(emb, "vec_id", "embedding", p,
+      nLists = 8, iters = 2)
+    assertRecorded("build")
+    // the drifted wave of the retrain spec: +3.0 on every dimension
+    Similarity.ivfAppend(spark, p, emb
+      .select((col("vec_id") + 1000000L).as("vec_id"),
+        transform(col("embedding").cast("array<double>"), x => x + lit(3.0d))
+          .as("embedding"), col("label")), "vec_id", "embedding")
+    assertRecorded("append")
+    Similarity.ivfCompact(spark, p)
+    assertRecorded("compact")
+    val rt = Similarity.ivfRetrainDrifted(spark, p, "vec_id", "embedding",
+      bound = 1.5, iters = 2)
+    assert(rt.drifted.nonEmpty, "retrain must rewrite some list")
+    assertRecorded("retrain")
+    // a column appended under another type than the corpus's fails loudly
+    val e = intercept[IllegalArgumentException](Similarity.ivfAppend(spark, p,
+      emb.limit(1).select(col("vec_id").cast("string").as("vec_id"),
+        col("embedding")), "vec_id", "embedding"))
+    assert(e.getMessage.contains("vec_id"), e.getMessage)
   }
 
   test("ivfAppend grows the index without retraining: probe parity + drift stat") {
@@ -2997,6 +3084,27 @@ class ExtSpec extends SparkSpec {
     }
     ZTable.logRecover(spark, root)
     assert(ZTable.commitAppend(spark, root, 4L, man(9L)) == 5L)
+  }
+
+  test("ZTable claim: of writers racing for one log slot, exactly one commits") {
+    import graft.ext.ZTable
+    val p = "/tmp/graft_test_ztable_claim_race"
+    rmTree(new java.io.File(p))
+    val man = Seq((0L, "p0", 0L, 1L, 0L, 1L, 1L)).toDF("file_id", "path",
+      "b1_min", "b1_max", "b2_min", "b2_max", "n_rows")
+    (0L until 10L).foreach { v =>
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val wins = new java.util.concurrent.atomic.AtomicInteger()
+      val threads = (1 to 4).map(_ => new Thread(() => {
+        gate.await()
+        try { ZTable.logCommit(spark, s"$p/_log", v - 1, man); wins.incrementAndGet(): Unit }
+        catch { case _: ZTable.ManifestConflict => () }
+      }))
+      threads.foreach(_.start())
+      gate.countDown()
+      threads.foreach(_.join())
+      assert(wins.get == 1, s"slot $v: ${wins.get} writers committed")
+    }
   }
 
   test("ZTable txn markers + retention vacuum: a replayed batch commits " +

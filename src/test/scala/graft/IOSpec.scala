@@ -33,6 +33,23 @@ class IOSpec extends SparkSpec {
       owner = "graft", purpose = "tests", project = "round-trip")
   }
 
+  test("concurrent fixture writers: a failure is rethrown only after a slower sibling finishes writing") {
+    val out = "/tmp/graft_test_concurrently"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    val e = intercept[IllegalStateException] {
+      SparkEntry.concurrently(Seq("fails", "writes")) {
+        case "fails" => throw new IllegalStateException("build failed")
+        case _ =>
+          Thread.sleep(500)
+          spark.range(1000).write.parquet(out)
+      }
+    }
+    assert(e.getMessage == "build failed")
+    // the sibling's write committed before the failure reached the caller
+    assert(new java.io.File(s"$out/_SUCCESS").exists(),
+      "failure rethrown while a sibling writer was still running")
+  }
+
   test("catalog JSON round trip is lossless (all levels)") {
     val meta = fixture().meta
     val back = SignalIO.fromJson(SignalIO.toJson(meta))
