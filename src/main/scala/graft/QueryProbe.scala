@@ -176,8 +176,9 @@ object QueryProbe {
     // first rep beat the bench record >5x either stopped doing the work
     // or is legitimately amortizing a per-JVM index/cache another query
     // (or Bench's own in-query build) already paid for — the streaming
-    // band/window indexes and the IVF family are registry-cached per
-    // (JVM, sf dir), so guard reps after the first are warm by DESIGN.
+    // band/window indexes and the IVF family are SparkEntry artifacts,
+    // cached per (session, sf dir), so guard reps after the first are
+    // warm by DESIGN.
     // Distinguish the two directly: probe whether the query still
     // produces rows. Empty result -> red (lost work); rows -> warm-cache
     // note, not a failure.
@@ -245,6 +246,12 @@ object QueryProbe {
           println(s"[guard] WARN build($k) recorded but not built this run"); None
       }
     }
+    // walls the baseline predates: shown, never judged
+    SparkEntry.buildWalls.toSeq.map { case (key, w) =>
+      (key.takeWhile(_ != ':'), w) }.sorted
+      .filterNot { case (k, _) => recordedWalls.contains(k) }
+      .foreach { case (k, w) =>
+        println(f"[guard] build($k): $w%.2f s (not recorded)") }
     println(f"[guard] ${names.size - failures.size}/${names.size} queries within " +
       "2x of the recorded bench")
     if (shapes.nonEmpty)

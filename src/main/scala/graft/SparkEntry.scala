@@ -127,65 +127,110 @@ object SparkEntry {
     sys.props.getOrElse("graft.recall", "on") != "off"
 
   /** Per-PROCESS scratch root for every derived sink/index/checkpoint
-    * path. The TrieMap registries below only guard within one JVM; two
-    * concurrent JVMs (parallel Verify/Bench runs over the same testdata
-    * dir) racing on a fixed /tmp path would corrupt a streaming commit
-    * or read partial files (ADVICE r9). Unique per process, recursively
-    * deleted on clean JVM exit. */
+    * path. [[Artifact]] only guards within one JVM; two concurrent JVMs
+    * (parallel Verify/Bench runs over the same testdata dir) racing on a
+    * fixed /tmp path would corrupt a streaming commit or read partial
+    * files (ADVICE r9). Unique per process, recursively deleted on clean
+    * JVM exit. */
   private lazy val scratchBase: String = {
     val p = java.nio.file.Files.createTempDirectory("graft_scratch_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(p.toFile): Unit))
     p.toString
   }
 
-  /** Per-JVM registry of stream-dedup indexes already built, keyed by sf
-    * dir (see stream_minhash_dedup: build once, probe per rep). */
-  private val streamDedupIndex =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** The scratch path `graft_<tag>_<sf dir>` under [[scratchBase]],
+    * deleted before it is returned: whatever writes there starts from an
+    * empty root, so a retry never reads files a failed or earlier attempt
+    * left behind. */
+  private[graft] def scratch(tag: String, dir: String): String = {
+    val p = s"$scratchBase/graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
+    p
+  }
 
-  /** Per-JVM registry of IVF-PQ indexes (emb_ivfpq_topk), same contract. */
-  private val pqIndexPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** First-build wall seconds per [[Artifact]], keyed "<artifact>:<sfDir>"
+    * (r12 verdict task 6): bench entries for queries that consume a
+    * cached artifact (doc_pagerank 0.09 s, doc_pipeline_e2e 0.13 s,
+    * text_langid_trained 0.09 s in the quiet r12 run) time a checkpoint
+    * READ, not the build — this map carries the cold build cost into
+    * `bench_out.json` (`build_walls`) so a training-cost regression can't
+    * hide behind the cache. The guard replays them with the same 2× slack
+    * as query times. */
+  val buildWalls = scala.collection.concurrent.TrieMap.empty[String, Double]
 
-  /** Per-JVM registry of JSONL exports (io_jsonl_roundtrip): write once,
-    * read-back per rep. */
-  /** Per-JVM registry of trained BPE merge lists (text_bpe_tokens):
-    * train-once / apply-many, same contract as ivfCentsCache. */
-  private val bpeMergesCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
+  private def timedBuild[T](artifact: String, dir: String)(f: => T): T = {
+    val t0 = System.nanoTime()
+    val r = f
+    buildWalls.put(s"$artifact:$dir", (System.nanoTime() - t0) / 1e9)
+    r
+  }
 
-  /** Per-JVM registry of trained unigram-LM cost tables
-    * (text_unigram_tokens): train-once / apply-many, same contract as
-    * bpeMergesCache. */
-  private val unigramVocabCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, Long)]]
+  /** A fixture built once per (session, sf dir) and shared by every query
+    * that needs it — the way a pipeline reuses one table across
+    * downstream decisions. The cached value is served only to the session
+    * that built it (a localCheckpoint'd frame is bound to its
+    * SparkContext, so an entry from an earlier, stopped session would
+    * fail at runtime); any other session rebuilds. Each build is timed
+    * into [[buildWalls]] under `name`. A build that throws caches
+    * nothing, and builds write only under [[scratch]] roots, which start
+    * empty — so a retry never sees the failed attempt's files. Roots are
+    * cleared, not written to a temp dir and renamed: stats manifests
+    * record absolute file paths, which a rename would break. Builds of
+    * one artifact are serialized, as they share their scratch roots. */
+  private[graft] final class Artifact[T](name: String)(
+      build: (SparkSession, String) => T) {
+    private val built =
+      scala.collection.mutable.HashMap.empty[String, (SparkSession, T)]
 
-  /** Per-JVM registry of the unigram word→ntok typed dictionary
-    * (pinned; session-validated like rankCache) — the DP apply runs
-    * once per (JVM, sf dir), both consumers join against the pin. */
-  private val unigramDictCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    def apply(s: SparkSession, dir: String): T = synchronized {
+      built.get(dir).collect { case (sparkSession, v) if sparkSession eq s => v }
+        .getOrElse {
+          val v = timedBuild(name, dir)(build(s, dir))
+          built.put(dir, (s, v))
+          v
+        }
+    }
+  }
 
-  private def unigramDictFor(s: SparkSession, dir: String): DataFrame =
-    unigramDictCache.get(dir).filter(_.sparkSession eq s).getOrElse(
-        timedBuild("unigramDict", dir) {
-      val docs = t(s, dir, "documents")
-      val vocab = unigramVocabCache.getOrElseUpdate(dir,
-        graft.ext.Unigram.train(docs, "text", k = 64))
-      val d = graft.ext.Pin.pin(
-        graft.ext.Unigram.typedDict(docs, "text", vocab))
-      unigramDictCache.put(dir, d)
-      d
-    })
+  private[graft] object Artifact {
+    def apply[T](name: String)(build: (SparkSession, String) => T): Artifact[T] =
+      new Artifact(name)(build)
+  }
 
-  private val jsonlPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Write `df` as ONE parquet file under `path` — a replay source the
+    * file-stream reader takes as one micro-batch — and return that
+    * file's path. */
+  private def replayParquet(df: DataFrame, path: String): String = {
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+    Option(new java.io.File(path).listFiles()).toSeq.flatten
+      .find(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
+      .getOrElse(throw new IllegalStateException(
+        s"replay write left no parquet file under $path"))
+  }
+
+  /** The unigram word→ntok typed dictionary (pinned): the vocabulary is
+    * trained and the DP applied once, and both consumers join against the
+    * pin. */
+  private val unigramDictFor = Artifact("unigramDict") { (s, dir) =>
+    val docs = t(s, dir, "documents")
+    graft.ext.Pin.pin(graft.ext.Unigram.typedDict(docs, "text",
+      graft.ext.Unigram.train(docs, "text", k = 64)))
+  }
+
+  /** Trained BPE merge list (8 rounds), shared by the text_bpe_* and
+    * doc_seq_pack_bpe queries: train once, apply many. */
+  private val bpeMergesFor = Artifact("bpeMerges") { (s, dir) =>
+    graft.ext.Bpe.trainMerges(t(s, dir, "documents"), "text", m = 8)
+  }
+
+  /** The documents table exported as JSONL (io_jsonl_roundtrip): written
+    * once, read back per rep. */
+  private val jsonlFor = Artifact("jsonl") { (s, dir) =>
+    val p = scratch("jsonl", dir)
+    t(s, dir, "documents").write.mode("overwrite").json(p)
+    p
+  }
 
   /** C4 rule-bundle oracle, shared by the batch and streaming
     * queries (the streamed pass must equal the batch pass). */
@@ -624,30 +669,35 @@ object SparkEntry {
     2 -> Seq("hash", "table"),
     3 -> Seq("window", "agg"))
 
-  /** Per-JVM registry of trained IVF centroids (emb_ivf_topk), same
-    * train-once / probe-per-rep contract as the persisted indexes. Plain
-    * driver-side arrays — session-independent, so no session-binding
-    * validation is needed (unlike clusterCache). */
-  private val ivfCentsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
+  /** Trained IVF centroids (emb_ivf_topk, emb_ivf_exhaustive): the
+    * train-once / probe-per-rep shape of the persisted indexes. */
+  private val ivfCentsFor = Artifact("ivfCents") { (s, dir) =>
+    Similarity.learnCentroidArrays(t(s, dir, "embeddings"), "vec_id",
+      "embedding", k = 16, iters = 3)
+  }
 
-  /** Per-JVM registry of per-list pruning radii (emb_ivf_topk's exact
-    * probe) — index metadata derived once per (JVM, sf dir), like the
-    * centroids they bound. */
-  private val ivfRadiiCache =
-    scala.collection.concurrent.TrieMap.empty[String, Map[Int, Double]]
+  /** Per-list pruning radii (emb_ivf_topk's exact probe) — index
+    * metadata derived once, like the centroids they bound. */
+  private val ivfRadiiFor = Artifact("ivfRadii") { (s, dir) =>
+    Similarity.listRadii(t(s, dir, "embeddings"), "vec_id", "embedding",
+      ivfCentsFor(s, dir))
+  }
 
-  /** Per-JVM registry of persisted IVF indexes (stream_ivf_topk), same
-    * contract as pqIndexPath. */
-  private val ivfIndexPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** The IVF-PQ index probed by emb_ivfpq_topk and emb_ivfpq_rerank. */
+  private val ivfPqIndexFor = Artifact("ivfPqIdx") { (s, dir) =>
+    val p = scratch("ivfpq_idx", dir)
+    Similarity.buildIvfPqIndex(t(s, dir, "embeddings"), "vec_id",
+      "embedding", p, nLists = 16, m = 16, pqK = 64, iters = 2)
+    p
+  }
 
-  /** Per-JVM registry of the drift-retrain lifecycle index
-    * (emb_ivf_drift_retrain): build → drifted append → bounded retrain
-    * runs once per (JVM, sf dir) with its wall in buildWalls; the
-    * declared query probes the retrained index. */
-  private val ivfDriftPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** The persisted IVF index stream_ivf_topk serves from. */
+  private val streamIvfIndexFor = Artifact("streamIvfIdx") { (s, dir) =>
+    val p = scratch("stream_ivf_idx", dir)
+    Similarity.buildIvfIndex(t(s, dir, "embeddings"), "vec_id",
+      "embedding", p, nLists = 16, iters = 2)
+    p
+  }
 
   /** The IVF RETRAIN-ON-DRIFT lifecycle (r15 VERDICT task 5): build an
     * index on the base embeddings, append a deterministically DRIFTED
@@ -658,188 +708,120 @@ object SparkEntry {
     * index-wide mean. The requires pin the incremental contract at
     * build time: some lists drifted, NOT all (the untouched majority is
     * the point), and the retrain reduced the drifted set's mean
-    * distance. Accounting lands in `_retrain.json` for the spec/tier. */
-  private def ivfDriftFor(s: SparkSession, dir: String): String =
-    ivfDriftPath.getOrElseUpdate(dir, timedBuild("ivfDriftRetrain", dir) {
-      val p = s"$scratchBase/graft_ivf_drift_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(p))
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      Similarity.buildIvfIndex(emb, "vec_id", "embedding", p,
-        nLists = 16, iters = 2)
-      val shifted = emb.select((col("vec_id") + 1000000L).as("vec_id"),
-        transform(col("embedding").cast("array<double>"),
-          x => x + lit(3.0d)).as("embedding"))
-      Similarity.ivfAppend(s, p, shifted, "vec_id", "embedding")
-      val rt = Similarity.ivfRetrainDrifted(s, p, "vec_id", "embedding",
-        bound = 1.5, iters = 2)
-      require(rt.drifted.nonEmpty, "no list crossed the drift bound")
-      require(rt.drifted.length < rt.nLists,
-        s"retrain must be incremental: ${rt.drifted.length}/${rt.nLists}")
-      require(rt.meanDriftedAfter < rt.meanDriftedBefore,
-        "retrain must reduce the drifted lists' mean distance")
-      val accP = new org.apache.hadoop.fs.Path(s"$p/_retrain.json")
-      val out = accP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .create(accP, true)
-      out.write((s"""{"drifted":[${rt.drifted.mkString(",")}],""" +
-        s""""nLists":${rt.nLists},"rows":${rt.rowsReclustered},""" +
-        s""""before":${rt.meanDriftedBefore},"after":${rt.meanDriftedAfter}}""")
-        .getBytes("UTF-8"))
-      out.close()
-      p
-    })
-
-  /** Per-JVM registry of persisted Bloom indexes + probe replay fixtures
-    * (stream_bloom_filter): the corpus's set-bit frame and the
-    * probes-plus-planted-duplicates table, built once per (JVM, sf dir)
-    * — same contract as the other stream indexes. */
-  private val bloomIndexPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val bloomReplayPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Per-JVM registry of substring-probe replay tables
-    * (stream_substring_dedup): probe slice + planted offset-shifted
-    * leaks, written once per (JVM, sf dir) — same contract as
-    * bloomReplayPath. */
-  private val substringReplayPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Per-JVM registry of trained k-means models + streaming-probe replay
-    * tables (stream_semdedup): train-once / probe-per-rep, same contract
-    * as ivfCentsCache / substringReplayPath. */
-  private val kmModelCache =
-    scala.collection.concurrent.TrieMap.empty[String, Kmeans.Model]
-  private val semReplayPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** First-build wall seconds per per-JVM artifact cache, keyed
-    * "<artifact>:<sfDir>" (r12 verdict task 6): bench entries for
-    * queries that consume a cached artifact (doc_pagerank 0.09 s,
-    * doc_pipeline_e2e 0.13 s, text_langid_trained 0.09 s in the quiet
-    * r12 run) time a checkpoint READ, not the build — this map carries
-    * the cold build cost into `bench_out.json` (`build_walls`) so a
-    * training-cost regression can't hide behind the cache. The guard
-    * replays them with the same 2× slack as query times. */
-  val buildWalls = scala.collection.concurrent.TrieMap.empty[String, Double]
-
-  private def timedBuild[T](artifact: String, dir: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    buildWalls.put(s"$artifact:$dir", (System.nanoTime() - t0) / 1e9)
-    r
+    * distance. Accounting lands in `_retrain.json` for the spec/tier;
+    * the declared query probes the retrained index. */
+  private val ivfDriftFor = Artifact("ivfDriftRetrain") { (s, dir) =>
+    val p = scratch("ivf_drift", dir)
+    val emb = t(s, dir, "embeddings")
+      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+    Similarity.buildIvfIndex(emb, "vec_id", "embedding", p,
+      nLists = 16, iters = 2)
+    val shifted = emb.select((col("vec_id") + 1000000L).as("vec_id"),
+      transform(col("embedding").cast("array<double>"),
+        x => x + lit(3.0d)).as("embedding"))
+    Similarity.ivfAppend(s, p, shifted, "vec_id", "embedding")
+    val rt = Similarity.ivfRetrainDrifted(s, p, "vec_id", "embedding",
+      bound = 1.5, iters = 2)
+    require(rt.drifted.nonEmpty, "no list crossed the drift bound")
+    require(rt.drifted.length < rt.nLists,
+      s"retrain must be incremental: ${rt.drifted.length}/${rt.nLists}")
+    require(rt.meanDriftedAfter < rt.meanDriftedBefore,
+      "retrain must reduce the drifted lists' mean distance")
+    val accP = new org.apache.hadoop.fs.Path(s"$p/_retrain.json")
+    val out = accP.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .create(accP, true)
+    out.write((s"""{"drifted":[${rt.drifted.mkString(",")}],""" +
+      s""""nLists":${rt.nLists},"rows":${rt.rowsReclustered},""" +
+      s""""before":${rt.meanDriftedBefore},"after":${rt.meanDriftedAfter}}""")
+      .getBytes("UTF-8"))
+    out.close()
+    p
   }
 
-  /** Per-JVM registry of the trained quality-LR model (doc_quality_lr /
-    * stream_quality_lr / doc_lr_calibration): training is deterministic
-    * (exact dyadic GD), so train-once / score-many is a pure time save
-    * — same contract as bpeMergesCache. */
-  private val lrModelCache =
-    scala.collection.concurrent.TrieMap.empty[String, QualityModel.LinearModel]
+  /** The trained quality-LR model (doc_quality_lr / stream_quality_lr /
+    * doc_lr_calibration): dense features + 16 GD rounds. Training is
+    * deterministic (exact dyadic GD), so train-once / score-many is a
+    * pure time save. */
+  private val lrModelFor = Artifact("lrModel") { (s, dir) =>
+    val docs = t(s, dir, "documents")
+    val labels = docs.select(col("doc_id").as("doc"),
+      (col("lang") === "en").cast("double").as("y"))
+    val feat = QualityModel.denseFeatures(
+      QualityModel.hashedBow(docs, "doc_id", "text", 64), labels, 64)
+      .persist()
+    try QualityModel.trainLogReg(feat, d = 64, iters = 16, lr = 0.125)
+    finally { feat.unpersist(false): Unit }
+  }
 
-  /** The (JVM-cached) quality-LR model for an sf dir: dense features +
-    * 16 GD rounds on first request. */
-  private def lrModelFor(s: SparkSession, dir: String): QualityModel.LinearModel =
-    lrModelCache.getOrElseUpdate(dir, timedBuild("lrModel", dir) {
-      val docs = t(s, dir, "documents")
-      val labels = docs.select(col("doc_id").as("doc"),
-        (col("lang") === "en").cast("double").as("y"))
-      val feat = QualityModel.denseFeatures(
-        QualityModel.hashedBow(docs, "doc_id", "text", 64), labels, 64)
-        .persist()
-      try QualityModel.trainLogReg(feat, d = 64, iters = 16, lr = 0.125)
-      finally { feat.unpersist(false): Unit }
-    })
+  /** Near-dup cluster labels, shared by doc_dedup_clusters, doc_keep_best,
+    * doc_dedup_keep and the two sinks. The frame is localCheckpointed
+    * inside dedupClusters (RDD-backed, survives catalog clearCache).
+    * Exact-dup short-circuit around the EXACT PPJoin miner: identical
+    * docs collapse to one representative before any shingle-keyed join,
+    * so copy-heavy corpora cannot create O(k²) prefix buckets; output is
+    * proven equal to clustering the full pair graph (ExtSpec), so the
+    * oracle (exact-Jaccard recursive closure over ALL docs) is
+    * unchanged. */
+  private val clustersFor = Artifact("clusters") { (s, dir) =>
+    Dedup.dedupClustersDistinctWith(
+      t(s, dir, "documents"), "doc_id", "text")(repDocs =>
+      Dedup.jaccardPairs(
+        Dedup.hashedShingles(repDocs, "doc_id", "text", 3), 0.5))
+  }
 
-  /** Per-JVM registry of sessionization replay tables (stream_sessions):
-    * the user-sliced obs frame plus one per-key SENTINEL event far past
-    * the data, written once per (JVM, sf dir). The sentinel closes each
-    * key's final session through the ARRIVAL path (an event more than
-    * `gap` after the open session's end), so a bounded replay emits
-    * exactly the true sessions — the sentinel's own session stays open
-    * in state and is never emitted. */
-  private val sessionReplayPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** The synthetic link graph's 8-round PageRank frame (node, rank,
+    * in_deg, out_deg), shared by doc_pagerank, doc_curate_rank and
+    * doc_url_host_rank; localCheckpoint-backed via pageRank's per-round
+    * checkpoints, with one final checkpoint pinning the join output.
+    * doc_pagerank_dangling runs a DIFFERENT graph and stays uncached. */
+  private val rankFor = Artifact("rank") { (s, dir) =>
+    val ids = t(s, dir, "documents").select(col("doc_id"))
+    Graph.pageRank(syntheticEdges(ids), ids, iters = 8)
+      .localCheckpoint(true)
+  }
 
-  /** Per-JVM registry of materialized dedup-sink corpora (doc_dedup_sink):
-    * the filtered corpus is written once per (JVM, sf dir) and the
-    * declared query audits the files on disk — the artifact shape an LLM
-    * data pipeline actually ships. */
-  private val dedupSinkPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** The filtered corpus of doc_dedup_sink, written once; the declared
+    * query audits the files on disk — the artifact shape an LLM data
+    * pipeline actually ships. */
+  private val dedupSinkFor = Artifact("dedupSink") { (s, dir) =>
+    val p = scratch("dedup_corpus", dir)
+    val cl = clustersFor(s, dir)
+    val docs = t(s, dir, "documents")
+    docs.join(cl, docs("doc_id") === cl("doc"), "left")
+      .where(col("root").isNull || col("root") === col("doc_id"))
+      .select(docs("doc_id"), col("text"), col("lang"), col("source"),
+        col("n_chars"))
+      .write.mode("overwrite").partitionBy("lang").parquet(p)
+    p
+  }
 
-  /** Per-JVM registry of streaming-file-sink materializations
-    * (stream_sink_rollup): checkpointed foreachBatch parquet output. */
-  private val streamSinkPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Per-JVM registry of the streaming composed-pipeline materialization
-    * (stream_pipeline): checkpointed foreachBatch parquet of per-doc
-    * ingest decisions against the frozen batch artifacts. */
-  private val streamPipePath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Per-JVM registry of materialized CURATED corpora (doc_curate_sink):
-    * quality filter → language filter → repetition filter → near-dup
-    * keep-join → lang-partitioned write, once per (JVM, sf dir). */
-  private val curateSinkPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Near-dup cluster labels per sf dir, shared by doc_dedup_clusters and
-    * doc_dedup_keep. The returned frame is localCheckpointed inside
-    * dedupClusters (RDD-backed, survives catalog clearCache), so the
-    * mining pipeline runs once per (JVM, dir) — exactly how a pipeline
-    * would reuse the cluster table across downstream decisions. */
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private def clustersFor(s: SparkSession, dir: String): DataFrame =
-    // validate the cached frame's session: its localCheckpoint RDDs are
-    // bound to the SparkContext that built it, so an entry from an earlier
-    // (stopped) session in the same JVM — e.g. sequential Verify-then-
-    // guard runs — would fail at runtime. Rebuild on session mismatch.
-    clusterCache.get(dir).filter(_.sparkSession eq s).getOrElse(
-        timedBuild("clusters", dir) {
-      // exact-dup short-circuit around the EXACT PPJoin miner: identical
-      // docs collapse to one representative before any shingle-keyed
-      // join, so copy-heavy corpora cannot create O(k²) prefix buckets;
-      // output is proven equal to clustering the full pair graph
-      // (ExtSpec), so the oracle (exact-Jaccard recursive closure over
-      // ALL docs) is unchanged.
-      val cl = Dedup.dedupClustersDistinctWith(
-        t(s, dir, "documents"), "doc_id", "text")(repDocs =>
-        Dedup.jaccardPairs(
-          Dedup.hashedShingles(repDocs, "doc_id", "text", 3), 0.5))
-      clusterCache.put(dir, cl)
-      cl
-    })
-
-  /** Per-JVM registry of the synthetic link graph's 8-round PageRank
-    * frame (node, rank, in_deg, out_deg) — computed once per (JVM, sf
-    * dir) and shared by doc_pagerank, doc_curate_rank and
-    * doc_url_host_rank, exactly how a pipeline reuses one rank table
-    * across downstream decisions (the clusterCache contract; the
-    * frame is localCheckpoint-backed via pageRank's per-round
-    * checkpoints, with one final checkpoint pinning the join output).
-    * doc_pagerank_dangling runs a DIFFERENT graph and stays
-    * uncached. */
-  private val rankCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private def rankFor(s: SparkSession, dir: String): DataFrame =
-    rankCache.get(dir).filter(_.sparkSession eq s).getOrElse(
-        timedBuild("rank", dir) {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      val pr = Graph.pageRank(syntheticEdges(ids), ids, iters = 8)
-        .localCheckpoint(true)
-      rankCache.put(dir, pr)
-      pr
-    })
+  /** The CURATED corpus of doc_curate_sink: quality filter → language
+    * filter → repetition filter → near-dup keep-join → lang-partitioned
+    * write. */
+  private val curateSinkFor = Artifact("curateSink") { (s, dir) =>
+    val p = scratch("curated_corpus", dir)
+    val docs = t(s, dir, "documents")
+    val qual = TextAnalysis.qualityScore(docs, "doc_id", "text")
+      .where(col("n_tokens") >= 15 && col("stopword_ratio") >= 0.01 &&
+        col("distinct_ratio") >= 0.3)
+      .select(col("doc_id"))
+    val calm = TextAnalysis.repetitionStats(docs, "doc_id", "text")
+      .where(col("top_2gram_frac") <= 0.1)
+      .select(col("doc").as("doc_id"))
+    val lid = TextAnalysis.languageId(docs, "doc_id", "text")
+      .where(col("pred_lang") =!= "und")
+      .select(col("doc_id"))
+    val cl = clustersFor(s, dir)
+    docs.join(cl, docs("doc_id") === cl("doc"), "left")
+      .where(col("root").isNull || col("root") === docs("doc_id"))
+      .select(docs("doc_id"), col("text"), col("lang"), col("source"),
+        col("n_chars"))
+      .join(qual, Seq("doc_id"), "left_semi")
+      .join(calm, Seq("doc_id"), "left_semi")
+      .join(lid, Seq("doc_id"), "left_semi")
+      .write.mode("overwrite").partitionBy("lang").parquet(p)
+    p
+  }
 
   /** Shared frame of the z-order layout experiment (doc_zorder_skipping
     * and its materialized twin): two equi-depth 8-bit dimension ranks
@@ -877,58 +859,42 @@ object SparkEntry {
       .withColumn("_rpf", expr("(_n + 63) div 64"))
   }
 
-  /** Per-JVM registry of the PINNED z-order rank frame (r17): seven call
-    * sites (the logical skipping audit + six materialized-table builds)
-    * each re-derived the identical deterministic frame — 5 range-rank
-    * passes apiece, ~30 s of the bench's fixture build wall re-spent on
-    * the same rows. Cached once per (JVM, sf dir) under the same
-    * contract as [[rankCache]]/[[clusterCache]] (a real lakehouse
-    * materializes its layout-rank table once per OPTIMIZE, not per
-    * consumer); the cold build wall is reported as `zorderRanked` in
-    * `build_walls`. */
-  private val zorderRankedCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  /** The PINNED z-order rank frame (r17): seven call sites (the logical
+    * skipping audit + six materialized-table builds) each re-derived the
+    * identical deterministic frame — 5 range-rank passes apiece, ~30 s
+    * of the bench's fixture build wall re-spent on the same rows. A real
+    * lakehouse materializes its layout-rank table once per OPTIMIZE, not
+    * per consumer. */
+  private val zorderRankedFor = Artifact("zorderRanked") { (s, dir) =>
+    zorderRankedFrame(s, dir).localCheckpoint(true)
+  }
 
-  private def zorderRankedFor(s: SparkSession, dir: String): DataFrame =
-    zorderRankedCache.get(dir).filter(_.sparkSession eq s).getOrElse(
-        timedBuild("zorderRanked", dir) {
-      val f = zorderRankedFrame(s, dir).localCheckpoint(true)
-      zorderRankedCache.put(dir, f)
-      f
-    })
-
-  /** Per-JVM registry of MATERIALIZED z-order layout corpora
-    * (doc_zorder_skipping_mat): the three layouts written as real
-    * parquet, one data file per logical file_id. */
-  private val zorderMatPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Build (once per JVM and sf dir) the three materialized layouts,
-    * each WITH its write-time stats manifest at `<root>/<tag>/_stats`
-    * (the `_`-prefixed dir is invisible to Spark's parquet reader, so
-    * the manifest lives under the table root like a `_delta_log`). */
-  private def zorderMatFor(s: SparkSession, dir: String): String =
-    zorderMatPath.getOrElseUpdate(dir, timedBuild("zorderMat", dir) {
-      val p = s"$scratchBase/graft_zorder_mat_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      // three layout writers consume one rank frame, already pinned by
-      // the shared registry (the writer derives its own rpf — drop the
-      // frame's _n/_rpf so its internal count crossJoin can't collide)
-      val ranked = zorderRankedFor(s, dir)
-        .select(col("doc_id"), col("b1"), col("b2"),
-          col("zrank"), col("lrank"), col("hrank"))
-      // the three layouts are independent writers over the one pinned
-      // frame into disjoint dirs — submit them concurrently (guide §2.6:
-      // actions are only sequential because the driver calls them
-      // sequentially); wall ≈ the slowest write instead of the sum
-      concurrently(Seq(("zorder", "zrank"), ("linear", "lrank"),
-          ("hash", "hrank"))) { case (tag, rank) =>
-        val st = zorderWriteFiles(ranked, rank, nFiles = 64, offset = 0,
-          out = s"$p/$tag")
-        writeStatsManifest(st, s"$p/$tag/_stats")
-      }
-      p
-    })
+  /** The MATERIALIZED z-order layout corpora (doc_zorder_skipping_mat):
+    * the three layouts written as real parquet, one data file per
+    * logical file_id, each WITH its write-time stats manifest at
+    * `<root>/<tag>/_stats` (the `_`-prefixed dir is invisible to Spark's
+    * parquet reader, so the manifest lives under the table root like a
+    * `_delta_log`). */
+  private val zorderMatFor = Artifact("zorderMat") { (s, dir) =>
+    val p = scratch("zorder_mat", dir)
+    // three layout writers consume one rank frame, already pinned by
+    // zorderRankedFor (the writer derives its own rpf — drop the
+    // frame's _n/_rpf so its internal count crossJoin can't collide)
+    val ranked = zorderRankedFor(s, dir)
+      .select(col("doc_id"), col("b1"), col("b2"),
+        col("zrank"), col("lrank"), col("hrank"))
+    // the three layouts are independent writers over the one pinned
+    // frame into disjoint dirs — submit them concurrently (guide §2.6:
+    // actions are only sequential because the driver calls them
+    // sequentially); wall ≈ the slowest write instead of the sum
+    concurrently(Seq(("zorder", "zrank"), ("linear", "lrank"),
+        ("hash", "hrank"))) { case (tag, rank) =>
+      val st = zorderWriteFiles(ranked, rank, nFiles = 64, offset = 0,
+        out = s"$p/$tag")
+      writeStatsManifest(st, s"$p/$tag/_stats")
+    }
+    p
+  }
 
   /** Run independent Spark actions from a small thread pool so the next
     * job's tasks back-fill executors freed by the current job's tail
@@ -953,22 +919,43 @@ object SparkEntry {
     } finally pool.shutdown()
   }
 
-  /** Per-JVM registry of the z-order append/OPTIMIZE experiment
-    * (doc_zorder_append_optimize): base z-ordered files + an unsorted
-    * appended batch + the OPTIMIZE rewrite. */
-  private val zorderIncPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** The z-order append/OPTIMIZE experiment (doc_zorder_append_optimize):
+    * base z-ordered files + an unsorted appended batch + the OPTIMIZE
+    * rewrite. Global equi-depth bits + z/h keys come from the shared
+    * rank frame, so appended rows land in the same bit space as base
+    * rows. The three phase tables are independent writers over the one
+    * pinned frame into disjoint dirs (unlike the incremental table,
+    * whose transactions share a dir and must serialize) — submitted
+    * concurrently, guide §2.6. */
+  private val zorderIncFor = Artifact("zorderInc") { (s, dir) =>
+    val p = scratch("zorder_inc", dir)
+    val z = zorderRankedFor(s, dir)
+      .select(col("doc_id"), col("b1"), col("b2"), col("zkey"),
+        col("hkey"))
+    val baseRows = z.where(pmod(col("doc_id"), lit(5L)) =!= 0L)
+    val appRows = z.where(pmod(col("doc_id"), lit(5L)) === 0L)
+    concurrently(Seq(
+      (baseRows, col("zkey"), 52, 0, "base"),
+      (appRows, col("hkey"), 12, 52, "append"),
+      (z, col("zkey"), 64, 0, "optimized"))) {
+      case (rows, key, nFiles, offset, tag) =>
+        writeStatsManifest(zorderWriteFiles(
+          Ranks.globalRowNumber(rows, Seq(key, col("doc_id")),
+            out = "_rk"),
+          "_rk", nFiles = nFiles, offset = offset, out = s"$p/$tag"),
+          s"$p/$tag/_stats")
+    }
+    p
+  }
 
-  /** Per-JVM registry of the INCREMENTAL-OPTIMIZE z-order table
-    * (doc_zorder_incr_optimize): ONE evolving table dir whose data
-    * files accumulate across transactions, plus three manifest
-    * snapshots (`_stats_base/_stats_appended/_stats_optimized` — the
+  /** The INCREMENTAL-OPTIMIZE z-order table (doc_zorder_incr_optimize):
+    * ONE evolving table dir whose data files accumulate across
+    * transactions, plus three manifest snapshots
+    * (`_stats_base/_stats_appended/_stats_optimized` — the
     * transaction-log role: logically removed files stay on disk until a
-    * VACUUM, so every snapshot remains readable). */
-  private val zorderIncrPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Build the incremental-OPTIMIZE experiment: (1) base = the corpus
+    * VACUUM, so every snapshot remains readable).
+    *
+    * The experiment: (1) base = the corpus
     * minus a key-space-LOCALIZED batch, z-ordered into 52 files with a
     * write-time manifest; (2) append = the localized batch (b2 ≥ 144,
     * even doc_id — the time-correlated shape real ingest has: new data
@@ -982,13 +969,11 @@ object SparkEntry {
     * from b1/b2) into new files sized by the table's global rows-per-file,
     * and the manifest swaps rewritten rows for new-file rows. Base files
     * outside the appended key region are never read OR rewritten. */
-  private def zorderIncrFor(s: SparkSession, dir: String): String =
-    zorderIncrPath.getOrElseUpdate(dir, timedBuild("zorderIncr", dir) {
-      val p = s"$scratchBase/graft_zorder_incr2_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      buildZorderIncrTable(s, dir, p)
-      p
-    })
+  private val zorderIncrFor = Artifact("zorderIncr") { (s, dir) =>
+    val p = scratch("zorder_incr2", dir)
+    buildZorderIncrTable(s, dir, p)
+    p
+  }
 
   /** The three incremental-OPTIMIZE transactions into `p/table` +
     * manifest snapshots under `p` — shared by the incr-optimize and
@@ -1023,42 +1008,29 @@ object SparkEntry {
       writeStatsManifest(optimized, s"$p/_stats_optimized")
   }
 
-  /** Per-JVM registry of the VACUUM experiment (doc_zorder_vacuum):
-    * the incremental-OPTIMIZE table with its fourth transaction —
-    * physically deleting every data file the NEWEST manifest no longer
-    * references. */
-  private val zorderVacPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** The VACUUM experiment (doc_zorder_vacuum): the same three
+    * incremental-OPTIMIZE transactions on a fresh table, then VACUUM —
+    * list the table's data files (metadata), diff against the optimized
+    * manifest's referenced paths, DELETE the orphans (the files the
+    * incremental OPTIMIZE logically removed; earlier snapshots become
+    * time-travel-expired, the Delta VACUUM contract). Accounting lands in
+    * `_vacuum.json`. */
+  private val zorderVacFor = Artifact("zorderVac") { (s, dir) =>
+    val p = scratch("zorder_vac", dir)
+    buildZorderIncrTable(s, dir, p)
+    val (before, deleted) = graft.ext.ZTable.vacuum(s, s"$p/table",
+      s.read.parquet(s"$p/_stats_optimized"))
+    val conf = s.sparkContext.hadoopConfiguration
+    val accP = new org.apache.hadoop.fs.Path(s"$p/_vacuum.json")
+    val out = accP.getFileSystem(conf).create(accP, true)
+    out.write(s"""{"before":$before,"deleted":$deleted}"""
+      .getBytes("UTF-8"))
+    out.close()
+    p
+  }
 
-  /** Build the VACUUM experiment: the same three transactions on a
-    * fresh table, then VACUUM — list the table's data files
-    * (metadata), diff against the optimized manifest's referenced
-    * paths, DELETE the orphans (the files the incremental OPTIMIZE
-    * logically removed; earlier snapshots become time-travel-expired,
-    * the Delta VACUUM contract). Accounting lands in `_vacuum.json`. */
-  private def zorderVacFor(s: SparkSession, dir: String): String =
-    zorderVacPath.getOrElseUpdate(dir, timedBuild("zorderVac", dir) {
-      val p = s"$scratchBase/graft_zorder_vac_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      buildZorderIncrTable(s, dir, p)
-      val (before, deleted) = graft.ext.ZTable.vacuum(s, s"$p/table",
-        s.read.parquet(s"$p/_stats_optimized"))
-      val conf = s.sparkContext.hadoopConfiguration
-      val accP = new org.apache.hadoop.fs.Path(s"$p/_vacuum.json")
-      val out = accP.getFileSystem(conf).create(accP, true)
-      out.write(s"""{"before":$before,"deleted":$deleted}"""
-        .getBytes("UTF-8"))
-      out.close()
-      p
-    })
-
-  /** Per-JVM registry of the OCC interleaved-writer experiment
-    * (doc_zorder_occ). */
-  private val zorderOccPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Build the OCC interleaved-writer experiment (r15 VERDICT task 1):
-    * the zorderVac lifecycle re-run through the VERSIONED manifest log
+  /** The OCC interleaved-writer experiment (doc_zorder_occ, r15 VERDICT
+    * task 1): the zorderVac lifecycle re-run through the VERSIONED manifest log
     * ([[graft.ext.ZTable.logCommit]]) with two adversarial
     * interleavings. v0 base (z-ordered), v1 hot append A1; optimizer O1
     * reads v1 and rewrites A1's region, but appender A2 (synthetic
@@ -1074,111 +1046,100 @@ object SparkEntry {
     * reclaims the replaced files AND the superseded attempt's orphans.
     * Every protocol step is enforced by a require, so the declared
     * query's hash match certifies the whole interleaving. */
-  private def zorderOccFor(s: SparkSession, dir: String): String =
-    zorderOccPath.getOrElseUpdate(dir, timedBuild("zorderOcc", dir) {
-      import graft.ext.ZTable
-      val p = s"$scratchBase/graft_zorder_occ_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(p))
-      val table = s"$p/table"
-      val root = s"$p/_log"
-      val z = zorderRankedFor(s, dir)
-        .select(col("doc_id"), col("b1"), col("b2"), col("zkey"),
-          col("hkey"))
-      val isApp = col("b2") >= 144 && pmod(col("doc_id"), lit(2L)) === 0L
-      val stBase = zorderWriteFiles(
-        Ranks.globalRowNumber(z.where(!isApp),
-          Seq(col("zkey"), col("doc_id")), out = "_rk"),
-        "_rk", nFiles = 52, offset = 0, out = table)
-      require(ZTable.logCommit(s, root, -1L, stBase) == 0L)
-      val stA1 = zorderWriteFiles(
-        Ranks.globalRowNumber(z.where(isApp),
-          Seq(col("hkey"), col("doc_id")), out = "_rk"),
-        "_rk", nFiles = 12, offset = 100, out = table, mode = "append")
-      require(ZTable.commitAppend(s, root, 0L, stA1) == 1L)
-      // O1 reads v1 and rewrites the hot region (data files land now;
-      // the stale v1-based manifest is what a non-OCC writer would
-      // overwrite the log with)
-      val man1 = ZTable.logRead(s, root, 1L).collect()
-      val isApp1 = (r: org.apache.spark.sql.Row) => {
-        val f = r.getAs[Long]("file_id"); f >= 100 && f < 200
-      }
-      val box1 = ZTable.appendedBox(man1, isApp1)
-      val (staleManDf, _, _) = ZTable.incrementalOptimize(s,
-        ZTable.logRead(s, root, 1L), isApp1, table, newOffset = 1000)
-      val staleIds = staleManDf.collect().map(_.getAs[Long]("file_id")).toSet
-      val rwIds1 = man1.map(_.getAs[Long]("file_id")).toSet -- staleIds
-      val stNew1 = staleManDf.where(col("file_id") >= 1000)
-      // concurrent A2: synthetic rows pinned to the cold band (b2 % 64
-      // — disjoint from O1's box), arrival order, fresh ids
-      val a2 = z.where(pmod(col("doc_id"), lit(31L)) === 5L)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("b1"),
-          pmod(col("b2"), lit(64L)).as("b2"), col("hkey"))
-      val stA2 = zorderWriteFiles(
-        Ranks.globalRowNumber(a2, Seq(col("hkey"), col("doc_id")),
-          out = "_rk"),
-        "_rk", nFiles = 3, offset = 200, out = table, mode = "append")
-      require(ZTable.commitAppend(s, root, 1L, stA2) == 2L)
-      // O1 commits at its v1 snapshot: conflict → disjoint → rebase
-      require(ZTable.commitOptimize(s, root, 1L, rwIds1, stNew1,
-        box1) == 3L)
-      val man3 = ZTable.logRead(s, root, 3L).collect()
-      require(stA2.collect().map(_.getAs[Long]("file_id")).toSet
-          .subsetOf(man3.map(_.getAs[Long]("file_id")).toSet),
-        "rebase must carry the concurrent append (lost update)")
-      // O2 reads v3 to compact A2's region; A3 lands INSIDE its box
-      val isApp2 = (r: org.apache.spark.sql.Row) => {
-        val f = r.getAs[Long]("file_id"); f >= 200 && f < 300
-      }
-      val box2 = ZTable.appendedBox(man3, isApp2)
-      val (staleMan2Df, _, _) = ZTable.incrementalOptimize(s,
-        ZTable.logRead(s, root, 3L), isApp2, table, newOffset = 2000)
-      val stale2Ids = staleMan2Df.collect().map(_.getAs[Long]("file_id")).toSet
-      val rwIds2 = man3.map(_.getAs[Long]("file_id")).toSet -- stale2Ids
-      val stNew2 = staleMan2Df.where(col("file_id") >= 2000)
-      val a3 = z.where(pmod(col("doc_id"), lit(31L)) === 6L)
-        .select((col("doc_id") + 4000000L).as("doc_id"), col("b1"),
-          pmod(col("b2"), lit(64L)).as("b2"), col("hkey"))
-      val stA3 = zorderWriteFiles(
-        Ranks.globalRowNumber(a3, Seq(col("hkey"), col("doc_id")),
-          out = "_rk"),
-        "_rk", nFiles = 2, offset = 300, out = table, mode = "append")
-      require(ZTable.commitAppend(s, root, 3L, stA3) == 4L)
-      val superseded =
-        try { ZTable.commitOptimize(s, root, 3L, rwIds2, stNew2, box2)
-          false }
-        catch { case _: ZTable.OptimizeSuperseded => true }
-      require(superseded, "O2 must abort: A3 landed inside its box")
-      val (v5, _, _, aborts) = ZTable.incrementalOptimizeOcc(s, root,
-        table, r => { val f = r.getAs[Long]("file_id")
-          f >= 200 && f < 1000 }, newOffset = 3000)
-      require(v5 == 5L && aborts == 0L)
-      // VACUUM against the COMMITTED latest: replaced files + the
-      // superseded attempt's orphans go; everything live survives
-      val man5 = ZTable.logRead(s, root, 5L).collect()
-      val (_, _) = ZTable.vacuum(s, table, ZTable.logRead(s, root, 5L))
-      require(ZTable.listDataFiles(s, table).length == man5.length,
-        "post-vacuum listing must equal the committed manifest")
-      // by-construction protocol counters (each enforced above)
-      val accP = new org.apache.hadoop.fs.Path(s"$p/_occ.json")
-      val out = accP.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .create(accP, true)
-      out.write("""{"versions":6,"conflicts":2,"aborts":1}"""
-        .getBytes("UTF-8"))
-      out.close()
-      p
-    })
+  private val zorderOccFor = Artifact("zorderOcc") { (s, dir) =>
+    import graft.ext.ZTable
+    val p = scratch("zorder_occ", dir)
+    val table = s"$p/table"
+    val root = s"$p/_log"
+    val z = zorderRankedFor(s, dir)
+      .select(col("doc_id"), col("b1"), col("b2"), col("zkey"),
+        col("hkey"))
+    val isApp = col("b2") >= 144 && pmod(col("doc_id"), lit(2L)) === 0L
+    val stBase = zorderWriteFiles(
+      Ranks.globalRowNumber(z.where(!isApp),
+        Seq(col("zkey"), col("doc_id")), out = "_rk"),
+      "_rk", nFiles = 52, offset = 0, out = table)
+    require(ZTable.logCommit(s, root, -1L, stBase) == 0L)
+    val stA1 = zorderWriteFiles(
+      Ranks.globalRowNumber(z.where(isApp),
+        Seq(col("hkey"), col("doc_id")), out = "_rk"),
+      "_rk", nFiles = 12, offset = 100, out = table, mode = "append")
+    require(ZTable.commitAppend(s, root, 0L, stA1) == 1L)
+    // O1 reads v1 and rewrites the hot region (data files land now;
+    // the stale v1-based manifest is what a non-OCC writer would
+    // overwrite the log with)
+    val man1 = ZTable.logRead(s, root, 1L).collect()
+    val isApp1 = (r: org.apache.spark.sql.Row) => {
+      val f = r.getAs[Long]("file_id"); f >= 100 && f < 200
+    }
+    val box1 = ZTable.appendedBox(man1, isApp1)
+    val (staleManDf, _, _) = ZTable.incrementalOptimize(s,
+      ZTable.logRead(s, root, 1L), isApp1, table, newOffset = 1000)
+    val staleIds = staleManDf.collect().map(_.getAs[Long]("file_id")).toSet
+    val rwIds1 = man1.map(_.getAs[Long]("file_id")).toSet -- staleIds
+    val stNew1 = staleManDf.where(col("file_id") >= 1000)
+    // concurrent A2: synthetic rows pinned to the cold band (b2 % 64
+    // — disjoint from O1's box), arrival order, fresh ids
+    val a2 = z.where(pmod(col("doc_id"), lit(31L)) === 5L)
+      .select((col("doc_id") + 3000000L).as("doc_id"), col("b1"),
+        pmod(col("b2"), lit(64L)).as("b2"), col("hkey"))
+    val stA2 = zorderWriteFiles(
+      Ranks.globalRowNumber(a2, Seq(col("hkey"), col("doc_id")),
+        out = "_rk"),
+      "_rk", nFiles = 3, offset = 200, out = table, mode = "append")
+    require(ZTable.commitAppend(s, root, 1L, stA2) == 2L)
+    // O1 commits at its v1 snapshot: conflict → disjoint → rebase
+    require(ZTable.commitOptimize(s, root, 1L, rwIds1, stNew1,
+      box1) == 3L)
+    val man3 = ZTable.logRead(s, root, 3L).collect()
+    require(stA2.collect().map(_.getAs[Long]("file_id")).toSet
+        .subsetOf(man3.map(_.getAs[Long]("file_id")).toSet),
+      "rebase must carry the concurrent append (lost update)")
+    // O2 reads v3 to compact A2's region; A3 lands INSIDE its box
+    val isApp2 = (r: org.apache.spark.sql.Row) => {
+      val f = r.getAs[Long]("file_id"); f >= 200 && f < 300
+    }
+    val box2 = ZTable.appendedBox(man3, isApp2)
+    val (staleMan2Df, _, _) = ZTable.incrementalOptimize(s,
+      ZTable.logRead(s, root, 3L), isApp2, table, newOffset = 2000)
+    val stale2Ids = staleMan2Df.collect().map(_.getAs[Long]("file_id")).toSet
+    val rwIds2 = man3.map(_.getAs[Long]("file_id")).toSet -- stale2Ids
+    val stNew2 = staleMan2Df.where(col("file_id") >= 2000)
+    val a3 = z.where(pmod(col("doc_id"), lit(31L)) === 6L)
+      .select((col("doc_id") + 4000000L).as("doc_id"), col("b1"),
+        pmod(col("b2"), lit(64L)).as("b2"), col("hkey"))
+    val stA3 = zorderWriteFiles(
+      Ranks.globalRowNumber(a3, Seq(col("hkey"), col("doc_id")),
+        out = "_rk"),
+      "_rk", nFiles = 2, offset = 300, out = table, mode = "append")
+    require(ZTable.commitAppend(s, root, 3L, stA3) == 4L)
+    val superseded =
+      try { ZTable.commitOptimize(s, root, 3L, rwIds2, stNew2, box2)
+        false }
+      catch { case _: ZTable.OptimizeSuperseded => true }
+    require(superseded, "O2 must abort: A3 landed inside its box")
+    val (v5, _, _, aborts) = ZTable.incrementalOptimizeOcc(s, root,
+      table, r => { val f = r.getAs[Long]("file_id")
+        f >= 200 && f < 1000 }, newOffset = 3000)
+    require(v5 == 5L && aborts == 0L)
+    // VACUUM against the COMMITTED latest: replaced files + the
+    // superseded attempt's orphans go; everything live survives
+    val man5 = ZTable.logRead(s, root, 5L).collect()
+    val (_, _) = ZTable.vacuum(s, table, ZTable.logRead(s, root, 5L))
+    require(ZTable.listDataFiles(s, table).length == man5.length,
+      "post-vacuum listing must equal the committed manifest")
+    // by-construction protocol counters (each enforced above)
+    val accP = new org.apache.hadoop.fs.Path(s"$p/_occ.json")
+    val out = accP.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .create(accP, true)
+    out.write("""{"versions":6,"conflicts":2,"aborts":1}"""
+      .getBytes("UTF-8"))
+    out.close()
+    p
+  }
 
-  /** Per-JVM registry of the TIME-TRAVEL / retention-VACUUM experiment
-    * (doc_zorder_timetravel). */
-  private val zorderTTPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Build the time-travel experiment (r16): the incremental-OPTIMIZE
+  /** The TIME-TRAVEL / retention-VACUUM experiment (doc_zorder_timetravel,
+    * r16): the incremental-OPTIMIZE
     * lifecycle through the versioned log — v0 base, v1 hot append, v2
     * incremental OPTIMIZE, v3 cold-band append — then a
     * RETENTION-BOUNDED VACUUM with version floor 2
@@ -1189,73 +1150,62 @@ object SparkEntry {
     * but invisible to a v2 reader (snapshot isolation for time-travel
     * reads). Each retention property is a require; the declared row
     * certifies content at both versions plus the expiry accounting. */
-  private def zorderTTFor(s: SparkSession, dir: String): String =
-    zorderTTPath.getOrElseUpdate(dir, timedBuild("zorderTT", dir) {
-      import graft.ext.ZTable
-      val p = s"$scratchBase/graft_zorder_tt_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(p))
-      val table = s"$p/table"
-      val root = s"$p/_log"
-      val z = zorderRankedFor(s, dir)
-        .select(col("doc_id"), col("b1"), col("b2"), col("zkey"),
-          col("hkey"))
-      val isApp = col("b2") >= 144 && pmod(col("doc_id"), lit(2L)) === 0L
-      val stBase = zorderWriteFiles(
-        Ranks.globalRowNumber(z.where(!isApp),
-          Seq(col("zkey"), col("doc_id")), out = "_rk"),
-        "_rk", nFiles = 52, offset = 0, out = table)
-      require(ZTable.logCommit(s, root, -1L, stBase) == 0L)
-      val stA1 = zorderWriteFiles(
-        Ranks.globalRowNumber(z.where(isApp),
-          Seq(col("hkey"), col("doc_id")), out = "_rk"),
-        "_rk", nFiles = 12, offset = 100, out = table, mode = "append")
-      require(ZTable.commitAppend(s, root, 0L, stA1) == 1L)
-      val (v2, filesRw, _, aborts) = ZTable.incrementalOptimizeOcc(s, root,
-        table, r => { val f = r.getAs[Long]("file_id")
-          f >= 100 && f < 200 }, newOffset = 1000)
-      require(v2 == 2L && aborts == 0L)
-      val a2 = z.where(pmod(col("doc_id"), lit(31L)) === 5L)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("b1"),
-          pmod(col("b2"), lit(64L)).as("b2"), col("hkey"))
-      val stA2 = zorderWriteFiles(
-        Ranks.globalRowNumber(a2, Seq(col("hkey"), col("doc_id")),
-          out = "_rk"),
-        "_rk", nFiles = 3, offset = 200, out = table, mode = "append")
-      require(ZTable.commitAppend(s, root, 2L, stA2) == 3L)
-      val (before, deleted) = ZTable.vacuumRetain(s, table, root,
-        fromVersion = 2L)
-      require(deleted == filesRw, "retention must expire exactly the " +
-        s"rewrite set ($filesRw files), got $deleted")
-      val conf = s.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(table).getFileSystem(conf)
-      def onDisk(f: String) = fs.exists(new org.apache.hadoop.fs.Path(f))
-      val v2Paths = ZTable.logRead(s, root, 2L).select(col("path"))
-        .collect().map(_.getString(0))
-      require(v2Paths.forall(onDisk),
-        "every retained snapshot's file must survive the retention vacuum")
-      val v1Paths = ZTable.logRead(s, root, 1L).select(col("path"))
-        .collect().map(_.getString(0))
-      require(v1Paths.exists(f => !onDisk(f)),
-        "the expired snapshot must have lost files (time-travel expiry)")
-      val accP = new org.apache.hadoop.fs.Path(s"$p/_tt.json")
-      val out = accP.getFileSystem(conf).create(accP, true)
-      out.write(s"""{"before":$before,"deleted":$deleted}"""
-        .getBytes("UTF-8"))
-      out.close()
-      p
-    })
+  private val zorderTTFor = Artifact("zorderTT") { (s, dir) =>
+    import graft.ext.ZTable
+    val p = scratch("zorder_tt", dir)
+    val table = s"$p/table"
+    val root = s"$p/_log"
+    val z = zorderRankedFor(s, dir)
+      .select(col("doc_id"), col("b1"), col("b2"), col("zkey"),
+        col("hkey"))
+    val isApp = col("b2") >= 144 && pmod(col("doc_id"), lit(2L)) === 0L
+    val stBase = zorderWriteFiles(
+      Ranks.globalRowNumber(z.where(!isApp),
+        Seq(col("zkey"), col("doc_id")), out = "_rk"),
+      "_rk", nFiles = 52, offset = 0, out = table)
+    require(ZTable.logCommit(s, root, -1L, stBase) == 0L)
+    val stA1 = zorderWriteFiles(
+      Ranks.globalRowNumber(z.where(isApp),
+        Seq(col("hkey"), col("doc_id")), out = "_rk"),
+      "_rk", nFiles = 12, offset = 100, out = table, mode = "append")
+    require(ZTable.commitAppend(s, root, 0L, stA1) == 1L)
+    val (v2, filesRw, _, aborts) = ZTable.incrementalOptimizeOcc(s, root,
+      table, r => { val f = r.getAs[Long]("file_id")
+        f >= 100 && f < 200 }, newOffset = 1000)
+    require(v2 == 2L && aborts == 0L)
+    val a2 = z.where(pmod(col("doc_id"), lit(31L)) === 5L)
+      .select((col("doc_id") + 3000000L).as("doc_id"), col("b1"),
+        pmod(col("b2"), lit(64L)).as("b2"), col("hkey"))
+    val stA2 = zorderWriteFiles(
+      Ranks.globalRowNumber(a2, Seq(col("hkey"), col("doc_id")),
+        out = "_rk"),
+      "_rk", nFiles = 3, offset = 200, out = table, mode = "append")
+    require(ZTable.commitAppend(s, root, 2L, stA2) == 3L)
+    val (before, deleted) = ZTable.vacuumRetain(s, table, root,
+      fromVersion = 2L)
+    require(deleted == filesRw, "retention must expire exactly the " +
+      s"rewrite set ($filesRw files), got $deleted")
+    val conf = s.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(table).getFileSystem(conf)
+    def onDisk(f: String) = fs.exists(new org.apache.hadoop.fs.Path(f))
+    val v2Paths = ZTable.logRead(s, root, 2L).select(col("path"))
+      .collect().map(_.getString(0))
+    require(v2Paths.forall(onDisk),
+      "every retained snapshot's file must survive the retention vacuum")
+    val v1Paths = ZTable.logRead(s, root, 1L).select(col("path"))
+      .collect().map(_.getString(0))
+    require(v1Paths.exists(f => !onDisk(f)),
+      "the expired snapshot must have lost files (time-travel expiry)")
+    val accP = new org.apache.hadoop.fs.Path(s"$p/_tt.json")
+    val out = accP.getFileSystem(conf).create(accP, true)
+    out.write(s"""{"before":$before,"deleted":$deleted}"""
+      .getBytes("UTF-8"))
+    out.close()
+    p
+  }
 
-  /** Per-JVM registry of the STREAMING logged-table ingest experiment
-    * (stream_ztable_append). */
-  private val ztabStreamPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Build the streaming-ingest-into-a-logged-table experiment (r16):
+  /** The STREAMING logged-table ingest experiment (stream_ztable_append,
+    * r16):
     * four residue-class micro-batches each append to the z-table
     * THROUGH the versioned manifest log via
     * [[graft.ext.ZTable.appendBatchTxn]] — the Delta txnAppId/
@@ -1269,73 +1219,66 @@ object SparkEntry {
     * and writes nothing). A final full VACUUM against the committed
     * latest must find ZERO orphans — nothing leaked, nothing doubled —
     * and the on-disk file count must equal the manifest's. */
-  private def ztabStreamFor(s: SparkSession, dir: String): String =
-    ztabStreamPath.getOrElseUpdate(dir, timedBuild("ztabStream", dir) {
-      import graft.ext.ZTable
-      val p = s"$scratchBase/graft_ztab_stream_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
+  private val ztabStreamFor = Artifact("ztabStream") { (s, dir) =>
+    import graft.ext.ZTable
+    val p = scratch("ztab_stream", dir)
+    val table = s"$p/table"
+    val root = s"$p/_log"
+    val nRes = 4
+    var skips = 0L
+    graft.streaming.StreamingDedup.replayForeachBatchResidue(
+      s, s"$dir/documents.parquet", s"$p/src", s"$p/ckpt", nRes,
+      "doc_id", org.apache.spark.sql.streaming.OutputMode.Append()) { st =>
+      st.select(col("doc_id").cast("long").as("doc_id"),
+        col("n_chars").cast("long").as("n_chars"))
+    } { (batch, batchId) =>
+      // bucket dims derived ROW-LOCALLY (a stream cannot know global
+      // ranks): b1 from length, b2 from the portable md5 dimension
+      val rows = batch.select(col("doc_id"),
+        pmod(col("n_chars"), lit(256L)).as("b1"),
+        pmod(pmod(conv(substring(md5(concat(lit("zdim:"),
+          col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long"),
+          lit(10000L)), lit(256L)).as("b2"))
+      val ranked = Ranks.globalRowNumber(rows, Seq(col("doc_id")),
+        out = "_rk")
+      val offset = (batchId * 10).toInt
+      if (batchId == 1L) {
+        // pre-commit crash: data landed, log didn't advance — the
+        // retry below must rewrite these very dirs, never double them
+        ZTable.writeFiles(ranked, "_rk", nFiles = 4, offset = offset,
+          out = table, dynamicOverwrite = true): Unit
       }
-      rm(new java.io.File(p))
-      val table = s"$p/table"
-      val root = s"$p/_log"
-      val nRes = 4
-      var skips = 0L
-      graft.streaming.StreamingDedup.replayForeachBatchResidue(
-        s, s"$dir/documents.parquet", s"$p/src", s"$p/ckpt", nRes,
-        "doc_id", org.apache.spark.sql.streaming.OutputMode.Append()) { st =>
-        st.select(col("doc_id").cast("long").as("doc_id"),
-          col("n_chars").cast("long").as("n_chars"))
-      } { (batch, batchId) =>
-        // bucket dims derived ROW-LOCALLY (a stream cannot know global
-        // ranks): b1 from length, b2 from the portable md5 dimension
-        val rows = batch.select(col("doc_id"),
-          pmod(col("n_chars"), lit(256L)).as("b1"),
-          pmod(pmod(conv(substring(md5(concat(lit("zdim:"),
-            col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long"),
-            lit(10000L)), lit(256L)).as("b2"))
-        val ranked = Ranks.globalRowNumber(rows, Seq(col("doc_id")),
-          out = "_rk")
-        val offset = (batchId * 10).toInt
-        if (batchId == 1L) {
-          // pre-commit crash: data landed, log didn't advance — the
-          // retry below must rewrite these very dirs, never double them
-          ZTable.writeFiles(ranked, "_rk", nFiles = 4, offset = offset,
-            out = table, dynamicOverwrite = true): Unit
-        }
-        val (_, committed) = ZTable.appendBatchTxn(s, table, root,
+      val (_, committed) = ZTable.appendBatchTxn(s, table, root,
+        "ztap", batchId, ranked, "_rk", nFiles = 4, offset = offset)
+      require(committed, s"batch $batchId first commit must land")
+      if (batchId == 2L) {
+        // post-commit replay: the whole commit path re-fires; the txn
+        // marker must short-circuit it BEFORE any data write
+        val before = ZTable.logLatest(s, root)
+        val (v, again) = ZTable.appendBatchTxn(s, table, root,
           "ztap", batchId, ranked, "_rk", nFiles = 4, offset = offset)
-        require(committed, s"batch $batchId first commit must land")
-        if (batchId == 2L) {
-          // post-commit replay: the whole commit path re-fires; the txn
-          // marker must short-circuit it BEFORE any data write
-          val before = ZTable.logLatest(s, root)
-          val (v, again) = ZTable.appendBatchTxn(s, table, root,
-            "ztap", batchId, ranked, "_rk", nFiles = 4, offset = offset)
-          require(!again && v == before,
-            "replayed batch must skip via its txn marker")
-          skips += 1
-        }
+        require(!again && v == before,
+          "replayed batch must skip via its txn marker")
+        skips += 1
       }
-      val latest = ZTable.logLatest(s, root)
-      require(latest == nRes - 1L, s"expected v${nRes - 1}, got v$latest")
-      val man = ZTable.logRead(s, root, latest)
-      val (_, orphans) = ZTable.vacuum(s, table, man)
-      require(orphans == 0L,
-        s"exactly-once ingest must leave zero orphan files, got $orphans")
-      require(ZTable.listDataFiles(s, table).length == man.count(),
-        "on-disk files must equal the committed manifest")
-      val conf = s.sparkContext.hadoopConfiguration
-      val accP = new org.apache.hadoop.fs.Path(s"$p/_ztap.json")
-      val out = accP.getFileSystem(conf).create(accP, true)
-      out.write(
-        s"""{"versions":$nRes,"skips":$skips,"orphans":0}"""
-          .getBytes("UTF-8"))
-      out.close()
-      p
-    })
+    }
+    val latest = ZTable.logLatest(s, root)
+    require(latest == nRes - 1L, s"expected v${nRes - 1}, got v$latest")
+    val man = ZTable.logRead(s, root, latest)
+    val (_, orphans) = ZTable.vacuum(s, table, man)
+    require(orphans == 0L,
+      s"exactly-once ingest must leave zero orphan files, got $orphans")
+    require(ZTable.listDataFiles(s, table).length == man.count(),
+      "on-disk files must equal the committed manifest")
+    val conf = s.sparkContext.hadoopConfiguration
+    val accP = new org.apache.hadoop.fs.Path(s"$p/_ztap.json")
+    val out = accP.getFileSystem(conf).create(accP, true)
+    out.write(
+      s"""{"versions":$nRes,"skips":$skips,"orphans":0}"""
+        .getBytes("UTF-8"))
+    out.close()
+    p
+  }
 
   /** Write `frame` (doc_id, b1, b2 + a rank column) as real parquet
     * under `out`, one data file per logical file id: file_id = offset +
@@ -1436,20 +1379,13 @@ object SparkEntry {
       col("box_sum_doc"))
   }
 
-  /** Per-JVM registry of trained-langid predictions (doc, lang,
-    * pred_lang, score) — train-once / consume-twice across the per-doc
-    * and confusion queries, session-validated like clusterCache. */
-  private val langIdCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private def langIdTrainedFor(s: SparkSession, dir: String): DataFrame =
-    langIdCache.get(dir).filter(_.sparkSession eq s).getOrElse(
-        timedBuild("langIdTrained", dir) {
-      val out = TextAnalysis.langIdTrained(t(s, dir, "documents"),
-        "doc_id", "text", "lang").localCheckpoint(true)
-      langIdCache.put(dir, out)
-      out
-    })
+  /** Trained-langid predictions (doc, lang, pred_lang, score) —
+    * train-once / consume-twice across the per-doc and confusion
+    * queries. */
+  private val langIdTrainedFor = Artifact("langIdTrained") { (s, dir) =>
+    TextAnalysis.langIdTrained(t(s, dir, "documents"),
+      "doc_id", "text", "lang").localCheckpoint(true)
+  }
 
   /** Staged frames of the COMPOSED end-to-end curation pipeline
     * (doc_pipeline_e2e / doc_pipeline_funnel) — ingest (structured text
@@ -1458,14 +1394,29 @@ object SparkEntry {
     * exact+fuzzy dedup keep-join → Gopher format gates → trained-LR
     * quality gate → fuzzy decontamination → temperature mix (rates
     * computed from POST-filter counts — the cross-stage interaction a
-    * per-stage query can't see) → seeded shuffle-pack. Built once per
-    * (JVM, sf dir); localCheckpoint boundaries sit exactly where a real
-    * pipeline would materialize (the cleaned corpus, the deduped
-    * corpus, the shipped curated set) so each stage's plan stays O(its
-    * own work) instead of re-deriving the whole upstream chain per
-    * consumer. */
-  private val e2eCache = scala.collection.concurrent
-    .TrieMap.empty[String, graft.ext.CurationPipeline.Stages]
+    * per-stage query can't see) → seeded shuffle-pack. localCheckpoint
+    * boundaries sit exactly where a real pipeline would materialize (the
+    * cleaned corpus, the deduped corpus, the shipped curated set) so
+    * each stage's plan stays O(its own work) instead of re-deriving the
+    * whole upstream chain per consumer.
+    *
+    * minSentences = 2: the fixture's planted ' line ' sentence breaks
+    * are sparse (median 2 kept sentences/doc), so the canonical 5 would
+    * cut 92% at stage one and starve the downstream stages; the rule
+    * COMPOSITION is what this query pins, the floor is corpus-scaled
+    * (same discipline as pageRank's gridDp). The quality gate scores
+    * cleaned text with the model trained on the raw corpus
+    * (doc_quality_lr's cached model — the oracle replays it from the
+    * shared training CTEs); the decon bench is the planted
+    * drop-first-word edit of cleaned ORIGINAL docs. */
+  private val e2eStagesFor = Artifact("e2ePipeline") { (s, dir) =>
+    val ingest = e2eIngest(t(s, dir, "documents"))
+    val ranks = rankFor(s, dir).select(col("node").as("doc_id"), col("rank"))
+    graft.ext.CurationPipeline.run(ingest, lrModelFor(s, dir),
+      benchOf = e2eBenchOf,
+      urls = ingest.select(col("doc_id"), e2eUrl.as("url")), ranks = ranks,
+      minSentences = 2)
+  }
 
   /** The composed pipeline's INGEST frame from a docs frame (batch table
     * or streaming source — every construction is row-local): structured
@@ -1514,31 +1465,232 @@ object SparkEntry {
       concat_ws(" ", slice(split(col("text"), " "), 2, 1000000))
         .as("text"))
 
-  private def e2eStagesFor(s: SparkSession,
-      dir: String): graft.ext.CurationPipeline.Stages =
-    e2eCache.get(dir).filter(_.cleaned.sparkSession eq s).getOrElse(
-        timedBuild("e2ePipeline", dir) {
-      val docs = t(s, dir, "documents")
-      val ingest = e2eIngest(docs)
-      val urls = ingest.select(col("doc_id"), e2eUrl.as("url"))
-      val ranks = rankFor(s, dir)
-        .select(col("node").as("doc_id"), col("rank"))
-      // minSentences = 2: the fixture's planted ' line ' sentence breaks
-      // are sparse (median 2 kept sentences/doc), so the canonical 5
-      // would cut 92% at stage one and starve the downstream stages; the
-      // rule COMPOSITION is what this query pins, the floor is corpus-
-      // scaled (same discipline as pageRank's gridDp). The quality gate
-      // scores cleaned text with the model trained on the raw corpus
-      // (doc_quality_lr's cached model — the oracle replays it from the
-      // shared training CTEs); the decon bench is the planted
-      // drop-first-word edit of cleaned ORIGINAL docs.
-      val st = graft.ext.CurationPipeline.run(ingest, lrModelFor(s, dir),
-        benchOf = e2eBenchOf,
-        urls = urls, ranks = ranks,
-        minSentences = 2)
-      e2eCache.put(dir, st)
-      st
-    })
+  /** The streaming composed pipeline's sink (stream_pipeline):
+    * checkpointed foreachBatch parquet of per-doc ingest decisions
+    * against the frozen batch artifacts. The checkpoint and the two
+    * indexes sit BESIDE the sink root, not inside it. */
+  private val streamPipeFor = Artifact("streamPipeline") { (s, dir) =>
+    val st = e2eStagesFor(s, dir)
+    val m = lrModelFor(s, dir)
+    val dec6 = DecimalType(38, 6)
+    val p = scratch("stream_pipe", dir)
+    val cp = scratch("stream_pipe_ckpt", dir)
+    // the two corpus-sized artifacts are PERSISTED INDEXES with the
+    // append/compact lifecycle (r13 verdict task 7): the batch
+    // probes below read them from disk, and at unbounded ingest
+    // they evolve per batch via appendKeeperIndex /
+    // appendShingleIndex instead of a corpus rebuild
+    // (StreamingSpec pins probe-after-append ≡ rebuild)
+    val kIdx = scratch("stream_pipe_url_keeper", dir)
+    val shIdx = scratch("stream_pipe_shingle_idx", dir)
+    graft.streaming.StreamingDedup.buildKeeperIndex(
+      e2eIngest(t(s, dir, "documents"))
+        .select(col("doc_id"), e2eUrl.as("url"))
+        .select(col("doc_id"), UrlOps.canonicalUrl(col("url"))
+          .as("canon")), kIdx)
+    graft.streaming.StreamingDedup.buildShingleIndex(
+      st.cleaned, "doc_id", "text", shIdx, n = 3)
+    // the folded keeper view is pinned for the replay (the index is
+    // frozen here; after an appendKeeperIndex a production ingest
+    // re-derives it with one keeperOf call)
+    val canonKeeper = graft.ext.Pin.pin(
+      graft.streaming.StreamingDedup.keeperOf(s, kIdx))
+    val medianCut = st.medianCut.localCheckpoint(true)
+    val rankCut = st.rankCut.localCheckpoint(true)
+    val ranks = rankFor(s, dir)
+      .select(col("node").as("doc_id"), col("rank"))
+    val bench = e2eBenchOf(st.cleaned).localCheckpoint(true)
+    val rates = Corpus.temperatureRates(st.decon, "source", 5000L)
+      .localCheckpoint(true)
+    graft.streaming.StreamingDedup.replayForeachBatch(
+      s, s"$dir/documents.parquet", cp,
+      org.apache.spark.sql.streaming.OutputMode.Append()) { stDocs =>
+      // streaming side: row-local only — strata synth + the URL
+      e2eIngest(stDocs).withColumn("url", e2eUrl)
+    } { (batch, _) =>
+      val urlKept = batch
+        .withColumn("canon", UrlOps.canonicalUrl(col("url")))
+        .join(canonKeeper, "canon")
+        .where(col("doc_id") === col("_keeper"))
+        .select(col("doc_id"), col("lang"), col("source"), col("text"))
+      val cleaned = TextAnalysis.c4Clean(urlKept, "doc_id", "text",
+          carry = Seq("lang", "source"), minSentences = 2)
+        .where(col("c4_keep"))
+        .select(col("doc_id"), col("c4_text").as("text"), col("lang"),
+          col("source"))
+      val dropped = graft.streaming.StreamingDedup.shingleDropStream(
+          s, cleaned, "doc_id", "text", shIdx, minJ = 0.5, n = 3)
+        .select(col("doc").as("doc_id"))
+      val deduped = cleaned.join(dropped, Seq("doc_id"), "left_anti")
+      val gp = TextAnalysis.gopherRules(deduped, "doc_id", "text")
+        .where(col("gopher_pass")).select(col("doc_id"))
+      val gated = deduped.join(gp, Seq("doc_id"), "left_semi")
+      val q = gated.withColumn("_sc",
+          QualityModel.scoreText(col("text"), m))
+        .crossJoin(broadcast(medianCut))
+        .where(col("_sc") * 2 > (lit(2) - col("_r")) * col("_lo") +
+          col("_r") * col("_hi"))
+        .select(col("doc_id"), col("text"), col("lang"), col("source"))
+      val rked = q.join(ranks, "doc_id")
+        .crossJoin(broadcast(rankCut))
+        .where(col("rank").cast(dec6) * 4 >=
+          (lit(4) - col("_r")) * col("_lo") + col("_r") * col("_hi"))
+        .select(col("doc_id"), col("text"), col("lang"), col("source"))
+      val contam = Dedup.crossJaccardPairs(rked, bench, "doc_id",
+          "text", minJ = 0.5)
+        .select(col("doc_a").as("doc_id")).distinct()
+      val decon = rked.join(contam, Seq("doc_id"), "left_anti")
+      decon.join(broadcast(rates), "source")
+        .withColumn("sample_bucket", Corpus.sampleBucket(col("doc_id")))
+        .where(col("sample_bucket") < col("rate_bp"))
+        .select(col("doc_id"), col("lang"), col("source"),
+          size(split(col("text"), " ")).cast("long").as("n_tokens"))
+        .write.mode("append").parquet(p)
+    }
+    p
+  }
+
+  /** The Complete-mode rollup of stream_sink_rollup landed as
+    * event_type-partitioned parquet: checkpointed foreachBatch output.
+    * The checkpoint is a SIBLING of the sink root — each committed batch
+    * overwrites the root, which would delete a checkpoint nested in it;
+    * a stale checkpoint would mark the source processed and never fire
+    * the batch. */
+  private val streamSinkFor = Artifact("streamSink") { (s, dir) =>
+    val p = scratch("stream_sink", dir)
+    val cp = scratch("stream_sink_ckpt", dir)
+    graft.streaming.StreamingDedup.replayForeachBatch(
+      s, s"$dir/events.parquet", cp,
+      org.apache.spark.sql.streaming.OutputMode.Complete()) { st =>
+      Observations.normalizeEventTs(st)
+        .groupBy(col("event_type"),
+          window(col("ts"), "10800 seconds").as("_w"))
+        .agg(count(lit(1)).as("n_events"),
+          Resample.detMean(col("value")).as("mean_value"))
+        .select(col("event_type"), col("_w").getField("start").as("ws"),
+          col("n_events"), col("mean_value"))
+    } { (batch, _) =>
+      batch.write.mode("overwrite").partitionBy("event_type").parquet(p)
+    }
+    p
+  }
+
+  /** The corpus split (doc_id % 5 != 0) every stream-dedup probe runs
+    * against. */
+  private def dedupCorpus(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").where(col("doc_id") % 5 =!= 0)
+
+  /** Persisted MinHash band index (stream_minhash_dedup). Corpus
+    * indexing is paid once and probes are incremental, so bench reps 2+
+    * time the probe, not the build (rep 1 absorbs the build like it
+    * absorbs codegen). */
+  private val minhashIndexFor = Artifact("minhashIdx") { (s, dir) =>
+    val p = scratch("stream_minhash_idx", dir)
+    graft.streaming.StreamingDedup.buildMinhashIndex(dedupCorpus(s, dir),
+      "doc_id", "text", p)
+    p
+  }
+
+  /** Persisted portable-SimHash band index, probed by
+    * stream_simhash_dedup and stream_curate. */
+  private val simhashIndexFor = Artifact("simhashIdx") { (s, dir) =>
+    val p = scratch("stream_simhash_idx", dir)
+    graft.streaming.StreamingDedup.buildSimhashIndex(dedupCorpus(s, dir),
+      "doc_id", "text", p, portable = true)
+    p
+  }
+
+  /** Persisted distinct 16-token chunk-hash index (stream_chunk_dedup). */
+  private val chunkIndexFor = Artifact("chunkIdx") { (s, dir) =>
+    val p = scratch("stream_chunk_idx", dir)
+    graft.streaming.StreamingDedup.buildChunkIndex(dedupCorpus(s, dir),
+      "doc_id", "text", p, chunkTokens = 16)
+    p
+  }
+
+  /** Persisted distinct 8-token window-hash index
+    * (stream_substring_dedup). */
+  private val windowIndexFor = Artifact("windowIdx") { (s, dir) =>
+    val p = scratch("stream_window_idx", dir)
+    graft.streaming.StreamingDedup.buildWindowIndex(dedupCorpus(s, dir),
+      "doc_id", "text", p, k = 8)
+    p
+  }
+
+  /** Persisted portable Bloom filter of the corpus split
+    * (stream_bloom_filter). */
+  private val bloomIndexFor = Artifact("bloomIdx") { (s, dir) =>
+    val p = scratch("bloom_idx", dir)
+    graft.streaming.StreamingDedup.buildBloomIndex(dedupCorpus(s, dir),
+      "text", p, m = 65536, k = 5)
+    p
+  }
+
+  /** stream_bloom_filter's probe replay: the probe split plus planted
+    * verbatim corpus copies under +100000 ids. */
+  private val bloomReplayFor = Artifact("bloomReplay") { (s, dir) =>
+    val docs = t(s, dir, "documents")
+    replayParquet(
+      docs.where(col("doc_id") % 5 === 0).select(col("doc_id"), col("text"))
+        .unionByName(docs.where(col("doc_id") % 5 =!= 0 &&
+            col("doc_id") % 50 === 1)
+          .select((col("doc_id") + 100000L).as("doc_id"), col("text"))),
+      scratch("bloom_replay", dir))
+  }
+
+  /** stream_substring_dedup's probe replay: the probe split plus planted
+    * offset-shifted leaks. */
+  private val substringReplayFor = Artifact("substrReplay") { (s, dir) =>
+    val docs = t(s, dir, "documents")
+    replayParquet(
+      docs.where(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), col("text"))
+        .unionByName(docs.where(col("doc_id") % 5 =!= 0 &&
+            col("doc_id") % 7 === 3)
+          .select((col("doc_id") + 100000L).as("doc_id"),
+            concat(lit("planted leak prefix alpha beta "), col("text"))
+              .as("text"))),
+      scratch("substr_replay", dir))
+  }
+
+  /** The frozen k-means model stream_semdedup assigns against. */
+  private val semModelFor = Artifact("semKmeans") { (s, dir) =>
+    Kmeans.train(t(s, dir, "embeddings"), "vec_id", "embedding", k = 8,
+      iters = 3)
+  }
+
+  /** stream_semdedup's replay: planted exact copies (+100000) and
+    * negated vectors (+200000). */
+  private val semReplayFor = Artifact("semReplay") { (s, dir) =>
+    val emb = t(s, dir, "embeddings")
+    replayParquet(
+      emb.where(col("vec_id") % 10 === 0)
+        .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
+        .unionByName(emb.where(col("vec_id") % 10 === 5)
+          .select((col("vec_id") + 200000L).as("vec_id"),
+            transform(col("embedding"), x => -x).as("embedding"))),
+      scratch("stream_sem", dir))
+  }
+
+  /** stream_sessions' replay: the user-sliced obs frame plus one per-key
+    * SENTINEL event far past the data. The sentinel closes each key's
+    * final session through the ARRIVAL path (an event more than `gap`
+    * after the open session's end), so a bounded replay emits exactly
+    * the true sessions — the sentinel's own session stays open in state
+    * and is never emitted. */
+  private val sessionReplayFor = Artifact("sessionReplay") { (s, dir) =>
+    val obs = Observations.from(
+      events(s, dir).where(col("user_id") < 40), "user_id", "ts", "value")
+    val sentinels = obs.groupBy(col(KeyCol))
+      .agg(max(col(TsCol)).as("mx"))
+      .select(col(KeyCol),
+        (col("mx") + expr("interval 9000 seconds")).as(TsCol),
+        lit(0.0).as(ValueCol))
+    replayParquet(
+      obs.select(col(KeyCol), col(TsCol), col(ValueCol))
+        .unionByName(sentinels),
+      scratch("stream_sessions", dir))
+  }
 
   /** Portable round-half-up at 6 places via explicit float arithmetic —
     * used where interpolation's dyadic time fractions can land values
@@ -2502,14 +2654,9 @@ object SparkEntry {
     // a green row pins the encode/decode of every text byte (JSON
     // escaping included).
     "io_jsonl_roundtrip" -> ((s, dir) => {
-      val p = jsonlPath.getOrElseUpdate(dir, {
-        val path = s"$scratchBase/graft_jsonl_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-        t(s, dir, "documents").write.mode("overwrite").json(path)
-        path
-      })
       val back = s.read
         .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-        .json(p)
+        .json(jsonlFor(s, dir))
       sortSmall(back.groupBy(col("lang")).agg(
         count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_doc_id"),
@@ -2653,18 +2800,7 @@ object SparkEntry {
     // table, so a green row proves the end-to-end
     // mine→cluster→keep→write→read-back path, not just the plan.
     "doc_dedup_sink" -> ((s, dir) => {
-      val path = dedupSinkPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_dedup_corpus_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val cl = clustersFor(s, dir)
-        val docs = t(s, dir, "documents")
-        docs.join(cl, docs("doc_id") === cl("doc"), "left")
-          .where(col("root").isNull || col("root") === col("doc_id"))
-          .select(docs("doc_id"), col("text"), col("lang"), col("source"),
-            col("n_chars"))
-          .write.mode("overwrite").partitionBy("lang").parquet(p)
-        p
-      })
-      val sink = s.read.parquet(path)
+      val sink = s.read.parquet(dedupSinkFor(s, dir))
       sortSmall(sink.groupBy(col("lang")).agg(
           count(lit(1)).as("n_docs"),
           sum(col("doc_id")).as("sum_doc_id"),
@@ -2690,32 +2826,7 @@ object SparkEntry {
     // every join key is doc_id, so the composite aligns on one exchange
     // and the write shuffles once into lang partitions.
     "doc_curate_sink" -> ((s, dir) => {
-      val path = curateSinkPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_curated_corpus_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val docs = t(s, dir, "documents")
-        val qual = TextAnalysis.qualityScore(docs, "doc_id", "text")
-          .where(col("n_tokens") >= 15 && col("stopword_ratio") >= 0.01 &&
-            col("distinct_ratio") >= 0.3)
-          .select(col("doc_id"))
-        val calm = TextAnalysis.repetitionStats(docs, "doc_id", "text")
-          .where(col("top_2gram_frac") <= 0.1)
-          .select(col("doc").as("doc_id"))
-        val lid = TextAnalysis.languageId(docs, "doc_id", "text")
-          .where(col("pred_lang") =!= "und")
-          .select(col("doc_id"))
-        val cl = clustersFor(s, dir)
-        docs.join(cl, docs("doc_id") === cl("doc"), "left")
-          .where(col("root").isNull || col("root") === docs("doc_id"))
-          .select(docs("doc_id"), col("text"), col("lang"), col("source"),
-            col("n_chars"))
-          .join(qual, Seq("doc_id"), "left_semi")
-          .join(calm, Seq("doc_id"), "left_semi")
-          .join(lid, Seq("doc_id"), "left_semi")
-          .write.mode("overwrite").partitionBy("lang").parquet(p)
-        p
-      })
-      val sink = s.read.parquet(path)
+      val sink = s.read.parquet(curateSinkFor(s, dir))
       sortSmall(sink.groupBy(col("lang")).agg(
           count(lit(1)).as("n_docs"),
           sum(col("doc_id")).as("sum_doc_id"),
@@ -2766,8 +2877,7 @@ object SparkEntry {
     // aggregate on top of the per-doc counts.
     "text_bpe_fertility" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val merges = bpeMergesCache.getOrElseUpdate(dir,
-        graft.ext.Bpe.trainMerges(docs, "text", m = 8))
+      val merges = bpeMergesFor(s, dir)
       graft.ext.Bpe.tokenCounts(docs, "doc_id", "text", merges)
         .join(docs.select(col("doc_id").as("doc"), col("lang")), "doc")
         .groupBy(col("lang"))
@@ -2786,8 +2896,7 @@ object SparkEntry {
     // BPE replay with the packing arithmetic.
     "doc_seq_pack_bpe" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val merges = bpeMergesCache.getOrElseUpdate(dir,
-        graft.ext.Bpe.trainMerges(docs, "text", m = 8))
+      val merges = bpeMergesFor(s, dir)
       val counts = graft.ext.Bpe.tokenCounts(docs, "doc_id", "text", merges)
         .select(col("doc"), col("bpe_tokens").as("n_tokens"))
       sortBig(Corpus.packSequencesFromCounts(counts, seqLen = 256L,
@@ -2950,94 +3059,7 @@ object SparkEntry {
     // maintained by the append/compact lifecycle the IVF/window indexes
     // already ship.
     "stream_pipeline" -> ((s, dir) => {
-      val path = streamPipePath.getOrElseUpdate(dir,
-          timedBuild("streamPipeline", dir) {
-        val st = e2eStagesFor(s, dir)
-        val m = lrModelFor(s, dir)
-        val dec6 = DecimalType(38, 6)
-        val p = s"$scratchBase/graft_stream_pipe_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val cp = p + "_ckpt"
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(cp)); rm(new java.io.File(p))
-        // the two corpus-sized artifacts are PERSISTED INDEXES with the
-        // append/compact lifecycle (r13 verdict task 7): the batch
-        // probes below read them from disk, and at unbounded ingest
-        // they evolve per batch via appendKeeperIndex /
-        // appendShingleIndex instead of a corpus rebuild
-        // (StreamingSpec pins probe-after-append ≡ rebuild)
-        val kIdx = s"${p}_url_keeper"
-        val shIdx = s"${p}_shingle_idx"
-        graft.streaming.StreamingDedup.buildKeeperIndex(
-          e2eIngest(t(s, dir, "documents"))
-            .select(col("doc_id"), e2eUrl.as("url"))
-            .select(col("doc_id"), UrlOps.canonicalUrl(col("url"))
-              .as("canon")), kIdx)
-        graft.streaming.StreamingDedup.buildShingleIndex(
-          st.cleaned, "doc_id", "text", shIdx, n = 3)
-        // the folded keeper view is pinned for the replay (the index is
-        // frozen here; after an appendKeeperIndex a production ingest
-        // re-derives it with one keeperOf call)
-        val canonKeeper = graft.ext.Pin.pin(
-          graft.streaming.StreamingDedup.keeperOf(s, kIdx))
-        val medianCut = st.medianCut.localCheckpoint(true)
-        val rankCut = st.rankCut.localCheckpoint(true)
-        val ranks = rankFor(s, dir)
-          .select(col("node").as("doc_id"), col("rank"))
-        val bench = e2eBenchOf(st.cleaned).localCheckpoint(true)
-        val rates = Corpus.temperatureRates(st.decon, "source", 5000L)
-          .localCheckpoint(true)
-        graft.streaming.StreamingDedup.replayForeachBatch(
-          s, s"$dir/documents.parquet", cp,
-          org.apache.spark.sql.streaming.OutputMode.Append()) { stDocs =>
-          // streaming side: row-local only — strata synth + the URL
-          e2eIngest(stDocs).withColumn("url", e2eUrl)
-        } { (batch, _) =>
-          val urlKept = batch
-            .withColumn("canon", UrlOps.canonicalUrl(col("url")))
-            .join(canonKeeper, "canon")
-            .where(col("doc_id") === col("_keeper"))
-            .select(col("doc_id"), col("lang"), col("source"), col("text"))
-          val cleaned = TextAnalysis.c4Clean(urlKept, "doc_id", "text",
-              carry = Seq("lang", "source"), minSentences = 2)
-            .where(col("c4_keep"))
-            .select(col("doc_id"), col("c4_text").as("text"), col("lang"),
-              col("source"))
-          val dropped = graft.streaming.StreamingDedup.shingleDropStream(
-              s, cleaned, "doc_id", "text", shIdx, minJ = 0.5, n = 3)
-            .select(col("doc").as("doc_id"))
-          val deduped = cleaned.join(dropped, Seq("doc_id"), "left_anti")
-          val gp = TextAnalysis.gopherRules(deduped, "doc_id", "text")
-            .where(col("gopher_pass")).select(col("doc_id"))
-          val gated = deduped.join(gp, Seq("doc_id"), "left_semi")
-          val q = gated.withColumn("_sc",
-              QualityModel.scoreText(col("text"), m))
-            .crossJoin(broadcast(medianCut))
-            .where(col("_sc") * 2 > (lit(2) - col("_r")) * col("_lo") +
-              col("_r") * col("_hi"))
-            .select(col("doc_id"), col("text"), col("lang"), col("source"))
-          val rked = q.join(ranks, "doc_id")
-            .crossJoin(broadcast(rankCut))
-            .where(col("rank").cast(dec6) * 4 >=
-              (lit(4) - col("_r")) * col("_lo") + col("_r") * col("_hi"))
-            .select(col("doc_id"), col("text"), col("lang"), col("source"))
-          val contam = Dedup.crossJaccardPairs(rked, bench, "doc_id",
-              "text", minJ = 0.5)
-            .select(col("doc_a").as("doc_id")).distinct()
-          val decon = rked.join(contam, Seq("doc_id"), "left_anti")
-          decon.join(broadcast(rates), "source")
-            .withColumn("sample_bucket", Corpus.sampleBucket(col("doc_id")))
-            .where(col("sample_bucket") < col("rate_bp"))
-            .select(col("doc_id"), col("lang"), col("source"),
-              size(split(col("text"), " ")).cast("long").as("n_tokens"))
-            .write.mode("append").parquet(p)
-        }
-        p
-      })
-      sortSmall(s.read.parquet(path), "doc_id")
+      sortSmall(s.read.parquet(streamPipeFor(s, dir)), "doc_id")
     }),
 
     // model-in-the-loop quality gate: a linear classifier TRAINED
@@ -3454,34 +3476,7 @@ object SparkEntry {
     // files). At 100 TB this is the compaction job a table format
     // schedules; the audit is the evidence it pays for itself.
     "doc_zorder_append_optimize" -> ((s, dir) => {
-      val path = zorderIncPath.getOrElseUpdate(dir,
-          timedBuild("zorderInc", dir) {
-        val p = s"$scratchBase/graft_zorder_inc_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        // global equi-depth bits + z/h keys (shared with the audits so
-        // appended rows land in the same bit space as base rows)
-        val z = zorderRankedFor(s, dir)
-          .select(col("doc_id"), col("b1"), col("b2"), col("zkey"),
-            col("hkey"))
-        val baseRows = z.where(pmod(col("doc_id"), lit(5L)) =!= 0L)
-        val appRows = z.where(pmod(col("doc_id"), lit(5L)) === 0L)
-        // the three phase tables are independent writers over the one
-        // pinned frame into disjoint dirs (unlike the incremental table,
-        // whose transactions share a dir and must serialize) — submit
-        // concurrently, guide §2.6
-        concurrently(Seq(
-          (baseRows, col("zkey"), 52, 0, "base"),
-          (appRows, col("hkey"), 12, 52, "append"),
-          (z, col("zkey"), 64, 0, "optimized"))) {
-          case (rows, key, nFiles, offset, tag) =>
-            writeStatsManifest(zorderWriteFiles(
-              Ranks.globalRowNumber(rows, Seq(key, col("doc_id")),
-                out = "_rk"),
-              "_rk", nFiles = nFiles, offset = offset, out = s"$p/$tag"),
-              s"$p/$tag/_stats")
-        }
-        p
-      })
+      val path = zorderIncFor(s, dir)
       sortSmall(
         zorderAudit(s, "base", Seq(s"$path/base"))
           .unionByName(zorderAudit(s, "appended",
@@ -3666,13 +3661,7 @@ object SparkEntry {
             .otherwise(0L))
         .select(col("lang"), col("res"), col("sub_alloc"))
         .localCheckpoint(true)
-      val p = s"$scratchBase/graft_stream_bfill_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(p))
+      val p = scratch("stream_bfill", dir)
       // kept rows land in a per-batch parquet SINK (overwrite into a
       // batch=<id> subdir — a retried batch rewrites only its own
       // directory, the exactly-once discipline of stream_sink_rollup),
@@ -3820,13 +3809,7 @@ object SparkEntry {
     // a guaranteed drop in every sf; organic near-dups ride along.
     "stream_index_evolve" -> ((s, dir) => {
       val nRes = 4
-      val p = s"$scratchBase/graft_stream_idxev_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(p))
+      val p = scratch("stream_idxev", dir)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       docs.unionByName(docs.where(pmod(col("doc_id"), lit(8L)) === 1L)
           .select((col("doc_id") + 2000001L).as("doc_id"), col("text")))
@@ -3943,13 +3926,7 @@ object SparkEntry {
     // eviction actually executes.
     "stream_sample_topk" -> ((s, dir) => {
       val k = 100
-      val p = s"$scratchBase/graft_stream_topk_" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(p))
+      val p = scratch("stream_topk", dir)
       var state = Vector.empty[(String, Long, String)]
       graft.streaming.StreamingDedup.replayForeachBatchSplit(
         s, s"$dir/documents.parquet", s"$p/src", s"$p/ckpt", 8,
@@ -4305,7 +4282,7 @@ object SparkEntry {
     // scan must trade recall — hence the honest 12/16 probed fraction
     // here (recall 0.975 at sf0.01); real clustered corpora route at
     // small fractions (ScaleSmoke ann1m: recall 1.0 at 3.1% scan).
-    // Index built once per (JVM, sf dir) like the stream-dedup band
+    // Index built once per (session, sf dir) like the stream-dedup band
     // index. The declared output is GUARANTEED-EXACT (r9 VERDICT task 1):
     // stage 1 times the ordinary approximate IVFADC+R probe (nProbe =
     // 12/16, rerankR = 100), whose kth cosine then drives the
@@ -4318,12 +4295,7 @@ object SparkEntry {
     "emb_ivfpq_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") >= 48 && col("vec_id") < 56)
-      val idx = pqIndexPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_ivfpq_idx_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-        Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", p,
-          nLists = 16, m = 16, pqK = 64, iters = 2)
-        p
-      })
+      val idx = ivfPqIndexFor(s, dir)
       sortSmall(Similarity.ivfPqProbeExact(s, idx, queries, "vec_id",
           "embedding", k = 5, nProbe = 12, rerankR = 100)
         .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine")),
@@ -4343,12 +4315,7 @@ object SparkEntry {
     "emb_ivfpq_rerank" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") >= 16 && col("vec_id") < 24)
-      val idx = pqIndexPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_ivfpq_idx_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-        Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", p,
-          nLists = 16, m = 16, pqK = 64, iters = 2)
-        p
-      })
+      val idx = ivfPqIndexFor(s, dir)
       sortSmall(Similarity.ivfPqProbeRerank(s, idx, queries, "vec_id",
           "embedding", k = 10, nProbe = 16, rerankR = 100000)
         .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine")),
@@ -4363,20 +4330,16 @@ object SparkEntry {
     // is brute-force top-k bit-for-bit (DuckDB brute-force oracle
     // hash-matches) for ANY centroid quality, and the probe's recall
     // trade becomes a scan-fraction trade instead. Centroids + radii
-    // trained/derived ONCE per (JVM, sf dir) — the realistic train-once /
-    // probe-many shape (same contract as pqIndexPath). Distinct query
-    // slice (vec_id 32..39, k = 6) so the gate is not a literal re-run
-    // of the other ANN anchors.
+    // trained/derived ONCE per (session, sf dir) — the realistic
+    // train-once / probe-many shape. Distinct query slice (vec_id
+    // 32..39, k = 6) so the gate is not a literal re-run of the other
+    // ANN anchors.
     "emb_ivf_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") >= 32 && col("vec_id") < 40)
-      val cents = ivfCentsCache.getOrElseUpdate(dir,
-        Similarity.learnCentroidArrays(emb, "vec_id", "embedding",
-          k = 16, iters = 3))
-      val radii = ivfRadiiCache.getOrElseUpdate(dir,
-        Similarity.listRadii(emb, "vec_id", "embedding", cents))
       sortSmall(Similarity.ivfTopKExact(emb, queries, "vec_id",
-          "embedding", k = 6, nProbe = 4, cents, Some(radii))
+          "embedding", k = 6, nProbe = 4, ivfCentsFor(s, dir),
+          Some(ivfRadiiFor(s, dir)))
         .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine")),
         "query_id", "rank")
     }),
@@ -4394,12 +4357,9 @@ object SparkEntry {
     "emb_ivf_exhaustive" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") >= 8 && col("vec_id") < 16)
-      val cents = ivfCentsCache.getOrElseUpdate(dir,
-        Similarity.learnCentroidArrays(emb, "vec_id", "embedding",
-          k = 16, iters = 3))
       sortSmall(Similarity.ivfTopKLearned(emb, queries, "vec_id",
           "embedding", k = 7, nLists = 16, nProbe = 16,
-          precomputedCents = Some(cents))
+          precomputedCents = Some(ivfCentsFor(s, dir)))
         .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine")),
         "query_id", "rank")
     }),
@@ -4914,7 +4874,7 @@ object SparkEntry {
     // counting-only training, so the oracle replays model AND argmax
     // bit-for-bit (DSIR log discipline). Beats the stopword heuristic
     // 51% vs 32% on this corpus and never answers "und". Train-once /
-    // consume-twice: the scored frame is cached per (JVM, sf dir) —
+    // consume-twice: the scored frame is cached per (session, sf dir) —
     // the confusion audit reads the same predictions a pipeline would.
     "text_langid_trained" -> ((s, dir) => {
       sortBig(langIdTrainedFor(s, dir), "doc")
@@ -4948,13 +4908,12 @@ object SparkEntry {
     // trained from this corpus' word dict (Sennrich ACL'16), applied as
     // a row-local codegen'd replace chain — the whitespace/regex
     // counters above approximate what this measures. Merges train ONCE
-    // per (JVM, sf dir); the oracle is GENERATED (Bpe.oracleSql) so
+    // per (session, sf dir); the oracle is GENERATED (Bpe.oracleSql) so
     // engine and oracle replay the identical rounds, argmax tie-breaks,
     // and 6-pass replace semantics.
     "text_bpe_tokens" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val merges = bpeMergesCache.getOrElseUpdate(dir,
-        graft.ext.Bpe.trainMerges(docs, "text", m = 8))
+      val merges = bpeMergesFor(s, dir)
       sortBig(graft.ext.Bpe.tokenCounts(docs, "doc_id", "text", merges),
         "doc")
     }),
@@ -4980,8 +4939,7 @@ object SparkEntry {
     // corpus. Both training replays compose into one generated oracle.
     "text_tokenizer_compare" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val merges = bpeMergesCache.getOrElseUpdate(dir,
-        graft.ext.Bpe.trainMerges(docs, "text", m = 8))
+      val merges = bpeMergesFor(s, dir)
       val bpe = graft.ext.Bpe.tokenCounts(docs, "doc_id", "text", merges)
         .select(col("doc"), col("n_words"), col("bpe_tokens"))
       val uni = graft.ext.Unigram.tokenCountsFromDict(docs, "doc_id", "text",
@@ -5007,8 +4965,7 @@ object SparkEntry {
     // same hashes as text_bpe_tokens, different physical plan
     "text_bpe_tokens_typed" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val merges = bpeMergesCache.getOrElseUpdate(dir,
-        graft.ext.Bpe.trainMerges(docs, "text", m = 8))
+      val merges = bpeMergesFor(s, dir)
       sortBig(graft.ext.Bpe.tokenCountsTyped(docs, "doc_id", "text", merges),
         "doc")
     }),
@@ -5348,7 +5305,7 @@ object SparkEntry {
         .process(Seq("E#1_RAW#1"), Resample,
           Parameters.of("frequency" -> "1h", "grid" -> "false"))
       val ds = graft.core.MeteauDataset.of("rt", Seq(sig))
-      val path = s"$scratchBase/graft_io_roundtrip"
+      val path = scratch("io_roundtrip", dir)
       graft.io.SignalIO.save(ds, path)
       val loaded = graft.io.SignalIO.load(s, path)
       loaded.signal("E#1").series("E#1_RESAMPLED#1")
@@ -5372,7 +5329,7 @@ object SparkEntry {
         Observations.fromTyped(ev, "user_id", "ts", "event_type")
           .select(col(TsCol), col(ValueCol)), "S", "state")
       val ds = graft.core.MeteauDataset.of("mx", Seq(num, st))
-      val path = s"$scratchBase/graft_io_roundtrip_mixed"
+      val path = scratch("io_roundtrip_mixed", dir)
       graft.io.SignalIO.save(ds, path)
       val loaded = graft.io.SignalIO.load(s, path)
       val numB = loaded.signal("N#1").series("N#1_RAW#1")
@@ -5459,32 +5416,7 @@ object SparkEntry {
     // in-memory result) against the batch oracle.
     "stream_sink_rollup" -> ((s, dir) => {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val path = streamSinkPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_stream_sink_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val cp = p + "_ckpt"
-        // deterministic rebuild per JVM: a stale checkpoint would mark
-        // the source processed and never fire the batch
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(new java.io.File(cp)); rm(new java.io.File(p))
-        graft.streaming.StreamingDedup.replayForeachBatch(
-          s, s"$dir/events.parquet", cp,
-          org.apache.spark.sql.streaming.OutputMode.Complete()) { st =>
-          Observations.normalizeEventTs(st)
-            .groupBy(col("event_type"),
-              window(col("ts"), "10800 seconds").as("_w"))
-            .agg(count(lit(1)).as("n_events"),
-              Resample.detMean(col("value")).as("mean_value"))
-            .select(col("event_type"), col("_w").getField("start").as("ws"),
-              col("n_events"), col("mean_value"))
-        } { (batch, _) =>
-          batch.write.mode("overwrite").partitionBy("event_type").parquet(p)
-        }
-        p
-      })
-      sortBig(s.read.parquet(path)
+      sortBig(s.read.parquet(streamSinkFor(s, dir))
         .select(col("event_type"), fmtTs(col("ws")).as("bucket_ts"),
           col("n_events"), r6(col("mean_value")).as("mean_value")),
         "event_type", "bucket_ts")
@@ -5600,20 +5532,7 @@ object SparkEntry {
     // The oracle computes the same new-vs-corpus exact-Jaccard pairs
     // directly, so the driver gate pins streaming ≡ batch semantics.
     "stream_minhash_dedup" -> ((s, dir) => {
-      // the index is built ONCE per (JVM, sf dir) — the whole point of a
-      // persisted index is that corpus indexing is paid once and probes
-      // are incremental, so bench reps 2+ time the probe, not the build
-      // (rep 1 absorbs the build like it absorbs codegen; min-over-reps
-      // reports the steady state). A fresh JVM (every Verify run) always
-      // rebuilds, so correctness never sees a stale index.
-      val idx = streamDedupIndex.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_stream_minhash_idx_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        graft.streaming.StreamingDedup.buildMinhashIndex(
-          t(s, dir, "documents").where(col("doc_id") % 5 =!= 0),
-          "doc_id", "text", p)
-        p
-      })
+      val idx = minhashIndexFor(s, dir)
       // minJ = 0.9 keeps the hash-equal gate off the banding-recall
       // cliff: 16 bands × 4 rows misses a true pair with probability
       // (1 − J⁴)¹⁶ — ≈ 36% at J = 0.5 (a data-dependent flake if the
@@ -5636,14 +5555,7 @@ object SparkEntry {
     // recomputes the identical 60-bit values from the raw text and the
     // hash-equal gate pins streaming ≡ batch ≡ oracle.
     "stream_simhash_dedup" -> ((s, dir) => {
-      val idx = streamDedupIndex.getOrElseUpdate("simhash:" + dir, {
-        val p = s"$scratchBase/graft_stream_simhash_idx_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        graft.streaming.StreamingDedup.buildSimhashIndex(
-          t(s, dir, "documents").where(col("doc_id") % 5 =!= 0),
-          "doc_id", "text", p, portable = true)
-        p
-      })
+      val idx = simhashIndexFor(s, dir)
       val res = graft.streaming.StreamingDedup.replayDocs(
         s, s"$dir/documents.parquet", "stream_simhash_dedup_result") { st =>
         graft.streaming.StreamingDedup.simhashDupStream(
@@ -5670,14 +5582,7 @@ object SparkEntry {
     // kept set — the fourth hash-matched streaming family becomes a
     // composite, not just a probe.
     "stream_curate" -> ((s, dir) => {
-      val idx = streamDedupIndex.getOrElseUpdate("simhash:" + dir, {
-        val p = s"$scratchBase/graft_stream_simhash_idx_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        graft.streaming.StreamingDedup.buildSimhashIndex(
-          t(s, dir, "documents").where(col("doc_id") % 5 =!= 0),
-          "doc_id", "text", p, portable = true)
-        p
-      })
+      val idx = simhashIndexFor(s, dir)
       def passes(df: DataFrame): DataFrame =
         TextAnalysis.withCurationSignals(df, "text")
           .where(col("n_tokens") >= 15 && col("stopword_ratio") >= 0.01 &&
@@ -5713,14 +5618,7 @@ object SparkEntry {
     // corpus split), pinning the hashed engine path exactly — fifth
     // oracle-pinned streaming family.
     "stream_chunk_dedup" -> ((s, dir) => {
-      val idx = streamDedupIndex.getOrElseUpdate("chunk:" + dir, {
-        val p = s"$scratchBase/graft_stream_chunk_idx_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        graft.streaming.StreamingDedup.buildChunkIndex(
-          t(s, dir, "documents").where(col("doc_id") % 5 =!= 0),
-          "doc_id", "text", p, chunkTokens = 16)
-        p
-      })
+      val idx = chunkIndexFor(s, dir)
       val hits = graft.streaming.StreamingDedup.replayDocs(
         s, s"$dir/documents.parquet", "stream_chunk_hits") { st =>
         graft.streaming.StreamingDedup.chunkHitStream(
@@ -5800,24 +5698,8 @@ object SparkEntry {
     // family. md5-portable bits mean the DuckDB oracle rebuilds the
     // identical filter, pinning streaming ≡ batch ≡ oracle exactly.
     "stream_bloom_filter" -> ((s, dir) => {
-      val idx = bloomIndexPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_bloom_idx_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-        graft.streaming.StreamingDedup.buildBloomIndex(
-          t(s, dir, "documents").where(col("doc_id") % 5 =!= 0),
-          "text", p, m = 65536, k = 5)
-        p
-      })
-      val rp = bloomReplayPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_bloom_replay_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val docs = t(s, dir, "documents")
-        docs.where(col("doc_id") % 5 === 0).select(col("doc_id"), col("text"))
-          .unionByName(docs.where(col("doc_id") % 5 =!= 0 &&
-              col("doc_id") % 50 === 1)
-            .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        new java.io.File(p).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
-      })
+      val idx = bloomIndexFor(s, dir)
+      val rp = bloomReplayFor(s, dir)
       val res = graft.streaming.StreamingDedup.replayDocs(
         s, rp, "stream_bloom_result") { st =>
         graft.streaming.StreamingDedup.bloomFilterStream(
@@ -5835,28 +5717,8 @@ object SparkEntry {
     // join; per-doc accounting aggregated batch-side after the bounded
     // replay; oracle replays index + probe with the same md5 windows.
     "stream_substring_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val idx = streamDedupIndex.getOrElseUpdate("window:" + dir, {
-        val p = s"$scratchBase/graft_stream_window_idx_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        graft.streaming.StreamingDedup.buildWindowIndex(
-          docs.where(col("doc_id") % 5 =!= 0), "doc_id", "text", p, k = 8)
-        p
-      })
-      val rp = substringReplayPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_substr_replay_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        docs.where(col("doc_id") % 5 === 0)
-          .select(col("doc_id"), col("text"))
-          .unionByName(docs.where(col("doc_id") % 5 =!= 0 &&
-              col("doc_id") % 7 === 3)
-            .select((col("doc_id") + 100000L).as("doc_id"),
-              concat(lit("planted leak prefix alpha beta "), col("text"))
-                .as("text")))
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        new java.io.File(p).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
-      })
+      val idx = windowIndexFor(s, dir)
+      val rp = substringReplayFor(s, dir)
       val hits = graft.streaming.StreamingDedup.replayDocs(
         s, rp, "stream_substr_hits") { st =>
         graft.streaming.StreamingDedup.windowHitStream(
@@ -5884,13 +5746,7 @@ object SparkEntry {
     // 3.1% scan). Third oracle-pinned streaming family after
     // resample/dedup.
     "stream_ivf_topk" -> ((s, dir) => {
-      val idx = ivfIndexPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_stream_ivf_idx_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        Similarity.buildIvfIndex(t(s, dir, "embeddings"), "vec_id",
-          "embedding", p, nLists = 16, iters = 2)
-        p
-      })
+      val idx = streamIvfIndexFor(s, dir)
       val res = graft.streaming.StreamingDedup.replayDocs(
         s, s"$dir/embeddings.parquet", "stream_ivf_topk_result",
         org.apache.spark.sql.streaming.OutputMode.Complete()) { st =>
@@ -5917,24 +5773,12 @@ object SparkEntry {
     // ivf_topk / semdedup).
     "stream_semdedup" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val m = kmModelCache.getOrElseUpdate(dir,
-        Kmeans.train(emb, "vec_id", "embedding", k = 8, iters = 3))
+      val m = semModelFor(s, dir)
       val members = Kmeans.assignServing(emb, "vec_id", "embedding", m)
         .join(emb.select(col("vec_id"),
           col("embedding").cast("array<double>").as("mv")), "vec_id")
         .select(col("cluster"), col("vec_id").as("member_id"), col("mv"))
-      val rp = semReplayPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_stream_sem_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        emb.where(col("vec_id") % 10 === 0)
-          .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
-          .unionByName(emb.where(col("vec_id") % 10 === 5)
-            .select((col("vec_id") + 200000L).as("vec_id"),
-              transform(col("embedding"), x => -x).as("embedding")))
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        new java.io.File(p).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
-      })
+      val rp = semReplayFor(s, dir)
       val res = graft.streaming.StreamingDedup.replayDocs(
         s, rp, "stream_semdedup_result",
         org.apache.spark.sql.streaming.OutputMode.Complete()) { st =>
@@ -5953,22 +5797,7 @@ object SparkEntry {
     // runs on SECOND-truncated timestamps and ties order by
     // (epoch-millis, value) — mirrored exactly in the oracle.
     "stream_sessions" -> ((s, dir) => {
-      val path = sessionReplayPath.getOrElseUpdate(dir, {
-        val p = s"$scratchBase/graft_stream_sessions_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val obs = Observations.from(
-          events(s, dir).where(col("user_id") < 40), "user_id", "ts", "value")
-        val sentinels = obs.groupBy(col(KeyCol))
-          .agg(max(col(TsCol)).as("mx"))
-          .select(col(KeyCol),
-            (col("mx") + expr("interval 9000 seconds")).as(TsCol),
-            lit(0.0).as(ValueCol))
-        obs.select(col(KeyCol), col(TsCol), col(ValueCol))
-          .unionByName(sentinels)
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        new java.io.File(p).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
-      })
+      val path = sessionReplayFor(s, dir)
       implicit val sp: SparkSession = s
       val res = graft.streaming.StreamingDedup.replayDocs(
         s, path, "stream_sessions_result") { st =>

@@ -50,6 +50,54 @@ class IOSpec extends SparkSpec {
       "failure rethrown while a sibling writer was still running")
   }
 
+  test("Artifact: a build that fails mid-write caches nothing; the retry starts from an empty scratch root") {
+    val dir = "/spec/artifact_retry"
+    var attempts = 0
+    val art = SparkEntry.Artifact("specRetry") { (s, d) =>
+      attempts += 1
+      val root = SparkEntry.scratch("spec_retry", d)
+      val seen = Option(new java.io.File(root).list()).toSeq.flatten
+      s.range(attempts * 10L).write.parquet(s"$root/attempt$attempts")
+      if (attempts == 1) throw new IllegalStateException("killed mid-build")
+      (seen, root)
+    }
+    intercept[IllegalStateException](art(spark, dir))
+    assert(!SparkEntry.buildWalls.contains(s"specRetry:$dir"),
+      "a failed build must not record a wall")
+    val (seen, root) = art(spark, dir)
+    assert(attempts == 2, "the failed build must not be cached")
+    assert(seen.isEmpty, s"the retry saw the failed attempt's files: $seen")
+    assert(new java.io.File(root).list().toSeq == Seq("attempt2"))
+    assert(spark.read.parquet(s"$root/attempt2").count() == 20L)
+  }
+
+  test("Artifact: the building session gets the cached value, another session a fresh build") {
+    var builds = 0
+    val art = SparkEntry.Artifact("specSession") { (s, _) =>
+      builds += 1
+      s.range(3)
+    }
+    val first = art(spark, "d")
+    assert(art(spark, "d") eq first)
+    assert(builds == 1)
+    val other = spark.newSession()
+    val rebuilt = art(other, "d")
+    assert(builds == 2)
+    assert(rebuilt.sparkSession eq other)
+    assert(art(other, "d") eq rebuilt)
+    assert(builds == 2)
+  }
+
+  test("Artifact: each build records exactly one name:dir wall") {
+    val art = SparkEntry.Artifact("specWall") { (_, d) => d.length }
+    def walls = SparkEntry.buildWalls.keySet.filter(_.startsWith("specWall:"))
+    art(spark, "x1")
+    assert(walls == Set("specWall:x1"))
+    art(spark, "x1")
+    art(spark, "x2")
+    assert(walls == Set("specWall:x1", "specWall:x2"))
+  }
+
   test("catalog JSON round trip is lossless (all levels)") {
     val meta = fixture().meta
     val back = SignalIO.fromJson(SignalIO.toJson(meta))
