@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graftbridge.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Sort => LSort}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -9,6 +13,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *  - `runMain graft.QueryProbe <sfDir> <name> [reps]` times one declared
   *    query repeatedly (noop sink) and once with any final global Sort
   *    stripped, to expose range-partitioning sample-pass re-execution.
+  *    Each rep prints its wall time and the number of Spark jobs it
+  *    started (building the frame included, so rep 1 also counts the
+  *    fixture builds it triggers).
   *  - `runMain graft.QueryProbe <sfDir> --explain <name>` prints the
   *    formatted physical plan of one declared query (the iterate-on-
   *    `.explain` loop the scale mandate prescribes, without writing a
@@ -51,7 +58,7 @@ object QueryProbe {
     val spark = session()
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
-      time(s"$name#$i") {
+      timeJobs(spark, s"$name#$i") {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
       // match Bench methodology: without this, queries whose final sort
@@ -65,7 +72,7 @@ object QueryProbe {
       case LSort(_, true, child, _) => child
     }
     (1 to reps).foreach { i =>
-      time(s"$name-nosort#$i") {
+      timeJobs(spark, s"$name-nosort#$i") {
         ColumnBridge.ofRows(spark, stripped)
           .write.format("noop").mode("overwrite").save()
       }
@@ -84,12 +91,36 @@ object QueryProbe {
     spark
   }
 
-  private def time(tag: String)(thunk: => Unit): Double = {
+  private def wall(thunk: => Unit): Double = {
     val t0 = System.nanoTime()
     thunk
-    val t = (System.nanoTime() - t0) / 1e9
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  private def time(tag: String)(thunk: => Unit): Double = {
+    val t = wall(thunk)
     println(f"[probe] $tag%-28s $t%8.2f s")
     t
+  }
+
+  /** [[time]] plus the number of Spark jobs `thunk` started. The listener
+    * bus is drained before the listener attaches and before the count is
+    * read, so no earlier job leaks in and no late event is lost. */
+  private def timeJobs(spark: SparkSession, tag: String)(thunk: => Unit)
+      : Unit = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val t = wall(thunk)
+      ListenerBus.drain(sc)
+      println(f"[probe] $tag%-28s $t%8.2f s ${jobs.get}%6d jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Bench-contract guard (see object doc). Returns the exit code. */

@@ -4427,8 +4427,9 @@ object SparkEntry {
     // above), mine cosine-near-dup pairs ONLY within clusters (the
     // paper's point: clustering bounds pair work to Σ|cluster|², never
     // the corpus square — k scales ∝ N / target-cluster-size), resolve
-    // connected components (pointer-doubling), keep the member CLOSEST
-    // TO ITS CLUSTER CENTROID per component (the paper's keep rule,
+    // connected components inside each cluster in one grouped
+    // union-find pass (a pair never crosses clusters), keep the member
+    // CLOSEST TO ITS CLUSTER CENTROID per component (the paper's keep rule,
     // ties to the smaller id). Planted exact copies (vec_id % 10 == 0,
     // shifted +100000 — the emb_dedup_clusters fixture) make the dup
     // structure non-trivial; the oracle replays training, pairing, and

@@ -839,7 +839,16 @@ object Dedup {
     * within a duplicated document family), so rounds stay single-digit;
     * the label frame holds only docs that appear in a pair, not the
     * corpus. The fixpoint test is a distributed count of changed labels —
-    * nothing data-sized reaches the driver. */
+    * nothing data-sized reaches the driver.
+    *
+    * Consumers are the global pair graphs, where no key bounds a
+    * component: the exact-Jaccard PPJoin pairs through
+    * [[dedupClustersDistinctWith]] (SparkEntry's `clusters` fixture and
+    * [[CurationPipeline.run]]), the banded hyperplane-LSH cosine pairs
+    * of `emb_dedup_clusters`, and ScaleSmoke's MinHash and chain tiers.
+    * SemDeDup does not call it: its pairs never cross a k-means cluster,
+    * so [[Kmeans.keepWithinClusters]] resolves them per cluster in one
+    * pass. */
   def dedupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     // eagerly checkpoint the pair frame FIRST: the two union branches
     // below execute CONCURRENTLY inside one job, and a cache() does not

@@ -1,6 +1,8 @@
 package graft
 
-import graft.ext.{Kmeans, Similarity}
+import graft.ext.{Dedup, Kmeans, Similarity}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** In-engine exact Lloyd k-means + SemDeDup semantic dedup. */
@@ -265,5 +267,181 @@ class KmeansSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(rowLocal == relational,
       "row-local nearestCentroid diverged from the relational pipeline")
+  }
+
+  // --- SemDeDup's cluster-local tail against the global reference ---
+
+  private type Kept = (Long, Long, Long, Long, Boolean)
+
+  private def kept(df: DataFrame): Set[Kept] =
+    df.select("vec_id", "cluster", "root", "keeper", "keep").collect()
+      .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2),
+        r.getLong(3), r.getBoolean(4))).toSet
+
+  /** The tail as it was composed before the grouped pass: global
+    * pointer-doubling components over the pairs, then the smallest
+    * `(dist2, id)` per component by a window. */
+  private def referenceTail(members: DataFrame, pairs: DataFrame): Set[Kept] = {
+    val comp = Dedup.dedupClusters(pairs, "id_a", "id_b")
+    val withRoot = members
+      .join(comp.select(col("doc").as("vec_id"), col("root")), Seq("vec_id"),
+        "left")
+      .select(col("vec_id"), col("cluster"),
+        coalesce(col("root"), col("vec_id")).as("root"), col("dist2"))
+    val keepers = withRoot
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col("root")).orderBy(col("dist2"), col("vec_id"))))
+      .where(col("_rn") === 1)
+      .select(col("root"), col("vec_id").as("keeper"))
+    kept(withRoot.join(keepers, Seq("root"))
+      .withColumn("keep", col("vec_id") === col("keeper")))
+  }
+
+  /** Reference SemDeDup: the same model and assignment, every
+    * intra-cluster pair with the same portable-rounded cosine, then
+    * [[referenceTail]]. */
+  private def referenceSemDedup(corpus: DataFrame, k: Int, iters: Int,
+      minCosine: Double, fast: Boolean): Set[Kept] = {
+    val members =
+      if (fast) Kmeans.assignServing(corpus, "vec_id", "embedding",
+        Kmeans.trainFast(corpus, "vec_id", "embedding", k, iters))
+      else Kmeans.assignFinal(corpus, "vec_id", "embedding",
+        Kmeans.train(corpus, "vec_id", "embedding", k, iters))
+    val v = members.join(corpus.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("v")), "vec_id")
+    val pairs = v.select(col("vec_id").as("id_a"), col("cluster"),
+        col("v").as("va"))
+      .join(v.select(col("vec_id").as("id_b"), col("cluster"),
+        col("v").as("vb")), "cluster")
+      .where(col("id_a") < col("id_b"))
+      .where(floor(Similarity.dot(col("va"), col("vb"))
+          / (Similarity.norm(col("va")) * Similarity.norm(col("vb")))
+          * 1000000.0 + 0.5) / 1000000.0 >= minCosine)
+      .select(col("id_a"), col("id_b"))
+    referenceTail(members, pairs)
+  }
+
+  /** 2-D unit vectors at the given angles (degrees), ids from `ids`. */
+  private def arc(ids: Seq[Long], degrees: Seq[Double]) =
+    ids.zip(degrees).map { case (id, d) =>
+      (id, Seq(math.cos(math.toRadians(d)), math.sin(math.toRadians(d))))
+    }.toDF("vec_id", "embedding")
+
+  // 12 vectors 5° apart: cos 5° ≈ 0.9962 clears 0.99, cos 10° ≈ 0.9848
+  // does not, so only neighbours pair and the component is a 12-chain;
+  // ids run against the arc so the root (min id) sits mid-chain
+  private val chainIds = Seq(7L, 19L, 3L, 11L, 15L, 2L, 23L, 5L, 17L, 9L,
+    13L, 21L)
+  private def chain12 = arc(chainIds, (0 until 12).map(_ * 5.0))
+  // the same 12 ids with only the first two 5° apart, the rest 25° apart
+  private def chain2 = arc(chainIds, 0.0 +: (0 until 11).map(5.0 + _ * 25.0))
+
+  // two clouds in R^4, seeds (ids 0, 1) one per cloud. Cloud e0: a star
+  // (centre 0, spokes at ±0.1225 along e1 and e3: centre–spoke cosine
+  // 0.9926, spoke–spoke ≤ 0.9852), two exact copies (5, 9: equal dist2,
+  // keeper 5) and a singleton. Cloud e2: a 3-chain 1–7–11 (0.9950,
+  // 0.9952; ends 0.9806) and three singletons.
+  private def twoClouds = {
+    val e = 0.1225
+    Seq(
+      0L -> Seq(1.0, 0.0, 0.0, 0.0), 2L -> Seq(1.0, e, 0.0, 0.0),
+      4L -> Seq(1.0, -e, 0.0, 0.0), 6L -> Seq(1.0, 0.0, 0.0, e),
+      8L -> Seq(1.0, 0.0, 0.0, -e), 9L -> Seq(1.0, 0.5, 0.0, 0.0),
+      5L -> Seq(1.0, 0.5, 0.0, 0.0), 12L -> Seq(1.0, 0.0, 0.0, 0.5),
+      1L -> Seq(0.0, 0.0, 1.0, 0.0), 7L -> Seq(0.0, 0.1, 1.0, 0.0),
+      11L -> Seq(0.0, 0.2, 1.0, 0.0), 3L -> Seq(0.0, 0.0, 1.0, 0.5),
+      10L -> Seq(0.0, -0.5, 1.0, 0.0), 13L -> Seq(0.0, 0.0, 1.0, -0.5)
+    ).toDF("vec_id", "embedding")
+  }
+
+  test("grouped SemDeDup tail ≡ global components + (dist2, id) window " +
+      "on hand-built members and pairs") {
+    // cluster 0: a 12-chain with ids against the chain order, plus a
+    // singleton; cluster 1: a star, a component whose two closest
+    // members tie on dist2 (keeper falls to the smaller id, listed
+    // second) and two singletons; cluster 2: no pairs at all
+    val chainOrder = Seq(105L, 111L, 100L, 103L, 108L, 101L, 110L, 102L,
+      107L, 104L, 109L, 106L)
+    val members = (chainOrder.zipWithIndex.map { case (id, i) =>
+        (id, 0L, 0.5 + 0.01 * ((i * 7) % 12)) } ++
+      Seq((120L, 0L, 0.0),
+        (200L, 1L, 0.5), (201L, 1L, 0.1), (202L, 1L, 0.2), (203L, 1L, 0.1),
+        (204L, 1L, 0.3), (215L, 1L, 0.25), (212L, 1L, 0.3),
+        (210L, 1L, 0.25), (220L, 1L, 0.25), (221L, 1L, 0.0),
+        (300L, 2L, 0.7), (301L, 2L, 0.7)))
+      .toDF("vec_id", "cluster", "dist2")
+    val pairs = (chainOrder.sliding(2).map { case Seq(a, b) =>
+        (0L, math.min(a, b), math.max(a, b)) }.toSeq ++
+      (201L to 204L).map(s => (1L, 200L, s)) ++
+      Seq((1L, 212L, 215L), (1L, 210L, 212L)))
+      .toDF("cluster", "id_a", "id_b")
+    val got = kept(Kmeans.keepWithinClusters(members, "vec_id", pairs))
+    assert(got == referenceTail(members, pairs.select("id_a", "id_b")))
+    val byId = got.map(t => t._1 -> t).toMap
+    assert(chainOrder.forall(id => byId(id)._3 == 100L),
+      "the 12-chain must resolve to one component rooted at its min id")
+    assert(byId(105L)._4 == 105L && byId(111L)._4 == 105L)
+    assert((200L to 204L).forall(id => byId(id)._4 == 201L),
+      "star keeper: the smallest (dist2, id) of centre and spokes")
+    assert(Seq(210L, 212L, 215L).forall(id => byId(id)._4 == 210L),
+      "a dist2 tie keeps the smaller id")
+    for (id <- Seq(120L, 220L, 221L, 300L, 301L))
+      assert(byId(id) == ((id, byId(id)._2, id, id, true)))
+  }
+
+  test("semDedup and semDedupBanded ≡ the global reference on a 12-chain, " +
+      "a star, dist2 ties, singletons and two clusters") {
+    for ((name, corpus, k) <- Seq(("chain12", chain12, 1),
+                                 ("twoClouds", twoClouds, 2))) {
+      val exact = referenceSemDedup(corpus, k, 3, 0.99, fast = false)
+      assert(kept(Kmeans.semDedup(corpus, "vec_id", "embedding", k, 3,
+        0.99)) == exact, s"$name: semDedup(fast = false)")
+      val fast = referenceSemDedup(corpus, k, 3, 0.99, fast = true)
+      assert(kept(Kmeans.semDedup(corpus, "vec_id", "embedding", k, 3,
+        0.99, fast = true)) == fast, s"$name: semDedup(fast = true)")
+      // 4-bit signatures in 8 bands: a pair under 8° apart misses every
+      // band with probability < 1e-5, so the banded candidates hold every
+      // verified pair of these fixtures
+      assert(kept(Kmeans.semDedupBanded(corpus, "vec_id", "embedding", k, 3,
+        0.99, bits = 4, bands = 8)) == fast, s"$name: semDedupBanded")
+      // the fixtures really carry the shapes named above
+      val byId = exact.map(t => t._1 -> t).toMap
+      if (name == "chain12")
+        assert(chainIds.forall(id => byId(id)._3 == 2L))
+      else {
+        assert(exact.map(_._2).size == 2, "two clusters expected")
+        assert(Seq(0L, 2L, 4L, 6L, 8L).forall(id => byId(id)._3 == 0L))
+        assert(byId(9L)._4 == 5L && byId(5L)._5)
+        assert(Seq(1L, 7L, 11L).forall(id => byId(id)._3 == 1L))
+        assert(byId(1L)._2 != byId(0L)._2)
+        for (id <- Seq(12L, 3L, 10L, 13L)) assert(byId(id)._4 == id)
+      }
+    }
+  }
+
+  test("semDedup runs as many Spark jobs on a 12-chain as on a 2-chain") {
+    import org.apache.spark.graftbridge.ListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    def jobs(corpus: DataFrame): (Int, Set[Kept]) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          n.incrementAndGet(): Unit
+      }
+      ListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val out = kept(Kmeans.semDedup(corpus, "vec_id", "embedding", k = 1,
+          iters = 2, minCosine = 0.99))
+        ListenerBus.drain(spark.sparkContext)
+        (n.get, out)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (j2, out2) = jobs(chain2)
+    val (j12, out12) = jobs(chain12)
+    assert(out2.count(t => !t._5) == 1 && out12.count(t => !t._5) == 11,
+      "the fixtures must hold one 2-chain and one 12-chain")
+    assert(j12 == j2, s"12-chain ran $j12 jobs, 2-chain $j2: " +
+      "component resolution must not grow with the chain")
   }
 }
