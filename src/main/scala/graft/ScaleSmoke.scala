@@ -1,158 +1,191 @@
 package graft
 
-import graft.core.Observations._
-import graft.model.Parameters
-import graft.ops.{Interpolate, Resample}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
-/** Scale smoke: synthesize a large tall observations frame with
-  * `spark.range` (no driver-side data) and time the core operators at two
-  * sizes to confirm near-linear scaling — the local stand-in for the
-  * 100 TB question "does the plan shape survive a scale-up". Not part of
-  * the driver bench; run manually:
-  *   sbt "runMain graft.ScaleSmoke [rowsMillions] [series]"
+/** Scale smoke: each tier synthesizes planted data with `spark.range` (no
+  * local collections), runs one operator family at two sizes (mostly 250k
+  * and 1M rows) and asserts exact planted answers, recall and scan-fraction
+  * floors and near-linear wall growth — the local stand-in for the 100 TB
+  * question "does the plan shape survive a scale-up". Not part of
+  * `graft.Bench`; run one tier per JVM:
+  *   sbt "runMain graft.ScaleSmoke <tier> [args]"
+  *   scripts/scale_smoke.sh [tier ...]
+  * Exit codes: 0 when every check of the tier holds; 1 when a check fails
+  * (its message, if any, is printed) or the tier throws; 2 when no tier or
+  * an unknown tier is named (the tier names are printed).
   */
 object ScaleSmoke {
+  /** What `main` hands a tier: the one session, the arguments after the
+    * tier name, and the checks whose failures make the exit code 1. */
+  private[graft] final class Ctx(val spark: SparkSession,
+      val args: Seq[String]) {
+    private var failures = 0
+    def failed: Boolean = failures > 0
+    /** Records a failure unless `ok`, printing `msg` when one is given. */
+    def check(ok: Boolean, msg: => String = ""): Unit =
+      if (!ok) {
+        if (msg.nonEmpty) println(msg)
+        failures += 1
+      }
+    /** The wall at the large size must stay within `factor` × the wall at
+      * the small size + `slack` seconds. */
+    def growth(tag: String, small: Double, large: Double, factor: Double,
+        slack: Double): Unit =
+      check(large <= factor * small + slack,
+        f"$tag super-linear wall: $small%.1f -> $large%.1f s")
+  }
+
+  /** A tier's body and its session settings: `cores` is the default of
+    * SPARK_GRAFT_CPUS (master threads and shuffle partitions); `conf` is
+    * set on the session. */
+  private[graft] final case class Tier(run: Ctx => Unit, cores: String = "8",
+      conf: Map[String, String] = Map.empty)
+
+  private[graft] val tiers: ListMap[String, Tier] = ListMap(
+    "dedup1m" -> Tier(dedup1m),
+    "streamdedup1m" -> Tier(streamdedup1m),
+    "ann1m" -> Tier(ann1m),
+    "clusters1m" -> Tier(clusters1m),
+    "chains1m" -> Tier(chains1m),
+    "pq1m" -> Tier(pq1m),
+    "toppairs1m" -> Tier(toppairs1m),
+    "hotbucket1m" -> Tier(hotbucket1m),
+    // the doc_id-only keep-lists sit near the 10 MB broadcast
+    // threshold at these tiers (2 MB at 250k, 8 MB at 1M), so leaving
+    // auto-broadcast on makes the plan SHAPE a function of corpus size
+    // — the 1M tier flipped one semi-join broadcast→shuffle and failed
+    // the exchange-invariance check. At the target scale every
+    // keep-list is corpus-sized and must shuffle, so the tier pins the
+    // shuffle path and the exchange count becomes size-invariant.
+    "curate1m" -> Tier(curate1m,
+      conf = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")),
+    "pack1m" -> Tier(pack1m),
+    "chunk1m" -> Tier(chunk1m),
+    "bloom1m" -> Tier(bloom1m),
+    "centroid1m" -> Tier(centroid1m),
+    "engage10m" -> Tier(engage10m),
+    "hamming1m" -> Tier(hamming1m),
+    "contain1m" -> Tier(contain1m),
+    "phash200k" -> Tier(phash200k),
+    "linefreq1m" -> Tier(linefreq1m),
+    "heavy10x" -> Tier(heavy10x),
+    "exactann1m" -> Tier(exactann1m),
+    "substr1m" -> Tier(substr1m),
+    "bpe1k" -> Tier(bpe1k),
+    "unigram250k" -> Tier(unigram250k),
+    "unigram32k" -> Tier(unigram32k),
+    "zorderinc1m" -> Tier(zorderinc1m),
+    "winappend1m" -> Tier(winappend1m),
+    "pipeidx1m" -> Tier(pipeidx1m),
+    // These fixtures are megabytes, so at the DEFAULT 128 MB split /
+    // 4 MB open-cost both scales pack every scan into ONE task and a
+    // ratio measures serial work growth under frozen parallelism —
+    // the first run of this tier showed row-local scans at ~12×
+    // (text_token_counts) purely from that packing. A real cluster
+    // splits 10× the bytes into 10× the tasks; 2 MB splits restore
+    // that proportionality here so ratios measure ASYMPTOTICS.
+    "all10x" -> Tier(all10x, cores = "16", conf = Map(
+      "spark.sql.files.maxPartitionBytes" -> (2L << 20).toString,
+      "spark.sql.files.openCostInBytes" -> (256L << 10).toString)),
+    "qmodel1m" -> Tier(qmodel1m),
+    "kmeans1m" -> Tier(kmeans1m),
+    "kmhof" -> Tier(kmhof),
+    "pagerank1m" -> Tier(pagerank1m),
+    "kn1m" -> Tier(kn1m),
+    "kn10m" -> Tier(kn10m),
+    "semdedup10m" -> Tier(semdedup10m),
+    "shuffle1m" -> Tier(shuffle1m),
+    "pipeline1m" -> Tier(pipeline1m),
+    "bpe32k" -> Tier(bpe32k),
+    "kmbig" -> Tier(kmbig),
+    "ivfdrift" -> Tier(ivfdrift),
+    "langid1m" -> Tier(langid1m),
+    "ranks1m" -> Tier(ranks1m),
+    "sample1m" -> Tier(sample1m),
+    "waterfill1m" -> Tier(waterfill1m))
+
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("dedup1m")) { dedup1m(); return }
-    if (args.headOption.contains("streamdedup1m")) { streamdedup1m(); return }
-    if (args.headOption.contains("ann1m")) { ann1m(); return }
-    if (args.headOption.contains("clusters1m")) { clusters1m(); return }
-    if (args.headOption.contains("chains1m")) { chains1m(); return }
-    if (args.headOption.contains("pq1m")) { pq1m(); return }
-    if (args.headOption.contains("toppairs1m")) { toppairs1m(); return }
-    if (args.headOption.contains("hotbucket1m")) { hotbucket1m(); return }
-    if (args.headOption.contains("streamfloor")) { streamfloor(); return }
-    if (args.headOption.contains("curate1m")) { curate1m(); return }
-    if (args.headOption.contains("pack1m")) { pack1m(); return }
-    if (args.headOption.contains("chunk1m")) { chunk1m(); return }
-    if (args.headOption.contains("bloom1m")) { bloom1m(); return }
-    if (args.headOption.contains("centroid1m")) { centroid1m(); return }
-    if (args.headOption.contains("engage10m")) { engage10m(); return }
-    if (args.headOption.contains("hamming1m")) { hamming1m(); return }
-    if (args.headOption.contains("contain1m")) { contain1m(); return }
-    if (args.headOption.contains("phash200k")) { phash200k(); return }
-    if (args.headOption.contains("linefreq1m")) { linefreq1m(); return }
-    if (args.headOption.contains("heavy10x")) { heavy10x(); return }
-    if (args.headOption.contains("exactann1m")) { exactann1m(); return }
-    if (args.headOption.contains("substr1m")) { substr1m(); return }
-    if (args.headOption.contains("bpe1k")) { bpe1k(); return }
-    if (args.headOption.contains("unigram250k")) { unigram250k(); return }
-    if (args.headOption.contains("unigram32k")) { unigram32k(); return }
-    if (args.headOption.contains("zorderinc1m")) { zorderinc1m(); return }
-    if (args.headOption.contains("winappend1m")) { winappend1m(); return }
-    if (args.headOption.contains("pipeidx1m")) { pipeidx1m(); return }
-    if (args.headOption.contains("all10x")) { all10x(args.drop(1)); return }
-    if (args.headOption.contains("qmodel1m")) { qmodel1m(); return }
-    if (args.headOption.contains("kmeans1m")) { kmeans1m(); return }
-    if (args.headOption.contains("kmhof")) { kmhof(); return }
-    if (args.headOption.contains("pagerank1m")) { pagerank1m(); return }
-    if (args.headOption.contains("kn1m")) { kn1m(); return }
-    if (args.headOption.contains("kn10m")) { kn10m(); return }
-    if (args.headOption.contains("semdedup10m")) { semdedup10m(); return }
-    if (args.headOption.contains("shuffle1m")) { shuffle1m(); return }
-    if (args.headOption.contains("pipeline1m")) { pipeline1m(); return }
-    if (args.headOption.contains("bpe32k")) { bpe32k(args.drop(1)); return }
-    if (args.headOption.contains("kmbig")) { kmbig(); return }
-    if (args.headOption.contains("ivfdrift")) { ivfdrift(); return }
-    if (args.headOption.contains("langid1m")) { langid1m(); return }
-    if (args.headOption.contains("ranks1m")) { ranks1m(); return }
-    if (args.headOption.contains("sample1m")) { sample1m(); return }
-    if (args.headOption.contains("waterfill1m")) { waterfill1m(); return }
-    val millions = args.headOption.map(_.toInt).getOrElse(20)
-    val nSeries = args.lift(1).map(_.toInt).getOrElse(10000)
+    val tier = args.headOption.flatMap(tiers.get).getOrElse {
+      println("usage: runMain graft.ScaleSmoke <tier> [args]; tiers:")
+      tiers.keys.foreach(name => println(s"  $name"))
+      sys.exit(2)
+    }
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", tier.cores)
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(tier.conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val c = new Ctx(spark, args.toSeq.drop(1))
+    try tier.run(c) finally spark.stop()
+    if (c.failed) sys.exit(1)
+  }
 
-    def synth(n: Long) = spark.range(n)
-      .select(
-        (col("id") % nSeries).cast("string").as(KeyCol),
-        timestamp_seconds(lit(1704067200L) + (col("id") / nSeries) * 60L +
-          pmod(xxhash64(col("id")), lit(53L))).as(TsCol),
-        // ~10% nulls to give interpolation real gaps
-        when(pmod(xxhash64(col("id"), lit(7)), lit(10L)) === 0L, lit(null))
-          .otherwise((pmod(xxhash64(col("id"), lit(13)), lit(20000L)) / 100.0))
-          .cast("double").as(ValueCol))
-
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      println(f"SCALE $name: ${(System.nanoTime() - t0) / 1e9}%.1f s ($rows rows)")
-    }
-    // full materialization through a noop sink: count() lets Catalyst
-    // elide row-preserving windows/projections entirely (the r1 trap), so
-    // every timing below that cares about compute writes, then counts
-    def exec(df: org.apache.spark.sql.DataFrame): Long = {
-      df.write.format("noop").mode("overwrite").save()
-      -1L // rows not recounted; the write IS the measurement
-    }
-
-    Seq(millions / 4, millions).foreach { m =>
-      val n = m * 1000000L
-      val obs = synth(n)
-      println(s"--- ${m}M rows, $nSeries series ---")
-      time("resample-5min")(
-        Resample.transformFixed(obs, 300, grid = false).count())
-      time("resample+interpolate")(exec(
-        Interpolate.transform(
-          Resample.transformFixed(obs, 300, grid = true), Parameters.empty)))
-      time("salted-mean")(
-        graft.ext.Skew.saltedMeanByKey(
-          obs.select(col(KeyCol).as("k"), col(ValueCol).as("v")), "k", "v").count())
-    }
-
-    // embedding ANN at 40-400x the bench corpus: synthetic 64-dim vectors
-    // with planted near-dup pairs (id 100k+1 = slightly perturbed id 100k)
-    def synthVecs(n: Long) = spark.range(n).select(col("id").as("vec_id"),
+  /** 64-dim vectors with planted near-neighbors: id ≡ 1 mod 100 is a
+    * ±0.01-perturbed copy of id − 1 (cosine ≈ 0.999); every other id draws
+    * its own uniform [−1, 1] components. */
+  private[graft] def plantedPairVecs(spark: SparkSession, n: Long): DataFrame =
+    spark.range(n).select(col("id").as("vec_id"),
       transform(sequence(lit(0), lit(63)), i =>
         ((pmod(xxhash64(when(pmod(col("id"), lit(100L)) === 1L, col("id") - 1)
             .otherwise(col("id")), i), lit(2001L)) - 1000L).cast("double") / 1000.0)
           + when(pmod(col("id"), lit(100L)) === 1L,
               (pmod(xxhash64(col("id"), i, lit(99L)), lit(21L)) - 10L).cast("double") / 1000.0)
             .otherwise(lit(0.0))).as("embedding"))
-    Seq(200000L).foreach { nv =>
-      println(s"--- $nv synthetic vectors (64-dim) ---")
-      val vecs = synthVecs(nv).cache()
-      vecs.count()
-      time("banded-hyperplane-lsh-pairs")(
-        graft.ext.Similarity.lshBucketedPairs(vecs, "vec_id", "embedding",
-          minCosine = 0.9, bits = 18, bands = 8).count())
-      time("ivf-learned-topk")(
-        graft.ext.Similarity.ivfTopKLearned(vecs,
-          vecs.where(col("vec_id") < 8), "vec_id", "embedding",
-          k = 5, nLists = 64, nProbe = 8).count())
-      vecs.unpersist()
-    }
 
-    // near-dup mining at 20x the bench corpus: synthetic 60-word docs over
-    // a 500-word vocabulary, 2% planted near-dups (one word changed)
-    def synthDocs(n: Long) = {
-      val vocab = array((0 until 500).map(i => lit(s"w$i")): _*)
-      val base = spark.range(n).select(col("id").as("doc_id"),
-        // near-dups: doc 50k+1 etc. reuse the word stream of doc 50k...
-        when(pmod(col("id"), lit(50L)) === 1L, col("id") - 1)
-          .otherwise(col("id")).as("seed"),
-        pmod(col("id"), lit(50L)).as("variant"))
-      base.select(col("doc_id"), concat_ws(" ",
-        transform(sequence(lit(0), lit(59)), i =>
-          when(i === 0 && col("variant") === 1L, lit("wX"))
-            .otherwise(element_at(vocab,
-              (pmod(xxhash64(col("seed"), i), lit(500L)) + 1).cast("int"))))).as("text"))
-    }
-    Seq(25000L, 100000L).foreach { nd =>
-      println(s"--- $nd synthetic docs ---")
-      val docs = synthDocs(nd)
-      time("minhash-lsh-dedup")(
-        graft.ext.Dedup.minhashDupPairs(docs, "doc_id", "text", 0.5).count())
-    }
-    spark.stop()
+  /** 64-dim vectors around `kA` hash-derived anchors in [0,1)^64: id mod kA
+    * is the anchor, plus a per-dim jitter below 0.01. */
+  private[graft] def clusteredVecs(spark: SparkSession, n: Long,
+      kA: Int): DataFrame =
+    spark.range(n).select(
+      col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(63)), j =>
+        pmod(xxhash64(pmod(col("id"), lit(kA.toLong)), j), lit(1000L))
+          .cast("double") / 1000.0 +
+        pmod(xxhash64(col("id"), j, lit(7)), lit(100L)).cast("double")
+          / 10000.0).as("embedding"))
+
+  /** `len` globally unique tokens per id: "w" + xxhash64(id, j). */
+  private def uniqueToks(id: Column, len: Int): Column =
+    transform(sequence(lit(0), lit(len - 1)), j =>
+      concat(lit("w"), xxhash64(id, j)))
+
+  /** Containment plants: ids below n/2 are 12-token fragments, the rest
+    * 20-token hosts; every 100th host embeds its fragment verbatim, the
+    * others append unique filler. */
+  private def containDocs(spark: SparkSession, n: Long): DataFrame = {
+    val half = n / 2
+    val hostBase = transform(sequence(lit(0), lit(19)), j =>
+      concat(lit("w"), xxhash64(col("id"), j + 100)))
+    val filler = transform(sequence(lit(0), lit(11)), j =>
+      concat(lit("w"), xxhash64(col("id"), j + 200)))
+    val planted = pmod(col("id") - half, lit(100L)) === 0L
+    spark.range(n).select(col("id"),
+      when(col("id") < half, array_join(uniqueToks(col("id"), 12), " "))
+        .otherwise(array_join(concat(hostBase,
+          when(planted, uniqueToks(col("id") - half, 12)).otherwise(filler)), " "))
+        .as("text"))
+  }
+
+  /** `n` docs of `words` words drawn from `vocab` word ids; a word is
+    * `len` base-4 digits of its id, spelled a..d. */
+  private def base4Docs(spark: SparkSession, n: Long, vocab: Long, len: Int,
+      words: Int): DataFrame = {
+    def wordExpr(wid: Column) =
+      concat_ws("", transform(sequence(lit(0), lit(len - 1)), d =>
+        element_at(array(lit("a"), lit("b"), lit("c"), lit("d")),
+          (pmod(floor(wid.cast("double") / pow(lit(4.0), d.cast("double")))
+            .cast("long"), lit(4L)) + 1).cast("int"))))
+    spark.range(n).select(col("id"),
+        array_join(transform(sequence(lit(0), lit(words - 1)), j =>
+          wordExpr(pmod(xxhash64(col("id"), j), lit(vocab)))), " ")
+          .as("text"))
+      .localCheckpoint(true)
   }
 
   /** 1M-tier candidate-growth measurement (`runMain graft.ScaleSmoke
@@ -163,16 +196,9 @@ object ScaleSmoke {
     * 16×). Occupancy is an O(n) aggregate, so the measurement itself
     * never materializes a pair join. Measured slopes are recorded in
     * README §scale. */
-  private def dedup1m(): Unit = {
+  private def dedup1m(c: Ctx): Unit = {
     import graft.ext.{Dedup, Similarity}
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
 
     // bucket occupancy Σ k·(k−1)/2 over the banding key
@@ -194,13 +220,6 @@ object ScaleSmoke {
             .otherwise(element_at(vocab,
               (pmod(xxhash64(col("seed"), i), lit(5000L)) + 1).cast("int"))))).as("text"))
     }
-    def synthVecs(n: Long) = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), i =>
-        ((pmod(xxhash64(when(pmod(col("id"), lit(100L)) === 1L, col("id") - 1)
-            .otherwise(col("id")), i), lit(2001L)) - 1000L).cast("double") / 1000.0)
-          + when(pmod(col("id"), lit(100L)) === 1L,
-              (pmod(xxhash64(col("id"), i, lit(99L)), lit(21L)) - 10L).cast("double") / 1000.0)
-            .otherwise(lit(0.0))).as("embedding"))
 
     val sizes = Seq(250000L, 1000000L)
     val results = scala.collection.mutable.LinkedHashMap[String, Seq[Long]]()
@@ -226,7 +245,7 @@ object ScaleSmoke {
       sim.unpersist()
       // hyperplane LSH with the bits ≈ log2(n)+2 sizing rule
       val bits = (math.ceil(math.log(n.toDouble) / math.log(2.0)) + 2).toInt
-      val vecs = synthVecs(n)
+      val vecs = plantedPairVecs(spark, n)
       val sigs = (0 until 8).map(b =>
         Similarity.hyperplaneSignature(vecs, "vec_id", "embedding", bits, b.toLong)
           .select(lit(b).as("band"), col("lsh_sig")))
@@ -236,7 +255,6 @@ object ScaleSmoke {
     }
 
     println("--- growth (4x rows), near-linear target < 6x ---")
-    var failed = false
     results.foreach { case (op, cs) =>
       // the sizing rule changes the op label per size for hyperplane —
       // handled below by prefix grouping
@@ -245,7 +263,7 @@ object ScaleSmoke {
         val linear = ratio < 6.0
         // the chunk banding is DOCUMENTED quadratic — report, don't fail
         val waived = op.startsWith("simhash-chunk")
-        if (!linear && !waived) failed = true
+        c.check(linear || waived)
         println(f"SCALE1M $op%-24s growth=${ratio}%.2fx " +
           (if (linear) "NEAR-LINEAR" else if (waived) "quadratic (documented; use simhashDupPairsAtScale)" else "NOT LINEAR"))
       }
@@ -254,12 +272,10 @@ object ScaleSmoke {
     if (hp.size == 2) {
       val ratio = hp.values.last.head.toDouble / math.max(hp.values.head.head, 1L)
       val linear = ratio < 6.0
-      if (!linear) failed = true
+      c.check(linear)
       println(f"SCALE1M hyperplane-sized        growth=${ratio}%.2fx " +
         (if (linear) "NEAR-LINEAR" else "NOT LINEAR"))
     }
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
   /** 1M-tier streaming-dedup measurement (`runMain graft.ScaleSmoke
@@ -280,16 +296,9 @@ object ScaleSmoke {
     * on bucketed (4096) vs unbucketed layouts; asserts the bucketed
     * probe touches < 15% of the buckets and returns identical pairs.
     * Measured numbers are recorded in README §scale. */
-  private def streamdedup1m(): Unit = {
+  private def streamdedup1m(c: Ctx): Unit = {
     import graft.streaming.StreamingDedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
 
     // 60-word docs over a 5000-word vocab (same generator family as
     // dedup1m); word 0 only touches shingle 0, so a one-word variant
@@ -315,7 +324,6 @@ object ScaleSmoke {
           when(pmod(col("id"), lit(5L)) === 1L, lit("wY"))
             .otherwise(lit(null).cast("string"))).as("text"))
 
-    var failed = false
     val probeTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
     Seq(250000L, 1000000L).foreach { n =>
       val idx = s"/tmp/graft_smoke_stream_idx_$n"
@@ -350,7 +358,7 @@ object ScaleSmoke {
         f"(planted=$expected, streamed=$streamed)")
       // every planted pair found (banding miss < 1e-8 at J≈0.97), and the
       // streamed replay sees exactly the batch-twin pairs
-      if (pairs < expected || streamed != pairs) failed = true
+      c.check(pairs >= expected && streamed == pairs)
     }
     if (probeTimes.size == 2) {
       val growth = probeTimes(1) / math.max(probeTimes(0), 1e-9)
@@ -359,7 +367,7 @@ object ScaleSmoke {
         f"$growth%.2fx " +
         (if (subLinear) "SUB-LINEAR (throughput mode: bytes-bound band scan)"
          else "NOT SUB-LINEAR"))
-      if (!subLinear) failed = true
+      c.check(subLinear)
     }
 
     // latency mode: 20-doc ingest batch against the 1M corpus — bucketed
@@ -401,10 +409,8 @@ object ScaleSmoke {
       .minhashDupBatchPrunedBuckets(spark, tiny, "doc_id", "text", idxB)
     println(f"SCALE1M stream-dedup latency buckets hit = $hit/$nBuckets " +
       f"(${100.0 * hit / nBuckets}%.1f%% of index partitions read)")
-    if (pairsBk != pairsFull || hit > nBuckets * 15 / 100) failed = true
+    c.check(pairsBk == pairsFull && hit <= nBuckets * 15 / 100)
     tiny.unpersist()
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
   /** 1M-tier cluster-resolution measurement (`runMain graft.ScaleSmoke
@@ -415,20 +421,12 @@ object ScaleSmoke {
     * round count is bounded by component diameter (not data size — the
     * SAME rounds at 4× pairs), and wall time grows near-linearly. Roots
     * are verified exactly (every doc's keeper must be its family head). */
-  private def clusters1m(): Unit = {
+  private def clusters1m(c: Ctx): Unit = {
     import graft.ext.Dedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
 
     val fam = 5L // docs per chain family; 4 pairs each
-    var failed = false
     val times = Seq(250000L, 1000000L).map { nPairs =>
       val nDocs = nPairs / (fam - 1) * fam
       // chain pairs (i, i+1) within each family of `fam` consecutive ids
@@ -442,15 +440,13 @@ object ScaleSmoke {
         .count()
       val t = (System.nanoTime() - t0) / 1e9
       println(f"SCALECL pairs=$nPairs%8d docs=$nDocs%8d wrong=$wrong $t%.1f s")
-      if (wrong > 0) failed = true
+      c.check(wrong == 0)
       t
     }
     val growth = times(1) / math.max(times.head, 0.001)
     println(f"SCALECL growth (4x pairs) = $growth%.2fx " +
       (if (growth < 8.0) "NEAR-LINEAR" else "NOT LINEAR"))
-    if (growth >= 8.0) failed = true
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(growth < 8.0)
   }
 
   /** Adversarial long-chain cluster measurement (`runMain graft.ScaleSmoke
@@ -459,18 +455,10 @@ object ScaleSmoke {
     * the pointer-doubling claim: rounds must stay ≈ log₂(diameter) + a
     * small constant (< 20), roots exact, and 4× pairs must not change
     * the round count. */
-  private def chains1m(): Unit = {
+  private def chains1m(c: Ctx): Unit = {
     import graft.ext.Dedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     val fam = 1024L // docs per chain family → diameter 1023
-    var failed = false
     val stats = Seq(250000L, 1000000L).map { nPairs =>
       val nDocs = nPairs / (fam - 1) * fam
       val pairs = spark.range(nDocs)
@@ -484,71 +472,11 @@ object ScaleSmoke {
       val t = (System.nanoTime() - t0) / 1e9
       val rounds = Dedup.lastClusterRounds
       println(f"SCALECHAIN pairs=$nPairs%8d diameter=${fam - 1} rounds=$rounds wrong=$wrong $t%.1f s")
-      if (wrong > 0 || rounds >= 20) failed = true
+      c.check(wrong == 0 && rounds < 20)
       (rounds, t)
     }
     if (stats(0)._1 != stats(1)._1)
       println(s"SCALECHAIN note: round count varied with size (${stats.map(_._1)})")
-    spark.stop()
-    if (failed) sys.exit(1)
-  }
-
-  /** Bounded-replay state-store floor measurement (`runMain
-    * graft.ScaleSmoke streamfloor [sfDir]`): times the stream_resample
-    * replay (sf0.1 events, 15-min windows) under the default HDFS-backed
-    * state store vs RocksDB, against the BATCH twin of the same plan —
-    * the three numbers that decide whether the replay's residual cost is
-    * a tunable or the stateful-execution floor. Results are recorded in
-    * BASELINE.md §streaming-floor. */
-  private def streamfloor(): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = sys.env.get("SPARK_GRAFT_SF_DIR")
-      .orElse(sys.props.get("graft.sfdir")).getOrElse("/root/testdata/sf0.1")
-    def toObs(df: org.apache.spark.sql.DataFrame) =
-      graft.core.Observations.from(
-        df.withColumn("ts", expr("timestamp_micros(ts div 1000)")),
-        "user_id", "ts", "value")
-    def replayOnce(tag: String): Double = {
-      val t0 = System.nanoTime()
-      val res = graft.streaming.StreamingOps.replayResample(
-        spark, s"$dir/events.parquet", toObs, 900, "floor_probe")
-      val n = res.count()
-      val t = (System.nanoTime() - t0) / 1e9
-      println(f"STREAMFLOOR $tag%-28s rows=$n%7d $t%6.2f s")
-      t
-    }
-    // batch twin of the identical plan (same grouping, same detMean)
-    def batchOnce(): Double = {
-      val t0 = System.nanoTime()
-      val obs = toObs(spark.read.parquet(s"$dir/events.parquet"))
-      val n = obs.groupBy(col(graft.core.Observations.KeyCol),
-          window(col(graft.core.Observations.TsCol), "900 seconds"))
-        .agg(graft.ops.Resample.detMean(
-          col(graft.core.Observations.ValueCol)).as("v"))
-        .count()
-      val t = (System.nanoTime() - t0) / 1e9
-      println(f"STREAMFLOOR batch-twin               rows=$n%7d $t%6.2f s")
-      t
-    }
-    batchOnce(); val tb = batchOnce()
-    replayOnce("hdfs-backed (warmup)")
-    val th = (1 to 3).map(_ => replayOnce("hdfs-backed")).min
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    replayOnce("rocksdb (warmup)")
-    val tr = (1 to 3).map(_ => replayOnce("rocksdb")).min
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    println(f"STREAMFLOOR summary batch=$tb%.2f s hdfs=$th%.2f s rocksdb=$tr%.2f s " +
-      f"(state-store overhead: hdfs ${th - tb}%.2f s, rocksdb ${tr - tb}%.2f s)")
-    spark.stop()
   }
 
   /** End-to-end CURATION pipeline at the 1M tier (`runMain graft.ScaleSmoke
@@ -575,24 +503,9 @@ object ScaleSmoke {
     * every lang partition non-empty on disk; plan shape (Exchange count)
     * size-invariant; wall near-linear 250k→1M. Measured output recorded
     * in README §scale. */
-  private def curate1m(): Unit = {
+  private def curate1m(c: Ctx): Unit = {
     import graft.ext.{Dedup, TextAnalysis}
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // the doc_id-only keep-lists sit near the 10 MB broadcast
-      // threshold at these tiers (2 MB at 250k, 8 MB at 1M), so leaving
-      // auto-broadcast on makes the plan SHAPE a function of corpus size
-      // — the 1M tier flipped one semi-join broadcast→shuffle and failed
-      // the exchange-invariance check. At the target scale every
-      // keep-list is corpus-sized and must shuffle, so the tier pins the
-      // shuffle path and the exchange count becomes size-invariant.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
 
     // four language profiles; the stopword interleave makes pred_lang
@@ -658,7 +571,6 @@ object ScaleSmoke {
           (col("langi") + 1).cast("int")).as("lang"))
     }
 
-    var failed = false
     val stats = Seq(250000L, 1000000L).map { n =>
       val hot = n / 100
       val docs = synthDocs(n).localCheckpoint(true)
@@ -709,20 +621,22 @@ object ScaleSmoke {
       println(f"SCALECURATE n=$n%8d kept=$nKept%8d (hot=$keptHot twin=$twinDropped " +
         f"m3=$keptM3 m5=$keptM5 m7=$keptM7) langs=${langsOnDisk.mkString(",")} " +
         f"exchanges=$nExchanges $t%6.1f s")
-      if (keptHot != 1) { println(s"SCALECURATE hot family should keep exactly doc 0, kept $keptHot"); failed = true }
-      if (keptM3 != 0 || keptM5 != 0 || keptM7 != 0) { println("SCALECURATE planted-bad docs leaked through their filter"); failed = true }
-      if (twinDropped != 0) { println(s"SCALECURATE $twinDropped clean near-dup twins survived the keep-join"); failed = true }
-      if (langsOnDisk != langNames.sorted) { println(s"SCALECURATE lang partitions wrong: $langsOnDisk"); failed = true }
+      c.check(keptHot == 1, s"SCALECURATE hot family should keep exactly doc 0, kept $keptHot")
+      c.check(keptM3 == 0 && keptM5 == 0 && keptM7 == 0,
+        "SCALECURATE planted-bad docs leaked through their filter")
+      c.check(twinDropped == 0,
+        s"SCALECURATE $twinDropped clean near-dup twins survived the keep-join")
+      c.check(langsOnDisk == langNames.sorted,
+        s"SCALECURATE lang partitions wrong: $langsOnDisk")
       (n, nKept, nExchanges, t)
     }
     val Seq((_, k1, e1, t1), (_, k2, e2, t2)) = stats
     // kept counts are deterministic doc_id arithmetic → ×4 within
     // boundary effects; wall-clock near-linear (4× data, ≤6× time)
-    if (k2 < 3.8 * k1 || k2 > 4.2 * k1) { println(f"SCALECURATE kept ratio ${k2.toDouble / k1}%.2f not ~4"); failed = true }
-    if (e1 != e2) { println(s"SCALECURATE plan shape changed with size: $e1 vs $e2 exchanges"); failed = true }
-    if (t2 > 6 * t1 + 10) { println(f"SCALECURATE super-linear wall: $t1%.1f -> $t2%.1f s"); failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(k2 >= 3.8 * k1 && k2 <= 4.2 * k1,
+      f"SCALECURATE kept ratio ${k2.toDouble / k1}%.2f not ~4")
+    c.check(e1 == e2, s"SCALECURATE plan shape changed with size: $e1 vs $e2 exchanges")
+    c.growth("SCALECURATE", t1, t2, 6, 10)
   }
 
   /** Token-budget SHARD PACKING at the 1M tier (`runMain graft.ScaleSmoke
@@ -736,23 +650,15 @@ object ScaleSmoke {
     * bucketWidth invariance at 1M (2¹⁶ vs one-bucket degenerate = the
     * single-window formulation) and near-linear wall 250k→1M. Measured
     * output recorded in README §scale. */
-  private def pack1m(): Unit = {
+  private def pack1m(c: Ctx): Unit = {
     import graft.ext.Corpus
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
 
     def synth(n: Long) = spark.range(n).select(col("id").as("doc_id"),
       concat_ws(" ", transform(sequence(lit(0), lit(59)), i =>
         concat(lit("w"), pmod(xxhash64(col("id"), i), lit(50000L)))))
         .as("text"))
     val budget = 1L << 20
-    var failed = false
     val walls = Seq(250000L, 1000000L).map { n =>
       val docs = synth(n).localCheckpoint(true)
       val t0 = System.nanoTime()
@@ -767,24 +673,16 @@ object ScaleSmoke {
       val expectShards = 60L * (n - 1) / budget
       println(f"SCALEPACK n=$n%8d rows=$nOut wrong=$wrong " +
         f"maxShard=$maxShard (expect $expectShards) $t%6.1f s")
-      if (nOut != n || wrong != 0 || maxShard != expectShards) {
-        println("SCALEPACK closed-form mismatch"); failed = true
-      }
+      c.check(nOut == n && wrong == 0 && maxShard == expectShards,
+        "SCALEPACK closed-form mismatch")
       if (n == 1000000L) {
         val alt = Corpus.packShards(docs, "doc_id", "text", budget, 1L << 40)
         val diff = out.exceptAll(alt).count() + alt.exceptAll(out).count()
-        if (diff != 0) {
-          println(s"SCALEPACK width-variance: $diff differing rows"); failed = true
-        }
+        c.check(diff == 0, s"SCALEPACK width-variance: $diff differing rows")
       }
       t
     }
-    if (walls(1) > 6 * walls(0) + 10) {
-      println(f"SCALEPACK super-linear wall: ${walls(0)}%.1f -> ${walls(1)}%.1f s")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALEPACK", walls(0), walls(1), 6, 10)
   }
 
   /** Adversarial HOT-CHUNK boilerplate measurement (`runMain
@@ -800,16 +698,9 @@ object ScaleSmoke {
     * sorted partition). Asserts closed form at 250k and 1M plus
     * near-linear wall growth. Measured output recorded in README
     * §scale. */
-  private def chunk1m(): Unit = {
+  private def chunk1m(c: Ctx): Unit = {
     import graft.ext.Dedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
 
     val boiler = (0 until 16).map(i => s"b$i").mkString(" ")
     def synth(n: Long) = spark.range(n).select(col("id").as("doc_id"),
@@ -817,7 +708,6 @@ object ScaleSmoke {
         concat_ws(" ", transform(sequence(lit(0), lit(47)), i =>
           concat(lit("u"), col("id") * 48 + i)))).as("text"))
 
-    var failed = false
     val walls = Seq(250000L, 1000000L).map { n =>
       val docs = synth(n).localCheckpoint(true)
       val t0 = System.nanoTime()
@@ -831,17 +721,10 @@ object ScaleSmoke {
         (col("doc") =!= 0L &&
           (col("kept_chunks") =!= 3L || col("kept_tokens") =!= 48L))).count()
       println(f"SCALECHUNK n=$n%8d rows=$nOut wrong=$wrong $t%6.1f s")
-      if (nOut != n || wrong != 0) {
-        println("SCALECHUNK closed-form mismatch"); failed = true
-      }
+      c.check(nOut == n && wrong == 0, "SCALECHUNK closed-form mismatch")
       t
     }
-    if (walls(1) > 6 * walls(0) + 10) {
-      println(f"SCALECHUNK super-linear wall: ${walls(0)}%.1f -> ${walls(1)}%.1f s")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALECHUNK", walls(0), walls(1), 6, 10)
   }
 
   /** Binary-code ANN scale tier (`runMain graft.ScaleSmoke hamming1m`):
@@ -858,16 +741,9 @@ object ScaleSmoke {
     * exactly the planted set at hamming 0 (byte payloads all differ);
     * wall tracks codec throughput and must stay ~linear — the pair
     * search itself is band-bounded. */
-  private def phash200k(): Unit = {
+  private def phash200k(c: Ctx): Unit = {
     import graft.ext.{Multimodal, MultimodalCodecs}
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     implicit val s: SparkSession = spark
     import spark.implicits._
 
@@ -890,7 +766,6 @@ object ScaleSmoke {
         }).toDF("doc_id", "payload")
     }
 
-    var failed = false
     val walls = Seq(50000L, 200000L).map { n =>
       val half = n / 2
       val t0 = System.nanoTime()
@@ -907,17 +782,10 @@ object ScaleSmoke {
         col("hamming") =!= 0L).count()
       println(f"SCALEPHASH n=$n%7d pairs=$nPairs bad=$bad codec=$tCodec%6.1f s " +
         f"(${n / tCodec}%.0f img/s) pairs=$tPairs%5.1f s")
-      if (nPairs != half / 50 || bad != 0) {
-        println("SCALEPHASH planted-twin mismatch"); failed = true
-      }
+      c.check(nPairs == half / 50 && bad == 0, "SCALEPHASH planted-twin mismatch")
       tCodec + tPairs
     }
-    if (walls(1) > 8 * walls(0) + 10) {
-      println(f"SCALEPHASH super-linear wall: ${walls(0)}%.1f -> ${walls(1)}%.1f s")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALEPHASH", walls(0), walls(1), 8, 10)
   }
 
   /** Containment-join scale tier (`runMain graft.ScaleSmoke contain1m`):
@@ -930,38 +798,13 @@ object ScaleSmoke {
     * prefix keeps host prefixes on their f=1 unique shingles so the
     * candidate volume is ~the planted set, not hosts×frags. Wall must
     * stay ~linear 250k → 1M. */
-  private def contain1m(): Unit = {
+  private def contain1m(c: Ctx): Unit = {
     import graft.ext.Dedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
 
-    def fragToks(id: org.apache.spark.sql.Column) =
-      transform(sequence(lit(0), lit(11)), j =>
-        concat(lit("w"), xxhash64(id, j)))
-    def synth(n: Long) = {
-      val half = n / 2
-      val hostBase = transform(sequence(lit(0), lit(19)), j =>
-        concat(lit("w"), xxhash64(col("id"), j + 100)))
-      val filler = transform(sequence(lit(0), lit(11)), j =>
-        concat(lit("w"), xxhash64(col("id"), j + 200)))
-      val planted = pmod(col("id") - half, lit(100L)) === 0L
-      spark.range(n).select(col("id"),
-        when(col("id") < half, array_join(fragToks(col("id")), " "))
-          .otherwise(array_join(concat(hostBase,
-            when(planted, fragToks(col("id") - half)).otherwise(filler)), " "))
-          .as("text"))
-    }
-
-    var failed = false
     val walls = Seq(250000L, 1000000L).map { n =>
       val half = n / 2
-      val docs = synth(n).localCheckpoint(true)
+      val docs = containDocs(spark, n).localCheckpoint(true)
       val t0 = System.nanoTime()
       val sh = Dedup.hashedShingles(docs, "id", "text", 3)
       val pairs = Dedup.containmentPairs(sh, 0.9).localCheckpoint(true)
@@ -971,29 +814,15 @@ object ScaleSmoke {
         pmod(col("doc_a"), lit(100L)) =!= 0L ||
         col("containment") =!= 1.0).count()
       println(f"SCALECONTAIN n=$n%8d pairs=$nPairs bad=$bad $t%6.1f s")
-      if (nPairs != half / 100 || bad != 0) {
-        println("SCALECONTAIN planted-pair mismatch"); failed = true
-      }
+      c.check(nPairs == half / 100 && bad == 0, "SCALECONTAIN planted-pair mismatch")
       t
     }
-    if (walls(1) > 6 * walls(0) + 10) {
-      println(f"SCALECONTAIN super-linear wall: ${walls(0)}%.1f -> ${walls(1)}%.1f s")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALECONTAIN", walls(0), walls(1), 6, 10)
   }
 
-  private def hamming1m(): Unit = {
+  private def hamming1m(c: Ctx): Unit = {
     import graft.ext.Similarity
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
 
     // sign pattern keyed by (id mod half): ids i and i+half share it,
     // except dims 0-1 flip on the upper half -> planted hamming-2 twins
@@ -1007,7 +836,6 @@ object ScaleSmoke {
           .as("embedding"))
     }
 
-    var failed = false
     val walls = Seq(250000L, 1000000L).map { n =>
       val vecs = synth(n).localCheckpoint(true)
       val queries = vecs.where(col("vec_id") < 8).localCheckpoint(true)
@@ -1021,17 +849,10 @@ object ScaleSmoke {
         (col("candidate_id") =!= col("query_id") + n / 2 ||
           col("hamming") =!= 2L)).count()
       println(f"SCALEHAMMING n=$n%8d rows=$nOut wrongTop=$wrongTop $t%6.1f s")
-      if (nOut != 24 || wrongTop != 0) {
-        println("SCALEHAMMING planted-twin mismatch"); failed = true
-      }
+      c.check(nOut == 24 && wrongTop == 0, "SCALEHAMMING planted-twin mismatch")
       t
     }
-    if (walls(1) > 6 * walls(0) + 10) {
-      println(f"SCALEHAMMING super-linear wall: ${walls(0)}%.1f -> ${walls(1)}%.1f s")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALEHAMMING", walls(0), walls(1), 6, 10)
   }
 
   /** C4 line-frequency filter scale tier (`runMain graft.ScaleSmoke
@@ -1040,16 +861,9 @@ object ScaleSmoke {
     * hash (broadcast stays trivially small no matter the corpus size);
     * every doc must keep 3 of 4 chunks; the wall must stay ~linear
     * (one long-keyed aggregate + broadcast probe + doc-keyed rebuild). */
-  private def linefreq1m(): Unit = {
+  private def linefreq1m(c: Ctx): Unit = {
     import graft.ext.Dedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
 
     val boiler = (0 until 8).map(i => s"b$i").mkString(" ")
     def synth(n: Long) = spark.range(n).select(col("id").as("doc_id"),
@@ -1057,7 +871,6 @@ object ScaleSmoke {
         concat_ws(" ", transform(sequence(lit(0), lit(23)), i =>
           concat(lit("u"), col("id") * 24 + i)))).as("text"))
 
-    var failed = false
     val walls = Seq(250000L, 1000000L).map { n =>
       val docs = synth(n).localCheckpoint(true)
       val t0 = System.nanoTime()
@@ -1068,17 +881,10 @@ object ScaleSmoke {
       val wrong = out.where(col("n_chunks") =!= 4L ||
         col("kept_chunks") =!= 3L).count()
       println(f"SCALELINEFREQ n=$n%8d rows=$nOut wrong=$wrong $t%6.1f s")
-      if (nOut != n || wrong != 0) {
-        println("SCALELINEFREQ closed-form mismatch"); failed = true
-      }
+      c.check(nOut == n && wrong == 0, "SCALELINEFREQ closed-form mismatch")
       t
     }
-    if (walls(1) > 6 * walls(0) + 10) {
-      println(f"SCALELINEFREQ super-linear wall: ${walls(0)}%.1f -> ${walls(1)}%.1f s")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALELINEFREQ", walls(0), walls(1), 6, 10)
   }
 
   /** Mean-pooling scale tier (`runMain graft.ScaleSmoke centroid1m`):
@@ -1097,23 +903,15 @@ object ScaleSmoke {
     * fans those rows ≤ 7×. Pins: bit-equal results under repartition
     * (exact integer counts), full day coverage, multiple retention
     * cohorts, and near-linear wall 2.5M → 10M. */
-  private def engage10m(): Unit = {
+  private def engage10m(c: Ctx): Unit = {
     import graft.ext.EventOps
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     def synth(n: Long) = spark.range(n).select(
       col("id").as("event_id"),
       (col("id") % 100000L).as("user_id"),
       // 60 uniform days; per-user sparsity emerges from the hash spread
       timestamp_seconds(lit(1704067200L) +
         pmod(xxhash64(col("id")), lit(5184000L))).as("ts"))
-    var failed = false
     val walls = Seq(2500000L, 10000000L).map { n =>
       val ev = synth(n).localCheckpoint(true)
       val t0 = System.nanoTime()
@@ -1127,35 +925,20 @@ object ScaleSmoke {
       val cohorts = ret.map(_.getLong(0)).distinct.size
       println(f"SCALEENGAGE n=$n%9d days=${au.size} cohorts=$cohorts " +
         f"bitEqual=${au == au2} $t%6.1f s")
-      if (au.size != 60 || cohorts < 2 || au != au2) {
-        println("SCALEENGAGE invariant violated"); failed = true
-      }
+      c.check(au.size == 60 && cohorts >= 2 && au == au2, "SCALEENGAGE invariant violated")
       t
     }
-    if (walls(1) > 6 * walls(0) + 10) {
-      println(f"SCALEENGAGE super-linear wall: ${walls(0)}%.1f -> ${walls(1)}%.1f s")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALEENGAGE", walls(0), walls(1), 6, 10)
   }
 
-  private def centroid1m(): Unit = {
+  private def centroid1m(c: Ctx): Unit = {
     import graft.ext.Similarity
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     def synth(n: Long) = spark.range(n).select(
       (col("id") % 16).cast("int").as("label"),
       transform(sequence(lit(0), lit(63)), i =>
         (pmod(xxhash64(col("id"), i), lit(2001L)) - 1000L).cast("double")
           / 1000.0).as("vec"))
-    var failed = false
     val walls = Seq(250000L, 1000000L).map { n =>
       val vecs = synth(n).localCheckpoint(true)
       val t0 = System.nanoTime()
@@ -1166,17 +949,10 @@ object ScaleSmoke {
         .orderBy("label", "dim").collect().toSeq
       val eq = a == b
       println(f"SCALECENTROID n=$n%8d groups=${a.size} bitEqual=$eq $t%6.1f s")
-      if (a.size != 16 * 64 || !eq) {
-        println("SCALECENTROID invariance violated"); failed = true
-      }
+      c.check(a.size == 16 * 64 && eq, "SCALECENTROID invariance violated")
       t
     }
-    if (walls(1) > 6 * walls(0) + 10) {
-      println(f"SCALECENTROID super-linear wall: ${walls(0)}%.1f -> ${walls(1)}%.1f s")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALECENTROID", walls(0), walls(1), 6, 10)
   }
 
   /** Portable-Bloom scale tier (`runMain graft.ScaleSmoke bloom1m`):
@@ -1188,16 +964,9 @@ object ScaleSmoke {
     * of the (1−e^{−kn/m})^k formula (the filter actually behaves like a
     * Bloom filter, not a degenerate hash); (3) the two probe forms make
     * IDENTICAL decisions; (4) probe wall near-linear 250k → 1M. */
-  private def bloom1m(): Unit = {
+  private def bloom1m(c: Ctx): Unit = {
     import graft.ext.Dedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
 
     // text(id) = unique 8-token line, except id % 10 == 0 copies id + 1:
     // probes (id % 5 == 0) then contain n/10 planted true duplicates of
@@ -1210,7 +979,6 @@ object ScaleSmoke {
 
     val m = 1 << 23
     val k = 5
-    var failed = false
     val walls = Seq(250000L, 1000000L).map { n =>
       val docs = synth(n).localCheckpoint(true)
       val corpus = docs.where(col("doc_id") % 5 =!= 0)
@@ -1250,18 +1018,12 @@ object ScaleSmoke {
         f"fp=$fp/$nNovel (rate=$fpRate%.5f, formula=$expFp%.5f) " +
         f"disagree=$disagree build=$tBuild%.1f s join-probe=$tJoin%.1f s " +
         f"pack=$tPack%.1f s local-probe=$tLocal%.1f s")
-      if (fn != 0 || disagree != 0) { println("SCALEBLOOM exactness violated"); failed = true }
-      if (fpRate > 3 * expFp + 1e-4 || (expFp > 1e-3 && fpRate < expFp / 3)) {
-        println("SCALEBLOOM FP rate off the Bloom formula"); failed = true
-      }
+      c.check(fn == 0 && disagree == 0, "SCALEBLOOM exactness violated")
+      c.check(fpRate <= 3 * expFp + 1e-4 && (expFp <= 1e-3 || fpRate >= expFp / 3),
+        "SCALEBLOOM FP rate off the Bloom formula")
       tJoin + tLocal
     }
-    if (walls(1) > 6 * walls(0) + 10) {
-      println(f"SCALEBLOOM super-linear probe wall: ${walls(0)}%.1f -> ${walls(1)}%.1f s")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALEBLOOM probe", walls(0), walls(1), 6, 10)
   }
 
   /** Adversarial HOT-BUCKET skew measurement (`runMain graft.ScaleSmoke
@@ -1278,16 +1040,9 @@ object ScaleSmoke {
     * near-linear in n under the adversarial mix, with exact roots (the
     * hot family resolves to one cluster of exactly k copies rooted at
     * doc 0). */
-  private def hotbucket1m(): Unit = {
+  private def hotbucket1m(c: Ctx): Unit = {
     import graft.ext.Dedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
 
     def occupancyStats(df: org.apache.spark.sql.DataFrame,
@@ -1319,7 +1074,6 @@ object ScaleSmoke {
           .as("text"))
     }
 
-    var failed = false
     val sizes = sys.env.get("SPARK_GRAFT_HOT_SIZES")
       .map(_.split(",").toSeq.map(_.trim.toLong))
       .getOrElse(Seq(250000L, 1000000L))
@@ -1393,9 +1147,9 @@ object ScaleSmoke {
         f"distinct: cand=$scCand%12d maxBucket=$scMax%6d")
       // claim 1+2: naive max bucket == copy count; short-circuited banding
       // never sees the copies (max bucket stays small and copy-independent)
-      if (naiveMax < k) { println("SCALEHOT naive max bucket should equal copy count"); failed = true }
-      if (scMax > 64) { println(s"SCALEHOT distinct-banding max bucket $scMax too large"); failed = true }
-      if (scCand * 100 > naiveCand) { println("SCALEHOT expected >=100x candidate reduction"); failed = true }
+      c.check(naiveMax >= k, "SCALEHOT naive max bucket should equal copy count")
+      c.check(scMax <= 64, s"SCALEHOT distinct-banding max bucket $scMax too large")
+      c.check(scCand * 100 <= naiveCand, "SCALEHOT expected >=100x candidate reduction")
       // claim 3: end-to-end clustering under the mix — exact roots
       val t0 = System.nanoTime()
       val labels = Dedup.dedupClustersDistinct(docs, "doc_id", "text", 0.5)
@@ -1404,7 +1158,7 @@ object ScaleSmoke {
       val hotSize = labels.where(col("root") === 0L).count()
       val t = (System.nanoTime() - t0) / 1e9
       println(f"SCALEHOT n=$n%8d cluster(hot): size=$hotSize (want $k) wrong=$hotWrong $t%.1f s rounds=${Dedup.lastClusterRounds}")
-      if (hotWrong > 0 || hotSize != k) failed = true
+      c.check(hotWrong == 0 && hotSize == k)
       t
     }
     if (times.size == 2) {
@@ -1417,8 +1171,6 @@ object ScaleSmoke {
       println(f"SCALEHOT growth (4x rows) = $growth%.2fx " +
         (if (growth < 8.0) "NEAR-LINEAR" else "(noise-prone wall clock)"))
     }
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
   /** 1M-tier IVF-PQ measurement (`runMain graft.ScaleSmoke pq1m`):
@@ -1430,34 +1182,19 @@ object ScaleSmoke {
     * vs the full-vector corpus — the factor by which the dominant
     * scan shrinks. Asserts recall ≥ 0.9, scan fraction < 0.15, byte
     * reduction ≥ 4×. */
-  private def pq1m(): Unit = {
+  private def pq1m(c: Ctx): Unit = {
     import graft.ext.Similarity
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
-    def synthVecs(n: Long) = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), i =>
-        ((pmod(xxhash64(when(pmod(col("id"), lit(100L)) === 1L, col("id") - 1)
-            .otherwise(col("id")), i), lit(2001L)) - 1000L).cast("double") / 1000.0)
-          + when(pmod(col("id"), lit(100L)) === 1L,
-              (pmod(xxhash64(col("id"), i, lit(99L)), lit(21L)) - 10L).cast("double") / 1000.0)
-            .otherwise(lit(0.0))).as("embedding"))
     def dirBytes(path: String): Long = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.getContentSummary(p).getLength
     }
     val nLists = 128; val nProbe = 8; val k = 10; val nQueries = 100L
-    var failed = false
     Seq(250000L, 1000000L).foreach { n =>
       println(s"--- pq1m: $n vectors (64-dim), nLists=$nLists nProbe=$nProbe m=8 ---")
-      val vecs = synthVecs(n).cache(); vecs.count()
+      val vecs = plantedPairVecs(spark, n).cache(); vecs.count()
       val idx = s"/tmp/graft_scale_pq_idx_$n"
       var t0 = System.nanoTime()
       Similarity.buildIvfPqIndex(vecs, "vec_id", "embedding", idx,
@@ -1487,11 +1224,9 @@ object ScaleSmoke {
       val recall = hits.toDouble / nQueries
       println(f"SCALEPQ adc-rerank-probe         ${(System.nanoTime() - t0) / 1e9}%.1f s")
       println(f"SCALEPQ recall@$k with rerank    $recall%.3f (scan fraction $scanFrac%.4f)")
-      if (recall < 0.9 || scanFrac > 0.15 || ratio < 4.0) failed = true
+      c.check(recall >= 0.9 && scanFrac <= 0.15 && ratio >= 4.0)
       queries.unpersist(); vecs.unpersist()
     }
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
   /** Planted-duplicate global top-N measurement (`runMain
@@ -1502,30 +1237,15 @@ object ScaleSmoke {
     * shape — while generating orders of magnitude fewer candidate
     * pairs than the n²/2 a brute-force top-N would score. Asserts
     * recall ≥ 0.999 and zero non-planted emissions. */
-  private def toppairs1m(): Unit = {
+  private def toppairs1m(c: Ctx): Unit = {
     import graft.ext.Similarity
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
-    def synthVecs(n: Long) = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), i =>
-        ((pmod(xxhash64(when(pmod(col("id"), lit(100L)) === 1L, col("id") - 1)
-            .otherwise(col("id")), i), lit(2001L)) - 1000L).cast("double") / 1000.0)
-          + when(pmod(col("id"), lit(100L)) === 1L,
-              (pmod(xxhash64(col("id"), i, lit(99L)), lit(21L)) - 10L).cast("double") / 1000.0)
-            .otherwise(lit(0.0))).as("embedding"))
-    var failed = false
     Seq(250000L, 1000000L).foreach { n =>
       val nPlanted = n / 100
       val bits = (math.ceil(math.log(n.toDouble) / math.log(2.0)) + 2).toInt
       println(s"--- toppairs1m: $n vectors, $nPlanted planted pairs, bits=$bits bands=16 ---")
-      val vecs = synthVecs(n).cache(); vecs.count()
+      val vecs = plantedPairVecs(spark, n).cache(); vecs.count()
       // candidate volume: banding-bucket occupancy Σ k(k−1)/2 — the pair
       // count the verify stage scores, vs n²/2 for brute force
       val sigs = (0 until 16).map(b =>
@@ -1545,11 +1265,9 @@ object ScaleSmoke {
       val recall = got.intersect(planted).size.toDouble / planted.size
       val falsePos = (got -- planted).size
       println(f"SCALETOP top-$nPlanted recovered  recall=$recall%.4f falsePos=$falsePos $t%.1f s")
-      if (recall < 0.999 || falsePos > 0) failed = true
+      c.check(recall >= 0.999 && falsePos == 0)
       vecs.unpersist()
     }
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
   /** 1M-tier ANN recall/probe-fraction measurement (`runMain
@@ -1563,31 +1281,15 @@ object ScaleSmoke {
     * (bits ≈ log2 n + 2 sizing rule): recall of the planted pairs.
     * Asserts recall floors (0.9) and scan fraction < 0.15; measured
     * output is recorded in README §scale. */
-  private def ann1m(): Unit = {
+  private def ann1m(c: Ctx): Unit = {
     import graft.ext.Similarity
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
 
-    def synthVecs(n: Long) = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), i =>
-        ((pmod(xxhash64(when(pmod(col("id"), lit(100L)) === 1L, col("id") - 1)
-            .otherwise(col("id")), i), lit(2001L)) - 1000L).cast("double") / 1000.0)
-          + when(pmod(col("id"), lit(100L)) === 1L,
-              (pmod(xxhash64(col("id"), i, lit(99L)), lit(21L)) - 10L).cast("double") / 1000.0)
-            .otherwise(lit(0.0))).as("embedding"))
-
     val nLists = 256; val nProbe = 8; val k = 10; val nQueries = 500L
-    var failed = false
     Seq(250000L, 1000000L).foreach { n =>
       println(s"--- ann1m: $n vectors (64-dim), nLists=$nLists nProbe=$nProbe ---")
-      val vecs = synthVecs(n).cache(); vecs.count()
+      val vecs = plantedPairVecs(spark, n).cache(); vecs.count()
       // ---- IVF: one training shared by the recall and fraction probes
       var t0 = System.nanoTime()
       val cents = Similarity.learnCentroidArrays(
@@ -1625,7 +1327,7 @@ object ScaleSmoke {
       val ivfRecall = hits.toDouble / nQueries
       println(f"SCALEANN ivf-probe               ${(System.nanoTime() - t0) / 1e9}%.1f s")
       println(f"SCALEANN ivf-recall@$k           $ivfRecall%.3f (scan fraction $scanFrac%.4f)")
-      if (ivfRecall < 0.9 || scanFrac > 0.15) failed = true
+      c.check(ivfRecall >= 0.9 && scanFrac <= 0.15)
       qProbes.unpersist(); assigned.unpersist()
       // ---- banded hyperplane LSH with the sized-bits rule
       val bits = (math.ceil(math.log(n.toDouble) / math.log(2.0)) + 2).toInt
@@ -1639,11 +1341,9 @@ object ScaleSmoke {
       val lshRecall = planted.toDouble / nPlanted
       println(f"SCALEANN lsh-pairs-b$bits         ${(System.nanoTime() - t0) / 1e9}%.1f s")
       println(f"SCALEANN lsh-recall              $lshRecall%.3f ($planted of $nPlanted planted)")
-      if (lshRecall < 0.9) failed = true
+      c.check(lshRecall >= 0.9)
       vecs.unpersist()
     }
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
   /** Exact pruned ANN at 1M (`runMain graft.ScaleSmoke exactann1m`):
@@ -1655,16 +1355,9 @@ object ScaleSmoke {
     * small fraction of the corpus and the wall beats the brute-force
     * scan. Red (exit 1) on any mismatch, on scan fraction > 0.5, or on
     * pruned wall > brute wall. */
-  private def exactann1m(): Unit = {
+  private def exactann1m(c: Ctx): Unit = {
     import graft.ext.Similarity
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
     val n = 1000000L; val cClusters = 64; val k = 10; val nProbe = 4
     def synthClustered(n: Long) = spark.range(n).select(
@@ -1676,7 +1369,6 @@ object ScaleSmoke {
             .cast("double") / 1000.0) * 0.02).as("embedding"))
     val vecs = synthClustered(n).cache(); vecs.count()
     val queries = vecs.where(col("vec_id") < 100L).cache(); queries.count()
-    var failed = false
     var t0 = System.nanoTime()
     val cents = Similarity.learnCentroidArrays(
       vecs, "vec_id", "embedding", cClusters, 2)
@@ -1699,7 +1391,7 @@ object ScaleSmoke {
       .as[(Long, Int, Long, Double)].collect().toSet
     val tBrute = (System.nanoTime() - t0) / 1e9
     println(f"SCALEEXACTANN brute-force    $tBrute%6.1f s (${brute.size} rows)")
-    if (pruned != brute) { println("SCALEEXACTANN MISMATCH vs brute"); failed = true }
+    c.check(pruned == brute, "SCALEEXACTANN MISMATCH vs brute")
     // post-hoc bound audit: the fraction of the corpus the bound admits
     // (phase-1 probed lists ∪ bound-qualifying lists), from the exact
     // kth cosines — the number that holds at 1000 executors
@@ -1767,10 +1459,8 @@ object ScaleSmoke {
     }
     val avgFrac = fracs.sum / fracs.length
     println(f"SCALEEXACTANN scan-fraction  $avgFrac%6.3f (avg over ${qv.length} queries)")
-    if (avgFrac > 0.5) { println("SCALEEXACTANN bound admits too much"); failed = true }
-    if (tPruned > tBrute) { println("SCALEEXACTANN no speedup over brute"); failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(avgFrac <= 0.5, "SCALEEXACTANN bound admits too much")
+    c.check(tPruned <= tBrute, "SCALEEXACTANN no speedup over brute")
   }
 
   /** Substring-dedup scale tier (`runMain graft.ScaleSmoke substr1m`):
@@ -1783,28 +1473,17 @@ object ScaleSmoke {
     * original and one (5, 34, 23) in the copy, nothing else; strip
     * removes exactly 30 tokens per copy and zero elsewhere. Wall must
     * stay near-linear 250k → 1M (red above 6× + 10 s). */
-  private def substr1m(): Unit = {
+  private def substr1m(c: Ctx): Unit = {
     import graft.ext.Dedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
-    def docToks(id: org.apache.spark.sql.Column) =
-      transform(sequence(lit(0), lit(29)), j =>
-        concat(lit("w"), xxhash64(id, j)))
     def synth(n: Long) = {
       val planted = col("id") >= n / 2 && pmod(col("id"), lit(100L)) === 1L
       spark.range(n).select(col("id"),
         when(planted, concat_ws(" ",
-            lit("p0 p1 p2 p3 p4"), array_join(docToks(col("id") - 1), " ")))
-          .otherwise(array_join(docToks(col("id")), " ")).as("text"))
+            lit("p0 p1 p2 p3 p4"), array_join(uniqueToks(col("id") - 1, 30), " ")))
+          .otherwise(array_join(uniqueToks(col("id"), 30), " ")).as("text"))
     }
-    var failed = false
     val walls = Seq(250000L, 1000000L).map { n =>
       val nPlanted = spark.range(n).where(col("id") >= n / 2 &&
         pmod(col("id"), lit(100L)) === 1L).count()
@@ -1828,18 +1507,11 @@ object ScaleSmoke {
       val removed = strip.getLong(0)
       println(f"SCALESUBSTR n=$n%8d planted=$nPlanted spans=$nSpans " +
         f"bad=$badSpans removed=$removed $t%6.1f s")
-      if (nSpans != 2 * nPlanted || badSpans != 0 ||
-          removed != 30 * nPlanted) {
-        println("SCALESUBSTR planted accounting mismatch"); failed = true
-      }
+      c.check(nSpans == 2 * nPlanted && badSpans == 0 && removed == 30 * nPlanted,
+        "SCALESUBSTR planted accounting mismatch")
       t
     }
-    if (walls(1) > 6 * walls(0) + 10) {
-      println(f"SCALESUBSTR super-linear wall: ${walls(0)}%.1f -> ${walls(1)}%.1f s")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALESUBSTR", walls(0), walls(1), 6, 10)
   }
 
   /** Synthesize a 10× copy of an sf directory: every fact table becomes
@@ -1916,25 +1588,9 @@ object ScaleSmoke {
     * this host are scheduling noise, not asymptotics). Crashes at
     * either scale are red. Writes the full table to
     * /tmp/graft_all10x.json for BASELINE.md. */
-  private def all10x(args: Array[String]): Unit = {
-    val reps = args.headOption.map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      // These fixtures are megabytes, so at the DEFAULT 128 MB split /
-      // 4 MB open-cost both scales pack every scan into ONE task and a
-      // ratio measures serial work growth under frozen parallelism —
-      // the first run of this tier showed row-local scans at ~12×
-      // (text_token_counts) purely from that packing. A real cluster
-      // splits 10× the bytes into 10× the tasks; 2 MB splits restore
-      // that proportionality here so ratios measure ASYMPTOTICS.
-      .config("spark.sql.files.maxPartitionBytes", (2L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (256L << 10).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  private def all10x(c: Ctx): Unit = {
+    import c.spark
+    val reps = c.args.headOption.map(_.toInt).getOrElse(2)
     sys.props("graft.recall") = "off" // bench conditions
     val src = "/root/testdata/sf0.1"
     val dst = "/tmp/graft_scale_sf10x"
@@ -1959,20 +1615,18 @@ object ScaleSmoke {
       }
       spark.catalog.clearCache()
     }
-    var failed = false
     val rows = names.map { n =>
       val miss = Seq("1x", "10x").filter(tg =>
         !best.contains((n, tg)) && crashed.contains((n, tg)))
       if (miss.nonEmpty) {
-        failed = true
-        println(s"SCALEALL10X $n CRASHED at ${miss.mkString(",")}: " +
+        c.check(false, s"SCALEALL10X $n CRASHED at ${miss.mkString(",")}: " +
           crashed((n, miss.head)))
         s""""$n": {"t1": -1, "t10": -1, "ratio": -1}"""
       } else {
         val (t1, t10) = (best((n, "1x")), best((n, "10x")))
         val ratio = t10 / math.max(t1, 0.05)
         val red = t10 >= 1.0 && ratio > 15.0
-        if (red) failed = true
+        c.check(!red)
         println(f"SCALEALL10X $n%-28s 1x $t1%7.2f s  10x $t10%7.2f s  " +
           f"ratio $ratio%6.2f${if (red) "  RED" else ""}")
         f""""$n": {"t1": $t1%.3f, "t10": $t10%.3f, "ratio": $ratio%.2f}"""
@@ -1989,8 +1643,7 @@ object ScaleSmoke {
         f"${srt(srt.size / 2)}%4.2f  p90 ${srt((srt.size * 9) / 10)}%4.2f  " +
         f"max ${srt.last}%4.2f")
     }
-    spark.stop()
-    if (failed) { println("SCALEALL10X RED"); sys.exit(1) }
+    if (c.failed) println("SCALEALL10X RED")
   }
 
   /** Window-hash index growth tier (`runMain graft.ScaleSmoke
@@ -2003,23 +1656,13 @@ object ScaleSmoke {
     * (10k docs) to the full-size index costs a fraction of a rebuild —
     * red if it exceeds half the 1M rebuild wall (an append that rescans
     * the corpus lands at ~1×). */
-  private def winappend1m(): Unit = {
+  private def winappend1m(c: Ctx): Unit = {
     import graft.streaming.StreamingDedup
     import graft.ext.Dedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     val n = 1000000L
-    def docToks(id: org.apache.spark.sql.Column) =
-      transform(sequence(lit(0), lit(29)), j =>
-        concat(lit("w"), xxhash64(id, j)))
     val all = spark.range(n).select(col("id"),
-        array_join(docToks(col("id")), " ").as("text"))
+        array_join(uniqueToks(col("id"), 30), " ").as("text"))
       .localCheckpoint(true)
     val a = all.where(col("id") < n / 2)
     val b = all.where(col("id") >= n / 2)
@@ -2029,12 +1672,11 @@ object ScaleSmoke {
     // verbatim copies of indexed docs: the probe must hit EVERY window
     // of every copy and NO window of any fresh doc
     val fresh = spark.range(2 * n, 2 * n + 10000L)
-      .select(col("id"), array_join(docToks(col("id")), " ").as("text"))
+      .select(col("id"), array_join(uniqueToks(col("id"), 30), " ").as("text"))
     val probe = fresh
       .unionByName(all.where(pmod(col("id"), lit(101L)) === 0L).limit(10000)
         .select((col("id") + 3 * n).as("id"), col("text")))
       .localCheckpoint(true)
-    var failed = false
     val rebuilt = "/tmp/graft_scale_winidx_rebuilt"
     val grown = "/tmp/graft_scale_winidx_grown"
     var t0 = System.nanoTime()
@@ -2057,9 +1699,7 @@ object ScaleSmoke {
     val nRebuilt = spark.read.parquet(rebuilt).count()
     println(f"SCALEWINAPPEND compact       $tCompact%6.1f s " +
       f"(grown=$nGrown rebuilt=$nRebuilt)")
-    if (nGrown != nRebuilt) {
-      println("SCALEWINAPPEND grown index != rebuild"); failed = true
-    }
+    c.check(nGrown == nRebuilt, "SCALEWINAPPEND grown index != rebuild")
     // batch-shape probe replay (the streaming probe is this exact
     // semi-join per micro-batch): identical hits on both indexes, all
     // of them from the verbatim-copy half
@@ -2083,9 +1723,7 @@ object ScaleSmoke {
     val expectedHits = 23L * nCopies
     println(f"SCALEWINAPPEND probe hits    grown=$hG rebuilt=$hR " +
       f"expected=($expectedHits, 0)")
-    if (hG != hR || hG != ((expectedHits, 0L))) {
-      println("SCALEWINAPPEND probe mismatch"); failed = true
-    }
+    c.check(hG == hR && hG == ((expectedHits, 0L)), "SCALEWINAPPEND probe mismatch")
     // incremental-growth claim: a 10k-doc append to the 1M index must
     // not cost like a rebuild
     val small = all.where(pmod(col("id"), lit(103L)) === 7L).limit(10000)
@@ -2094,11 +1732,7 @@ object ScaleSmoke {
     StreamingDedup.appendWindowIndex(small, "id", "text", grown)
     val tSmall = (System.nanoTime() - t0) / 1e9
     println(f"SCALEWINAPPEND append-10k    $tSmall%6.1f s (rebuild $tRebuild%6.1f s)")
-    if (tSmall > 0.5 * tRebuild + 5) {
-      println("SCALEWINAPPEND small append costs like a rebuild"); failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(tSmall <= 0.5 * tRebuild + 5, "SCALEWINAPPEND small append costs like a rebuild")
   }
 
   /** Pipeline-artifact index lifecycle tier (`runMain graft.ScaleSmoke
@@ -2108,17 +1742,9 @@ object ScaleSmoke {
     * (keeper min-fold crosses the append boundary on planted canon
     * collisions; the Jaccard drop probe sees appended near-dups), and
     * (b) a 10k-doc append costs ∝ the batch, not the corpus. */
-  private def pipeidx1m(): Unit = {
+  private def pipeidx1m(c: Ctx): Unit = {
     import graft.streaming.StreamingDedup
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     val n = 1000000L
     // keeper: ~4 docs per canon, batches split by parity so the min
     // fold crosses the append boundary on every canon
@@ -2142,25 +1768,18 @@ object ScaleSmoke {
     val kDiff = vG.join(vR, Seq("canon", "_keeper"), "left_anti").count() +
       vR.join(vG, Seq("canon", "_keeper"), "left_anti").count()
     println(f"SCALEPIPEIDX keeper rebuild  $tKRebuild%6.1f s diff=$kDiff")
-    if (kDiff != 0) {
-      println("SCALEPIPEIDX keeper grown != rebuild"); failed = true
-    }
+    c.check(kDiff == 0, "SCALEPIPEIDX keeper grown != rebuild")
     t0 = System.nanoTime()
     StreamingDedup.appendKeeperIndex(
       canons.where(pmod(col("id"), lit(97L)) === 3L).limit(10000)
         .select((col("id") + 2 * n).as("id"), col("canon")), kGrown)
     val tKApp = (System.nanoTime() - t0) / 1e9
     println(f"SCALEPIPEIDX keeper app-10k  $tKApp%6.1f s")
-    if (tKApp > 0.5 * tKRebuild + 5) {
-      println("SCALEPIPEIDX keeper append costs like a rebuild")
-      failed = true
-    }
+    c.check(tKApp <= 0.5 * tKRebuild + 5, "SCALEPIPEIDX keeper append costs like a rebuild")
     // shingle index: 30-token docs; every 100th doc in batch B is a
     // verbatim copy of an indexed batch-A doc (near-dup must be caught
     // across the append boundary)
-    def toks(id: org.apache.spark.sql.Column) =
-      transform(sequence(lit(0), lit(29)), j =>
-        concat(lit("w"), xxhash64(id, j)))
+    def toks(id: Column) = uniqueToks(id, 30)
     val a = spark.range(n / 2).select(col("id"),
       array_join(toks(col("id")), " ").as("text"))
     val b = spark.range(n / 2, n).select(col("id"),
@@ -2187,12 +1806,9 @@ object ScaleSmoke {
     val (dG, dR) = (drops(sGrown), drops(sRebuilt))
     println(f"SCALEPIPEIDX shingle rebuild $tSRebuild%6.1f s " +
       f"append-500k $tSApp%6.1f s drops grown=$dG rebuilt=$dR")
-    if (dG != dR) {
-      println("SCALEPIPEIDX shingle grown != rebuild"); failed = true
-    }
-    if (dG != 5000L) { // the planted copy half of the probe, exactly
-      println("SCALEPIPEIDX drop count != planted 5000"); failed = true
-    }
+    c.check(dG == dR, "SCALEPIPEIDX shingle grown != rebuild")
+    // the planted copy half of the probe, exactly
+    c.check(dG == 5000L, "SCALEPIPEIDX drop count != planted 5000")
     t0 = System.nanoTime()
     StreamingDedup.appendShingleIndex(
       spark.range(3 * n, 3 * n + 10000L).select(col("id"),
@@ -2200,12 +1816,7 @@ object ScaleSmoke {
     val tSSmall = (System.nanoTime() - t0) / 1e9
     println(f"SCALEPIPEIDX shingle app-10k $tSSmall%6.1f s " +
       f"(rebuild $tSRebuild%6.1f s)")
-    if (tSSmall > 0.5 * tSRebuild + 5) {
-      println("SCALEPIPEIDX shingle append costs like a rebuild")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(tSSmall <= 0.5 * tSRebuild + 5, "SCALEPIPEIDX shingle append costs like a rebuild")
   }
 
   /** Production-merge-count BPE tier (`runMain graft.ScaleSmoke bpe1k`),
@@ -2219,38 +1830,19 @@ object ScaleSmoke {
     * semantics-free (batch=32 ≡ batch=128 totals); and the walls stay
     * inside generous reds (train 420 s, apply 180 s — a merge-count
     * quadratic would blow through both). */
-  private def bpe1k(): Unit = {
+  private def bpe1k(c: Ctx): Unit = {
     import graft.ext.Bpe
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
     val n = 250000L; val vocab = 30000L; val wordsPerDoc = 39
     // word text = 8 base-4 digits of the word id, spelled a..d
-    def wordExpr(wid: org.apache.spark.sql.Column) =
-      concat_ws("", transform(sequence(lit(0), lit(7)), d =>
-        element_at(array(lit("a"), lit("b"), lit("c"), lit("d")),
-          (pmod(floor(wid.cast("double") / pow(lit(4.0), d.cast("double")))
-            .cast("long"), lit(4L)) + 1).cast("int"))))
-    val docs = spark.range(n).select(col("id"),
-        array_join(transform(sequence(lit(0), lit(wordsPerDoc)), j =>
-          wordExpr(pmod(xxhash64(col("id"), j), lit(vocab)))), " ")
-          .as("text"))
-      .localCheckpoint(true)
-    var failed = false
+    val docs = base4Docs(spark, n, vocab, 8, wordsPerDoc + 1)
     var t0 = System.nanoTime()
     val merges = Bpe.trainMergesBatched(docs, "text", m = 1000,
       batchSize = 64)
     val tTrain = (System.nanoTime() - t0) / 1e9
     println(f"SCALEBPE train-1k       $tTrain%6.1f s (${merges.length} merges)")
-    if (merges.length < 1000) {
-      println("SCALEBPE merge budget not reached"); failed = true
-    }
+    c.check(merges.length >= 1000, "SCALEBPE merge budget not reached")
     t0 = System.nanoTime()
     val tot = Bpe.tokenCountsTyped(docs, "id", "text", merges)
       .agg(sum(col("n_words")).cast("long"),
@@ -2260,16 +1852,12 @@ object ScaleSmoke {
     val nOcc = n * (wordsPerDoc + 1)
     println(f"SCALEBPE apply-typed    $tApply%6.1f s " +
       f"(words=${tot._1} tokens=${tot._2} symbols=${nOcc * 8})")
-    if (tot._1 != nOcc || tot._2 < nOcc || tot._2 > nOcc * 8) {
-      println("SCALEBPE token totals outside [n_words, n_symbols]")
-      failed = true
-    }
+    c.check(tot._1 == nOcc && tot._2 >= nOcc && tot._2 <= nOcc * 8,
+      "SCALEBPE token totals outside [n_words, n_symbols]")
     val tot100 = Bpe.tokenCountsTyped(docs, "id", "text", merges.take(100))
       .agg(sum(col("bpe_tokens")).cast("long")).as[Long].head()
     println(f"SCALEBPE tokens@100     $tot100%d vs @1000 ${tot._2}%d")
-    if (tot._2 > tot100) {
-      println("SCALEBPE more merges inflated the token total"); failed = true
-    }
+    c.check(tot._2 <= tot100, "SCALEBPE more merges inflated the token total")
     // apply batching must be pure plumbing: identical per-doc counts on
     // a slice regardless of projection batch size
     val slice = docs.where(col("id") < 5000L)
@@ -2277,13 +1865,9 @@ object ScaleSmoke {
       .as[(Long, Long, Long)].collect().toSet
     val a128 = Bpe.tokenCountsTyped(slice, "id", "text", merges, batch = 128)
       .as[(Long, Long, Long)].collect().toSet
-    if (a32 != a128) {
-      println("SCALEBPE apply batch size changed results"); failed = true
-    }
-    if (tTrain > 420) { println("SCALEBPE train wall red"); failed = true }
-    if (tApply > 180) { println("SCALEBPE apply wall red"); failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(a32 == a128, "SCALEBPE apply batch size changed results")
+    c.check(tTrain <= 420, "SCALEBPE train wall red")
+    c.check(tApply <= 180, "SCALEBPE apply wall red")
   }
 
   /** Unigram-LM tokenizer trainer tier (`runMain graft.ScaleSmoke
@@ -2296,42 +1880,21 @@ object ScaleSmoke {
     * partitioning-invariant by design), and (c) apply totals within
     * [n_words, n_symbols] plus unigram-vs-BPE comparability on the
     * same corpus. */
-  private def unigram250k(): Unit = {
+  private def unigram250k(c: Ctx): Unit = {
     import graft.ext.Unigram
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
     val n = 250000L; val vocab = 30000L; val wordsPerDoc = 39
-    def wordExpr(wid: org.apache.spark.sql.Column) =
-      concat_ws("", transform(sequence(lit(0), lit(7)), d =>
-        element_at(array(lit("a"), lit("b"), lit("c"), lit("d")),
-          (pmod(floor(wid.cast("double") / pow(lit(4.0), d.cast("double")))
-            .cast("long"), lit(4L)) + 1).cast("int"))))
-    val docs = spark.range(n).select(col("id"),
-        array_join(transform(sequence(lit(0), lit(wordsPerDoc)), j =>
-          wordExpr(pmod(xxhash64(col("id"), j), lit(vocab)))), " ")
-          .as("text"))
-      .localCheckpoint(true)
-    var failed = false
+    val docs = base4Docs(spark, n, vocab, 8, wordsPerDoc + 1)
     var t0 = System.nanoTime()
     val trained = Unigram.train(docs, "text", k = 256)
     val tTrain = (System.nanoTime() - t0) / 1e9
     println(f"SCALEUNI train-256      $tTrain%6.1f s (${trained.size} pieces)")
-    if (trained.size != 256) {
-      println("SCALEUNI vocab size off"); failed = true
-    }
+    c.check(trained.size == 256, "SCALEUNI vocab size off")
     // determinism: training is a pure function of the corpus — a
     // different input partitioning must yield the identical cost table
     val trained7 = Unigram.train(docs.repartition(7), "text", k = 256)
-    if (trained7 != trained) {
-      println("SCALEUNI training not partitioning-invariant"); failed = true
-    }
+    c.check(trained7 == trained, "SCALEUNI training not partitioning-invariant")
     t0 = System.nanoTime()
     val dict = graft.ext.Pin.pin(Unigram.typedDict(docs, "text", trained))
     val tot = Unigram.tokenCountsFromDict(docs, "id", "text", dict)
@@ -2342,19 +1905,13 @@ object ScaleSmoke {
     val nOcc = n * (wordsPerDoc + 1)
     println(f"SCALEUNI apply-typed    $tApply%6.1f s " +
       f"(words=${tot._1} tokens=${tot._2} symbols=${nOcc * 8})")
-    if (tot._1 != nOcc || tot._2 < nOcc || tot._2 > nOcc * 8) {
-      println("SCALEUNI token totals outside [n_words, n_symbols]")
-      failed = true
-    }
+    c.check(tot._1 == nOcc && tot._2 >= nOcc && tot._2 <= nOcc * 8,
+      "SCALEUNI token totals outside [n_words, n_symbols]")
     // a 256-piece unigram vocab must compress below the char baseline
     // on a 4-letter corpus (multi-char pieces exist and win somewhere)
-    if (tot._2 >= nOcc * 8) {
-      println("SCALEUNI no compression vs chars"); failed = true
-    }
-    if (tTrain > 420) { println("SCALEUNI train wall red"); failed = true }
-    if (tApply > 180) { println("SCALEUNI apply wall red"); failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(tot._2 < nOcc * 8, "SCALEUNI no compression vs chars")
+    c.check(tTrain <= 420, "SCALEUNI train wall red")
+    c.check(tApply <= 180, "SCALEUNI apply wall red")
   }
 
   /** Multi-generation incremental-OPTIMIZE tier (`runMain
@@ -2373,16 +1930,9 @@ object ScaleSmoke {
     * (a wrong manifest or a lost row surfaces immediately); (d) VACUUM
     * reclaims exactly the cumulative logically-removed files and the
     * listing equals the live manifest. */
-  private def zorderinc1m(): Unit = {
+  private def zorderinc1m(c: Ctx): Unit = {
     import graft.ext.{Ranks, ZTable}
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     val n = 1000000L
     val p = "/tmp/graft_scale_zinc"
     def rm(f: java.io.File): Unit = {
@@ -2398,7 +1948,6 @@ object ScaleSmoke {
       .withColumn("zkey", ZTable.zkeyExpr)
     val boxPred = col("b1").between(64, 127) && col("b2").between(128, 191)
     var expectedBox = base.where(boxPred).count()
-    var failed = false
     var t0 = System.nanoTime()
     var manifest = ZTable.writeFiles(
       Ranks.globalRowNumber(base, Seq(col("zkey"), col("doc_id")),
@@ -2456,25 +2005,17 @@ object ScaleSmoke {
         f"rewrote $frw%3d files/$rrw%7d rows (${frac * 100}%4.1f%%)  " +
         f"scan $scannedBefore%3d -> ${sc.length}%3d of $nFiles files  " +
         f"box $boxRows")
-      if (boxRows != expectedBox) {
-        println(s"SCALEZINC gen$g box mismatch: $boxRows != $expectedBox")
-        failed = true
-      }
-      if (frac > 0.6) {
-        println(s"SCALEZINC gen$g rewrite fraction red"); failed = true
-      }
-      if (sc.length > nFiles / 4) {
-        println(s"SCALEZINC gen$g post-optimize skipping red"); failed = true
-      }
+      c.check(boxRows == expectedBox,
+        s"SCALEZINC gen$g box mismatch: $boxRows != $expectedBox")
+      c.check(frac <= 0.6, s"SCALEZINC gen$g rewrite fraction red")
+      c.check(sc.length <= nFiles / 4, s"SCALEZINC gen$g post-optimize skipping red")
       // ±2 files of boundary jitter allowed: re-clustering a band
       // OUTSIDE the probe box repacks rows near the box edge, so a new
       // file can straddle the boundary a pruned old file didn't
       // (measured: gen4's [192,223] band, 27 → 28 of 308) — the health
       // line is the nFiles/4 bound above, not monotonicity
-      if (sc.length > scannedBefore + 2) {
-        println(s"SCALEZINC gen$g optimize worsened skipping"); failed = true
-      }
-      if (tOpt > 180) { println(s"SCALEZINC gen$g wall red"); failed = true }
+      c.check(sc.length <= scannedBefore + 2, s"SCALEZINC gen$g optimize worsened skipping")
+      c.check(tOpt <= 180, s"SCALEZINC gen$g wall red")
     }
     // VACUUM: exactly the cumulative logically-removed files go; the
     // listing equals the live manifest afterwards
@@ -2483,11 +2024,8 @@ object ScaleSmoke {
     val after = ZTable.listDataFiles(spark, table).length.toLong
     println(f"SCALEZINC vacuum        $before%4d files -> $after%4d " +
       f"(deleted $deleted, live manifest $live)")
-    if (deleted != cumDeleted || after != live || before - deleted != after) {
-      println("SCALEZINC vacuum accounting off"); failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(deleted == cumDeleted && after == live && before - deleted == after,
+      "SCALEZINC vacuum accounting off")
   }
 
   /** PRODUCTION-VOCAB unigram tier (`runMain graft.ScaleSmoke
@@ -2501,16 +2039,9 @@ object ScaleSmoke {
     * binary; (b) bit-identity of the broadcast and plan-bound
     * expressions at 32k pieces over the full type frame; (c) train and
     * apply walls at 100k docs / ~177k word types. */
-  private def unigram32k(): Unit = {
+  private def unigram32k(c: Ctx): Unit = {
     import graft.ext.Unigram
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
     val n = 100000L; val vocabTypes = 200000L; val wordsPerDoc = 39
     val letters = array((0 until 16).map(i =>
@@ -2525,14 +2056,11 @@ object ScaleSmoke {
           wordExpr(pmod(xxhash64(col("id"), j), lit(vocabTypes)))), " ")
           .as("text"))
       .localCheckpoint(true)
-    var failed = false
     var t0 = System.nanoTime()
     val trained = Unigram.train(docs, "text", k = 32768)
     val tTrain = (System.nanoTime() - t0) / 1e9
     println(f"SCALEUNI32K train-32768 $tTrain%6.1f s (${trained.size} pieces)")
-    if (trained.size != 32768) {
-      println("SCALEUNI32K vocab size off"); failed = true
-    }
+    c.check(trained.size == 32768, "SCALEUNI32K vocab size off")
     val types = docs.select(explode(split(col("text"), " ")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .localCheckpoint(true)
@@ -2551,10 +2079,9 @@ object ScaleSmoke {
     val tPlan = (System.nanoTime() - t0) / 1e9
     println(f"SCALEUNI32K apply bcast $tBc%6.1f s / plan-bound $tPlan%6.1f s" +
       f" over $nTypes types")
-    if (bc.exceptAll(plan).count() != 0 || plan.exceptAll(bc).count() != 0) {
-      println("SCALEUNI32K broadcast segmenter != plan-bound"); failed = true
-    }
-    if (bc.count() == 0) { println("SCALEUNI32K empty apply"); failed = true }
+    c.check(bc.exceptAll(plan).count() == 0 && plan.exceptAll(bc).count() == 0,
+      "SCALEUNI32K broadcast segmenter != plan-bound")
+    c.check(bc.count() != 0, "SCALEUNI32K empty apply")
     // corpus-level apply through the typed dict (auto-routes to bcast)
     t0 = System.nanoTime()
     val dict = graft.ext.Pin.pin(Unigram.typedDict(docs, "text", trained))
@@ -2566,14 +2093,10 @@ object ScaleSmoke {
     val nOcc = n * (wordsPerDoc + 1)
     println(f"SCALEUNI32K apply-typed $tApply%6.1f s " +
       f"(words=${tot._1} tokens=${tot._2} symbols=${nOcc * 8})")
-    if (tot._1 != nOcc || tot._2 < nOcc || tot._2 > nOcc * 8) {
-      println("SCALEUNI32K token totals outside [n_words, n_symbols]")
-      failed = true
-    }
-    if (tTrain > 600) { println("SCALEUNI32K train wall red"); failed = true }
-    if (tApply > 240) { println("SCALEUNI32K apply wall red"); failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(tot._1 == nOcc && tot._2 >= nOcc && tot._2 <= nOcc * 8,
+      "SCALEUNI32K token totals outside [n_words, n_symbols]")
+    c.check(tTrain <= 600, "SCALEUNI32K train wall red")
+    c.check(tApply <= 240, "SCALEUNI32K apply wall red")
   }
 
   /** Heavy-query 10× tier (`runMain graft.ScaleSmoke heavy10x`), r9
@@ -2589,16 +2112,9 @@ object ScaleSmoke {
     * copies (banded pair mining, codec-bound). Fails (exit 1) if any
     * 10× wall exceeds 15× + 10 s of its 1× wall — a quadratic plan
     * lands at ~100×. */
-  private def heavy10x(): Unit = {
+  private def heavy10x(c: Ctx): Unit = {
     import graft.ext.{Dedup, Multimodal, TextAnalysis}
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     implicit val sp: SparkSession = spark
     import spark.implicits._
 
@@ -2613,7 +2129,6 @@ object ScaleSmoke {
 
     def exec(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    var failed = false
     def tier(name: String)(run: Long => Unit): Unit = {
       val walls = Seq(5000L, 50000L).map { n =>
         val t0 = System.nanoTime()
@@ -2623,9 +2138,7 @@ object ScaleSmoke {
       val ratio = walls(1) / math.max(walls(0), 0.001)
       println(f"SCALEHEAVY $name%-16s 5k=${walls(0)}%6.1f s  " +
         f"50k=${walls(1)}%6.1f s  ratio=$ratio%5.1f")
-      if (walls(1) > 15 * walls(0) + 10) {
-        println(s"SCALEHEAVY $name super-linear wall"); failed = true
-      }
+      c.growth(s"SCALEHEAVY $name", walls(0), walls(1), 15, 10)
     }
 
     tier("text_lm_score") { n =>
@@ -2639,20 +2152,7 @@ object ScaleSmoke {
     tier("containment") { n =>
       // unique-token fragment/host plants (contain1m construction):
       // candidate volume tracks the planted 1%, not n²
-      val half = n / 2
-      def fragToks(id: org.apache.spark.sql.Column) =
-        transform(sequence(lit(0), lit(11)), j =>
-          concat(lit("w"), xxhash64(id, j)))
-      val hostBase = transform(sequence(lit(0), lit(19)), j =>
-        concat(lit("w"), xxhash64(col("id"), j + 100)))
-      val filler = transform(sequence(lit(0), lit(11)), j =>
-        concat(lit("w"), xxhash64(col("id"), j + 200)))
-      val planted = pmod(col("id") - half, lit(100L)) === 0L
-      val docs = spark.range(n).select(col("id"),
-        when(col("id") < half, array_join(fragToks(col("id")), " "))
-          .otherwise(array_join(concat(hostBase,
-            when(planted, fragToks(col("id") - half)).otherwise(filler)), " "))
-          .as("text")).localCheckpoint(true)
+      val docs = containDocs(spark, n).localCheckpoint(true)
       exec(Dedup.containmentPairs(
         Dedup.hashedShingles(docs, "id", "text", 3), 0.9))
     }
@@ -2707,8 +2207,6 @@ object ScaleSmoke {
       exec(Multimodal.phashPairs(
         Multimodal.audioFps(media, "doc_id", "payload"), maxHamming = 3))
     }
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
   /** Model-in-the-loop curation at scale
@@ -2727,16 +2225,9 @@ object ScaleSmoke {
     *    random 60-of-2000-token soup makes natural j ≥ 0.5 collisions
     *    vanishingly rare), candidate join broadcast, corpus unshuffled.
     */
-  private def qmodel1m(): Unit = {
+  private def qmodel1m(c: Ctx): Unit = {
     import graft.ext.{Dedup, QualityModel}
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
     // LR/DSIR fixture: class 1 (id%2==0) carries markers em0..em9, the
     // rest wm0..wm9, plus 50 shared-soup tokens. Separability must
@@ -2768,7 +2259,6 @@ object ScaleSmoke {
       array_join(transform(sequence(lit(0), lit(59)), j =>
         concat(lit("w"), pmod(xxhash64(col("id"), j), lit(2000L)))), " ")
         .as("text"))
-    var failed = false
 
     def trainAt(n: Long, parts: Int): (QualityModel.LinearModel, Double) = {
       val docs = synthLabeled(n).repartition(parts).localCheckpoint(true)
@@ -2784,10 +2274,9 @@ object ScaleSmoke {
         .select(avg((col("pred").cast("double") === col("y"))
           .cast("double"))).as[Double].head()
       feat.unpersist(true)
-      if (acc < 0.999) {
-        println(f"SCALEQM accuracy $acc%.4f at n=$n — separable corpus " +
-          "not separated"); failed = true
-      }
+      c.check(acc >= 0.999,
+        f"SCALEQM accuracy $acc%.4f at n=$n — separable corpus " +
+          "not separated")
       (m, wall)
     }
     val (m250, t250) = trainAt(250000L, 32)
@@ -2795,16 +2284,13 @@ object ScaleSmoke {
     val (m1b, _) = trainAt(1000000L, 7)
     println(f"SCALEQM lr-train        250k=$t250%6.1f s  1m=$t1m%6.1f s " +
       f"(ratio ${t1m / t250}%.2f)")
-    if (!(m1a.w.toSeq == m1b.w.toSeq && m1a.b == m1b.b)) {
-      println("SCALEQM weights differ across partitionings at 1M " +
-        "— exactness claim broken"); failed = true
-    }
+    c.check(m1a.w.toSeq == m1b.w.toSeq && m1a.b == m1b.b,
+        "SCALEQM weights differ across partitionings at 1M " +
+        "— exactness claim broken")
     if (m250.w.toSeq == m1a.w.toSeq)
       println("SCALEQM note: 250k and 1M models coincide (fine)")
-    if (t1m > 12 * t250 + 10) {
-      println("SCALEQM train scaling red (super-linear)"); failed = true
-    }
-    if (t1m > 300) { println("SCALEQM train wall red"); failed = true }
+    c.growth("SCALEQM train", t250, t1m, 12, 10)
+    c.check(t1m <= 300, "SCALEQM train wall red")
 
     var t0 = System.nanoTime()
     val lab1m = synthLabeled(1000000L).localCheckpoint(true)
@@ -2816,14 +2302,10 @@ object ScaleSmoke {
     val tDsir = (System.nanoTime() - t0) / 1e9
     println(f"SCALEQM dsir-1m         $tDsir%6.1f s " +
       f"(selected=${sel._1} target-class=${sel._2})")
-    if (sel._1 != 200000L) {
-      println("SCALEQM dsir keep count wrong"); failed = true
-    }
-    if (sel._2 != 200000L) {
-      // disjoint vocabularies: every selected doc must be target-class
-      println("SCALEQM dsir selected non-target docs"); failed = true
-    }
-    if (tDsir > 120) { println("SCALEQM dsir wall red"); failed = true }
+    c.check(sel._1 == 200000L, "SCALEQM dsir keep count wrong")
+    // disjoint vocabularies: every selected doc must be target-class
+    c.check(sel._2 == 200000L, "SCALEQM dsir selected non-target docs")
+    c.check(tDsir <= 120, "SCALEQM dsir wall red")
 
     t0 = System.nanoTime()
     val docs1m = synthDocs(1000000L).localCheckpoint(true)
@@ -2839,19 +2321,12 @@ object ScaleSmoke {
     val tDecon = (System.nanoTime() - t0) / 1e9
     println(f"SCALEQM fuzzydecon-1m   $tDecon%6.1f s " +
       f"(pairs=${pairs._1} planted=${pairs._2} minJ=${pairs._3}%.3f)")
-    if (pairs._2 != 5000L) {
-      println("SCALEQM planted leak recall below 5000/5000"); failed = true
-    }
+    c.check(pairs._2 == 5000L, "SCALEQM planted leak recall below 5000/5000")
     if (pairs._1 != pairs._2)
       println(f"SCALEQM note: ${pairs._1 - pairs._2} natural cross " +
         "matches beyond the plant (informational)")
-    if (pairs._3 < 0.8) {
-      println("SCALEQM planted jaccard below 0.8 — edit model wrong")
-      failed = true
-    }
-    if (tDecon > 240) { println("SCALEQM decon wall red"); failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(pairs._3 >= 0.8, "SCALEQM planted jaccard below 0.8 — edit model wrong")
+    c.check(tDecon <= 240, "SCALEQM decon wall red")
   }
 
   /** Seeded global shuffle + packing at scale (`runMain graft.ScaleSmoke
@@ -2861,17 +2336,9 @@ object ScaleSmoke {
     * across input partitionings, (c) scale ≲ linearly, and (d) show the
     * md5 buckets uniformly loaded (max/min bucket token mass ≤ 1.2 at
     * 1M — the no-skewed-bucket-by-construction claim, measured). */
-  private def shuffle1m(): Unit = {
+  private def shuffle1m(c: Ctx): Unit = {
     import graft.ext.Corpus
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     // 5..14 tokens per doc, deterministic
     def synth(n: Long) = spark.range(n).select(col("id").as("doc_id"),
       array_join(transform(
@@ -2893,20 +2360,15 @@ object ScaleSmoke {
         .withColumn("ref_off", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
       val mism = out.join(ref.select(col("doc"), col("ref_off")), "doc")
         .where(col("start_offset") =!= col("ref_off")).count()
-      if (mism != 0L) {
-        println(s"SCALESHUF offsets != single-window reference at $n: $mism")
-        failed = true
-      }
+      c.check(mism == 0L, s"SCALESHUF offsets != single-window reference at $n: $mism")
       t
     }
     val t250 = runAt(250000L, 32)
     val t1m = runAt(1000000L, 32)
     println(f"SCALESHUF wall          250k=$t250%6.1f s  1m=$t1m%6.1f s " +
       f"(ratio ${t1m / t250}%.2f)")
-    if (t1m > 10 * t250 + 10) {
-      println("SCALESHUF scaling red (super-linear)"); failed = true
-    }
-    if (t1m > 120) { println("SCALESHUF wall red"); failed = true }
+    c.growth("SCALESHUF", t250, t1m, 10, 10)
+    c.check(t1m <= 120, "SCALESHUF wall red")
     // partition invariance + bucket balance at 1M
     val a = Corpus.shufflePack(synth(1000000L).repartition(32),
       "doc_id", "text", "s1m", 4096L)
@@ -2917,19 +2379,14 @@ object ScaleSmoke {
       .join(b.select(col("doc"), col("start_offset")), "doc")
       .where(col("_oa") =!= col("start_offset")).count()
     println(s"SCALESHUF partition-invariance mismatches at 1M: $mism")
-    if (mism != 0L) { failed = true }
+    c.check(mism == 0L)
     val balance = a
       .groupBy(substring(col("shuffle_key"), 1, 2).as("_b"))
       .agg(sum(col("n_tokens")).as("_m"))
       .agg((max(col("_m")).cast("double") / min(col("_m")).cast("double"))
         .as("_r")).head().getDouble(0)
     println(f"SCALESHUF bucket max/min token mass at 1M: $balance%.3f")
-    if (balance > 1.2) {
-      println("SCALESHUF md5 buckets skewed — balance claim broken")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(balance <= 1.2, "SCALESHUF md5 buckets skewed — balance claim broken")
   }
 
   /** Kneser–Ney trigram scoring at scale (`runMain graft.ScaleSmoke
@@ -2943,17 +2400,9 @@ object ScaleSmoke {
     * (repetition ⇒ high P ⇒ low NLL — the semantic point of the
     * score); per-doc NLLs BIT-IDENTICAL across partitionings at 1M
     * (rounded-cost + exact-decimal-sum discipline at scale). */
-  private def kn1m(): Unit = {
+  private def kn1m(c: Ctx): Unit = {
     import graft.ext.TextAnalysis
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     def synth(n: Long) = spark.range(n).select(col("id").as("doc_id"),
       array_join(transform(sequence(lit(0), lit(29)), j =>
         concat(lit("w"), pmod(xxhash64(
@@ -2966,25 +2415,22 @@ object ScaleSmoke {
       val out = TextAnalysis.kn3Nll(df, "doc_id", "text").localCheckpoint(true)
       val cnt = out.count()
       val t = (System.nanoTime() - t0) / 1e9
-      if (cnt != n) { println(s"SCALEKN row count $cnt != $n"); failed = true }
+      c.check(cnt == n, s"SCALEKN row count $cnt != $n")
       val planted = out.where(col("doc") % 100 === 0)
         .agg(max(col("kn_nll"))).head().getDouble(0)
       val uniqueMin = out.where(col("doc") % 100 =!= 0)
         .agg(min(col("kn_nll"))).head().getDouble(0)
-      if (!(planted < uniqueMin)) {
-        println(f"SCALEKN planted copies must score lowest: " +
-          f"plantedMax=$planted%.4f uniqueMin=$uniqueMin%.4f"); failed = true
-      }
+      c.check(planted < uniqueMin,
+        f"SCALEKN planted copies must score lowest: " +
+          f"plantedMax=$planted%.4f uniqueMin=$uniqueMin%.4f")
       ((t, Seq.empty))
     }
     val (t250, _) = runAt(250000L, 32)
     val (t1m, _) = runAt(1000000L, 32)
     println(f"SCALEKN wall            250k=$t250%6.1f s  1m=$t1m%6.1f s " +
       f"(ratio ${t1m / t250}%.2f)")
-    if (t1m > 10 * t250 + 10) {
-      println("SCALEKN scaling red (super-linear)"); failed = true
-    }
-    if (t1m > 420) { println("SCALEKN wall red"); failed = true }
+    c.growth("SCALEKN", t250, t1m, 10, 10)
+    c.check(t1m <= 420, "SCALEKN wall red")
     // exactness at scale: per-doc NLL bit-identical across partitionings
     val a = TextAnalysis.kn3Nll(synth(1000000L).repartition(32),
       "doc_id", "text")
@@ -2995,9 +2441,7 @@ object ScaleSmoke {
       .join(b.select(col("doc"), col("kn_nll")), "doc")
       .where(col("_na") =!= col("kn_nll")).count()
     println(s"SCALEKN partition-invariance mismatches at 1M: $mism")
-    if (mism != 0L) { failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(mism == 0L)
   }
 
   /** Kneser-Ney trigram NLL at 10M docs (`runMain graft.ScaleSmoke
@@ -3017,17 +2461,9 @@ object ScaleSmoke {
     * (no sliding neighbor can approach its trigram mass), so it must
     * score strictly lowest. Checks: row conservation, planted ordering,
     * wall ≲ linear 1M → 10M. Needs SPARK_DRIVER_MEM=48g. */
-  private def kn10m(): Unit = {
+  private def kn10m(c: Ctx): Unit = {
     import graft.ext.TextAnalysis
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     def synth(n: Long) = spark.range(n).select(col("id").as("doc_id"),
       array_join(transform(sequence(lit(0), lit(29)), j =>
         concat(lit("w"), pmod(xxhash64(
@@ -3040,26 +2476,21 @@ object ScaleSmoke {
       val out = TextAnalysis.kn3Nll(df, "doc_id", "text").localCheckpoint(true)
       val cnt = out.count()
       val t = (System.nanoTime() - t0) / 1e9
-      if (cnt != n) { println(s"SCALEKN10M row count $cnt != $n"); failed = true }
+      c.check(cnt == n, s"SCALEKN10M row count $cnt != $n")
       val planted = out.where(col("doc") % 100 === 0)
         .agg(max(col("kn_nll"))).head().getDouble(0)
       val uniqueMin = out.where(col("doc") % 100 =!= 0)
         .agg(min(col("kn_nll"))).head().getDouble(0)
-      if (!(planted < uniqueMin)) {
-        println(f"SCALEKN10M planted copies must score lowest: " +
-          f"plantedMax=$planted%.4f uniqueMin=$uniqueMin%.4f"); failed = true
-      }
+      c.check(planted < uniqueMin,
+        f"SCALEKN10M planted copies must score lowest: " +
+          f"plantedMax=$planted%.4f uniqueMin=$uniqueMin%.4f")
       t
     }
     val t1m = runAt(1000000L, 32)
     val t10m = runAt(10000000L, 64)
     println(f"SCALEKN10M wall         1m=$t1m%6.1f s  10m=$t10m%6.1f s " +
       f"(ratio ${t10m / t1m}%.2f)")
-    if (t10m > 12 * t1m + 30) {
-      println("SCALEKN10M scaling red (super-linear)"); failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.growth("SCALEKN10M", t1m, t10m, 12, 30)
   }
 
   /** SemDeDup at 10M vectors (`runMain graft.ScaleSmoke semdedup10m`) —
@@ -3086,17 +2517,9 @@ object ScaleSmoke {
     * 1M exact 55.9 s ≡ 1M banded 55.5 s (0 keep mismatches), 10M banded
     * 587 s — 10.6× wall for 10× rows while the implicit pair mass grew
     * ~100× (12.7G projected); planted accounting exact at both scales. */
-  private def semdedup10m(): Unit = {
+  private def semdedup10m(c: Ctx): Unit = {
     import graft.ext.Kmeans
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     val kA = 4096
     def synthVecs(n: Long) = spark.range(n).select(col("id").as("vec_id"),
       transform(sequence(lit(0), lit(63)), j => {
@@ -3117,10 +2540,8 @@ object ScaleSmoke {
       val extra = dropped.where(pmod(col("vec_id"), lit(100L)) =!= 1L).count()
       println(s"SCALESEMDEDUP10M $tag drops=$nDrop (planted=$twins " +
         s"extra=$extra wrongKeeper=$wrongKeeper)")
-      if (nDrop != twins || extra != 0L || wrongKeeper != 0L) {
-        println(s"SCALESEMDEDUP10M $tag planted accounting red")
-        failed = true
-      }
+      c.check(nDrop == twins && extra == 0L && wrongKeeper == 0L,
+        s"SCALESEMDEDUP10M $tag planted accounting red")
     }
     // --- 1M: exact vs banded, identical decisions ---
     val v1 = synthVecs(1000000L).repartition(32).localCheckpoint(true)
@@ -3140,7 +2561,7 @@ object ScaleSmoke {
       .where(col("_ke") =!= col("keep")).count()
     println(s"SCALESEMDEDUP10M 1m keep-decision mismatches exact vs " +
       s"banded: $mism")
-    if (mism != 0L) { failed = true }
+    c.check(mism == 0L)
     // --- 10M: banded only; project the exact path's pair mass ---
     val v10 = synthVecs(10000000L).repartition(64).localCheckpoint(true)
     t0 = System.nanoTime()
@@ -3164,16 +2585,10 @@ object ScaleSmoke {
     println(f"SCALESEMDEDUP10M exact-path projection at 10m: " +
       f"${projPairs / 1e9}%.1f G intra-cluster pairs " +
       f"(max cluster $maxM) — the crack the banding absorbs")
-    if (maxM > 10L * (10000000L / kA)) {
-      println("SCALESEMDEDUP10M cluster balance red"); failed = true
-    }
+    c.check(maxM <= 10L * (10000000L / kA), "SCALESEMDEDUP10M cluster balance red")
     // banded wall must absorb the ~100x implicit-pair growth: allow
     // ~linear-in-rows plus slack, nothing near the 100x pair mass
-    if (tBanded10 > 20 * tBanded1 + 60) {
-      println("SCALESEMDEDUP10M banded scaling red"); failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(tBanded10 <= 20 * tBanded1 + 60, "SCALESEMDEDUP10M banded scaling red")
   }
 
   /** PageRank at scale (`runMain graft.ScaleSmoke pagerank1m`):
@@ -3192,17 +2607,9 @@ object ScaleSmoke {
     *    uniform redistribution, at a wall comparable to the sink-free
     *    run (measured: 13.9 s vs 20.5 s — fewer edges outweigh the
     *    extra per-round mass aggregate). */
-  private def pagerank1m(): Unit = {
+  private def pagerank1m(c: Ctx): Unit = {
     import graft.ext.Graph
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     def edgesAt(n: Long, parts: Int) = {
       val base = spark.range(n).select(col("id").as("src"),
           explode(sequence(lit(1L), lit(1L) + pmod(col("id"), lit(3L)))).as("c"))
@@ -3230,16 +2637,11 @@ object ScaleSmoke {
     val (t1m, top1m, mass1m) = runAt(1000000L, 32)
     println(f"SCALEPR wall            250k=$t250%6.1f s  1m=$t1m%6.1f s " +
       f"(ratio ${t1m / t250}%.2f)  hub=${top1m.head}  mass=$mass1m%.4f")
-    if (top1m.head._1 != 0L || top1m.head._2 < 20.0 / 1000000.0) {
-      println(s"SCALEPR hub rank wrong: ${top1m.head}"); failed = true
-    }
-    if (math.abs(mass1m - 1.0) > 0.01) {
-      println(s"SCALEPR mass drifted: $mass1m"); failed = true
-    }
-    if (t1m > 10 * t250 + 10) {
-      println("SCALEPR scaling red (super-linear)"); failed = true
-    }
-    if (t1m > 240) { println("SCALEPR wall red"); failed = true }
+    c.check(top1m.head._1 == 0L && top1m.head._2 >= 20.0 / 1000000.0,
+      s"SCALEPR hub rank wrong: ${top1m.head}")
+    c.check(math.abs(mass1m - 1.0) <= 0.01, s"SCALEPR mass drifted: $mass1m")
+    c.growth("SCALEPR", t250, t1m, 10, 10)
+    c.check(t1m <= 240, "SCALEPR wall red")
     // exactness at scale: ranks bit-identical across partitionings
     val nodes1m = spark.range(1000000L).select(col("id").as("node"))
     val rA = Graph.pageRank(edgesAt(1000000L, 32), nodes1m, iters = 3,
@@ -3251,7 +2653,7 @@ object ScaleSmoke {
       .join(rB.select(col("node"), col("rank")), "node")
       .where(col("_ra") =!= col("rank")).count()
     println(s"SCALEPR partition-invariance mismatches at 1M: $mism")
-    if (mism != 0L) { failed = true }
+    c.check(mism == 0L)
     // DANGLING STRATUM at 1M (r11 verdict task 2): drop every out-edge
     // of id % 3 == 0 (~333k sinks — the real-crawl regime); canonical
     // redistribution must conserve total mass within per-node grid
@@ -3269,18 +2671,9 @@ object ScaleSmoke {
       "left_anti").count()
     println(f"SCALEPR dangling 1m wall=$tD%6.1f s  mass=$massD%.6f  " +
       s"sinks=$nDang")
-    if (math.abs(massD - 1.0) > 0.01) {
-      println(s"SCALEPR dangling mass drifted: $massD"); failed = true
-    }
-    if (nDang < 300000L) {
-      println(s"SCALEPR dangling stratum too small: $nDang"); failed = true
-    }
-    if (tD > 3 * t1m + 30) {
-      println("SCALEPR dangling wall red (mass aggregate too expensive)")
-      failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(math.abs(massD - 1.0) <= 0.01, s"SCALEPR dangling mass drifted: $massD")
+    c.check(nDang >= 300000L, s"SCALEPR dangling stratum too small: $nDang")
+    c.check(tD <= 3 * t1m + 30, "SCALEPR dangling wall red (mass aggregate too expensive)")
   }
 
   /** Uncontended native-vs-HOF serving-assignment measurement
@@ -3290,26 +2683,11 @@ object ScaleSmoke {
     * (the first recording ran under sbt-test contention). Asserts the
     * two formulations agree on every row of the 1M corpus (cluster AND
     * 6-dp dist2) before trusting either wall. */
-  private def kmhof(): Unit = {
+  private def kmhof(c: Ctx): Unit = {
     import graft.ext.Kmeans
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     val kA = 32
-    def synthVecs(n: Long) = spark.range(n).select(
-      col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), j =>
-        pmod(xxhash64(pmod(col("id"), lit(kA.toLong)), j), lit(1000L))
-          .cast("double") / 1000.0 +
-        pmod(xxhash64(col("id"), j, lit(7)), lit(100L)).cast("double")
-          / 10000.0).as("embedding"))
-    val corpus = synthVecs(1000000L).repartition(32).localCheckpoint(true)
+    val corpus = clusteredVecs(spark, 1000000L, kA).repartition(32).localCheckpoint(true)
     val m = Kmeans.trainFast(corpus, "vec_id", "embedding", k = kA, iters = 1)
     // force the argmin per row: count() would let Catalyst prune the
     // assignment expression entirely (first measurement did exactly
@@ -3329,14 +2707,10 @@ object ScaleSmoke {
       .join(Kmeans.assignServingHof(corpus, "vec_id", "embedding", m), "vec_id")
       .where(col("_cn") =!= col("cluster") || col("_dn") =!= col("dist2"))
       .count()
-    if (mism != 0L) {
-      println(s"SCALEKMHOF formulations disagree on $mism rows"); failed = true
-    }
+    c.check(mism == 0L, s"SCALEKMHOF formulations disagree on $mism rows")
     if (tH <= tN) {
       println("SCALEKMHOF note: HOF not slower — ratio claim needs revisit")
     }
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
   /** k-means + SemDeDup at scale (`runMain graft.ScaleSmoke kmeans1m`).
@@ -3359,34 +2733,19 @@ object ScaleSmoke {
     *    with every copy's keeper being its original (centroid-distance
     *    tie breaks to the lower id).
     */
-  private def kmeans1m(): Unit = {
+  private def kmeans1m(c: Ctx): Unit = {
     import graft.ext.Kmeans
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
-    var failed = false
 
     // kA anchors in [0,1)^64 (hash-derived, pairwise distance ~ sqrt(d/6)
     // ≈ 3.3), jitter ±0.005 — separation ≫ jitter, so Lloyd converges in
     // one round and purity is exact. id % kA == anchor; ids 0..kA-1 seed
     // one cluster per anchor IN ORDER, so cluster index == anchor id.
     val kA = 32
-    def synthVecs(n: Long) = spark.range(n).select(
-      col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), j =>
-        pmod(xxhash64(pmod(col("id"), lit(kA.toLong)), j), lit(1000L))
-          .cast("double") / 1000.0 +
-        pmod(xxhash64(col("id"), j, lit(7)), lit(100L)).cast("double")
-          / 10000.0).as("embedding"))
 
     def trainAt(n: Long, parts: Int): (Kmeans.Model, Double) = {
-      val df = synthVecs(n).repartition(parts).localCheckpoint(true)
+      val df = clusteredVecs(spark, n, kA).repartition(parts).localCheckpoint(true)
       val t0 = System.nanoTime()
       val m = Kmeans.trainFast(df, "vec_id", "embedding", k = kA, iters = 3)
       ((m, (System.nanoTime() - t0) / 1e9))
@@ -3396,33 +2755,28 @@ object ScaleSmoke {
     val (m1b, _) = trainAt(1000000L, 7)
     println(f"SCALEKM train           250k=$t250%6.1f s  1m=$t1m%6.1f s " +
       f"(ratio ${t1m / t250}%.2f)")
-    if (!(m1a.cents.map(_.toSeq).toSeq == m1b.cents.map(_.toSeq).toSeq)) {
-      println("SCALEKM centroids differ across partitionings at 1M " +
-        "— exactness claim broken"); failed = true
-    }
+    c.check(m1a.cents.map(_.toSeq).toSeq == m1b.cents.map(_.toSeq).toSeq,
+        "SCALEKM centroids differ across partitionings at 1M " +
+        "— exactness claim broken")
     if (m250.cents.map(_.toSeq).toSeq != m1a.cents.map(_.toSeq).toSeq)
       println("SCALEKM note: 250k and 1M centroids differ (fine — " +
         "different corpora)")
-    if (t1m > 12 * t250 + 10) {
-      println("SCALEKM train scaling red (super-linear)"); failed = true
-    }
-    if (t1m > 180) { println("SCALEKM train wall red"); failed = true }
+    c.growth("SCALEKM train", t250, t1m, 12, 10)
+    c.check(t1m <= 180, "SCALEKM train wall red")
 
     var t0 = System.nanoTime()
-    val impure = Kmeans.assignServing(synthVecs(1000000L), "vec_id",
+    val impure = Kmeans.assignServing(clusteredVecs(spark, 1000000L, kA), "vec_id",
         "embedding", m1a)
       .where(col("cluster") =!= pmod(col("vec_id"), lit(kA.toLong)))
       .count()
     val tAssign = (System.nanoTime() - t0) / 1e9
     println(f"SCALEKM assign-1m       $tAssign%6.1f s (impure=$impure)")
-    if (impure != 0L) {
-      println("SCALEKM assignment missed the planted anchors"); failed = true
-    }
-    if (tAssign > 60) { println("SCALEKM assign wall red"); failed = true }
+    c.check(impure == 0L, "SCALEKM assignment missed the planted anchors")
+    c.check(tAssign <= 60, "SCALEKM assign wall red")
 
     // SemDeDup at fixed cluster size s ≈ N/k: 1% planted exact copies
     def semAt(n: Long, k: Int): (Long, Long, Long, Double) = {
-      val base = synthVecs(n)
+      val base = clusteredVecs(spark, n, kA)
       val copies = base.where(col("vec_id") % 100 === 0L)
         .select((col("vec_id") + 10000000L).as("vec_id"), col("embedding"))
       val all = base.unionByName(copies).localCheckpoint(true)
@@ -3441,21 +2795,14 @@ object ScaleSmoke {
     val (rows100, keep100, planted100, tSem100) = semAt(100000L, 316)
     println(f"SCALEKM semdedup        25k=$tSem25%6.1f s  100k=$tSem100%6.1f s " +
       f"(ratio ${tSem100 / tSem25}%.2f)")
-    if (rows25 != 25250L || keep25 != 25000L || planted25 != 250L) {
-      println(s"SCALEKM semdedup 25k accounting wrong: " +
-        s"rows=$rows25 keep=$keep25 planted=$planted25"); failed = true
-    }
-    if (rows100 != 101000L || keep100 != 100000L || planted100 != 1000L) {
-      println(s"SCALEKM semdedup 100k accounting wrong: " +
-        s"rows=$rows100 keep=$keep100 planted=$planted100"); failed = true
-    }
-    if (tSem100 > 10 * tSem25 + 10) {
-      println("SCALEKM semdedup scaling red (super-linear at fixed " +
-        "cluster size)"); failed = true
-    }
-    if (tSem100 > 240) { println("SCALEKM semdedup wall red"); failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(rows25 == 25250L && keep25 == 25000L && planted25 == 250L,
+        s"SCALEKM semdedup 25k accounting wrong: " +
+        s"rows=$rows25 keep=$keep25 planted=$planted25")
+    c.check(rows100 == 101000L && keep100 == 100000L && planted100 == 1000L,
+        s"SCALEKM semdedup 100k accounting wrong: " +
+        s"rows=$rows100 keep=$keep100 planted=$planted100")
+    c.growth("SCALEKM semdedup", tSem25, tSem100, 10, 10)
+    c.check(tSem100 <= 240, "SCALEKM semdedup wall red")
   }
 
   /** Composed-pipeline tier (`runMain graft.ScaleSmoke pipeline1m`) —
@@ -3477,17 +2824,9 @@ object ScaleSmoke {
     *    BIT-IDENTICAL across partitionings at 1M — the composed
     *    end-to-end determinism claim (every stage decision replayable)
     *    measured at scale. */
-  private def pipeline1m(): Unit = {
+  private def pipeline1m(c: Ctx): Unit = {
     import graft.ext.{CurationPipeline, QualityModel}
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     // 1 + id%4 sentences of 20 soup words + '.', one per line; lorem /
     // brace strata planted on id residues; sources skewed via id%16
     def synthDocs(n: Long) = spark.range(n).select(
@@ -3563,17 +2902,11 @@ object ScaleSmoke {
     // every stage cuts and none empties (ingest>urlDeduped>cleaned>
     // deduped>gated>scoredKeep>ranked>decon>mixed; packed == mixed rows)
     val strict = f1m.init
-    if (!strict.zip(strict.tail).forall { case (a, b) => a > b && b > 0 }) {
-      println("SCALEPIPE funnel red (a stage emptied or cut nothing)")
-      failed = true
-    }
-    if (f1m.last != f1m(8)) {
-      println("SCALEPIPE pack row drift red"); failed = true
-    }
-    if (t1m > 8 * t250 + 30) {
-      println("SCALEPIPE scaling red (super-linear)"); failed = true
-    }
-    if (t1m > 600) { println("SCALEPIPE wall red"); failed = true }
+    c.check(strict.zip(strict.tail).forall { case (a, b) => a > b && b > 0 },
+      "SCALEPIPE funnel red (a stage emptied or cut nothing)")
+    c.check(f1m.last == f1m(8), "SCALEPIPE pack row drift red")
+    c.growth("SCALEPIPE", t250, t1m, 8, 30)
+    c.check(t1m <= 600, "SCALEPIPE wall red")
     // composed end-to-end determinism across partitionings at 1M
     val (_, _, packedB) = runAt(1000000L, 7)
     val mism = packedA.select(col("doc"), col("start_offset").as("_oa"),
@@ -3585,9 +2918,7 @@ object ScaleSmoke {
     val rowsA = packedA.count(); val rowsB = packedB.count()
     println(s"SCALEPIPE partition-invariance at 1M: rows $rowsA vs $rowsB, " +
       s"offset/shard mismatches $mism")
-    if (rowsA != rowsB || mism != 0L) { failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(rowsA == rowsB && mism == 0L)
   }
 
   /** Production-merge-count BPE tier (`runMain graft.ScaleSmoke bpe32k
@@ -3601,44 +2932,21 @@ object ScaleSmoke {
     * the same m — merge-set overlap and applied-token-total drift, the
     * honesty number for the batched approximation (within a batch,
     * pair counts are not refreshed between selections). */
-  private def bpe32k(args: Seq[String]): Unit = {
+  private def bpe32k(c: Ctx): Unit = {
     import graft.ext.Bpe
-    val m = args.headOption.map(_.toInt).getOrElse(32000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val m = c.args.headOption.map(_.toInt).getOrElse(32000)
+    import c.spark
     import spark.implicits._
-    var failed = false
-    // word text = `len` base-4 digits of the word id, spelled a..d —
-    // 12 symbols x 50k types gives ~550k distinct merge-tree nodes, so
-    // a 32k merge budget cannot exhaust the pair supply
-    def wordExpr(wid: org.apache.spark.sql.Column, len: Int) =
-      concat_ws("", transform(sequence(lit(0), lit(len - 1)), d =>
-        element_at(array(lit("a"), lit("b"), lit("c"), lit("d")),
-          (pmod(floor(wid.cast("double") / pow(lit(4.0), d.cast("double")))
-            .cast("long"), lit(4L)) + 1).cast("int"))))
-    def synth(n: Long, vocab: Long, len: Int, words: Int) =
-      spark.range(n).select(col("id"),
-          array_join(transform(sequence(lit(0), lit(words - 1)), j =>
-            wordExpr(pmod(xxhash64(col("id"), j), lit(vocab)), len)), " ")
-            .as("text"))
-        .localCheckpoint(true)
-    val docs = synth(250000L, 50000L, 12, 40)
+    // 12-symbol words x 50k types gives ~550k distinct merge-tree nodes,
+    // so a 32k merge budget cannot exhaust the pair supply
+    val docs = base4Docs(spark, 250000L, 50000L, 12, 40)
     var t0 = System.nanoTime()
     val merges = Bpe.trainMergesBatched(docs, "text", m = m,
       batchSize = 128)
     val tTrain = (System.nanoTime() - t0) / 1e9
     println(f"SCALEBPE32 train        $tTrain%7.1f s (${merges.length} " +
       s"merges of $m at B=128)")
-    if (merges.length < m) {
-      println("SCALEBPE32 merge budget not reached (pair supply exhausted)")
-      failed = true
-    }
+    c.check(merges.length >= m, "SCALEBPE32 merge budget not reached (pair supply exhausted)")
     t0 = System.nanoTime()
     val tot = Bpe.tokenCountsTyped(docs, "id", "text", merges, batch = 64)
       .agg(sum(col("n_words")).cast("long"),
@@ -3648,21 +2956,16 @@ object ScaleSmoke {
     val nOcc = 250000L * 40L
     println(f"SCALEBPE32 apply-typed  $tApply%7.1f s " +
       f"(words=${tot._1} tokens=${tot._2} symbols=${nOcc * 12})")
-    if (tot._1 != nOcc || tot._2 < nOcc || tot._2 > nOcc * 12) {
-      println("SCALEBPE32 token totals outside [n_words, n_symbols]")
-      failed = true
-    }
+    c.check(tot._1 == nOcc && tot._2 >= nOcc && tot._2 <= nOcc * 12,
+      "SCALEBPE32 token totals outside [n_words, n_symbols]")
     // more merges must never inflate the token total
     val totQ = Bpe.tokenCountsTyped(docs, "id", "text",
         merges.take(m / 8), batch = 64)
       .agg(sum(col("bpe_tokens")).cast("long")).as[Long].head()
     println(f"SCALEBPE32 tokens@${m / 8}%d  $totQ%d vs @$m%d ${tot._2}%d")
-    if (tot._2 > totQ) {
-      println("SCALEBPE32 more merges inflated the token total")
-      failed = true
-    }
-    if (tTrain > 1500) { println("SCALEBPE32 train wall red"); failed = true }
-    if (tApply > 600) { println("SCALEBPE32 apply wall red"); failed = true }
+    c.check(tot._2 <= totQ, "SCALEBPE32 more merges inflated the token total")
+    c.check(tTrain <= 1500, "SCALEBPE32 train wall red")
+    c.check(tApply <= 600, "SCALEBPE32 apply wall red")
     // batch-size equivalence vs B=1 (= sequential argmax order) at
     // m=256 on a small corpus. The asserted point is B=16 — batch/budget
     // 6%, an order of magnitude COARSER than the production 128/32000 =
@@ -3670,7 +2973,7 @@ object ScaleSmoke {
     // (batch = 25% of budget — far past any sane operating point) is
     // reported unasserted as the stress figure: within a batch pair
     // counts aren't refreshed, so drift grows with batch/budget.
-    val small = synth(20000L, 5000L, 8, 40)
+    val small = base4Docs(spark, 20000L, 5000L, 8, 40)
     val mA = Bpe.trainMergesBatched(small, "text", m = 256, batchSize = 1)
     def toks(ms: Seq[(String, String)]) =
       Bpe.tokenCountsTyped(small, "id", "text", ms)
@@ -3683,13 +2986,9 @@ object ScaleSmoke {
       val drift = 100.0 * (tB - tA).abs / tA
       println(f"SCALEBPE32 B-equiv m=256 B=$b%d: overlap $overlap%d/256, " +
         f"tokens B1=$tA%d B$b%d=$tB%d (drift $drift%.2f%%)")
-      if (b == 16 && drift > 3.0) {
-        println("SCALEBPE32 batched training drifted >3% at batch/budget 6%")
-        failed = true
-      }
+      c.check(b != 16 || drift <= 3.0,
+        "SCALEBPE32 batched training drifted >3% at batch/budget 6%")
     }
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
   /** Large-k k-means tier (`runMain graft.ScaleSmoke kmbig`) — the r11
@@ -3706,26 +3005,11 @@ object ScaleSmoke {
     *    process, so the wire win doesn't show here — the claim this
     *    tier pins is bit-identity + no regression; the shipping-cost
     *    argument is structural: O(1) task binaries vs O(k·d)). */
-  private def kmbig(): Unit = {
+  private def kmbig(c: Ctx): Unit = {
     import graft.ext.Kmeans
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     val kA = 4096
-    def synthVecs(n: Long) = spark.range(n).select(
-      col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), j =>
-        pmod(xxhash64(pmod(col("id"), lit(kA.toLong)), j), lit(1000L))
-          .cast("double") / 1000.0 +
-        pmod(xxhash64(col("id"), j, lit(7)), lit(100L)).cast("double")
-          / 10000.0).as("embedding"))
-    val corpus = synthVecs(1000000L).repartition(32).localCheckpoint(true)
+    val corpus = clusteredVecs(spark, 1000000L, kA).repartition(32).localCheckpoint(true)
     // one Lloyd round both ways: centroids must match bit-for-bit
     var t0 = System.nanoTime()
     val mRef = Kmeans.trainFast(corpus, "vec_id", "embedding", k = kA,
@@ -3740,7 +3024,7 @@ object ScaleSmoke {
         java.lang.Double.doubleToLongBits(mBc.cents(c)(j)))).sum
     println(f"SCALEKMBIG train k=4096 ref=$tRef%6.1f s  bcast=$tBc%6.1f s" +
       f"  centroid-bit mismatches=$centMism%d")
-    if (centMism != 0) { println("SCALEKMBIG centroids diverged"); failed = true }
+    c.check(centMism == 0, "SCALEKMBIG centroids diverged")
     // serving walls: force the argmin via output sums (count() prunes it)
     def wall(df: => org.apache.spark.sql.DataFrame): (Double, (Any, Any)) = {
       val s0 = System.nanoTime()
@@ -3754,12 +3038,8 @@ object ScaleSmoke {
       Kmeans.assignServingBcast(corpus, "vec_id", "embedding", bc))
     println(f"SCALEKMBIG serve 1M x k=4096: ref=$tSr%6.1f s  " +
       f"bcast=$tSb%6.1f s  sums ref=$sumsR bcast=$sumsB")
-    if (sumsR != sumsB) {
-      println("SCALEKMBIG serving outputs diverged"); failed = true
-    }
-    if (tSb > 2 * tSr + 10) {
-      println("SCALEKMBIG broadcast serving regressed"); failed = true
-    }
+    c.check(sumsR == sumsB, "SCALEKMBIG serving outputs diverged")
+    c.check(tSb <= 2 * tSr + 10, "SCALEKMBIG broadcast serving regressed")
     // row-level agreement on a slice (sums can mask compensating swaps)
     val slice = corpus.where(col("vec_id") < 20000L).localCheckpoint(true)
     val aR = Kmeans.assignServing(slice, "vec_id", "embedding", mRef)
@@ -3770,9 +3050,7 @@ object ScaleSmoke {
       .count()
     bc.unpersist(false)
     println(s"SCALEKMBIG row-level mismatches on 20k slice: $mism")
-    if (mism != 0L) { failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(mism == 0L)
   }
 
   /** IVF index DRIFT telemetry tier (`runMain graft.ScaleSmoke
@@ -3797,18 +3075,10 @@ object ScaleSmoke {
     * (rebuild on the grown corpus) after the last wave and asserts the
     * telemetry recovers — proving the signal is actionable, not just
     * recorded. */
-  private def ivfdrift(): Unit = {
+  private def ivfdrift(c: Ctx): Unit = {
     import graft.ext.Similarity
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    import c.spark
     import spark.implicits._
-    var failed = false
     val nWave = sys.env.getOrElse("SPARK_GRAFT_IVFDRIFT_N", "250000").toLong
     val nLists = 64; val k = 10; val nProbe = 4
     // wave 0 = build corpus (tight 64-anchor clusters, jitter 0.02);
@@ -3939,10 +3209,8 @@ object ScaleSmoke {
     }
     // the drift must actually REGISTER in the telemetry (otherwise the
     // retrain trigger can never fire on real drift)
-    if (lastMean / mean0 < 1.2 && lastRec > 0.98 && lastFrac < 1.5 * frac0) {
-      println("SCALEIVFDRIFT drift fixture too weak — no signal moved")
-      failed = true
-    }
+    c.check(lastMean / mean0 >= 1.2 || lastRec <= 0.98 || lastFrac >= 1.5 * frac0,
+      "SCALEIVFDRIFT drift fixture too weak — no signal moved")
     // RETRAIN at the documented threshold: rebuild on the grown corpus,
     // telemetry must recover
     val grown = spark.read.parquet(s"$path/corpus")
@@ -3962,13 +3230,9 @@ object ScaleSmoke {
     val recR = recallAt(q4)
     println(f"SCALEIVFDRIFT retrain ($tRetrain%5.1f s)  recall@10=$recR%5.3f" +
       f"  scan-frac=$fracR%6.3f (was recall=$lastRec%5.3f frac=$lastFrac%6.3f)")
-    if (recR < lastRec - 0.001 || fracR > lastFrac * 1.05) {
-      println("SCALEIVFDRIFT retrain did not recover the telemetry")
-      failed = true
-    }
-    if (recR < 0.95) {
-      println("SCALEIVFDRIFT post-retrain recall red"); failed = true
-    }
+    c.check(recR >= lastRec - 0.001 && fracR <= lastFrac * 1.05,
+      "SCALEIVFDRIFT retrain did not recover the telemetry")
+    c.check(recR >= 0.95, "SCALEIVFDRIFT post-retrain recall red")
     // the tier owns the /tmp index path (1.25M vectors + rebuilt copy,
     // ~1 GB) — delete it before stopping (r12 ADVICE: leaked per run)
     try {
@@ -3979,8 +3243,6 @@ object ScaleSmoke {
       }
       rmTree(new java.io.File(path))
     } catch { case _: Throwable => () }
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
   /** Trained-langid tier (`runMain graft.ScaleSmoke langid1m`): the NB
@@ -4010,17 +3272,9 @@ object ScaleSmoke {
     * that makes min-wise sampling shard-parallel and stream-mergeable at
     * 100 TB — top-k(A ∪ B) == top-k(top-k(A) ∪ top-k(B)), so shard-local
     * heaps compose without ever sorting the corpus. */
-  private def sample1m(): Unit = {
+  private def sample1m(c: Ctx): Unit = {
     import graft.ext.Corpus
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     val n = 1000000L
     val k = 1000
     val docs = spark.range(n).select(col("id").as("doc_id"),
@@ -4033,19 +3287,15 @@ object ScaleSmoke {
     }
     // uniform: wall, plan, partitioning invariance
     val uni = Corpus.uniformSampleK(docs, "doc_id", k)
-    if (!uni.queryExecution.sparkPlan.toString
-        .contains("TakeOrderedAndProject")) {
-      println("SCALESAMPLE uniform plan lost TakeOrderedAndProject"); failed = true
-    }
+    c.check(uni.queryExecution.sparkPlan.toString
+        .contains("TakeOrderedAndProject"),
+      "SCALESAMPLE uniform plan lost TakeOrderedAndProject")
     val (uniRows, tUni) = timed(uni.collect())
     val uniIds = uniRows.map(_.getLong(0)).toSet
     println(f"SCALESAMPLE uniform top-$k of ${n / 1000000}M: $tUni%.1f s")
     val uniIds7 = Corpus.uniformSampleK(docs.repartition(7), "doc_id", k)
       .collect().map(_.getLong(0)).toSet
-    if (uniIds != uniIds7) {
-      println("SCALESAMPLE uniform kept set not partitioning-invariant")
-      failed = true
-    }
+    c.check(uniIds == uniIds7, "SCALESAMPLE uniform kept set not partitioning-invariant")
     // mergeability: shard-local top-k heaps compose to the global top-k
     val lo = Corpus.uniformSampleK(docs.where(col("doc_id") < n / 2),
       "doc_id", k)
@@ -4054,11 +3304,9 @@ object ScaleSmoke {
     val mergedIds = Corpus.uniformSampleK(lo.unionByName(hi)
         .drop("sample_key"), "doc_id", k)
       .collect().map(_.getLong(0)).toSet
-    if (mergedIds != uniIds) {
-      println("SCALESAMPLE shard-merge law violated: " +
-        s"${(mergedIds -- uniIds).size}/${(uniIds -- mergedIds).size} diffs")
-      failed = true
-    } else println("SCALESAMPLE shard-merge law holds: " +
+    c.check(mergedIds == uniIds, "SCALESAMPLE shard-merge law violated: " +
+      s"${(mergedIds -- uniIds).size}/${(uniIds -- mergedIds).size} diffs")
+    if (mergedIds == uniIds) println("SCALESAMPLE shard-merge law holds: " +
       "top-k(A∪B) == top-k(top-k(A) ∪ top-k(B))")
     // weighted: wall, invariance, and the length bias it exists for
     val (wRows, tW) = timed(
@@ -4067,16 +3315,11 @@ object ScaleSmoke {
     val wIds = wRows.map(_.getLong(0)).toSet
     val wIds5 = Corpus.weightedSampleK(docs.repartition(5), "doc_id",
       "n_chars", k).collect().map(_.getLong(0)).toSet
-    if (wIds != wIds5) {
-      println("SCALESAMPLE weighted kept set not partitioning-invariant")
-      failed = true
-    }
+    c.check(wIds == wIds5, "SCALESAMPLE weighted kept set not partitioning-invariant")
     val wMean = wRows.map(_.getLong(1)).sum.toDouble / wRows.length
     val uMean = uniRows.map(_.getLong(1)).sum.toDouble / uniRows.length
     println(f"SCALESAMPLE mean weight: weighted $wMean%.0f vs uniform $uMean%.0f")
-    if (wMean <= uMean) {
-      println("SCALESAMPLE weighted sample shows no weight bias"); failed = true
-    }
+    c.check(wMean > uMean, "SCALESAMPLE weighted sample shows no weight bias")
     // hash split at 1M: one row-local projection; shares within 4 sigma
     val (splits, tS) = timed(Corpus.hashSplit(docs, "doc_id")
       .groupBy(col("split")).count().collect()
@@ -4085,28 +3328,16 @@ object ScaleSmoke {
     def within(name: String, p: Double): Unit = {
       val got = splits.getOrElse(name, 0L).toDouble
       val sigma = math.sqrt(n * p * (1 - p))
-      if (math.abs(got - n * p) > 4 * sigma) {
-        println(f"SCALESAMPLE $name share off: $got%.0f vs ${n * p}%.0f " +
+      c.check(math.abs(got - n * p) <= 4 * sigma,
+        f"SCALESAMPLE $name share off: $got%.0f vs ${n * p}%.0f " +
           f"(4 sigma = ${4 * sigma}%.0f)")
-        failed = true
-      }
     }
     within("train", 0.90); within("validation", 0.05); within("test", 0.05)
-    spark.stop()
-    if (failed) sys.exit(1)
   }
 
-  private def ranks1m(): Unit = {
+  private def ranks1m(c: Ctx): Unit = {
     import graft.ext.Ranks
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     val n = 1000000L
     val nParts = 32
     // heavy ties (3-dp grid scores) make the tiebreak column do real work
@@ -4122,10 +3353,7 @@ object ScaleSmoke {
     val even = n / nParts
     println(s"SCALERANKS max rank-stage task input: $maxTask rows " +
       f"(even share $even, ratio ${maxTask.toDouble / even}%.2f)")
-    if (maxTask > 3 * even) {
-      println("SCALERANKS rank-stage task input red (not O(n/nParts))")
-      failed = true
-    }
+    c.check(maxTask <= 3 * even, "SCALERANKS rank-stage task input red (not O(n/nParts))")
     // the distributed median pick must equal the single-task reference
     def medianOf(ranked: org.apache.spark.sql.DataFrame): (Double, Double) = {
       val lo = n / 2 // floor((n-1)/2)+1 with n even = n/2
@@ -4143,7 +3371,7 @@ object ScaleSmoke {
     val tRef = (System.nanoTime() - t1) / 1e9
     println(f"SCALERANKS median pick: dist=$tDist%.1f s single-task=$tRef%.1f s " +
       s"values $distMed vs $refMed")
-    if (distMed != refMed) { println("SCALERANKS median mismatch"); failed = true }
+    c.check(distMed == refMed, "SCALERANKS median mismatch")
     // skewed-stratum regime: one language is 90% of the corpus — a
     // Window.partitionBy(lang) puts 900k rows in ONE task; the
     // stratified rank stage must stay O(n/nParts)
@@ -4157,9 +3385,7 @@ object ScaleSmoke {
       .agg(max(col("count"))).head().getLong(0)
     println(s"SCALERANKS max stratified task input: $maxStrat rows " +
       f"(ratio ${maxStrat.toDouble / even}%.2f; dominant stratum 900k)")
-    if (maxStrat > 3 * even) {
-      println("SCALERANKS stratified task input red"); failed = true
-    }
+    c.check(maxStrat <= 3 * even, "SCALERANKS stratified task input red")
     val sr = Ranks.stratifiedRowNumber(strat, Seq("lang"), ord, nParts)
     val refS = strat.withColumn("rn",
       row_number().over(org.apache.spark.sql.expressions.Window
@@ -4168,7 +3394,7 @@ object ScaleSmoke {
       .join(refS.select(col("doc"), col("rn").as("_r")), "doc")
       .where(col("rn") =!= col("_r")).count()
     println(s"SCALERANKS stratified rank mismatches vs window: $mism")
-    if (mism != 0L) failed = true
+    c.check(mism == 0L)
     // adaptive fan-out (r13 verdict task 1): with no explicit override
     // the rank stage's task count must TRACK spark.sql.shuffle.partitions
     // — the conf a cluster sizes its exchanges with — and the rank
@@ -4188,14 +3414,8 @@ object ScaleSmoke {
     spark.conf.set("spark.sql.shuffle.partitions", prevConf)
     println(s"SCALERANKS adaptive fan-out: conf=16 -> $p16 tasks, " +
       s"conf=48 -> $p48 tasks; checksums ${c16 == c48}")
-    if (p16 != 16 || p48 != 48) {
-      println("SCALERANKS rank-stage task count does not track the conf")
-      failed = true
-    }
-    if (c16 != c48) {
-      println("SCALERANKS ranks differ across fan-out settings")
-      failed = true
-    }
+    c.check(p16 == 16 && p48 == 48, "SCALERANKS rank-stage task count does not track the conf")
+    c.check(c16 == c48, "SCALERANKS ranks differ across fan-out settings")
     // z-order LAYOUT BUILD under a 90%-skewed dimension (r15 verdict
     // task 7): 90% of rows share b2 bucket 7, so zkeys collide heavily —
     // but the layout's rank pass orders by (zkey, doc_id) and
@@ -4218,9 +3438,7 @@ object ScaleSmoke {
     println(s"SCALERANKS zorder skewed rank-stage max task input: " +
       f"$maxZRank rows (ratio ${maxZRank.toDouble / even}%.2f; " +
       "90% of rows share one b2 bucket)")
-    if (maxZRank > 3 * even) {
-      println("SCALERANKS zorder skewed rank stage red"); failed = true
-    }
+    c.check(maxZRank <= 3 * even, "SCALERANKS zorder skewed rank stage red")
     val nFiles = 64
     val rpf = (n + nFiles - 1) / nFiles
     val staged = Ranks.globalRowNumber(zrows,
@@ -4249,30 +3467,16 @@ object ScaleSmoke {
       f"rows (even $evenW, ratio ${maxWrite.toDouble / evenW}%.2f; " +
       s"max file rows ${fileRows.getLong(0)} == rpf $rpf over " +
       s"${fileRows.getLong(1)} files)")
-    if (fileRows.getLong(0) != rpf) {
-      println("SCALERANKS zorder file rows must be exactly rpf under skew")
-      failed = true
-    }
+    c.check(fileRows.getLong(0) == rpf,
+      "SCALERANKS zorder file rows must be exactly rpf under skew")
     // bins-into-tasks bound: worst task holds a few whole files, never a
     // skewed fraction of the corpus
-    if (maxWrite > 6 * evenW) {
-      println("SCALERANKS zorder write-stage task input red"); failed = true
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(maxWrite <= 6 * evenW, "SCALERANKS zorder write-stage task input red")
   }
 
-  private def langid1m(): Unit = {
+  private def langid1m(c: Ctx): Unit = {
     import graft.ext.TextAnalysis
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     val langArr = array(Seq("en", "de", "es", "fr", "zh").map(lit): _*)
     val markArr = array(Seq("ethereth", "dunderdun", "osolosol",
       "fraisfrai", "zhouzhou").map(lit): _*)
@@ -4299,13 +3503,9 @@ object ScaleSmoke {
     val (t1m, acc1m, outA) = runAt(1000000L, 32)
     println(f"SCALELANGID wall        250k=$t250%6.1f s  1m=$t1m%6.1f s " +
       f"(ratio ${t1m / t250}%.2f)  acc 250k=$acc250%.4f 1m=$acc1m%.4f")
-    if (acc250 < 0.999 || acc1m < 0.999) {
-      println("SCALELANGID accuracy red"); failed = true
-    }
-    if (t1m > 8 * t250 + 30) {
-      println("SCALELANGID scaling red (super-linear)"); failed = true
-    }
-    if (t1m > 600) { println("SCALELANGID wall red"); failed = true }
+    c.check(acc250 >= 0.999 && acc1m >= 0.999, "SCALELANGID accuracy red")
+    c.growth("SCALELANGID", t250, t1m, 8, 30)
+    c.check(t1m <= 600, "SCALELANGID wall red")
     val (_, _, outB) = runAt(1000000L, 7)
     val mism = outA.select(col("doc"), col("pred_lang").as("_pa"),
         col("score").as("_sa"))
@@ -4313,9 +3513,7 @@ object ScaleSmoke {
       .where(col("_pa") =!= col("pred_lang") || col("_sa") =!= col("score"))
       .count()
     println(s"SCALELANGID partition-invariance mismatches at 1M: $mism")
-    if (mism != 0L) { failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(mism == 0L)
   }
 
   /** Water-filled budget fill at 1M docs under 90%-one-language skew
@@ -4333,17 +3531,9 @@ object ScaleSmoke {
     *  - kept set bit-identical across partitionings (32 vs 7) and
     *    equal to the window reference.
     */
-  private def waterfill1m(): Unit = {
+  private def waterfill1m(c: Ctx): Unit = {
     import graft.ext.Corpus
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var failed = false
+    import c.spark
     val n = 1000000L
     val nParts = 32
     val even = n / nParts
@@ -4364,10 +3554,8 @@ object ScaleSmoke {
       col("alloc_tokens") =!= col("cap_tokens")).count()
     println(s"SCALEWATERFILL alloc: budget=$budget allocated=$totAlloc " +
       s"strata=${alloc.count()} satViolations=$satBad")
-    if (totAlloc != budget) {
-      println("SCALEWATERFILL stranded/overspent budget red"); failed = true
-    }
-    if (satBad != 0L) { println("SCALEWATERFILL saturation red"); failed = true }
+    c.check(totAlloc == budget, "SCALEWATERFILL stranded/overspent budget red")
+    c.check(satBad == 0L, "SCALEWATERFILL saturation red")
     // max task input of the fill's range-exchange stage under the skew
     val keyed = docs.withColumn("fill_key",
       Corpus.sampleKey(col("doc_id"), "bfill"))
@@ -4378,10 +3566,7 @@ object ScaleSmoke {
     println(s"SCALEWATERFILL max fill-stage task input: $maxTask rows " +
       f"(even share $even, ratio ${maxTask.toDouble / even}%.2f; " +
       "dominant stratum 900k)")
-    if (maxTask > 3 * even) {
-      println("SCALEWATERFILL fill-stage task input red (not O(n/nParts))")
-      failed = true
-    }
+    c.check(maxTask <= 3 * even, "SCALEWATERFILL fill-stage task input red (not O(n/nParts))")
     def keptOf(parts: Int): org.apache.spark.sql.DataFrame =
       Corpus.waterfillFill(docs, "doc_id", "lang", "n_chars", bp,
           nParts = parts)
@@ -4408,16 +3593,12 @@ object ScaleSmoke {
       f"single-task-window=$tRef%.1f s  kept=$nKept (ref $refN)")
     val mism = kept32.join(ref.withColumnRenamed("cum_tokens", "_c"), "doc_id")
       .where(col("cum_tokens") =!= col("_c")).count()
-    if (nKept != refN || mism != 0L) {
-      println("SCALEWATERFILL kept-set mismatch vs window reference")
-      failed = true
-    }
+    c.check(nKept == refN && mism == 0L,
+      "SCALEWATERFILL kept-set mismatch vs window reference")
     val kept7 = keptOf(7)
     val d1 = kept32.exceptAll(kept7).count()
     val d2 = kept7.exceptAll(kept32).count()
     println(s"SCALEWATERFILL partition-invariance diffs (32 vs 7): ${d1 + d2}")
-    if (d1 + d2 != 0L) { failed = true }
-    spark.stop()
-    if (failed) sys.exit(1)
+    c.check(d1 + d2 == 0L)
   }
 }

@@ -838,14 +838,7 @@ class ExtSpec extends SparkSpec {
     // assignment, wrong probe ordering, a broken nearestLists tie-break —
     // drops planted-neighbor recall well below 0.9; fixture noise cannot,
     // because the neighbor's list is essentially always probed first.
-    val n = 20000L
-    val vecs = spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), i =>
-        ((pmod(xxhash64(when(pmod(col("id"), lit(100L)) === 1L, col("id") - 1)
-            .otherwise(col("id")), i), lit(2001L)) - 1000L).cast("double") / 1000.0)
-          + when(pmod(col("id"), lit(100L)) === 1L,
-              (pmod(xxhash64(col("id"), i, lit(99L)), lit(21L)) - 10L).cast("double") / 1000.0)
-            .otherwise(lit(0.0))).as("embedding")).cache()
+    val vecs = ScaleSmoke.plantedPairVecs(spark, 20000L).cache()
     val queries = vecs.where(pmod(col("vec_id"), lit(100L)) === 1L &&
       col("vec_id") < 5000L)
     val nQueries = queries.count()

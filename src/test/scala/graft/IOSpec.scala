@@ -685,4 +685,17 @@ class IOSpec extends SparkSpec {
     // generous budget loads fine
     assert(SignalIO.loadZip(spark, file, maxBytes = 1L << 20).data.count() > 0)
   }
+
+  test("every graft.ScaleSmoke command in README.md and BASELINE.md names a tier of the harness") {
+    // no session needed: the docs are read as text, the tier table is data
+    val cited = Seq("README.md", "BASELINE.md").flatMap { f =>
+      val text = new String(
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)), "UTF-8")
+      """graft\.ScaleSmoke\s+(\w+)""".r.findAllMatchIn(text)
+        .map(m => f -> m.group(1)).toSeq
+    }
+    assert(cited.nonEmpty, "no graft.ScaleSmoke command found in the docs")
+    val unknown = cited.filterNot { case (_, tier) => ScaleSmoke.tiers.contains(tier) }
+    assert(unknown.isEmpty, s"docs name tiers the harness does not have: $unknown")
+  }
 }
