@@ -73,12 +73,9 @@ object ScaleSmoke {
     "heavy10x" -> Tier(heavy10x),
     "exactann1m" -> Tier(exactann1m),
     "substr1m" -> Tier(substr1m),
-    "bpe1k" -> Tier(bpe1k),
     "unigram250k" -> Tier(unigram250k),
     "unigram32k" -> Tier(unigram32k),
     "zorderinc1m" -> Tier(zorderinc1m),
-    "winappend1m" -> Tier(winappend1m),
-    "pipeidx1m" -> Tier(pipeidx1m),
     // These fixtures are megabytes, so at the DEFAULT 128 MB split /
     // 4 MB open-cost both scales pack every scan into ONE task and a
     // ratio measures serial work growth under frozen parallelism —
@@ -98,8 +95,6 @@ object ScaleSmoke {
     "semdedup10m" -> Tier(semdedup10m),
     "shuffle1m" -> Tier(shuffle1m),
     "pipeline1m" -> Tier(pipeline1m),
-    "bpe32k" -> Tier(bpe32k),
-    "kmbig" -> Tier(kmbig),
     "ivfdrift" -> Tier(ivfdrift),
     "langid1m" -> Tier(langid1m),
     "ranks1m" -> Tier(ranks1m),
@@ -197,7 +192,8 @@ object ScaleSmoke {
     * never materializes a pair join. Measured slopes are recorded in
     * README §scale. */
   private def dedup1m(c: Ctx): Unit = {
-    import graft.ext.{Dedup, Similarity}
+    import graft.ext.Dedup
+    import graft.functions.VectorFunctions
     import c.spark
     import spark.implicits._
 
@@ -233,22 +229,22 @@ object ScaleSmoke {
       val sh = Dedup.hashedShingles(docs, "doc_id", "text", 3).cache()
       record("jaccard-prefix", n,
         occupancy(Dedup.jaccardPrefixes(sh, 0.5), Seq("sh")))
-      record("minhash-bands", n,
-        occupancy(Dedup.minhashBands(
-          Dedup.minhashSignatures(sh, 64), 16, 4), Seq("band", "bandhash")))
       sh.unpersist()
+      // the row-local signature minhashDupPairs bands
+      val sig = docs.select(col("doc_id").as("doc"), Dedup.minhashSignature(
+        Dedup.shingleArray(split(col("text"), " "), 3), 64).as("sig"))
+      record("minhash-bands", n,
+        occupancy(Dedup.minhashBands(sig, 16, 4), Seq("band", "bandhash")))
       val sim = Dedup.simhash64(docs, "doc_id", "text").cache()
       record("simhash-manku-bands", n,
         occupancy(Dedup.simhashBands(sim, 3, 6), Seq("band", "bandkey")))
-      record("simhash-chunk-bands", n,
-        occupancy(Dedup.simhashChunks(sim, 4), Seq("chunk", "chunkval")))
       sim.unpersist()
       // hyperplane LSH with the bits ≈ log2(n)+2 sizing rule
       val bits = (math.ceil(math.log(n.toDouble) / math.log(2.0)) + 2).toInt
       val vecs = plantedPairVecs(spark, n)
-      val sigs = (0 until 8).map(b =>
-        Similarity.hyperplaneSignature(vecs, "vec_id", "embedding", bits, b.toLong)
-          .select(lit(b).as("band"), col("lsh_sig")))
+      val sigs = (0 until 8).map(b => vecs.select(lit(b).as("band"),
+          VectorFunctions.hyperplaneSig(col("embedding"), bits, b.toLong)
+            .as("lsh_sig")))
         .reduce(_ unionByName _)
       record(s"hyperplane-lsh-b$bits", n,
         occupancy(sigs, Seq("band", "lsh_sig")))
@@ -261,11 +257,9 @@ object ScaleSmoke {
       if (cs.size == 2) {
         val ratio = cs(1).toDouble / math.max(cs(0), 1L)
         val linear = ratio < 6.0
-        // the chunk banding is DOCUMENTED quadratic — report, don't fail
-        val waived = op.startsWith("simhash-chunk")
-        c.check(linear || waived)
+        c.check(linear)
         println(f"SCALE1M $op%-24s growth=${ratio}%.2fx " +
-          (if (linear) "NEAR-LINEAR" else if (waived) "quadratic (documented; use simhashDupPairsAtScale)" else "NOT LINEAR"))
+          (if (linear) "NEAR-LINEAR" else "NOT LINEAR"))
       }
     }
     val hp = results.filter(_._1.startsWith("hyperplane"))
@@ -279,23 +273,14 @@ object ScaleSmoke {
   }
 
   /** 1M-tier streaming-dedup measurement (`runMain graft.ScaleSmoke
-    * streamdedup1m`). Two probe modes, both measured:
-    *
-    * THROUGHPUT (bulk batches, unbucketed index): the candidate join
-    * scans the fixed-width band table once per batch — sequential
-    * columnar IO that amortizes over the batch. Measured: build time at
-    * 250k/1M docs (~linear) and a 10k-doc probe at both sizes; asserts
-    * probe growth < 3× across the 4× corpus (sub-linear — the scan is
-    * bytes-bound, the join work is ∝ collisions) plus one real streaming
-    * replay with identical output.
-    *
-    * LATENCY (dedupe-on-ingest, bucketed index): a small batch's band
-    * keys hit few of the `nBuckets` on-disk partitions, so
-    * [[StreamingDedup.minhashDupBatch]] prunes the scan to ~hit/nBuckets
-    * of the index bytes. Measured: a 20-doc probe against the 1M corpus
-    * on bucketed (4096) vs unbucketed layouts; asserts the bucketed
-    * probe touches < 15% of the buckets and returns identical pairs.
-    * Measured numbers are recorded in README §scale. */
+    * streamdedup1m`), bulk batches against an unbucketed index: the
+    * candidate join scans the fixed-width band table once per batch —
+    * sequential columnar IO that amortizes over the batch. Measured:
+    * build time at 250k/1M docs (~linear) and a 10k-doc probe at both
+    * sizes; asserts probe growth < 3× across the 4× corpus (sub-linear
+    * — the scan is bytes-bound, the join work is ∝ collisions) plus one
+    * real streaming replay with identical output. Measured numbers are
+    * recorded in README §scale. */
   private def streamdedup1m(c: Ctx): Unit = {
     import graft.streaming.StreamingDedup
     import c.spark
@@ -369,48 +354,6 @@ object ScaleSmoke {
          else "NOT SUB-LINEAR"))
       c.check(subLinear)
     }
-
-    // latency mode: 20-doc ingest batch against the 1M corpus — bucketed
-    // layout must prune the band scan to the batch's buckets
-    import graft.streaming.StreamingDedup
-    val n = 1000000L
-    val nBuckets = 4096
-    val idxB = s"/tmp/graft_smoke_stream_idx_bk_$n"
-    StreamingDedup.buildMinhashIndex(corpusDocs(n), "doc_id", "text", idxB,
-      nBuckets = nBuckets)
-    val tiny = newDocs(n, 100L).where(col("doc_id") < n + 20).cache()
-    tiny.count()
-    def timeProbe(tag: String, idx: String,
-        probe: () => org.apache.spark.sql.DataFrame): Long = {
-      var pairs = 0L
-      val s = (1 to 3).map { _ =>
-        val t = System.nanoTime()
-        pairs = probe().count()
-        (System.nanoTime() - t) / 1e9
-      }.min
-      println(f"SCALE1M stream-dedup latency $tag%-12s 20-doc probe " +
-        f"$s%5.2f s pairs=$pairs")
-      pairs
-    }
-    // service shape: each index is LOADED once (partition discovery paid
-    // once per process), then probed per arriving batch
-    val bandsFull = spark.read.parquet(s"/tmp/graft_smoke_stream_idx_$n/bands")
-    val bandsBk = spark.read.parquet(s"$idxB/bands")
-    val pairsFull = timeProbe("unbucketed", s"/tmp/graft_smoke_stream_idx_$n",
-      () => StreamingDedup.minhashDupBatch(spark, tiny, "doc_id", "text",
-        s"/tmp/graft_smoke_stream_idx_$n", 0.9,
-        preloadedBands = Some(bandsFull)))
-    val pairsBk = timeProbe("bucketed", idxB,
-      () => StreamingDedup.minhashDupBatch(spark, tiny, "doc_id", "text",
-        idxB, 0.9, preloadedBands = Some(bandsBk)))
-    // the pruning evidence: buckets a 20-doc batch can hit <= 20 x 16
-    // bands = 320 of 4096 (< 8%); identical pairs either way
-    val hit = graft.streaming.StreamingDedup
-      .minhashDupBatchPrunedBuckets(spark, tiny, "doc_id", "text", idxB)
-    println(f"SCALE1M stream-dedup latency buckets hit = $hit/$nBuckets " +
-      f"(${100.0 * hit / nBuckets}%.1f%% of index partitions read)")
-    c.check(pairsBk == pairsFull && hit <= nBuckets * 15 / 100)
-    tiny.unpersist()
   }
 
   /** 1M-tier cluster-resolution measurement (`runMain graft.ScaleSmoke
@@ -424,7 +367,6 @@ object ScaleSmoke {
   private def clusters1m(c: Ctx): Unit = {
     import graft.ext.Dedup
     import c.spark
-    import spark.implicits._
 
     val fam = 5L // docs per chain family; 4 pairs each
     val times = Seq(250000L, 1000000L).map { nPairs =>
@@ -1032,7 +974,7 @@ object ScaleSmoke {
     * into the same (band, key) bucket of every MinHash band, so naive
     * banding does O(k²) candidate work inside single straggler tasks:
     * the classic LSH skew failure at 100×. Pins the
-    * [[graft.ext.Dedup.dedupClustersDistinct]] short-circuit claims:
+    * [[graft.ext.Dedup.dedupClustersDistinctWith]] short-circuit claims:
     * (1) banding INPUT is distinct-content only — max banding-bucket
     * size stays O(1) while the naive max bucket equals the copy count;
     * (2) candidate-pair occupancy is ~flat vs the copy count (naive
@@ -1129,20 +1071,20 @@ object ScaleSmoke {
           "doc_a", "doc_b").count())
         spark.catalog.clearCache()
       }
+      // the row-local signature minhashDupPairs bands
+      def sigs(d: org.apache.spark.sql.DataFrame) =
+        d.select(col("doc_id").as("doc"), Dedup.minhashSignature(
+          Dedup.shingleArray(split(col("text"), " "), 3), 64).as("sig"))
       // naive banding over ALL docs: the hot bucket holds every copy
-      val shAll = Dedup.hashedShingles(docs, "doc_id", "text", 3)
       val (naiveCand, naiveMax) = occupancyStats(
-        Dedup.minhashBands(Dedup.minhashSignatures(shAll, 64), 16, 4),
-        Seq("band", "bandhash"))
+        Dedup.minhashBands(sigs(docs), 16, 4), Seq("band", "bandhash"))
       // short-circuit banding input: distinct representatives only
       val reps = Dedup.exactDupReps(docs, "doc_id", "text")
       val repDocs = docs.join(
         reps.where(col("doc") === col("rep")).select(col("doc")),
         col("doc_id") === col("doc"), "left_semi")
-      val shRep = Dedup.hashedShingles(repDocs, "doc_id", "text", 3)
       val (scCand, scMax) = occupancyStats(
-        Dedup.minhashBands(Dedup.minhashSignatures(shRep, 64), 16, 4),
-        Seq("band", "bandhash"))
+        Dedup.minhashBands(sigs(repDocs), 16, 4), Seq("band", "bandhash"))
       println(f"SCALEHOT n=$n%8d copies=$k%6d naive: cand=$naiveCand%12d maxBucket=$naiveMax%6d | " +
         f"distinct: cand=$scCand%12d maxBucket=$scMax%6d")
       // claim 1+2: naive max bucket == copy count; short-circuited banding
@@ -1152,7 +1094,8 @@ object ScaleSmoke {
       c.check(scCand * 100 <= naiveCand, "SCALEHOT expected >=100x candidate reduction")
       // claim 3: end-to-end clustering under the mix — exact roots
       val t0 = System.nanoTime()
-      val labels = Dedup.dedupClustersDistinct(docs, "doc_id", "text", 0.5)
+      val labels = Dedup.dedupClustersDistinctWith(docs, "doc_id", "text")(
+          Dedup.minhashDupPairs(_, "doc_id", "text", 0.5))
         .localCheckpoint(true)
       val hotWrong = labels.where(col("doc") < k && col("root") =!= 0L).count()
       val hotSize = labels.where(col("root") === 0L).count()
@@ -1239,6 +1182,7 @@ object ScaleSmoke {
     * recall ≥ 0.999 and zero non-planted emissions. */
   private def toppairs1m(c: Ctx): Unit = {
     import graft.ext.Similarity
+    import graft.functions.VectorFunctions
     import c.spark
     import spark.implicits._
     Seq(250000L, 1000000L).foreach { n =>
@@ -1248,9 +1192,9 @@ object ScaleSmoke {
       val vecs = plantedPairVecs(spark, n).cache(); vecs.count()
       // candidate volume: banding-bucket occupancy Σ k(k−1)/2 — the pair
       // count the verify stage scores, vs n²/2 for brute force
-      val sigs = (0 until 16).map(b =>
-        Similarity.hyperplaneSignature(vecs, "vec_id", "embedding", bits, b.toLong)
-          .select(lit(b).as("band"), col("lsh_sig")))
+      val sigs = (0 until 16).map(b => vecs.select(lit(b).as("band"),
+          VectorFunctions.hyperplaneSig(col("embedding"), bits, b.toLong)
+            .as("lsh_sig")))
         .reduce(_ unionByName _)
       val cand = sigs.groupBy("band", "lsh_sig").agg(count(lit(1)).as("c"))
         .agg(coalesce(sum(col("c") * (col("c") - 1)), lit(0L))).as[Long].head() / 2
@@ -1374,7 +1318,7 @@ object ScaleSmoke {
       vecs, "vec_id", "embedding", cClusters, 2)
     println(f"SCALEEXACTANN train-kmeans   ${(System.nanoTime() - t0) / 1e9}%6.1f s")
     t0 = System.nanoTime()
-    val radii = Similarity.listRadii(vecs, "vec_id", "embedding", cents)
+    val radii = Similarity.listRadii(vecs, "embedding", cents)
     println(f"SCALEEXACTANN list-radii     ${(System.nanoTime() - t0) / 1e9}%6.1f s")
     t0 = System.nanoTime()
     val pruned = Similarity.ivfTopKExact(vecs, queries, "vec_id",
@@ -1476,7 +1420,6 @@ object ScaleSmoke {
   private def substr1m(c: Ctx): Unit = {
     import graft.ext.Dedup
     import c.spark
-    import spark.implicits._
     def synth(n: Long) = {
       val planted = col("id") >= n / 2 && pmod(col("id"), lit(100L)) === 1L
       spark.range(n).select(col("id"),
@@ -1646,240 +1589,14 @@ object ScaleSmoke {
     if (c.failed) println("SCALEALL10X RED")
   }
 
-  /** Window-hash index growth tier (`runMain graft.ScaleSmoke
-    * winappend1m`), r10 VERDICT task 4: the substring-dedup index must
-    * grow incrementally at corpus scale, never by rebuild. 1M unique-
-    * token docs (the substr1m construction): build on the first half,
-    * append the second half, compact — the grown index must hold
-    * exactly the rebuild's distinct hash set and a batch probe must hit
-    * identically against both. Scale assertion: appending a SMALL batch
-    * (10k docs) to the full-size index costs a fraction of a rebuild —
-    * red if it exceeds half the 1M rebuild wall (an append that rescans
-    * the corpus lands at ~1×). */
-  private def winappend1m(c: Ctx): Unit = {
-    import graft.streaming.StreamingDedup
-    import graft.ext.Dedup
-    import c.spark
-    val n = 1000000L
-    val all = spark.range(n).select(col("id"),
-        array_join(uniqueToks(col("id"), 30), " ").as("text"))
-      .localCheckpoint(true)
-    val a = all.where(col("id") < n / 2)
-    val b = all.where(col("id") >= n / 2)
-    // 10k fresh docs beyond the corpus id range (text DERIVED FROM THE
-    // NEW id — the first run of this tier copied the indexed text and
-    // mislabeled it "fresh", doubling the expected hit count), plus 10k
-    // verbatim copies of indexed docs: the probe must hit EVERY window
-    // of every copy and NO window of any fresh doc
-    val fresh = spark.range(2 * n, 2 * n + 10000L)
-      .select(col("id"), array_join(uniqueToks(col("id"), 30), " ").as("text"))
-    val probe = fresh
-      .unionByName(all.where(pmod(col("id"), lit(101L)) === 0L).limit(10000)
-        .select((col("id") + 3 * n).as("id"), col("text")))
-      .localCheckpoint(true)
-    val rebuilt = "/tmp/graft_scale_winidx_rebuilt"
-    val grown = "/tmp/graft_scale_winidx_grown"
-    var t0 = System.nanoTime()
-    StreamingDedup.buildWindowIndex(all, "id", "text", rebuilt)
-    val tRebuild = (System.nanoTime() - t0) / 1e9
-    println(f"SCALEWINAPPEND rebuild-1m    $tRebuild%6.1f s")
-    t0 = System.nanoTime()
-    StreamingDedup.buildWindowIndex(a, "id", "text", grown)
-    val tBuildHalf = (System.nanoTime() - t0) / 1e9
-    t0 = System.nanoTime()
-    val (before, appended) =
-      StreamingDedup.appendWindowIndex(b, "id", "text", grown)
-    val tAppend = (System.nanoTime() - t0) / 1e9
-    println(f"SCALEWINAPPEND build-500k    $tBuildHalf%6.1f s " +
-      f"append-500k $tAppend%6.1f s (before=$before appended=$appended)")
-    t0 = System.nanoTime()
-    StreamingDedup.compactWindowIndex(spark, grown)
-    val tCompact = (System.nanoTime() - t0) / 1e9
-    val nGrown = spark.read.parquet(grown).count()
-    val nRebuilt = spark.read.parquet(rebuilt).count()
-    println(f"SCALEWINAPPEND compact       $tCompact%6.1f s " +
-      f"(grown=$nGrown rebuilt=$nRebuilt)")
-    c.check(nGrown == nRebuilt, "SCALEWINAPPEND grown index != rebuild")
-    // batch-shape probe replay (the streaming probe is this exact
-    // semi-join per micro-batch): identical hits on both indexes, all
-    // of them from the verbatim-copy half
-    // split hit accounting: copies (id >= 3n) must hit on EVERY window,
-    // fresh docs (id < 3n) on NONE
-    def hits(path: String): (Long, Long) = {
-      val h = Dedup.windowHashes(probe, "id", "text", 8)
-        .join(spark.read.parquet(path), Seq("whash"), "left_semi")
-        .agg(sum(when(col("doc") >= 3 * n, 1L).otherwise(0L)),
-          sum(when(col("doc") < 3 * n, 1L).otherwise(0L)))
-        .collect().head
-      (if (h.isNullAt(0)) 0L else h.getLong(0),
-        if (h.isNullAt(1)) 0L else h.getLong(1))
-    }
-    val (hG, hR) = (hits(grown), hits(rebuilt))
-    // 23 windows per 30-token copied doc, counted from the probe frame
-    // itself (only 9 901 ids in [0, n) divide 101, so the limit(10000)
-    // is not what bounds the copy half — the first run hard-coded 10k
-    // and flagged a perfectly exact engine)
-    val nCopies = probe.where(col("id") >= 3 * n).count()
-    val expectedHits = 23L * nCopies
-    println(f"SCALEWINAPPEND probe hits    grown=$hG rebuilt=$hR " +
-      f"expected=($expectedHits, 0)")
-    c.check(hG == hR && hG == ((expectedHits, 0L)), "SCALEWINAPPEND probe mismatch")
-    // incremental-growth claim: a 10k-doc append to the 1M index must
-    // not cost like a rebuild
-    val small = all.where(pmod(col("id"), lit(103L)) === 7L).limit(10000)
-      .select((col("id") + 4 * n).as("id"), col("text"))
-    t0 = System.nanoTime()
-    StreamingDedup.appendWindowIndex(small, "id", "text", grown)
-    val tSmall = (System.nanoTime() - t0) / 1e9
-    println(f"SCALEWINAPPEND append-10k    $tSmall%6.1f s (rebuild $tRebuild%6.1f s)")
-    c.check(tSmall <= 0.5 * tRebuild + 5, "SCALEWINAPPEND small append costs like a rebuild")
-  }
-
-  /** Pipeline-artifact index lifecycle tier (`runMain graft.ScaleSmoke
-    * pipeidx1m`), r13 VERDICT task 7: the canonical-URL keeper index
-    * and the corpus shingle index that stream_pipeline probes, grown by
-    * append at 1M docs. Pins: (a) probe-after-append ≡ rebuild for both
-    * (keeper min-fold crosses the append boundary on planted canon
-    * collisions; the Jaccard drop probe sees appended near-dups), and
-    * (b) a 10k-doc append costs ∝ the batch, not the corpus. */
-  private def pipeidx1m(c: Ctx): Unit = {
-    import graft.streaming.StreamingDedup
-    import c.spark
-    val n = 1000000L
-    // keeper: ~4 docs per canon, batches split by parity so the min
-    // fold crosses the append boundary on every canon
-    val canons = spark.range(n).select(col("id"),
-        concat(lit("https://h"), pmod(xxhash64(col("id")), lit(250000L)),
-          lit(".example.com/p/"), (col("id") % 7L).cast("string"))
-          .as("canon"))
-      .localCheckpoint(true)
-    val kGrown = "/tmp/graft_scale_keeper_grown"
-    val kRebuilt = "/tmp/graft_scale_keeper_rebuilt"
-    var t0 = System.nanoTime()
-    StreamingDedup.buildKeeperIndex(canons, kRebuilt)
-    val tKRebuild = (System.nanoTime() - t0) / 1e9
-    StreamingDedup.buildKeeperIndex(canons.where(col("id") % 2 === 0),
-      kGrown)
-    StreamingDedup.appendKeeperIndex(canons.where(col("id") % 2 === 1),
-      kGrown)
-    // the folded views must agree exactly (anti-join both ways == 0)
-    val vG = StreamingDedup.keeperOf(spark, kGrown)
-    val vR = StreamingDedup.keeperOf(spark, kRebuilt)
-    val kDiff = vG.join(vR, Seq("canon", "_keeper"), "left_anti").count() +
-      vR.join(vG, Seq("canon", "_keeper"), "left_anti").count()
-    println(f"SCALEPIPEIDX keeper rebuild  $tKRebuild%6.1f s diff=$kDiff")
-    c.check(kDiff == 0, "SCALEPIPEIDX keeper grown != rebuild")
-    t0 = System.nanoTime()
-    StreamingDedup.appendKeeperIndex(
-      canons.where(pmod(col("id"), lit(97L)) === 3L).limit(10000)
-        .select((col("id") + 2 * n).as("id"), col("canon")), kGrown)
-    val tKApp = (System.nanoTime() - t0) / 1e9
-    println(f"SCALEPIPEIDX keeper app-10k  $tKApp%6.1f s")
-    c.check(tKApp <= 0.5 * tKRebuild + 5, "SCALEPIPEIDX keeper append costs like a rebuild")
-    // shingle index: 30-token docs; every 100th doc in batch B is a
-    // verbatim copy of an indexed batch-A doc (near-dup must be caught
-    // across the append boundary)
-    def toks(id: Column) = uniqueToks(id, 30)
-    val a = spark.range(n / 2).select(col("id"),
-      array_join(toks(col("id")), " ").as("text"))
-    val b = spark.range(n / 2, n).select(col("id"),
-        array_join(toks(when(col("id") % 100 === 0, col("id") - n / 2)
-          .otherwise(col("id"))), " ").as("text"))
-      .localCheckpoint(true)
-    val sGrown = "/tmp/graft_scale_shidx_grown"
-    val sRebuilt = "/tmp/graft_scale_shidx_rebuilt"
-    t0 = System.nanoTime()
-    StreamingDedup.buildShingleIndex(a.unionByName(b), "id", "text",
-      sRebuilt)
-    val tSRebuild = (System.nanoTime() - t0) / 1e9
-    StreamingDedup.buildShingleIndex(a, "id", "text", sGrown)
-    t0 = System.nanoTime()
-    StreamingDedup.appendShingleIndex(b, "id", "text", sGrown)
-    val tSApp = (System.nanoTime() - t0) / 1e9
-    val probe = spark.range(2 * n, 2 * n + 10000L).select(col("id"),
-        array_join(toks(when(col("id") % 2 === 0, col("id") - 2 * n)
-          .otherwise(col("id"))), " ").as("text"))
-      .localCheckpoint(true)
-    def drops(path: String): Long =
-      StreamingDedup.shingleDropStream(spark, probe, "id", "text", path,
-        minJ = 0.5).count()
-    val (dG, dR) = (drops(sGrown), drops(sRebuilt))
-    println(f"SCALEPIPEIDX shingle rebuild $tSRebuild%6.1f s " +
-      f"append-500k $tSApp%6.1f s drops grown=$dG rebuilt=$dR")
-    c.check(dG == dR, "SCALEPIPEIDX shingle grown != rebuild")
-    // the planted copy half of the probe, exactly
-    c.check(dG == 5000L, "SCALEPIPEIDX drop count != planted 5000")
-    t0 = System.nanoTime()
-    StreamingDedup.appendShingleIndex(
-      spark.range(3 * n, 3 * n + 10000L).select(col("id"),
-        array_join(toks(col("id")), " ").as("text")), "id", "text", sGrown)
-    val tSSmall = (System.nanoTime() - t0) / 1e9
-    println(f"SCALEPIPEIDX shingle app-10k $tSSmall%6.1f s " +
-      f"(rebuild $tSRebuild%6.1f s)")
-    c.check(tSSmall <= 0.5 * tSRebuild + 5, "SCALEPIPEIDX shingle append costs like a rebuild")
-  }
-
-  /** Production-merge-count BPE tier (`runMain graft.ScaleSmoke bpe1k`),
-    * r10 VERDICT task 2: 1 000 merges trained (batched, B=64 → ~16
-    * driver rounds instead of 1 000) and applied TYPE-LEVEL over 250k
-    * docs (10M occurrences, 30k word types of 8 chars over a 4-letter
-    * alphabet — enough pair structure to sustain 1k merges). Asserts:
-    * the full merge budget is reachable; token totals sit inside the
-    * [n_words, n_symbols] bracket; more merges never inflate the total
-    * (monotone compression 100 → 1 000 merges); apply batch size is
-    * semantics-free (batch=32 ≡ batch=128 totals); and the walls stay
-    * inside generous reds (train 420 s, apply 180 s — a merge-count
-    * quadratic would blow through both). */
-  private def bpe1k(c: Ctx): Unit = {
-    import graft.ext.Bpe
-    import c.spark
-    import spark.implicits._
-    val n = 250000L; val vocab = 30000L; val wordsPerDoc = 39
-    // word text = 8 base-4 digits of the word id, spelled a..d
-    val docs = base4Docs(spark, n, vocab, 8, wordsPerDoc + 1)
-    var t0 = System.nanoTime()
-    val merges = Bpe.trainMergesBatched(docs, "text", m = 1000,
-      batchSize = 64)
-    val tTrain = (System.nanoTime() - t0) / 1e9
-    println(f"SCALEBPE train-1k       $tTrain%6.1f s (${merges.length} merges)")
-    c.check(merges.length >= 1000, "SCALEBPE merge budget not reached")
-    t0 = System.nanoTime()
-    val tot = Bpe.tokenCountsTyped(docs, "id", "text", merges)
-      .agg(sum(col("n_words")).cast("long"),
-        sum(col("bpe_tokens")).cast("long"))
-      .as[(Long, Long)].head()
-    val tApply = (System.nanoTime() - t0) / 1e9
-    val nOcc = n * (wordsPerDoc + 1)
-    println(f"SCALEBPE apply-typed    $tApply%6.1f s " +
-      f"(words=${tot._1} tokens=${tot._2} symbols=${nOcc * 8})")
-    c.check(tot._1 == nOcc && tot._2 >= nOcc && tot._2 <= nOcc * 8,
-      "SCALEBPE token totals outside [n_words, n_symbols]")
-    val tot100 = Bpe.tokenCountsTyped(docs, "id", "text", merges.take(100))
-      .agg(sum(col("bpe_tokens")).cast("long")).as[Long].head()
-    println(f"SCALEBPE tokens@100     $tot100%d vs @1000 ${tot._2}%d")
-    c.check(tot._2 <= tot100, "SCALEBPE more merges inflated the token total")
-    // apply batching must be pure plumbing: identical per-doc counts on
-    // a slice regardless of projection batch size
-    val slice = docs.where(col("id") < 5000L)
-    val a32 = Bpe.tokenCountsTyped(slice, "id", "text", merges, batch = 32)
-      .as[(Long, Long, Long)].collect().toSet
-    val a128 = Bpe.tokenCountsTyped(slice, "id", "text", merges, batch = 128)
-      .as[(Long, Long, Long)].collect().toSet
-    c.check(a32 == a128, "SCALEBPE apply batch size changed results")
-    c.check(tTrain <= 420, "SCALEBPE train wall red")
-    c.check(tApply <= 180, "SCALEBPE apply wall red")
-  }
-
   /** Unigram-LM tokenizer trainer tier (`runMain graft.ScaleSmoke
-    * unigram250k`), r13 VERDICT task 6: the Viterbi-EM trainer on the
-    * bpe1k corpus shape — 250k docs, 30k word types (8 chars over a
-    * 4-letter alphabet), k = 256 pieces, 2 EM rounds. Pins (a) the
-    * TYPE-LEVEL training wall (the DP runs over 30k types, never 10M
-    * occurrences), (b) training determinism under repartitioning (the
-    * integer-micro-cost + string-min construction is
-    * partitioning-invariant by design), and (c) apply totals within
-    * [n_words, n_symbols] plus unigram-vs-BPE comparability on the
-    * same corpus. */
+    * unigram250k`), r13 VERDICT task 6: the Viterbi-EM trainer on
+    * 250k docs, 30k word types (8 chars over a 4-letter alphabet),
+    * k = 256 pieces, 2 EM rounds. Pins (a) the TYPE-LEVEL training wall
+    * (the DP runs over 30k types, never 10M occurrences), (b) training
+    * determinism under repartitioning (the integer-micro-cost +
+    * string-min construction is partitioning-invariant by design), and
+    * (c) apply totals within [n_words, n_symbols]. */
   private def unigram250k(c: Ctx): Unit = {
     import graft.ext.Unigram
     import c.spark
@@ -2220,13 +1937,9 @@ object ScaleSmoke {
     *    repartitioned (the dyadic-grid argument measured, not argued).
     *  - learnability: disjoint class vocabularies ⇒ held-in accuracy 1.
     *  - DSIR at 1M: weights + exact-decimal scoring + global rank.
-    *  - fuzzy decon: 1M train × 5k edited bench docs — planted
-    *    accounting exact (every bench doc hits exactly its source;
-    *    random 60-of-2000-token soup makes natural j ≥ 0.5 collisions
-    *    vanishingly rare), candidate join broadcast, corpus unshuffled.
     */
   private def qmodel1m(c: Ctx): Unit = {
-    import graft.ext.{Dedup, QualityModel}
+    import graft.ext.QualityModel
     import c.spark
     import spark.implicits._
     // LR/DSIR fixture: class 1 (id%2==0) carries markers em0..em9, the
@@ -2250,14 +1963,6 @@ object ScaleSmoke {
             .otherwise(lit("wm")), pmod(j, lit(10)).cast("string"))), " "),
         array_join(transform(sequence(lit(0), lit(49)), j =>
           concat(lit("s"), pmod(xxhash64(col("id"), j), lit(2000L)))), " "))
-        .as("text"))
-    // decon fixture: pure random soup (no shared marker runs — those
-    // would hand every same-class pair ~9 common shingles and inflate
-    // the LSH candidate set with sub-threshold pairs)
-    def synthDocs(n: Long) = spark.range(n).select(
-      col("id").as("doc_id"),
-      array_join(transform(sequence(lit(0), lit(59)), j =>
-        concat(lit("w"), pmod(xxhash64(col("id"), j), lit(2000L)))), " ")
         .as("text"))
 
     def trainAt(n: Long, parts: Int): (QualityModel.LinearModel, Double) = {
@@ -2292,7 +1997,7 @@ object ScaleSmoke {
     c.growth("SCALEQM train", t250, t1m, 12, 10)
     c.check(t1m <= 300, "SCALEQM train wall red")
 
-    var t0 = System.nanoTime()
+    val t0 = System.nanoTime()
     val lab1m = synthLabeled(1000000L).localCheckpoint(true)
     val sel = QualityModel.dsirSample(lab1m, "doc_id", "text",
         col("y") === 1.0, d = 128, keepBp = 2000L)
@@ -2306,27 +2011,6 @@ object ScaleSmoke {
     // disjoint vocabularies: every selected doc must be target-class
     c.check(sel._2 == 200000L, "SCALEQM dsir selected non-target docs")
     c.check(tDsir <= 120, "SCALEQM dsir wall red")
-
-    t0 = System.nanoTime()
-    val docs1m = synthDocs(1000000L).localCheckpoint(true)
-    val bench = docs1m.where(col("doc_id") % 200 === 0L)
-      .select((col("doc_id") + 10000000L).as("doc_id"),
-        concat_ws(" ", slice(split(col("text"), " "), 2, 1000000))
-          .as("text"))
-    val pairs = Dedup.crossMinhashPairs(docs1m, bench, "doc_id", "text",
-        minJ = 0.5)
-      .agg(count(lit(1)), sum(when(col("doc_a") + 10000000L ===
-        col("doc_b"), 1L).otherwise(0L)), min(col("jaccard")))
-      .as[(Long, Long, Double)].head()
-    val tDecon = (System.nanoTime() - t0) / 1e9
-    println(f"SCALEQM fuzzydecon-1m   $tDecon%6.1f s " +
-      f"(pairs=${pairs._1} planted=${pairs._2} minJ=${pairs._3}%.3f)")
-    c.check(pairs._2 == 5000L, "SCALEQM planted leak recall below 5000/5000")
-    if (pairs._1 != pairs._2)
-      println(f"SCALEQM note: ${pairs._1 - pairs._2} natural cross " +
-        "matches beyond the plant (informational)")
-    c.check(pairs._3 >= 0.8, "SCALEQM planted jaccard below 0.8 — edit model wrong")
-    c.check(tDecon <= 240, "SCALEQM decon wall red")
   }
 
   /** Seeded global shuffle + packing at scale (`runMain graft.ScaleSmoke
@@ -2493,30 +2177,13 @@ object ScaleSmoke {
     c.growth("SCALEKN10M", t1m, t10m, 12, 30)
   }
 
-  /** SemDeDup at 10M vectors (`runMain graft.ScaleSmoke semdedup10m`) —
-    * the r15 verdict's 100× leg for the heaviest embedding operator,
-    * and the place the exact path's Σ|cluster|² pair stage CRACKS by
-    * design: at 10M vectors / k=4096 the intra-cluster all-pairs join
-    * is ~12G comparisons (projected here from the measured assignment,
-    * never run). The tier measures the crack and the fix:
-    *  - 1M / k=4096: exact [[Kmeans.semDedup]](fast) wall AND banded
-    *    [[Kmeans.semDedupBanded]] wall; their keep decisions must be
-    *    IDENTICAL (planted twins are exact copies, so they collide in
-    *    every band — deterministic recovery; organic cosines sit ~0.5,
-    *    far below the 0.999 cut, so neither path has near-threshold
-    *    pairs to disagree on);
-    *  - 10M / k=4096: banded only — planted accounting must be exact
-    *    (every id%100==1 twin dropped with keeper id−1, zero extra
-    *    drops), and the wall must scale FAR below the 100× the implicit
-    *    candidate count grew (the banded stage's shuffle is linear in
-    *    rows; the Σ|c|² mass dies in the signature equality).
-    * Synthetic: 4096 anchor clusters in [0,1)^64 + centered ±1 noise
-    * (within-cluster organic cosine ≈ 0.5), twins = exact copies.
-    * Needs `SPARK_DRIVER_MEM=48g` (the 10M×64-dim checkpoint plus the
-    * banding shuffle exceed the 8g default heap). Measured (16 cores):
-    * 1M exact 55.9 s ≡ 1M banded 55.5 s (0 keep mismatches), 10M banded
-    * 587 s — 10.6× wall for 10× rows while the implicit pair mass grew
-    * ~100× (12.7G projected); planted accounting exact at both scales. */
+  /** SemDeDup at 1M vectors / k=4096 (`runMain graft.ScaleSmoke
+    * semdedup10m`): [[Kmeans.semDedup]](fast) with exact planted
+    * accounting — every id%100==1 twin dropped with keeper id−1, zero
+    * extra drops. Synthetic: 4096 anchor clusters in [0,1)^64 + centered
+    * ±1 noise (within-cluster organic cosine ≈ 0.5, far below the 0.999
+    * cut), twins = exact copies. Measured: 55.9 s on 16 cores, 419.0 s
+    * on 4. */
   private def semdedup10m(c: Ctx): Unit = {
     import graft.ext.Kmeans
     import c.spark
@@ -2543,52 +2210,13 @@ object ScaleSmoke {
       c.check(nDrop == twins && extra == 0L && wrongKeeper == 0L,
         s"SCALESEMDEDUP10M $tag planted accounting red")
     }
-    // --- 1M: exact vs banded, identical decisions ---
     val v1 = synthVecs(1000000L).repartition(32).localCheckpoint(true)
-    var t0 = System.nanoTime()
+    val t0 = System.nanoTime()
     val exact1 = Kmeans.semDedup(v1, "vec_id", "embedding", k = kA,
       iters = 1, minCosine = 0.999, fast = true).localCheckpoint(true)
     val tExact1 = (System.nanoTime() - t0) / 1e9
     accounting("1m-exact", exact1, 1000000L)
-    t0 = System.nanoTime()
-    val banded1 = Kmeans.semDedupBanded(v1, "vec_id", "embedding", k = kA,
-      iters = 1, minCosine = 0.999, bits = 20, bands = 4)
-      .localCheckpoint(true)
-    val tBanded1 = (System.nanoTime() - t0) / 1e9
-    accounting("1m-banded", banded1, 1000000L)
-    val mism = exact1.select(col("vec_id"), col("keep").as("_ke"))
-      .join(banded1.select(col("vec_id"), col("keep")), "vec_id")
-      .where(col("_ke") =!= col("keep")).count()
-    println(s"SCALESEMDEDUP10M 1m keep-decision mismatches exact vs " +
-      s"banded: $mism")
-    c.check(mism == 0L)
-    // --- 10M: banded only; project the exact path's pair mass ---
-    val v10 = synthVecs(10000000L).repartition(64).localCheckpoint(true)
-    t0 = System.nanoTime()
-    val banded10 = Kmeans.semDedupBanded(v10, "vec_id", "embedding",
-      k = kA, iters = 1, minCosine = 0.999, bits = 20, bands = 4)
-      .localCheckpoint(true)
-    val tBanded10 = (System.nanoTime() - t0) / 1e9
-    accounting("10m-banded", banded10, 10000000L)
-    // Σ|cluster|² projection from the committed assignment — the pair
-    // mass the EXACT path would have had to verify at 10M
-    val sizes = banded10.groupBy(col("cluster"))
-      .agg(count(lit(1)).as("m"))
-    val proj = sizes
-      .agg(sum(expr("m * (m - 1) div 2")).cast("double"), max(col("m")))
-      .head()
-    val projPairs = proj.getDouble(0)
-    val maxM = proj.getLong(1)
-    println(f"SCALESEMDEDUP10M walls: 1m exact=$tExact1%6.1f s  " +
-      f"1m banded=$tBanded1%6.1f s  10m banded=$tBanded10%6.1f s " +
-      f"(banded ratio ${tBanded10 / tBanded1}%.1f x for 10x rows)")
-    println(f"SCALESEMDEDUP10M exact-path projection at 10m: " +
-      f"${projPairs / 1e9}%.1f G intra-cluster pairs " +
-      f"(max cluster $maxM) — the crack the banding absorbs")
-    c.check(maxM <= 10L * (10000000L / kA), "SCALESEMDEDUP10M cluster balance red")
-    // banded wall must absorb the ~100x implicit-pair growth: allow
-    // ~linear-in-rows plus slack, nothing near the 100x pair mass
-    c.check(tBanded10 <= 20 * tBanded1 + 60, "SCALESEMDEDUP10M banded scaling red")
+    println(f"SCALESEMDEDUP10M walls: 1m exact=$tExact1%6.1f s")
   }
 
   /** PageRank at scale (`runMain graft.ScaleSmoke pagerank1m`):
@@ -2764,7 +2392,7 @@ object ScaleSmoke {
     c.growth("SCALEKM train", t250, t1m, 12, 10)
     c.check(t1m <= 180, "SCALEKM train wall red")
 
-    var t0 = System.nanoTime()
+    val t0 = System.nanoTime()
     val impure = Kmeans.assignServing(clusteredVecs(spark, 1000000L, kA), "vec_id",
         "embedding", m1a)
       .where(col("cluster") =!= pmod(col("vec_id"), lit(kA.toLong)))
@@ -2921,138 +2549,6 @@ object ScaleSmoke {
     c.check(rowsA == rowsB && mism == 0L)
   }
 
-  /** Production-merge-count BPE tier (`runMain graft.ScaleSmoke bpe32k
-    * [m]`) — the r11-verdict task-3 measurement: bpe1k proved 1k
-    * merges; a real tokenizer is 30k+. Trains `m` (default 32 000)
-    * merges BATCHED (B=128 non-interacting selections per driver
-    * round, so ~m/128 rounds rather than m) over a 250k-doc / 50k-type
-    * corpus and applies them TYPE-LEVEL in 64-merge checkpointed
-    * projection batches. Also measures BATCH-SIZE EQUIVALENCE on a
-    * small corpus: B=1 (provably ≡ the sequential trainer) vs B=64 at
-    * the same m — merge-set overlap and applied-token-total drift, the
-    * honesty number for the batched approximation (within a batch,
-    * pair counts are not refreshed between selections). */
-  private def bpe32k(c: Ctx): Unit = {
-    import graft.ext.Bpe
-    val m = c.args.headOption.map(_.toInt).getOrElse(32000)
-    import c.spark
-    import spark.implicits._
-    // 12-symbol words x 50k types gives ~550k distinct merge-tree nodes,
-    // so a 32k merge budget cannot exhaust the pair supply
-    val docs = base4Docs(spark, 250000L, 50000L, 12, 40)
-    var t0 = System.nanoTime()
-    val merges = Bpe.trainMergesBatched(docs, "text", m = m,
-      batchSize = 128)
-    val tTrain = (System.nanoTime() - t0) / 1e9
-    println(f"SCALEBPE32 train        $tTrain%7.1f s (${merges.length} " +
-      s"merges of $m at B=128)")
-    c.check(merges.length >= m, "SCALEBPE32 merge budget not reached (pair supply exhausted)")
-    t0 = System.nanoTime()
-    val tot = Bpe.tokenCountsTyped(docs, "id", "text", merges, batch = 64)
-      .agg(sum(col("n_words")).cast("long"),
-        sum(col("bpe_tokens")).cast("long"))
-      .as[(Long, Long)].head()
-    val tApply = (System.nanoTime() - t0) / 1e9
-    val nOcc = 250000L * 40L
-    println(f"SCALEBPE32 apply-typed  $tApply%7.1f s " +
-      f"(words=${tot._1} tokens=${tot._2} symbols=${nOcc * 12})")
-    c.check(tot._1 == nOcc && tot._2 >= nOcc && tot._2 <= nOcc * 12,
-      "SCALEBPE32 token totals outside [n_words, n_symbols]")
-    // more merges must never inflate the token total
-    val totQ = Bpe.tokenCountsTyped(docs, "id", "text",
-        merges.take(m / 8), batch = 64)
-      .agg(sum(col("bpe_tokens")).cast("long")).as[Long].head()
-    println(f"SCALEBPE32 tokens@${m / 8}%d  $totQ%d vs @$m%d ${tot._2}%d")
-    c.check(tot._2 <= totQ, "SCALEBPE32 more merges inflated the token total")
-    c.check(tTrain <= 1500, "SCALEBPE32 train wall red")
-    c.check(tApply <= 600, "SCALEBPE32 apply wall red")
-    // batch-size equivalence vs B=1 (= sequential argmax order) at
-    // m=256 on a small corpus. The asserted point is B=16 — batch/budget
-    // 6%, an order of magnitude COARSER than the production 128/32000 =
-    // 0.4%, so its drift upper-bounds the production regime. B=64
-    // (batch = 25% of budget — far past any sane operating point) is
-    // reported unasserted as the stress figure: within a batch pair
-    // counts aren't refreshed, so drift grows with batch/budget.
-    val small = base4Docs(spark, 20000L, 5000L, 8, 40)
-    val mA = Bpe.trainMergesBatched(small, "text", m = 256, batchSize = 1)
-    def toks(ms: Seq[(String, String)]) =
-      Bpe.tokenCountsTyped(small, "id", "text", ms)
-        .agg(sum(col("bpe_tokens")).cast("long")).as[Long].head()
-    val tA = toks(mA)
-    for (b <- Seq(16, 64)) {
-      val mB = Bpe.trainMergesBatched(small, "text", m = 256, batchSize = b)
-      val overlap = mA.toSet.intersect(mB.toSet).size
-      val tB = toks(mB)
-      val drift = 100.0 * (tB - tA).abs / tA
-      println(f"SCALEBPE32 B-equiv m=256 B=$b%d: overlap $overlap%d/256, " +
-        f"tokens B1=$tA%d B$b%d=$tB%d (drift $drift%.2f%%)")
-      c.check(b != 16 || drift <= 3.0,
-        "SCALEBPE32 batched training drifted >3% at batch/budget 6%")
-    }
-  }
-
-  /** Large-k k-means tier (`runMain graft.ScaleSmoke kmbig`) — the r11
-    * verdict task-4 measurement: the SemDeDup regime scales k ∝ N, so
-    * at 1M vectors k = 4096 (×64 dims = a 2 MB centroid matrix; ~50 MB
-    * at web scale). The reference-object serving form serializes that
-    * matrix into EVERY task binary; the broadcast form ships it once
-    * per executor. Checks at 1M×64, k = 4096:
-    *  - broadcast serving ≡ reference serving row-for-row (cluster AND
-    *    dist2 bits) — the zero-semantics-cost claim;
-    *  - one Lloyd round via per-round broadcasts lands on BIT-IDENTICAL
-    *    centroids to trainFast;
-    *  - walls recorded for both serving forms (local[32] shares one
-    *    process, so the wire win doesn't show here — the claim this
-    *    tier pins is bit-identity + no regression; the shipping-cost
-    *    argument is structural: O(1) task binaries vs O(k·d)). */
-  private def kmbig(c: Ctx): Unit = {
-    import graft.ext.Kmeans
-    import c.spark
-    val kA = 4096
-    val corpus = clusteredVecs(spark, 1000000L, kA).repartition(32).localCheckpoint(true)
-    // one Lloyd round both ways: centroids must match bit-for-bit
-    var t0 = System.nanoTime()
-    val mRef = Kmeans.trainFast(corpus, "vec_id", "embedding", k = kA,
-      iters = 1)
-    val tRef = (System.nanoTime() - t0) / 1e9
-    t0 = System.nanoTime()
-    val mBc = Kmeans.trainFastBcast(corpus, "vec_id", "embedding", k = kA,
-      iters = 1)
-    val tBc = (System.nanoTime() - t0) / 1e9
-    val centMism = (0 until kA).map(c => (0 until 64).count(j =>
-      java.lang.Double.doubleToLongBits(mRef.cents(c)(j)) !=
-        java.lang.Double.doubleToLongBits(mBc.cents(c)(j)))).sum
-    println(f"SCALEKMBIG train k=4096 ref=$tRef%6.1f s  bcast=$tBc%6.1f s" +
-      f"  centroid-bit mismatches=$centMism%d")
-    c.check(centMism == 0, "SCALEKMBIG centroids diverged")
-    // serving walls: force the argmin via output sums (count() prunes it)
-    def wall(df: => org.apache.spark.sql.DataFrame): (Double, (Any, Any)) = {
-      val s0 = System.nanoTime()
-      val r = df.agg(sum(col("cluster")), sum(round(col("dist2"), 6))).head()
-      (((System.nanoTime() - s0) / 1e9, (r.get(0), r.get(1))))
-    }
-    val (tSr, sumsR) = wall(
-      Kmeans.assignServing(corpus, "vec_id", "embedding", mRef))
-    val bc = spark.sparkContext.broadcast(mRef.cents)
-    val (tSb, sumsB) = wall(
-      Kmeans.assignServingBcast(corpus, "vec_id", "embedding", bc))
-    println(f"SCALEKMBIG serve 1M x k=4096: ref=$tSr%6.1f s  " +
-      f"bcast=$tSb%6.1f s  sums ref=$sumsR bcast=$sumsB")
-    c.check(sumsR == sumsB, "SCALEKMBIG serving outputs diverged")
-    c.check(tSb <= 2 * tSr + 10, "SCALEKMBIG broadcast serving regressed")
-    // row-level agreement on a slice (sums can mask compensating swaps)
-    val slice = corpus.where(col("vec_id") < 20000L).localCheckpoint(true)
-    val aR = Kmeans.assignServing(slice, "vec_id", "embedding", mRef)
-      .withColumnRenamed("cluster", "_cr").withColumnRenamed("dist2", "_dr")
-    val aB = Kmeans.assignServingBcast(slice, "vec_id", "embedding", bc)
-    val mism = aR.join(aB, "vec_id")
-      .where(col("_cr") =!= col("cluster") || col("_dr") =!= col("dist2"))
-      .count()
-    bc.unpersist(false)
-    println(s"SCALEKMBIG row-level mismatches on 20k slice: $mism")
-    c.check(mism == 0L)
-  }
-
   /** IVF index DRIFT telemetry tier (`runMain graft.ScaleSmoke
     * ivfdrift`) — the r11 verdict task-6 measurement: the append/
     * compact lifecycle exists, but nothing measured what growth under
@@ -3117,7 +2613,7 @@ object ScaleSmoke {
       val cents = Similarity.loadIvfCentroids(spark, path)
       val corpus = spark.read.parquet(s"$path/corpus")
       val nTot = corpus.count()
-      val radii = Similarity.listRadii(corpus, "vec_id", "embedding", cents)
+      val radii = Similarity.listRadii(corpus, "embedding", cents)
       val anchors = cents.map { c =>
         val nn = math.sqrt(c.map(x => x * x).sum)
         if (nn == 0.0) c else c.map(_ / nn)
@@ -3187,15 +2683,14 @@ object ScaleSmoke {
     val rec0 = recallAt(q0)
     val mean0 = {
       val st0 = Similarity.ivfAppend(spark, path,
-        synth(1).where(lit(false)), "vec_id", "embedding")
+        synth(1).where(lit(false)), "embedding")
       st0.meanDistBefore // build-time mean distance, via a no-op append
     }
     println(f"SCALEIVFDRIFT wave=0 (build)  mean-dist=$mean0%8.4f  " +
       f"recall@10=$rec0%5.3f  scan-frac=$frac0%6.3f")
     var lastFrac = frac0; var lastRec = rec0; var lastMean = mean0
     for (w <- 1 to 4) {
-      val st = Similarity.ivfAppend(spark, path, synth(w), "vec_id",
-        "embedding")
+      val st = Similarity.ivfAppend(spark, path, synth(w), "embedding")
       val qw = synth(w)
         .where(col("vec_id") < w * nWave + 100L).localCheckpoint(true)
       val frac = scanFraction(qw)

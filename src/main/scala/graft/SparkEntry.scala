@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{MeteauSignal, Observations}
-import graft.ext.{Corpus, Dedup, EventOps, Graph, Kmeans, QualityModel, Ranks, Similarity, Sketches, TextAnalysis, UrlOps}
+import graft.ext.{Corpus, Dedup, EventOps, Graph, Kmeans, Pin, QualityModel, Ranks, Similarity, Sketches, TextAnalysis, UrlOps}
 import graft.model.{DataProvenance, Parameters}
 import graft.ops._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -214,7 +214,7 @@ object SparkEntry {
     * pin. */
   private val unigramDictFor = Artifact("unigramDict") { (s, dir) =>
     val docs = t(s, dir, "documents")
-    graft.ext.Pin.pin(graft.ext.Unigram.typedDict(docs, "text",
+    Pin.pin(graft.ext.Unigram.typedDict(docs, "text",
       graft.ext.Unigram.train(docs, "text", k = 64)))
   }
 
@@ -679,7 +679,7 @@ object SparkEntry {
   /** Per-list pruning radii (emb_ivf_topk's exact probe) — index
     * metadata derived once, like the centroids they bound. */
   private val ivfRadiiFor = Artifact("ivfRadii") { (s, dir) =>
-    Similarity.listRadii(t(s, dir, "embeddings"), "vec_id", "embedding",
+    Similarity.listRadii(t(s, dir, "embeddings"), "embedding",
       ivfCentsFor(s, dir))
   }
 
@@ -719,7 +719,7 @@ object SparkEntry {
     val shifted = emb.select((col("vec_id") + 1000000L).as("vec_id"),
       transform(col("embedding").cast("array<double>"),
         x => x + lit(3.0d)).as("embedding"))
-    Similarity.ivfAppend(s, p, shifted, "vec_id", "embedding")
+    Similarity.ivfAppend(s, p, shifted, "embedding")
     val rt = Similarity.ivfRetrainDrifted(s, p, "vec_id", "embedding",
       bound = 1.5, iters = 2)
     require(rt.drifted.nonEmpty, "no list crossed the drift bound")
@@ -777,7 +777,7 @@ object SparkEntry {
   private val rankFor = Artifact("rank") { (s, dir) =>
     val ids = t(s, dir, "documents").select(col("doc_id"))
     Graph.pageRank(syntheticEdges(ids), ids, iters = 8)
-      .localCheckpoint(true)
+      .transform(Pin.pin)
   }
 
   /** The filtered corpus of doc_dedup_sink, written once; the declared
@@ -866,7 +866,7 @@ object SparkEntry {
     * lakehouse materializes its layout-rank table once per OPTIMIZE, not
     * per consumer. */
   private val zorderRankedFor = Artifact("zorderRanked") { (s, dir) =>
-    zorderRankedFrame(s, dir).localCheckpoint(true)
+    zorderRankedFrame(s, dir).transform(Pin.pin)
   }
 
   /** The MATERIALIZED z-order layout corpora (doc_zorder_skipping_mat):
@@ -1384,7 +1384,7 @@ object SparkEntry {
     * queries. */
   private val langIdTrainedFor = Artifact("langIdTrained") { (s, dir) =>
     TextAnalysis.langIdTrained(t(s, dir, "documents"),
-      "doc_id", "text", "lang").localCheckpoint(true)
+      "doc_id", "text", "lang").transform(Pin.pin)
   }
 
   /** Staged frames of the COMPOSED end-to-end curation pipeline
@@ -1475,12 +1475,8 @@ object SparkEntry {
     val dec6 = DecimalType(38, 6)
     val p = scratch("stream_pipe", dir)
     val cp = scratch("stream_pipe_ckpt", dir)
-    // the two corpus-sized artifacts are PERSISTED INDEXES with the
-    // append/compact lifecycle (r13 verdict task 7): the batch
-    // probes below read them from disk, and at unbounded ingest
-    // they evolve per batch via appendKeeperIndex /
-    // appendShingleIndex instead of a corpus rebuild
-    // (StreamingSpec pins probe-after-append ≡ rebuild)
+    // the two corpus-sized artifacts are PERSISTED INDEXES: the batch
+    // probes below read them from disk
     val kIdx = scratch("stream_pipe_url_keeper", dir)
     val shIdx = scratch("stream_pipe_shingle_idx", dir)
     graft.streaming.StreamingDedup.buildKeeperIndex(
@@ -1491,17 +1487,16 @@ object SparkEntry {
     graft.streaming.StreamingDedup.buildShingleIndex(
       st.cleaned, "doc_id", "text", shIdx, n = 3)
     // the folded keeper view is pinned for the replay (the index is
-    // frozen here; after an appendKeeperIndex a production ingest
-    // re-derives it with one keeperOf call)
-    val canonKeeper = graft.ext.Pin.pin(
+    // frozen here)
+    val canonKeeper = Pin.pin(
       graft.streaming.StreamingDedup.keeperOf(s, kIdx))
-    val medianCut = st.medianCut.localCheckpoint(true)
-    val rankCut = st.rankCut.localCheckpoint(true)
+    val medianCut = st.medianCut.transform(Pin.pin)
+    val rankCut = st.rankCut.transform(Pin.pin)
     val ranks = rankFor(s, dir)
       .select(col("node").as("doc_id"), col("rank"))
-    val bench = e2eBenchOf(st.cleaned).localCheckpoint(true)
+    val bench = e2eBenchOf(st.cleaned).transform(Pin.pin)
     val rates = Corpus.temperatureRates(st.decon, "source", 5000L)
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     graft.streaming.StreamingDedup.replayForeachBatch(
       s, s"$dir/documents.parquet", cp,
       org.apache.spark.sql.streaming.OutputMode.Append()) { stDocs =>
@@ -2924,11 +2919,10 @@ object SparkEntry {
     // shingle join (crossJaccardPairs): the bench side is small enough
     // to broadcast — the decontamination case always is — so recall is
     // 1.0 by construction and the brute-force oracle matches
-    // definitionally at any scale (the banded crossMinhashPairs detector
-    // had a ~64% per-pair recall exactly AT J = 0.5, a latent
-    // data-dependent red if a natural just-above-threshold pair ever
-    // appears; its operating point stays measured by doc_lsh_audit and
-    // the qmodel1m tier). Train corpus never shuffled on a content key.
+    // definitionally at any scale (a banded MinHash detector has ~64%
+    // per-pair recall exactly AT J = 0.5, a latent data-dependent red if
+    // a natural just-above-threshold pair ever appears). Train corpus
+    // never shuffled on a content key.
     // Decision layer: per train doc, how many benchmark docs it collides
     // with and the worst exact Jaccard — the drop list a pipeline feeds
     // back into curation.
@@ -3660,7 +3654,7 @@ object SparkEntry {
           when(col("res") < pmod(col("alloc_tokens"), lit(nRes.toLong)), 1L)
             .otherwise(0L))
         .select(col("lang"), col("res"), col("sub_alloc"))
-        .localCheckpoint(true)
+        .transform(Pin.pin)
       val p = scratch("stream_bfill", dir)
       // kept rows land in a per-batch parquet SINK (overwrite into a
       // batch=<id> subdir — a retried batch rewrites only its own
@@ -3823,7 +3817,7 @@ object SparkEntry {
       } { (batch0, batchId) =>
         // one materialization feeds the probe, the left side of the
         // decision join, and the index append
-        val b = batch0.localCheckpoint(true)
+        val b = batch0.transform(Pin.pin)
         val decided =
           if (batchId == 0L) // nothing indexed yet: all kept
             b.select(col("doc_id").as("doc"), lit(false).as("dropped"))
@@ -4607,7 +4601,7 @@ object SparkEntry {
             .otherwise(col("embedding").cast("array<double>")).as("_v"))
       val q = base.where(col("vec_id") < 32)
         .select(col("vec_id").as("query_id"), col("_v").as("_qv"))
-      val scored = graft.ext.Pin.pin(base.repartition(col("vec_id"))
+      val scored = Pin.pin(base.repartition(col("vec_id"))
         .crossJoin(broadcast(q))
         .where(col("vec_id") =!= col("query_id"))
         .withColumn("_pc", graft.functions.VectorFunctions.prefixCosines(
@@ -4622,7 +4616,7 @@ object SparkEntry {
           .where(col("rank") <= 10)
           .select(col("query_id"), col("candidate_id"))
       }
-      val full = topk(cuts.length - 1).localCheckpoint(true)
+      val full = topk(cuts.length - 1).transform(Pin.pin)
       cuts.zipWithIndex.map { case (d, i) =>
         topk(i).join(full, Seq("query_id", "candidate_id"))
           .agg(count(lit(1)).as("hits"))
@@ -4762,7 +4756,7 @@ object SparkEntry {
           UrlOps.hostOf(UrlOps.canonicalUrl(col("url"))).as("host"))
         .withColumn("hid",
           conv(substring(md5(col("host")), 1, 15), 16, 10).cast("long"))
-        .localCheckpoint(true)
+        .transform(Pin.pin)
       val hsrc = hframe.select(col("doc_id").as("src"),
         col("hid").as("hsrc"))
       val hdst = hframe.select(col("doc_id").as("dst"),
@@ -4848,15 +4842,15 @@ object SparkEntry {
         .select((col("doc_id") + 1000000L).as("doc_id"),
           concat_ws(" ", slice(split(col("text"), " "), 2, 1000000))
             .as("text"))
-      val corpus = docs.unionByName(edited).localCheckpoint(true)
+      val corpus = docs.unionByName(edited).transform(Pin.pin)
       // both pair frames feed TWO consumers (their own count + the hits
       // join): pinned (r16), each mining pass runs once — unpinned, the
       // full PPJoin truth pass and the simhash banding pass re-executed
       // for the second consumer
-      val truth = graft.ext.Pin.pin(Dedup.jaccardPairs(
+      val truth = Pin.pin(Dedup.jaccardPairs(
           Dedup.hashedShingles(corpus, "doc_id", "text", 3), 0.5)
         .select(col("doc_a"), col("doc_b")))
-      val cand = graft.ext.Pin.pin(Dedup.simhashDupPairsAtScalePortable(corpus,
+      val cand = Pin.pin(Dedup.simhashDupPairsAtScalePortable(corpus,
           "doc_id", "text", maxDist = 3, nBlocks = 6)
         .select(col("doc_a"), col("doc_b")))
       val hits = cand.join(truth, Seq("doc_a", "doc_b"))
@@ -5267,7 +5261,7 @@ object SparkEntry {
           .select((col("doc_id") + 2000000L).as("doc_id"), col("text"),
             concat_ws(" ", lit("txtimgseed"), col("doc_id").cast("string"),
               md5(col("text"))).as("iseed")))
-        .localCheckpoint(true) // three consumers: text graph, media, ids
+        .transform(Pin.pin) // three consumers: text graph, media, ids
       val media = corpus.select(col("doc_id"), col("iseed"))
         .repartition(s.sparkContext.defaultParallelism)
         .as[(Long, String)]

@@ -112,7 +112,6 @@ final case class MeteauSignal(data: DataFrame, meta: SignalMeta) {
     * Ref: types.py:753-764 (`Signal.rename`). */
   def rename(newName: String): MeteauSignal = {
     val newPart = Naming.ensureNumbered(newName)
-    val oldPart = Naming.ensureNumbered(meta.name)
     val renamed = meta.series.map { sm =>
       val (_, seriesPart) = Naming.splitKey(sm.seriesKey)
       sm.copy(seriesKey = s"${newPart}_$seriesPart")

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Learned byte-pair encoding (Sennrich, Haddow, Birch — "Neural Machine
@@ -46,17 +46,9 @@ import org.apache.spark.sql.functions._
   *   vocabulary, and the dict side is vocab-sized (AQE broadcast-able
   *   for real corpora).
   *
-  * Training, two modes: [[trainMerges]] is textbook sequential BPE —
-  * one driver-synchronized round per merge, the oracle-replayable
-  * semantics. [[trainMergesBatched]] amortizes driver rounds for
-  * production merge counts: each Spark round selects the top-B
-  * NON-INTERACTING pairs (greedy by the same (count desc, l, r) order;
-  * a pair is skipped if either symbol, or its concatenation, was
-  * touched by an earlier selection in the batch — so within a batch no
-  * replace can create or consume another's match) and applies them in
-  * one projection. B=1 degenerates to exactly [[trainMerges]]; B>1 is
-  * the public "batch BPE" approximation — deterministic, but counts
-  * between batch members are not refreshed mid-batch. */
+  * Training: [[trainMerges]] is textbook sequential BPE — one
+  * driver-synchronized round per merge, the oracle-replayable
+  * semantics. */
 object Bpe {
 
   /** Symbolized word-frequency dict: (word, freq, rep). */
@@ -78,7 +70,7 @@ object Bpe {
   /** Train `m` merges; stops early if the dict runs out of pairs. */
   def trainMerges(df: DataFrame, textCol: String, m: Int,
       passes: Int = 6): Seq[(String, String)] = {
-    var rep = wordDict(df, textCol).localCheckpoint(true)
+    var rep = wordDict(df, textCol).transform(Pin.pin)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var exhausted = false
     var round = 0
@@ -97,7 +89,7 @@ object Bpe {
         val (l, r) = (best(0).getString(0), best(0).getString(1))
         merges += ((l, r))
         rep = rep.withColumn("rep", applyMerge(col("rep"), l, r, passes))
-          .localCheckpoint(true)
+          .transform(Pin.pin)
       }
       round += 1
     }
@@ -123,60 +115,6 @@ object Bpe {
         sum(col("_nt")).cast("long").as("bpe_tokens"))
   }
 
-  /** Train `m` merges with `batchSize` selections per Spark round — the
-    * production-merge-count mode (30k merges = ~1k rounds at B=32, not
-    * 30k). Selection per round: pair-count aggregate (optionally over a
-    * deterministic hash-sample of word TYPES when `sampleFraction` < 1 —
-    * sampling types, not occurrences, keeps freq weights unbiased within
-    * the sample), collect the top 4·B rows, greedily keep pairs whose
-    * symbols and concatenation don't collide with an earlier selection
-    * in the batch, apply all kept merges in ONE projection +
-    * localCheckpoint. B=1 reproduces [[trainMerges]] exactly (same
-    * argmax, same order). */
-  def trainMergesBatched(df: DataFrame, textCol: String, m: Int,
-      batchSize: Int = 32, passes: Int = 6,
-      sampleFraction: Double = 1.0): Seq[(String, String)] = {
-    require(batchSize >= 1, "batchSize must be >= 1")
-    var rep = wordDict(df, textCol).localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var exhausted = false
-    while (merges.length < m && !exhausted) {
-      val s = split(trim(col("rep")), " ")
-      val base =
-        if (sampleFraction >= 1.0) rep
-        else rep.where(pmod(xxhash64(col("word")), lit(1000000L)) <
-          lit((sampleFraction * 1000000L).toLong))
-      val want = math.min(batchSize, m - merges.length)
-      val top = base.where(size(s) >= 2)
-        .select(col("freq"), explode(transform(sequence(lit(0), size(s) - 2),
-          i => struct(element_at(s, i + 1).as("l"),
-            element_at(s, i + 2).as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("c"))
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(want * 4 + 4).collect()
-      // greedy non-interacting selection: the first row always
-      // qualifies (used is empty), so sel is empty iff top is —
-      // progress per round is guaranteed while pairs remain
-      val used = scala.collection.mutable.Set.empty[String]
-      val sel = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      top.iterator.takeWhile(_ => sel.length < want).foreach { row =>
-        val (l, r) = (row.getString(0), row.getString(1))
-        if (!used(l) && !used(r) && !used(l + r)) {
-          sel += ((l, r)); used += l; used += r; used += (l + r)
-        }
-      }
-      if (sel.isEmpty) exhausted = true
-      else {
-        merges ++= sel
-        rep = rep.withColumn("rep", sel.foldLeft(col("rep")) {
-            case (c, (l, r)) => applyMerge(c, l, r, passes) })
-          .localCheckpoint(true)
-      }
-    }
-    merges.toSeq
-  }
-
   /** Apply a merge list over a `rep`-carrying dict in bounded-depth
     * projection batches: `batch` merges (6·batch nested replaces) per
     * projection, localCheckpoint between batches so neither the
@@ -186,7 +124,7 @@ object Bpe {
     merges.grouped(batch).foldLeft(dict) { (d, g) =>
       d.withColumn("rep", g.foldLeft(col("rep")) {
           case (c, (l, r)) => applyMerge(c, l, r, passes) })
-        .localCheckpoint(true)
+        .transform(Pin.pin)
     }
 
   /** [[tokenCounts]] by the type-level path (header note): replace

@@ -90,24 +90,24 @@ object CurationPipeline {
     // pass and the mix sample on every evaluation). A pin here is
     // where a real pipeline materializes the stage artifact anyway.
     val urlDeduped = ingest.join(keepUrl, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val cleaned = TextAnalysis.c4Clean(urlDeduped, "doc_id", "text",
         carry = Seq("lang", "source"), minSentences = minSentences)
       .where(col("c4_keep"))
       .select(col("doc_id"), col("c4_text").as("text"), col("lang"),
         col("source"))
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val cl = Dedup.dedupClustersDistinctWith(cleaned, "doc_id", "text")(
       rep => Dedup.jaccardPairs(
         Dedup.hashedShingles(rep, "doc_id", "text", 3), 0.5))
     val deduped = cleaned.join(cl, cleaned("doc_id") === cl("doc"), "left")
       .where(col("root").isNull || col("root") === cleaned("doc_id"))
       .select(cleaned("doc_id"), col("text"), col("lang"), col("source"))
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val gp = TextAnalysis.gopherRules(deduped, "doc_id", "text")
       .where(col("gopher_pass")).select(col("doc_id"))
     val gated = deduped.join(gp, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     // exact-median cutoff compared in exact dyadic double arithmetic
     // (scores are 2^-20-grid sums), so the boundary is engine- and
     // partition-invariant. The two median order statistics come from
@@ -122,7 +122,7 @@ object CurationPipeline {
     // null, the filter drops everything — no element_at(_, 0) crash.
     val scz = gated.withColumn("_sc",
         QualityModel.scoreText(col("text"), model))
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val nF = scz.agg(count(lit(1)).as("_n"))
     val medRanked = Ranks.globalRowNumber(
       scz.select(col("_sc"), col("doc_id")),
@@ -139,7 +139,7 @@ object CurationPipeline {
       .where(col("_sc") * 2 > (lit(2) - col("_r")) * col("_lo") +
         col("_r") * col("_hi"))
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     // rank-prior gate: keep pages whose link-graph rank clears the
     // exact p75 order-statistic cutoff of the FULL rank table (the
     // doc_curate_rank discipline: 4·rank ≥ (4−r)·lo + r·hi over
@@ -154,25 +154,25 @@ object CurationPipeline {
       .where(col("rank").cast(dec6) * 4 >=
         (lit(4) - col("_r")) * col("_lo") + col("_r") * col("_hi"))
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val bench = benchOf(cleaned)
     val contam = Dedup.crossJaccardPairs(ranked, bench, "doc_id",
         "text", minJ = 0.5)
       .select(col("doc_a").as("doc_id")).distinct()
     val decon = ranked.join(contam, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val mixed = Corpus.temperatureMixSample(decon, "doc_id", "source",
         keepBp = keepBp)
       .where(col("selected"))
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val packed = Corpus.shufflePack(mixed, "doc_id", "text",
         seed = seed, budgetTokens = budgetTokens)
       .join(mixed.select(col("doc_id").as("doc"), col("lang"),
         col("source")), "doc")
       .select(col("doc"), col("lang"), col("source"), col("shuffle_key"),
         col("n_tokens"), col("start_offset"), col("shard_id"))
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     Stages(ingest, urlDeduped, cleaned, deduped, gated, scoredKeep,
       ranked, decon, mixed, packed, medianCut = scut, rankCut = rcut)
   }

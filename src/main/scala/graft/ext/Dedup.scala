@@ -359,10 +359,10 @@ object Dedup {
   def shingleArray(words: Column, n: Int): Column =
     graft.functions.MinHashFunctions.shingleHashes(words, n)
 
-  /** Row-local MinHash signature from a hashed-shingle array — the same
-    * per-permutation minima [[minhashSignatures]] computes as an
-    * aggregate, without the explode/groupBy, so a streaming (stateless)
-    * stage can compute it. Native codegen'd expression; bit-identical to
+  /** Row-local MinHash signature from a hashed-shingle array:
+    * signature[i] = min over shingles of xxhash64(i, shingle), computed
+    * without an explode/groupBy, so a streaming (stateless) stage can
+    * compute it. Native codegen'd expression; bit-identical to
     * `array((0 until k).map(i => array_min(transform(shs, s ->
     * xxhash64(lit(i), s)))))` (ExtSpec pins the equality) — the HOF form
     * re-walked the shingle array through 64 interpreted lambda passes. */
@@ -407,7 +407,7 @@ object Dedup {
     // JVM would otherwise accumulate storage memory relying on LRU
     // eviction (ADVICE r9); checkpoint blocks are freed by the
     // ContextCleaner as soon as the frame is unreferenced.
-    val sh = shIn.localCheckpoint(true)
+    val sh = shIn.transform(Pin.pin)
     val pref = jaccardPrefixes(sh, minC)
     val cand = pref.as("a").join(sh.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc") =!= col("b.doc"))
@@ -500,23 +500,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** MinHash signatures from hashed shingles: numHashes permutations
-    * approximated by affine re-mixes of the 64-bit shingle hash
-    * (h_i = a_i*sh + b_i with odd multipliers — a standard universal-ish
-    * family); signature[i] = min over shingles. One hash aggregate per
-    * document, all mins computed in a single pass. */
-  def minhashSignatures(sh: DataFrame, numHashes: Int = 64): DataFrame = {
-    val mins: Seq[Column] = (0 until numHashes).map { i =>
-      min(xxhash64(lit(i), col("sh"))).as(s"h$i")
-    }
-    sh.groupBy(col("doc")).agg(mins.head, mins.tail: _*)
-      .select(col("doc"), array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
-  }
-
-  /** LSH banding: signature rows are grouped into `bands` bands of
-    * `rowsPerBand`; documents colliding on any full band become candidate
-    * pairs. Join key is (band_id, band_hash) — short and uniformly
-    * distributed, so the shuffle is balanced. */
   /** The banded signature frame (doc, band, bandhash) behind
     * [[lshCandidates]] — public for occupancy diagnostics. */
   def minhashBands(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
@@ -532,6 +515,10 @@ object Dedup {
   def minhashBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
     graft.functions.MinHashFunctions.bandKeys(sig, bands, rowsPerBand)
 
+  /** LSH banding: signature rows are grouped into `bands` bands of
+    * `rowsPerBand`; documents colliding on any full band become candidate
+    * pairs. Join key is (band_id, band_hash) — short and uniformly
+    * distributed, so the shuffle is balanced. */
   def lshCandidates(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
     val banded = minhashBands(sig, bands, rowsPerBand)
     // force sort-merge: both sides are corpus-sized (n·bands rows), but
@@ -574,96 +561,37 @@ object Dedup {
     // materialized form is small — one 64-long array per doc
     val sigs = docs.select(col("doc"),
         minhashSignature(col("_shs"), numHashes).as("sig"))
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     // materialize the candidate set too: candidates are
     // banding-collision-bounded (tiny next to the corpus), and handing
     // the verify stage a checkpointed input keeps it a small broadcast
     // join instead of a branch of one mega-DAG. Checkpoint blocks free
     // via the ContextCleaner.
     val cand = lshCandidates(sigs, bands, numHashes / bands)
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val docSets = docs.select(col("doc"), sort_array(col("_shs")).as("shs"),
       size(col("_shs")).cast("long").as("n"))
     verifyPairsWithSets(cand, docSets, minJ)
-  }
-
-  /** Cross-corpus near-dup join — FUZZY decontamination, the near-dup
-    * completion of [[Corpus.contamination]]'s exact n-gram overlap (a
-    * benchmark doc that was lightly edited before leaking into the train
-    * set shares few exact 5-grams but a high shingle Jaccard): near-dup
-    * pairs between a corpus-sized TRAIN side and a small BENCHMARK side,
-    * with the same shingle/signature/banding machinery and recall curve
-    * as [[minhashDupPairs]].
-    *
-    * The asymmetry does all the scale work: the benchmark's bands and
-    * shingle sets BROADCAST, so the candidate join is map-side against
-    * the train side's row-local banded projection — the train corpus is
-    * never shuffled on a content key. Verification joins the
-    * collision-bounded candidate set back to the train shingle arrays
-    * (shuffle-hash, candidate build side — the [[verifyPairsWithSets]]
-    * estimate-poisoning discipline) and to the broadcast bench sets,
-    * then filters on exact Jaccard. Emits (doc_a = train, doc_b = bench,
-    * jaccard >= minJ). */
-  def crossMinhashPairs(train: DataFrame, bench: DataFrame, idCol: String,
-      textCol: String, minJ: Double, n: Int = 3, numHashes: Int = 64,
-      bands: Int = 16): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands) — " +
-        "integer truncation would silently drop signature positions and " +
-        "shift the bands x rows recall curve")
-    def prep(df: DataFrame) = df.select(col(idCol).as("doc"),
-      shingleArray(split(col(textCol), " "), n).as("_shs"))
-    val rows = numHashes / bands
-    val be = prep(bench).localCheckpoint(true)
-    val beBand = minhashBands(
-      be.select(col("doc"),
-        minhashSignature(col("_shs"), numHashes).as("sig")), bands, rows)
-      .select(col("doc").as("doc_b"), col("band"), col("bandhash"))
-    val beSets = be.select(col("doc").as("doc_b"),
-      sort_array(col("_shs")).as("shb"),
-      size(col("_shs")).cast("long").as("nb"))
-    val tr = prep(train)
-    val trBand = tr.select(col("doc").as("doc_a"),
-        posexplode(minhashBandKeys(
-          minhashSignature(col("_shs"), numHashes), bands, rows)))
-      .toDF("doc_a", "band", "bandhash")
-    val cand = trBand.join(broadcast(beBand), Seq("band", "bandhash"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-      .localCheckpoint(true)
-    val trSets = tr.select(col("doc").as("doc_a"),
-      sort_array(col("_shs")).as("sha"),
-      size(col("_shs")).cast("long").as("na"))
-    cand.hint("merge").join(trSets, "doc_a")
-      .join(broadcast(beSets), "doc_b")
-      .where(col("nb") >= col("na") * minJ && col("na") >= col("nb") * minJ)
-      .withColumn("i", graft.functions.VectorFunctions
-        .sortedIntersectCount(col("sha"), col("shb")))
-      .withColumn("jaccard",
-        col("i").cast("double") / (col("na") + col("nb") - col("i")))
-      .where(col("jaccard") >= minJ)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
   /** EXACT cross-corpus near-dup pairs: every (train, bench) pair with
     * hashed-shingle Jaccard >= minJ — recall 1.0 BY CONSTRUCTION (no
     * banding recall curve), so a brute-force oracle matches it
     * definitionally at any scale or data. The bench side (benchmark /
-    * eval suites — small next to the train corpus, and
-    * [[crossMinhashPairs]] already broadcasts its shingle SETS for
-    * verification) is broadcast twice: an inverted shingle index for
-    * intersection counting and the set-size frame for the Jaccard
-    * denominator. The train corpus is scanned once, exploded row-locally,
-    * and aggregated on (doc_a, doc_b) — candidate mass is bounded by
+    * eval suites — small next to the train corpus) is broadcast twice:
+    * an inverted shingle index for intersection counting and the
+    * set-size frame for the Jaccard denominator. The train corpus is
+    * scanned once, exploded row-locally, and aggregated on
+    * (doc_a, doc_b) — candidate mass is bounded by
     * shared-shingle pairs, and the train side is never shuffled on a
     * content key (the (doc_a, doc_b) aggregate is map-side combinable).
     * Use this when the bench side fits a broadcast (the decontamination
-    * case); [[crossMinhashPairs]] remains the banded detector whose
-    * operating point doc_lsh_audit / the qmodel1m tier measure. */
+    * case). */
   def crossJaccardPairs(train: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, minJ: Double, n: Int = 3): DataFrame = {
     def prep(df: DataFrame) = df.select(col(idCol).as("doc"),
       shingleArray(split(col(textCol), " "), n).as("_shs"))
-    val be = prep(bench).localCheckpoint(true)
+    val be = prep(bench).transform(Pin.pin)
     val beSh = be.select(col("doc").as("doc_b"), explode(col("_shs")).as("sh"))
     val beN = be.select(col("doc").as("doc_b"),
       size(col("_shs")).cast("long").as("nb"))
@@ -682,8 +610,7 @@ object Dedup {
   /** 64-bit SimHash over whitespace tokens, computed row-locally with
     * array folds (no explode, no shuffle): per bit, sign of Σ ±1 over
     * token hashes. Near-dup = small Hamming distance; pair generation via
-    * 16-bit chunk banding (any equal chunk → candidate), same LSH shape as
-    * MinHash banding. */
+    * [[simhashBands]] combination banding. */
   def simhash64(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // token hashes materialized once, then one native codegen'd pass over
     // them per row (graft.functions.SimHash64: tight token×bit loop; same
@@ -717,47 +644,13 @@ object Dedup {
         graft.functions.VectorFunctions.md5Hash60Tokens(
           split(col(textCol), " "))).as("simhash"))
 
-  /** Candidate near-dup pairs by SimHash chunk collision + Hamming
-    * distance <= maxDist verification. With `nChunks` bands a pair within
-    * Hamming distance d is guaranteed to collide on some chunk iff
-    * d < nChunks (pigeonhole).
-    *
-    * Bucket-occupancy math (same form as Similarity.lshBucketedPairs):
-    * each band has 2^(64/nChunks) buckets, and the in-bucket self-join
-    * does ~n²/2^(64/nChunks) comparisons per band on a hash-uniform
-    * corpus. The old 8×8-bit default gave only 256 buckets/band —
-    * ~n²/256 pairs per band, quadratic at corpus scale. The default is
-    * now 4×16-bit chunks: 65 536 buckets/band, so candidate work stays
-    * ~n²/65 536 + true near-dup collisions — linear-ish out to ~10⁸ docs
-    * per band bucket-balance — at the cost of guaranteed recall only for
-    * maxDist <= 3 (which is the standard near-dup threshold, cf. Manku
-    * et al., WWW'07). Pass maxDist=7, nChunks=8 explicitly to recover the
-    * wider-radius exact banding on small corpora. */
-  def simhashDupPairs(df: DataFrame, idCol: String, textCol: String,
-      maxDist: Int = 3, nChunks: Int = 4): DataFrame = {
-    require(maxDist < nChunks,
-      s"banding with $nChunks chunks only guarantees recall for distance < $nChunks")
-    val sim = simhash64(df, idCol, textCol).cache()
-    val chunked = simhashChunks(sim, nChunks)
-    val cand = chunked.as("a").join(chunked.as("b"),
-        col("a.chunk") === col("b.chunk") &&
-          col("a.chunkval") === col("b.chunkval") &&
-          col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("doc_a"), col("a.simhash").as("sim_a"),
-        col("b.doc").as("doc_b"), col("b.simhash").as("sim_b"))
-      .distinct()
-    cand.withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .where(col("hamming") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-  }
-
   /** Manku-style COMBINATION banding frame (doc, simhash, band, bandkey)
-    * for [[simhashDupPairsAtScale]]: the 64 bits split into `nBlocks`
-    * near-equal blocks; one table (band) per (nBlocks − maxDist)-block
-    * combination, keyed by the hash of those blocks' values. A pair
+    * for [[simhashDupPairsAtScalePortable]]: the 64 bits split into
+    * `nBlocks` near-equal blocks; one table (band) per
+    * (nBlocks − maxDist)-block combination, keyed by the hash of those blocks' values. A pair
     * within Hamming distance `maxDist` differs in at most `maxDist`
     * blocks, so some combination avoids every differing block and the
-    * pair collides there — the same exact-recall pigeonhole as the chunk
+    * pair collides there — the same exact-recall pigeonhole as plain chunk
     * banding, but each table key now carries ≈ 64·(nBlocks−maxDist)/
     * nBlocks bits: with the 6-block/d=3 default that is C(6,3)=20 tables
     * of 32-bit keys → 2³² buckets/table, vs 2¹⁶ for the 4×16 chunking.
@@ -783,17 +676,6 @@ object Dedup {
       .toDF("doc", "simhash", "band", "bandkey")
   }
 
-  /** SimHash near-dup pairs with combination banding — the CORPUS-SCALE
-    * path. [[simhashDupPairs]]'s 4×16 chunking carries a ~n²/2¹⁶ random-
-    * collision term per band (fine to ~10⁶ docs, quadratic beyond);
-    * combination banding pays C(nBlocks, nBlocks−maxDist)× the shuffle
-    * volume to push bucket count to ~2³², making random collisions
-    * negligible out to ~10⁹ docs. Identical output (exact Hamming
-    * verification of candidates; recall guaranteed by the pigeonhole). */
-  def simhashDupPairsAtScale(df: DataFrame, idCol: String, textCol: String,
-      maxDist: Int = 3, nBlocks: Int = 6): DataFrame =
-    dupPairsFromSim(simhash64(df, idCol, textCol).cache(), maxDist, nBlocks)
-
   /** Combination-banded near-dup pairs over the PORTABLE 60-bit
     * fingerprint ([[portableSimhash64]]) instead of the engine xxhash64
     * one. The output is fully DETERMINISTIC and engine-independent:
@@ -802,8 +684,10 @@ object Dedup {
     * false candidate, so the result is EXACTLY the set of pairs with
     * portable-fingerprint Hamming distance <= maxDist — an independent
     * SQL engine recomputing md5-token simhashes and an all-pairs
-    * Hamming scan reproduces it bit-for-bit. Same plan shape (and thus
-    * the same corpus-scale cost profile) as the engine-hash path. */
+    * Hamming scan reproduces it bit-for-bit. Combination banding pays
+    * C(nBlocks, nBlocks−maxDist)× the shuffle volume of a 4×16 chunk
+    * banding to push bucket count from ~2¹⁶ to ~2³² per band, so random
+    * collisions stay negligible out to ~10⁹ docs. */
   def simhashDupPairsAtScalePortable(df: DataFrame, idCol: String,
       textCol: String, maxDist: Int = 3, nBlocks: Int = 6): DataFrame =
     dupPairsFromSim(portableSimhash64(df, idCol, textCol).cache(),
@@ -927,7 +811,7 @@ object Dedup {
   @volatile private[graft] var lastClusterRounds: Int = 0
 
   /** doc → representative (min doc id of identical full content) — the
-    * exact-duplicate grouping stage of [[dedupClustersDistinct]]. One
+    * exact-duplicate grouping stage of [[dedupClustersDistinctWith]]. One
     * hash aggregate on md5(text) + one equi-join; no banding involved. */
   def exactDupReps(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val keyed = df.select(col(idCol).as("doc"), md5(col(textCol)).as("_ck"))
@@ -949,27 +833,19 @@ object Dedup {
     * rep-level clusters with [[dedupClusters]], and stage 4 expands
     * membership back through the exact-dup groups with one join.
     *
-    * Output ≡ `dedupClusters(jaccardPairs(all docs))` (same (doc, root)
-    * rows): identical content has identical shingle sets, so the full
-    * pair graph is the content-group blow-up of the rep graph — its
-    * components are the expanded rep components, and each root (min id)
-    * is preserved because every rep is already its group's min id.
-    * ExtSpec pins the equality; the ScaleSmoke `hotbucket1m` tier
-    * measures the flat task profile under a 10⁴-copy adversarial mix. */
-  def dedupClustersDistinct(df: DataFrame, idCol: String, textCol: String,
-      minJ: Double, n: Int = 3): DataFrame =
-    dedupClustersDistinctWith(df, idCol, textCol)(repDocs =>
-      minhashDupPairs(repDocs, idCol, textCol, minJ, n))
-
-  /** [[dedupClustersDistinct]] parameterized over the rep-level pair
-    * miner (`mine` gets the distinct-content representatives and returns
-    * (doc_a, doc_b) pairs) — so the exact PPJoin miner gets the same
-    * hot-bucket short-circuit as the MinHash one: identical documents
-    * have identical shingle sets, so ANY shingle-keyed candidate join
-    * (prefix buckets included) does O(k²) work on k copies unless the
-    * copies are collapsed first. The blow-up equivalence only needs the
-    * miner to respect content equality, which every shingle-derived
-    * miner does. */
+    * `mine` gets the distinct-content representatives and returns
+    * (doc_a, doc_b) pairs — the exact PPJoin miner and the MinHash one
+    * get the same short-circuit: identical documents have identical
+    * shingle sets, so ANY shingle-keyed candidate join (prefix buckets
+    * included) does O(k²) work on k copies unless the copies are
+    * collapsed first. Output ≡ `dedupClusters(mine(all docs))` (same
+    * (doc, root) rows) for any miner that respects content equality,
+    * which every shingle-derived miner does: the full pair graph is the
+    * content-group blow-up of the rep graph, so its components are the
+    * expanded rep components, and each root (min id) is preserved
+    * because every rep is already its group's min id. ExtSpec pins the
+    * equality; the ScaleSmoke `hotbucket1m` tier measures the flat task
+    * profile under a 10⁴-copy adversarial mix. */
   def dedupClustersDistinctWith(df: DataFrame, idCol: String,
       textCol: String)(mine: DataFrame => DataFrame): DataFrame = {
     // localCheckpoint (eager): consumed by the rep slice now and the
@@ -977,7 +853,7 @@ object Dedup {
     // would need an unpersist no safe place exists for (cf. the
     // ivfPqProbeRerank shortlist); checkpoint blocks free themselves via
     // the ContextCleaner once the frame is unreferenced
-    val reps = exactDupReps(df, idCol, textCol).localCheckpoint(true)
+    val reps = exactDupReps(df, idCol, textCol).transform(Pin.pin)
     val repDocs = df.select(col(idCol), col(textCol))
       .join(reps.where(col("doc") === col("rep")).select(col("doc")),
         col(idCol) === col("doc"), "left_semi")
@@ -988,16 +864,5 @@ object Dedup {
     reps.join(repClusters, col("rep") === col("_cdoc"), "left")
       .where(col("_croot").isNotNull || col("n_copies") > 1L)
       .select(col("doc"), coalesce(col("_croot"), col("rep")).as("root"))
-  }
-
-  /** The chunk-banding frame behind [[simhashDupPairs]] — public for
-    * occupancy diagnostics. */
-  def simhashChunks(sim: DataFrame, nChunks: Int): DataFrame = {
-    val bitsPer = 64 / nChunks
-    val mask = (1L << bitsPer) - 1
-    sim.select(col("doc"), col("simhash"),
-        posexplode(array((0 until nChunks).map(i =>
-          shiftright(col("simhash"), i * bitsPer).bitwiseAND(mask)): _*)))
-      .toDF("doc", "simhash", "chunk", "chunkval")
   }
 }

@@ -56,9 +56,8 @@ import org.apache.spark.sql.types.DecimalType
   * relational reference) and leaves one narrow aggregate per round.
   * Empty clusters keep their previous centroid (no re-seed RNG). At
   * 100 TB the same loop runs with k in the thousands: the centroid
-  * matrix rides as a task reference (or broadcast via the trainFastBcast
-  * twin), and the per-round shuffle is one narrow aggregate — the
-  * canonical distributed-Lloyd layout.
+  * matrix rides as a task reference, and the per-round shuffle is one
+  * narrow aggregate — the canonical distributed-Lloyd layout.
   */
 object Kmeans {
 
@@ -148,27 +147,6 @@ object Kmeans {
       best.getField("dist2").as("dist2"))
   }
 
-  /** [[assignServing]] with the centroid matrix as a Spark BROADCAST
-    * VARIABLE — the large-k form (r11 verdict task 4). The reference-
-    * object form serializes the k×d matrix into EVERY task binary: at
-    * the SemDeDup k ∝ N regime (k = 4096 at 1M → 2 MB, ~100k at web
-    * scale → ~50 MB) that is per-task wire + deserialize cost across
-    * thousands of tasks; a broadcast ships once per EXECUTOR and its
-    * value is unwrapped once per operator instance. Identical assign
-    * kernel — output bit-identical to [[assignServing]] (KmeansSpec +
-    * the kmbig tier pin it at k = 4096). The caller owns the broadcast
-    * lifecycle (create via `sparkSession.sparkContext.broadcast`,
-    * unpersist when retired). */
-  def assignServingBcast(df: DataFrame, idCol: String, vecCol: String,
-      bcast: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])
-      : DataFrame = {
-    val best = graft.functions.VectorFunctions.nearestCentroidBcast(
-      col(vecCol).cast("array<double>"), bcast)
-    df.select(col(idCol).cast("long").as(idCol),
-      best.getField("cluster").as("cluster"),
-      best.getField("dist2").as("dist2"))
-  }
-
   /** Higher-order-function formulation of [[assignServing]] — kept as the
     * reference implementation (bit-identical results; the whole k×d
     * centroid matrix is ONE literal node and the argmin one nested fold,
@@ -227,45 +205,6 @@ object Kmeans {
             r.getAs[Double]("_c")
         }
         cents = next
-      }
-      Model(cents)
-    } finally { vdf.unpersist(false): Unit }
-  }
-
-  /** [[trainFast]] with per-round BROADCAST centroids — the large-k
-    * trainer. Per round: one broadcast-argmin pass + the same
-    * (cluster, dim) exact-decimal aggregate; the k·d updated centroid
-    * values still round-trip the driver (creating the next round's
-    * broadcast requires the value driver-side — 2 MB at k=4096×d=64,
-    * the standard Pregel-aggregator cadence), but task binaries stay
-    * O(1) instead of O(k·d), which is what breaks first at large k.
-    * Retired broadcasts are unpersisted non-blocking each round.
-    * Bit-identical to [[trainFast]] (same kernel, same update
-    * discipline — the kmbig tier pins it at k = 4096). */
-  def trainFastBcast(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int): Model = {
-    val sc = df.sparkSession.sparkContext
-    val vdf = df.select(col(idCol).cast("long").as("_kid"),
-      col(vecCol).cast("array<double>").as("_v")).persist()
-    try {
-      var cents = seedCents(df, idCol, vecCol, k)
-      for (_ <- 1 to iters) {
-        val bc = sc.broadcast(cents)
-        val a = assignServingBcast(vdf, "_kid", "_v", bc)
-          .select(col("_kid"), col("cluster").as("_cl"))
-        val upd = vdf.join(a, "_kid")
-          .select(col("_cl"), posexplode(col("_v")).as(Seq("dim", "_x")))
-          .groupBy(col("_cl"), col("dim"))
-          .agg(r6p(sum(col("_x").cast(DecimalType(38, 12))).cast("double")
-            / count(lit(1))).as("_c"))
-          .collect()
-        val next = cents.map(_.clone)
-        upd.foreach { r =>
-          next(r.getAs[Long]("_cl").toInt)(r.getAs[Int]("dim")) =
-            r.getAs[Double]("_c")
-        }
-        cents = next
-        bc.unpersist(false)
       }
       Model(cents)
     } finally { vdf.unpersist(false): Unit }
@@ -481,61 +420,6 @@ object Kmeans {
       val kid = ids(keeper(r))
       (id, cluster, ids(r), kid, id == kid)
     }
-  }
-
-  /** SemDeDup SCALE PATH (r15 VERDICT task 3): [[semDedup]]'s
-    * intra-cluster pair stage is Σ|cluster|² comparisons — fine at
-    * survey scale, a wall once clusters carry thousands of members
-    * (10M vectors at k=4096 is ~24G pair comparisons; the semdedup10m
-    * tier measures the crack and this fix). Here cluster members are
-    * additionally BANDED by sign-LSH hyperplane signatures and pairs
-    * form only within (cluster, band, signature) buckets — the same
-    * move every near-dup operator in the repo makes (MinHash/SimHash
-    * bands, [[Similarity.lshBucketedPairs]]): pair work ∝ true
-    * near-dups + O(1)-occupancy random collisions, never member².
-    * Exact/near-exact duplicates share every band signature, so their
-    * recovery is deterministic (p = 1); general pairs at cosine c are
-    * caught with the OR-amplified 1 − (1 − p^bits)^bands, p = 1 − θ/π —
-    * recall is the knob, and the exact-cosine verify keeps false
-    * positives impossible. Keeper semantics identical to [[semDedup]]
-    * (the same grouped [[keepWithinClusters]] pass over the verified
-    * pairs, each carrying its cluster key); uses the
-    * serving (IEEE-double) arithmetic — the production tier, not the
-    * oracle-replay form. */
-  def semDedupBanded(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int, minCosine: Double, bits: Int = 12,
-      bands: Int = 8): DataFrame = {
-    val m = trainFast(df, idCol, vecCol, k, iters)
-    val af = assignServing(df, idCol, vecCol, m).transform(Pin.pin)
-    val vecs = df.select(col(idCol).cast("long").as("_vid"),
-      col(vecCol).cast("array<double>").as("_v"))
-    // signature rows stay NARROW (id, cluster, band, sig — no vector):
-    // the band self-join shuffles bands·n fixed-width rows, and only the
-    // deduped CANDIDATES ever see the vectors again (two id-equi-joins),
-    // so shuffle bytes are linear in rows however large Σ|cluster|² got
-    val sigs = Pin.pin(af.select(col(idCol), col("cluster"))
-      .join(vecs.select(col("_vid").as(idCol), col("_v")), Seq(idCol))
-      .select(col(idCol), col("cluster"),
-        posexplode(array((0 until bands).map(b =>
-          graft.functions.VectorFunctions
-            .hyperplaneSig(col("_v"), bits, b.toLong)): _*)))
-      .toDF(idCol, "cluster", "band", "sig"))
-    val cand = sigs.as("a").join(sigs.as("b"),
-        col("a.cluster") === col("b.cluster") &&
-          col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col("a.cluster").as("cluster"), col(s"a.$idCol").as("id_a"),
-        col(s"b.$idCol").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val pairs = cand
-      .join(vecs.select(col("_vid").as("id_a"), col("_v").as("_va")), "id_a")
-      .join(vecs.select(col("_vid").as("id_b"), col("_v").as("_vb")), "id_b")
-      .select(col("cluster"), col("id_a"), col("id_b"),
-        r6p(Similarity.dot(col("_va"), col("_vb"))
-          / (Similarity.norm(col("_va")) * Similarity.norm(col("_vb"))))
-          .as("_cos"))
-      .where(col("_cos") >= lit(minCosine))
-    keepWithinClusters(af, idCol, pairs)
   }
 
   /** DuckDB replay of [[train]] + [[assignFinal]]: the shared CTE prefix.

@@ -158,7 +158,7 @@ object Multimodal {
     // two fixed-width columns once (eager localCheckpoint, not cache:
     // repeated invocations would accumulate storage memory relying on
     // LRU eviction, ADVICE r9) so the (codec-bound) upstream runs ONCE
-    val hashed = hashedIn.localCheckpoint(true)
+    val hashed = hashedIn.transform(Pin.pin)
     val sim = hashed.where(col("dhash").isNotNull)
       .select(col("doc_id").as("doc"), col("dhash").as("simhash"))
     Dedup.dupPairsFromSim(sim, maxHamming, nBlocks)
@@ -357,8 +357,6 @@ object MultimodalCodecs {
   // timescale/duration, the video trak's tkhd its 16.16 display size, and
   // stts the sample (frame) count as an entry sum.
 
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
   private def be32(b: Array[Byte], i: Int): Long =
     (((b(i) & 0xff).toLong << 24) | ((b(i + 1) & 0xff) << 16) |
       ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)) & 0xffffffffL

@@ -28,19 +28,8 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity of two `array<double>` columns. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   private def asDouble(df: DataFrame, vecCol: String): DataFrame =
     df.withColumn(vecCol, col(vecCol).cast("array<double>"))
-
-  /** Portable 6-dp half-up round: floor(x·1e6 + 0.5)/1e6 — the same IEEE
-    * op sequence on every engine. Used wherever a rounded value feeds a
-    * COMPARISON (argmin/argmax/ranking) rather than native `round`: Spark
-    * Round (shortest-decimal HALF_UP) and DuckDB round (float
-    * multiply-and-round) can disagree on exact .5 boundaries, which would
-    * flip the decision. */
-  private def r6p(c: Column): Column = floor(c * 1000000.0 + 0.5) / 1000000.0
 
   /** Element-wise mean vector per key — the class-centroid /
     * cluster-representative primitive (mean-pooling a group of
@@ -330,21 +319,6 @@ object Similarity {
       .orderBy(col("cosine").desc, col("id_a"), col("id_b"))
       .limit(topN)
 
-  /** Random-hyperplane (sign-LSH) signature: `bits` sign bits packed into
-    * a long, computed by the native codegen'd
-    * [[graft.functions.HyperplaneSig]] expression (deterministic
-    * splitmix64-derived hyperplanes, weight table cached per generated
-    * class — replaces the r1 unrolled per-bit HOF projections that fell
-    * back to interpreted evaluation). `seed` varies the hyperplane family
-    * (one seed per band in the banded search). */
-  def hyperplaneSignature(df: DataFrame, idCol: String, vecCol: String,
-      bits: Int = 16, seed: Long = 0L): DataFrame = {
-    val d = asDouble(df, vecCol)
-    d.select(col(idCol), col(vecCol),
-      graft.functions.VectorFunctions
-        .hyperplaneSig(col(vecCol), bits, seed).as("lsh_sig"))
-  }
-
   /** Banded sign-LSH pair search (AND-OR amplification): `bands`
     * independent `bits`-bit signatures per vector; any shared
     * (band, signature) bucket makes a candidate pair, verified with the
@@ -481,15 +455,6 @@ object Similarity {
     cents
   }
 
-  /** [[learnCentroidArrays]] as a (list, c) DataFrame. */
-  def learnCentroids(df: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int = 3): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    learnCentroidArrays(df, idCol, vecCol, k, iters).zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }.toDF("list", "c")
-  }
-
   /** IVF top-k with learned centroids: build the k-means index, assign the
     * corpus in one shuffle-free projection pass, probe each query's
     * `nProbe` nearest lists. Scan fraction ≈ nProbe/nLists; the only
@@ -558,7 +523,7 @@ object Similarity {
     * no members are absent from the map; callers default them to 2.0
     * (the sphere's diameter — no pruning), which is only pessimistic for
     * a list nothing is assigned to anyway. */
-  def listRadii(candidates: DataFrame, idCol: String, vecCol: String,
+  def listRadii(candidates: DataFrame, vecCol: String,
       cents: Array[Array[Double]]): Map[Int, Double] =
     listRadiiAssigned(
       asDouble(candidates, vecCol)
@@ -602,7 +567,7 @@ object Similarity {
       precomputedRadii: Option[Map[Int, Double]] = None,
       roundScale: Int = 6): DataFrame = {
     val radii = precomputedRadii.getOrElse(
-      listRadii(candidates, idCol, vecCol, cents))
+      listRadii(candidates, vecCol, cents))
     val anchors = unitAnchors(cents)
     val anchorArr = array(anchors.map(a => array(a.map(lit): _*)): _*)
     val c = asDouble(candidates, vecCol)
@@ -627,7 +592,7 @@ object Similarity {
     val p1top = score(c.join(broadcast(qProbes), Seq("list")))
       .withColumn("_rk", row_number().over(w)).where(col("_rk") <= k)
       .drop("_rk")
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val kth = p1top.groupBy(col("query_id"))
       .agg(min(col("cosine")).as("_cosk"), count(lit(1)).as("_nk"))
       .select(col("query_id"),
@@ -747,25 +712,17 @@ object Similarity {
     * At 100 TB this is the operation that makes the index an INDEX: the
     * corpus pass and k-means training are paid once; growth costs one
     * assignment projection over the new rows only. */
-  /** (row count, mean distance-to-assigned-centroid) of a corpus frame —
-    * the drift stat shared by [[ivfAppend]] and [[ivfPqAppend]].
-    * Distances aggregate through exact decimal sums, so the stat is
-    * partition-count invariant. */
-  private def corpusDistStats(corpus: DataFrame, vecCol: String,
-      cents: Array[Array[Double]]): (Long, Double) = {
-    val r = corpus
-      .select(distToCentroid(col(vecCol), col("list"), cents).as("_d"))
-      .agg(count(lit(1)).as("n"), graft.ops.Resample.detMean(col("_d")).as("m"))
-      .head()
-    (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
-  }
-
   def ivfAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): IvfAppendStats = {
+      newVectors: DataFrame, vecCol: String): IvfAppendStats = {
     recoverCorpus(spark, path)
     val cents = loadIvfCentroids(spark, path)
-    def meanDist(corpus: DataFrame): (Long, Double) =
-      corpusDistStats(corpus, vecCol, cents)
+    def meanDist(corpus: DataFrame): (Long, Double) = {
+      val r = corpus
+        .select(distToCentroid(col(vecCol), col("list"), cents).as("_d"))
+        .agg(count(lit(1)).as("n"), graft.ops.Resample.detMean(col("_d")).as("m"))
+        .head()
+      (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
+    }
     val corpus = readIvfCorpus(spark, path)
     val (nBefore, distBefore) = meanDist(corpus)
     val assigned = asDouble(newVectors, vecCol)
@@ -800,18 +757,13 @@ object Similarity {
       path: String): Array[Array[Double]] =
     readJson(spark, s"$path/centroids.json", classOf[Array[Array[Double]]])
 
-  /** Rewrite a persisted index's corpus into one file per list partition.
-    * Every [[ivfAppend]] adds files inside the `list=` directories; after
-    * many small appends the probe pays per-file open cost. Compaction is
-    * a pure rewrite — assignments, values, and probe results are
-    * unchanged (row order within a list is irrelevant: scoring is
-    * row-local and the top-k sort is total). */
-  /** Crash recovery for [[ivfCompact]]'s rename-aside swap: a crash
-    * between `rename(dst, old)` and `rename(src, dst)` leaves the only
-    * live corpus stranded under `corpus_old`. Detect that state (corpus
-    * missing + corpus_old present) and rename it back, making recovery
-    * automatic on the next probe/append/compaction instead of a manual
-    * restore. Called from every public entry that reads `$path/corpus`. */
+  /** Crash recovery for a rename-aside swap of the corpus: a crash
+    * between `rename(corpus, corpus_old)` and the promotion of the
+    * rewrite leaves the only live corpus stranded under `corpus_old`.
+    * Detect that state (corpus missing + corpus_old present) and rename
+    * it back, making recovery automatic on the next probe or append
+    * instead of a manual restore. Called from every public entry that
+    * reads `$path/corpus`. */
   private def recoverCorpus(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -819,32 +771,6 @@ object Similarity {
     val old = new org.apache.hadoop.fs.Path(s"$path/corpus_old")
     val fs = dst.getFileSystem(conf)
     if (!fs.exists(dst) && fs.exists(old)) fs.rename(old, dst)
-  }
-
-  def ivfCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    recoverCorpus(spark, path)
-    val corpus = readIvfCorpus(spark, path)
-    val tmp = s"$path/corpus_compacting"
-    // hash-repartition on list: each list lands in exactly one task, so
-    // each `list=` directory is rewritten as one file
-    corpus.repartition(col("list"))
-      .write.mode("overwrite").partitionBy("list").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(s"$path/corpus")
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val old = new org.apache.hadoop.fs.Path(s"$path/corpus_old")
-    val fs = dst.getFileSystem(conf)
-    // rename the live corpus ASIDE before promoting the rewrite: a crash
-    // between the two renames leaves either the old or the new corpus
-    // intact under some name — never a window with no corpus at all
-    // (delete-then-rename had one). Concurrent probes during compaction
-    // still race the swap; single-writer, no-concurrent-probe is the
-    // documented contract (same as any parquet overwrite).
-    fs.delete(old, true) // leftover from a prior crashed compaction
-    fs.rename(dst, old)
-    fs.rename(src, dst)
-    fs.delete(old, true)
   }
 
   /** Per-list drift stats of a persisted IVF index: one aggregate pass
@@ -896,8 +822,7 @@ object Similarity {
     * replaces exactly the drifted `list=` directories (delete + rename
     * per drifted id — NOT a dynamic partition overwrite, which would
     * leave a drifted list's OLD rows alive if no reassigned row landed
-    * back on its id). Same single-writer / no-concurrent-probe contract
-    * as [[ivfCompact]].
+    * back on its id). Single-writer / no-concurrent-probe contract.
     *
     * Probe correctness: assignment is metadata for routing, never for
     * scoring — the exhaustive probe (nProbe = nLists) and the
@@ -943,8 +868,8 @@ object Similarity {
     // discovery never sees it) before promoting its rewrite: a crash
     // mid-swap leaves every list's rows alive under exactly one of
     // corpus/list=<l> or _retrain_old/list=<l> — never a deleted-and-
-    // not-yet-replaced window (the ivfCompact rename-aside discipline,
-    // per partition). Single-writer, no-concurrent-probe contract.
+    // not-yet-replaced window. Single-writer, no-concurrent-probe
+    // contract.
     val aside = new org.apache.hadoop.fs.Path(s"$path/_retrain_old")
     fs.delete(aside, true)
     fs.mkdirs(aside)
@@ -1089,9 +1014,8 @@ object Similarity {
   }
 
   /** Attach `codes` (per-subspace argmin codebook ids) and `_rn` (the
-    * reconstruction norm) for the given codebooks — the encode step,
-    * shared by the index build and [[ivfPqAppend]] so appended rows are
-    * encoded bit-identically to built rows. */
+    * reconstruction norm) for the given codebooks — the encode step of
+    * [[buildIvfPqIndex]]. */
   private def withPqCodes(d: DataFrame, vecCol: String,
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
     val m = codebooks.length
@@ -1105,54 +1029,6 @@ object Similarity {
       .withColumn("_rn", sqrt(aggregate(sequence(lit(0), lit(m - 1)),
         lit(0.0), (acc, i) => acc + element_at(
           element_at(sqnLit, i + 1), element_at(col("codes"), i + 1) + 1))))
-  }
-
-  /** Append vectors to a persisted IVF-PQ index WITHOUT retraining:
-    * assign with the stored centroids, ENCODE with the stored codebooks
-    * (via the same [[withPqCodes]] the build uses, so probing after
-    * append ≡ probing a rebuild that was handed the same centroids and
-    * codebooks, bit-exactly), and append into both the codes corpus and
-    * the full-vector re-rank corpus's `list=` partitions. Returns the
-    * same centroid-drift stat as [[ivfAppend]] — appended data that no
-    * longer matches the trained centroids is also drifting away from the
-    * subspace codebooks trained on the same distribution, so one signal
-    * covers both retrain triggers. Growth costs one assignment+encode
-    * projection over the new rows only; k-means never re-runs. */
-  def ivfPqAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): IvfAppendStats = {
-    recoverCorpus(spark, path)
-    val cents = loadIvfCentroids(spark, path)
-    val codebooks = loadPqCodebooks(spark, path)
-    def meanDist(): (Long, Double) =
-      corpusDistStats(readIvfCorpus(spark, path), vecCol, cents)
-    val (nBefore, distBefore) = meanDist()
-    val assigned = asDouble(newVectors, vecCol)
-      .withColumn("list", nearestList(col(vecCol), cents))
-      .cache()
-    withPqCodes(assigned, vecCol, codebooks)
-      .withColumn("_n", norm(col(vecCol)))
-      .withColumn("_e", sqrt(greatest(lit(0.0), lit(2.0) * (lit(1.0) -
-        graft.functions.VectorFunctions.pqAdcDot(
-          col(vecCol), col("codes"), codebooks) /
-          (col("_n") * col("_rn"))))))
-      .select(col(idCol), col("codes"), col("_rn"), col("_e"), col("list"))
-      .write.mode("append").partitionBy("list").parquet(s"$path/corpus_pq")
-    // appended points can EXTEND a list's pruning radius — merge max so
-    // the exact probe's completeness bound stays valid after growth.
-    // Pre-radii indexes degrade to all-2.0 (no pruning) instead of
-    // failing the append.
-    val oldRadii = loadRadiiOrDefault(spark, path, cents.length)
-    val newRadii = listRadiiAssigned(assigned, vecCol, cents)
-    writeJson(spark, s"$path/radii.json",
-      oldRadii.indices.map(l =>
-          math.max(oldRadii(l), newRadii.getOrElse(l, 0.0)))
-        .mkString("[", ",", "]"))
-    assigned.withColumn("_n", norm(col(vecCol)))
-      .select(col(idCol), col(vecCol), col("_n"), col("list"))
-      .write.mode("append").partitionBy("list").parquet(s"$path/corpus")
-    assigned.unpersist()
-    val (nAfter, distAfter) = meanDist()
-    IvfAppendStats(nBefore, nAfter - nBefore, distBefore, distAfter)
   }
 
   private def writeJson(spark: org.apache.spark.sql.SparkSession,
@@ -1177,8 +1053,7 @@ object Similarity {
     new com.fasterxml.jackson.databind.ObjectMapper().readValue(
       readText(spark, new org.apache.hadoop.fs.Path(path)), cls)
 
-  /** Pruning radii of a persisted index (written by [[buildIvfPqIndex]],
-    * maintained by [[ivfPqAppend]]). */
+  /** Pruning radii of a persisted index (written by [[buildIvfPqIndex]]). */
   def loadRadii(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Double] =
     readJson(spark, s"$path/radii.json", classOf[Array[Double]])
@@ -1274,7 +1149,7 @@ object Similarity {
     val shortlist = ivfPqProbeIndex(spark, path, queries, idCol, vecCol,
         rerankR, nProbe, roundScale, Some(probedLists))
       .select(col("query_id"), col("candidate_id"))
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val q = asDouble(queries, vecCol)
       .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
         norm(col(vecCol)).as("_qn"))
@@ -1349,7 +1224,7 @@ object Similarity {
     val p1 = ivfPqProbeRerank(spark, path, queries, idCol, vecCol, k,
         nProbe, rerankR, roundScale)
       .select(col("query_id"), col("candidate_id"), col("cosine"))
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val kth = p1.groupBy(col("query_id"))
       .agg(min(col("cosine")).as("_cosk"), count(lit(1)).as("_nk"))
       .select(col("query_id"),
@@ -1394,51 +1269,10 @@ object Similarity {
       // recall parity with the plain probe, never below it
       .union(p1.select(col("query_id"), col("candidate_id")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     // stage 3: exact rescore of the admitted set — contains every true
     // top-k member by the bound argument, so the window IS brute force
     rescoreShortlist(spark, path, admitted, qn, idCol, vecCol,
       scanLists, k, roundScale)
-  }
-
-  /** IVF-style two-stage search: partition vectors into `nLists` buckets by
-    * nearest pseudo-random centroid (deterministic, derived like the LSH
-    * hyperplanes), then search only the query's `nProbe` nearest lists.
-    * Trades recall for a `nProbe/nLists` scan fraction — the 100 TB path
-    * when queries are many. */
-  def ivfTopK(candidates: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nLists: Int = 16, nProbe: Int = 4,
-      roundScale: Int = 6): DataFrame = {
-    val c = asDouble(candidates, vecCol)
-    val q = asDouble(queries, vecCol)
-    val dims = size(col(vecCol))
-    def centroidScores: Column =
-      transform(sequence(lit(0), lit(nLists - 1)), cIdx => struct(
-        cIdx.as("list"),
-        aggregate(
-          zip_with(col(vecCol),
-            transform(sequence(lit(0), dims - 1),
-              i => (pmod(xxhash64(lit(7L), cIdx, i), lit(2001L)) - 1000L).cast("double") / 1000.0),
-            (x, h) => x * h),
-          lit(0.0), (acc, x) => acc + x).as("score")))
-    // candidates go to their single best list
-    val cAssigned = c.withColumn("list",
-      aggregate(centroidScores, struct(lit(-1).as("list"), lit(Double.MinValue).as("score")),
-        (best, s) => when(s.getField("score") > best.getField("score"), s).otherwise(best))
-        .getField("list"))
-    // queries probe their nProbe best lists
-    val qProbes = q.withColumn("probes",
-        slice(array_sort(centroidScores,
-          (l, r) => when(l.getField("score") > r.getField("score"), -1)
-            .when(l.getField("score") < r.getField("score"), 1).otherwise(0)), 1, nProbe))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        explode(col("probes").getField("list")).as("list"))
-    val scored = cAssigned.join(broadcast(qProbes), Seq("list"))
-      .where(col(idCol) =!= col("query_id"))
-      .select(col("query_id"), col(idCol).as("candidate_id"),
-        round(cosine(col("qvec"), col(vecCol)), roundScale).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("candidate_id"))
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 }

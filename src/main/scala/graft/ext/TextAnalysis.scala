@@ -704,7 +704,7 @@ object TextAnalysis {
     // doc — small next to the token-level work it caps.
     val nll = unigramNll(df, idCol, textCol)
       .join(df.select(col(idCol).as("doc"), col(strataCol)), "doc")
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     // Tercile cutoffs as EXACT order statistics, compared in EXACT
     // decimal arithmetic: interpolated-percentile cutoffs (Spark
     // `percentile` vs DuckDB `quantile_cont`) evaluate `lo + (hi-lo)·g`
@@ -766,7 +766,7 @@ object TextAnalysis {
       strataCol: String, accuracy: Int = 1000): DataFrame = {
     val nll = unigramNll(df, idCol, textCol)
       .join(df.select(col(idCol).as("doc"), col(strataCol)), "doc")
-      .localCheckpoint(true)
+      .transform(Pin.pin)
     val ranked = Ranks.stratifiedRowNumber(
       nll.select(col(strataCol), col("nll"), col("doc")),
       Seq(strataCol), Seq(col("nll"), col("doc")), out = "_rn")

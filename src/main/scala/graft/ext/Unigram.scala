@@ -269,14 +269,6 @@ object Unigram {
         sum(col("occ") * col("ntok")).cast("long").as("uni_tokens"))
   }
 
-  /** Per-doc unigram token counts under a trained cost table:
-    * (doc, n_words, uni_tokens). Convenience composition of
-    * [[typedDict]] + [[tokenCountsFromDict]]. */
-  def tokenCounts(df: DataFrame, idCol: String, textCol: String,
-      vocab: Seq[(String, Long)], l: Int = 4, d: Int = 12): DataFrame =
-    tokenCountsFromDict(df, idCol, textCol,
-      typedDict(df, textCol, vocab, l, d))
-
   // ---------------------------------------------------------------- //
   // Generated DuckDB oracle: replays seeding, the EM rounds and the   //
   // final apply with identical arithmetic and tie-breaks.             //

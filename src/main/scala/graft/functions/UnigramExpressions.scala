@@ -126,8 +126,7 @@ case class UnigramSegment(child: Expression, vocab: Seq[(String, Long)],
 }
 
 /** [[UnigramSegment]] with the compiled cost table carried by a Spark
-  * BROADCAST VARIABLE instead of a plan reference object — the
-  * [[NearestCentroidBcast]] precedent applied to tokenization. At the
+  * BROADCAST VARIABLE instead of a plan reference object. At the
   * declared k = 64/256 the reference form is fine; at production
   * SentencePiece vocabs (32k+ pieces, a multi-MB hash table) the
   * reference object is serialized into EVERY task binary — per-task

@@ -685,53 +685,6 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
     copy(child = newChild)
 }
 
-/** [[NearestCentroid]] with the centroid matrix carried by a Spark
-  * BROADCAST VARIABLE instead of a task-serialized reference object.
-  * At the declared k = 32 the reference form is fine; in the SemDeDup
-  * k ∝ N regime (k = 4096 at 1M vectors, ~100k at web scale → a 50+ MB
-  * matrix) the reference object is serialized into EVERY task binary —
-  * per-task wire and deserialize cost — while a broadcast ships once
-  * per EXECUTOR (torrent protocol) and is shared by all its tasks; the
-  * generated code reads `bcast.value()` once per operator instance.
-  * Same [[NearestCentroid.assign]] kernel, so output is bit-identical
-  * to the reference form (KmeansSpec pins it). */
-case class NearestCentroidBcast(child: Expression,
-    bcast: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("dist2", DoubleType,
-      nullable = false),
-    org.apache.spark.sql.types.StructField("cluster",
-      org.apache.spark.sql.types.LongType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  // NULL on a null element / dims mismatch — see DotProduct.nullable
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    NearestCentroid.assign(input.asInstanceOf[ArrayData], bcast.value)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bRef = ctx.addReferenceObj("kmCentsBcast", bcast,
-      "org.apache.spark.broadcast.Broadcast")
-    // unwrap the broadcast ONCE per operator instance, not per row
-    val cents = ctx.addMutableState("double[][]", "kmBcastCents",
-      v => s"$v = (double[][]) $bRef.value();")
-    nullSafeCodeGen(ctx, ev, a => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |Object $boxed = graft.functions.NearestCentroid.assign($a, $cents);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $boxed; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NearestCentroidBcast =
-    copy(child = newChild)
-}
-
 /** [[NearestCentroid]] with the EXACT-DECIMAL distance discipline of
   * [[graft.ext.Kmeans.train]]'s relational assignment, row-local: each
   * (x−c)² term is one correctly-rounded IEEE double op, cast to
@@ -895,14 +848,6 @@ object VectorFunctions {
       cents: Array[Array[Double]]): Column =
     ColumnBridge.column(NearestCentroidDecimal(
       ColumnBridge.expression(vec), cents))
-
-  /** [[nearestCentroidNative]] over a BROADCAST centroid matrix — the
-    * large-k serving form (ships once per executor, not per task). */
-  def nearestCentroidBcast(vec: Column,
-      bcast: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])
-      : Column =
-    ColumnBridge.column(NearestCentroidBcast(ColumnBridge.expression(vec),
-      bcast))
 
   /** Intersection count of two sorted `array<long>` columns. */
   def sortedIntersectCount(a: Column, b: Column): Column =

@@ -2,7 +2,7 @@ package graft.io
 
 import graft.core.{MeteauDataset, MeteauSignal, Observations}
 import graft.model._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persistence with full metadata round-trip fidelity — the Spark rendering

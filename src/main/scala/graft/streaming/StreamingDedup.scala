@@ -49,9 +49,8 @@ object StreamingDedup {
     * `nBuckets > 0` additionally PARTITIONS the band table on disk by
     * `bk = pmod(xxhash64(band, bandhash), nBuckets)` — the latency-mode
     * layout: a probe whose band keys hit b buckets reads ~b/nBuckets of
-    * the index bytes ([[minhashDupBatch]] prunes explicitly). Size it to
-    * the probe batches: pruning is effective while
-    * (batch docs × bands) ≪ nBuckets, so dedupe-on-ingest with tens of
+    * the index bytes. Size it to the probe batches: pruning is effective
+    * while (batch docs × bands) ≪ nBuckets, so dedupe-on-ingest with tens of
     * docs per batch wants thousands of buckets; bulk probes saturate
     * every bucket and should keep the unbucketed layout (one sequential
     * fixed-width scan). The bucket count is recorded in
@@ -99,34 +98,6 @@ object StreamingDedup {
     out.close()
   }
 
-  private def readMetaFile(spark: SparkSession, metaPath: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(metaPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0
-    val in = fs.open(p)
-    val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    in.close()
-    """"nBuckets"\s*:\s*(\d+)""".r.findFirstMatchIn(new String(bytes, "UTF-8"))
-      .map(_.group(1).toInt).getOrElse(0)
-  }
-
-  private[streaming] def indexBuckets(spark: SparkSession, path: String): Int =
-    readMetaFile(spark, s"$path/meta.json")
-
-  /** Row count recorded in an index's meta file, or -1 if the meta
-    * predates row accounting (pre-r15 indexes) — callers fall back to a
-    * one-time count and the next write records it. */
-  private def readMetaRows(spark: SparkSession, metaPath: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(metaPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return -1L
-    val in = fs.open(p)
-    val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    in.close()
-    """"rows"\s*:\s*(\d+)""".r.findFirstMatchIn(new String(bytes, "UTF-8"))
-      .map(_.group(1).toLong).getOrElse(-1L)
-  }
-
   /** Probe a stream of new documents against a [[buildMinhashIndex]]
     * index: emits exactly-verified near-dup pairs
     * (doc_new, doc_corpus, jaccard >= minJ), each pair once. Candidate
@@ -138,64 +109,6 @@ object StreamingDedup {
       n: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame = {
     val corpusBands = spark.read.parquet(s"$indexPath/bands")
       .select(col("doc"), col("band"), col("bandhash")) // drop bk if bucketed
-    probeBands(spark, stream, idCol, textCol, indexPath, corpusBands,
-      minJ, n, numHashes, bands)
-  }
-
-  /** Batch-mode probe with explicit bucket pruning: for a BUCKETED index
-    * (`buildMinhashIndex(nBuckets > 0)`), collects the probe batch's
-    * distinct bucket ids (bounded by batch docs × bands — the same
-    * bounded-driver-state move as the IVF probed-list pruning) and pins
-    * them as a partition filter on the band scan, so index bytes read
-    * scale with the BATCH, not the corpus. The dedupe-on-ingest latency
-    * path: run per arriving mini-batch (e.g. from foreachBatch); falls
-    * back to the full sequential band scan on an unbucketed index (the
-    * bulk-throughput layout). */
-  def minhashDupBatch(spark: SparkSession, batch: DataFrame,
-      idCol: String, textCol: String, indexPath: String, minJ: Double,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      preloadedBands: Option[DataFrame] = None): DataFrame = {
-    val nBuckets = indexBuckets(spark, indexPath)
-    // a long-lived ingest service loads the index ONCE (partition
-    // discovery over nBuckets directories is per-DataFrame, not
-    // per-probe) and passes it here; per-batch cost is then only the
-    // pruned read + the join
-    val corpusBands = preloadedBands.getOrElse(
-      spark.read.parquet(s"$indexPath/bands"))
-    val pruned = if (nBuckets <= 0) corpusBands else {
-      val bks = docProfiles(batch, idCol, textCol, n, numHashes)
-        .select(posexplode(Dedup.minhashBandKeys(col("sig"),
-          bands, numHashes / bands)))
-        .select(bucketOf(col("pos"), col("col"), nBuckets).as("bk"))
-        .distinct().collect().map(_.getInt(0))
-      corpusBands.where(col("bk").isin(bks.map(Integer.valueOf): _*))
-    }
-    probeBands(spark, batch, idCol, textCol, indexPath,
-      pruned.select(col("doc"), col("band"), col("bandhash")),
-      minJ, n, numHashes, bands)
-  }
-
-  /** Distinct index buckets a batch's band keys hit — the pruning
-    * diagnostic behind [[minhashDupBatch]] (ScaleSmoke reports it as the
-    * fraction of index partitions a small ingest batch reads). */
-  def minhashDupBatchPrunedBuckets(spark: SparkSession, batch: DataFrame,
-      idCol: String, textCol: String, indexPath: String,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16): Long = {
-    val nBuckets = indexBuckets(spark, indexPath)
-    if (nBuckets <= 0) return -1L
-    docProfiles(batch, idCol, textCol, n, numHashes)
-      .select(posexplode(Dedup.minhashBandKeys(col("sig"),
-        bands, numHashes / bands)))
-      .select(bucketOf(col("pos"), col("col"), nBuckets).as("bk"))
-      .distinct().count()
-  }
-
-  /** Shared probe body: band the new docs row-locally, equi-join the
-    * given corpus band table for candidates, verify exact Jaccard. */
-  private def probeBands(spark: SparkSession, stream: DataFrame,
-      idCol: String, textCol: String, indexPath: String,
-      corpusBands: DataFrame, minJ: Double,
-      n: Int, numHashes: Int, bands: Int): DataFrame = {
     val corpusDocs = spark.read.parquet(s"$indexPath/docs")
     // band the new docs, carrying each one's shingle set on the row (a
     // later join back to the stream would be a stream-stream self join)
@@ -287,94 +200,9 @@ object StreamingDedup {
     writeMetaFile(df.sparkSession, s"$path.meta.json", 0)
   }
 
-  /** Append a new batch's window hashes to a persisted
-    * [[buildWindowIndex]] index WITHOUT rebuilding — the
-    * [[graft.ext.Similarity.ivfAppend]] lifecycle discipline applied to
-    * the dedup index (r10 VERDICT task 4): at 100 TB the window-hash
-    * set grows incrementally with each ingested shard, never by
-    * re-scanning the corpus. Cost ∝ the NEW batch only (one row-local
-    * windowing pass + one distinct over the batch); hashes the index
-    * already holds are appended again rather than anti-joined away —
-    * correctness is unaffected because [[windowHitStream]] probes with
-    * a LEFT SEMI join (multiplicity-free for any index layout), and
-    * [[compactWindowIndex]] restores the global-distinct sorted layout
-    * when the small appended files accumulate. Returns (index rows
-    * before, rows appended — the batch's distinct count, an upper
-    * bound on truly-new hashes). */
-  def appendWindowIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, k: Int = 8): (Long, Long) = {
-    val spark = df.sparkSession
-    recoverWindowIndex(spark, path)
-    val before = spark.read.parquet(path).count()
-    graft.ext.Dedup.windowHashes(df, idCol, textCol, k)
-      .select(col("whash")).distinct()
-      .sortWithinPartitions("whash")
-      .write.mode("append").parquet(path)
-    val after = spark.read.parquet(path).count()
-    (before, after - before)
-  }
-
-  /** Rewrite a window-hash index back to global-distinct sorted form
-    * after many [[appendWindowIndex]] batches (cross-batch duplicate
-    * hashes + small-file accumulation). Probe results are unchanged —
-    * the semi-join probe never saw the duplicates; this reclaims bytes
-    * and file handles. Same rename-aside crash discipline as
-    * [[graft.ext.Similarity.ivfCompact]]: a crash between the two
-    * renames strands the live index under `<path>_old`, which
-    * [[recoverWindowIndex]] renames back on the next touch. */
-  def compactWindowIndex(spark: SparkSession, path: String): Unit = {
-    recoverWindowIndex(spark, path)
-    val tmp = s"${path}_compacting"
-    spark.read.parquet(path).select(col("whash")).distinct()
-      .sortWithinPartitions("whash")
-      .write.mode("overwrite").parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val old = new org.apache.hadoop.fs.Path(s"${path}_old")
-    val fs = dst.getFileSystem(conf)
-    fs.delete(old, true) // leftover from a prior crashed compaction
-    fs.rename(dst, old)
-    fs.rename(src, dst)
-    fs.delete(old, true)
-  }
-
-  /** Crash recovery for [[compactWindowIndex]]'s swap (the
-    * recoverCorpus pattern): index missing + `<path>_old` present means
-    * a crash landed between the renames — restore automatically. */
-  private def recoverWindowIndex(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(s"${path}_old")
-    val fs = dst.getFileSystem(conf)
-    if (!fs.exists(dst) && fs.exists(old)) { fs.rename(old, dst): Unit }
-  }
-
-  // ------------------------------------------------------------------ //
-  // Append lifecycle for the composed pipeline's frozen artifacts (r13  //
-  // verdict task 7): the canonical-URL keeper index and the corpus      //
-  // shingle index stream_pipeline probes, evolvable per ingest batch    //
-  // without a corpus rebuild — the appendWindowIndex discipline, with   //
-  // fold-at-probe semantics where the decision is an aggregate rather   //
-  // than a membership test.                                             //
-  // ------------------------------------------------------------------ //
-
-  /** Generic rename-aside swap: replace the index at `path` with the
-    * compacted copy at `tmp` (crash between the renames strands the
-    * live index at `<path>_old`, restored by [[recoverIndex]]). */
-  private def swapCompacted(spark: SparkSession, path: String,
-      tmp: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val old = new org.apache.hadoop.fs.Path(s"${path}_old")
-    val fs = dst.getFileSystem(conf)
-    fs.delete(old, true)
-    fs.rename(dst, old)
-    fs.rename(src, dst)
-    fs.delete(old, true): Unit
-  }
-
+  /** Crash recovery for a rename-aside index swap: index missing +
+    * `<path>_old` present means a crash landed between the renames —
+    * restore automatically on the next probe. */
   private def recoverIndex(spark: SparkSession, path: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dst = new org.apache.hadoop.fs.Path(path)
@@ -386,10 +214,7 @@ object StreamingDedup {
   /** Canonical-URL KEEPER index — (canon, _keeper) with _keeper = the
     * smallest doc id ever seen for the canonical URL. Because min is
     * associative/commutative, the persisted layout may hold MANY rows
-    * per canon (one per appended batch): [[keeperOf]] folds them at
-    * probe time, so probe-after-append ≡ rebuild by algebra, and
-    * [[compactKeeperIndex]] restores the one-row-per-canon layout when
-    * appended files accumulate. Build/append cost ∝ the batch. */
+    * per canon: [[keeperOf]] folds them at probe time. */
   def buildKeeperIndex(pairs: DataFrame, path: String): Unit = {
     val spark = pairs.sparkSession
     val g = graft.ext.Pin.pin(
@@ -401,34 +226,6 @@ object StreamingDedup {
     writeMetaFile(spark, s"$path.meta.json", 0, g.count())
   }
 
-  /** Append one batch's per-canon minima (cost ∝ batch; duplicates of
-    * already-indexed canons are folded away at probe time). Returns
-    * (rows before, rows appended) — `before` comes from the meta file's
-    * row accounting, `appended` counts the pinned batch frame only, so
-    * the append touches NO existing index files (a whole-index count
-    * here would make every append O(index) in footer work as the index
-    * grows, contradicting the cost-∝-batch contract). Crash window:
-    * the parquet append commits before the meta write, so after an
-    * unclean shutdown `before` is ADVISORY until the next compaction
-    * reconciles it ([[compactKeeperIndex]] re-records the true count —
-    * probe correctness never depends on it, [[keeperOf]] folds rows). */
-  def appendKeeperIndex(pairs: DataFrame, path: String): (Long, Long) = {
-    val spark = pairs.sparkSession
-    recoverIndex(spark, path)
-    val metaRows = readMetaRows(spark, s"$path.meta.json")
-    val before = // pre-r15 meta: one catch-up count, recorded below
-      if (metaRows >= 0) metaRows else spark.read.parquet(path).count()
-    val g = graft.ext.Pin.pin(
-      pairs.select(col(pairs.columns.head).cast("long").as("_keeper"),
-          col(pairs.columns(1)).as("canon"))
-        .groupBy(col("canon")).agg(min(col("_keeper")).as("_keeper"))
-        .sortWithinPartitions("canon"))
-    val appended = g.count()
-    g.write.mode("append").parquet(path)
-    writeMetaFile(spark, s"$path.meta.json", 0, before + appended)
-    (before, appended)
-  }
-
   /** The probe view: one (canon, _keeper) row per canon, the min fold
     * over however many appended rows the layout holds. */
   def keeperOf(spark: SparkSession, path: String): DataFrame = {
@@ -437,27 +234,11 @@ object StreamingDedup {
       .groupBy(col("canon")).agg(min(col("_keeper")).as("_keeper"))
   }
 
-  /** Restore the one-row-per-canon sorted layout (probe results
-    * unchanged — [[keeperOf]] already folds; this reclaims rows/files). */
-  def compactKeeperIndex(spark: SparkSession, path: String): Unit = {
-    recoverIndex(spark, path)
-    val tmp = s"${path}_compacting"
-    val g = graft.ext.Pin.pin(spark.read.parquet(path)
-      .groupBy(col("canon")).agg(min(col("_keeper")).as("_keeper"))
-      .sortWithinPartitions("canon"))
-    g.write.mode("overwrite").parquet(tmp)
-    swapCompacted(spark, path, tmp)
-    // compaction folds rows — re-record the count (compact is already
-    // O(index); the count rides the pinned frame, no extra scan)
-    writeMetaFile(spark, s"$path.meta.json", 0, g.count())
-  }
-
   /** Corpus SHINGLE index — (cdoc, sh, nc): each indexed doc's distinct
     * hashed shingles, every row carrying the doc's shingle count nc so
-    * the Jaccard probe needs no full-index aggregate. Batches must
-    * carry fresh doc ids (the ingest contract — a re-appended doc would
-    * double its rows); within a batch the layout is self-contained, so
-    * append cost ∝ the new batch only. */
+    * the Jaccard probe needs no full-index aggregate. Writes the FLAT
+    * layout; a stream that evolves its index starts from an empty root
+    * and grows it with [[appendShingleIndexBatch]]. */
   def buildShingleIndex(df: DataFrame, idCol: String, textCol: String,
       path: String, n: Int = 3): Unit = {
     val rows = graft.ext.Pin.pin(
@@ -466,52 +247,28 @@ object StreamingDedup {
     writeMetaFile(df.sparkSession, s"$path.meta.json", 0, rows.count())
   }
 
-  /** Append a batch of NEW docs' shingles. Returns (rows before, rows
-    * appended); as with [[appendKeeperIndex]], `before` is meta-file
-    * row accounting and `appended` counts only the pinned batch frame —
-    * the append never re-reads the existing index. Same crash window:
-    * after an unclean shutdown between the parquet commit and the meta
-    * write, `before` is advisory until [[compactShingleIndex]]
-    * reconciles the count (probe results never depend on it). */
-  def appendShingleIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, n: Int = 3): (Long, Long) = {
-    val spark = df.sparkSession
-    recoverIndex(spark, path)
-    val metaRows = readMetaRows(spark, s"$path.meta.json")
-    val before =
-      if (metaRows >= 0) metaRows else spark.read.parquet(path).count()
-    val rows = graft.ext.Pin.pin(
-      shingleRows(df, idCol, textCol, n).sortWithinPartitions("sh"))
-    val appended = rows.count()
-    rows.write.mode("append").parquet(path)
-    writeMetaFile(spark, s"$path.meta.json", 0, before + appended)
-    (before, appended)
-  }
-
   /** Exactly-once per-micro-batch shingle-index append: batch
     * `batchId`'s rows land in their OWN `batch=<id>` subdir with
     * overwrite — a RETRIED micro-batch rewrites only its directory (the
-    * stream_sink_rollup discipline), where [[appendShingleIndex]]'s
-    * flat append would double the replayed batch's rows and corrupt
-    * every later Jaccard against them. Probes keep reading the index
-    * root (partition discovery unions the batch dirs; the extra
+    * stream_sink_rollup discipline), where a flat append would double
+    * the replayed batch's rows and corrupt every later Jaccard against
+    * them. Probes keep reading the index root (partition discovery
+    * unions the batch dirs; the extra
     * `batch` partition column is inert to the probe join — and a
     * probe-then-append stream passes its own batch id as
     * [[shingleDropStream]]'s `excludeBatchFrom` so an at-least-once
     * retry reproduces the pre-append decision). The form a stream that
     * BOTH probes and evolves the index needs.
     *
-    * MUTUALLY EXCLUSIVE with the flat [[buildShingleIndex]] /
-    * [[appendShingleIndex]] layout: Spark partition discovery cannot
-    * read a root mixing bare data files with `batch=` dirs, so the
+    * MUTUALLY EXCLUSIVE with the flat [[buildShingleIndex]] layout:
+    * Spark partition discovery cannot read a root mixing bare data files
+    * with `batch=` dirs, so the
     * first batch append REQUIRES an empty/absent root or an
     * already-batch-partitioned one (guarded here, not at read time —
     * the failure would otherwise surface as an opaque discovery error
     * on some later probe). Batch appends deliberately do NOT maintain
     * `meta.json` row accounting: per-row counts would cost an extra
-    * action per micro-batch, and the flat-append `before` contract
-    * doesn't apply to this layout ([[appendShingleIndex]] must not be
-    * mixed in anyway). */
+    * action per micro-batch. */
   def appendShingleIndexBatch(df: DataFrame, idCol: String,
       textCol: String, path: String, batchId: Long, n: Int = 3): Unit = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
@@ -523,31 +280,12 @@ object StreamingDedup {
           !st.getPath.getName.startsWith(".") &&
           !(st.isDirectory && st.getPath.getName.startsWith("batch=")))
       require(!flat, s"shingle index at $path has a FLAT layout " +
-        "(buildShingleIndex/appendShingleIndex); batch appends require " +
+        "(buildShingleIndex); batch appends require " +
         "an empty or batch-partitioned root — the two layouts cannot mix")
     }
     shingleRows(df, idCol, textCol, n)
       .sortWithinPartitions("sh")
       .write.mode("overwrite").parquet(s"$path/batch=$batchId")
-  }
-
-  /** Re-sort the shingle index by sh after many appends (row set is
-    * already exact — this reclaims file handles and probe locality).
-    * Also RECONCILES `meta.json` row accounting: the append path
-    * commits parquet before meta, so a crash in that window leaves the
-    * meta count stale forever (the count fallback only fires when the
-    * key is ABSENT); compaction is already O(index), so the true count
-    * rides the compacted frame for free — the self-heal point. Until a
-    * compaction runs, `before` from the append methods is ADVISORY
-    * after an unclean shutdown. */
-  def compactShingleIndex(spark: SparkSession, path: String): Unit = {
-    recoverIndex(spark, path)
-    val tmp = s"${path}_compacting"
-    val g = graft.ext.Pin.pin(spark.read.parquet(path)
-      .repartition(col("sh")).sortWithinPartitions("sh"))
-    g.write.mode("overwrite").parquet(tmp)
-    swapCompacted(spark, path, tmp)
-    writeMetaFile(spark, s"$path.meta.json", 0, g.count())
   }
 
   private def shingleRows(df: DataFrame, idCol: String, textCol: String,
@@ -601,14 +339,12 @@ object StreamingDedup {
     * index: emits (doc_new, pos) for every k-token window the corpus
     * already contains AT ANY OFFSET. Fully STATELESS — windowing is
     * row-local and the corpus side is a static frame probed with a
-    * LEFT SEMI join: multiplicity 1 whether the index is freshly built
-    * (globally distinct) or carries cross-batch duplicates from
-    * [[appendWindowIndex]]; no dedup state either way (the window hash
-    * IS the decision, like [[chunkHitStream]]). */
+    * LEFT SEMI join: multiplicity 1 for any index layout; no dedup
+    * state (the window hash IS the decision, like [[chunkHitStream]]). */
   def windowHitStream(spark: SparkSession, stream: DataFrame,
       idCol: String, textCol: String, indexPath: String,
       k: Int = 8): DataFrame = {
-    recoverWindowIndex(spark, indexPath)
+    recoverIndex(spark, indexPath)
     val index = spark.read.parquet(indexPath).select(col("whash"))
     graft.ext.Dedup.windowHashes(stream, idCol, textCol, k)
       .join(index, Seq("whash"), "left_semi")
@@ -672,35 +408,6 @@ object StreamingDedup {
       portable: Boolean = false): DataFrame = {
     val index = spark.read.parquet(indexPath)
       .select(col("doc"), col("simhash"), col("band"), col("bandkey"))
-    probeSimhashBands(stream, idCol, textCol, index, maxDist, nBlocks, portable)
-  }
-
-  /** Batch-mode SimHash probe with explicit bucket pruning — the SimHash
-    * twin of [[minhashDupBatch]]: on a bucketed index the batch's bucket
-    * ids pin a partition filter, so index bytes read scale with the
-    * batch; full scan on an unbucketed index. */
-  def simhashDupBatch(spark: SparkSession, batch: DataFrame,
-      idCol: String, textCol: String, indexPath: String,
-      maxDist: Int = 3, nBlocks: Int = 6, portable: Boolean = false,
-      preloadedBands: Option[DataFrame] = None): DataFrame = {
-    val nBuckets = readMetaFile(spark, s"$indexPath.meta.json")
-    val index = preloadedBands.getOrElse(spark.read.parquet(indexPath))
-    val pruned = if (nBuckets <= 0) index else {
-      val sim = if (portable) Dedup.portableSimhash64(batch, idCol, textCol)
-                else Dedup.simhash64(batch, idCol, textCol)
-      val bks = Dedup.simhashBands(sim, maxDist, nBlocks)
-        .select(bucketOf(col("band"), col("bandkey"), nBuckets).as("bk"))
-        .distinct().collect().map(_.getInt(0))
-      index.where(col("bk").isin(bks.map(Integer.valueOf): _*))
-    }
-    probeSimhashBands(batch, idCol, textCol,
-      pruned.select(col("doc"), col("simhash"), col("band"), col("bandkey")),
-      maxDist, nBlocks, portable)
-  }
-
-  private def probeSimhashBands(stream: DataFrame, idCol: String,
-      textCol: String, index: DataFrame, maxDist: Int, nBlocks: Int,
-      portable: Boolean): DataFrame = {
     val sim = if (portable) Dedup.portableSimhash64(stream, idCol, textCol)
               else Dedup.simhash64(stream, idCol, textCol)
     val q = Dedup.simhashBands(sim, maxDist, nBlocks)

@@ -165,14 +165,6 @@ object StreamingOps {
       .toDF()
   }
 
-  /** Streaming exact dedup: drop duplicate event ids within the watermark
-    * horizon — the streaming twin of Dedup.exact (state store holds one
-    * entry per id seen inside the watermark window). */
-  def dedupStream(stream: DataFrame, idCol: String, tsCol: String,
-      watermark: String = "1 hour"): DataFrame =
-    stream.withWatermark(tsCol, watermark)
-      .dropDuplicates(idCol, tsCol)
-
   /** Per-key running statistics via explicit state — the
     * mapGroupsWithState extension point for custom streaming state
     * (count + running mean per series). The sum accumulates as a SCALED

@@ -27,39 +27,15 @@ class ExtSpec extends SparkSpec {
     val sh = Dedup.hashedShingles(docs, "doc_id", "text", 3)
     val planted = Dedup.jaccardPairs(sh, 0.9)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val sim = Dedup.simhashDupPairs(docs, "doc_id", "text",
-        maxDist = 7, nChunks = 8)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    // every planted textual near-dup is a simhash near-dup (banding is
-    // exact for hamming <= 7; planted pairs measure <= 7 on this fixture)
-    assert(planted.nonEmpty && planted.subsetOf(sim))
-  }
-
-  test("default 4x16-bit simhash banding is exact for hamming <= 3") {
-    // pigeonhole: with 4 chunks, every pair within distance 3 collides on
-    // some chunk — so the default banding must equal the wide 8-chunk
-    // result filtered to hamming <= 3 (both verify exactly post-collision)
-    val wide = Dedup.simhashDupPairs(docs, "doc_id", "text",
-        maxDist = 7, nChunks = 8)
-      .where(col("hamming") <= 3)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val dflt = Dedup.simhashDupPairs(docs, "doc_id", "text")
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(dflt == wide)
-    assert(dflt.nonEmpty, "fixture should contain hamming<=3 near-dups")
-  }
-
-  test("Manku combination banding is exact for hamming <= 3 (scale path)") {
-    // same pigeonhole, bigger buckets: differences within distance 3 touch
-    // at most 3 of the 6 blocks, so some C(6,3) combination is untouched
-    // and the pair collides in that table — output must equal the chunked
-    // default (both verify exact Hamming post-collision)
-    val dflt = Dedup.simhashDupPairs(docs, "doc_id", "text")
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val manku = Dedup.simhashDupPairsAtScale(docs, "doc_id", "text")
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(manku == dflt)
-    assert(manku.nonEmpty, "fixture should contain hamming<=3 near-dups")
+    // every planted textual near-dup is a near-dup of the engine
+    // fingerprint (planted pairs measure <= 7 on this fixture)
+    val sim = Dedup.simhash64(docs, "doc_id", "text")
+      .as[(Long, Long)].collect()
+    val near = (for {
+      (da, sa) <- sim; (db, sb) <- sim
+      if da < db && java.lang.Long.bitCount(sa ^ sb) <= 7
+    } yield (da, db)).toSet
+    assert(planted.nonEmpty && planted.subsetOf(near))
   }
 
   test("portable-fingerprint banding equals brute-force all-pairs hamming") {
@@ -135,14 +111,10 @@ class ExtSpec extends SparkSpec {
     assert(out(4L) == ((2, 4)))  // HAN, GUK, EO, ok
   }
 
-  test("type-level BPE apply == row-local; batched training B=1 == sequential") {
+  test("type-level BPE apply == row-local") {
     val df = Seq((1L, "aa aa ab"), (2L, "aaaa"),
       (3L, "ab aa ba aaaa aab baa")).toDF("doc_id", "text")
     val seqM = graft.ext.Bpe.trainMerges(df, "text", m = 5)
-    // batch size 1 must reproduce the sequential algorithm exactly —
-    // same per-round argmax, same (count desc, l, r) tie order
-    assert(graft.ext.Bpe.trainMergesBatched(df, "text", m = 5,
-      batchSize = 1) == seqM)
     // the typed path (dict-once apply + occurrence join-back) is the
     // same function as the row-local chain for any merge list; batch=2
     // forces multiple checkpointed projection batches
@@ -152,18 +124,6 @@ class ExtSpec extends SparkSpec {
         batch = 2)
       .as[(Long, Long, Long)].collect().toSet
     assert(tl == rl, "typed apply != row-local apply")
-    // B>1 batched mode: deterministic across runs, and its merges still
-    // compress (typed tokens strictly below the no-merge word-symbol
-    // count on this fixture)
-    val b1 = graft.ext.Bpe.trainMergesBatched(df, "text", m = 6, batchSize = 3)
-    assert(b1 ==
-      graft.ext.Bpe.trainMergesBatched(df, "text", m = 6, batchSize = 3))
-    assert(b1.nonEmpty && b1.distinct.length == b1.length)
-    val none = graft.ext.Bpe.tokenCountsTyped(df, "doc_id", "text", Nil)
-      .agg(sum(col("bpe_tokens"))).as[Long].head()
-    val after = graft.ext.Bpe.tokenCountsTyped(df, "doc_id", "text", b1)
-      .agg(sum(col("bpe_tokens"))).as[Long].head()
-    assert(after < none, "batched merges failed to compress")
     // and on the real corpus fixture: typed == row-local again
     val mr = graft.ext.Bpe.trainMerges(docs, "text", m = 4)
     val rlD = graft.ext.Bpe.tokenCounts(docs, "doc_id", "text", mr)
@@ -365,8 +325,8 @@ class ExtSpec extends SparkSpec {
 
   test("pre-radii IVF-PQ index degrades to no-pruning instead of failing") {
     // an index persisted before radii.json existed (or built externally)
-    // must still append and probe-exactly — with all-2.0 radii (no
-    // pruning), not an exception (r10 advice).
+    // must still probe exactly — with all-2.0 radii (no pruning), not an
+    // exception (r10 advice).
     val p = "/tmp/graft_test_noradii_pq_idx"
     val head = emb.where(col("vec_id") < 48)
     Similarity.buildIvfPqIndex(head, "vec_id", "embedding", p,
@@ -374,15 +334,9 @@ class ExtSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(s"$p/radii.json")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new org.apache.hadoop.fs.Path(s"$p/radii.json"), false))
-    val stats = Similarity.ivfPqAppend(spark,
-      p, emb.where(col("vec_id") >= 48), "vec_id", "embedding")
-    assert(stats.nAppended > 0)
-    // radii.json regenerated by the append (max of 2.0 defaults and the
-    // appended batch — still a valid, if loose, completeness bound)
-    assert(Similarity.loadRadii(spark, p).forall(r => r >= 0.0 && r <= 2.0))
     val queries = emb.where(col("vec_id") >= 32 && col("vec_id") < 36)
     val cols = Seq("query_id", "rank", "candidate_id", "cosine")
-    val exact = Similarity.cosineTopK(emb, queries, "vec_id", "embedding", 5)
+    val exact = Similarity.cosineTopK(head, queries, "vec_id", "embedding", 5)
       .select(cols.map(col): _*).as[(Long, Int, Long, Double)].collect().toSet
     val pq = Similarity.ivfPqProbeExact(spark, p, queries, "vec_id",
         "embedding", k = 5, nProbe = 4, rerankR = 40)
@@ -418,7 +372,7 @@ class ExtSpec extends SparkSpec {
       .select(cols.map(col): _*).as[(Long, Int, Long, Double)].collect()
     assert(pruned.toSet == exact.toSet, "clustered ivfTopKExact != brute force")
     // replay the bound math: per query, every non-home list is excludable
-    val radii = Similarity.listRadii(clustered, "vec_id", "embedding", cents)
+    val radii = Similarity.listRadii(clustered, "embedding", cents)
     def unit(v: Array[Double]): Array[Double] = {
       val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n)
     }
@@ -525,7 +479,7 @@ class ExtSpec extends SparkSpec {
     assert(schemaReads(fallbackJobs).nonEmpty, s"no inferred read in $fallbackJobs")
   }
 
-  test("schema.json describes the IVF corpus through append, compact and retrain") {
+  test("schema.json describes the IVF corpus through append and retrain") {
     val p = "/tmp/graft_test_ivf_schema"
     rmTree(new java.io.File(p))
     def assertRecorded(stage: String): Unit =
@@ -538,10 +492,8 @@ class ExtSpec extends SparkSpec {
     Similarity.ivfAppend(spark, p, emb
       .select((col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding").cast("array<double>"), x => x + lit(3.0d))
-          .as("embedding"), col("label")), "vec_id", "embedding")
+          .as("embedding"), col("label")), "embedding")
     assertRecorded("append")
-    Similarity.ivfCompact(spark, p)
-    assertRecorded("compact")
     val rt = Similarity.ivfRetrainDrifted(spark, p, "vec_id", "embedding",
       bound = 1.5, iters = 2)
     assert(rt.drifted.nonEmpty, "retrain must rewrite some list")
@@ -549,7 +501,7 @@ class ExtSpec extends SparkSpec {
     // a column appended under another type than the corpus's fails loudly
     val e = intercept[IllegalArgumentException](Similarity.ivfAppend(spark, p,
       emb.limit(1).select(col("vec_id").cast("string").as("vec_id"),
-        col("embedding")), "vec_id", "embedding"))
+        col("embedding")), "embedding"))
     assert(e.getMessage.contains("vec_id"), e.getMessage)
   }
 
@@ -576,9 +528,9 @@ class ExtSpec extends SparkSpec {
         nLists = 8, iters = 2)
     }
     val s1 = Similarity.ivfAppend(spark, p1, batchB.union(batchC),
-      "vec_id", "embedding")
-    val s2a = Similarity.ivfAppend(spark, p2, batchB, "vec_id", "embedding")
-    val s2b = Similarity.ivfAppend(spark, p2, batchC, "vec_id", "embedding")
+      "embedding")
+    val s2a = Similarity.ivfAppend(spark, p2, batchB, "embedding")
+    val s2b = Similarity.ivfAppend(spark, p2, batchC, "embedding")
     assert(s1.nAppended == s2a.nAppended + s2b.nAppended)
     assert(s1.nBefore == 150 && s2a.nBefore == 150)
     val q1 = Similarity.ivfProbeIndex(spark, p1, queries,
@@ -605,7 +557,7 @@ class ExtSpec extends SparkSpec {
     val outliers = spark.range(5).select(
       (col("id") + 900000).as("vec_id"),
       transform(sequence(lit(1), lit(dims)), _ => lit(1000.0)).as("embedding"))
-    val s3 = Similarity.ivfAppend(spark, p1, outliers, "vec_id", "embedding")
+    val s3 = Similarity.ivfAppend(spark, p1, outliers, "embedding")
     assert(s3.meanDistAfter > s3.meanDistBefore,
       s"outlier append must raise the drift stat: $s3")
   }
@@ -626,7 +578,7 @@ class ExtSpec extends SparkSpec {
     val shifted = emb.select((col("vec_id") + 1000000L).as("vec_id"),
       transform(col("embedding").cast("array<double>"),
         x => x + lit(3.0d)).as("embedding"))
-    Similarity.ivfAppend(spark, p, shifted, "vec_id", "embedding")
+    Similarity.ivfAppend(spark, p, shifted, "embedding")
     val queries = emb.where(col("vec_id") < 8)
     val cols = Seq("query_id", "rank", "candidate_id", "cosine")
     def exhaustive() = Similarity.ivfProbeIndex(spark, p, queries,
@@ -692,58 +644,6 @@ class ExtSpec extends SparkSpec {
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
       plan.take(1200))
-  }
-
-  test("ivfPqAppend: encode-on-append keeps probe parity, exact rerank, drift stat") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val base = emb.where(col("vec_id") < 150)
-    val batchB = emb.where(col("vec_id") >= 150 && col("vec_id") < 180)
-    val batchC = emb.where(col("vec_id") >= 180)
-    val queries = emb.where(col("vec_id") < 8)
-    val cols = Seq("query_id", "rank", "candidate_id", "cosine")
-    val p1 = "/tmp/graft_test_ivfpq_append1"
-    val p2 = "/tmp/graft_test_ivfpq_append2"
-    for (p <- Seq(p1, p2)) {
-      val d = new java.io.File(p)
-      if (d.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(d)
-      }
-      Similarity.buildIvfPqIndex(base, "vec_id", "embedding", p,
-        nLists = 8, m = 16, pqK = 64, iters = 2)
-    }
-    // one append vs two appends of the same rows: bit-identical ADC
-    // probes (assignment + encoding use the STORED centroids/codebooks
-    // either way — appended rows are encoded exactly as a rebuild handed
-    // the same codebooks would encode them)
-    val s1 = Similarity.ivfPqAppend(spark, p1, batchB.union(batchC),
-      "vec_id", "embedding")
-    val s2a = Similarity.ivfPqAppend(spark, p2, batchB, "vec_id", "embedding")
-    val s2b = Similarity.ivfPqAppend(spark, p2, batchC, "vec_id", "embedding")
-    assert(s1.nAppended == s2a.nAppended + s2b.nAppended)
-    assert(s1.nBefore == 150 && s2a.nBefore == 150)
-    val q1 = Similarity.ivfPqProbeIndex(spark, p1, queries,
-      "vec_id", "embedding", k = 10, nProbe = 3)
-    val q2 = Similarity.ivfPqProbeIndex(spark, p2, queries,
-      "vec_id", "embedding", k = 10, nProbe = 3)
-    assert(q1.select(cols.map(col): _*).exceptAll(
-      q2.select(cols.map(col): _*)).isEmpty)
-    assert(q2.select(cols.map(col): _*).exceptAll(
-      q1.select(cols.map(col): _*)).isEmpty)
-    // the appended rows joined the re-rank corpus too: exhaustive-routing
-    // IVFADC+R over the grown index reproduces brute-force exact top-k
-    // over the grown corpus bit-for-bit
-    val rr = Similarity.ivfPqProbeRerank(spark, p1, queries,
-        "vec_id", "embedding", k = 5, nProbe = 8, rerankR = 100000)
-      .select(cols.map(col): _*).as[(Long, Int, Long, Double)].collect().toSet
-    val exact = Similarity.cosineTopK(base.union(batchB).union(batchC),
-        queries, "vec_id", "embedding", 5)
-      .select(cols.map(col): _*).as[(Long, Int, Long, Double)].collect().toSet
-    assert(rr == exact, "post-append exhaustive IVFADC+R != exact top-k")
-    // same drift signal as the uncompressed index
-    assert(s1.meanDistBefore > 0 && s1.driftRatio < 1.5, s1.toString)
   }
 
   test("IVF-PQ index: scans codes not vectors, prunes partitions, ranks usefully") {
@@ -884,14 +784,17 @@ class ExtSpec extends SparkSpec {
   }
 
   test("exact-dup short-circuit clustering equals full-graph clustering") {
-    // dedupClustersDistinct bands only distinct-content representatives;
+    // dedupClustersDistinctWith bands only distinct-content representatives;
     // its (doc, root) output must equal clustering the FULL near-dup pair
     // graph — on the real fixture (which carries exact copies AND
     // near-dup families) and on an adversarial copy-heavy mix
     val full = Dedup.dedupClusters(
       Dedup.jaccardPairs(Dedup.hashedShingles(docs, "doc_id", "text", 3), 0.5),
       "doc_a", "doc_b")
-    val sc = Dedup.dedupClustersDistinct(docs, "doc_id", "text", 0.5)
+    def shortCircuit(df: org.apache.spark.sql.DataFrame) =
+      Dedup.dedupClustersDistinctWith(df, "doc_id", "text")(
+        Dedup.minhashDupPairs(_, "doc_id", "text", 0.5))
+    val sc = shortCircuit(docs)
     assert(sc.exceptAll(full).isEmpty && full.exceptAll(sc).isEmpty)
     // copy-heavy: 30 extra exact copies of doc 0 under fresh ids join
     // doc 0's cluster (or form one rooted at 0) without entering banding
@@ -900,7 +803,7 @@ class ExtSpec extends SparkSpec {
     val mixed = docs.select(col("doc_id"), col("text")).unionByName(
       (1 to 30).map(i => copies.select((col("doc_id") + i).as("doc_id"),
         col("text"))).reduce(_ unionByName _))
-    val scm = Dedup.dedupClustersDistinct(mixed, "doc_id", "text", 0.5)
+    val scm = shortCircuit(mixed)
     val fullm = Dedup.dedupClusters(
       Dedup.jaccardPairs(Dedup.hashedShingles(mixed, "doc_id", "text", 3), 0.5),
       "doc_a", "doc_b")
@@ -1143,10 +1046,9 @@ class ExtSpec extends SparkSpec {
       .select("query_id", "candidate_id").as[(Long, Long)].collect().toMap
     assert(full == exact)
     // k-means partitions the whole corpus across the lists
-    val cents = Similarity.learnCentroids(emb, "vec_id", "embedding", 8, 2)
-    assert(cents.count() == 8)
-    val dims = cents.select(size(col("c"))).as[Int].collect().toSet
-    assert(dims == Set(64))
+    val cents = Similarity.learnCentroidArrays(emb, "vec_id", "embedding", 8, 2)
+    assert(cents.length == 8)
+    assert(cents.map(_.length).toSet == Set(64))
   }
 
   test("native simhash64 is bit-identical to the per-bit HOF fold") {
@@ -1197,15 +1099,6 @@ class ExtSpec extends SparkSpec {
       .orderBy(xxhash64(col("_id")), col("_id")).limit(4)
       .queryExecution.executedPlan.toString
     assert(seedPlan.contains("TakeOrderedAndProject"), seedPlan)
-  }
-
-  test("ivfTopK returns k ranked rows per query") {
-    val out = Similarity.ivfTopK(emb, emb.where(col("vec_id") < 2),
-      "vec_id", "embedding", k = 3, nLists = 8, nProbe = 8)
-    val got = out.groupBy("query_id").agg(count(lit(1)).as("n"))
-      .select("n").as[Long].collect()
-    // probing all lists == exhaustive: exactly k per query
-    assert(got.toSeq == Seq(3L, 3L))
   }
 
   test("native expressions are registered as SQL functions via SparkSessionExtensions") {
@@ -2530,7 +2423,7 @@ class ExtSpec extends SparkSpec {
     assert(con == Set((1L, 2L, 1.0)), s"got $con")
   }
 
-  test("crossMinhashPairs catches the edited leak, ignores foreign bench " +
+  test("crossJaccardPairs catches the edited leak, ignores foreign bench " +
       "docs, and never pairs within a side") {
     import graft.ext.Dedup
     val base = (1 to 30).map(i => s"tok$i").mkString(" ")
@@ -2545,13 +2438,13 @@ class ExtSpec extends SparkSpec {
       (1000001L, (2 to 30).map(i => s"tok$i").mkString(" ")),
       (1000002L, (501 to 530).map(i => s"q$i").mkString(" "))) // foreign
       .toDF("doc_id", "text")
-    val pairs = Dedup.crossMinhashPairs(train, bench, "doc_id", "text",
+    val pairs = Dedup.crossJaccardPairs(train, bench, "doc_id", "text",
         minJ = 0.5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     // both verbatim variants of the base text match the edited leak;
     // nothing matches the foreign doc, no train-train / bench-bench pair
     assert(pairs === Set((1L, 1000001L), (3L, 1000001L)), s"got $pairs")
-    val j = Dedup.crossMinhashPairs(train, bench, "doc_id", "text", 0.5)
+    val j = Dedup.crossJaccardPairs(train, bench, "doc_id", "text", 0.5)
       .where($"doc_a" === 1L).select("jaccard").as[Double].collect().head
     // 30 tokens → 28 distinct shingles; dropping w1 removes exactly 1
     assert(math.abs(j - 27.0 / 28.0) < 1e-9, s"jaccard $j")

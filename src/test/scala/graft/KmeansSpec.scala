@@ -94,28 +94,6 @@ class KmeansSpec extends SparkSpec {
            dump(Kmeans.assignServingHof(df, "vec_id", "embedding", m)))
   }
 
-  test("broadcast-centroid serving and training ≡ the reference forms") {
-    val df = cloud(40)
-    val mf = Kmeans.trainFast(df, "vec_id", "embedding", k = 2, iters = 3)
-    // training through per-round broadcasts lands on bit-identical
-    // centroids (same kernel, same decimal+grid update)
-    val mb = Kmeans.trainFastBcast(df, "vec_id", "embedding", k = 2,
-      iters = 3)
-    for (cl <- mf.cents.indices; j <- mf.cents(cl).indices)
-      assert(java.lang.Double.doubleToLongBits(mf.cents(cl)(j)) ===
-             java.lang.Double.doubleToLongBits(mb.cents(cl)(j)),
-        s"bcast/reference centroid ($cl,$j) diverge")
-    // serving through the broadcast expression is row-for-row
-    // bit-identical (dist2 included) to the reference-object form
-    val bc = spark.sparkContext.broadcast(mf.cents)
-    def dump(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
-    assert(dump(Kmeans.assignServing(df, "vec_id", "embedding", mf)) ===
-           dump(Kmeans.assignServingBcast(df, "vec_id", "embedding", bc)))
-    bc.unpersist(false)
-  }
-
   test("semProbeStream flags copies against members, clears fresh vectors") {
     val base = cloud(20).select(col("vec_id"), col("embedding"))
     val m = Kmeans.train(base, "vec_id", "embedding", k = 2, iters = 2)
@@ -164,38 +142,6 @@ class KmeansSpec extends SparkSpec {
       assert(byId(i).getAs[Boolean]("keep"))
     }
     assert(out.count(_.getAs[Boolean]("keep")) === 20)
-  }
-
-  test("semDedupBanded matches the exact path's keep decision on planted copies") {
-    // the Σ|cluster|² scale path: banding by sign-LSH signatures inside
-    // clusters — exact copies share every band signature, so their
-    // recovery is deterministic and the keep decision must equal
-    // semDedup's; organic cosines in the fixture sit far below the cut,
-    // so neither path has near-threshold pairs to disagree on
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-    val copies = emb.where(col("vec_id") % 10 === 0)
-      .select((col("vec_id") + 50000L).as("vec_id"), col("embedding"))
-    val corpus = emb.unionByName(copies).localCheckpoint(true)
-    val cols = Seq("vec_id", "cluster", "root", "keeper", "keep")
-    val exact = Kmeans.semDedup(corpus, "vec_id", "embedding", k = 8,
-      iters = 1, minCosine = 0.9, fast = true)
-      .select(cols.map(col): _*).collect()
-      .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2),
-        r.getLong(3), r.getBoolean(4))).toSet
-    val banded = Kmeans.semDedupBanded(corpus, "vec_id", "embedding",
-      k = 8, iters = 1, minCosine = 0.9, bits = 12, bands = 4)
-      .select(cols.map(col): _*).collect()
-      .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2),
-        r.getLong(3), r.getBoolean(4))).toSet
-    assert(banded == exact, "banded path diverged from the exact path")
-    // and the decision is the right one: every planted copy dropped with
-    // its original as keeper
-    val byId = banded.map(t => t._1 -> t).toMap
-    copies.select("vec_id").as[Long].collect().foreach { cid =>
-      assert(!byId(cid)._5 && byId(cid)._4 == cid - 50000L,
-        s"copy $cid must drop with keeper ${cid - 50000L}")
-    }
   }
 
   test("NearestCentroidDecimal ≡ the relational decimal assignment " +
@@ -389,7 +335,7 @@ class KmeansSpec extends SparkSpec {
       assert(byId(id) == ((id, byId(id)._2, id, id, true)))
   }
 
-  test("semDedup and semDedupBanded ≡ the global reference on a 12-chain, " +
+  test("semDedup ≡ the global reference on a 12-chain, " +
       "a star, dist2 ties, singletons and two clusters") {
     for ((name, corpus, k) <- Seq(("chain12", chain12, 1),
                                  ("twoClouds", twoClouds, 2))) {
@@ -399,11 +345,6 @@ class KmeansSpec extends SparkSpec {
       val fast = referenceSemDedup(corpus, k, 3, 0.99, fast = true)
       assert(kept(Kmeans.semDedup(corpus, "vec_id", "embedding", k, 3,
         0.99, fast = true)) == fast, s"$name: semDedup(fast = true)")
-      // 4-bit signatures in 8 bands: a pair under 8° apart misses every
-      // band with probability < 1e-5, so the banded candidates hold every
-      // verified pair of these fixtures
-      assert(kept(Kmeans.semDedupBanded(corpus, "vec_id", "embedding", k, 3,
-        0.99, bits = 4, bands = 8)) == fast, s"$name: semDedupBanded")
       // the fixtures really carry the shapes named above
       val byId = exact.map(t => t._1 -> t).toMap
       if (name == "chain12")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ext.{Dedup, Graph, Pin, Ranks}
+import graft.ext.{Bpe, CurationPipeline, Dedup, Graph, Pin, QualityModel, Ranks}
 import org.apache.spark.sql.functions._
 
 /** The reliable-checkpoint toggle must be value-invisible: every pinned
@@ -70,6 +70,46 @@ class PinSpec extends SparkSpec {
       assert(cc == ccLocal)
       // the reliable path actually wrote checkpoint data
       assert(spark.sparkContext.getCheckpointDir.nonEmpty)
+    }
+  }
+
+  test("CurationPipeline stages and Bpe.trainMerges are bit-identical under reliable checkpointing") {
+    val docs = spark.read.parquet(sf("documents"))
+    val ingest = docs.select(col("doc_id"), col("lang"), col("source"),
+      regexp_replace(col("text"), " line ", ".\n").as("text"))
+    // dyadic weights: scores spread around the median gate, grid-exact
+    val model = QualityModel.LinearModel(
+      Array.tabulate(64)(i => (i % 5 - 2) / 8.0), 0.0, 0L)
+    def stages(): Seq[Set[String]] = {
+      val st = CurationPipeline.run(ingest, model,
+        benchOf = _.where(col("doc_id") % 20 === 7)
+          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")),
+        urls = ingest.select(col("doc_id"), concat(lit("https://"),
+          col("source"), lit(".example.com/d/"),
+          col("doc_id").cast("string")).as("url")),
+        ranks = ingest.select(col("doc_id"),
+          (pmod(col("doc_id"), lit(10L)) / 10000.0).as("rank")))
+      Seq(st.deduped, st.gated, st.scoredKeep, st.ranked, st.decon,
+          st.mixed, st.packed)
+        .map(_.collect().map(_.toString).toSet)
+    }
+    // files under the checkpoint dir: grows only when a pin goes through
+    // the reliable checkpoint, not a local one
+    def ckptFiles(): Long = spark.sparkContext.getCheckpointDir.map { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.getContentSummary(p).getFileCount else 0L
+    }.getOrElse(0L)
+    val curatedLocal = stages()
+    assert(curatedLocal.last.nonEmpty, "degenerate fixture: nothing packed")
+    val mergesLocal = Bpe.trainMerges(docs, "text", m = 4)
+    withReliable {
+      val n0 = ckptFiles()
+      assert(stages() == curatedLocal)
+      val n1 = ckptFiles()
+      assert(n1 > n0, "CurationPipeline pins skipped the reliable checkpoint")
+      assert(Bpe.trainMerges(docs, "text", m = 4) == mergesLocal)
+      assert(ckptFiles() > n1, "Bpe.trainMerges pins skipped the reliable checkpoint")
     }
   }
 }

@@ -131,24 +131,6 @@ class StreamingSpec extends SparkSpec {
       s"idle session must flush via timeout, got: $flushed")
   }
 
-  test("streaming dedup drops duplicate ids across micro-batches") {
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, java.sql.Timestamp, Double)](spark, 1)
-    val df = input.toDF().toDF("event_id", "ts", "value")
-    val q = StreamingOps.dedupStream(df, "event_id", "ts")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("dedup_stream_tbl").start()
-    val t = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    input.addData((1L, t, 1.0), (1L, t, 1.0), (2L, t, 2.0))
-    q.processAllAvailable()
-    input.addData((1L, t, 1.0), (3L, t, 3.0)) // dup from an earlier batch
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("dedup_stream_tbl").select("event_id")
-      .as[Long].collect().sorted.toSeq
-    assert(ids == Seq(1L, 2L, 3L))
-  }
-
   test("streaming minhash probe equals batch near-dup pairs on a planted set") {
     import graft.ext.Dedup
     import graft.streaming.StreamingDedup
@@ -189,28 +171,6 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     assert(streamed.toSet == batch, s"streamed=$streamed batch=$batch")
     assert(streamed.map(_._1).toSet == Set(101L, 102L))
-
-    // bucketed (latency-mode) layout: identical pairs through the pruned
-    // batch probe, and the pruning diagnostic sees a bounded bucket set
-    val idxB = "/tmp/graft_test_minhash_idx_bk"
-    StreamingDedup.buildMinhashIndex(corpus, "doc_id", "text", idxB,
-      nBuckets = 64)
-    val ndDf = newDocs.toDF("doc_id", "text")
-    val bucketed = StreamingDedup.minhashDupBatch(spark, ndDf,
-        "doc_id", "text", idxB, 0.5)
-      .select("doc_new", "doc_corpus", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(bucketed == batch, s"bucketed=$bucketed batch=$batch")
-    val hit = StreamingDedup.minhashDupBatchPrunedBuckets(spark, ndDf,
-      "doc_id", "text", idxB)
-    // 4 docs x 16 bands = at most 64 keys; must be a positive bounded set
-    assert(hit > 0 && hit <= 64)
-    // unbucketed index: batch probe falls back to the full scan, same pairs
-    val fallback = StreamingDedup.minhashDupBatch(spark, ndDf,
-        "doc_id", "text", idx, 0.5)
-      .select("doc_new", "doc_corpus", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(fallback == batch)
   }
 
   test("streaming simhash probe equals batch pairs, hamming verified row-locally") {
@@ -233,30 +193,16 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.table("simhash_stream_tbl")
       .select("doc_new", "doc_corpus", "hamming")
       .as[(Long, Long, Int)].collect().toSet
-    val union = corpus.union(newDocs.toDF("doc_id", "text"))
-    val batch = Dedup.simhashDupPairsAtScale(union, "doc_id", "text")
-      .where(col("doc_a") <= 20 && col("doc_b") >= 200)
-      .select(col("doc_b"), col("doc_a"), col("hamming"))
-      .as[(Long, Long, Int)].collect().toSet
+    // brute-force reference: every new-vs-corpus fingerprint pair within
+    // hamming 3 (the probe's banding is exact for hamming <= maxDist)
+    val sim = Dedup.simhash64(corpus.union(newDocs.toDF("doc_id", "text")),
+      "doc_id", "text").as[(Long, Long)].collect()
+    val batch = (for {
+      (dn, sn) <- sim if dn >= 200; (dc, sc) <- sim if dc <= 20
+      h = java.lang.Long.bitCount(sn ^ sc) if h <= 3
+    } yield (dn, dc, h)).toSet
     assert(streamed == batch, s"streamed=$streamed batch=$batch")
     assert(streamed.contains((201L, 5L, 0))) // exact dup: hamming 0
-
-    // bucketed (latency-mode) layout: identical pairs via the pruned
-    // batch probe; unbucketed index falls back to the full scan
-    val idxB = "/tmp/graft_test_simhash_idx_bk"
-    StreamingDedup.buildSimhashIndex(corpus, "doc_id", "text", idxB,
-      nBuckets = 64)
-    val ndDf = newDocs.toDF("doc_id", "text")
-    val bucketed = StreamingDedup.simhashDupBatch(spark, ndDf,
-        "doc_id", "text", idxB)
-      .select("doc_new", "doc_corpus", "hamming")
-      .as[(Long, Long, Int)].collect().toSet
-    assert(bucketed == batch, s"bucketed=$bucketed batch=$batch")
-    val fallback = StreamingDedup.simhashDupBatch(spark, ndDf,
-        "doc_id", "text", idx)
-      .select("doc_new", "doc_corpus", "hamming")
-      .as[(Long, Long, Int)].collect().toSet
-    assert(fallback == batch)
   }
 
   test("portable simhash: pinned cross-engine values, streaming probe exact") {
@@ -337,46 +283,6 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(streamed == batch,
       s"streamed-only=${streamed -- batch} batch-only=${batch -- streamed}")
-  }
-
-  test("ivfCompact rewrites each list as one file; probes unchanged") {
-    import graft.ext.Similarity
-    val emb = spark.read.parquet(sf("embeddings"))
-    val idx = "/tmp/graft_test_compact_idx"
-    val d = new java.io.File(idx)
-    if (d.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(d)
-    }
-    Similarity.buildIvfIndex(emb.where(col("vec_id") < 150),
-      "vec_id", "embedding", idx, nLists = 4, iters = 2)
-    Similarity.ivfAppend(spark, idx,
-      emb.where(col("vec_id") >= 150 && col("vec_id") < 170), "vec_id", "embedding")
-    Similarity.ivfAppend(spark, idx,
-      emb.where(col("vec_id") >= 170), "vec_id", "embedding")
-    val queries = emb.where(col("vec_id") < 4)
-    val cols = Seq("query_id", "rank", "candidate_id", "cosine")
-    val before = Similarity.ivfProbeIndex(spark, idx, queries,
-      "vec_id", "embedding", k = 5, nProbe = 2)
-    val beforeRows = before.select(cols.map(col): _*)
-      .as[(Long, Int, Long, Double)].collect().toSet
-    def filesPerList(): Map[String, Int] =
-      new java.io.File(s"$idx/corpus").listFiles().toSeq
-        .filter(_.getName.startsWith("list="))
-        .map(dir => dir.getName ->
-          dir.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-    assert(filesPerList().values.exists(_ > 1),
-      "appends should have produced multiple files in some list")
-    Similarity.ivfCompact(spark, idx)
-    assert(filesPerList().values.forall(_ == 1),
-      s"compaction must leave one file per list: ${filesPerList()}")
-    val after = Similarity.ivfProbeIndex(spark, idx, queries,
-        "vec_id", "embedding", k = 5, nProbe = 2)
-      .select(cols.map(col): _*)
-      .as[(Long, Int, Long, Double)].collect().toSet
-    assert(after == beforeRows)
   }
 
   test("mapGroupsWithState running stats accumulate per series") {
@@ -517,108 +423,29 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.as[(String, Long)].collect().toSet == batch)
   }
 
-  test("window-index append lifecycle: probe-after-append == rebuild; compact is a no-op") {
+  test("appendShingleIndexBatch refuses a FLAT buildShingleIndex root") {
     import graft.streaming.StreamingDedup
-    implicit val s = spark
-    val docsAll = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val corpusA = docsAll.where(col("doc_id") % 3 === 0)
-    val corpusB = docsAll.where(col("doc_id") % 3 === 1)
-    val probeDocs = docsAll.where(col("doc_id") % 3 === 2)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)].collect().toSeq
-    val grown = "/tmp/graft_test_winidx_grown"
-    val rebuilt = "/tmp/graft_test_winidx_rebuilt"
-    StreamingDedup.buildWindowIndex(corpusA, "doc_id", "text", grown)
-    val (before, appended) =
-      StreamingDedup.appendWindowIndex(corpusB, "doc_id", "text", grown)
-    assert(before > 0 && appended > 0)
-    StreamingDedup.buildWindowIndex(
-      corpusA.unionByName(corpusB), "doc_id", "text", rebuilt)
-    def probeHits(path: String, name: String): Set[(Long, Int)] = {
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)](spark, 1)
-      val q = StreamingDedup.windowHitStream(spark,
-          input.toDF().toDF("doc_id", "text"), "doc_id", "text", path)
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      input.addData(probeDocs: _*)
-      q.processAllAvailable(); q.stop()
-      spark.table(name).as[(Long, Int)].collect().toSet
-    }
-    val hitsGrown = probeHits(grown, "winidx_grown_tbl")
-    val hitsRebuilt = probeHits(rebuilt, "winidx_rebuilt_tbl")
-    assert(hitsGrown == hitsRebuilt, "append-grown probe != rebuild probe")
-    assert(hitsGrown.nonEmpty, "degenerate fixture: no window hits at all")
-    // re-appending the SAME batch plants cross-batch duplicates; the
-    // semi-join probe must not double-report
-    StreamingDedup.appendWindowIndex(corpusB, "doc_id", "text", grown)
-    assert(probeHits(grown, "winidx_dup_tbl") == hitsRebuilt)
-    // compaction reclaims the duplicates without changing probe results
-    StreamingDedup.compactWindowIndex(spark, grown)
-    val rows = spark.read.parquet(grown)
-    assert(rows.count() == rows.distinct().count(),
-      "compact left duplicate hashes")
-    assert(rows.count() == spark.read.parquet(rebuilt).count())
-    assert(probeHits(grown, "winidx_compact_tbl") == hitsRebuilt)
-  }
-
-  test("URL-keeper index append lifecycle: probe-after-append == rebuild; compact folds") {
-    import graft.streaming.StreamingDedup
-    val docsAll = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    // synthetic canons with planted cross-batch collisions: doc_id % 25
-    // gives ~20 docs per canon spread across both batches, so the min
-    // fold genuinely crosses the append boundary
-    def pairs(df: org.apache.spark.sql.DataFrame) = df.select(
-      col("doc_id"), concat(lit("https://example.com/p/"),
-        pmod(col("doc_id"), lit(25L)).cast("string")).as("canon"))
+    val docsAll = spark.read.parquet(sf("documents"))
     val a = docsAll.where(col("doc_id") % 2 === 0)
     val b = docsAll.where(col("doc_id") % 2 === 1)
-    val grown = "/tmp/graft_test_keeper_grown"
-    val rebuilt = "/tmp/graft_test_keeper_rebuilt"
-    StreamingDedup.buildKeeperIndex(pairs(a), grown)
-    val (before, appended) = StreamingDedup.appendKeeperIndex(pairs(b), grown)
-    assert(before > 0 && appended > 0)
-    StreamingDedup.buildKeeperIndex(pairs(a.unionByName(b)), rebuilt)
-    def view(path: String) = StreamingDedup.keeperOf(spark, path)
-      .as[(String, Long)].collect().toSet
-    val g = view(grown)
-    assert(g == view(rebuilt), "append-grown keeper view != rebuild")
-    assert(g.nonEmpty)
-    // the grown layout holds >1 row per canon; compact folds it back to
-    // one row per canon without changing the probe view
-    assert(spark.read.parquet(grown).count() >
-      spark.read.parquet(rebuilt).count())
-    StreamingDedup.compactKeeperIndex(spark, grown)
-    assert(spark.read.parquet(grown).count() ==
-      spark.read.parquet(rebuilt).count())
-    assert(view(grown) == g)
-  }
-
-  test("shingle index append lifecycle: drop probe after append == rebuild") {
-    import graft.streaming.StreamingDedup
-    val docsAll = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val a = docsAll.where(col("doc_id") % 3 === 0)
-    val b = docsAll.where(col("doc_id") % 3 === 1)
-    val probe = docsAll.where(col("doc_id") % 3 === 2)
-    val grown = "/tmp/graft_test_shidx_grown"
-    val rebuilt = "/tmp/graft_test_shidx_rebuilt"
-    StreamingDedup.buildShingleIndex(a, "doc_id", "text", grown)
-    val (before, appended) =
-      StreamingDedup.appendShingleIndex(b, "doc_id", "text", grown)
-    assert(before > 0 && appended > 0)
-    StreamingDedup.buildShingleIndex(a.unionByName(b), "doc_id", "text",
-      rebuilt)
-    def drops(path: String) = StreamingDedup.shingleDropStream(spark,
-        probe, "doc_id", "text", path, minJ = 0.5)
-      .as[Long].collect().toSet
-    val g = drops(grown)
-    assert(g == drops(rebuilt), "append-grown drop set != rebuild")
-    assert(g.nonEmpty, "degenerate fixture: no near-dups across the split")
-    // compact re-sorts without changing the row set or the probe
-    val rowsBefore = spark.read.parquet(grown).count()
-    StreamingDedup.compactShingleIndex(spark, grown)
-    assert(spark.read.parquet(grown).count() == rowsBefore)
-    assert(drops(grown) == g)
+    // partition discovery cannot read bare data files next to batch=
+    // dirs, so the batch append must refuse the flat layout up front
+    val flat = "/tmp/graft_test_shidx_flat"
+    StreamingDedup.buildShingleIndex(a, "doc_id", "text", flat)
+    val e = intercept[IllegalArgumentException](
+      StreamingDedup.appendShingleIndexBatch(b, "doc_id", "text", flat, 0L))
+    assert(e.getMessage.contains("FLAT layout"), e.getMessage)
+    assert(!new java.io.File(s"$flat/batch=0").exists(),
+      "the refused append must write nothing")
+    // an absent root, then a batch-partitioned one, accept batch appends
+    val batched = "/tmp/graft_test_shidx_batched"
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    }
+    rm(new java.io.File(batched))
+    StreamingDedup.appendShingleIndexBatch(a, "doc_id", "text", batched, 0L)
+    StreamingDedup.appendShingleIndexBatch(b, "doc_id", "text", batched, 1L)
+    assert(spark.read.parquet(batched).select("batch").distinct().count() == 2)
   }
 
   test("mid-stream index evolution: frozen-index decisions are a strict subset") {
