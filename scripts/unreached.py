@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """List the public graft.* methods that no production entry point reaches.
 
-    sbt compile && python3 scripts/unreached.py [classes_dir]
+    sbt compile && python3 scripts/unreached.py [--defaults] [classes_dir]
 
 Disassembles every class under classes_dir (default
 target/scala-2.13/classes) with the JDK's `javap -c -p`, builds a call graph
@@ -23,7 +23,14 @@ one `Owner.*` line for a class none of whose methods is reached; Scala
 synthetics (case-class members, default-argument getters, static
 forwarders, accessors of case-class fields) are left out. ScaleSmoke and
 the test specs are not roots, so a def only they call is listed.
+
+With --defaults it lists instead each default parameter of a reached public
+method that no reached call site sets (`Owner.method(param)`): a call that
+omits argument N also invokes the getter `method$default$N`, so N is unset
+when every reached call of the method comes with a call of that getter. A
+method the benchmark sources call counts as setting every parameter.
 """
+import collections
 import os
 import re
 import subprocess
@@ -44,6 +51,8 @@ FIELD = re.compile(r"^  [\w .$<>,\[\]?]*? ([\w$]+);$")
 CALL = re.compile(r"// (?:Interface)?Method (?:([\w/$]+)\.)?(\"?[\w$<>]+\"?):")
 NEW = re.compile(r"// class ([\w/$]+)$")
 MODULE = re.compile(r"// Field ([\w/$]+\$)\.MODULE\$:")
+DEFAULT = re.compile(r"^(.+)\$default\$(\d+)$")
+LOCAL = re.compile(r"^\s+(\d+)\s+\d+\s+(\d+)\s+([\w$]+)\s+\S+$")
 
 
 def strip_generics(s):
@@ -52,16 +61,22 @@ def strip_generics(s):
     return s
 
 
-def load(classes_dir):
+def load(classes_dir, params=False):
     files = []
     for dirpath, _, names in os.walk(os.path.join(classes_dir, "graft")):
         files += [os.path.join(dirpath, n) for n in names if n.endswith(".class")]
     classes = {}
     for i in range(0, len(files), 200):
-        out = subprocess.run(["javap", "-c", "-p"] + files[i:i + 200],
+        flags = ["-c", "-p"] + (["-l"] if params else [])
+        out = subprocess.run(["javap"] + flags + files[i:i + 200],
                              capture_output=True, text=True, check=True).stdout
         cls = meth = None
         for line in out.splitlines():
+            v = LOCAL.match(line)
+            if v and meth is not None:
+                if v.group(1) == "0":  # a parameter: in scope from pc 0
+                    meth["params"].append((int(v.group(2)), v.group(3)))
+                continue
             h = HEADER.match(line)
             if h:
                 name = h.group(1).replace(".", "/")
@@ -79,7 +94,8 @@ def load(classes_dir):
                     mname = "<init>"
                 meth = cls["methods"].setdefault(mname, {
                     "public": "public" in mods.split(), "static": "static" in mods.split(),
-                    "calls": set(), "news": set(), "modules": set()})
+                    "calls": collections.Counter(), "news": set(),
+                    "modules": set(), "params": []})
                 continue
             f = FIELD.match(line)
             if f and meth is None:
@@ -90,7 +106,7 @@ def load(classes_dir):
             c = CALL.search(line)
             if c:
                 owner = c.group(1) or name
-                meth["calls"].add((owner, c.group(2).strip('"')))
+                meth["calls"][(owner, c.group(2).strip('"'))] += 1
             elif re.search(r"\bnew\b", line):
                 n = NEW.search(line)
                 if n:
@@ -127,21 +143,22 @@ def perfbench_roots(classes, src_dir):
     return roots
 
 
+def resolve(classes, owner, name):
+    # the classes that define `name`, searching owner then its supertypes
+    seen, todo = set(), [owner]
+    while todo:
+        c = todo.pop(0)
+        if c in seen or c not in classes:
+            continue
+        seen.add(c)
+        if name in classes[c]["methods"]:
+            yield c
+        todo += classes[c]["supers"]
+
+
 def walk(classes, roots):
     reached, instantiated = set(), set()
     stack = list(roots)
-
-    def resolve(owner, name):
-        # the class that defines `name`, searching owner then its supertypes
-        seen, todo = set(), [owner]
-        while todo:
-            c = todo.pop(0)
-            if c in seen or c not in classes:
-                continue
-            seen.add(c)
-            if name in classes[c]["methods"]:
-                yield c
-            todo += classes[c]["supers"]
 
     def ancestors(c):
         out, todo = set(), list(classes.get(c, {}).get("supers", []))
@@ -176,7 +193,7 @@ def walk(classes, roots):
             stack += [(c, "<clinit>"), (c, "<init>")] + overrides(c)
             continue
         owner, name = item
-        for c in resolve(owner, name):
+        for c in resolve(classes, owner, name):
             if (c, name) in reached:
                 continue
             reached.add((c, name))
@@ -192,33 +209,72 @@ def walk(classes, roots):
     return reached, instantiated
 
 
+def listed(classes, c, m, info):
+    """Whether `c.m` is a public method written in the source."""
+    cls = classes[c]
+    if not info["public"] or m.startswith("<") or "$" in m:
+        return False
+    if info["static"] and c + "$" in classes:
+        return False  # static forwarder of an object method
+    case = "productElement" in cls["methods"]
+    companion = classes.get(c[:-1]) if c.endswith("$") else None
+    if (case or (companion and "productElement" in companion["methods"])) \
+            and m in CASE_SYNTHETICS:
+        return False
+    if case and m in cls["fields"]:
+        return False
+    return True
+
+
+def display(c):
+    return c.replace("/", ".").rstrip("$").replace("$", ".")
+
+
+def unset_defaults(classes, reached, perf_roots):
+    """`Owner.method(param)` for each default parameter of a reached public
+    method that every reached call of the method leaves at its default."""
+    calls = collections.Counter()    # (class, method) -> reached calls
+    omitted = collections.Counter()  # (class, method, N) -> calls omitting N
+    for c, name in reached:
+        for (owner, callee), n in classes[c]["methods"][name]["calls"].items():
+            target = next(resolve(classes, owner, callee), None)
+            d = DEFAULT.match(callee)
+            if target is None:
+                continue
+            if d:
+                omitted[(target, d.group(1), int(d.group(2)))] += n
+            else:
+                calls[(target, callee)] += n
+    lines = []
+    for (c, m, i), n in sorted(omitted.items()):
+        info = classes[c]["methods"].get(m)
+        if info is None or not listed(classes, c, m, info) \
+                or (c, m) in perf_roots or n < calls[(c, m)]:
+            continue
+        params = [p for _, p in sorted(info["params"]) if p != "this"]
+        param = params[i - 1] if i <= len(params) else "#%d" % i
+        lines.append("%s.%s(%s)" % (display(c), m, param))
+    return lines
+
+
 def main():
-    classes_dir = sys.argv[1] if len(sys.argv) > 1 else "target/scala-2.13/classes"
+    args = sys.argv[1:]
+    defaults = "--defaults" in args
+    args = [a for a in args if a != "--defaults"]
+    classes_dir = args[0] if args else "target/scala-2.13/classes"
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    classes = load(classes_dir)
+    classes = load(classes_dir, params=defaults)
     roots = set()
     for c in classes:
         short = c.split("/")[-1]
         if c.count("/") == 1 and short.split("$")[0] in ROOTS:
             roots |= {(c, m) for m in classes[c]["methods"]}
             roots.add(("new", c) if not c.endswith("$") else ("module", c))
-    roots |= perfbench_roots(classes, os.path.join(repo, "perfbench", "scala"))
-    reached, instantiated = walk(classes, roots)
-
-    def listed(c, m, info):
-        cls = classes[c]
-        if not info["public"] or m.startswith("<") or "$" in m:
-            return False
-        if info["static"] and c + "$" in classes:
-            return False  # static forwarder of an object method
-        case = "productElement" in cls["methods"]
-        companion = classes.get(c[:-1]) if c.endswith("$") else None
-        if (case or (companion and "productElement" in companion["methods"])) \
-                and m in CASE_SYNTHETICS:
-            return False
-        if case and m in cls["fields"]:
-            return False
-        return True
+    perf_roots = perfbench_roots(classes, os.path.join(repo, "perfbench", "scala"))
+    reached, instantiated = walk(classes, roots | perf_roots)
+    if defaults:
+        print("\n".join(unset_defaults(classes, reached, perf_roots)))
+        return
 
     lines = []  # a class and its companion object print under one name
     for c in sorted(classes):
@@ -226,10 +282,10 @@ def main():
             continue
         cls = classes[c]
         todo = [m for m, info in cls["methods"].items()
-                if listed(c, m, info) and (c, m) not in reached]
+                if listed(classes, c, m, info) and (c, m) not in reached]
         if not todo:
             continue
-        shown = c.replace("/", ".").rstrip("$").replace("$", ".")
+        shown = display(c)
         if c not in instantiated and not any(k[0] == c for k in reached):
             lines.append(shown + ".*")
         else:

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{DotProduct, HyperplaneSig, NormalizeUnicode, SimHash64, SortedIntersectCount}
+import graft.functions.{DotProduct, HyperplaneSig, NormalizeUnicode, SortedIntersectCount}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -22,10 +22,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[SortedIntersectCount].getName,
         "graft_sorted_intersect_count"),
       (children: Seq[Expression]) => SortedIntersectCount(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (children: Seq[Expression]) => SimHash64(children.head)))
     // graft_hyperplane_sig(vec, bits, seed) — bits/seed must be literals
     // (they parameterize the generated code / cached weight table)
     ext.injectFunction((

@@ -235,7 +235,7 @@ object ScaleSmoke {
         Dedup.shingleArray(split(col("text"), " "), 3), 64).as("sig"))
       record("minhash-bands", n,
         occupancy(Dedup.minhashBands(sig, 16, 4), Seq("band", "bandhash")))
-      val sim = Dedup.simhash64(docs, "doc_id", "text").cache()
+      val sim = Dedup.portableSimhash64(docs, "doc_id", "text").cache()
       record("simhash-manku-bands", n,
         occupancy(Dedup.simhashBands(sim, 3, 6), Seq("band", "bandkey")))
       sim.unpersist()

@@ -1591,7 +1591,7 @@ object SparkEntry {
   private val simhashIndexFor = Artifact("simhashIdx") { (s, dir) =>
     val p = scratch("stream_simhash_idx", dir)
     graft.streaming.StreamingDedup.buildSimhashIndex(dedupCorpus(s, dir),
-      "doc_id", "text", p, portable = true)
+      "doc_id", "text", p)
     p
   }
 
@@ -5555,7 +5555,7 @@ object SparkEntry {
         s, s"$dir/documents.parquet", "stream_simhash_dedup_result") { st =>
         graft.streaming.StreamingDedup.simhashDupStream(
           s, st.where(col("doc_id") % 5 === 0), "doc_id", "text", idx,
-          maxDist = 3, portable = true)
+          maxDist = 3)
       }
       sortSmall(res.select(col("doc_new"), col("doc_corpus"),
         col("hamming").cast("long").as("hamming")), "doc_new", "doc_corpus")
@@ -5586,7 +5586,7 @@ object SparkEntry {
         s, s"$dir/documents.parquet", "stream_curate_pairs") { st =>
         graft.streaming.StreamingDedup.simhashDupStream(
           s, passes(st.where(col("doc_id") % 5 === 0)), "doc_id", "text",
-          idx, maxDist = 3, portable = true)
+          idx, maxDist = 3)
       }
       // keep decision: filter-passing new docs minus near-dup hits. The
       // filters are deterministic row-local projections, so recomputing

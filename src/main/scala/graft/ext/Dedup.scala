@@ -607,21 +607,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** 64-bit SimHash over whitespace tokens, computed row-locally with
-    * array folds (no explode, no shuffle): per bit, sign of Σ ±1 over
-    * token hashes. Near-dup = small Hamming distance; pair generation via
-    * [[simhashBands]] combination banding. */
-  def simhash64(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // token hashes materialized once, then one native codegen'd pass over
-    // them per row (graft.functions.SimHash64: tight token×bit loop; same
-    // sign semantics as the original 64 per-bit HOF folds, which built an
-    // interpreted 64-subtree expression per row)
-    val withHashes = df.select(col(idCol).as("doc"),
-      transform(split(col(textCol), " "), t => xxhash64(t)).as("_h"))
-    withHashes.select(col("doc"),
-      graft.functions.VectorFunctions.simhash64(col("_h")).as("simhash"))
-  }
-
   /** Cross-engine-reproducible 60-bit SimHash: the token hash is the
     * first 15 hex chars of md5(token) parsed as an integer — a
     * construction any SQL engine with md5() replicates exactly (15

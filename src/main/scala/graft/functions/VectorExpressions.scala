@@ -192,65 +192,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** 64-bit SimHash over an `array<long>` of token hashes: per bit, the sign
-  * of Σ(±1) across tokens (bit set in the token hash → +1, else −1; a null
-  * token contributes −1, matching the HOF fold's `when` null semantics).
-  * One tight two-level loop in codegen — replaces the 64 unrolled
-  * per-bit `aggregate(...)` folds of the original formulation, which built
-  * a 64-subtree interpreted (CodegenFallback) expression per row. */
-case class SimHash64(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val ones = new Array[Int](64)
-    var t = 0
-    while (t < n) {
-      if (!arr.isNullAt(t)) {
-        val h = arr.getLong(t)
-        var b = 0
-        while (b < 64) { ones(b) += ((h >>> b) & 1L).toInt; b += 1 }
-      }
-      t += 1
-    }
-    // bit set iff Σ(±1) > 0 iff 2·ones > n (null tokens count only in n)
-    var sig = 0L
-    var b = 0
-    while (b < 64) { if (2 * ones(b) > n) sig |= (1L << b); b += 1 }
-    sig
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val ones = ctx.freshName("ones")
-      val t = ctx.freshName("t")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $ones = new int[64];
-         |for (int $t = 0; $t < $n; $t++) {
-         |  if (!$a.isNullAt($t)) {
-         |    long $h = $a.getLong($t);
-         |    for (int $b = 0; $b < 64; $b++) $ones[$b] += (int) (($h >>> $b) & 1L);
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b = 0; $b < 64; $b++) if (2 * $ones[$b] > $n) $sig |= (1L << $b);
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
 /** Helpers for the portable (md5-derived) 60-bit SimHash — shared by the
   * interpreted and generated paths of [[Md5Hash60Tokens]]/[[SimHash60]]. */
 object SimHash60Helpers {
@@ -290,7 +231,7 @@ object SimHash60Helpers {
   /** 60-bit sign-sum fingerprint over 60-bit token hashes. Matches the
     * original HOF fold exactly: a null token hash contributes −1 to every
     * bit (counted in n, not in ones), and the tie rule is `sum >= 0`
-    * (bit set iff 2·ones >= n) — note `>=`, unlike [[SimHash64]]'s `>`. */
+    * (bit set iff 2·ones >= n). */
   def simhash60(hashes: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
     val n = hashes.numElements()
     val ones = new Array[Int](60)
@@ -334,9 +275,9 @@ case class Md5Hash60Tokens(child: Expression)
     copy(child = newChild)
 }
 
-/** 60-bit portable SimHash of an `array<long>` token-hash column — the
-  * native twin of [[SimHash64]] with the md5-oracle bit width and the
-  * original fold's `>= 0` tie rule. */
+/** 60-bit portable SimHash of an `array<long>` token-hash column: one
+  * native token×bit loop with the md5-oracle bit width and the original
+  * fold's `>= 0` tie rule. */
 case class SimHash60(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
 
@@ -853,10 +794,6 @@ object VectorFunctions {
   def sortedIntersectCount(a: Column, b: Column): Column =
     ColumnBridge.column(SortedIntersectCount(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** 64-bit SimHash of an `array<long>` token-hash column. */
-  def simhash64(tokenHashes: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokenHashes)))
 
   /** Portable 60-bit md5 hashes of an `array<string>` token column. */
   def md5Hash60Tokens(tokens: Column): Column =

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.ext.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 /** Streaming near-duplicate detection against a PERSISTED corpus index —
   * the streaming face of the batch dedup operators (the same move
@@ -44,58 +44,19 @@ object StreamingDedup {
   /** Build the persisted MinHash index of a corpus: `<path>/bands` — one
     * (doc, band, bandhash) row per document band, the candidate-join side —
     * and `<path>/docs` — (doc, shs, n), the exact-verification side. Both
-    * written sorted by their join key so the static scans cluster.
-    *
-    * `nBuckets > 0` additionally PARTITIONS the band table on disk by
-    * `bk = pmod(xxhash64(band, bandhash), nBuckets)` — the latency-mode
-    * layout: a probe whose band keys hit b buckets reads ~b/nBuckets of
-    * the index bytes. Size it to the probe batches: pruning is effective
-    * while (batch docs × bands) ≪ nBuckets, so dedupe-on-ingest with tens of
-    * docs per batch wants thousands of buckets; bulk probes saturate
-    * every bucket and should keep the unbucketed layout (one sequential
-    * fixed-width scan). The bucket count is recorded in
-    * `<path>/meta.json` so probes derive the same bk. */
+    * written sorted by their join key so the static scans cluster. */
   def buildMinhashIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      nBuckets: Int = 0): Unit = {
-    val spark = df.sparkSession
+      path: String, n: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit = {
     val prof = docProfiles(df, idCol, textCol, n, numHashes).cache()
     try {
-      val bnd = Dedup.minhashBands(prof.select(col("doc"), col("sig")),
-        bands, numHashes / bands)
-      if (nBuckets > 0) {
-        bnd.withColumn("bk", bucketOf(col("band"), col("bandhash"), nBuckets))
-          // cluster rows by bucket before the partitioned write so each
-          // bk directory gets one file per input partition, not a file
-          // per (task, bucket) pair
-          .repartition(col("bk"))
-          .sortWithinPartitions("band", "bandhash")
-          .write.mode("overwrite").partitionBy("bk").parquet(s"$path/bands")
-      } else {
-        bnd.sortWithinPartitions("band", "bandhash")
-          .write.mode("overwrite").parquet(s"$path/bands")
-      }
+      Dedup.minhashBands(prof.select(col("doc"), col("sig")),
+          bands, numHashes / bands)
+        .sortWithinPartitions("band", "bandhash")
+        .write.mode("overwrite").parquet(s"$path/bands")
       prof.select(col("doc"), col("shs"), col("n"))
         .sortWithinPartitions("doc")
         .write.mode("overwrite").parquet(s"$path/docs")
-      writeMetaFile(spark, s"$path/meta.json", nBuckets)
     } finally prof.unpersist()
-  }
-
-  /** Bucket id of one band key — shared by build and probes so both
-    * sides derive identical partition values. */
-  private def bucketOf(band: org.apache.spark.sql.Column,
-      bandhash: org.apache.spark.sql.Column, nBuckets: Int) =
-    pmod(xxhash64(band, bandhash), lit(nBuckets.toLong)).cast("int")
-
-  private def writeMetaFile(spark: SparkSession, metaPath: String,
-      nBuckets: Int, rows: Long = -1L): Unit = {
-    val p = new org.apache.hadoop.fs.Path(metaPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    val rowsField = if (rows >= 0) s""","rows":$rows""" else ""
-    out.write(s"""{"nBuckets":$nBuckets$rowsField}""".getBytes("UTF-8"))
-    out.close()
   }
 
   /** Probe a stream of new documents against a [[buildMinhashIndex]]
@@ -108,7 +69,7 @@ object StreamingDedup {
       idCol: String, textCol: String, indexPath: String, minJ: Double,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame = {
     val corpusBands = spark.read.parquet(s"$indexPath/bands")
-      .select(col("doc"), col("band"), col("bandhash")) // drop bk if bucketed
+      .select(col("doc"), col("band"), col("bandhash"))
     val corpusDocs = spark.read.parquet(s"$indexPath/docs")
     // band the new docs, carrying each one's shingle set on the row (a
     // later join back to the stream would be a stream-stream self join)
@@ -136,53 +97,26 @@ object StreamingDedup {
   /** Build the persisted SimHash index: the Manku combination-banding
     * table (doc, simhash, band, bandkey). The fingerprint rides on every
     * band row, so the probe verifies hamming distance row-locally — no
-    * second corpus table needed. `portable = true` fingerprints with
-    * [[Dedup.portableSimhash64]] (md5-derived, oracle-reproducible)
-    * instead of the faster engine-hash [[Dedup.simhash64]]; index and
-    * probe must agree on the flag. */
+    * second corpus table needed. The fingerprint is
+    * [[Dedup.portableSimhash64]] (md5-derived, oracle-reproducible), the
+    * one [[simhashDupStream]] probes with. */
   def buildSimhashIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, maxDist: Int = 3, nBlocks: Int = 6,
-      portable: Boolean = false, nBuckets: Int = 0): Unit = {
-    val sim = if (portable) Dedup.portableSimhash64(df, idCol, textCol)
-              else Dedup.simhash64(df, idCol, textCol)
-    val bnd = Dedup.simhashBands(sim, maxDist, nBlocks)
-    if (nBuckets > 0) {
-      // latency-mode layout, same shape as the bucketed MinHash index;
-      // the meta SIDECAR sits next to the parquet dir (a meta file
-      // inside it would be read as data)
-      bnd.withColumn("bk", bucketOf(col("band"), col("bandkey"), nBuckets))
-        .repartition(col("bk"))
-        .sortWithinPartitions("band", "bandkey")
-        .write.mode("overwrite").partitionBy("bk").parquet(path)
-    } else {
-      bnd.sortWithinPartitions("band", "bandkey")
-        .write.mode("overwrite").parquet(path)
-    }
-    writeMetaFile(df.sparkSession, s"$path.meta.json", nBuckets)
-  }
+      path: String, maxDist: Int = 3, nBlocks: Int = 6): Unit =
+    Dedup.simhashBands(Dedup.portableSimhash64(df, idCol, textCol),
+        maxDist, nBlocks)
+      .sortWithinPartitions("band", "bandkey")
+      .write.mode("overwrite").parquet(path)
 
   /** Build the persisted CHUNK index of a corpus — the distinct 64-bit
     * hashes of every [[graft.ext.Dedup.chunkRows]] chunk — for
     * boilerplate filtering ON INGEST: new documents probe it to find
     * which of their chunks the corpus already contains. One distinct
-    * aggregate over fixed-width longs (chunk text never persists);
-    * `nBuckets > 0` partitions on disk by `pmod(ck, nBuckets)` — the
-    * same latency-mode layout as the band indexes, so a small-batch
-    * probe reads only its chunks' buckets. */
+    * aggregate over fixed-width longs (chunk text never persists). */
   def buildChunkIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, chunkTokens: Int = 16, nBuckets: Int = 0): Unit = {
-    val cks = Dedup.chunkRows(df, idCol, textCol, chunkTokens)
+      path: String, chunkTokens: Int = 16): Unit =
+    Dedup.chunkRows(df, idCol, textCol, chunkTokens)
       .select(xxhash64(col("chunk_text")).as("ck")).distinct()
-    if (nBuckets > 0) {
-      cks.withColumn("bk", pmod(col("ck"), lit(nBuckets)).cast("int"))
-        .repartition(col("bk"))
-        .sortWithinPartitions("ck")
-        .write.mode("overwrite").partitionBy("bk").parquet(path)
-    } else {
-      cks.sortWithinPartitions("ck").write.mode("overwrite").parquet(path)
-    }
-    writeMetaFile(df.sparkSession, s"$path.meta.json", nBuckets)
-  }
+      .sortWithinPartitions("ck").write.mode("overwrite").parquet(path)
 
   /** Persist the DISTINCT k-token window-hash set of a corpus — the
     * substring-dedup twin of [[buildChunkIndex]] for ARBITRARY-OFFSET
@@ -197,7 +131,6 @@ object StreamingDedup {
       .select(col("whash")).distinct()
       .sortWithinPartitions("whash")
       .write.mode("overwrite").parquet(path)
-    writeMetaFile(df.sparkSession, s"$path.meta.json", 0)
   }
 
   /** Crash recovery for a rename-aside index swap: index missing +
@@ -215,16 +148,12 @@ object StreamingDedup {
     * smallest doc id ever seen for the canonical URL. Because min is
     * associative/commutative, the persisted layout may hold MANY rows
     * per canon: [[keeperOf]] folds them at probe time. */
-  def buildKeeperIndex(pairs: DataFrame, path: String): Unit = {
-    val spark = pairs.sparkSession
-    val g = graft.ext.Pin.pin(
-      pairs.select(col(pairs.columns.head).cast("long").as("_keeper"),
-          col(pairs.columns(1)).as("canon"))
-        .groupBy(col("canon")).agg(min(col("_keeper")).as("_keeper"))
-        .sortWithinPartitions("canon"))
-    g.write.mode("overwrite").parquet(path)
-    writeMetaFile(spark, s"$path.meta.json", 0, g.count())
-  }
+  def buildKeeperIndex(pairs: DataFrame, path: String): Unit =
+    pairs.select(col(pairs.columns.head).cast("long").as("_keeper"),
+        col(pairs.columns(1)).as("canon"))
+      .groupBy(col("canon")).agg(min(col("_keeper")).as("_keeper"))
+      .sortWithinPartitions("canon")
+      .write.mode("overwrite").parquet(path)
 
   /** The probe view: one (canon, _keeper) row per canon, the min fold
     * over however many appended rows the layout holds. */
@@ -240,12 +169,9 @@ object StreamingDedup {
     * layout; a stream that evolves its index starts from an empty root
     * and grows it with [[appendShingleIndexBatch]]. */
   def buildShingleIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, n: Int = 3): Unit = {
-    val rows = graft.ext.Pin.pin(
-      shingleRows(df, idCol, textCol, n).sortWithinPartitions("sh"))
-    rows.write.mode("overwrite").parquet(path)
-    writeMetaFile(df.sparkSession, s"$path.meta.json", 0, rows.count())
-  }
+      path: String, n: Int = 3): Unit =
+    shingleRows(df, idCol, textCol, n).sortWithinPartitions("sh")
+      .write.mode("overwrite").parquet(path)
 
   /** Exactly-once per-micro-batch shingle-index append: batch
     * `batchId`'s rows land in their OWN `batch=<id>` subdir with
@@ -266,9 +192,7 @@ object StreamingDedup {
     * first batch append REQUIRES an empty/absent root or an
     * already-batch-partitioned one (guarded here, not at read time —
     * the failure would otherwise surface as an opaque discovery error
-    * on some later probe). Batch appends deliberately do NOT maintain
-    * `meta.json` row accounting: per-row counts would cost an extra
-    * action per micro-batch. */
+    * on some later probe). */
   def appendShingleIndexBatch(df: DataFrame, idCol: String,
       textCol: String, path: String, batchId: Long, n: Int = 3): Unit = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
@@ -360,7 +284,6 @@ object StreamingDedup {
     Dedup.bloomBuild(df, textCol, m, k)
       .coalesce(1).sortWithinPartitions("bit")
       .write.mode("overwrite").parquet(path)
-    writeMetaFile(df.sparkSession, s"$path.meta.json", m)
   }
 
   /** STATELESS streaming Bloom probe: the persisted filter loads and
@@ -404,13 +327,11 @@ object StreamingDedup {
     * the MinHash probe there is no banding-recall margin to mind). */
   def simhashDupStream(spark: SparkSession, stream: DataFrame,
       idCol: String, textCol: String, indexPath: String,
-      maxDist: Int = 3, nBlocks: Int = 6,
-      portable: Boolean = false): DataFrame = {
+      maxDist: Int = 3, nBlocks: Int = 6): DataFrame = {
     val index = spark.read.parquet(indexPath)
       .select(col("doc"), col("simhash"), col("band"), col("bandkey"))
-    val sim = if (portable) Dedup.portableSimhash64(stream, idCol, textCol)
-              else Dedup.simhash64(stream, idCol, textCol)
-    val q = Dedup.simhashBands(sim, maxDist, nBlocks)
+    val q = Dedup.simhashBands(Dedup.portableSimhash64(stream, idCol, textCol),
+      maxDist, nBlocks)
     q.as("q").join(index.as("c"),
         col("q.band") === col("c.band") && col("q.bandkey") === col("c.bandkey"))
       .where(col("q.doc") =!= col("c.doc"))
@@ -422,10 +343,6 @@ object StreamingDedup {
       .select(col("doc_new"), col("doc_corpus"), col("hamming"))
   }
 
-  /** Replay a bounded parquet table of documents through a streaming
-    * probe and return the materialized result (memory sink, available-now
-    * trigger) — how the oracle checks the streaming dedup path, mirroring
-    * [[StreamingOps.replayResample]]. */
   /** Schema of a replay source, cached per (path, mtime, length): a
     * bounded replay is re-run per bench rep, and the footer-read batch
     * job it starts is pure fixed overhead after the first call. Keying on
@@ -468,39 +385,46 @@ object StreamingDedup {
     }
   }
 
+  /** Run one bounded replay to completion inside a session-conf scope:
+    * set the replay keys (plus the caller's `extraConf`), start the
+    * stream `writer` builds with an available-now trigger, wait for it,
+    * and put every key back as the session had it — a key it had not set
+    * is unset again — also when building the probe or running the stream
+    * throws. `writer` is by-name, so the probe is built inside the scope.
+    *
+    * A bounded replay's stateful ops commit one state-store partition per
+    * shuffle partition per micro-batch; at the session default (32) that
+    * fixed commit overhead dominates the tiny replay, so the stream runs
+    * at 8. No replayed probe has event-time timeouts to fire, so the
+    * trailing no-data micro-batch is skipped as well — halving commit
+    * rounds. */
+  private[streaming] def runBounded(spark: SparkSession,
+      extraConf: (String, String)*)(writer: => DataStreamWriter[Row]): Unit = {
+    val conf = Seq("spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ extraConf
+    val set = spark.conf.getAll
+    val prev = conf.map { case (k, _) => k -> set.get(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Replay a bounded parquet table of documents through a streaming
+    * probe and return the materialized result (memory sink, available-now
+    * trigger) — how the oracle checks the streaming dedup path, mirroring
+    * [[StreamingOps.replayResample]]. */
   def replayDocs(spark: SparkSession, parquetPath: String, queryName: String,
       outputMode: OutputMode = OutputMode.Append)
       (probe: DataFrame => DataFrame): DataFrame = {
     val stream = streamSource(spark, parquetPath)
     spark.catalog.dropTempView(queryName)
-    // a bounded replay's stateful ops (candidate-pair dedup) commit one
-    // state-store partition per shuffle partition per micro-batch; at the
-    // session default (32) that fixed commit overhead dominates the tiny
-    // replay, so the stream runs at 8 and the session value is restored.
-    // The probe has no event-time timeouts to fire, so the trailing
-    // no-data micro-batch is skipped as well — halving commit rounds.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf
-      .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val qr = probe(stream).writeStream
-        .outputMode(outputMode)
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      qr.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevNoData match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-    }
+    runBounded(spark)(probe(stream).writeStream
+      .outputMode(outputMode)
+      .format("memory")
+      .queryName(queryName))
     spark.table(queryName)
   }
 
@@ -516,38 +440,12 @@ object StreamingDedup {
       (probe: DataFrame => DataFrame)
       (write: (DataFrame, Long) => Unit): Unit = {
     val stream = streamSource(spark, parquetPath)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf
-      .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val qr = probe(stream).writeStream
-        .outputMode(outputMode)
-        .foreachBatch(write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      qr.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevNoData match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-    }
+    runBounded(spark)(probe(stream).writeStream
+      .outputMode(outputMode)
+      .foreachBatch(write)
+      .option("checkpointLocation", checkpoint))
   }
-  /** [[replayForeachBatch]] over a MULTI-BATCH bounded replay: the batch
-    * parquet is split into `splitN` files in `scratchDir` and streamed
-    * one file per micro-batch (`maxFilesPerTrigger=1`), so cross-batch
-    * state logic actually executes `splitN` times — a single-file source
-    * collapses AvailableNow to ONE micro-batch, which can't exercise a
-    * running-state merge at all. Batch arrival order is file-listing
-    * order; callers' merge logic must be order-insensitive (top-k/set
-    * merges are), which is also the production truth: replayed streams
-    * reorder. */
+
   /** Replay a parquet table as `nRes` micro-batches, each containing
     * exactly one RESIDUE CLASS (`idCol % nRes`) — the deterministic
     * batch partition hash-sharded quota twins need: batch MEMBERSHIP is
@@ -620,30 +518,21 @@ object StreamingDedup {
     val schema = cachedSchema(spark, parquetPath)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(scratchDir)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf
-      .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val qr = probe(stream).writeStream
-        .outputMode(outputMode)
-        .foreachBatch(write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      qr.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevNoData match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-    }
+    runBounded(spark)(probe(stream).writeStream
+      .outputMode(outputMode)
+      .foreachBatch(write)
+      .option("checkpointLocation", checkpoint))
   }
 
+  /** [[replayForeachBatch]] over a MULTI-BATCH bounded replay: the batch
+    * parquet is split into `splitN` files in `scratchDir` and streamed
+    * one file per micro-batch (`maxFilesPerTrigger=1`), so cross-batch
+    * state logic actually executes `splitN` times — a single-file source
+    * collapses AvailableNow to ONE micro-batch, which can't exercise a
+    * running-state merge at all. Batch arrival order is file-listing
+    * order; callers' merge logic must be order-insensitive (top-k/set
+    * merges are), which is also the production truth: replayed streams
+    * reorder. */
   def replayForeachBatchSplit(spark: SparkSession, parquetPath: String,
       scratchDir: String, checkpoint: String, splitN: Int,
       outputMode: OutputMode)
@@ -655,28 +544,10 @@ object StreamingDedup {
     val schema = cachedSchema(spark, parquetPath)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(scratchDir)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf
-      .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val qr = probe(stream).writeStream
-        .outputMode(outputMode)
-        .foreachBatch(write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      qr.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevNoData match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-    }
+    runBounded(spark)(probe(stream).writeStream
+      .outputMode(outputMode)
+      .foreachBatch(write)
+      .option("checkpointLocation", checkpoint))
   }
 
 }

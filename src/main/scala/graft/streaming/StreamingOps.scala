@@ -4,7 +4,7 @@ import graft.core.Observations._
 import graft.ops.Resample
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming variants of the engine operators over the same
   * tall observations schema (SURVEY.md §2.3 "Streaming"). The reference is
@@ -43,14 +43,11 @@ object StreamingOps {
     // reuse the sink name across invocations: drop the previous run's
     // memory table so repeated replays don't accumulate result copies
     spark.catalog.dropTempView(queryName)
-    // a bounded replay commits one state-store partition per shuffle
-    // partition per micro-batch; at the session default (32) that fixed
-    // commit cost dominates the replay, so the stream runs at 8 (same
-    // narrowing as StreamingDedup.replayDocs). The Complete-mode agg
-    // needs no watermark-advancing empty batch, so the no-data
-    // micro-batch is skipped too — one data batch, one commit round.
-    // Both settings restored; results are partitioning-independent
-    // (detMean's exact decimal partials).
+    // StreamingDedup.runBounded narrows the replay to 8 shuffle
+    // partitions and skips the no-data micro-batch (the Complete-mode agg
+    // needs no watermark-advancing empty batch) — one data batch, one
+    // commit round; results are partitioning-independent (detMean's
+    // exact decimal partials).
     //
     // Measured floor (sf0.1, 100 k rows, r6): total ≈ 1.6 s, of which
     // addBatch ≈ 1.1 s — the streaming stateful-agg execution itself, not
@@ -62,44 +59,20 @@ object StreamingOps {
     // StateStoreRestore/Save path around the aggregate — per-batch cost
     // that amortizes with batch size on a live stream, which is what the
     // operator is for; the bounded replay pays it once per run.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf
-      .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    val prevProvider = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    //
     // RocksDB state store: the r8 streamfloor tier measured min-of-3
     // replay times batch=0.49 s / hdfs=1.23 s / rocksdb=1.14 s at sf0.1,
     // so RocksDB shaves ~8% off the state-store commit floor and is the
     // provider a long-running production stream wants anyway (state
     // spills off-heap instead of living in executor memory). Recorded in
     // BASELINE.md §streaming-floor.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = agg.writeStream
+    StreamingDedup.runBounded(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(
+      agg.writeStream
         .outputMode(OutputMode.Complete)
         .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevNoData match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-      prevProvider match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+        .queryName(queryName))
     spark.table(queryName)
   }
 
@@ -165,6 +138,30 @@ object StreamingOps {
       .toDF()
   }
 
+  /** Replay one bounded parquet table as TWO independent streams and run
+    * a stream-stream probe over them (the two-sided twin of
+    * [[StreamingDedup.replayDocs]]). This is the harness for
+    * stream-stream JOINS: each side gets its own file-source lineage, so
+    * the join really executes through the streaming symmetric-hash-join
+    * operator with per-side watermark state — not a self-join collapse.
+    * Same narrowed session conf as the one-stream replay
+    * ([[StreamingDedup.runBounded]]); results land in a memory sink. */
+  def replayTwoStreams(spark: SparkSession, parquetPath: String,
+      queryName: String)
+      (probe: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    def mkStream() = StreamingDedup.streamSource(spark, parquetPath)
+    spark.catalog.dropTempView(queryName)
+    StreamingDedup.runBounded(spark)(probe(mkStream(), mkStream()).writeStream
+      .outputMode(OutputMode.Append)
+      .format("memory")
+      .queryName(queryName))
+    spark.table(queryName)
+  }
+
+  case class ObsEvent(series_key: String, ts: java.sql.Timestamp, value: Double)
+  case class SeriesState(n: Long, sumE8: Long)
+  case class SeriesStat(series_key: String, n: Long, mean: Double)
+
   /** Per-key running statistics via explicit state — the
     * mapGroupsWithState extension point for custom streaming state
     * (count + running mean per series). The sum accumulates as a SCALED
@@ -176,48 +173,6 @@ object StreamingOps {
     * oracle (`stream_running_stats`) hash-pin this path. The final mean
     * reproduces the decimal→double→÷count op sequence of the batch
     * detMean exactly. */
-  /** Replay one bounded parquet table as TWO independent streams and run
-    * a stream-stream probe over them (the two-sided twin of
-    * [[StreamingDedup.replayDocs]]). This is the harness for
-    * stream-stream JOINS: each side gets its own file-source lineage, so
-    * the join really executes through the streaming symmetric-hash-join
-    * operator with per-side watermark state — not a self-join collapse.
-    * Same narrowed shuffle-partition + no-data-micro-batch handling as
-    * the one-stream replay; results land in a memory sink. */
-  def replayTwoStreams(spark: SparkSession, parquetPath: String,
-      queryName: String)
-      (probe: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    def mkStream() = StreamingDedup.streamSource(spark, parquetPath)
-    spark.catalog.dropTempView(queryName)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf
-      .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val qr = probe(mkStream(), mkStream()).writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      qr.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevNoData match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-    }
-    spark.table(queryName)
-  }
-
-  case class ObsEvent(series_key: String, ts: java.sql.Timestamp, value: Double)
-  case class SeriesState(n: Long, sumE8: Long)
-  case class SeriesStat(series_key: String, n: Long, mean: Double)
-
   def runningStats(stream: DataFrame)(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     stream.as[ObsEvent]

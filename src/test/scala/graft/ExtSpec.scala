@@ -23,21 +23,6 @@ class ExtSpec extends SparkSpec {
     assert(lsh == exact)
   }
 
-  test("simhash flags the planted near-dups with small hamming distance") {
-    val sh = Dedup.hashedShingles(docs, "doc_id", "text", 3)
-    val planted = Dedup.jaccardPairs(sh, 0.9)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    // every planted textual near-dup is a near-dup of the engine
-    // fingerprint (planted pairs measure <= 7 on this fixture)
-    val sim = Dedup.simhash64(docs, "doc_id", "text")
-      .as[(Long, Long)].collect()
-    val near = (for {
-      (da, sa) <- sim; (db, sb) <- sim
-      if da < db && java.lang.Long.bitCount(sa ^ sb) <= 7
-    } yield (da, db)).toSet
-    assert(planted.nonEmpty && planted.subsetOf(near))
-  }
-
   test("portable-fingerprint banding equals brute-force all-pairs hamming") {
     // the oracle-pinned doc_simhash_pairs path: combination banding over
     // portableSimhash64 must be EXACTLY the <=3 pair set a brute-force
@@ -1051,22 +1036,6 @@ class ExtSpec extends SparkSpec {
     assert(cents.map(_.length).toSet == Set(64))
   }
 
-  test("native simhash64 is bit-identical to the per-bit HOF fold") {
-    val sample = docs.limit(40).select(col("doc_id"),
-      transform(split(col("text"), " "), t => xxhash64(t)).as("_h"))
-    val bits: Seq[org.apache.spark.sql.Column] = (0 until 64).map { i =>
-      val s = aggregate(col("_h"), lit(0L),
-        (acc, h) => acc +
-          when(shiftright(h, i).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(s > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    val mismatches = sample.select(
-        VectorFunctions.simhash64(col("_h")).as("nat"),
-        bits.reduce((a, b) => a.bitwiseOR(b)).as("hof"))
-      .where(col("nat") =!= col("hof")).count()
-    assert(mismatches == 0)
-  }
-
   test("hyperplane signature is deterministic and seed-sensitive") {
     val v = emb.select(col("embedding").cast("array<double>").as("v"))
     val twice = v.select(
@@ -1109,9 +1078,7 @@ class ExtSpec extends SparkSpec {
       "SELECT graft_sorted_intersect_count(array(1L, 3L, 5L), array(3L, 5L, 7L))")
       .head().getLong(0)
     assert(n == 2L)
-    // all-ones token hashes set every bit; signature arity checks
-    val sh = spark.sql("SELECT graft_simhash64(array(-1L, -1L))").head().getLong(0)
-    assert(sh == -1L)
+    // signature arity checks
     val hp = spark.sql(
       "SELECT graft_hyperplane_sig(array(1.0d, -2.0d, 0.5d), 12, 7L)").head().getLong(0)
     assert(hp >= 0 && hp < (1L << 12))

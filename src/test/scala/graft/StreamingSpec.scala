@@ -173,38 +173,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.map(_._1).toSet == Set(101L, 102L))
   }
 
-  test("streaming simhash probe equals batch pairs, hamming verified row-locally") {
-    import graft.ext.Dedup
-    import graft.streaming.StreamingDedup
-    def text(i: Int) = (1 to 20).map(w => s"w${i}_$w").mkString(" ")
-    val corpus = (1 to 20).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
-    val newDocs = Seq((201L, text(5)), (202L, text(202)))
-    val idx = "/tmp/graft_test_simhash_idx"
-    StreamingDedup.buildSimhashIndex(corpus, "doc_id", "text", idx)
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, String)](spark, 1)
-    val df = input.toDF().toDF("doc_id", "text")
-    val q = StreamingDedup.simhashDupStream(spark, df, "doc_id", "text", idx)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("simhash_stream_tbl").start()
-    input.addData(newDocs: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("simhash_stream_tbl")
-      .select("doc_new", "doc_corpus", "hamming")
-      .as[(Long, Long, Int)].collect().toSet
-    // brute-force reference: every new-vs-corpus fingerprint pair within
-    // hamming 3 (the probe's banding is exact for hamming <= maxDist)
-    val sim = Dedup.simhash64(corpus.union(newDocs.toDF("doc_id", "text")),
-      "doc_id", "text").as[(Long, Long)].collect()
-    val batch = (for {
-      (dn, sn) <- sim if dn >= 200; (dc, sc) <- sim if dc <= 20
-      h = java.lang.Long.bitCount(sn ^ sc) if h <= 3
-    } yield (dn, dc, h)).toSet
-    assert(streamed == batch, s"streamed=$streamed batch=$batch")
-    assert(streamed.contains((201L, 5L, 0))) // exact dup: hamming 0
-  }
-
   test("portable simhash: pinned cross-engine values, streaming probe exact") {
     import graft.ext.Dedup
     import graft.streaming.StreamingDedup
@@ -223,13 +191,11 @@ class StreamingSpec extends SparkSpec {
     val corpus = (1 to 20).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
     val newDocs = Seq((201L, text(5)), (202L, text(202)))
     val idx = "/tmp/graft_test_simhash_portable_idx"
-    StreamingDedup.buildSimhashIndex(corpus, "doc_id", "text", idx,
-      portable = true)
+    StreamingDedup.buildSimhashIndex(corpus, "doc_id", "text", idx)
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
       (Long, String)](spark, 1)
     val df = input.toDF().toDF("doc_id", "text")
-    val q = StreamingDedup.simhashDupStream(spark, df, "doc_id", "text", idx,
-        portable = true)
+    val q = StreamingDedup.simhashDupStream(spark, df, "doc_id", "text", idx)
       .writeStream.outputMode("append")
       .format("memory").queryName("simhash_portable_stream_tbl").start()
     input.addData(newDocs: _*)
@@ -421,6 +387,46 @@ class StreamingSpec extends SparkSpec {
       .as[(String, Long)].collect().toSet
     assert(batch.nonEmpty)
     assert(streamed.as[(String, Long)].collect().toSet == batch)
+  }
+
+  // the replay keys the test session does not set itself; a failed replay
+  // must leave them unset and put the shuffle width back
+  private val replayOnlyKeys = Seq(
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.streaming.stateStore.providerClass")
+
+  private def assertConfRestoredAfterFailure(replay: => Unit): Unit = {
+    replayOnlyKeys.foreach(k => spark.conf.unset(k))
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    intercept[Exception](replay)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)
+    replayOnlyKeys.foreach { k =>
+      val left = spark.conf.getAll.get(k)
+      assert(left.isEmpty, s"$k left set after the replay: $left")
+    }
+  }
+
+  test("replayDocs restores the session conf when its probe throws") {
+    import graft.streaming.StreamingDedup
+    var inScope = ""
+    assertConfRestoredAfterFailure {
+      StreamingDedup.replayDocs(spark, sf("documents"), "replay_fail_tbl") { _ =>
+        inScope = spark.conf.get("spark.sql.shuffle.partitions")
+        throw new IllegalStateException("probe failed")
+      }
+    }
+    assert(inScope == "8", "the probe is built inside the replay scope")
+  }
+
+  test("replayResample restores the session conf when its stream fails") {
+    val failing = (df: org.apache.spark.sql.DataFrame) =>
+      Observations.from(
+          Observations.normalizeEventTs(df), "user_id", "ts", "value")
+        .withColumn("value", raise_error(lit("replay failed")).cast("double"))
+    assertConfRestoredAfterFailure {
+      StreamingOps.replayResample(spark, sf("events"), failing, 900,
+        "replay_resample_fail_tbl")
+    }
   }
 
   test("appendShingleIndexBatch refuses a FLAT buildShingleIndex root") {
