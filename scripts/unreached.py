@@ -8,7 +8,9 @@ target/scala-2.13/classes) with the JDK's `javap -c -p`, builds a call graph
 from the invoke instructions, and walks it from the production roots:
 
   * every method of SparkEntry, Bench, Verify, QueryProbe, PlanAudit,
-    GraftExtensions and SmokeMain (and their nested classes);
+    GraftExtensions and SmokeMain (and their nested classes); the six
+    query-family objects (TsQueries ... RelQueries) are reached through
+    SparkEntry's registry, which calls each family's `queries`;
   * every graft method the benchmark sources under perfbench/scala name:
     `Object.method` on an imported graft object, `new Class(...)`, and any
     method of an imported graft class called as `.method`.

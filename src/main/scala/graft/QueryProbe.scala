@@ -207,7 +207,7 @@ object QueryProbe {
     // first rep beat the bench record >5x either stopped doing the work
     // or is legitimately amortizing a per-JVM index/cache another query
     // (or Bench's own in-query build) already paid for — the streaming
-    // band/window indexes and the IVF family are SparkEntry artifacts,
+    // band/window indexes and the IVF family are `Artifact` fixtures,
     // cached per (session, sf dir), so guard reps after the first are
     // warm by DESIGN.
     // Distinguish the two directly: probe whether the query still

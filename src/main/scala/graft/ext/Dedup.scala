@@ -712,7 +712,7 @@ object Dedup {
     *
     * Consumers are the global pair graphs, where no key bounds a
     * component: the exact-Jaccard PPJoin pairs through
-    * [[dedupClustersDistinctWith]] (SparkEntry's `clusters` fixture and
+    * [[dedupClustersDistinctWith]] (DocQueries' `clusters` fixture and
     * [[CurationPipeline.run]]), the banded hyperplane-LSH cosine pairs
     * of `emb_dedup_clusters`, and ScaleSmoke's MinHash and chain tiers.
     * SemDeDup does not call it: its pairs never cross a k-means cluster,

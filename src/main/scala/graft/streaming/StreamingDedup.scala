@@ -26,31 +26,44 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   */
 object StreamingDedup {
 
+  /** The MinHash index shape: shingle width in words, signature length
+    * and band count. [[buildMinhashIndex]] writes its band table in this
+    * shape and [[minhashDupStream]] bands its probes the same way, so a
+    * probe always joins on band keys its index holds. */
+  private val MinhashShingle = 3
+  private val MinhashHashes = 64
+  private val MinhashBands = 16
+
+  /** The SimHash index shape: the Hamming radius and the Manku block
+    * count, shared by [[buildSimhashIndex]] and [[simhashDupStream]]. */
+  private val SimhashMaxDist = 3
+  private val SimhashBlocks = 6
+
   /** Row-local per-document profile: sorted distinct shingle hashes, set
     * size, and MinHash signature — everything the probe needs, computed
     * without explode/groupBy so it runs as a stateless streaming stage.
     * Hash-identical to the batch path (shared column builders in
-    * [[graft.ext.Dedup]]). Documents with fewer than `n` words have no
-    * shingles and are dropped, matching the batch operators. */
-  def docProfiles(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, numHashes: Int = 64): DataFrame =
+    * [[graft.ext.Dedup]]). Documents with fewer than [[MinhashShingle]]
+    * words have no shingles and are dropped, matching the batch
+    * operators. */
+  def docProfiles(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("doc"), split(col(textCol), " ").as("_w"))
-      .select(col("doc"), Dedup.shingleArray(col("_w"), n).as("shs"))
+      .select(col("doc"), Dedup.shingleArray(col("_w"), MinhashShingle).as("shs"))
       .where(size(col("shs")) > 0)
       .select(col("doc"), sort_array(col("shs")).as("shs"),
         size(col("shs")).as("n"),
-        Dedup.minhashSignature(col("shs"), numHashes).as("sig"))
+        Dedup.minhashSignature(col("shs"), MinhashHashes).as("sig"))
 
   /** Build the persisted MinHash index of a corpus: `<path>/bands` — one
     * (doc, band, bandhash) row per document band, the candidate-join side —
     * and `<path>/docs` — (doc, shs, n), the exact-verification side. Both
     * written sorted by their join key so the static scans cluster. */
   def buildMinhashIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, n: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit = {
-    val prof = docProfiles(df, idCol, textCol, n, numHashes).cache()
+      path: String): Unit = {
+    val prof = docProfiles(df, idCol, textCol).cache()
     try {
       Dedup.minhashBands(prof.select(col("doc"), col("sig")),
-          bands, numHashes / bands)
+          MinhashBands, MinhashHashes / MinhashBands)
         .sortWithinPartitions("band", "bandhash")
         .write.mode("overwrite").parquet(s"$path/bands")
       prof.select(col("doc"), col("shs"), col("n"))
@@ -66,16 +79,17 @@ object StreamingDedup {
     * otherwise re-verify the same pair), which also makes emission
     * exactly-once across micro-batches. */
   def minhashDupStream(spark: SparkSession, stream: DataFrame,
-      idCol: String, textCol: String, indexPath: String, minJ: Double,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame = {
+      idCol: String, textCol: String, indexPath: String,
+      minJ: Double): DataFrame = {
     val corpusBands = spark.read.parquet(s"$indexPath/bands")
       .select(col("doc"), col("band"), col("bandhash"))
     val corpusDocs = spark.read.parquet(s"$indexPath/docs")
     // band the new docs, carrying each one's shingle set on the row (a
     // later join back to the stream would be a stream-stream self join)
-    val q = docProfiles(stream, idCol, textCol, n, numHashes)
+    val q = docProfiles(stream, idCol, textCol)
       .select(col("doc"), col("shs"), col("n"),
-        posexplode(Dedup.minhashBandKeys(col("sig"), bands, numHashes / bands)))
+        posexplode(Dedup.minhashBandKeys(col("sig"), MinhashBands,
+          MinhashHashes / MinhashBands)))
       .toDF("doc", "shs", "n", "band", "bandhash")
     val cand = q.as("q").join(corpusBands.as("c"),
         col("q.band") === col("c.band") && col("q.bandhash") === col("c.bandhash"))
@@ -101,9 +115,9 @@ object StreamingDedup {
     * [[Dedup.portableSimhash64]] (md5-derived, oracle-reproducible), the
     * one [[simhashDupStream]] probes with. */
   def buildSimhashIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, maxDist: Int = 3, nBlocks: Int = 6): Unit =
+      path: String): Unit =
     Dedup.simhashBands(Dedup.portableSimhash64(df, idCol, textCol),
-        maxDist, nBlocks)
+        SimhashMaxDist, SimhashBlocks)
       .sortWithinPartitions("band", "bandkey")
       .write.mode("overwrite").parquet(path)
 
@@ -321,17 +335,16 @@ object StreamingDedup {
   }
 
   /** Probe a stream of new documents against a [[buildSimhashIndex]]
-    * index: emits (doc_new, doc_corpus, hamming <= maxDist) pairs, each
-    * once. Same recall guarantee as the batch operator (the pigeonhole
-    * over combination bands — EXACT for hamming <= maxDist, so unlike
+    * index: emits (doc_new, doc_corpus, hamming <= [[SimhashMaxDist]])
+    * pairs, each once. Same recall guarantee as the batch operator (the
+    * pigeonhole over combination bands — EXACT within that radius, so unlike
     * the MinHash probe there is no banding-recall margin to mind). */
   def simhashDupStream(spark: SparkSession, stream: DataFrame,
-      idCol: String, textCol: String, indexPath: String,
-      maxDist: Int = 3, nBlocks: Int = 6): DataFrame = {
+      idCol: String, textCol: String, indexPath: String): DataFrame = {
     val index = spark.read.parquet(indexPath)
       .select(col("doc"), col("simhash"), col("band"), col("bandkey"))
     val q = Dedup.simhashBands(Dedup.portableSimhash64(stream, idCol, textCol),
-      maxDist, nBlocks)
+      SimhashMaxDist, SimhashBlocks)
     q.as("q").join(index.as("c"),
         col("q.band") === col("c.band") && col("q.bandkey") === col("c.bandkey"))
       .where(col("q.doc") =!= col("c.doc"))
@@ -339,7 +352,7 @@ object StreamingDedup {
         col("q.simhash").as("sim_q"), col("c.simhash").as("sim_c"))
       .dropDuplicates("doc_new", "doc_corpus")
       .withColumn("hamming", bit_count(col("sim_q").bitwiseXOR(col("sim_c"))))
-      .where(col("hamming") <= maxDist)
+      .where(col("hamming") <= SimhashMaxDist)
       .select(col("doc_new"), col("doc_corpus"), col("hamming"))
   }
 
