@@ -31,6 +31,13 @@ method that no reached call site sets (`Owner.method(param)`): a call that
 omits argument N also invokes the getter `method$default$N`, so N is unset
 when every reached call of the method comes with a call of that getter. A
 method the benchmark sources call counts as setting every parameter.
+
+Either mode then checks its lines against scripts/unreached_allow.txt, which
+holds one `entry  # reason` line for each printed line that stays on purpose
+(entries with a parameter in parentheses belong to --defaults). The script
+exits 1, naming the difference on stderr, when it prints a line the
+allowlist lacks or the allowlist holds a line of this mode it no longer
+prints; otherwise it exits 0.
 """
 import collections
 import os
@@ -259,6 +266,43 @@ def unset_defaults(classes, reached, perf_roots):
     return lines
 
 
+def unreached_methods(classes, reached, instantiated):
+    """`Owner.method` for each listed public method nothing reaches."""
+    lines = []  # a class and its companion object print under one name
+    for c in sorted(classes):
+        if "$$" in c or "$anon" in c or re.search(r"\$\d", c):
+            continue
+        cls = classes[c]
+        todo = [m for m, info in cls["methods"].items()
+                if listed(classes, c, m, info) and (c, m) not in reached]
+        if not todo:
+            continue
+        shown = display(c)
+        if c not in instantiated and not any(k[0] == c for k in reached):
+            lines.append(shown + ".*")
+        else:
+            lines += [shown + "." + m for m in sorted(todo)]
+    return list(dict.fromkeys(lines))
+
+
+def check_allowlist(lines, defaults, path):
+    """Exit status of `lines` against the allowlist at `path`."""
+    allowed = set()
+    with open(path) as fh:
+        for raw in fh:
+            entry = raw.split("#", 1)[0].strip()
+            if entry and ("(" in entry) == defaults:
+                allowed.add(entry)
+    new = [l for l in lines if l not in allowed]
+    gone = sorted(allowed - set(lines))
+    for l in new:
+        print("not in %s: %s" % (os.path.basename(path), l), file=sys.stderr)
+    for l in gone:
+        print("in %s but no longer printed: %s" % (os.path.basename(path), l),
+              file=sys.stderr)
+    return 1 if new or gone else 0
+
+
 def main():
     args = sys.argv[1:]
     defaults = "--defaults" in args
@@ -275,24 +319,12 @@ def main():
     perf_roots = perfbench_roots(classes, os.path.join(repo, "perfbench", "scala"))
     reached, instantiated = walk(classes, roots | perf_roots)
     if defaults:
-        print("\n".join(unset_defaults(classes, reached, perf_roots)))
-        return
-
-    lines = []  # a class and its companion object print under one name
-    for c in sorted(classes):
-        if "$$" in c or "$anon" in c or re.search(r"\$\d", c):
-            continue
-        cls = classes[c]
-        todo = [m for m, info in cls["methods"].items()
-                if listed(classes, c, m, info) and (c, m) not in reached]
-        if not todo:
-            continue
-        shown = display(c)
-        if c not in instantiated and not any(k[0] == c for k in reached):
-            lines.append(shown + ".*")
-        else:
-            lines += [shown + "." + m for m in sorted(todo)]
-    print("\n".join(dict.fromkeys(lines)))
+        lines = unset_defaults(classes, reached, perf_roots)
+    else:
+        lines = unreached_methods(classes, reached, instantiated)
+    print("\n".join(lines))
+    allow = os.path.join(repo, "scripts", "unreached_allow.txt")
+    sys.exit(check_allowlist(lines, defaults, allow))
 
 
 if __name__ == "__main__":

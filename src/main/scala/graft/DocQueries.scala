@@ -1,6 +1,7 @@
 package graft
 
-import graft.ext.{Corpus, Dedup, Graph, Kmeans, Pin, QualityModel, Ranks, TextAnalysis, UrlOps}
+import graft.ext.{Corpus, Dedup, Graph, Kmeans, Pin, QualityModel, Ranks,
+  TextAnalysis, UrlOps, ZTable}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,9 +14,9 @@ import org.apache.spark.sql.types.DecimalType
 object DocQueries {
   import SparkEntry.{t, sortSmall, sortBig, scratch, Artifact, unigramDictFor,
     bpeMergesFor, syntheticUrls, UrlCanonCtes, e2eOracleSql, SyntheticEdgeSql,
-    syntheticEdges, lrModelFor, rankFor, concurrently, e2eStagesFor, r6,
-    ShingleCtes, BudgetCapCtes, BudgetAllocCtes, HostBlocklistOracle,
-    SimhashCtes, BloomProbeCtes, Query}
+    syntheticEdges, lrModelFor, lrFeatures, LrLabelSql, rankFor,
+    concurrently, e2eStagesFor, r6, ShingleCtes, BudgetCapCtes,
+    BudgetAllocCtes, HostBlocklistOracle, SimhashCtes, BloomProbeCtes, Query}
 
   /** Approximate-percentile SERVING-TWIN audit frame (r12 verdict task
     * 7): one row with the exact (t/q)-quantile order statistics
@@ -110,10 +111,6 @@ object DocQueries {
     p
   }
 
-  /** Bit-interleaved 16-bit Morton key over the b1/b2 bucket columns —
-    * [[graft.ext.ZTable.zkeyExpr]]. */
-  private def zkeyExpr: Column = graft.ext.ZTable.zkeyExpr
-
   /** Shared frame of the z-order layout experiment (doc_zorder_skipping
     * and its materialized twin): two equi-depth 8-bit dimension ranks
     * (b1 over n_chars, b2 over an md5-derived second dimension), the
@@ -133,7 +130,7 @@ object DocQueries {
         .withColumn(out, expr("((_r - 1) * 256) div _n"))
         .drop("_r", "_n")
     val z = toBits(toBits(docs, "n_chars", "b1"), "d2", "b2")
-      .withColumn("zkey", zkeyExpr)
+      .withColumn("zkey", ZTable.zkeyExpr)
       .withColumn("hkey",
         md5(concat(lit("h:"), col("doc_id").cast("string"))))
     Ranks.globalRowNumber(
@@ -176,9 +173,9 @@ object DocQueries {
     // sequentially); wall ≈ the slowest write instead of the sum
     concurrently(Seq(("zorder", "zrank"), ("linear", "lrank"),
         ("hash", "hrank"))) { case (tag, rank) =>
-      val st = zorderWriteFiles(ranked, rank, nFiles = 64, offset = 0,
+      val st = ZTable.writeFiles(ranked, rank, nFiles = 64, offset = 0,
         out = s"$p/$tag")
-      writeStatsManifest(st, s"$p/$tag/_stats")
+      ZTable.writeManifest(st, s"$p/$tag/_stats")
     }
     p
   }
@@ -203,11 +200,8 @@ object DocQueries {
       (appRows, col("hkey"), 12, 52, "append"),
       (z, col("zkey"), 64, 0, "optimized"))) {
       case (rows, key, nFiles, offset, tag) =>
-        writeStatsManifest(zorderWriteFiles(
-          Ranks.globalRowNumber(rows, Seq(key, col("doc_id")),
-            out = "_rk"),
-          "_rk", nFiles = nFiles, offset = offset, out = s"$p/$tag"),
-          s"$p/$tag/_stats")
+        ZTable.writeManifest(writeRanked(rows, key, nFiles, offset,
+          s"$p/$tag"), s"$p/$tag/_stats")
     }
     p
   }
@@ -246,30 +240,37 @@ object DocQueries {
     * a table). */
   private def buildZorderIncrTable(s: SparkSession, dir: String,
       p: String): Unit = {
-      val z = zorderRankedFor(s, dir)
-        .select(col("doc_id"), col("b1"), col("b2"), col("zkey"),
-          col("hkey"))
-      val isApp = col("b2") >= 144 && pmod(col("doc_id"), lit(2L)) === 0L
-      val table = s"$p/table"
-      // txn 1 (static overwrite wipes any stale table dir): base
-      val stBase = zorderWriteFiles(
-        Ranks.globalRowNumber(z.where(!isApp),
-          Seq(col("zkey"), col("doc_id")), out = "_rk"),
-        "_rk", nFiles = 52, offset = 0, out = table)
-      writeStatsManifest(stBase, s"$p/_stats_base")
-      // txn 2: localized append, arrival (hash) order, NEW file ids only
-      val stApp = zorderWriteFiles(
-        Ranks.globalRowNumber(z.where(isApp),
-          Seq(col("hkey"), col("doc_id")), out = "_rk"),
-        "_rk", nFiles = 12, offset = 52, out = table, mode = "append")
-      writeStatsManifest(stBase.unionByName(stApp), s"$p/_stats_appended")
-      // txn 3: incremental OPTIMIZE — metadata-only rewrite selection
-      // (appended files are the ids ≥ 52 this table's txn 2 wrote)
-      val (optimized, _, _) = graft.ext.ZTable.incrementalOptimize(s,
-        s.read.parquet(s"$p/_stats_appended"),
-        isAppended = _.getAs[Long]("file_id") >= 52,
-        tablePath = table, newOffset = 1000)
-      writeStatsManifest(optimized, s"$p/_stats_optimized")
+    val table = s"$p/table"
+    // txns 1 and 2: base, then the localized append as file ids 52..63
+    val (_, stBase, stApp) = zorderBaseAndHot(s, dir, table, hotOffset = 52)
+    ZTable.writeManifest(stBase, s"$p/_stats_base")
+    ZTable.writeManifest(stBase.unionByName(stApp), s"$p/_stats_appended")
+    // txn 3: incremental OPTIMIZE — metadata-only rewrite selection
+    // (appended files are the ids ≥ 52 this table's txn 2 wrote)
+    val (optimized, _, _) = ZTable.incrementalOptimize(s,
+      s.read.parquet(s"$p/_stats_appended"),
+      isAppended = _.getAs[Long]("file_id") >= 52,
+      tablePath = table, newOffset = 1000)
+    ZTable.writeManifest(optimized, s"$p/_stats_optimized")
+  }
+
+  /** The first two transactions of the incremental experiments into
+    * `table`: the corpus minus a key-space-localized hot batch (b2 ≥ 144,
+    * even doc_id), z-ordered into 52 files (a static overwrite, so a
+    * stale table dir is wiped), then the hot batch appended in arrival
+    * (hash) order as 12 files from id `hotOffset`. Returns the z-ranked
+    * frame (doc_id, b1, b2, zkey, hkey) and the two write-time
+    * manifests. */
+  private def zorderBaseAndHot(s: SparkSession, dir: String, table: String,
+      hotOffset: Int): (DataFrame, DataFrame, DataFrame) = {
+    val z = zorderRankedFor(s, dir)
+      .select(col("doc_id"), col("b1"), col("b2"), col("zkey"),
+        col("hkey"))
+    val isApp = col("b2") >= 144 && pmod(col("doc_id"), lit(2L)) === 0L
+    val stBase = writeRanked(z.where(!isApp), col("zkey"), 52, 0, table)
+    val stApp = writeRanked(z.where(isApp), col("hkey"), 12, hotOffset,
+      table, mode = "append")
+    (z, stBase, stApp)
   }
 
   /** The VACUUM experiment (doc_zorder_vacuum): the same three
@@ -277,25 +278,18 @@ object DocQueries {
     * list the table's data files (metadata), diff against the optimized
     * manifest's referenced paths, DELETE the orphans (the files the
     * incremental OPTIMIZE logically removed; earlier snapshots become
-    * time-travel-expired, the Delta VACUUM contract). Accounting lands in
-    * `_vacuum.json`. */
+    * time-travel-expired, the Delta VACUUM contract). Returns the
+    * table root and the vacuum's (files before, files deleted). */
   private val zorderVacFor = Artifact("zorderVac") { (s, dir) =>
     val p = scratch("zorder_vac", dir)
     buildZorderIncrTable(s, dir, p)
-    val (before, deleted) = graft.ext.ZTable.vacuum(s, s"$p/table",
-      s.read.parquet(s"$p/_stats_optimized"))
-    val conf = s.sparkContext.hadoopConfiguration
-    val accP = new org.apache.hadoop.fs.Path(s"$p/_vacuum.json")
-    val out = accP.getFileSystem(conf).create(accP, true)
-    out.write(s"""{"before":$before,"deleted":$deleted}"""
-      .getBytes("UTF-8"))
-    out.close()
-    p
+    (p, ZTable.vacuum(s, s"$p/table",
+      s.read.parquet(s"$p/_stats_optimized")))
   }
 
   /** The OCC interleaved-writer experiment (doc_zorder_occ, r15 VERDICT
     * task 1): the zorderVac lifecycle re-run through the VERSIONED manifest log
-    * ([[graft.ext.ZTable.logCommit]]) with two adversarial
+    * ([[ZTable.logCommit]]) with two adversarial
     * interleavings. v0 base (z-ordered), v1 hot append A1; optimizer O1
     * reads v1 and rewrites A1's region, but appender A2 (synthetic
     * rows forced to the DISJOINT cold band b2 % 64) commits v2 first —
@@ -311,24 +305,10 @@ object DocQueries {
     * Every protocol step is enforced by a require, so the declared
     * query's hash match certifies the whole interleaving. */
   private val zorderOccFor = Artifact("zorderOcc") { (s, dir) =>
-    import graft.ext.ZTable
     val p = scratch("zorder_occ", dir)
     val table = s"$p/table"
     val root = s"$p/_log"
-    val z = zorderRankedFor(s, dir)
-      .select(col("doc_id"), col("b1"), col("b2"), col("zkey"),
-        col("hkey"))
-    val isApp = col("b2") >= 144 && pmod(col("doc_id"), lit(2L)) === 0L
-    val stBase = zorderWriteFiles(
-      Ranks.globalRowNumber(z.where(!isApp),
-        Seq(col("zkey"), col("doc_id")), out = "_rk"),
-      "_rk", nFiles = 52, offset = 0, out = table)
-    require(ZTable.logCommit(s, root, -1L, stBase) == 0L)
-    val stA1 = zorderWriteFiles(
-      Ranks.globalRowNumber(z.where(isApp),
-        Seq(col("hkey"), col("doc_id")), out = "_rk"),
-      "_rk", nFiles = 12, offset = 100, out = table, mode = "append")
-    require(ZTable.commitAppend(s, root, 0L, stA1) == 1L)
+    val z = zorderLoggedBase(s, dir, table, root)
     // O1 reads v1 and rewrites the hot region (data files land now;
     // the stale v1-based manifest is what a non-OCC writer would
     // overwrite the log with)
@@ -344,13 +324,7 @@ object DocQueries {
     val stNew1 = staleManDf.where(col("file_id") >= 1000)
     // concurrent A2: synthetic rows pinned to the cold band (b2 % 64
     // — disjoint from O1's box), arrival order, fresh ids
-    val a2 = z.where(pmod(col("doc_id"), lit(31L)) === 5L)
-      .select((col("doc_id") + 3000000L).as("doc_id"), col("b1"),
-        pmod(col("b2"), lit(64L)).as("b2"), col("hkey"))
-    val stA2 = zorderWriteFiles(
-      Ranks.globalRowNumber(a2, Seq(col("hkey"), col("doc_id")),
-        out = "_rk"),
-      "_rk", nFiles = 3, offset = 200, out = table, mode = "append")
+    val stA2 = zorderColdAppend(z, 5L, 3000000L, 3, 200, table)
     require(ZTable.commitAppend(s, root, 1L, stA2) == 2L)
     // O1 commits at its v1 snapshot: conflict → disjoint → rebase
     require(ZTable.commitOptimize(s, root, 1L, rwIds1, stNew1,
@@ -369,13 +343,7 @@ object DocQueries {
     val stale2Ids = staleMan2Df.collect().map(_.getAs[Long]("file_id")).toSet
     val rwIds2 = man3.map(_.getAs[Long]("file_id")).toSet -- stale2Ids
     val stNew2 = staleMan2Df.where(col("file_id") >= 2000)
-    val a3 = z.where(pmod(col("doc_id"), lit(31L)) === 6L)
-      .select((col("doc_id") + 4000000L).as("doc_id"), col("b1"),
-        pmod(col("b2"), lit(64L)).as("b2"), col("hkey"))
-    val stA3 = zorderWriteFiles(
-      Ranks.globalRowNumber(a3, Seq(col("hkey"), col("doc_id")),
-        out = "_rk"),
-      "_rk", nFiles = 2, offset = 300, out = table, mode = "append")
+    val stA3 = zorderColdAppend(z, 6L, 4000000L, 2, 300, table)
     require(ZTable.commitAppend(s, root, 3L, stA3) == 4L)
     val superseded =
       try { ZTable.commitOptimize(s, root, 3L, rwIds2, stNew2, box2)
@@ -392,14 +360,9 @@ object DocQueries {
     val (_, _) = ZTable.vacuum(s, table, ZTable.logRead(s, root, 5L))
     require(ZTable.listDataFiles(s, table).length == man5.length,
       "post-vacuum listing must equal the committed manifest")
-    // by-construction protocol counters (each enforced above)
-    val accP = new org.apache.hadoop.fs.Path(s"$p/_occ.json")
-    val out = accP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .create(accP, true)
-    out.write("""{"versions":6,"conflicts":2,"aborts":1}"""
-      .getBytes("UTF-8"))
-    out.close()
-    p
+    // by-construction protocol counters (each enforced above): versions
+    // v0..v5, conflicts = O1's rebase + O2's abort, aborts = O2's
+    (p, (v5 + 1, 2L, 1L))
   }
 
   /** The TIME-TRAVEL / retention-VACUUM experiment (doc_zorder_timetravel,
@@ -407,7 +370,7 @@ object DocQueries {
     * lifecycle through the versioned log — v0 base, v1 hot append, v2
     * incremental OPTIMIZE, v3 cold-band append — then a
     * RETENTION-BOUNDED VACUUM with version floor 2
-    * ([[graft.ext.ZTable.vacuumRetain]]): files referenced only by
+    * ([[ZTable.vacuumRetain]]): files referenced only by
     * expired snapshots (exactly the optimize's rewrite set) are
     * physically deleted, while v2 — a HISTORICAL version, one commit
     * behind latest — must stay fully readable: A2's rows are on disk
@@ -415,37 +378,17 @@ object DocQueries {
     * reads). Each retention property is a require; the declared row
     * certifies content at both versions plus the expiry accounting. */
   private val zorderTTFor = Artifact("zorderTT") { (s, dir) =>
-    import graft.ext.ZTable
     val p = scratch("zorder_tt", dir)
     val table = s"$p/table"
     val root = s"$p/_log"
-    val z = zorderRankedFor(s, dir)
-      .select(col("doc_id"), col("b1"), col("b2"), col("zkey"),
-        col("hkey"))
-    val isApp = col("b2") >= 144 && pmod(col("doc_id"), lit(2L)) === 0L
-    val stBase = zorderWriteFiles(
-      Ranks.globalRowNumber(z.where(!isApp),
-        Seq(col("zkey"), col("doc_id")), out = "_rk"),
-      "_rk", nFiles = 52, offset = 0, out = table)
-    require(ZTable.logCommit(s, root, -1L, stBase) == 0L)
-    val stA1 = zorderWriteFiles(
-      Ranks.globalRowNumber(z.where(isApp),
-        Seq(col("hkey"), col("doc_id")), out = "_rk"),
-      "_rk", nFiles = 12, offset = 100, out = table, mode = "append")
-    require(ZTable.commitAppend(s, root, 0L, stA1) == 1L)
+    val z = zorderLoggedBase(s, dir, table, root)
     val (v2, filesRw, _, aborts) = ZTable.incrementalOptimizeOcc(s, root,
       table, r => { val f = r.getAs[Long]("file_id")
         f >= 100 && f < 200 }, newOffset = 1000)
     require(v2 == 2L && aborts == 0L)
-    val a2 = z.where(pmod(col("doc_id"), lit(31L)) === 5L)
-      .select((col("doc_id") + 3000000L).as("doc_id"), col("b1"),
-        pmod(col("b2"), lit(64L)).as("b2"), col("hkey"))
-    val stA2 = zorderWriteFiles(
-      Ranks.globalRowNumber(a2, Seq(col("hkey"), col("doc_id")),
-        out = "_rk"),
-      "_rk", nFiles = 3, offset = 200, out = table, mode = "append")
+    val stA2 = zorderColdAppend(z, 5L, 3000000L, 3, 200, table)
     require(ZTable.commitAppend(s, root, 2L, stA2) == 3L)
-    val (before, deleted) = ZTable.vacuumRetain(s, table, root,
+    val (_, deleted) = ZTable.vacuumRetain(s, table, root,
       fromVersion = 2L)
     require(deleted == filesRw, "retention must expire exactly the " +
       s"rewrite set ($filesRw files), got $deleted")
@@ -460,43 +403,38 @@ object DocQueries {
       .collect().map(_.getString(0))
     require(v1Paths.exists(f => !onDisk(f)),
       "the expired snapshot must have lost files (time-travel expiry)")
-    val accP = new org.apache.hadoop.fs.Path(s"$p/_tt.json")
-    val out = accP.getFileSystem(conf).create(accP, true)
-    out.write(s"""{"before":$before,"deleted":$deleted}"""
-      .getBytes("UTF-8"))
-    out.close()
-    p
+    (p, deleted)
   }
 
-  /** Write `frame` (doc_id, b1, b2 + a rank column) as real parquet
-    * under `out`, one data file per logical file id: file_id = offset +
-    * (rank−1) div rpf with rpf = ceil(n/nFiles) (or `rpfOverride` when
-    * ≥ 1 — the incremental-OPTIMIZE path sizes new files by the
-    * TABLE's global rows-per-file, not the batch's), rows sorted by
-    * rank within each file (the maxRecordsPerFile run a writer would
-    * produce).
-    *
-    * Returns the WRITE-TIME stats manifest (file_id, path, b1_min,
-    * b1_max, b2_min, b2_max, n_rows): per-file min/max computed from
-    * the frame being written — never re-derived by scanning data files
-    * afterwards, which at 100 TB would cost the full scan the layout
-    * exists to avoid — with `path` resolved from a directory LISTING of
-    * the just-written file_id partitions (metadata-only; mode `append`
-    * adds only NEW file_id dirs, so each listed dir holds exactly one
-    * data file). Callers persist it next to the data (the `_delta_log`
-    * role); Spark's parquet reader skips `_`-prefixed dirs, so the
-    * manifest can live under the table root. */
-  private def zorderWriteFiles(frame: DataFrame, rankCol: String,
-      nFiles: Int, offset: Int, out: String, mode: String = "overwrite",
-      rpfOverride: Long = -1L): DataFrame =
-    graft.ext.ZTable.writeFiles(frame, rankCol, nFiles, offset, out, mode,
-      rpfOverride)
+  /** [[zorderBaseAndHot]] through the versioned log at `root`, shared by
+    * the OCC and time-travel experiments: v0 = the base, v1 = the hot
+    * append A1 (files 100..111). Returns the z-ranked frame. */
+  private def zorderLoggedBase(s: SparkSession, dir: String, table: String,
+      root: String): DataFrame = {
+    val (z, stBase, stA1) = zorderBaseAndHot(s, dir, table, hotOffset = 100)
+    require(ZTable.logCommit(s, root, -1L, stBase) == 0L)
+    require(ZTable.commitAppend(s, root, 0L, stA1) == 1L)
+    z
+  }
 
-  /** Persist a [[zorderWriteFiles]] stats manifest (one small file —
-    * the table-format transaction-log role: the reader prunes from this
-    * metadata without touching data files). */
-  private def writeStatsManifest(st: DataFrame, path: String): Unit =
-    graft.ext.ZTable.writeManifest(st, path)
+  /** Write a synthetic cold-band append into `table`: the docs with
+    * doc_id % 31 = `residue`, re-keyed to doc_id + `idShift` with b2
+    * folded into the cold band b2 % 64, in arrival (hkey) order as
+    * `nFiles` files from id `offset`. Returns its write-time manifest
+    * rows; the caller commits them. */
+  private def zorderColdAppend(z: DataFrame, residue: Long, idShift: Long,
+      nFiles: Int, offset: Int, table: String): DataFrame = {
+    val a = z.where(pmod(col("doc_id"), lit(31L)) === residue)
+      .select((col("doc_id") + idShift).as("doc_id"), col("b1"),
+        pmod(col("b2"), lit(64L)).as("b2"), col("hkey"))
+    writeRanked(a, col("hkey"), nFiles, offset, table, mode = "append")
+  }
+
+  /** [[ZTable.writeFiles]] of `rows` numbered in (`key`, doc_id) order. */
+  private def writeRanked(rows: DataFrame, key: Column, nFiles: Int,
+      offset: Int, out: String, mode: String = "overwrite"): DataFrame =
+    ZTable.writeFiles(Ranks.globalRowNumber(rows, Seq(key, col("doc_id")),
+      out = "_rk"), "_rk", nFiles, offset, out, mode)
 
   /** Skipping audit from a PERSISTED write-time stats manifest — the
     * production read path (Delta/Iceberg discipline): the prune
@@ -1388,19 +1326,14 @@ object DocQueries {
     // (driver traffic O(d) doubles), row-local scoring — corpus scanned
     // T times from cache, never shuffled on a token key.
     "doc_quality_lr" -> (((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labels = docs.select(col("doc_id").as("doc"),
-        (col("lang") === "en").cast("double").as("y"))
-      val feat = QualityModel.denseFeatures(
-        QualityModel.hashedBow(docs, "doc_id", "text", 64), labels, 64)
-      sortBig(QualityModel.scoreLogReg(feat, lrModelFor(s, dir)), "doc")
+      sortBig(QualityModel.scoreLogReg(lrFeatures(s, dir), lrModelFor(s, dir)),
+        "doc")
     },
       // generated training-replay oracle (the BPE discipline applied to
       // gradient descent): DuckDB re-runs all 16 GD rounds — sound
       // because every aggregate in the loop is exact dyadic arithmetic
       // and every scalar op is IEEE correctly-rounded (see QualityModel)
-      QualityModel.qualityOracleSql(
-      "CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS DOUBLE)"))),
+      QualityModel.qualityOracleSql(LrLabelSql))),
 
     // calibration audit of the SAME trained gate (reliability bins):
     // before a pipeline trusts classifier probabilities as sampling
@@ -1411,19 +1344,13 @@ object DocQueries {
     // probabilities use the same Elliott sigmoid, bin means use the
     // 6-dp-round-then-exact-decimal-sum discipline.
     "doc_lr_calibration" -> (((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labels = docs.select(col("doc_id").as("doc"),
-        (col("lang") === "en").cast("double").as("y"))
-      val feat = QualityModel.denseFeatures(
-        QualityModel.hashedBow(docs, "doc_id", "text", 64), labels, 64)
       sortSmall(QualityModel.calibrationBins(
-        QualityModel.scoreLogReg(feat, lrModelFor(s, dir))
+        QualityModel.scoreLogReg(lrFeatures(s, dir), lrModelFor(s, dir))
           .select(col("doc"), col("y"), col("score"))), "bin")
     },
       // same generated training CTEs, calibration tail: Elliott
       // probabilities, ten fixed bins, 6-dp-round-then-decimal-sum means
-      QualityModel.calibrationOracleSql(
-      "CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS DOUBLE)"))),
+      QualityModel.calibrationOracleSql(LrLabelSql))),
 
     // DSIR importance resampling (Xie et al. 2023) — select raw docs
     // whose hashed-unigram profile looks like the TARGET slice:
@@ -1820,12 +1747,8 @@ object DocQueries {
     // function of (corpus, salt) — re-runs and engines agree on every
     // position.
     "doc_curriculum_order" -> (((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labels = docs.select(col("doc_id").as("doc"),
-        (col("lang") === "en").cast("double").as("y"))
-      val feat = QualityModel.denseFeatures(
-        QualityModel.hashedBow(docs, "doc_id", "text", 64), labels, 64)
-      val scored = QualityModel.scoreLogReg(feat, lrModelFor(s, dir))
+      val scored = QualityModel.scoreLogReg(lrFeatures(s, dir),
+          lrModelFor(s, dir))
         .select(col("doc"), col("score"))
       val nF = scored.agg(count(lit(1)).as("_n"))
       val dec = Ranks.globalRowNumber(scored,
@@ -1843,8 +1766,7 @@ object DocQueries {
     },
       // the generated LR training CTEs (ending in `scored`) + the decile
       // binning and the salted within-decile shuffle as window ranks
-      (QualityModel.qualityOracleCtes(
-      "CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS DOUBLE)") + """,
+      (QualityModel.qualityOracleCtes(LrLabelSql) + """,
       |ncnt AS (SELECT CAST(count(*) AS BIGINT) AS cn FROM scored),
       |rk AS (SELECT doc, score,
       |    CAST(row_number() OVER (ORDER BY score, doc) AS BIGINT) AS r
@@ -2100,20 +2022,12 @@ object DocQueries {
     // diff), and the live snapshot intact post-delete (manifest prune
     // + box aggregate still reproduce the full table).
     "doc_zorder_vacuum" -> (((s, dir) => {
-      val p = zorderVacFor(s, dir)
-      val accP = new org.apache.hadoop.fs.Path(s"$p/_vacuum.json")
-      val fs2 = accP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val in = fs2.open(accP)
-      val acc = new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      in.close()
-      def field(k: String): Long =
-        s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(acc).get.group(1).toLong
+      val (p, (before, deleted)) = zorderVacFor(s, dir)
       val after =
-        graft.ext.ZTable.listDataFiles(s, s"$p/table").length.toLong
+        ZTable.listDataFiles(s, s"$p/table").length.toLong
       manifestAudit(s, "vacuumed", Seq(s"$p/_stats_optimized"))
-        .withColumn("files_on_disk_before", lit(field("before")))
-        .withColumn("files_deleted", lit(field("deleted")))
+        .withColumn("files_on_disk_before", lit(before))
+        .withColumn("files_deleted", lit(deleted))
         .withColumn("files_on_disk_after", lit(after))
     },
       // same replay as doc_zorder_incr_optimize, final state only, plus
@@ -2168,23 +2082,12 @@ object DocQueries {
     // produced — a lost append, doubled rewrite, or vacuumed live file
     // hash-mismatches.
     "doc_zorder_occ" -> (((s, dir) => {
-      import graft.ext.ZTable
-      val p = zorderOccFor(s, dir)
+      val (p, (versions, conflicts, aborts)) = zorderOccFor(s, dir)
       val root = s"$p/_log"
       val man = ZTable.logRead(s, root, ZTable.logLatest(s, root)).collect()
       val manRows = man.map(_.getAs[Long]("n_rows")).sum
       val paths = man.map(_.getAs[String]("path")).sorted.toSeq
       val boxPred = col("b1").between(64, 127) && col("b2").between(128, 191)
-      val acc = {
-        val accP = new org.apache.hadoop.fs.Path(s"$p/_occ.json")
-        val in = accP.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .open(accP)
-        val str = new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        in.close()
-        (k: String) => s""""$k"\\s*:\\s*(\\d+)""".r
-          .findFirstMatchIn(str).get.group(1).toLong
-      }
       s.read.parquet(paths: _*).agg(
           count(lit(1)).as("live_rows"),
           coalesce(sum(col("doc_id")), lit(0L)).as("live_sum_doc"),
@@ -2192,9 +2095,9 @@ object DocQueries {
           coalesce(sum(when(boxPred, col("doc_id"))), lit(0L))
             .as("box_sum_doc"))
         .select(lit("occ").as("phase"),
-          lit(acc("versions")).as("n_versions"),
-          lit(acc("conflicts")).as("conflicts"),
-          lit(acc("aborts")).as("aborts"),
+          lit(versions).as("n_versions"),
+          lit(conflicts).as("conflicts"),
+          lit(aborts).as("aborts"),
           col("live_rows"), lit(manRows).as("man_rows"),
           col("live_sum_doc"), col("box_rows"), col("box_sum_doc"))
     },
@@ -2232,22 +2135,11 @@ object DocQueries {
     // wrongly deleted v2 file crashes the v2 read; a kept orphan
     // mismatches files_on_disk_after, recounted from a fresh listing).
     "doc_zorder_timetravel" -> (((s, dir) => {
-      import graft.ext.ZTable
-      val p = zorderTTFor(s, dir)
+      val (p, expired) = zorderTTFor(s, dir)
       val root = s"$p/_log"
       val boxPred = col("b1").between(64, 127) && col("b2").between(128, 191)
       def pathsAt(v: Long) = ZTable.logRead(s, root, v).collect()
         .map(_.getAs[String]("path")).sorted.toSeq
-      val acc = {
-        val accP = new org.apache.hadoop.fs.Path(s"$p/_tt.json")
-        val in = accP.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .open(accP)
-        val str = new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        in.close()
-        (k: String) => s""""$k"\\s*:\\s*(\\d+)""".r
-          .findFirstMatchIn(str).get.group(1).toLong
-      }
       val after = ZTable.listDataFiles(s, s"$p/table").length.toLong
       val v2Agg = s.read.parquet(pathsAt(2L): _*).agg(
         count(lit(1)).as("rows_v2"),
@@ -2263,7 +2155,7 @@ object DocQueries {
           lit(4L).as("n_versions"), lit(2L).as("retained_from"),
           col("rows_v2"), col("sum_doc_v2"), col("box_rows_v2"),
           col("box_sum_doc_v2"), col("rows_latest"), col("sum_doc_latest"),
-          lit(acc("deleted")).as("files_expired"),
+          lit(expired).as("files_expired"),
           lit(after).as("files_on_disk_after"))
     },
       // Time-travel row truth: v2's content is the whole corpus (base ∪

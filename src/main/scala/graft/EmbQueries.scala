@@ -43,8 +43,7 @@ object EmbQueries {
     * index-wide mean. The requires pin the incremental contract at
     * build time: some lists drifted, NOT all (the untouched majority is
     * the point), and the retrain reduced the drifted set's mean
-    * distance. Accounting lands in `_retrain.json` for the spec/tier;
-    * the declared query probes the retrained index. */
+    * distance. The declared query probes the retrained index. */
   private val ivfDriftFor = Artifact("ivfDriftRetrain") { (s, dir) =>
     val p = scratch("ivf_drift", dir)
     val emb = t(s, dir, "embeddings")
@@ -62,14 +61,6 @@ object EmbQueries {
       s"retrain must be incremental: ${rt.drifted.length}/${rt.nLists}")
     require(rt.meanDriftedAfter < rt.meanDriftedBefore,
       "retrain must reduce the drifted lists' mean distance")
-    val accP = new org.apache.hadoop.fs.Path(s"$p/_retrain.json")
-    val out = accP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .create(accP, true)
-    out.write((s"""{"drifted":[${rt.drifted.mkString(",")}],""" +
-      s""""nLists":${rt.nLists},"rows":${rt.rowsReclustered},""" +
-      s""""before":${rt.meanDriftedBefore},"after":${rt.meanDriftedAfter}}""")
-      .getBytes("UTF-8"))
-    out.close()
     p
   }
 
@@ -871,7 +862,7 @@ object EmbQueries {
             brightness = (id % 33).toInt))
         }).toDF("doc_id", "payload")
       val hashed = graft.ext.Multimodal.dHashes(media, "doc_id", "payload")
-      sortSmall(graft.ext.Multimodal.phashPairs(hashed, maxHamming = 3),
+      sortSmall(graft.ext.Multimodal.phashPairs(hashed),
         "doc_a", "doc_b")
     },
       // the content-match set is exactly the text-twin pairs: same md5 ⇒
@@ -901,7 +892,7 @@ object EmbQueries {
             gainShift = if (id >= 1000000L) 1 else 0))
         }).toDF("doc_id", "payload")
       val fps = graft.ext.Multimodal.audioFps(media, "doc_id", "payload")
-      sortSmall(graft.ext.Multimodal.phashPairs(fps, maxHamming = 3),
+      sortSmall(graft.ext.Multimodal.phashPairs(fps),
         "doc_a", "doc_b")
     },
       // same planted set as the image path: twins are the gain-shifted
@@ -954,8 +945,7 @@ object EmbQueries {
       val pairsT = Dedup.simhashDupPairsAtScalePortable(corpus, "doc_id",
         "text", maxDist = 3, nBlocks = 6)
       val pairsI = graft.ext.Multimodal.phashPairs(
-        graft.ext.Multimodal.dHashes(media, "doc_id", "payload"),
-        maxHamming = 3)
+        graft.ext.Multimodal.dHashes(media, "doc_id", "payload"))
       sortBig(corpus.select(col("doc_id"))
         .join(pairsT.select(col("doc_b").as("doc_id")).distinct()
           .withColumn("_t", lit(true)), Seq("doc_id"), "left")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.DecimalType
   * Each entry pairs a declared query with its DuckDB oracle SQL; see
   * [[SparkEntry]]. */
 object RelQueries {
-  import SparkEntry.{t, events, fmtTs, scratchBase, r6, Query}
+  import SparkEntry.{t, events, fmtTs, scratch, Artifact, r6, Query}
 
   /** Recall-instrumentation toggle. Bench sets `-Dgraft.recall=off` so
     * the timed plan is the approximate operator ALONE — in r3 the in-query
@@ -19,6 +19,23 @@ object RelQueries {
     * driver's row check still pins the recall evidence columns. */
   private def recallOn: Boolean =
     sys.props.getOrElse("graft.recall", "on") != "off"
+
+  /** `orders` and `customer` written as session tables bucketed 8 ways
+    * and sorted on the customer key (rel_bucketed_join): returns the two
+    * table names. */
+  private val bucketedFor = Artifact("bucketedJoin") { (s, dir) =>
+    val p = scratch("bucketed", dir)
+    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
+    def bucketed(table: String, key: String): String = {
+      val name = s"graft_bkt_${table}_$tag"
+      t(s, dir, table).write.mode("overwrite")
+        .bucketBy(8, key).sortBy(key)
+        .option("path", s"$p/$table")
+        .saveAsTable(name)
+      name
+    }
+    (bucketed("orders", "o_custkey"), bucketed("customer", "c_custkey"))
+  }
 
   private[graft] def queries: Seq[(String, (Query, String))] = Seq(
 
@@ -191,26 +208,12 @@ object RelQueries {
     // group-by. THE 100 TB pattern for repeated fact-dim joins on a
     // stable key: pay the partitioning once at ingest, every downstream
     // join is shuffle-free (the merge hint stands in for the
-    // beyond-broadcast dimension size this models; BucketedJoinSpec pins
-    // the exchange-free plan). Bucketed copies materialize once per
-    // (JVM, sf-dir); bench rep 1 absorbs the write like it absorbs
-    // codegen.
+    // beyond-broadcast dimension size this models; ExtSpec "bucketed-table
+    // merge join runs with zero exchange; rows match plain join" pins the
+    // exchange-free plan). The bucketed copies are a fixture
+    // ([[bucketedFor]]), built once per session and sf dir.
     "rel_bucketed_join" -> (((s, dir) => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val ot = s"graft_bkt_orders_$tag"
-      val ct = s"graft_bkt_customer_$tag"
-      if (!s.catalog.tableExists(ot)) {
-        t(s, dir, "orders").write.mode("overwrite")
-          .bucketBy(8, "o_custkey").sortBy("o_custkey")
-          .option("path", s"$scratchBase/graft_bucketed_$tag/orders")
-          .saveAsTable(ot)
-      }
-      if (!s.catalog.tableExists(ct)) {
-        t(s, dir, "customer").write.mode("overwrite")
-          .bucketBy(8, "c_custkey").sortBy("c_custkey")
-          .option("path", s"$scratchBase/graft_bucketed_$tag/customer")
-          .saveAsTable(ct)
-      }
+      val (ot, ct) = bucketedFor(s, dir)
       s.table(ot).hint("merge")
         .join(s.table(ct), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"), col("o_orderpriority"))

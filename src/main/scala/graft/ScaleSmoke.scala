@@ -715,7 +715,7 @@ object ScaleSmoke {
         .localCheckpoint(true)
       val tCodec = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      val pairs = Multimodal.phashPairs(hashed, maxHamming = 3)
+      val pairs = Multimodal.phashPairs(hashed)
         .localCheckpoint(true)
       val tPairs = (System.nanoTime() - t1) / 1e9
       val nPairs = pairs.count()
@@ -1922,7 +1922,7 @@ object ScaleSmoke {
             gainShift = if (id % 20 == 7) 1 else 0))
         }).toDF("doc_id", "payload")
       exec(Multimodal.phashPairs(
-        Multimodal.audioFps(media, "doc_id", "payload"), maxHamming = 3))
+        Multimodal.audioFps(media, "doc_id", "payload")))
     }
   }
 
@@ -1968,12 +1968,14 @@ object ScaleSmoke {
     def trainAt(n: Long, parts: Int): (QualityModel.LinearModel, Double) = {
       val docs = synthLabeled(n).repartition(parts).localCheckpoint(true)
       val labels = docs.select(col("doc_id").as("doc"), col("y"))
+      val d = QualityModel.Dim
       val feat = QualityModel.denseFeatures(
-        QualityModel.hashedBow(docs, "doc_id", "text", 64), labels, 64)
+        QualityModel.hashedBow(docs, "doc_id", "text", d), labels, d)
         .persist()
       feat.count()
       val t0 = System.nanoTime()
-      val m = QualityModel.trainLogReg(feat, d = 64, iters = 16, lr = 0.125)
+      val m = QualityModel.trainLogReg(feat, d, QualityModel.Iters,
+        QualityModel.Lr)
       val wall = (System.nanoTime() - t0) / 1e9
       val acc = QualityModel.scoreLogReg(feat, m)
         .select(avg((col("pred").cast("double") === col("y"))
@@ -2000,7 +2002,7 @@ object ScaleSmoke {
     val t0 = System.nanoTime()
     val lab1m = synthLabeled(1000000L).localCheckpoint(true)
     val sel = QualityModel.dsirSample(lab1m, "doc_id", "text",
-        col("y") === 1.0, d = 128, keepBp = 2000L)
+        col("y") === 1.0)
       .agg(sum(when(col("selected"), 1L).otherwise(0L)),
         sum(when(col("selected") && col("doc") % 2 === 0L, 1L)
           .otherwise(0L))).as[(Long, Long)].head()
@@ -3053,7 +3055,7 @@ object ScaleSmoke {
     c.check(satBad == 0L, "SCALEWATERFILL saturation red")
     // max task input of the fill's range-exchange stage under the skew
     val keyed = docs.withColumn("fill_key",
-      Corpus.sampleKey(col("doc_id"), "bfill"))
+      Corpus.sampleKey(col("doc_id"), Corpus.FillSalt))
     val maxTask = keyed
       .repartitionByRange(nParts, col("lang"), col("fill_key"), col("doc_id"))
       .groupBy(spark_partition_id().as("_p")).count()

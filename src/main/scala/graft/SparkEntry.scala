@@ -620,8 +620,7 @@ object SparkEntry {
     * the caller's tail select. WITH → WITH RECURSIVE for the dedup
     * closure. */
   private[graft] def e2eOracleSql(tail: String): String =
-    graft.ext.QualityModel.qualityOracleCtes(
-      "CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS DOUBLE)")
+    QualityModel.qualityOracleCtes(LrLabelSql)
       .replaceFirst("WITH ", "WITH RECURSIVE ") + ",\n" +
       Graph.pageRankOracleCtes(SyntheticEdgeSql,
         "SELECT doc_id AS node FROM documents", iters = 8, px = "pr")
@@ -676,15 +675,26 @@ object SparkEntry {
     * deterministic (exact dyadic GD), so train-once / score-many is a
     * pure time save. */
   private[graft] val lrModelFor = Artifact("lrModel") { (s, dir) =>
+    val feat = lrFeatures(s, dir).persist()
+    try QualityModel.trainLogReg(feat, QualityModel.Dim, QualityModel.Iters,
+      QualityModel.Lr)
+    finally { feat.unpersist(false): Unit }
+  }
+
+  /** The quality gate's dense feature frame (doc, f, y) over
+    * `documents`, y = 1.0 for English docs: what [[lrModelFor]] trains
+    * on and the doc_ quality queries score. */
+  private[graft] def lrFeatures(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val labels = docs.select(col("doc_id").as("doc"),
       (col("lang") === "en").cast("double").as("y"))
-    val feat = QualityModel.denseFeatures(
-      QualityModel.hashedBow(docs, "doc_id", "text", 64), labels, 64)
-      .persist()
-    try QualityModel.trainLogReg(feat, d = 64, iters = 16, lr = 0.125)
-    finally { feat.unpersist(false): Unit }
+    QualityModel.denseFeatures(QualityModel.hashedBow(docs, "doc_id", "text",
+      QualityModel.Dim), labels, QualityModel.Dim)
   }
+
+  /** [[lrFeatures]]' label as DuckDB SQL over `documents`. */
+  private[graft] val LrLabelSql =
+    "CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS DOUBLE)"
 
   /** The synthetic link graph's 8-round PageRank frame (node, rank,
     * in_deg, out_deg), shared by doc_pagerank, doc_curate_rank and

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.DecimalType
 object StreamQueries {
   import Observations.{KeyCol, TsCol, ValueCol}
   import SparkEntry.{t, events, fmtTs, sortSmall, sortBig, scratch, Artifact,
-    C4RulesOracle, syntheticUrls, UrlCanonCtes, e2eOracleSql,
+    C4RulesOracle, syntheticUrls, UrlCanonCtes, e2eOracleSql, LrLabelSql,
     c4StructuredText, lrModelFor, rankFor, e2eStagesFor, e2eIngest, e2eUrl,
     e2eBenchOf, r6, DetMeanSql, ShingleCtes, BudgetAllocCtes,
     HostBlocklistOracle, CmsTopkCtes, SimhashCtes, BloomProbeCtes,
@@ -413,8 +413,7 @@ object StreamQueries {
     },
       // the streamed scoring must land on the batch result bit-for-bit
       // (stateless dyadic fold) — same generated training-replay oracle
-      QualityModel.qualityOracleSql(
-      "CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS DOUBLE)"))),
+      QualityModel.qualityOracleSql(LrLabelSql))),
 
     // HASH-SHARDED QUOTA ENFORCEMENT AT INGEST — the streaming form of
     // doc_budget_fill: a GLOBAL exact prefix fill needs every smaller
@@ -467,7 +466,8 @@ object StreamQueries {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         batch
           .withColumn("res", pmod(col("doc_id"), lit(nRes.toLong)))
-          .withColumn("fill_key", Corpus.sampleKey(col("doc_id"), "bfill"))
+          .withColumn("fill_key",
+            Corpus.sampleKey(col("doc_id"), Corpus.FillSalt))
           .withColumn("cum_tokens", sum(col("n_chars")).over(w))
           .join(broadcast(sub), Seq("lang", "res"))
           .where(col("cum_tokens") <= col("sub_alloc"))
@@ -584,7 +584,8 @@ object StreamQueries {
         .select(col("lang"), col("res"), col("sub_alloc"))
       val keyed = docs
         .withColumn("res", pmod(col("doc_id"), lit(nRes.toLong)))
-        .withColumn("fill_key", Corpus.sampleKey(col("doc_id"), "bfill"))
+        .withColumn("fill_key",
+          Corpus.sampleKey(col("doc_id"), Corpus.FillSalt))
       val ord = Seq(col("fill_key"), col("doc_id"))
       val both = Ranks.stratifiedRunningSum(
           Ranks.stratifiedRunningSum(keyed, Seq("lang", "res"), ord,

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 object TextQueries {
   import SparkEntry.{t, sortSmall, sortBig, Artifact, unigramDictFor,
     bpeMergesFor, C4RulesOracle, c4StructuredText, r6, CmsTopkCtes, Query}
+  import TextAnalysis.{KnDiscount, LangIdDim}
 
   /** Trained-langid oracle CTE prefix (text_langid_trained /
     * text_langid_trained_confusion): the full NB training replay —
@@ -18,21 +19,21 @@ object TextQueries {
     * model over the complete (lang × bucket) grid, doc priors, then
     * per-doc scoring and the struct-max argmax. */
   private val LangIdTrainedCtes: String =
-    """WITH tri AS (SELECT doc_id, lang,
+    s"""WITH tri AS (SELECT doc_id, lang,
       |    unnest([text[i:i+2] for i in
       |      generate_series(1, greatest(length(text)-2, 0))]) AS t
       |  FROM documents),
       |trib AS (SELECT doc_id, lang,
-      |    ('0x' || substr(md5(t), 1, 15))::BIGINT % 256 AS bucket FROM tri),
+      |    ('0x' || substr(md5(t), 1, 15))::BIGINT % $LangIdDim AS bucket FROM tri),
       |lcl AS (SELECT lang, bucket, COUNT(*)::BIGINT AS c
       |  FROM trib GROUP BY 1, 2),
       |lgrid AS (SELECT l.lang, b.bucket
       |  FROM (SELECT DISTINCT lang FROM documents) l,
-      |    (SELECT unnest(generate_series(0, 255))::BIGINT AS bucket) b),
+      |    (SELECT unnest(generate_series(0, ${LangIdDim - 1}))::BIGINT AS bucket) b),
       |lnl AS (SELECT lang, SUM(c)::BIGINT AS n FROM lcl GROUP BY 1),
       |llam AS (SELECT g.lang, g.bucket,
       |    round(ln(CAST(COALESCE(lcl.c, 0) + 1 AS DOUBLE)
-      |      / CAST(lnl.n + 256 AS DOUBLE)), 6) AS lam
+      |      / CAST(lnl.n + $LangIdDim AS DOUBLE)), 6) AS lam
       |  FROM lgrid g LEFT JOIN lcl ON g.lang = lcl.lang
       |    AND g.bucket = lcl.bucket
       |  JOIN lnl ON g.lang = lnl.lang),
@@ -738,7 +739,7 @@ object TextQueries {
       // trigram frame) and the SAME operation-ordered float expression —
       // every count is exact integer, P is one fixed arithmetic tree, the
       // per-type cost rounds to 6 dp before the exact-decimal per-doc sum
-      """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+      s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |tf AS MATERIALIZED (SELECT doc_id AS doc, tri, CAST(COUNT(*) AS BIGINT) AS tf
         |  FROM (SELECT doc_id, unnest([array_to_string(w[i:i+2], ' ')
         |      for i in generate_series(1, greatest(len(w) - 2, 0))]) AS tri
@@ -760,11 +761,11 @@ object TextQueries {
         |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS ntypes FROM ls),
         |sc AS MATERIALIZED (SELECT t.tri,
         |    round(-ln(
-        |      greatest(CAST(t.c3 AS DOUBLE) - 0.75, 0.0) / CAST(hs.ch AS DOUBLE)
-        |      + 0.75 * CAST(hs.n1h AS DOUBLE) / CAST(hs.ch AS DOUBLE)
-        |        * (greatest(CAST(ls.n1low AS DOUBLE) - 0.75, 0.0)
+        |      greatest(CAST(t.c3 AS DOUBLE) - $KnDiscount, 0.0) / CAST(hs.ch AS DOUBLE)
+        |      + $KnDiscount * CAST(hs.n1h AS DOUBLE) / CAST(hs.ch AS DOUBLE)
+        |        * (greatest(CAST(ls.n1low AS DOUBLE) - $KnDiscount, 0.0)
         |             / CAST(ms.nmid AS DOUBLE)
-        |           + 0.75 * CAST(ms.n1mid AS DOUBLE) / CAST(ms.nmid AS DOUBLE)
+        |           + $KnDiscount * CAST(ms.n1mid AS DOUBLE) / CAST(ms.nmid AS DOUBLE)
         |             * (CAST(cs.n1cur AS DOUBLE) / CAST(nt.ntypes AS DOUBLE)))),
         |      6) AS cost
         |  FROM ty t JOIN hs ON t.hist = hs.hist JOIN ls ON t.low = ls.low

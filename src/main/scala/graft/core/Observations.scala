@@ -65,7 +65,7 @@ object Observations {
   def empty(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** Normalize an upstream event-time column to session-tz `TimestampType`,
+  /** Normalize the event-time column [[TsCol]] to session-tz `TimestampType`,
     * whatever dtype the producer wrote it as. The events fixture has
     * shipped as nanos-as-long (parquet NANOS read raw), as
     * `timestamp[us]`-no-tz (Spark 4's `TIMESTAMP_NTZ`), and as plain
@@ -74,12 +74,12 @@ object Observations {
     * retag (same micros value), and all downstream epoch math stays exact.
     * Works on batch and streaming frames alike (schema-driven, no data
     * peek). */
-  def normalizeEventTs(df: DataFrame, tsCol: String = TsCol): DataFrame =
-    df.schema(tsCol).dataType match {
+  def normalizeEventTs(df: DataFrame): DataFrame =
+    df.schema(TsCol).dataType match {
       case LongType => // raw parquet NANOS read as long (nanosAsLong=true)
-        df.withColumn(tsCol, expr(s"timestamp_micros($tsCol div 1000)"))
+        df.withColumn(TsCol, expr(s"timestamp_micros($TsCol div 1000)"))
       case TimestampNTZType =>
-        df.withColumn(tsCol, col(tsCol).cast(TimestampType))
+        df.withColumn(TsCol, col(TsCol).cast(TimestampType))
       case _ => df
     }
 }

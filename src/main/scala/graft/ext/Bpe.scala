@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * one merge (l, r → lr) is the plain string replacement
   * " l r " → " lr ". A single left-to-right `replace` pass misses
   * chained occurrences (" a b a b " consumes the shared boundary
-  * space), so a merge application is a FIXED `passes`-fold repeat of
+  * space), so a merge application is a FIXED [[Passes]]-fold repeat of
   * the same replace — both engines repeat identically, which makes the
-  * semantics deterministic by construction (and `passes` = 6 resolves
+  * semantics deterministic by construction (and 6 passes resolve
   * chains up to 2^6 symbols, beyond any natural word).
   *
   * Training shape at scale: the word DICTIONARY (types, not
@@ -61,15 +61,18 @@ object Bpe {
           concat_ws(" ", regexp_extract_all(col("word"), lit("."), lit(0))),
           lit(" ")).as("rep"))
 
-  /** One merge application as the fixed `passes`-fold replace chain. */
+  /** Replace passes per merge, in the engine chain and the oracle. */
+  private val Passes = 6
+
+  /** One merge application as the fixed [[Passes]]-fold replace chain. */
   private def applyMerge(repCol: org.apache.spark.sql.Column,
-      l: String, r: String, passes: Int): org.apache.spark.sql.Column =
-    (1 to passes).foldLeft(repCol)((c, _) =>
+      l: String, r: String): org.apache.spark.sql.Column =
+    (1 to Passes).foldLeft(repCol)((c, _) =>
       replace(c, lit(s" $l $r "), lit(s" $l$r ")))
 
   /** Train `m` merges; stops early if the dict runs out of pairs. */
-  def trainMerges(df: DataFrame, textCol: String, m: Int,
-      passes: Int = 6): Seq[(String, String)] = {
+  def trainMerges(df: DataFrame, textCol: String,
+      m: Int): Seq[(String, String)] = {
     var rep = wordDict(df, textCol).transform(Pin.pin)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var exhausted = false
@@ -88,7 +91,7 @@ object Bpe {
       else {
         val (l, r) = (best(0).getString(0), best(0).getString(1))
         merges += ((l, r))
-        rep = rep.withColumn("rep", applyMerge(col("rep"), l, r, passes))
+        rep = rep.withColumn("rep", applyMerge(col("rep"), l, r))
           .transform(Pin.pin)
       }
       round += 1
@@ -100,12 +103,12 @@ object Bpe {
     * bpe_tokens). The replace chain is row-local codegen; the only
     * shuffle is the per-doc sum. */
   def tokenCounts(df: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)], passes: Int = 6): DataFrame = {
+      merges: Seq[(String, String)]): DataFrame = {
     val rep0 = concat(lit(" "),
       concat_ws(" ", regexp_extract_all(col("word"), lit("."), lit(0))),
       lit(" "))
     val repN = merges.foldLeft(rep0) { case (c, (l, r)) =>
-      applyMerge(c, l, r, passes) }
+      applyMerge(c, l, r) }
     df.select(col(idCol).as("doc"),
         explode(regexp_extract_all(col(textCol), lit("\\S+"), lit(0)))
           .as("word"))
@@ -120,10 +123,10 @@ object Bpe {
     * projection, localCheckpoint between batches so neither the
     * expression tree nor the lineage grows with m. */
   private def applyMergesBatched(dict: DataFrame,
-      merges: Seq[(String, String)], passes: Int, batch: Int): DataFrame =
+      merges: Seq[(String, String)], batch: Int): DataFrame =
     merges.grouped(batch).foldLeft(dict) { (d, g) =>
       d.withColumn("rep", g.foldLeft(col("rep")) {
-          case (c, (l, r)) => applyMerge(c, l, r, passes) })
+          case (c, (l, r)) => applyMerge(c, l, r) })
         .transform(Pin.pin)
     }
 
@@ -134,8 +137,7 @@ object Bpe {
     * chain is both CPU-wasteful and (at m in the thousands) too deep to
     * plan as one expression. */
   def tokenCountsTyped(df: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)], passes: Int = 6,
-      batch: Int = 32): DataFrame = {
+      merges: Seq[(String, String)], batch: Int = 32): DataFrame = {
     val occ = df.select(col(idCol).as("doc"),
         explode(regexp_extract_all(col(textCol), lit("\\S+"), lit(0)))
           .as("word"))
@@ -144,7 +146,7 @@ object Bpe {
       .withColumn("rep", concat(lit(" "),
         concat_ws(" ", regexp_extract_all(col("word"), lit("."), lit(0))),
         lit(" ")))
-    val dict = applyMergesBatched(dict0, merges, passes, batch)
+    val dict = applyMergesBatched(dict0, merges, batch)
       .select(col("word"), size(split(trim(col("rep")), " ")).as("_nt"))
     occ.join(dict, Seq("word"))
       .groupBy(col("doc"))
@@ -157,11 +159,11 @@ object Bpe {
     * previous round's reps, picks the same (count desc, l, r) argmax as
     * a scalar subquery (COALESCE to an unmatchable chr(1) pair when the
     * dict runs out — the engine stops early, the oracle no-ops), and
-    * applies the same `passes`-fold replace. Generated, not
+    * applies the same [[Passes]]-fold replace. Generated, not
     * hand-written, so engine and oracle can never drift on round
     * count. */
-  def oracleSql(m: Int, passes: Int = 6): String =
-    oracleCtePrefix(m, passes) + s"""
+  def oracleSql(m: Int): String =
+    oracleCtePrefix(m) + s"""
       |SELECT d.doc_id AS doc, CAST(COUNT(*) AS BIGINT) AS n_words,
       |  CAST(SUM(len(string_split(trim(r$m.rep), ' '))) AS BIGINT)
       |    AS bpe_tokens
@@ -174,8 +176,8 @@ object Bpe {
     * ending in `bpe(doc, n_words, n_tokens)` — composable into
     * downstream oracles (packing keyed on real tokens, per-lang
     * fertility). */
-  def oracleCountsCte(m: Int, passes: Int = 6): String =
-    oracleCtePrefix(m, passes) + s""",
+  def oracleCountsCte(m: Int): String =
+    oracleCtePrefix(m) + s""",
       |bpe AS MATERIALIZED (
       |  SELECT d.doc_id AS doc, CAST(COUNT(*) AS BIGINT) AS n_words,
       |    CAST(SUM(len(string_split(trim(r$m.rep), ' '))) AS BIGINT)
@@ -186,7 +188,7 @@ object Bpe {
       |  GROUP BY 1)""".stripMargin
 
   /** The `WITH w0 … r<m>` training-replay chain shared by the oracles. */
-  private def oracleCtePrefix(m: Int, passes: Int): String = {
+  private def oracleCtePrefix(m: Int): String = {
     val sb = new StringBuilder
     sb.append(
       """WITH w0 AS MATERIALIZED (
@@ -209,15 +211,15 @@ object Bpe {
         |      chr(1)) AS l,
         |    COALESCE((SELECT r FROM p$i ORDER BY c DESC, l, r LIMIT 1),
         |      chr(1)) AS r),
-        |r$i AS MATERIALIZED (SELECT word, freq, ${nestedReplace(passes)} AS rep
+        |r$i AS MATERIALIZED (SELECT word, freq, $nestedReplace AS rep
         |  FROM $prev, b$i)""".stripMargin)
     }
     sb.toString
   }
 
-  /** `passes`-fold nested replace of " l r " → " lr " over column rep,
-    * with l/r coming from the round's b-CTE. */
-  private def nestedReplace(passes: Int): String =
-    (1 to passes).foldLeft("rep")((acc, _) =>
+  /** [[Passes]]-fold nested replace of " l r " → " lr " over column
+    * rep, with l/r coming from the round's b-CTE. */
+  private val nestedReplace: String =
+    (1 to Passes).foldLeft("rep")((acc, _) =>
       s"replace($acc, ' ' || l || ' ' || r || ' ', ' ' || l || r || ' ')")
 }

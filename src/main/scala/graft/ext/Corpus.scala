@@ -14,6 +14,15 @@ import org.apache.spark.sql.functions._
   */
 object Corpus {
 
+  /** Per-operator md5 sampling-key salts (independent draws); a twin or
+    * oracle that replays one uses the same string. */
+  private[graft] val UniformSalt = "usample"
+  private[graft] val WeightedSalt = "wsample"
+  private[graft] val FillSalt = "bfill"
+  private[graft] val EpochSalt = "emix"
+  /** Range partitions of the per-stratum rank and running-sum passes. */
+  private[graft] val RankParts = 32
+
   /** Assign every document a training SHARD by token budget, in stable
     * `idCol` order — the concat-then-chunk assignment GPT-style data
     * prep uses: lay all documents end to end and cut every
@@ -196,12 +205,12 @@ object Corpus {
     * to the scan, and re-runs (or a different partitioning, or a
     * different engine) select the IDENTICAL rows, which is what a
     * reproducible training-mix recipe needs. Strata not in `ratesBp`
-    * keep `defaultBp`. Emits the input rows plus the sampling bucket. */
+    * keep every row. Emits the input rows plus the sampling bucket. */
   def stratifiedSample(df: DataFrame, idCol: String, strataCol: String,
-      ratesBp: Map[String, Long], defaultBp: Long = 10000L): DataFrame = {
-    require((ratesBp.values ++ Seq(defaultBp)).forall(r => r >= 0 && r <= 10000),
+      ratesBp: Map[String, Long]): DataFrame = {
+    require(ratesBp.values.forall(r => r >= 0 && r <= 10000),
       "rates are basis points in [0, 10000]")
-    val rate = ratesBp.foldLeft(lit(defaultBp)) { case (acc, (stratum, bp)) =>
+    val rate = ratesBp.foldLeft(lit(10000L)) { case (acc, (stratum, bp)) =>
       when(col(strataCol) === stratum, lit(bp)).otherwise(acc)
     }
     df.withColumn("sample_bucket", sampleBucket(col(idCol)))
@@ -251,17 +260,16 @@ object Corpus {
     * driver merge. No global sort, no corpus shuffle; the corpus-side
     * work is one row-local md5 projection. k must fit the driver (it is
     * the OUTPUT — millions, not billions). */
-  def uniformSampleK(df: DataFrame, idCol: String, k: Int,
-      salt: String = "usample"): DataFrame = {
+  def uniformSampleK(df: DataFrame, idCol: String, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    df.withColumn("sample_key", sampleKey(col(idCol), salt))
+    df.withColumn("sample_key", sampleKey(col(idCol), UniformSalt))
       .orderBy(col("sample_key"), col(idCol)).limit(k)
   }
 
   /** The salted md5 sampling key [[uniformSampleK]] ranks on — exposed so
     * streaming twins rank on the byte-identical key (any drift in the
     * salt/separator convention must change both sides at once). */
-  def sampleKey(idCol: Column, salt: String = "usample"): Column =
+  def sampleKey(idCol: Column, salt: String = UniformSalt): Column =
     md5(concat(lit(salt + ":"), idCol.cast("string")))
 
   /** Exact-k WEIGHTED sample without replacement (Efraimidis & Spirtes
@@ -282,10 +290,10 @@ object Corpus {
     * differs across engines (Spark sorts nulls first, ANSI engines
     * last), so the filter is also what keeps the kept set portable. */
   def weightedSampleK(df: DataFrame, idCol: String, weightCol: String,
-      k: Int, salt: String = "wsample"): DataFrame = {
+      k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val bucket = conv(substring(md5(
-        concat(lit(salt + ":"), col(idCol).cast("string"))), 1, 15), 16, 10)
+    val bucket = conv(substring(md5(concat(lit(WeightedSalt + ":"),
+        col(idCol).cast("string"))), 1, 15), 16, 10)
       .cast("long")
     val u = (bucket.cast("double") + lit(0.5)) / lit(1152921504606846976.0)
     df.where(col(weightCol) > 0)
@@ -480,11 +488,11 @@ object Corpus {
     * window stall when one stratum dominates the corpus. Emits kept
     * rows + (fill_key, cum_tokens, alloc_tokens). */
   def waterfillFill(df: DataFrame, idCol: String, strataCol: String,
-      weightCol: String, budgetBp: Long, salt: String = "bfill",
-      nParts: Int = 32): DataFrame = {
+      weightCol: String, budgetBp: Long,
+      nParts: Int = RankParts): DataFrame = {
     val alloc = waterfillAlloc(df, strataCol, weightCol, budgetBp)
       .select(col(strataCol), col("alloc_tokens"))
-    val keyed = df.withColumn("fill_key", sampleKey(col(idCol), salt))
+    val keyed = df.withColumn("fill_key", sampleKey(col(idCol), FillSalt))
     Ranks.stratifiedRunningSum(keyed, Seq(strataCol),
         Seq(col("fill_key"), col(idCol)), col(weightCol), nParts,
         out = "cum_tokens")
@@ -516,8 +524,8 @@ object Corpus {
     * row-local `explode(sequence(1, n_epochs))`. Emits (doc, stratum,
     * epoch ∈ [1, n_epochs]) — the materialized training-mix manifest. */
   def epochCapMix(df: DataFrame, idCol: String, strataCol: String,
-      targetSharesBp: Map[String, Long], budgetBp: Long, maxEpochs: Int,
-      salt: String = "emix", nParts: Int = 32): DataFrame = {
+      targetSharesBp: Map[String, Long], budgetBp: Long,
+      maxEpochs: Int): DataFrame = {
     require(maxEpochs >= 1, "maxEpochs must be >= 1")
     // 10^6 bp = 100 corpus epochs; the bound keeps (_t div 10^4)·bp
     // inside int64 for corpora up to ~9·10^16 docs
@@ -549,9 +557,9 @@ object Corpus {
           .otherwise(pmod(col("_want"), col("_n"))))
       .select(col(strataCol), col("full_epochs"), col("rem_docs"))
     val keyed = df.select(col(idCol), col(strataCol))
-      .withColumn("_key", sampleKey(col(idCol), salt))
+      .withColumn("_key", sampleKey(col(idCol), EpochSalt))
     Ranks.stratifiedRowNumber(keyed, Seq(strataCol),
-        Seq(col("_key"), col(idCol)), nParts, out = "_rn")
+        Seq(col("_key"), col(idCol)), RankParts, out = "_rn")
       .join(broadcast(rates), strataCol)
       .withColumn("n_epochs", col("full_epochs") +
         when(col("_rn") <= col("rem_docs"), 1L).otherwise(0L))

@@ -14,6 +14,9 @@ import org.apache.spark.sql.types.DecimalType
   */
 object CrossStats {
 
+  /** Outlier threshold in σ ([[zscoreAnomalies]]) or MAD units. */
+  private val OutlierZ = 3.0
+
   /** Pearson correlation between two aligned series (inner join on ts).
     * Inputs should be pre-rounded to <= 6 decimals. Accumulators are
     * DECIMAL(38,6): the scale-6 cast of each term is deterministic (same
@@ -55,7 +58,7 @@ object CrossStats {
     * stats frame is small and falls back to a co-partitioned join — the
     * SAME key as the final count — beyond that), a row-local flag, one
     * count aggregate. No window over the raw stream. */
-  def zscoreAnomalies(obs: DataFrame, z: Double = 3.0): DataFrame = {
+  def zscoreAnomalies(obs: DataFrame): DataFrame = {
     val dec: Column => Column = c => c.cast(DecimalType(38, 6))
     val stats = obs.groupBy(col(KeyCol)).agg(
       count(col(ValueCol)).as("n"),
@@ -63,7 +66,8 @@ object CrossStats {
       sum(dec(col(ValueCol) * col(ValueCol))).cast("double").as("s2"))
     val nD = col("n").cast("double")
     val lhs = nD * col(ValueCol) - col("s1")
-    val rhs = lit(z * z) * (nD * col("s2") - col("s1") * col("s1"))
+    val rhs = lit(OutlierZ * OutlierZ) *
+      (nD * col("s2") - col("s1") * col("s1"))
     obs.join(stats, KeyCol)
       .select(col(KeyCol), ((lhs * lhs) > rhs).cast("long").as("_an"))
       .groupBy(col(KeyCol).as("series_key"))
@@ -85,10 +89,10 @@ object CrossStats {
     * the sorted value list — the in-memory-series bound the reference
     * itself lives under (types.py:479-495 operates on a materialized
     * pandas series); beyond that, swap the picks for a two-pass
-    * approx-quantile without touching callers. z defaults to 3 (no
+    * approx-quantile without touching callers. z is [[OutlierZ]] (no
     * 1.4826 σ-consistency factor — it buys nothing for thresholding and
     * costs a non-portable multiply). */
-  def madOutliers(obs: DataFrame, z: Double = 3.0): DataFrame = {
+  def madOutliers(obs: DataFrame): DataFrame = {
     def midPick(arr: Column): Column = {
       val n = size(arr)
       val lo = element_at(arr, ((n + 1) / 2).cast("int"))
@@ -103,7 +107,7 @@ object CrossStats {
       .select(col("series_key"), size(col("_sv")).cast("long").as("n"),
         col("med"), col("mad"),
         size(filter(col("_sv"),
-          x => abs(x - col("med")) > lit(z) * col("mad")))
+          x => abs(x - col("med")) > lit(OutlierZ) * col("mad")))
           .cast("long").as("n_outliers"))
   }
 

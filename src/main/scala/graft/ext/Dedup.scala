@@ -17,6 +17,12 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** Shingle width in words of the n-gram sets the Jaccard ops compare. */
+  private[graft] val ShingleWidth = 3
+  /** [[minhashDupPairs]]' signature length and LSH band count. */
+  private val MinhashHashes = 64
+  private val MinhashBands = 16
+
   /** Exact dedup: one surviving row id per distinct key, deterministic
     * keeper = min id. `SELECT min(id), count(*) GROUP BY key` — map-side
     * partial aggregation, one shuffle on the key hash. */
@@ -345,7 +351,7 @@ object Dedup {
     * Hashes the n words directly (multi-arg xxhash64) — no intermediate
     * shingle strings are materialized. */
   def hashedShingles(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3): DataFrame =
+      n: Int = ShingleWidth): DataFrame =
     df.select(col(idCol).as("doc"), split(col(textCol), " ").as("_w"))
       .select(col("doc"), explode(shingleArray(col("_w"), n)).as("sh"))
 
@@ -551,23 +557,23 @@ object Dedup {
     * verification; ExtSpec pins the native expressions bit-identical to
     * those aggregates, so results are unchanged. */
   def minhashDupPairs(df: DataFrame, idCol: String, textCol: String,
-      minJ: Double, n: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame = {
+      minJ: Double): DataFrame = {
     val docs = df.select(col(idCol).as("doc"),
-      shingleArray(split(col(textCol), " "), n).as("_shs"))
+      shingleArray(split(col(textCol), " "), ShingleWidth).as("_shs"))
     // materialize the signature frame ONCE (eager localCheckpoint): the
     // band self-join otherwise recomputes the full
     // split→shingle→signature chain in BOTH join sides (measured as the
     // dominant cost of the composed pipeline in the event log), and the
     // materialized form is small — one 64-long array per doc
     val sigs = docs.select(col("doc"),
-        minhashSignature(col("_shs"), numHashes).as("sig"))
+        minhashSignature(col("_shs"), MinhashHashes).as("sig"))
       .transform(Pin.pin)
     // materialize the candidate set too: candidates are
     // banding-collision-bounded (tiny next to the corpus), and handing
     // the verify stage a checkpointed input keeps it a small broadcast
     // join instead of a branch of one mega-DAG. Checkpoint blocks free
     // via the ContextCleaner.
-    val cand = lshCandidates(sigs, bands, numHashes / bands)
+    val cand = lshCandidates(sigs, MinhashBands, MinhashHashes / MinhashBands)
       .transform(Pin.pin)
     val docSets = docs.select(col("doc"), sort_array(col("_shs")).as("shs"),
       size(col("_shs")).cast("long").as("n"))
@@ -588,7 +594,7 @@ object Dedup {
     * Use this when the bench side fits a broadcast (the decontamination
     * case). */
   def crossJaccardPairs(train: DataFrame, bench: DataFrame, idCol: String,
-      textCol: String, minJ: Double, n: Int = 3): DataFrame = {
+      textCol: String, minJ: Double, n: Int = ShingleWidth): DataFrame = {
     def prep(df: DataFrame) = df.select(col(idCol).as("doc"),
       shingleArray(split(col(textCol), " "), n).as("_shs"))
     val be = prep(bench).transform(Pin.pin)

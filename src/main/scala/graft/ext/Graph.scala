@@ -40,6 +40,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Graph {
 
+  /** Damping and rank grid (decimal places), replayed by the oracle. */
+  private[graft] val Damping = 0.85
+  private[graft] val GridDp = 6
+
   /** PageRank over an integer-node edge list by `iters` damped
     * power-iteration rounds. `nodes` is the (node) universe frame (one
     * BIGINT column); nodes with no in-links hold the teleport floor;
@@ -55,7 +59,7 @@ object Graph {
     * the 1/n scalars. Emits one row per node: (node, rank, in_deg,
     * out_deg). */
   def pageRank(edges: DataFrame, nodes: DataFrame, iters: Int,
-      damping: Double = 0.85, gridDp: Int = 6): DataFrame = {
+      damping: Double = Damping, gridDp: Int = GridDp): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     require(gridDp >= 1 && gridDp <= 18, "gridDp out of range")
     // the rounding grid must resolve the teleport floor: quantum 10^-dp
@@ -156,11 +160,11 @@ object Graph {
     * iteration are computed IN SQL with the engine's operation order
     * (one CTE pair per round: contribution-round → exact decimal sum →
     * damped grid update), so the same oracle text replays any corpus
-    * size. `damping` is interpolated via Double.toString (shortest
+    * size. [[Damping]] is interpolated via Double.toString (shortest
     * round-trip repr — DuckDB parses back the identical double). */
-  def pageRankOracleSql(edgeSql: String, nodeSql: String, iters: Int,
-      damping: Double = 0.85, gridDp: Int = 6): String =
-    pageRankOracleCtes(edgeSql, nodeSql, iters, damping, gridDp) + s"""
+  def pageRankOracleSql(edgeSql: String, nodeSql: String,
+      iters: Int): String =
+    pageRankOracleCtes(edgeSql, nodeSql, iters) + s"""
        |SELECT n.node AS node, r$iters.rank AS rank,
        |  COALESCE(i.in_deg, 0) AS in_deg, COALESCE(deg.outdeg, 0) AS out_deg
        |FROM nodes n JOIN r$iters ON n.node = r$iters.node
@@ -176,9 +180,9 @@ object Graph {
     * (the composed-pipeline oracle shares a list with the quality-LR
     * training CTEs, which also define `nn` and `r<i>`). */
   def pageRankOracleCtes(edgeSql: String, nodeSql: String, iters: Int,
-      damping: Double = 0.85, gridDp: Int = 6, px: String = ""): String = {
-    val d = damping.toString
-    val sc = "1" + "0" * gridDp + ".0"
+      px: String = ""): String = {
+    val d = Damping.toString
+    val sc = "1" + "0" * GridDp + ".0"
     val sb = new StringBuilder
     sb.append(
       s"""WITH ${px}e AS MATERIALIZED ($edgeSql),
@@ -206,11 +210,11 @@ object Graph {
       sb.append(s""",
          |${px}s$i AS MATERIALIZED (
          |  SELECT ed.dst, SUM(CAST(floor(r.rank / ed.outdeg * $sc + 0.5)
-         |      / $sc AS DECIMAL(38,$gridDp))) AS s
+         |      / $sc AS DECIMAL(38,$GridDp))) AS s
          |  FROM ${px}ed ed JOIN ${px}r$p r ON ed.src = r.node GROUP BY 1),
          |${px}d$i AS MATERIALIZED (
-         |  SELECT COALESCE(SUM(CAST(r.rank AS DECIMAL(38,$gridDp))),
-         |    CAST(0 AS DECIMAL(38,$gridDp))) AS dm
+         |  SELECT COALESCE(SUM(CAST(r.rank AS DECIMAL(38,$GridDp))),
+         |    CAST(0 AS DECIMAL(38,$GridDp))) AS dm
          |  FROM ${px}r$p r JOIN ${px}dang dang ON r.node = dang.node),
          |${px}r$i AS MATERIALIZED (
          |  SELECT n.node,

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *   2. split on block-level tag boundaries (`p`, `div`, `li`, `nav`,
   *      `footer`, headings, …) — each segment is one candidate block;
   *   3. per block, strip remaining inline tags, collapse whitespace;
-  *   4. keep a block iff it has ≥ `minWords` words, text density
-  *      (stripped chars / raw segment chars) ≥ `minDensity`, and no
+  *   4. keep a block iff it has ≥ [[MinWords]] words, text density
+  *      (stripped chars / raw segment chars) ≥ [[MinDensity]], and no
   *      boilerplate phrase (rights/privacy/cookie/copyright — the C4
   *      §2.2 phrase filters);
   *   5. reassemble kept blocks in document order (sorted-struct fold ≡
@@ -34,6 +34,10 @@ import org.apache.spark.sql.functions._
   * extracted `text` column — feed it straight into
   * [[TextAnalysis.qualityScore]] / Gopher gates. */
 object HtmlExtract {
+
+  /** Block-keep thresholds: minimum words and minimum text density. */
+  private val MinWords = 5
+  private val MinDensity = 0.55
 
   /** Block-boundary tags. `[^>]*` eats attributes; `(?i)` both engines. */
   val BlockSplitRe: String =
@@ -63,11 +67,10 @@ object HtmlExtract {
   }
 
   /** Extraction with per-doc accounting; see object doc. */
-  def extract(df: DataFrame, idCol: String, htmlCol: String,
-      minWords: Int = 5, minDensity: Double = 0.55): DataFrame = {
+  def extract(df: DataFrame, idCol: String, htmlCol: String): DataFrame = {
     val b = blocks(df, idCol, htmlCol)
-      .withColumn("keep", col("words") >= minWords &&
-        col("density") >= minDensity &&
+      .withColumn("keep", col("words") >= MinWords &&
+        col("density") >= MinDensity &&
         not(col("txt").rlike(BoilerRe)))
     // collect_list skips nulls, so the when(keep) struct keeps exactly
     // the kept blocks; sort_array on (bidx, txt) restores doc order

@@ -22,6 +22,10 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  /** [[phashPairs]]' Hamming radius and Manku block count. */
+  private val PhashMaxHamming = 3
+  private val PhashBlocks = 6
+
   /** Typed sidecar metadata for a binary payload. */
   case class MediaMeta(modality: String, byteLen: Long, sha256: String,
       width: Int, height: Int, sampleRateHz: Int)
@@ -142,9 +146,9 @@ object Multimodal {
   }
 
   /** Image near-dup pairs over a (doc_id, dhash) frame: hamming(dHash) ≤
-    * `maxHamming`, found WITHOUT an all-pairs scan — the same Manku
+    * [[PhashMaxHamming]], found WITHOUT an all-pairs scan — the same Manku
     * COMBINATION banding the simhash text path uses ([[Dedup.simhashBands]]:
-    * 6 blocks, join keys = hashes of every (6−maxHamming)-block
+    * 6 blocks, join keys = hashes of every 3-block
     * combination, pigeonhole guarantees recall), so bucket space is ~2³²
     * and candidate volume stays collision-bounded out to ~10⁹ images —
     * a first cut of plain 8-bit byte-bands put 200k docs into 256
@@ -152,8 +156,7 @@ object Multimodal {
     * combination banding replays the planted set in seconds). Only
     * candidates pay the popcount verify. Emits (doc_a, doc_b, hamming),
     * doc_a < doc_b. */
-  def phashPairs(hashedIn: DataFrame, maxHamming: Int = 3,
-      nBlocks: Int = 6): DataFrame = {
+  def phashPairs(hashedIn: DataFrame): DataFrame = {
     // both sides of the band self-join read this frame — materialize the
     // two fixed-width columns once (eager localCheckpoint, not cache:
     // repeated invocations would accumulate storage memory relying on
@@ -161,7 +164,7 @@ object Multimodal {
     val hashed = hashedIn.transform(Pin.pin)
     val sim = hashed.where(col("dhash").isNotNull)
       .select(col("doc_id").as("doc"), col("dhash").as("simhash"))
-    Dedup.dupPairsFromSim(sim, maxHamming, nBlocks)
+    Dedup.dupPairsFromSim(sim, PhashMaxHamming, PhashBlocks)
       .select(col("doc_a"), col("doc_b"),
         col("hamming").cast("long").as("hamming"))
   }
@@ -722,8 +725,8 @@ object MultimodalCodecs {
     * `gainShift` (power-of-two gain, exact in int16 up to shift 2), so
     * two renders of the same seed at different gains are byte-different
     * files with identical [[audioFp64]] fingerprints. */
-  def syntheticWav(seed: Array[Byte], nSamples: Int = 6600,
-      gainShift: Int = 0): Array[Byte] = {
+  def syntheticWav(seed: Array[Byte], gainShift: Int = 0): Array[Byte] = {
+    val nSamples = 6600
     require(gainShift >= 0 && gainShift <= 2, "gainShift in [0, 2]")
     var s0 = 0L
     var i = 0

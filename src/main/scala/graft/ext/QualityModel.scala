@@ -54,7 +54,7 @@ import org.apache.spark.sql.functions._
 object QualityModel {
 
   /** Dyadic quantization grid: 2^-20. */
-  val GridBits = 20
+  private val GridBits = 20
   val Grid: Double = (1L << GridBits).toDouble
 
   /** floor(x·2^20 + 0.5)/2^20 — snap onto the dyadic grid. The scale by
@@ -64,6 +64,16 @@ object QualityModel {
   def gridQ(c: Column): Column = floor(c * lit(Grid) + lit(0.5)) / lit(Grid)
 
   def gridQ(x: Double): Double = math.floor(x * Grid + 0.5) / Grid
+
+  /** The quality gate's buckets, GD rounds and rate: trained with, and
+    * replayed by the oracle generators. */
+  private[graft] val Dim = 64
+  private[graft] val Iters = 16
+  private[graft] val Lr = 0.125
+
+  /** DSIR's bucket count and keep share (bp), engine and oracle. */
+  private[graft] val DsirDim = 128
+  private[graft] val DsirKeepBp = 2000L
 
   /** Engine-portable token bucket in [0, d): first 15 md5 hex digits as
     * a non-negative long, mod d. DuckDB spells the identical value
@@ -163,16 +173,15 @@ object QualityModel {
       .withColumn("pred", (col("score") > lit(0.0)).cast("int"))
 
   /** End-to-end declared-query shape: label with `labelCol` (0/1),
-    * train `iters` rounds at rate `lr` over `d` hashed buckets, score
-    * every doc with the final model. */
+    * train [[Iters]] rounds at rate [[Lr]] over [[Dim]] hashed buckets,
+    * score every doc with the final model. */
   def quality(df: DataFrame, idCol: String, textCol: String,
-      label: Column, d: Int = 64, iters: Int = 16,
-      lr: Double = 0.125): DataFrame = {
+      label: Column): DataFrame = {
     val labels = df.select(col(idCol).as("doc"), label.cast("double").as("y"))
-    val feat = denseFeatures(hashedBow(df, idCol, textCol, d), labels, d)
+    val feat = denseFeatures(hashedBow(df, idCol, textCol, Dim), labels, Dim)
       .persist()
     try {
-      val m = trainLogReg(feat, d, iters, lr)
+      val m = trainLogReg(feat, Dim, Iters, Lr)
       scoreLogReg(feat, m)
     } finally { feat.unpersist(false): Unit }
   }
@@ -185,15 +194,14 @@ object QualityModel {
     * doc). `labelSql` must be a 0.0/1.0 DOUBLE expression over
     * `documents` columns mirroring `label`. Ends with a `scored`
     * (doc, y, score) CTE for the caller's tail select. */
-  def qualityOracleCtes(labelSql: String, d: Int = 64, iters: Int = 16,
-      lr: Double = 0.125): String = {
+  def qualityOracleCtes(labelSql: String): String = {
     val g = Grid.toLong
     val sb = new StringBuilder
     sb.append(
       s"""WITH lab AS MATERIALIZED (
          |  SELECT doc_id AS doc, $labelSql AS y FROM documents),
          |f AS MATERIALIZED (
-         |  SELECT doc, ('0x' || substr(md5(tok), 1, 15))::BIGINT % $d
+         |  SELECT doc, ('0x' || substr(md5(tok), 1, 15))::BIGINT % $Dim
          |      AS bucket, CAST(COUNT(*) AS BIGINT) AS c
          |  FROM (SELECT doc_id AS doc,
          |          unnest(regexp_extract_all(text, '\\S+')) AS tok
@@ -201,10 +209,10 @@ object QualityModel {
          |  GROUP BY 1, 2),
          |nn AS MATERIALIZED (SELECT COUNT(*)::DOUBLE AS n FROM lab),
          |w0 AS MATERIALIZED (
-         |  SELECT unnest(generate_series(0, ${d - 1}))::BIGINT AS bucket,
+         |  SELECT unnest(generate_series(0, ${Dim - 1}))::BIGINT AS bucket,
          |    0.0::DOUBLE AS w),
          |b0 AS MATERIALIZED (SELECT 0.0::DOUBLE AS b)""".stripMargin)
-    for (i <- 1 to iters) {
+    for (i <- 1 to Iters) {
       val p = i - 1
       sb.append(s""",
          |m$i AS MATERIALIZED (
@@ -220,11 +228,11 @@ object QualityModel {
          |  FROM f JOIN r$i USING (doc) GROUP BY 1),
          |w$i AS MATERIALIZED (
          |  SELECT w.bucket,
-         |    floor((w.w - $lr * (COALESCE(g$i.gsum, 0.0) / nn.n))
+         |    floor((w.w - $Lr * (COALESCE(g$i.gsum, 0.0) / nn.n))
          |          * $g.0 + 0.5) / $g.0 AS w
          |  FROM w$p w LEFT JOIN g$i ON w.bucket = g$i.bucket, nn),
          |b$i AS MATERIALIZED (
-         |  SELECT floor((b$p.b - $lr * (s.gb / nn.n)) * $g.0 + 0.5) / $g.0
+         |  SELECT floor((b$p.b - $Lr * (s.gb / nn.n)) * $g.0 + 0.5) / $g.0
          |      AS b
          |  FROM b$p, (SELECT SUM(rq) AS gb FROM r$i) s, nn)""".stripMargin)
     }
@@ -232,17 +240,16 @@ object QualityModel {
        |scored AS MATERIALIZED (
        |  SELECT lab.doc AS doc, lab.y AS y, mm.m AS score
        |  FROM lab JOIN (
-       |    SELECT f.doc, SUM(f.c * w.w) + ANY_VALUE(b$iters.b) AS m
-       |    FROM f JOIN w$iters w USING (bucket), b$iters GROUP BY 1) mm
+       |    SELECT f.doc, SUM(f.c * w.w) + ANY_VALUE(b$Iters.b) AS m
+       |    FROM f JOIN w$Iters w USING (bucket), b$Iters GROUP BY 1) mm
        |    USING (doc))""".stripMargin)
     sb.toString
   }
 
   /** DuckDB replay of [[quality]]: the generated training CTEs + the
     * final scoring select. */
-  def qualityOracleSql(labelSql: String, d: Int = 64, iters: Int = 16,
-      lr: Double = 0.125): String =
-    qualityOracleCtes(labelSql, d, iters, lr) + s"""
+  def qualityOracleSql(labelSql: String): String =
+    qualityOracleCtes(labelSql) + s"""
        |SELECT doc, y, score,
        |  CASE WHEN score > 0.0 THEN 1 ELSE 0 END AS pred
        |FROM scored ORDER BY doc""".stripMargin
@@ -274,9 +281,8 @@ object QualityModel {
   }
 
   /** DuckDB replay of [[quality]] + [[calibrationBins]]. */
-  def calibrationOracleSql(labelSql: String, d: Int = 64, iters: Int = 16,
-      lr: Double = 0.125): String =
-    qualityOracleCtes(labelSql, d, iters, lr) + s"""
+  def calibrationOracleSql(labelSql: String): String =
+    qualityOracleCtes(labelSql) + s"""
        |SELECT bin, n_docs, n_pos, mean_prob, frac_pos,
        |  round(abs(mean_prob - frac_pos), 6) AS gap
        |FROM (
@@ -302,8 +308,8 @@ object QualityModel {
     * ratio — numerator/denominator are exact BIGINT products, the
     * division is one correctly-rounded IEEE op), a per-doc importance
     * score Σ_j c_j·λ_j in exact DECIMAL arithmetic, and the keep
-    * decision = top `keepBp`/10000 of docs by (score desc, doc). Emits
-    * (doc, score, rank, selected).
+    * decision = top [[DsirKeepBp]]/10000 of docs by (score desc, doc).
+    * Emits (doc, score, rank, selected).
     *
     * Scale: two bucket-mass aggregates over the SAME (doc, bucket)
     * frame (one shuffle), a d-row broadcast, one per-doc exact decimal
@@ -340,7 +346,7 @@ object QualityModel {
   }
 
   def dsirSample(df: DataFrame, idCol: String, textCol: String,
-      targetPred: Column, d: Int = 128, keepBp: Long = 2000L): DataFrame = {
+      targetPred: Column): DataFrame = {
     val spark = df.sparkSession
     // target membership is a row-local doc predicate, so it rides the
     // tokenize + bow aggregate for free — the target slice is a big
@@ -351,12 +357,13 @@ object QualityModel {
     val bow = Pin.pin(df.select(col(idCol).as("doc"),
         targetPred.cast("boolean").as("tgt"),
         explode(TextAnalysis.tokens(col(textCol))).as("_tok"))
-      .groupBy(col("doc"), col("tgt"), tokenBucket(col("_tok"), d).as("bucket"))
+      .groupBy(col("doc"), col("tgt"),
+        tokenBucket(col("_tok"), DsirDim).as("bucket"))
       .agg(count(lit(1)).as("c")))
     val masses = bow.groupBy(col("bucket"))
       .agg(sum(col("c")).as("cr"),
         sum(when(col("tgt"), col("c")).otherwise(lit(0L))).as("ct"))
-    val buckets = spark.range(0, d).select(col("id").as("bucket"))
+    val buckets = spark.range(0, DsirDim).select(col("id").as("bucket"))
       .join(masses, Seq("bucket"), "left")
       .select(col("bucket"),
         coalesce(col("cr"), lit(0L)).as("cr"),
@@ -364,14 +371,14 @@ object QualityModel {
     val tot = masses.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"))
     val lam = buckets.crossJoin(broadcast(tot))
       .select(col("bucket"),
-        dsirLambda(col("ct"), col("cr"), col("nt"), col("nr"), d)
+        dsirLambda(col("ct"), col("cr"), col("nt"), col("nr"), DsirDim)
           .as("lambda"))
     val scored = bow.join(broadcast(lam), Seq("bucket"))
       .groupBy(col("doc"))
       .agg(sum(col("c").cast("decimal(12,0)") * col("lambda")).as("_s"))
       .select(col("doc"), col("_s").cast("double").as("score"))
     val n = df.count()
-    val keepN = n * keepBp / 10000L
+    val keepN = n * DsirKeepBp / 10000L
     // global rank via range-partition + per-partition offsets — an
     // unpartitioned row_number() window collapses the scored corpus
     // into ONE task (the classic scale-killer [[Ranks]] exists for);
@@ -383,10 +390,9 @@ object QualityModel {
 
   /** DuckDB replay of [[dsirSample]] (target predicate supplied as SQL
     * over `documents`). */
-  def dsirOracleSql(targetPredSql: String, d: Int = 128,
-      keepBp: Long = 2000L): String =
+  def dsirOracleSql(targetPredSql: String): String =
     s"""WITH f AS MATERIALIZED (
-       |  SELECT doc, ('0x' || substr(md5(tok), 1, 15))::BIGINT % $d
+       |  SELECT doc, ('0x' || substr(md5(tok), 1, 15))::BIGINT % $DsirDim
        |      AS bucket, CAST(COUNT(*) AS BIGINT) AS c
        |  FROM (SELECT doc_id AS doc,
        |          unnest(regexp_extract_all(text, '\\S+')) AS tok
@@ -399,11 +405,11 @@ object QualityModel {
        |tot AS (SELECT (SELECT SUM(c) FROM f) AS nr,
        |  (SELECT SUM(f.c) FROM f JOIN tdoc USING (doc)) AS nt),
        |lam AS (SELECT b.bucket,
-       |    CAST(round(ln(CAST((COALESCE(tgt.ct, 0) + 1) * (tot.nr + $d)
+       |    CAST(round(ln(CAST((COALESCE(tgt.ct, 0) + 1) * (tot.nr + $DsirDim)
        |          AS DOUBLE)
-       |        / CAST((tot.nt + $d) * (COALESCE(raw.cr, 0) + 1)
+       |        / CAST((tot.nt + $DsirDim) * (COALESCE(raw.cr, 0) + 1)
        |          AS DOUBLE)), 6) AS DECIMAL(18,6)) AS lambda
-       |  FROM (SELECT unnest(generate_series(0, ${d - 1}))::BIGINT
+       |  FROM (SELECT unnest(generate_series(0, ${DsirDim - 1}))::BIGINT
        |          AS bucket) b
        |  LEFT JOIN raw ON b.bucket = raw.bucket
        |  LEFT JOIN tgt ON b.bucket = tgt.bucket, tot),
@@ -411,7 +417,7 @@ object QualityModel {
        |    CAST(SUM(CAST(f.c AS DECIMAL(12,0)) * lam.lambda) AS DOUBLE)
        |      AS score
        |  FROM f JOIN lam USING (bucket) GROUP BY 1),
-       |kn AS (SELECT COUNT(*) * $keepBp // 10000 AS k FROM documents)
+       |kn AS (SELECT COUNT(*) * $DsirKeepBp // 10000 AS k FROM documents)
        |SELECT doc, score,
        |  CAST(row_number() OVER (ORDER BY score DESC, doc) AS BIGINT)
        |    AS rank,

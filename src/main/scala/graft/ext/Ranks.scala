@@ -228,12 +228,12 @@ object Ranks {
     * comparisons are null → filters drop everything, the
     * degrade-to-empty contract. */
   def orderStatCut(df: DataFrame, value: Column, tie: Column,
-      t: Int, q: Int, nParts: Int = 0): DataFrame = {
+      t: Int, q: Int): DataFrame = {
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 6)
     val nF = df.agg(count(lit(1)).as("_n"))
     val ranked = globalRowNumber(
       df.select(value.as("_v"), tie.as("_tb")),
-      Seq(col("_v"), col("_tb")), nParts, out = "_rn")
+      Seq(col("_v"), col("_tb")), out = "_rn")
     val loIdx = floor(lit(t) * (col("_n") - 1) / q) + 1
     val hiIdx = least(loIdx + 1, col("_n"))
     ranked.crossJoin(broadcast(nF))

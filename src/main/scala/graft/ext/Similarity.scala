@@ -14,6 +14,13 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** Decimal places of every emitted cosine (engine and oracle agree). */
+  private[graft] val RoundScale = 6
+  /** k-means rounds an IVF index trains its centroids with. */
+  private[graft] val IvfIters = 3
+  /** Hash blocks [[topPairs]] splits the all-pairs join into. */
+  private val PairBlocks = 8
+
   /** Sequential dot product of two double arrays. Backed by the native
     * codegen'd [[graft.functions.DotProduct]] expression (same
     * left-to-right IEEE order as the HOF fold below, ~20× faster). */
@@ -182,7 +189,7 @@ object Similarity {
     * over the corpus with no shuffle except the final per-query top-k,
     * which `rank <= k` reduces to k rows per query before the sort. */
   def cosineTopK(candidates: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, roundScale: Int = 6): DataFrame = {
+      vecCol: String, k: Int, roundScale: Int = RoundScale): DataFrame = {
     // norms once per vector (not per pair); dot/(nq*nc) is the identical
     // IEEE op sequence to cosine(q, c), just with the norms hoisted.
     // cache() forces a materialization boundary — otherwise CollapseProject
@@ -262,20 +269,20 @@ object Similarity {
     * the shape that scales out. Cosine is symmetric bit-exactly (products
     * commute, summation order equal), so canonicalizing id order after the
     * join does not change values. */
-  def topPairs(df: DataFrame, idCol: String, vecCol: String, topN: Int,
-      roundScale: Int = 6, blocks: Int = 8): DataFrame = {
+  def topPairs(df: DataFrame, idCol: String, vecCol: String,
+      topN: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     // cache: materialization boundary so per-vector norms aren't collapsed
     // into the per-pair projection
     val d = asDouble(df, vecCol).withColumn("_n", norm(col(vecCol))).cache()
     val blockPairs = broadcast(
-      (for { i <- 0 until blocks; j <- i until blocks } yield (i, j))
+      (for { i <- 0 until PairBlocks; j <- i until PairBlocks } yield (i, j))
         .toDF("_ba", "_bb"))
     val a = d.select(col(idCol).as("id_a"), col(vecCol).as("va"), col("_n").as("_na"))
-      .withColumn("_ba", pmod(xxhash64(col("id_a")), lit(blocks.toLong)).cast("int"))
+      .withColumn("_ba", pmod(xxhash64(col("id_a")), lit(PairBlocks.toLong)).cast("int"))
     val b = d.select(col(idCol).as("id_b"), col(vecCol).as("vb"), col("_n").as("_nb"))
-      .withColumn("_bb", pmod(xxhash64(col("id_b")), lit(blocks.toLong)).cast("int"))
+      .withColumn("_bb", pmod(xxhash64(col("id_b")), lit(PairBlocks.toLong)).cast("int"))
     a.join(blockPairs, Seq("_ba"))
       .join(b, Seq("_bb"))
       .where(col("_ba") < col("_bb") || col("id_a") < col("id_b"))
@@ -283,7 +290,7 @@ object Similarity {
         least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"),
         round(dot(col("va"), col("vb")) / (col("_na") * col("_nb")),
-          roundScale).as("cosine"))
+          RoundScale).as("cosine"))
       .orderBy(col("cosine").desc, col("id_a"), col("id_b"))
       .limit(topN)
   }
@@ -313,9 +320,8 @@ object Similarity {
     * quadratic; above a duplicate-like threshold this path is the one
     * that survives 100×. */
   def topPairsLsh(df: DataFrame, idCol: String, vecCol: String, topN: Int,
-      minCosine: Double, bits: Int = 16, bands: Int = 32,
-      roundScale: Int = 6): DataFrame =
-    lshBucketedPairs(df, idCol, vecCol, minCosine, bits, bands, roundScale)
+      minCosine: Double, bits: Int = 16, bands: Int = 32): DataFrame =
+    lshBucketedPairs(df, idCol, vecCol, minCosine, bits, bands)
       .orderBy(col("cosine").desc, col("id_a"), col("id_b"))
       .limit(topN)
 
@@ -330,8 +336,7 @@ object Similarity {
     * colliding pairs; multi-band duplicates collapse in the final
     * distinct. */
   def lshBucketedPairs(df: DataFrame, idCol: String, vecCol: String,
-      minCosine: Double, bits: Int = 12, bands: Int = 8,
-      roundScale: Int = 6): DataFrame = {
+      minCosine: Double, bits: Int = 12, bands: Int = 8): DataFrame = {
     val d = asDouble(df, vecCol).withColumn("_n", norm(col(vecCol)))
     val sigs = d.select(col(idCol), col(vecCol), col("_n"),
         posexplode(array((0 until bands).map(b =>
@@ -343,7 +348,7 @@ object Similarity {
           col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
         round(dot(col(s"a.$vecCol"), col(s"b.$vecCol")) /
-          (col("a._n") * col("b._n")), roundScale).as("cosine"))
+          (col("a._n") * col("b._n")), RoundScale).as("cosine"))
       .where(col("cosine") >= minCosine)
       .distinct()
   }
@@ -462,10 +467,9 @@ object Similarity {
     * top-k. */
   def ivfTopKLearned(candidates: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nLists: Int = 16, nProbe: Int = 4,
-      iters: Int = 3, roundScale: Int = 6,
       precomputedCents: Option[Array[Array[Double]]] = None): DataFrame = {
     val cents = precomputedCents.getOrElse(
-      learnCentroidArrays(candidates, idCol, vecCol, nLists, iters))
+      learnCentroidArrays(candidates, idCol, vecCol, nLists, IvfIters))
     val c = asDouble(candidates, vecCol)
       .withColumn("_cn", norm(col(vecCol)))
       .withColumn("list", nearestList(col(vecCol), cents))
@@ -477,7 +481,7 @@ object Similarity {
       .where(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol).as("candidate_id"),
         round(dot(col("qvec"), col(vecCol)) / (col("_qn") * col("_cn")),
-          roundScale).as("cosine"))
+          RoundScale).as("cosine"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("candidate_id"))
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
@@ -564,8 +568,7 @@ object Similarity {
     * quality — centroids affect only how much phase 2 scans. */
   def ivfTopKExact(candidates: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int, cents: Array[Array[Double]],
-      precomputedRadii: Option[Map[Int, Double]] = None,
-      roundScale: Int = 6): DataFrame = {
+      precomputedRadii: Option[Map[Int, Double]] = None): DataFrame = {
     val radii = precomputedRadii.getOrElse(
       listRadii(candidates, vecCol, cents))
     val anchors = unitAnchors(cents)
@@ -582,7 +585,7 @@ object Similarity {
       .where(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol).as("candidate_id"),
         round(dot(col("qvec"), col(vecCol)) / (col("_qn") * col("_cn")),
-          roundScale).as("cosine"))
+          RoundScale).as("cosine"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("candidate_id"))
     // phase 1: the ordinary probe. Only its top-k survives into the
@@ -629,7 +632,7 @@ object Similarity {
     * pruning), i.e. ~nProbe/nLists of the BYTES on disk, not just of the
     * in-memory comparisons. */
   def buildIvfIndex(candidates: DataFrame, idCol: String, vecCol: String,
-      path: String, nLists: Int = 16, iters: Int = 3): Unit = {
+      path: String, nLists: Int = 16, iters: Int = IvfIters): Unit = {
     val spark = candidates.sparkSession
     val cents = learnCentroidArrays(candidates, idCol, vecCol, nLists, iters)
     writeIvfCorpus(asDouble(candidates, vecCol)
@@ -833,7 +836,7 @@ object Similarity {
     * which drift had degraded. */
   def ivfRetrainDrifted(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String, vecCol: String, bound: Double = 1.5,
-      iters: Int = 3): IvfRetrainStats = {
+      iters: Int = IvfIters): IvfRetrainStats = {
     val stats = ivfListStats(spark, path, vecCol)
     val nLists = loadIvfCentroids(spark, path).length
     val total = stats.map(_._2).sum
@@ -917,7 +920,7 @@ object Similarity {
     * results for identical centroids. */
   def ivfProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int = 4, roundScale: Int = 6): DataFrame = {
+      nProbe: Int = 4, roundScale: Int = RoundScale): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     import scala.jdk.CollectionConverters._
@@ -963,7 +966,7 @@ object Similarity {
     * Neighbor Search", TPAMI 2011 (public algorithm). */
   def buildIvfPqIndex(candidates: DataFrame, idCol: String, vecCol: String,
       path: String, nLists: Int = 16, m: Int = 8, pqK: Int = 256,
-      iters: Int = 3): Unit = {
+      iters: Int = IvfIters): Unit = {
     val spark = candidates.sparkSession
     val d = asDouble(candidates, vecCol).cache()
     try {
@@ -1084,7 +1087,7 @@ object Similarity {
     * a given index. */
   def ivfPqProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int = 4, roundScale: Int = 6,
+      nProbe: Int = 4,
       precomputedLists: Option[Seq[Int]] = None): DataFrame = {
     val cents = loadIvfCentroids(spark, path)
     val codebooks = loadPqCodebooks(spark, path)
@@ -1105,7 +1108,7 @@ object Similarity {
       .join(broadcast(qProbes), Seq("list"))
       .where(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol).as("candidate_id"),
-        round(adc / (col("_qn") * col("_rn")), roundScale).as("cosine"))
+        round(adc / (col("_qn") * col("_rn")), RoundScale).as("cosine"))
     val win = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("candidate_id"))
     scored.withColumn("rank", row_number().over(win)).where(col("rank") <= k)
@@ -1129,7 +1132,7 @@ object Similarity {
     * its exact rank. */
   def ivfPqProbeRerank(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int = 4, rerankR: Int = 40, roundScale: Int = 6): DataFrame = {
+      nProbe: Int = 4, rerankR: Int = 40): DataFrame = {
     recoverCorpus(spark, path)
     val cents = loadIvfCentroids(spark, path)
     // route ONCE per call: the ADC long-list probe and the refinement
@@ -1147,14 +1150,14 @@ object Similarity {
     // probe calls (bench reps, long-lived serving) cannot accumulate
     // executor storage.
     val shortlist = ivfPqProbeIndex(spark, path, queries, idCol, vecCol,
-        rerankR, nProbe, roundScale, Some(probedLists))
+        rerankR, nProbe, Some(probedLists))
       .select(col("query_id"), col("candidate_id"))
       .transform(Pin.pin)
     val q = asDouble(queries, vecCol)
       .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
         norm(col(vecCol)).as("_qn"))
     rescoreShortlist(spark, path, shortlist, q, idCol, vecCol,
-      probedLists, k, roundScale)
+      probedLists, k)
   }
 
   /** Exact-cosine rescore of a (query_id, candidate_id) short-list from
@@ -1172,7 +1175,7 @@ object Similarity {
     * path. */
   private def rescoreShortlist(spark: org.apache.spark.sql.SparkSession,
       path: String, shortlist: DataFrame, q: DataFrame, idCol: String,
-      vecCol: String, lists: Seq[Int], k: Int, roundScale: Int): DataFrame = {
+      vecCol: String, lists: Seq[Int], k: Int): DataFrame = {
     val idRows = shortlist.select(col("candidate_id")).distinct()
       .limit(1025).collect()
     val candIds =
@@ -1186,7 +1189,7 @@ object Similarity {
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("candidate_id"),
         round(dot(col("qvec"), col(vecCol)) / (col("_qn") * col("_n")),
-          roundScale).as("cosine"))
+          RoundScale).as("cosine"))
     val win = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("candidate_id"))
     rescored.withColumn("rank", row_number().over(win)).where(col("rank") <= k)
@@ -1210,7 +1213,7 @@ object Similarity {
     * data: the honest cost of exactness). */
   def ivfPqProbeExact(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int = 4, rerankR: Int = 40, roundScale: Int = 6): DataFrame = {
+      nProbe: Int = 4, rerankR: Int = 40): DataFrame = {
     recoverCorpus(spark, path)
     val cents = loadIvfCentroids(spark, path)
     val radii = loadRadiiOrDefault(spark, path, cents.length)
@@ -1222,7 +1225,7 @@ object Similarity {
     // candidate ids are also kept and unioned into the rescore set
     // below, so exactness never rests solely on the per-point bound.
     val p1 = ivfPqProbeRerank(spark, path, queries, idCol, vecCol, k,
-        nProbe, rerankR, roundScale)
+        nProbe, rerankR)
       .select(col("query_id"), col("candidate_id"), col("cosine"))
       .transform(Pin.pin)
     val kth = p1.groupBy(col("query_id"))
@@ -1273,6 +1276,6 @@ object Similarity {
     // stage 3: exact rescore of the admitted set — contains every true
     // top-k member by the bound argument, so the window IS brute force
     rescoreShortlist(spark, path, admitted, qn, idCol, vecCol,
-      scanLists, k, roundScale)
+      scanLists, k)
   }
 }

@@ -11,6 +11,15 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
+  /** Hottest types the NLL scorers join by broadcast (skew-split head). */
+  private val HeadTypes = 4096
+  /** Trigram buckets of the trained language-ID model and its oracle. */
+  private[graft] val LangIdDim = 256
+  /** The Kneser–Ney absolute discount of [[kn3Nll]] and its oracle. */
+  private[graft] val KnDiscount = 0.75
+  /** `percentile_approx` accuracy of [[nllCutsApprox]]'s sketch. */
+  private val SketchAccuracy = 1000
+
   /** Whitespace tokens. */
   def tokens(c: Column): Column = split(c, " ")
 
@@ -89,7 +98,8 @@ object TextAnalysis {
     * trigram frame would be persisted once instead of recomputed for
     * the two aggregates. */
   def langIdTrained(df: DataFrame, idCol: String, textCol: String,
-      langCol: String, d: Int = 256): DataFrame = {
+      langCol: String): DataFrame = {
+    val d = LangIdDim
     val dec6 = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 6)
     val text = col(textCol)
     // char trigrams, 1-based, defensive about len<3 (sequence(1,0) is
@@ -521,15 +531,15 @@ object TextAnalysis {
     * corpus total N broadcasts as a single row. The tf ⋈ freq join is
     * SKEW-SPLIT: stopwords are the classic hot keys of a term-keyed
     * shuffle (a handful of terms own a double-digit share of all tf
-    * rows), so the `headTerms` hottest terms join via BROADCAST (tiny
+    * rows), so the [[HeadTypes]] hottest terms join via BROADCAST (tiny
     * frame, no shuffle of their tf mass at all) and only the long tail —
     * near-uniform by construction once the head is gone — takes the
     * equi-join shuffle. The full vocab is never broadcast (at 100 TB the
     * vocab is itself a big frame); the identical tf/freq subtrees across
     * the two branches collapse via exchange reuse, so the split costs
-    * one ~`headTerms`-row broadcast. */
-  def unigramNll(df: DataFrame, idCol: String, textCol: String,
-      headTerms: Int = 4096): DataFrame = {
+    * one ~[[HeadTypes]]-row broadcast. */
+  def unigramNll(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     // tf feeds THREE consumers (freq, hot, tail) and freq three more
     // (n, head, tail-join): pinned (r16), one corpus tokenize pass and
     // one vocab aggregate run ONCE instead of re-expanding per branch —
@@ -542,7 +552,7 @@ object TextAnalysis {
     val freq = tf.groupBy(col("term")).agg(sum(col("tf")).as("f"))
     val n = freq.agg(sum(col("f")).as("n"))
     // deterministic head set: ties on f broken by term
-    val head = freq.orderBy(col("f").desc, col("term")).limit(headTerms)
+    val head = freq.orderBy(col("f").desc, col("term")).limit(HeadTypes)
     val hot = tf.join(broadcast(head), Seq("term"))
     val tail = tf.join(broadcast(head.select(col("term"))), Seq("term"), "left_anti")
       .join(freq, Seq("term"))
@@ -577,10 +587,10 @@ object TextAnalysis {
     * aggregate (no second corpus pass). The type-level c2 ⋈ c1 join is
     * bounded by DISTINCT bigram types, not token mass; the token-mass
     * join (tf ⋈ scored) is skew-split exactly like unigramNll: the
-    * `headGrams` hottest bigrams broadcast, the long tail — near-uniform
+    * [[HeadTypes]] hottest bigrams broadcast, the long tail — near-uniform
     * once the head is gone — takes the equi-join shuffle. */
-  def bigramNll(df: DataFrame, idCol: String, textCol: String,
-      headGrams: Int = 4096): DataFrame = {
+  def bigramNll(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
     val dec6 = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 6)
     // tf (3 consumers) and scored (2) pinned — same rationale as
     // [[unigramNll]] (r16): one gram pass, one type-score build
@@ -598,7 +608,7 @@ object TextAnalysis {
     val c1 = tf.groupBy(col("prev")).agg(sum(col("tf")).as("c1"))
     val scored = Pin.pin(
       c2.join(c1, "prev").select(col("big"), col("c1"), col("c2")))
-    val head = scored.orderBy(col("c2").desc, col("big")).limit(headGrams)
+    val head = scored.orderBy(col("c2").desc, col("big")).limit(HeadTypes)
     val hot = tf.join(broadcast(head), Seq("big"))
     val tail = tf.join(broadcast(head.select(col("big"))), Seq("big"), "left_anti")
       .join(scored, Seq("big"))
@@ -627,9 +637,9 @@ object TextAnalysis {
     * corpus' DISTINCT (prev, big, cur) frame left-joins the LM count
     * frames, so hot tokens are single rows there, no mass skew; the one
     * token-mass join (tf ⋈ per-big cost) is skew-split with the same
-    * `headGrams` broadcast-head as unigramNll/bigramNll. */
+    * [[HeadTypes]] broadcast-head as unigramNll/bigramNll. */
   def lmScore(df: DataFrame, idCol: String, textCol: String,
-      lmPred: Column, headGrams: Int = 4096): DataFrame = {
+      lmPred: Column): DataFrame = {
     val dec6 = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 6)
     val base = df.select(col(idCol).as("doc"), lmPred.as("_lm"),
       tokens(col(textCol)).as("_tk"))
@@ -664,7 +674,7 @@ object TextAnalysis {
             (lit(0.4) * (coalesce(col("u"), lit(0L)) + 1)))).as("cost"),
         col("c2").isNull.cast("long").as("oov")))
     val mass = tf.groupBy(col("big")).agg(sum(col("tf")).as("_m"))
-    val head = mass.orderBy(col("_m").desc, col("big")).limit(headGrams)
+    val head = mass.orderBy(col("_m").desc, col("big")).limit(HeadTypes)
       .select(col("big")).join(cost, "big")
     val hot = tf.join(broadcast(head), Seq("big"))
     val tail = tf.join(broadcast(head.select(col("big"))), Seq("big"), "left_anti")
@@ -763,7 +773,7 @@ object TextAnalysis {
     * violating its bound is a red correctness gate, not a silent
     * quality drift. Exact picks ride [[Ranks.stratifiedRowNumber]]. */
   def nllCutsApprox(df: DataFrame, idCol: String, textCol: String,
-      strataCol: String, accuracy: Int = 1000): DataFrame = {
+      strataCol: String): DataFrame = {
     val nll = unigramNll(df, idCol, textCol)
       .join(df.select(col(idCol).as("doc"), col(strataCol)), "doc")
       .transform(Pin.pin)
@@ -772,9 +782,9 @@ object TextAnalysis {
       Seq(strataCol), Seq(col("nll"), col("doc")), out = "_rn")
     val ns = nll.groupBy(col(strataCol)).agg(count(lit(1)).as("n"),
       percentile_approx(col("nll"),
-        array(lit(1.0 / 3), lit(2.0 / 3)), lit(accuracy)).as("_apx"))
+        array(lit(1.0 / 3), lit(2.0 / 3)), lit(SketchAccuracy)).as("_apx"))
     def tgt(t: Int) = floor(lit(t) * (col("n") - 1) / 3) + 1
-    val slack = ceil(col("n").cast("double") / accuracy) + 2
+    val slack = ceil(col("n").cast("double") / SketchAccuracy) + 2
     def loB(t: Int) = greatest(lit(1L), (tgt(t) - slack).cast("long"))
     def hiB(t: Int) = least(col("n"), (tgt(t) + slack).cast("long"))
     def pick(at: Column) = min(when(col("_rn") === at, col("nll")))
@@ -972,9 +982,8 @@ object TextAnalysis {
     * pre-aggregate shuffle); every KN statistic lives on the TYPE level
     * (distinct trigrams), so hot grams are single rows there; the one
     * token-mass join (per-doc tf ⋈ per-type cost) is skew-split with
-    * the same broadcast top-`headGrams` head as [[bigramNll]]. */
-  def kn3Nll(df: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75, headGrams: Int = 4096): DataFrame = {
+    * the same broadcast top-[[HeadTypes]] head as [[bigramNll]]. */
+  def kn3Nll(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val dec6 = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 6)
     // tf (3 consumers), types (5), lowStats (4), scored (2) pinned
     // (r16): the un-pinned logical tree re-embedded the corpus
@@ -1012,7 +1021,7 @@ object TextAnalysis {
       .agg(sum(col("n1low")).as("nmid"), count(lit(1)).as("n1mid"))
     val curStats = lowStats.groupBy(col("cur")).agg(count(lit(1)).as("n1cur"))
     val nTypes = lowStats.select(count(lit(1)).as("ntypes"))
-    val d = lit(discount)
+    val d = lit(KnDiscount)
     // P evaluated with the exact operation order the oracle replays
     val p3 =
       greatest(col("c3").cast("double") - d, lit(0.0)) /
@@ -1029,7 +1038,7 @@ object TextAnalysis {
       .join(curStats, "cur")
       .crossJoin(broadcast(nTypes))
       .select(col("tri"), col("c3"), round(-log(p3), 6).as("cost")))
-    val head = scored.orderBy(col("c3").desc, col("tri")).limit(headGrams)
+    val head = scored.orderBy(col("c3").desc, col("tri")).limit(HeadTypes)
       .select(col("tri"), col("cost"))
     val hot = tf.join(broadcast(head), Seq("tri"))
     val tail = tf.join(broadcast(head.select(col("tri"))), Seq("tri"), "left_anti")

@@ -37,12 +37,12 @@ import org.apache.spark.sql.functions._
   *    vocab-bounded equi-joins per level, nothing quadratic;
   *  - E-step: explode the winning paths, sum type frequencies per
   *    piece (exact integer expected counts — hard-EM's "expectation");
-  *    M-step: re-derive micro-nat costs from those counts. `rounds`
+  *    M-step: re-derive micro-nat costs from those counts. [[Rounds]]
   *    EM rounds, fixed — both engines run exactly the same number;
-  *  - words longer than `d` (the DP depth) are excluded from training
-  *    and tokenize by the documented character fallback (ntok = length)
-  *    — deterministic on both engines; `d` should cover the corpus
-  *    (max word length here is 8; d = 12 leaves headroom).
+  *  - words longer than [[Depth]] (the DP depth) are excluded from
+  *    training and tokenize by the documented character fallback
+  *    (ntok = length) — deterministic on both engines; the depth should
+  *    cover the corpus (max word length here is 8; 12 leaves headroom).
   *
   * Apply shape (the production path): the final cost table segments the
   * word DICTIONARY once (type-level, like [[Bpe.tokenCountsTyped]]),
@@ -53,6 +53,12 @@ import org.apache.spark.sql.functions._
 object Unigram {
 
   private val EncW = 12 // lpad width of the cost prefix in `enc`
+
+  /** Longest seed piece, Viterbi DP depth (longest word segmented) and
+    * EM rounds: read by [[train]], [[typedDict]] and the oracle alike. */
+  private[graft] val MaxPiece = 4
+  private[graft] val Depth = 12
+  private[graft] val Rounds = 2
 
   /** Word-type frame (word, freq) over whitespace tokens. */
   private def wordTypes(df: DataFrame, textCol: String): DataFrame =
@@ -196,16 +202,15 @@ object Unigram {
     * preserved — sorted by piece for stability). The cost table is
     * vocab-sized (k rows), so each M-step collects it and the next
     * E-step runs the native row-local DP — 2 jobs per EM round. */
-  def train(df: DataFrame, textCol: String, k: Int, l: Int = 4,
-      d: Int = 12, rounds: Int = 2): Seq[(String, Long)] = {
-    require(k > 0 && l >= 1 && d >= l && rounds >= 1, "bad unigram params")
+  def train(df: DataFrame, textCol: String, k: Int): Seq[(String, Long)] = {
+    require(k > 0, "vocab size k must be positive")
     val t0 = Pin.pin(wordTypes(df, textCol)
-      .where(length(col("word")) <= d))
-    // seed: all substrings of length 1..l, weighted by type freq
+      .where(length(col("word")) <= Depth))
+    // seed: all substrings of length 1..MaxPiece, weighted by type freq
     val subs = t0.select(col("freq"), explode(flatten(transform(
         sequence(lit(1), length(col("word"))), i =>
           transform(sequence(lit(1),
-              least(lit(l), length(col("word")) - i + lit(1))),
+              least(lit(MaxPiece), length(col("word")) - i + lit(1))),
             n => col("word").substr(i, n))))).as("piece"))
       .groupBy(col("piece")).agg(sum(col("freq")).cast("long").as("cnt"))
     val chars = subs.where(length(col("piece")) === 1)
@@ -218,7 +223,7 @@ object Unigram {
       v.orderBy(col("piece")).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
     var vSeq = collected(costs(pieces, pieces))
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to Rounds) {
       // above the broadcast threshold, own the round's broadcast and
       // destroy it once the M-step collect has consumed the E-step —
       // the table changes every round so it can never be reused, and
@@ -228,8 +233,8 @@ object Unigram {
         Some(t0.sparkSession.sparkContext
           .broadcast(graft.functions.UnigramHelpers.compile(vSeq)))
       else None
-      val segs = b.map(viterbiPathsNativeBcast(t0, _, d))
-        .getOrElse(viterbiPathsNative(t0, vSeq, d))
+      val segs = b.map(viterbiPathsNativeBcast(t0, _, Depth))
+        .getOrElse(viterbiPathsNative(t0, vSeq, Depth))
       val cnts = segs
         .select(col("freq"), explode(split(col("path"), " ")).as("piece"))
         .groupBy(col("piece")).agg(sum(col("freq")).cast("long").as("cnt"))
@@ -240,16 +245,16 @@ object Unigram {
   }
 
   /** Word → token-count dictionary under a trained cost table: Viterbi
-    * once per dictionary word; words longer than d take the documented
-    * character fallback (ntok = length). Train-once / apply-many
-    * callers should build this ONCE per corpus and pin it — the DP
-    * apply is the expensive half of token counting. */
+    * once per dictionary word; words longer than [[Depth]] take the
+    * documented character fallback (ntok = length). Train-once /
+    * apply-many callers should build this ONCE per corpus and pin it —
+    * the DP apply is the expensive half of token counting. */
   def typedDict(df: DataFrame, textCol: String,
-      vocab: Seq[(String, Long)], l: Int = 4, d: Int = 12): DataFrame = {
+      vocab: Seq[(String, Long)]): DataFrame = {
     val types = wordTypes(df, textCol)
-    val short = viterbiPathsNative(types, vocab, d)
+    val short = viterbiPathsNative(types, vocab, Depth)
       .select(col("word"), size(split(col("path"), " ")).as("ntok"))
-    val long = types.where(length(col("word")) > d)
+    val long = types.where(length(col("word")) > Depth)
       .select(col("word"), length(col("word")).cast("int").as("ntok"))
     short.unionByName(long)
   }
@@ -288,13 +293,12 @@ object Unigram {
 
   /** One Viterbi pass (levels + seg CTE) under cost table `vTab`,
     * emitting CTEs named `lvl{tag}_j` and `seg{tag}`. */
-  private def dpSql(sb: StringBuilder, tag: String, vTab: String,
-      l: Int, d: Int): Unit = {
+  private def dpSql(sb: StringBuilder, tag: String, vTab: String): Unit = {
     sb.append(s""",
       |lvl${tag}_0 AS MATERIALIZED (SELECT word, freq, repeat('0', $EncW)
       |  AS enc FROM ut0)""".stripMargin)
-    for (j <- 1 to d) {
-      val branches = (1 to math.min(l, j)).map { kk =>
+    for (j <- 1 to Depth) {
+      val branches = (1 to math.min(MaxPiece, j)).map { kk =>
         val i = j - kk
         // note: no generated line may START with "||" — this block is
         // embedded into an outer stripMargin which would eat the first
@@ -313,7 +317,7 @@ object Unigram {
         |  $branches
         |  ) GROUP BY 1, 2)""".stripMargin)
     }
-    val segs = (1 to d).map(j =>
+    val segs = (1 to Depth).map(j =>
       s"""SELECT word, freq, trim(substring(enc, ${EncW + 1})) AS path
          |  FROM lvl${tag}_$j WHERE len(word) = $j""".stripMargin)
       .mkString("\n  UNION ALL\n  ")
@@ -324,24 +328,21 @@ object Unigram {
 
   /** The full training-replay CTE chain, ending in a `uni(doc, n_words,
     * n_tokens)` CTE. */
-  def oracleCountsCte(k: Int, l: Int = 4, d: Int = 12,
-      rounds: Int = 2): String =
-    "WITH " + oracleCteBody(k, l, d, rounds)
+  def oracleCountsCte(k: Int): String = "WITH " + oracleCteBody(k)
 
   /** The CTE chain WITHOUT the leading WITH — append to another
     * oracle's CTE list (u-prefixed names avoid collision with the BPE
     * replay's w0/r·/p·/b·/bpe). */
-  def oracleCteBody(k: Int, l: Int = 4, d: Int = 12,
-      rounds: Int = 2): String = {
+  def oracleCteBody(k: Int): String = {
     val sb = new StringBuilder
     sb.append(s"""uw0 AS MATERIALIZED (
       |  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM (
       |    SELECT unnest(regexp_extract_all(text, '\\S+')) AS word
       |    FROM documents) GROUP BY word),
-      |ut0 AS MATERIALIZED (SELECT word, freq FROM uw0 WHERE len(word) <= $d),
+      |ut0 AS MATERIALIZED (SELECT word, freq FROM uw0 WHERE len(word) <= $Depth),
       |usub0 AS MATERIALIZED (SELECT piece, CAST(SUM(freq) AS BIGINT) AS cnt
       |  FROM (SELECT freq, unnest(flatten([[substring(word, i, n)
-      |      for n in generate_series(1, least($l, len(word) - i + 1))]
+      |      for n in generate_series(1, least($MaxPiece, len(word) - i + 1))]
       |      for i in generate_series(1, len(word))])) AS piece
       |    FROM ut0) GROUP BY 1),
       |uch0 AS MATERIALIZED (SELECT piece, cnt FROM usub0 WHERE len(piece) = 1),
@@ -353,8 +354,8 @@ object Unigram {
       |uv0 AS MATERIALIZED (SELECT piece,
       |  ${cmSql("cnt", "(SELECT SUM(cnt) FROM uvp)")} AS cm FROM uvp)"""
       .stripMargin)
-    for (r <- 1 to rounds) {
-      dpSql(sb, s"r$r", s"uv${r - 1}", l, d)
+    for (r <- 1 to Rounds) {
+      dpSql(sb, s"r$r", s"uv${r - 1}")
       sb.append(s""",
         |ucnt$r AS MATERIALIZED (SELECT piece, CAST(SUM(freq) AS BIGINT)
         |    AS cnt
@@ -364,13 +365,13 @@ object Unigram {
         |  ${cmSql(s"ucnt$r.cnt", s"(SELECT SUM(cnt) FROM ucnt$r)")} AS cm
         |  FROM uvp LEFT JOIN ucnt$r ON uvp.piece = ucnt$r.piece)""".stripMargin)
     }
-    dpSql(sb, "f", s"uv$rounds", l, d)
+    dpSql(sb, "f", s"uv$Rounds")
     sb.append(s""",
       |udict AS MATERIALIZED (
       |  SELECT word, CAST(len(string_split(path, ' ')) AS INT) AS ntok
       |  FROM segf
       |  UNION ALL
-      |  SELECT word, CAST(len(word) AS INT) FROM uw0 WHERE len(word) > $d),
+      |  SELECT word, CAST(len(word) AS INT) FROM uw0 WHERE len(word) > $Depth),
       |uocc AS MATERIALIZED (SELECT doc_id AS doc, word,
       |    CAST(COUNT(*) AS BIGINT) AS occ
       |  FROM (SELECT doc_id, unnest(regexp_extract_all(text, '\\S+'))
@@ -384,8 +385,8 @@ object Unigram {
   }
 
   /** Stand-alone oracle for the per-doc token-count query. */
-  def oracleSql(k: Int, l: Int = 4, d: Int = 12, rounds: Int = 2): String =
-    oracleCountsCte(k, l, d, rounds) + """
+  def oracleSql(k: Int): String =
+    oracleCountsCte(k) + """
       |SELECT doc, n_words, n_tokens AS uni_tokens
       |FROM uni ORDER BY doc""".stripMargin
 }

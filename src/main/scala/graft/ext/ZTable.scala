@@ -31,6 +31,15 @@ import org.apache.spark.sql.functions._
   * surface. */
 object ZTable {
 
+  /** The row-id column every clustered table carries. */
+  private val IdCol = "doc_id"
+  /** Lost log-slot races a commit rebases through before it rethrows. */
+  private val MaxRetries = 5
+  /** [[incrementalOptimizeOcc]]'s selections before a superseded optimize
+    * gives up, and the file-id gap between two attempts. */
+  private val MaxAttempts = 3
+  private val AttemptStride = 1000
+
   /** Bit-interleaved 16-bit Morton key over the b1/b2 bucket columns —
     * a pure function of (b1, b2), so a compaction job re-derives it
     * row-locally from data files without touching the source table. */
@@ -39,7 +48,7 @@ object ZTable {
       shiftright(col("b2"), i).bitwiseAND(lit(1L)) * lit(1L << (2 * i))
   }.reduce(_ + _)
 
-  /** Write `frame` (idCol, b1, b2 + a rank column) as real parquet
+  /** Write `frame` ([[IdCol]], b1, b2 + a rank column) as real parquet
     * under `out`, one data file per logical file id: file_id = offset +
     * (rank−1) div rpf with rpf = ceil(n/nFiles) (or `rpfOverride` when
     * ≥ 1 — the incremental-OPTIMIZE path sizes new files by the
@@ -57,8 +66,8 @@ object ZTable {
     * `_`-prefixed dirs, so manifests can live under the table root. */
   def writeFiles(frame: DataFrame, rankCol: String, nFiles: Int,
       offset: Int, out: String, mode: String = "overwrite",
-      rpfOverride: Long = -1L, idCol: String = "doc_id",
-      dynamicOverwrite: Boolean = false): DataFrame = {
+      rpfOverride: Long = -1L, dynamicOverwrite: Boolean = false)
+      : DataFrame = {
     val s = frame.sparkSession
     import s.implicits._
     val nF = frame.agg(count(lit(1)).as("_n"))
@@ -70,7 +79,7 @@ object ZTable {
     // could disagree on file assignment)
     val staged = Pin.pin(frame.crossJoin(broadcast(nF))
       .withColumn("_rpf", rpfCol)
-      .select(col(idCol), col("b1"), col("b2"),
+      .select(col(IdCol), col("b1"), col("b2"),
         (lit(offset) + expr(s"($rankCol - 1) div _rpf")).as("file_id"),
         col(rankCol).as("_ord")))
     // dynamicOverwrite: replace ONLY the file_id dirs this write
@@ -135,8 +144,7 @@ object ZTable {
     * written. */
   def incrementalOptimize(s: SparkSession, manifest: DataFrame,
       isAppended: Row => Boolean, tablePath: String, newOffset: Int,
-      rpf: Long = -1L, idCol: String = "doc_id")
-      : (DataFrame, Long, Long) = {
+      rpf: Long = -1L): (DataFrame, Long, Long) = {
     val man = manifest.collect()
     val app = man.filter(isAppended)
     require(app.nonEmpty, "no appended files to optimize")
@@ -152,12 +160,12 @@ object ZTable {
     // the only data read of the whole compaction: the rewrite set
     val rw = s.read
       .parquet(rewrite.map(_.getAs[String]("path")).sorted.toSeq: _*)
-      .select(col(idCol), col("b1"), col("b2"))
+      .select(col(IdCol), col("b1"), col("b2"))
       .withColumn("zkey", zkeyExpr)
     val stNew = writeFiles(
-      Ranks.globalRowNumber(rw, Seq(col("zkey"), col(idCol)), out = "_rk"),
+      Ranks.globalRowNumber(rw, Seq(col("zkey"), col(IdCol)), out = "_rk"),
       "_rk", nFiles = 64, offset = newOffset, out = tablePath,
-      mode = "append", rpfOverride = rpfG, idCol = idCol)
+      mode = "append", rpfOverride = rpfG)
     val keep = manifest.where(!col("file_id").isInCollection(rwIds))
     (keep.unionByName(stNew), rewrite.length.toLong,
       rewrite.map(_.getAs[Long]("n_rows")).sum)
@@ -288,7 +296,7 @@ object ZTable {
     * (enforced here; a clash means the id-allocation contract broke and
     * blind union would corrupt). Returns the committed version. */
   def commitAppend(s: SparkSession, root: String, readVersion: Long,
-      appended: DataFrame, maxRetries: Int = 5): Long = {
+      appended: DataFrame, maxRetries: Int = MaxRetries): Long = {
     val mine = appended.select(col("file_id")).collect()
       .map(_.getLong(0)).toSet
     var v = readVersion
@@ -323,7 +331,7 @@ object ZTable {
     * data files. Returns the committed version. */
   def commitOptimize(s: SparkSession, root: String, readVersion: Long,
       rewrittenIds: Set[Long], newRows: DataFrame,
-      box: (Long, Long, Long, Long), maxRetries: Int = 5): Long = {
+      box: (Long, Long, Long, Long)): Long = {
     val readIds = logRead(s, root, readVersion).collect()
       .map(_.getAs[Long]("file_id")).toSet
     var v = readVersion
@@ -351,7 +359,7 @@ object ZTable {
       catch {
         case c: ManifestConflict =>
           tries += 1
-          if (tries > maxRetries) throw c
+          if (tries > MaxRetries) throw c
           v = logLatest(s, root)
       }
     }
@@ -375,12 +383,12 @@ object ZTable {
     * rewrite, [[commitOptimize]]; on [[OptimizeSuperseded]] RE-SELECT
     * from the fresh latest (attempt files of the superseded try become
     * vacuum-reclaimable orphans) with the next attempt's file ids at
-    * `newOffset + attempt·attemptStride`. Returns (committed version,
-    * files rewritten, rows rewritten, aborts). */
+    * `newOffset + attempt·AttemptStride`, new files sized by the
+    * table's global rows-per-file. Returns (committed version, files
+    * rewritten, rows rewritten, aborts). */
   def incrementalOptimizeOcc(s: SparkSession, root: String,
-      tablePath: String, isAppended: Row => Boolean, newOffset: Int,
-      rpf: Long = -1L, idCol: String = "doc_id", maxAttempts: Int = 3,
-      attemptStride: Int = 1000): (Long, Long, Long, Long) = {
+      tablePath: String, isAppended: Row => Boolean,
+      newOffset: Int): (Long, Long, Long, Long) = {
     var attempt = 0
     while (true) {
       val v = logLatest(s, root)
@@ -388,17 +396,15 @@ object ZTable {
       val box = appendedBox(man, isAppended)
       val rewrite = pruneManifest(man, box._1, box._2, box._3, box._4)
       val rwIds = rewrite.map(_.getAs[Long]("file_id")).toSet
-      val rpfG =
-        if (rpf >= 1L) rpf
-        else (man.map(_.getAs[Long]("n_rows")).sum + 63L) / 64L
+      val rpfG = (man.map(_.getAs[Long]("n_rows")).sum + 63L) / 64L
       val rw = s.read
         .parquet(rewrite.map(_.getAs[String]("path")).sorted.toSeq: _*)
-        .select(col(idCol), col("b1"), col("b2"))
+        .select(col(IdCol), col("b1"), col("b2"))
         .withColumn("zkey", zkeyExpr)
       val stNew = writeFiles(
-        Ranks.globalRowNumber(rw, Seq(col("zkey"), col(idCol)), out = "_rk"),
-        "_rk", nFiles = 64, offset = newOffset + attempt * attemptStride,
-        out = tablePath, mode = "append", rpfOverride = rpfG, idCol = idCol)
+        Ranks.globalRowNumber(rw, Seq(col("zkey"), col(IdCol)), out = "_rk"),
+        "_rk", nFiles = 64, offset = newOffset + attempt * AttemptStride,
+        out = tablePath, mode = "append", rpfOverride = rpfG)
       try {
         val nv = commitOptimize(s, root, v, rwIds, stNew, box)
         return (nv, rewrite.length.toLong,
@@ -406,7 +412,7 @@ object ZTable {
       } catch {
         case e: OptimizeSuperseded =>
           attempt += 1
-          if (attempt >= maxAttempts) throw e
+          if (attempt >= MaxAttempts) throw e
       }
     }
     throw new IllegalStateException("unreachable")
@@ -461,8 +467,7 @@ object ZTable {
     * columns align via null-filled union. Returns (version holding the
     * txn, whether THIS call committed it). */
   def commitAppendTxn(s: SparkSession, root: String, txnApp: String,
-      txnV: Long, appended: DataFrame, maxRetries: Int = 5)
-      : (Long, Boolean) = {
+      txnV: Long, appended: DataFrame): (Long, Boolean) = {
     val stamped = appended
       .withColumn("txn_app", lit(txnApp))
       .withColumn("txn_v", lit(txnV))
@@ -485,7 +490,7 @@ object ZTable {
       catch {
         case c: ManifestConflict =>
           tries += 1
-          if (tries > maxRetries) throw c
+          if (tries > MaxRetries) throw c
           v = logLatest(s, root)
       }
     }
@@ -505,12 +510,11 @@ object ZTable {
     * THIS call committed it). */
   def appendBatchTxn(s: SparkSession, tablePath: String, root: String,
       txnApp: String, txnV: Long, ranked: DataFrame, rankCol: String,
-      nFiles: Int, offset: Int, idCol: String = "doc_id")
-      : (Long, Boolean) = {
+      nFiles: Int, offset: Int): (Long, Boolean) = {
     val v = logLatest(s, root)
     if (txnCommitted(s, root, v, txnApp, txnV)) return (v, false)
     val st = writeFiles(ranked, rankCol, nFiles, offset, tablePath,
-      idCol = idCol, dynamicOverwrite = true)
+      dynamicOverwrite = true)
     commitAppendTxn(s, root, txnApp, txnV, st)
   }
 

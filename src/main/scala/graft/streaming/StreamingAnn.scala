@@ -28,7 +28,7 @@ object StreamingAnn {
     * semantics as [[Similarity.ivfProbeIndex]]. */
   def ivfProbeStream(spark: SparkSession, queries: DataFrame,
       idCol: String, vecCol: String, indexPath: String, k: Int,
-      nProbe: Int = 4, roundScale: Int = 6): DataFrame = {
+      nProbe: Int = 4): DataFrame = {
     val cents = Similarity.loadIvfCentroids(spark, indexPath)
     val corpus = Similarity.readIvfCorpus(spark, indexPath)
     val qProbes = queries
@@ -41,7 +41,7 @@ object StreamingAnn {
       .where(corpus(idCol) =!= col("query_id"))
       .select(col("query_id"), corpus(idCol).as("candidate_id"),
         round(Similarity.dot(col("qvec"), corpus(vecCol)) /
-          (col("_qn") * corpus("_n")), roundScale).as("cosine"))
+          (col("_qn") * corpus("_n")), Similarity.RoundScale).as("cosine"))
     // per-query top-k WITHIN the micro-batch: sort+rank over a streaming
     // frame needs an aggregation surface — collect each query's scored
     // candidates and rank row-locally (bounded: candidates per query ≈
@@ -53,6 +53,7 @@ object StreamingAnn {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).as("rank"),
         col("col.candidate_id").as("candidate_id"),
-        round(lit(1.0) - col("col.negCos"), roundScale).as("cosine"))
+        round(lit(1.0) - col("col.negCos"), Similarity.RoundScale)
+          .as("cosine"))
   }
 }

@@ -58,6 +58,12 @@ class EngineSpec extends SparkSpec {
       ("B#1_RAW#1", 2, "lines")))
     // every requested series contributes its rows
     assert(frame.where(col("series_key") === "B#1_RAW#1").count() == 100)
+    // a reference-style import keeps its prediction shift in metadata
+    // only: displayed at index + freq · Σ step_distance (one 30 min step)
+    def firstTs(materializedShift: Boolean) =
+      ds.plotFrame(Seq("A#1_PREV-PRED#1"), 1800L, materializedShift)
+        .agg(min(col(Observations.TsCol))).head().getTimestamp(0).getTime
+    assert(firstTs(false) - firstTs(true) == 1800L * 1000L)
     // unknown keys are rejected like the signal-level operator
     intercept[NoSuchElementException] { ds.plotFrame(Seq("Z#1_RAW#1"), 60L) }
   }

@@ -400,7 +400,7 @@ class ExtSpec extends SparkSpec {
     // identical centroids (partitioning-independent training) => the
     // index probe must return exactly the in-memory learned search
     val mem = Similarity.ivfTopKLearned(emb, queries, "vec_id", "embedding",
-      k = 5, nLists = 16, nProbe = 4, iters = 3)
+      k = 5, nLists = 16, nProbe = 4)
     val cols = Seq("query_id", "rank", "candidate_id", "cosine")
     assert(probed.select(cols.map(col): _*).exceptAll(
       mem.select(cols.map(col): _*)).isEmpty)
@@ -1024,7 +1024,7 @@ class ExtSpec extends SparkSpec {
   test("learned-centroid IVF: exhaustive probing equals brute-force top-1; partial probing covers the corpus") {
     // probing every list == exact search
     val full = Similarity.ivfTopKLearned(emb, emb.where(col("vec_id") < 3),
-      "vec_id", "embedding", k = 1, nLists = 8, nProbe = 8, iters = 2)
+      "vec_id", "embedding", k = 1, nLists = 8, nProbe = 8)
       .select("query_id", "candidate_id").as[(Long, Long)].collect().toMap
     val exact = Similarity.cosineTopK(emb, emb.where(col("vec_id") < 3),
       "vec_id", "embedding", k = 1)
@@ -2142,7 +2142,8 @@ class ExtSpec extends SparkSpec {
         .orderBy(col("fill_key"), col("doc_id"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.currentRow)
-      docs.withColumn("fill_key", Corpus.sampleKey(col("doc_id"), "bfill"))
+      docs.withColumn("fill_key",
+          Corpus.sampleKey(col("doc_id"), Corpus.FillSalt))
         .withColumn("cum_tokens", sum(col("n_chars")).over(w))
         .join(alloc, "lang")
         .where(col("cum_tokens") <= col("alloc_tokens"))
@@ -2179,7 +2180,8 @@ class ExtSpec extends SparkSpec {
     val gotC = out.where(col("stratum") === "c").select("doc_id")
       .collect().map(_.getLong(0)).toSet
     val refC = df.where(col("stratum") === "c")
-      .select(col("doc_id"), Corpus.sampleKey(col("doc_id"), "emix").as("k"))
+      .select(col("doc_id"),
+        Corpus.sampleKey(col("doc_id"), Corpus.EpochSalt).as("k"))
       .orderBy("k").limit(6).collect().map(_.getLong(0)).toSet
     assert(gotC == refC, s"$gotC vs $refC")
     // epochs are 1..n_epochs per doc

@@ -319,7 +319,7 @@ class MultimodalSpec extends SparkSpec {
     val hashed = Multimodal.dHashes(
       Seq((1L, orig), (2L, small), (3L, other)).toDF("doc_id", "payload"),
       "doc_id", "payload")
-    val pairs = Multimodal.phashPairs(hashed, maxHamming = 3)
+    val pairs = Multimodal.phashPairs(hashed)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)), s"got $pairs")
   }
@@ -344,7 +344,7 @@ class MultimodalSpec extends SparkSpec {
     val fps = Multimodal.audioFps(
       Seq((1L, quiet), (2L, loud), (3L, other)).toDF("doc_id", "payload"),
       "doc_id", "payload")
-    val pairs2 = Multimodal.phashPairs(fps, maxHamming = 3)
+    val pairs2 = Multimodal.phashPairs(fps)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs2 == Set((1L, 2L)), s"got $pairs2")
   }

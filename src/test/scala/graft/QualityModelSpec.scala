@@ -81,7 +81,7 @@ class QualityModelSpec extends SparkSpec {
 
   test("quality end-to-end emits one scored row per doc with 0/1 preds") {
     val out = QualityModel.quality(fixture, "doc_id", "text",
-      col("label") === 1.0, d = 64, iters = 8).collect()
+      col("label") === 1.0).collect()
     assert(out.length === 40)
     assert(out.forall(r => Set(0, 1).contains(r.getAs[Int]("pred"))))
   }
@@ -90,11 +90,11 @@ class QualityModelSpec extends SparkSpec {
       "the top keepBp share") {
     val df = fixture
     val out = QualityModel.dsirSample(df, "doc_id", "text",
-      col("label") === 1.0, d = 128, keepBp = 2500L)
+      col("label") === 1.0)
     val rows = out.collect()
     assert(rows.length === 40)
     val selected = rows.filter(_.getAs[Boolean]("selected"))
-    assert(selected.length === 10) // 40 * 2500bp
+    assert(selected.length === 40 * QualityModel.DsirKeepBp / 10000) // 8
     // every selected doc speaks the target vocabulary
     assert(selected.forall(_.getAs[Long]("doc") < 100L))
     // scores of target docs strictly beat non-target docs
@@ -116,7 +116,7 @@ class QualityModelSpec extends SparkSpec {
 
   test("dsirLambda int64-overflow fallback: trips at the boundary, " +
     "matches the exact ratio after the 6-dp round") {
-    val d = 128
+    val d = QualityModel.DsirDim
     // (ct+1)·(nr+d) = ~1.2e19 > Long.MaxValue -> the decimal overflow
     // test must trip and route through the two-double-division fallback
     val big = Seq((3999999999L, 17L, 4100000000L, 2999999999L))

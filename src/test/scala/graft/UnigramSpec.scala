@@ -127,12 +127,12 @@ class UnigramSpec extends SparkSpec {
     // the collected cost table (ADVICE r14). Word type "aaaaaaaa"
     // (len 8, l=4) contributes 26 substrings × freq 700000 ≈ 1.8e7
     // to the seed total, and its ≥3-piece segmentation keeps the
-    // final M-step total above 2.1e6 — the lone "z" rounds to zero
-    // probability in BOTH cost tables, so the sentinel must reach
+    // M-step totals above 2.1e6 — the lone "z" rounds to zero
+    // probability in every cost table, so the sentinel must reach
     // the returned vocab.
     val rare = Seq.fill(700000)("aaaaaaaa") :+ "z"
     val df = rare.toDF("text")
-    val vocab = Unigram.train(df, "text", k = 4, rounds = 1)
+    val vocab = Unigram.train(df, "text", k = 4)
     val z = vocab.find(_._1 == "z")
     assert(z.nonEmpty, "rare char missing from vocab")
     assert(z.get._2 == 99000000L,
