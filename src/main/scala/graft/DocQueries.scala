@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.DecimalType
   * Each entry pairs a declared query with its DuckDB oracle SQL; see
   * [[SparkEntry]]. */
 object DocQueries {
-  import SparkEntry.{t, sortSmall, sortBig, scratch, Artifact, unigramDictFor,
+  import SparkEntry.{t, scratch, Artifact, unigramDictFor,
     bpeMergesFor, syntheticUrls, UrlCanonCtes, e2eOracleSql, SyntheticEdgeSql,
     syntheticEdges, lrModelFor, lrFeatures, LrLabelSql, rankFor,
     concurrently, e2eStagesFor, r6, ShingleCtes, BudgetCapCtes,
@@ -767,9 +767,8 @@ object DocQueries {
           corpus.select(col("text")).distinct().withColumn("_in", lit(1L)),
           Seq("text"), "left")
         .select(col("doc_id"), coalesce(col("_in"), lit(0L)).as("exact_dup"))
-      sortSmall(flagged.join(truth, "doc_id")
-        .select(col("doc_id").as("doc"), col("maybe_dup"), col("exact_dup")),
-        "doc")
+      flagged.join(truth, "doc_id")
+        .select(col("doc_id").as("doc"), col("maybe_dup"), col("exact_dup"))
     },
       // identical portable md5 bit positions (60-bit prefix % 65536, k = 5
       // seeds "0:".."4:"), same corpus/probe/plant split; maybe_dup =
@@ -788,9 +787,8 @@ object DocQueries {
     // exact n-gram Jaccard near-dup pairs
     "doc_jaccard_pairs" -> (((s, dir) => {
       val sh = Dedup.hashedShingles(t(s, dir, "documents"), "doc_id", "text", 3)
-      sortSmall(Dedup.jaccardPairs(sh, 0.5)
-        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard")),
-        "doc_a", "doc_b")
+      Dedup.jaccardPairs(sh, 0.5)
+        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
     },
       JaccardOracle)),
 
@@ -799,10 +797,9 @@ object DocQueries {
     // prefix filter (containee) × full probe (host), both directions
     "doc_containment_pairs" -> (((s, dir) => {
       val sh = Dedup.hashedShingles(t(s, dir, "documents"), "doc_id", "text", 3)
-      sortSmall(Dedup.containmentPairs(sh, 0.8)
+      Dedup.containmentPairs(sh, 0.8)
         .select(col("doc_a"), col("doc_b"),
-          round(col("containment"), 6).as("containment")),
-        "doc_a", "doc_b")
+          round(col("containment"), 6).as("containment"))
     },
       // same string-gram sets; asymmetric ratio, both directions
       s"""WITH $ShingleCtes,
@@ -818,9 +815,8 @@ object DocQueries {
     // MinHash-LSH near-dup pairs with exact verification (same oracle as
     // exact Jaccard — recall at the planted-dup level is ~1)
     "doc_minhash_lsh" -> (((s, dir) => {
-      sortSmall(Dedup.minhashDupPairs(t(s, dir, "documents"), "doc_id", "text", 0.5)
-        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard")),
-        "doc_a", "doc_b")
+      Dedup.minhashDupPairs(t(s, dir, "documents"), "doc_id", "text", 0.5)
+        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
     },
       JaccardOracle)),
 
@@ -832,9 +828,9 @@ object DocQueries {
     "doc_dedup_clusters" -> (((s, dir) => {
       val cl = clustersFor(s, dir)
       val sizes = cl.groupBy(col("root")).agg(count(lit(1)).as("cluster_size"))
-      sortSmall(cl.join(sizes, "root")
+      cl.join(sizes, "root")
         .select(col("doc").as("doc_id"), col("root").as("keeper"),
-          col("cluster_size")), "doc_id")
+          col("cluster_size"))
     },
       // connected components over the JaccardOracle pair graph via
       // recursive-CTE transitive closure (tiny graph — pairs only)
@@ -858,10 +854,9 @@ object DocQueries {
       val member = cl.join(q, cl("doc") === q("doc_id"))
       val w = Window.partitionBy(col("root"))
         .orderBy(col("n_tokens").desc, col("doc"))
-      sortSmall(member.withColumn("_r", row_number().over(w))
+      member.withColumn("_r", row_number().over(w))
         .where(col("_r") === 1)
-        .select(col("root"), col("doc").as("best_doc"), col("n_tokens")),
-        "root")
+        .select(col("root"), col("doc").as("best_doc"), col("n_tokens"))
     },
       // kept = all docs minus cluster members that are not their cluster's
       // keeper (same recursive-CTE closure as doc_dedup_clusters)
@@ -890,7 +885,7 @@ object DocQueries {
         .join(cl, col("doc_id") === col("doc"), "left")
         .where(col("root").isNull || col("root") === col("doc_id"))
         .select(col("doc_id"))
-      sortBig(kept, "doc_id")
+      kept
     },
       s"""$ShingleClosureCtes,
         |comp AS (SELECT x AS doc_id, min(y) AS keeper FROM reach GROUP BY x)
@@ -908,13 +903,12 @@ object DocQueries {
     // mine→cluster→keep→write→read-back path, not just the plan.
     "doc_dedup_sink" -> (((s, dir) => {
       val sink = s.read.parquet(dedupSinkFor(s, dir))
-      sortSmall(sink.groupBy(col("lang")).agg(
+      sink.groupBy(col("lang")).agg(
           count(lit(1)).as("n_docs"),
           sum(col("doc_id")).as("sum_doc_id"),
           sum(col("n_chars")).as("sum_n_chars"),
           sum(pmod(conv(substring(md5(col("text")), 1, 15), 16, 10)
-            .cast("long"), lit(1000003L))).as("checksum")),
-        "lang")
+            .cast("long"), lit(1000003L))).as("checksum"))
     },
       // same recursive-CTE keep-join as doc_dedup_keep, then the identical
       // per-lang audit aggregates the engine computes over the files it
@@ -945,13 +939,12 @@ object DocQueries {
     // and the write shuffles once into lang partitions.
     "doc_curate_sink" -> (((s, dir) => {
       val sink = s.read.parquet(curateSinkFor(s, dir))
-      sortSmall(sink.groupBy(col("lang")).agg(
+      sink.groupBy(col("lang")).agg(
           count(lit(1)).as("n_docs"),
           sum(col("doc_id")).as("sum_doc_id"),
           sum(col("n_chars")).as("sum_n_chars"),
           sum(pmod(conv(substring(md5(col("text")), 1, 15), 16, 10)
-            .cast("long"), lit(1000003L))).as("checksum")),
-        "lang")
+            .cast("long"), lit(1000003L))).as("checksum"))
     },
       // the composite curation pipeline: the SAME quality / repetition /
       // language-ID predicates as the per-operator oracles (text_quality,
@@ -1007,8 +1000,8 @@ object DocQueries {
     // exercises multiple buckets at this sf (output is width-invariant,
     // pinned in ExtSpec). Exact integer arithmetic throughout.
     "doc_pack_shards" -> (((s, dir) => {
-      sortBig(Corpus.packShards(t(s, dir, "documents"), "doc_id", "text",
-        budgetTokens = 1000L, bucketWidth = 64L), "doc")
+      Corpus.packShards(t(s, dir, "documents"), "doc_id", "text",
+        budgetTokens = 1000L, bucketWidth = 64L)
     },
       // global concat-then-chunk shard assignment: one ordered window
       // cumsum — the oracle's single-node luxury; the engine computes the
@@ -1030,8 +1023,8 @@ object DocQueries {
     // in-sequence offset — the loader-facing twin of doc_pack_shards
     // (same decomposed prefix sum, docs SPAN cuts instead of binning)
     "doc_seq_pack" -> (((s, dir) => {
-      sortBig(Corpus.packSequences(t(s, dir, "documents"), "doc_id", "text",
-        seqLen = 256L, bucketWidth = 64L), "doc")
+      Corpus.packSequences(t(s, dir, "documents"), "doc_id", "text",
+        seqLen = 256L, bucketWidth = 64L)
     },
       // same prefix sum; span columns are integer divisions on top
       """WITH t AS (SELECT doc_id,
@@ -1057,8 +1050,8 @@ object DocQueries {
     // hex digits (256 uniformly-loaded hash ranges — md5 balances them
     // by construction, so the shuffle also FIXES any id skew).
     "doc_shuffle_pack" -> (((s, dir) => {
-      sortBig(Corpus.shufflePack(t(s, dir, "documents"), "doc_id", "text",
-        seed = "shuf42", budgetTokens = 1000L), "doc")
+      Corpus.shufflePack(t(s, dir, "documents"), "doc_id", "text",
+        seed = "shuf42", budgetTokens = 1000L)
     },
       // hash-ordered twin of doc_pack_shards: the oracle orders by the
       // same md5 shuffle key; the engine's 256-way hash-prefix bucket
@@ -1086,8 +1079,8 @@ object DocQueries {
       val merges = bpeMergesFor(s, dir)
       val counts = graft.ext.Bpe.tokenCounts(docs, "doc_id", "text", merges)
         .select(col("doc"), col("bpe_tokens").as("n_tokens"))
-      sortBig(Corpus.packSequencesFromCounts(counts, seqLen = 256L,
-        bucketWidth = 64L), "doc")
+      Corpus.packSequencesFromCounts(counts, seqLen = 256L,
+        bucketWidth = 64L)
     },
       // the generated BPE replay (bpe CTE) composed with the identical
       // packing arithmetic, keyed on real token counts
@@ -1115,8 +1108,8 @@ object DocQueries {
       val counts = graft.ext.Unigram.tokenCountsFromDict(docs, "doc_id",
           "text", unigramDictFor(s, dir))
         .select(col("doc"), col("uni_tokens").as("n_tokens"))
-      sortBig(Corpus.packSequencesFromCounts(counts, seqLen = 256L,
-        bucketWidth = 64L), "doc")
+      Corpus.packSequencesFromCounts(counts, seqLen = 256L,
+        bucketWidth = 64L)
     },
       // the generated unigram replay (uni CTE) composed with the identical
       // packing arithmetic, keyed on trained-unigram token counts
@@ -1156,13 +1149,12 @@ object DocQueries {
         .select((col("doc_id") + 1000000L).as("doc_id"),
           concat_ws(" ", slice(split(col("text"), " "), 2, 1000000))
             .as("text"))
-      sortBig(Dedup.crossJaccardPairs(docs, bench, "doc_id", "text",
+      Dedup.crossJaccardPairs(docs, bench, "doc_id", "text",
           minJ = 0.5)
         .groupBy(col("doc_a"))
         .agg(count(lit(1)).as("n_bench"),
           max(round(col("jaccard"), 6)).as("max_jaccard"))
-        .select(col("doc_a").as("doc"), col("n_bench"), col("max_jaccard")),
-        "doc")
+        .select(col("doc_a").as("doc"), col("n_bench"), col("max_jaccard"))
     },
       // cross-corpus exact-Jaccard replay: the oracle brute-forces every
       // (train, bench) pair over the STRING shingles (pinning the hashed
@@ -1201,8 +1193,8 @@ object DocQueries {
     // content query (?page=2) must stay distinct. Canonicalization is
     // row-local; the dedup is one canon-keyed hash aggregate + join.
     "doc_url_dedup" -> (((s, dir) => {
-      sortBig(UrlOps.urlDedup(
-        syntheticUrls(t(s, dir, "documents")), "doc_id", "url"), "doc")
+      UrlOps.urlDedup(
+        syntheticUrls(t(s, dir, "documents")), "doc_id", "url")
     },
       // identical planted URLs + canonicalization regex steps + min-id
       // keeper per canonical form
@@ -1220,15 +1212,14 @@ object DocQueries {
       val pr = rankFor(s, dir)
         .select(col("node").as("doc"), col("rank"))
       val du = UrlOps.urlDedup(syntheticUrls(docs), "doc_id", "url")
-      sortSmall(du.join(pr, "doc")
+      du.join(pr, "doc")
         .groupBy(col("host"))
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("canon")).as("n_canonical"),
           sum(col("is_keeper").cast("long")).as("n_kept"),
           r6(sum(when(col("is_keeper"), col("rank")).otherwise(lit(0.0))
             .cast(DecimalType(38, 6))).cast("double") /
-            sum(col("is_keeper").cast("long"))).as("mean_kept_rank")),
-        "host")
+            sum(col("is_keeper").cast("long"))).as("mean_kept_rank"))
     },
       // URL CTEs + the pageRank replay prefix: per-host counts and the
       // exact-decimal mean rank of kept docs
@@ -1265,7 +1256,7 @@ object DocQueries {
     // sit where a real pipeline materializes (cleaned / deduped /
     // curated corpus).
     "doc_pipeline_e2e" -> (((s, dir) => {
-      sortBig(e2eStagesFor(s, dir).packed, "doc")
+      e2eStagesFor(s, dir).packed
     },
       // the composed pipeline replayed END TO END: LR training CTEs +
       // ingest/clean/dedup-closure/gopher/LR-gate/decon/mix/pack CTEs —
@@ -1326,8 +1317,7 @@ object DocQueries {
     // (driver traffic O(d) doubles), row-local scoring — corpus scanned
     // T times from cache, never shuffled on a token key.
     "doc_quality_lr" -> (((s, dir) => {
-      sortBig(QualityModel.scoreLogReg(lrFeatures(s, dir), lrModelFor(s, dir)),
-        "doc")
+      QualityModel.scoreLogReg(lrFeatures(s, dir), lrModelFor(s, dir))
     },
       // generated training-replay oracle (the BPE discipline applied to
       // gradient descent): DuckDB re-runs all 16 GD rounds — sound
@@ -1344,9 +1334,9 @@ object DocQueries {
     // probabilities use the same Elliott sigmoid, bin means use the
     // 6-dp-round-then-exact-decimal-sum discipline.
     "doc_lr_calibration" -> (((s, dir) => {
-      sortSmall(QualityModel.calibrationBins(
+      QualityModel.calibrationBins(
         QualityModel.scoreLogReg(lrFeatures(s, dir), lrModelFor(s, dir))
-          .select(col("doc"), col("y"), col("score"))), "bin")
+          .select(col("doc"), col("y"), col("score")))
     },
       // same generated training CTEs, calibration tail: Elliott
       // probabilities, ten fixed bins, 6-dp-round-then-decimal-sum means
@@ -1364,8 +1354,8 @@ object DocQueries {
     // keep decision becomes a quantile threshold on score (same
     // weights, no total order needed).
     "doc_dsir_sample" -> (((s, dir) => {
-      sortBig(QualityModel.dsirSample(t(s, dir, "documents"), "doc_id",
-        "text", col("lang") === "en"), "doc")
+      QualityModel.dsirSample(t(s, dir, "documents"), "doc_id",
+        "text", col("lang") === "en")
     },
       QualityModel.dsirOracleSql("lang = 'en'"))),
 
@@ -1378,10 +1368,10 @@ object DocQueries {
     // reproducibility a training-data recipe needs. Downsamples the
     // dominant strata (en 2500 bp, zh 5000 bp), keeps the rest whole.
     "doc_sample_stratified" -> (((s, dir) => {
-      sortBig(Corpus.stratifiedSample(t(s, dir, "documents"), "doc_id",
+      Corpus.stratifiedSample(t(s, dir, "documents"), "doc_id",
           "lang", Map("en" -> 2500L, "zh" -> 5000L))
         .select(col("doc_id"), col("lang"), col("n_chars"),
-          col("sample_bucket")), "doc_id")
+          col("sample_bucket"))
     },
       // identical portable md5 sampling hash + per-stratum rate predicate
       """WITH s AS (SELECT doc_id, lang, n_chars,
@@ -1403,10 +1393,10 @@ object DocQueries {
     // salt keeps the split hash independent of sample_bucket's, so
     // sampling and splitting decisions stay statistically independent.
     "doc_hash_split" -> (((s, dir) => {
-      sortBig(Corpus.hashSplit(t(s, dir, "documents"), "doc_id",
+      Corpus.hashSplit(t(s, dir, "documents"), "doc_id",
           salt = "split", trainBp = 9000L, valBp = 500L)
         .select(col("doc_id"), col("lang"), col("split_bucket"),
-          col("split")), "doc_id")
+          col("split"))
     },
       // identical salted md5 bucket + the same basis-point thresholds
       """WITH s AS (SELECT doc_id, lang,
@@ -1427,10 +1417,9 @@ object DocQueries {
     // property means growing the corpus can only evict, never
     // reshuffle, previously selected docs.
     "doc_sample_topk" -> (((s, dir) => {
-      sortSmall(Corpus.uniformSampleK(t(s, dir, "documents"), "doc_id",
+      Corpus.uniformSampleK(t(s, dir, "documents"), "doc_id",
           k = 100)
-        .select(col("doc_id"), col("lang"), col("sample_key")),
-        "sample_key", "doc_id")
+        .select(col("doc_id"), col("lang"), col("sample_key"))
     },
       // same salted md5 keys, ANSI top-k
       """SELECT doc_id, lang,
@@ -1445,10 +1434,9 @@ object DocQueries {
     // selected set is engine-portable; same TakeOrderedAndProject
     // shape, no corpus shuffle.
     "doc_sample_weighted" -> (((s, dir) => {
-      sortSmall(Corpus.weightedSampleK(t(s, dir, "documents"), "doc_id",
+      Corpus.weightedSampleK(t(s, dir, "documents"), "doc_id",
           "n_chars", k = 100)
-        .select(col("doc_id"), col("n_chars"), col("es_key")),
-        "es_key", "doc_id")
+        .select(col("doc_id"), col("n_chars"), col("es_key"))
     },
       // identical exponential-key arithmetic: u = (bucket + 0.5)/2^60,
       // key = round(-ln(u)/w, 6), k smallest; the w > 0 filter mirrors the
@@ -1470,8 +1458,8 @@ object DocQueries {
     // corpus side is ONE map-side-combinable aggregate, every window
     // runs on the |langs|-row aggregated frame.
     "doc_budget_waterfill" -> (((s, dir) => {
-      sortSmall(Corpus.waterfillAlloc(t(s, dir, "documents"), "lang",
-        "n_chars", budgetBp = 8000L), "lang")
+      Corpus.waterfillAlloc(t(s, dir, "documents"), "lang",
+        "n_chars", budgetBp = 8000L)
     },
       // the same exact-integer water-filling closed form over the
       // cap-ascending prefix sums (BIGINT casts pin DuckDB's
@@ -1495,11 +1483,11 @@ object DocQueries {
     // never a one-task-per-language window — the dominant language IS
     // most of a real corpus.
     "doc_budget_fill" -> (((s, dir) => {
-      sortBig(Corpus.waterfillFill(t(s, dir, "documents")
+      Corpus.waterfillFill(t(s, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars")),
           "doc_id", "lang", "n_chars", budgetBp = 8000L)
         .select(col("doc_id"), col("lang"), col("n_chars"), col("fill_key"),
-          col("cum_tokens"), col("alloc_tokens")), "doc_id")
+          col("cum_tokens"), col("alloc_tokens"))
     },
       // the same allocation CTEs + the per-language greedy hash-order
       // prefix fill (window frame is rows by the unique (fill_key, id)
@@ -1528,12 +1516,11 @@ object DocQueries {
       val keyed = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           Corpus.sampleKey(col("doc_id"), "ssample").as("sample_key"))
-      sortSmall(Ranks.stratifiedRowNumber(keyed, Seq("lang"),
+      Ranks.stratifiedRowNumber(keyed, Seq("lang"),
           Seq(col("sample_key"), col("doc_id")), out = "sample_rank")
         .where(col("sample_rank") <= 20)
         .select(col("doc_id"), col("lang"), col("sample_key"),
-          col("sample_rank")),
-        "lang", "sample_rank")
+          col("sample_rank"))
     },
       // same salted keys, per-stratum ANSI window rank
       """WITH k AS (SELECT doc_id, lang,
@@ -1583,7 +1570,7 @@ object DocQueries {
             .as("median_lo"),
           min(when(col("_rn") === col("_hi"), col("n_chars")))
             .as("median_hi"))
-      sortSmall(base.join(med, "source"), "source")
+      base.join(med, "source")
     },
       // per-source aggregates + the window-rank median replay (the engine
       // side rides the stratified rank frame; ranks under a total order
@@ -1634,7 +1621,7 @@ object DocQueries {
           pmod(col("doc_id"), lit(50L)).cast("string")).as("url"))
       val bl = Seq("src3.example.com", "ads.src7.example.com",
         "spam.example.net").toDF("pattern")
-      sortBig(UrlOps.hostBlocklist(urls, "doc_id", "url", bl), "doc")
+      UrlOps.hostBlocklist(urls, "doc_id", "url", bl)
     },
       // same planted URLs, suffix-chain explode, broadcast-entry
       // equi-join; longest-rule pick via the lpad(length)||rule encoding
@@ -1651,11 +1638,10 @@ object DocQueries {
     // the 3-epoch cap exactly, de runs 2 epochs + remainder, es
     // degrades to a sub-1-epoch exact downsample.
     "doc_mix_epoch_cap" -> (((s, dir) => {
-      sortBig(Corpus.epochCapMix(t(s, dir, "documents"), "doc_id", "lang",
+      Corpus.epochCapMix(t(s, dir, "documents"), "doc_id", "lang",
           Map("en" -> 4000L, "zh" -> 3000L, "de" -> 1500L,
             "fr" -> 1000L, "es" -> 500L),
-          budgetBp = 20000L, maxEpochs = 3),
-        "doc_id", "epoch")
+          budgetBp = 20000L, maxEpochs = 3)
     },
       // same integer want/full/remainder arithmetic over the identical
       // salted keys; the per-lang extra-epoch picks replay through the
@@ -1699,7 +1685,7 @@ object DocQueries {
       val pairs = Dedup.jaccardPairs(
         Dedup.hashedShingles(docs, "doc_id", "text", 3), 0.5)
       val src = docs.select(col("doc_id"), col("source"))
-      sortSmall(pairs
+      pairs
         .join(src.select(col("doc_id").as("doc_a"),
           col("source").as("source_a")), "doc_a")
         .join(src.select(col("doc_id").as("doc_b"),
@@ -1708,8 +1694,7 @@ object DocQueries {
           greatest(col("source_a"), col("source_b")).as("source_hi"))
         .agg(count(lit(1)).as("n_pairs"),
           r6(sum(round(col("jaccard"), 6).cast(DecimalType(38, 6)))
-            .cast("double") / count(lit(1))).as("mean_jaccard")),
-        "source_lo", "source_hi")
+            .cast("double") / count(lit(1))).as("mean_jaccard"))
     },
       // the JaccardOracle pair CTEs + source joins, unordered pair keys,
       // exact-decimal mean of the 6-dp-rounded similarities
@@ -1757,12 +1742,11 @@ object DocQueries {
         .withColumn("decile", expr("((_r - 1) * 10) div _n"))
         .withColumn("_sk",
           md5(concat(lit("curr:"), col("doc").cast("string"))))
-      sortBig(Ranks.globalRowNumber(dec,
+      Ranks.globalRowNumber(dec,
           Seq(col("decile"), col("_sk"), col("doc")),
           out = "curriculum_rank")
         .select(col("doc"), col("score"), col("decile"),
-          col("curriculum_rank")),
-        "curriculum_rank")
+          col("curriculum_rank"))
     },
       // the generated LR training CTEs (ending in `scored`) + the decile
       // binning and the salted within-decile shuffle as window ranks
@@ -1802,14 +1786,13 @@ object DocQueries {
       val lay = layout("zorder", "zrank")
         .unionByName(layout("linear", "lrank"))
         .unionByName(layout("hash", "hrank"))
-      sortSmall(lay.groupBy(col("layout"), col("file_id"))
+      lay.groupBy(col("layout"), col("file_id"))
         .agg(min(col("b1")).as("b1_min"), max(col("b1")).as("b1_max"),
           min(col("b2")).as("b2_min"), max(col("b2")).as("b2_max"),
           count(lit(1)).as("n_rows"))
         .withColumn("scanned",
           col("b1_max") >= 64 && col("b1_min") <= 127 &&
-            col("b2_max") >= 128 && col("b2_min") <= 191),
-        "layout", "file_id")
+            col("b2_max") >= 128 && col("b2_min") <= 191)
     },
       // same equi-depth rank bits, explicit bit-interleave as a sum of
       // div/mod terms (no engine bit operators needed), three window-rank
@@ -1854,8 +1837,8 @@ object DocQueries {
       def audit(tag: String): DataFrame =
         zorderAudit(s, tag, Seq(s"$path/$tag"))
           .withColumnRenamed("phase", "layout")
-      sortSmall(audit("zorder").unionByName(audit("linear"))
-        .unionByName(audit("hash")), "layout")
+      audit("zorder").unionByName(audit("linear"))
+        .unionByName(audit("hash"))
     },
       ZorderMatAuditOracle)),
 
@@ -1879,8 +1862,8 @@ object DocQueries {
       def au(tag: String): DataFrame =
         manifestAudit(s, tag, Seq(s"$path/$tag/_stats"))
           .withColumnRenamed("phase", "layout")
-      sortSmall(au("zorder").unionByName(au("linear"))
-        .unionByName(au("hash")), "layout")
+      au("zorder").unionByName(au("linear"))
+        .unionByName(au("hash"))
     },
       // identical logical replay to doc_zorder_skipping_mat — the ENGINE
       // path differs (prune from the persisted write-time manifest, no
@@ -1902,12 +1885,11 @@ object DocQueries {
     // schedules; the audit is the evidence it pays for itself.
     "doc_zorder_append_optimize" -> (((s, dir) => {
       val path = zorderIncFor(s, dir)
-      sortSmall(
+      
         zorderAudit(s, "base", Seq(s"$path/base"))
           .unionByName(zorderAudit(s, "appended",
             Seq(s"$path/base", s"$path/append")))
-          .unionByName(zorderAudit(s, "optimized", Seq(s"$path/optimized"))),
-        "phase")
+          .unionByName(zorderAudit(s, "optimized", Seq(s"$path/optimized")))
     },
       // the same global bit space; per-subset window ranks replay the
       // three phase layouts logically (base z-order over 80%, hash-order
@@ -1970,10 +1952,10 @@ object DocQueries {
         manifestAudit(s, phase, Seq(s"$p/_stats_$phase"))
           .withColumn("files_rewritten", lit(frw))
           .withColumn("rows_rewritten", lit(rrw))
-      sortSmall(au("base", 0L, 0L)
+      au("base", 0L, 0L)
         .unionByName(au("appended", 0L, 0L))
         .unionByName(au("optimized", rw.length.toLong,
-          rw.map(_.getAs[Long]("n_rows")).sum)), "phase")
+          rw.map(_.getAs[Long]("n_rows")).sum))
     },
       // incremental OPTIMIZE replay: base = corpus minus the localized
       // batch (b2 >= 144, even doc_id) z-ordered into 52 files; append =
@@ -2245,15 +2227,14 @@ object DocQueries {
       val sp = Corpus.hashSplit(docs, "doc_id")
         .select(col("doc_id"), col("split"))
       val sh = Dedup.hashedShingles(docs, "doc_id", "text", 3)
-      sortSmall(Dedup.jaccardPairs(sh, 0.5)
+      Dedup.jaccardPairs(sh, 0.5)
         .join(sp.select(col("doc_id").as("doc_a"),
           col("split").as("split_a")), "doc_a")
         .join(sp.select(col("doc_id").as("doc_b"),
           col("split").as("split_b")), "doc_b")
         .where(col("split_a") =!= col("split_b"))
         .select(col("doc_a"), col("doc_b"), col("split_a"), col("split_b"),
-          round(col("jaccard"), 6).as("jaccard")),
-        "doc_a", "doc_b")
+          round(col("jaccard"), 6).as("jaccard"))
     },
       // the JaccardOracle CTEs over the planted-clone corpus + the salted
       // split CASE; leaks = pairs whose members' splits differ
@@ -2306,9 +2287,9 @@ object DocQueries {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val leaks = docs.where(col("doc_id") % 20 === 7)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      sortBig(Corpus.contamination(docs.unionByName(leaks), "doc_id",
+      Corpus.contamination(docs.unionByName(leaks), "doc_id",
         "text", col("doc_id") % 20 === 7 && col("doc_id") < 1000000L,
-        n = 5), "doc")
+        n = 5)
     },
       // string-gram recomputation of the hashed-gram contamination join,
       // same planted leaks
@@ -2335,8 +2316,8 @@ object DocQueries {
     // hashed engine path exactly. Synthetic docs repeat short word-soup
     // heavily, so the dropped set is large and the gate carries signal.
     "doc_chunk_dedup" -> (((s, dir) => {
-      sortBig(Dedup.chunkDedup(t(s, dir, "documents"), "doc_id", "text",
-        chunkTokens = 16), "doc")
+      Dedup.chunkDedup(t(s, dir, "documents"), "doc_id", "text",
+        chunkTokens = 16)
     },
       // re-chunk with list-slice arithmetic, keeper = min (doc, chunk_idx)
       // per chunk STRING (pins the engine's hashed-key path)
@@ -2380,10 +2361,10 @@ object DocQueries {
           "<footer>Copyright 2024 Example Corp. All rights reserved. " +
           "<a href=\"/privacy\">Privacy</a></footer>" +
           "<script>var tracking = 1;</script></body></html>"))
-      sortBig(graft.ext.HtmlExtract.extract(
+      graft.ext.HtmlExtract.extract(
           t(s, dir, "documents").select(col("doc_id"), html.as("html")),
           "doc_id", "html")
-        .drop("text"), "doc")
+        .drop("text")
     },
       // identical HTML construction, script/style removal, block split,
       // tag strip, density + phrase rules, and ORDER BY-bidx reassembly
@@ -2444,11 +2425,10 @@ object DocQueries {
         .select((col("doc_id") + 100000L).as("doc_id"),
           concat(lit("planted leak prefix alpha beta "), col("text"))
             .as("text"))
-      sortBig(Dedup.substringDupSpans(docs.unionByName(planted),
+      Dedup.substringDupSpans(docs.unionByName(planted),
           "doc_id", "text", k = 8)
         .select(col("doc"), col("span_start").cast("long").as("span_start"),
-          col("span_end").cast("long").as("span_end"), col("n_windows")),
-        "doc", "span_start")
+          col("span_end").cast("long").as("span_end"), col("n_windows"))
     },
       // identical plant, window hashes (md5 of the space-joined 8-token
       // window over \S+ tokens), ≥2 corpus-wide count, and
@@ -2483,8 +2463,8 @@ object DocQueries {
         .select((col("doc_id") + 100000L).as("doc_id"),
           concat(lit("planted leak prefix alpha beta "), col("text"))
             .as("text"))
-      sortBig(Dedup.substringStrip(docs.unionByName(planted),
-        "doc_id", "text", k = 8), "doc")
+      Dedup.substringStrip(docs.unionByName(planted),
+        "doc_id", "text", k = 8)
     },
       // identical plant and window hashes; keeper = lexicographic-min
       // (doc, pos) STRUCT per duplicated hash, keeper-occurrence positions
@@ -2529,8 +2509,8 @@ object DocQueries {
     // The frequent set is a heavy-hitter list (small by construction) so
     // the membership test is a broadcast join, never a corpus shuffle.
     "doc_line_dedup" -> (((s, dir) => {
-      sortBig(Dedup.lineFreqFilter(t(s, dir, "documents"), "doc_id", "text",
-        chunkTokens = 8, maxDocs = 2), "doc")
+      Dedup.lineFreqFilter(t(s, dir, "documents"), "doc_id", "text",
+        chunkTokens = 8, maxDocs = 2)
     },
       // identical chunking, corpus document-frequency > 2 membership, and
       // in-order reassembly (string_agg ORDER BY ≡ the sorted-struct fold)
@@ -2556,11 +2536,11 @@ object DocQueries {
     // then the same portable md5 keep predicate as doc_sample_stratified.
     // One tiny count aggregate + broadcast rate join + row-local filter.
     "doc_mix_sample" -> (((s, dir) => {
-      sortBig(Corpus.targetMixSample(t(s, dir, "documents"), "doc_id",
+      Corpus.targetMixSample(t(s, dir, "documents"), "doc_id",
           "lang", Map("en" -> 4000L, "zh" -> 2000L, "es" -> 2000L,
             "de" -> 1000L, "fr" -> 1000L), budget = 250L)
         .select(col("doc_id"), col("lang"), col("rate_bp"),
-          col("sample_bucket")), "doc_id")
+          col("sample_bucket"))
     },
       // identical integer-div rate derivation + portable md5 keep predicate
       """WITH c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
@@ -2588,10 +2568,10 @@ object DocQueries {
     // the row-local md5 sample bucket — shuffle-free, scan-pushable,
     // rerun-stable (Corpus.temperatureMixSample).
     "doc_mix_temperature" -> (((s, dir) => {
-      sortBig(Corpus.temperatureMixSample(t(s, dir, "documents"), "doc_id",
+      Corpus.temperatureMixSample(t(s, dir, "documents"), "doc_id",
           "source", keepBp = 5000L)
         .select(col("doc_id"), col("source"), col("rate_bp"),
-          col("sample_bucket"), col("selected")), "doc_id")
+          col("sample_bucket"), col("selected"))
     },
       // identical rate arithmetic: 6-dp floor-round of each sqrt, exact
       // DECIMAL(18,6) weight sum, one multiply chain + one division + one
@@ -2641,9 +2621,9 @@ object DocQueries {
           count(lit(1)), 6).as("dup_share"),
         round(sum(col("distinct_ratio").cast(DecimalType(38, 6)))
           .cast("double") / count(lit(1)), 6).as("mean_distinct_ratio"))
-      sortSmall(stats.withColumn("kept",
+      stats.withColumn("kept",
         (col("dup_share") <= 0.2 && col("mean_distinct_ratio") >= 0.5)
-          .cast("long")), "source")
+          .cast("long"))
     },
       // identical plant, md5-keyed dup counts, 6dp-rounded distinct ratios
       // summed as DECIMAL(38,6), and the same two-signal keep gate
@@ -2683,11 +2663,9 @@ object DocQueries {
     // combination banding) and planted-near-dup recovery.
     "doc_simhash_pairs" -> (((s, dir) => {
       val docs = t(s, dir, "documents")
-      sortSmall(Dedup.simhashDupPairsAtScalePortable(docs, "doc_id", "text",
-          maxDist = 3, nBlocks = 6)
+      Dedup.simhashDupPairsAtScalePortable(docs, "doc_id", "text")
           .select(col("doc_a"), col("doc_b"),
-            col("hamming").cast("long").as("hamming")),
-        "doc_a", "doc_b")
+            col("hamming").cast("long").as("hamming"))
     },
       // independent recomputation of the portable md5-derived 60-bit
       // simhash (same construction as stream_simhash_dedup's oracle:
@@ -2721,8 +2699,8 @@ object DocQueries {
       val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val planted = base.where(col("vec_id") % 10 === 0)
         .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
-      sortBig(Kmeans.semDedup(base.unionByName(planted), "vec_id",
-        "embedding", k = 8, iters = 3, minCosine = 0.95), "vec_id")
+      Kmeans.semDedup(base.unionByName(planted), "vec_id",
+        "embedding", k = 8, iters = 3, minCosine = 0.95)
     },
       // same training replay over base ∪ planted copies, then intra-cluster
       // cosine pairs (identical list-fold + portable round), recursive-CTE
@@ -2776,7 +2754,7 @@ object DocQueries {
     // every round bit-for-bit. Per round: one key-partitioned join +
     // one map-side-combinable decimal aggregate — no driver traffic.
     "doc_pagerank" -> (((s, dir) => {
-      sortBig(rankFor(s, dir), "node")
+      rankFor(s, dir)
     },
       // generated power-iteration replay over the same deterministic
       // synthetic link graph (affine spread, out-degree 1 + id % 3, no
@@ -2797,7 +2775,7 @@ object DocQueries {
     "doc_pagerank_dangling" -> (((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       val e = syntheticEdges(docs).where(pmod(col("src"), lit(3L)) =!= 0L)
-      sortBig(Graph.pageRank(e, docs, iters = 8), "node")
+      Graph.pageRank(e, docs, iters = 8)
     },
       // the same generated replay over the dangling-stratum graph: the
       // oracle's per-round d<i> CTE sums dangling ranks in exact decimal
@@ -2840,9 +2818,9 @@ object DocQueries {
       val pr = Graph.pageRank(he, hn, iters = 8)
       val perHost = hframe.groupBy(col("hid"), col("host"))
         .agg(count(lit(1)).as("n_docs"))
-      sortSmall(pr.join(perHost, pr("node") === perHost("hid"))
+      pr.join(perHost, pr("node") === perHost("hid"))
         .select(col("host"), col("rank"), col("in_deg"), col("out_deg"),
-          col("n_docs")), "host")
+          col("n_docs"))
     },
       // host-graph replay: the URL canonicalization CTEs produce per-doc
       // hosts; hosts get the portable md5-bigint id; the page edges
@@ -2890,7 +2868,7 @@ object DocQueries {
       val cutoff = Ranks.orderStatCut(pr, col("rank"), col("doc_id"), 3, 4)
       val gp = TextAnalysis.gopherRules(docs, "doc_id", "text")
         .where(col("gopher_pass")).select(col("doc_id"))
-      sortSmall(docs.join(pr, "doc_id").crossJoin(broadcast(cutoff))
+      docs.join(pr, "doc_id").crossJoin(broadcast(cutoff))
         .where(col("rank").cast("decimal(38,6)") * 4 >=
           (lit(4) - col("_r")) * col("_lo") + col("_r") * col("_hi"))
         .join(gp, Seq("doc_id"), "left_semi")
@@ -2898,8 +2876,7 @@ object DocQueries {
           count(lit(1)).as("n_docs"),
           sum(col("doc_id")).as("sum_doc_id"),
           sum(pmod(conv(substring(md5(col("text")), 1, 15), 16, 10)
-            .cast("long"), lit(1000003L))).as("checksum")),
-        "lang")
+            .cast("long"), lit(1000003L))).as("checksum"))
     },
       // rank-prior curation replay: the pageRank CTE prefix + the exact
       // order-statistic cutoff (the nllBuckets tercile discipline at
@@ -3002,7 +2979,7 @@ object DocQueries {
           Dedup.hashedShingles(corpus, "doc_id", "text", 3), 0.5)
         .select(col("doc_a"), col("doc_b")))
       val cand = Pin.pin(Dedup.simhashDupPairsAtScalePortable(corpus,
-          "doc_id", "text", maxDist = 3, nBlocks = 6)
+          "doc_id", "text")
         .select(col("doc_a"), col("doc_b")))
       val hits = cand.join(truth, Seq("doc_a", "doc_b"))
       truth.agg(count(lit(1)).as("n_truth"))
@@ -3100,10 +3077,9 @@ object DocQueries {
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text"),
           lit(2L).as("version"))
       val w = Window.partitionBy(col("doc_id")).orderBy(col("version").desc)
-      sortBig(base.unionByName(revised).unionByName(fresh)
+      base.unionByName(revised).unionByName(fresh)
         .withColumn("_r", row_number().over(w)).where(col("_r") === 1)
-        .select(col("doc_id"), col("version"), md5(col("text")).as("content_md5")),
-        "doc_id")
+        .select(col("doc_id"), col("version"), md5(col("text")).as("content_md5"))
     },
       // identical latest-version-wins merge; md5 pins the merged text
       """WITH all_rows AS (

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * Each entry pairs a declared query with its DuckDB oracle SQL; see
   * [[SparkEntry]]. */
 object EmbQueries {
-  import SparkEntry.{t, sortSmall, sortBig, scratch, Artifact, SimhashCtes,
-    CosinePairSelect, Query}
+  import SparkEntry.{t, scratch, Artifact, SimhashCtes, CosinePairSelect,
+    Query}
 
   /** Trained IVF centroids (emb_ivf_topk, emb_ivf_exhaustive): the
     * train-once / probe-per-rep shape of the persisted indexes. */
@@ -101,9 +101,8 @@ object EmbQueries {
       val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val planted = base.where(col("vec_id") % 10 === 0)
         .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
-      sortSmall(Similarity.lshBucketedPairs(base.unionByName(planted),
-          "vec_id", "embedding", minCosine = 0.8, bits = 10, bands = 8),
-        "id_a", "id_b")
+      Similarity.lshBucketedPairs(base.unionByName(planted),
+          "vec_id", "embedding", minCosine = 0.8, bits = 10, bands = 8)
     },
       // exhaustive thresholded top-N over the SAME planted corpus the
       // engine builds (id-offset exact copies of every vec_id % 25 == 0
@@ -150,9 +149,8 @@ object EmbQueries {
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
       val cl = Dedup.dedupClusters(pairs, "doc_a", "doc_b")
       val sizes = cl.groupBy(col("root")).agg(count(lit(1)).as("cluster_size"))
-      sortSmall(cl.join(sizes, "root")
-        .select(col("doc").as("vec_id"), col("root"), col("cluster_size")),
-        "vec_id")
+      cl.join(sizes, "root")
+        .select(col("doc").as("vec_id"), col("root"), col("cluster_size"))
     },
       // recursive-CTE transitive closure over the exhaustive cosine >= 0.8
       // pair graph (same plant as emb_lsh_pairs) — the embedding-space
@@ -207,10 +205,9 @@ object EmbQueries {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") >= 48 && col("vec_id") < 56)
       val idx = ivfPqIndexFor(s, dir)
-      sortSmall(Similarity.ivfPqProbeExact(s, idx, queries, "vec_id",
+      Similarity.ivfPqProbeExact(s, idx, queries, "vec_id",
           "embedding", k = 5, nProbe = 12, rerankR = 100)
-        .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine")),
-        "query_id", "rank")
+        .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine"))
     },
       // the exact pruned IVFADC probe (list bound + per-point
       // reconstruction-error bound + exact rescore) likewise returns
@@ -239,10 +236,9 @@ object EmbQueries {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") >= 16 && col("vec_id") < 24)
       val idx = ivfPqIndexFor(s, dir)
-      sortSmall(Similarity.ivfPqProbeRerank(s, idx, queries, "vec_id",
+      Similarity.ivfPqProbeRerank(s, idx, queries, "vec_id",
           "embedding", k = 10, nProbe = 16, rerankR = 100000)
-        .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine")),
-        "query_id", "rank")
+        .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine"))
     },
       // exhaustive-routing IVFADC+R ≡ brute-force exact top-k (ExtSpec pins
       // the bit-for-bit set equality), so the oracle is brute force over the
@@ -273,11 +269,10 @@ object EmbQueries {
     "emb_ivf_topk" -> (((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") >= 32 && col("vec_id") < 40)
-      sortSmall(Similarity.ivfTopKExact(emb, queries, "vec_id",
+      Similarity.ivfTopKExact(emb, queries, "vec_id",
           "embedding", k = 6, nProbe = 4, ivfCentsFor(s, dir),
           Some(ivfRadiiFor(s, dir)))
-        .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine")),
-        "query_id", "rank")
+        .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine"))
     },
       // the exact pruned IVF probe returns brute-force top-k by the
       // triangle-inequality completeness argument (Similarity.ivfTopKExact
@@ -306,11 +301,10 @@ object EmbQueries {
     "emb_ivf_exhaustive" -> (((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") >= 8 && col("vec_id") < 16)
-      sortSmall(Similarity.ivfTopKLearned(emb, queries, "vec_id",
+      Similarity.ivfTopKLearned(emb, queries, "vec_id",
           "embedding", k = 7, nLists = 16, nProbe = 16,
           precomputedCents = Some(ivfCentsFor(s, dir)))
-        .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine")),
-        "query_id", "rank")
+        .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine"))
     },
       // exhaustive-routing learned-centroid IVF ≡ brute-force exact top-k
       // (every list probed ⇒ every candidate scored with the exact cosine
@@ -342,11 +336,10 @@ object EmbQueries {
       val queries = t(s, dir, "embeddings")
         .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
         .where(col("vec_id") >= 24 && col("vec_id") < 32)
-      sortSmall(Similarity.ivfProbeIndex(s, p, queries, "vec_id",
+      Similarity.ivfProbeIndex(s, p, queries, "vec_id",
           "embedding", k = 8, nProbe = 16)
         .select(col("query_id"), col("rank"), col("candidate_id"),
-          col("cosine")),
-        "query_id", "rank")
+          col("cosine"))
     },
       // retrain-on-drift probe parity: the retrained index's exhaustive
       // probe is still brute-force top-k over base ∪ the +3.0-shifted
@@ -374,8 +367,8 @@ object EmbQueries {
     // aggregate, exact DECIMAL(38,12) partials, one division + round(6)
     // at the end — partitioning- and engine-invariant.
     "emb_label_centroids" -> (((s, dir) => {
-      sortSmall(Similarity.meanVectorByKey(t(s, dir, "embeddings"),
-        "label", "embedding"), "label", "dim")
+      Similarity.meanVectorByKey(t(s, dir, "embeddings"),
+        "label", "embedding")
     },
       // same element-wise exact-decimal mean per (label, dim)
       """WITH e AS (SELECT label, embedding::DOUBLE[] AS v FROM embeddings),
@@ -405,11 +398,10 @@ object EmbQueries {
       val m = Kmeans.train(emb, "vec_id", "embedding", k = 8, iters = 3)
       val af = Kmeans.assignFinal(emb, "vec_id", "embedding", m)
       val sizes = af.groupBy(col("cluster")).agg(count(lit(1)).as("n"))
-      sortSmall(Kmeans.centroidFrame(s, m)
+      Kmeans.centroidFrame(s, m)
         .join(sizes, Seq("cluster"), "left")
         .select(col("cluster"), coalesce(col("n"), lit(0L)).as("n"),
-          col("dim"), col("c")),
-        "cluster", "dim")
+          col("dim"), col("c"))
     },
       // generated training replay: 3 Lloyd rounds as CTE chains (distance /
       // argmin / update / carry-forward), exact-decimal aggregates + the
@@ -432,15 +424,11 @@ object EmbQueries {
     // serving twin with literal centroids is Similarity.nearestList.
     "emb_nearest_centroid" -> (((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      // sortBig, not sortSmall: one output row PER VECTOR — a
-      // repartition(1) final sort would single-task the whole corpus at
-      // scale (VERDICT r9 weak #1)
-      sortBig(Similarity.nearestCentroid(emb, "vec_id", "label", "embedding")
+      Similarity.nearestCentroid(emb, "vec_id", "label", "embedding")
         .join(emb.select(col("vec_id"),
           col("label").cast("long").as("true_label")), "vec_id")
         .select(col("vec_id"), col("true_label"), col("assigned"),
-          col("dist2")),
-        "vec_id")
+          col("dist2"))
     },
       // identical 6-dp centroids, identical exact-decimal distance sums,
       // identical (dist2, label) argmin tie order
@@ -537,10 +525,10 @@ object EmbQueries {
         .where(col("_r") === 1)
         .select(col("query_id"), col("nbr_label").as("predicted"),
           col("n_votes"))
-      sortSmall(pred.join(emb.select(col("vec_id").as("query_id"),
+      pred.join(emb.select(col("vec_id").as("query_id"),
           col("label").cast("long").as("true_label")), "query_id")
         .select(col("query_id"), col("true_label"), col("predicted"),
-          col("n_votes")), "query_id")
+          col("n_votes"))
     },
       // same brute-force 9-NN by (cosine desc, candidate) rank, majority
       // vote with (votes desc, label asc) tie order
@@ -596,11 +584,10 @@ object EmbQueries {
             (col("_qn") * col("_cn")), 6).as("cosine"))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("cosine").desc, col("candidate_id"))
-      sortSmall(scored.withColumn("rank", row_number().over(w))
+      scored.withColumn("rank", row_number().over(w))
         .where(col("rank") <= 5)
         .select(col("query_id"), col("query_label"), col("rank"),
-          col("candidate_id"), col("candidate_label"), col("cosine")),
-        "query_id", "rank")
+          col("candidate_id"), col("candidate_label"), col("cosine"))
     },
       // same brute-force cosine replay with the different-label filter
       // applied before the per-query rank
@@ -632,10 +619,9 @@ object EmbQueries {
     // cosine/IVF anchors.
     "emb_hamming_topk" -> (((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      sortSmall(Similarity.hammingTopK(emb,
+      Similarity.hammingTopK(emb,
           emb.where(col("vec_id") >= 40 && col("vec_id") < 48),
-          "vec_id", "embedding", k = 10),
-        "query_id", "rank")
+          "vec_id", "embedding", k = 10)
     },
       // identical MSB-first sign packing (sum of powers of two ≡ the
       // acc-doubling fold), identical popcount-of-XOR distance
@@ -660,10 +646,9 @@ object EmbQueries {
     // brute-force cosine top-k (ANN baseline; queries = vec_id < 8)
     "emb_cosine_topk" -> (((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      sortSmall(Similarity.cosineTopK(emb, emb.where(col("vec_id") < 8), "vec_id",
+      Similarity.cosineTopK(emb, emb.where(col("vec_id") < 8), "vec_id",
           "embedding", k = 5)
-        .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine")),
-        "query_id", "rank")
+        .select(col("query_id"), col("rank"), col("candidate_id"), col("cosine"))
     },
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |s AS (
@@ -862,8 +847,7 @@ object EmbQueries {
             brightness = (id % 33).toInt))
         }).toDF("doc_id", "payload")
       val hashed = graft.ext.Multimodal.dHashes(media, "doc_id", "payload")
-      sortSmall(graft.ext.Multimodal.phashPairs(hashed),
-        "doc_a", "doc_b")
+      graft.ext.Multimodal.phashPairs(hashed)
     },
       // the content-match set is exactly the text-twin pairs: same md5 ⇒
       // same pattern ⇒ dHash equal (hamming 0) despite byte-different
@@ -892,8 +876,7 @@ object EmbQueries {
             gainShift = if (id >= 1000000L) 1 else 0))
         }).toDF("doc_id", "payload")
       val fps = graft.ext.Multimodal.audioFps(media, "doc_id", "payload")
-      sortSmall(graft.ext.Multimodal.phashPairs(fps),
-        "doc_a", "doc_b")
+      graft.ext.Multimodal.phashPairs(fps)
     },
       // same planted set as the image path: twins are the gain-shifted
       // renders, content-equal ⇒ hamming 0
@@ -943,10 +926,10 @@ object EmbQueries {
             brightness = (id % 33).toInt))
         }).toDF("doc_id", "payload")
       val pairsT = Dedup.simhashDupPairsAtScalePortable(corpus, "doc_id",
-        "text", maxDist = 3, nBlocks = 6)
+        "text")
       val pairsI = graft.ext.Multimodal.phashPairs(
         graft.ext.Multimodal.dHashes(media, "doc_id", "payload"))
-      sortBig(corpus.select(col("doc_id"))
+      corpus.select(col("doc_id"))
         .join(pairsT.select(col("doc_b").as("doc_id")).distinct()
           .withColumn("_t", lit(true)), Seq("doc_id"), "left")
         .join(pairsI.select(col("doc_b").as("doc_id")).distinct()
@@ -955,8 +938,7 @@ object EmbQueries {
           coalesce(col("_t"), lit(false)).as("dup_text"),
           coalesce(col("_i"), lit(false)).as("dup_image"),
           (!(coalesce(col("_t"), lit(false)) ||
-             coalesce(col("_i"), lit(false)))).as("keep")),
-        "doc_id")
+             coalesce(col("_i"), lit(false)))).as("keep"))
     },
       // union-of-graphs keep decision: the text side replays the portable
       // simhash bit-exactly (doc_simhash_pairs machinery over the planted

@@ -10,14 +10,47 @@ package graft
   *   sbt "runMain graft.PlanAudit <sfDir> q1 --full"
   *   sbt "runMain graft.PlanAudit <sfDir> --record plan_shapes.json"
   *
-  * `--record` snapshots the counters of EVERY declared query to a JSON
-  * baseline; [[QueryProbe]]'s `--guard` replays the snapshot and goes
+  * `--record` snapshots the counters of EVERY declared query into a JSON
+  * baseline, under the name of the sf dir (`sf0.1`, ...): plans differ
+  * by scale (a join broadcast at one scale shuffles at another), so each
+  * scale has its own entry, and recording one leaves the others as they
+  * are. [[QueryProbe]]'s `--guard` replays its scale's entry and goes
   * red when a query grows a CartesianProduct / BroadcastNestedLoop /
   * extra shuffle Exchange / extra shuffle-side join relative to it
   * (r10 VERDICT task 5 — a plan regression is a red build, not a
   * next-round forensic exercise).
   */
 object PlanAudit {
+
+  /** scale (sf dir name) → query → counter → value */
+  type Snapshot = Map[String, Map[String, Map[String, Int]]]
+
+  /** The snapshot key of an sf dir: its last path element. */
+  def scaleOf(sfDir: String): String = new java.io.File(sfDir).getName
+
+  /** The snapshot in `file`; empty when there is no such file. */
+  def readSnapshot(file: java.io.File): Snapshot = {
+    import scala.jdk.CollectionConverters._
+    type JMap = java.util.Map[String, Object]
+    def obj(o: Object) = o.asInstanceOf[JMap].asScala.toMap
+    if (!file.exists()) Map.empty
+    else obj(new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(file, classOf[JMap]))
+      .map { case (sf, qs) => sf -> obj(qs).map { case (q, m) =>
+        q -> obj(m).map { case (k, v) => k -> v.asInstanceOf[Number].intValue }
+      } }
+  }
+
+  /** One line per query, scales and queries sorted by name. */
+  private def render(snap: Snapshot): String = {
+    def q(s: String) = "\"" + s + "\""
+    snap.toSeq.sortBy(_._1).map { case (sf, qs) =>
+      qs.toSeq.sortBy(_._1).map { case (n, m) =>
+        s"    ${q(n)}: " + m.toSeq.sortBy(_._1)
+          .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
+      }.mkString(s"  ${q(sf)}: {\n", ",\n", "\n  }")
+    }.mkString("{\n", ",\n", "\n}\n")
+  }
 
   /** The guarded plan-shape counters, from an executedPlan string.
     * Codegen spans are NOT here: under AQE the pre-execution plan
@@ -107,8 +140,8 @@ object PlanAudit {
     if (record) {
       val out = args(2)
       // sample plans under the GUARD's conditions: recall off and an
-      // empty cache catalog per query. Building a sortBig-style query
-      // registers a persist() eagerly, so a later query's plan would
+      // empty cache catalog per query. Building a query whose fixture
+      // persists a frame registers it eagerly, so a later query's plan would
       // otherwise compile against InMemoryRelation subtrees the guard
       // (which clearCache()s between queries) never sees — the r13
       // gate flagged doc_pipeline_funnel for exactly this record/guard
@@ -118,12 +151,12 @@ object PlanAudit {
         val m = countersOf(SparkEntry.queries(n)(spark, sfDir))
         spark.catalog.clearCache()
         println(s"[plans] $n $m")
-        s"""  "$n": {${m.toSeq.sortBy(_._1)
-            .map { case (k, v) => s""""$k": $v""" }.mkString(", ")}}"""
+        n -> m
       }
+      val scale = scaleOf(sfDir)
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-        rows.mkString("{\n", ",\n", "\n}\n"))
-      println(s"[plans] recorded ${rows.size} queries -> $out")
+        render(readSnapshot(new java.io.File(out)) + (scale -> rows.toMap)))
+      println(s"[plans] recorded ${rows.size} queries under $scale -> $out")
     } else {
       val names = args(1).split(",").toSeq
       for (n <- names) {

@@ -1,21 +1,14 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.graftbridge.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{Sort => LSort}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Ad-hoc per-query timing probe and bench-contract guard.
   *
   *  - `runMain graft.QueryProbe <sfDir> <name> [reps]` times one declared
-  *    query repeatedly (noop sink) and once with any final global Sort
-  *    stripped, to expose range-partitioning sample-pass re-execution.
-  *    Each rep prints its wall time and the number of Spark jobs it
-  *    started (building the frame included, so rep 1 also counts the
-  *    fixture builds it triggers).
+  *    query repeatedly (noop sink). Each rep prints its wall time and
+  *    the number of Spark jobs it started (building the frame included,
+  *    so rep 1 also counts the fixture builds it triggers).
   *  - `runMain graft.QueryProbe <sfDir> --explain <name>` prints the
   *    formatted physical plan of one declared query (the iterate-on-
   *    `.explain` loop the scale mandate prescribes, without writing a
@@ -30,14 +23,15 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *    build, not a next-round forensic exercise. Documented in
   *    README §bench.
   *
-  * The guard ALSO audits plan shapes (r10 VERDICT task 5): when
-  * `plan_shapes.json` exists (recorded by `PlanAudit --record`), each
-  * guarded query's pre-execution plan counters are compared against the
-  * snapshot — a CartesianProduct or BroadcastNestedLoop appearing, a
-  * shuffle Exchange count growing, or a broadcast join degrading to a
-  * shuffle-side join (smj+shj growth) is a red build even if the wall
-  * time still squeaks under the 2× timing slack. New queries absent
-  * from the snapshot only warn — re-record to enroll them.
+  * The guard ALSO audits plan shapes (r10 VERDICT task 5): each guarded
+  * query's pre-execution plan counters are compared against the entry
+  * `PlanAudit --record` wrote for the same scale (sf dir name) in
+  * `plan_shapes.json` — a CartesianProduct or BroadcastNestedLoop
+  * appearing, a shuffle Exchange count growing, or a broadcast join
+  * degrading to a shuffle-side join (smj+shj growth) is a red build even
+  * if the wall time still squeaks under the 2× timing slack. With no
+  * entry for that scale the guard exits 1 before timing anything. New
+  * queries absent from the entry only warn — re-record to enroll them.
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
@@ -61,21 +55,11 @@ object QueryProbe {
       timeJobs(spark, s"$name#$i") {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
-      // match Bench methodology: without this, queries whose final sort
-      // persists its child (sortBig) serve reps 2+ from the cache (the
-      // CacheManager matches the rebuilt rep's canonical plan), timing a
-      // cache read instead of the query (r16 measurement postmortem)
+      // match Bench methodology: without this, a query whose fixture
+      // persists a frame serves reps 2+ from the cache (the CacheManager
+      // matches the rebuilt rep's canonical plan), timing a cache read
+      // instead of the query
       spark.catalog.clearCache()
-    }
-    val df = fn(spark, sfDir)
-    val stripped = df.queryExecution.logical transform {
-      case LSort(_, true, child, _) => child
-    }
-    (1 to reps).foreach { i =>
-      timeJobs(spark, s"$name-nosort#$i") {
-        ColumnBridge.ofRows(spark, stripped)
-          .write.format("noop").mode("overwrite").save()
-      }
     }
     spark.stop()
   }
@@ -103,24 +87,11 @@ object QueryProbe {
     t
   }
 
-  /** [[time]] plus the number of Spark jobs `thunk` started. The listener
-    * bus is drained before the listener attaches and before the count is
-    * read, so no earlier job leaks in and no late event is lost. */
+  /** [[time]] plus the number of Spark jobs `thunk` started. */
   private def timeJobs(spark: SparkSession, tag: String)(thunk: => Unit)
       : Unit = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val t = wall(thunk)
-      ListenerBus.drain(sc)
-      println(f"[probe] $tag%-28s $t%8.2f s ${jobs.get}%6d jobs")
-    } finally sc.removeSparkListener(listener)
+    val (t, jobs) = ListenerBus.jobsDuring(spark.sparkContext)(wall(thunk))
+    println(f"[probe] $tag%-28s $t%8.2f s ${jobs.size}%6d jobs")
   }
 
   /** Bench-contract guard (see object doc). Returns the exit code. */
@@ -137,19 +108,21 @@ object QueryProbe {
       else top.get("parsed").asInstanceOf[java.util.Map[String, Object]]
     val recorded = root.get("queries").asInstanceOf[java.util.Map[String, Object]]
       .asScala.toMap.map { case (k, v) => k -> v.asInstanceOf[Number].doubleValue }
+    // plan-shape snapshot of this scale (PlanAudit --record)
+    val scale = PlanAudit.scaleOf(sfDir)
+    val shapes = PlanAudit.readSnapshot(new java.io.File("plan_shapes.json"))
+        .get(scale) match {
+      case Some(m) => m
+      case None =>
+        println(s"[guard] plan_shapes.json has no entry for $scale; record " +
+          s"one with `runMain graft.PlanAudit $sfDir --record plan_shapes.json`")
+        return 1
+    }
     val spark = session()
     val names = SparkEntry.queries.keys.toSeq.filter(recorded.contains)
     val best = scala.collection.mutable.Map.empty[String, Double]
     val first = scala.collection.mutable.Map.empty[String, Double]
     val crashed = scala.collection.mutable.Map.empty[String, String]
-    // plan-shape snapshot (PlanAudit --record); absent file = timing-only
-    val shapeFile = new java.io.File("plan_shapes.json")
-    val shapes: Map[String, Map[String, Int]] =
-      if (!shapeFile.exists()) Map.empty
-      else mapper.readValue(shapeFile, classOf[java.util.Map[String, Object]])
-        .asScala.toMap.map { case (q, m) =>
-          q -> m.asInstanceOf[java.util.Map[String, Object]].asScala.toMap
-            .map { case (k, v) => k -> v.asInstanceOf[Number].intValue } }
     val planRegressions = scala.collection.mutable.ArrayBuffer.empty[String]
     // interleave reps like Bench: min spans different host-noise windows
     for (rep <- 1 to reps; name <- names) {
@@ -189,8 +162,8 @@ object QueryProbe {
             if (now(k) > base(k))
               planRegressions += s"$name: single-task shape counter $k " +
                 s"grew ${base(k)}->${now(k)}"
-        } else if (rep == 1 && shapes.nonEmpty)
-          println(s"[guard] WARN $name not in plan_shapes.json — " +
+        } else if (rep == 1)
+          println(s"[guard] WARN $name not in plan_shapes.json ($scale) — " +
             "re-record with PlanAudit --record to enroll it")
         val t = time(s"$name#$rep") {
           df.write.format("noop").mode("overwrite").save()
@@ -285,9 +258,8 @@ object QueryProbe {
         println(f"[guard] build($k): $w%.2f s (not recorded)") }
     println(f"[guard] ${names.size - failures.size}/${names.size} queries within " +
       "2x of the recorded bench")
-    if (shapes.nonEmpty)
-      println(s"[guard] plan shapes: ${planRegressions.size} regressions " +
-        s"against ${shapes.size}-query snapshot")
+    println(s"[guard] plan shapes: ${planRegressions.size} regressions " +
+      s"against the ${shapes.size}-query $scale snapshot")
     failures.foreach(f => println(s"[guard] REGRESSION $f"))
     planRegressions.foreach(f => println(s"[guard] PLAN-REGRESSION $f"))
     wallFailures.foreach(f => println(s"[guard] BUILD-REGRESSION $f"))

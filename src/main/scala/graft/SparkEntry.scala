@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   *
   * Determinism rules (SURVEY.md §7.4 item 5) used throughout so results
   * hash-match across engines, partitionings, and row orders:
-  *  - every query is totally ordered (explicit tie-breaks);
+  *  - a query returns a row set in no particular order (the gate sorts
+  *    rows before hashing); every rank, pick or first-of inside it is
+  *    totally ordered (explicit tie-breaks);
   *  - big-sum aggregates go through exact decimal sums cast back to double
   *    (one IEEE division max afterwards);
   *  - doubles are rounded (6 places — round(x,6) has no representable
@@ -52,39 +54,6 @@ object SparkEntry {
     Observations.from(events(spark, dir), "user_id", "ts", "value")
 
   private[graft] def fmtTs(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
-
-  /** Final presentation sorts are OFF BY DEFAULT (r16 optimization,
-    * guide §2.4 "an `orderBy` used only to make output deterministic"),
-    * and since r17 the dropped contract is EXPLICIT rather than a silent
-    * identity function (r16 VERDICT item 8 / ADVICE): declared queries
-    * return UNORDERED row sets, matched by a canonicalizing oracle — the
-    * driver's gate sorts columns by name and rows before hashing
-    * (`scripts/check_oracle.py` is its faithful local stand-in; five
-    * declared oracles with no `ORDER BY` at all, `stream_ztable_append`
-    * and `ts_pca` among them multi-row, have hash-matched Spark's
-    * differently-ordered output for 15 straight rounds). What the
-    * default skips is a global range-partitioned sort of the full result
-    * (range-sample pass + sort shuffle) or a single-task gather — pure
-    * tail cost with no consumer: the bench's noop sink discards the
-    * order and a 100 TB pipeline's next stage re-partitions by ITS key.
-    *
-    * A consumer that DOES want ordered presentation output (a report
-    * writer, a strict harness) sets `spark.graft.presentationSort=true`
-    * and gets the query's documented natural order back: every call
-    * site still names its columns, so the contract is recoverable, not
-    * erased. `sortSmall` is for small-by-construction results (one
-    * gather task), `sortBig` for corpus-sized ones (real range sort). */
-  private def presentationSort(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.presentationSort", "false")
-      .toBoolean
-
-  private[graft] def sortSmall(df: DataFrame, cols: String*): DataFrame =
-    if (!presentationSort(df)) df
-    else df.repartition(1).sortWithinPartitions(cols.map(col): _*)
-
-  private[graft] def sortBig(df: DataFrame, cols: String*): DataFrame =
-    if (!presentationSort(df)) df
-    else df.orderBy(cols.map(col): _*)
 
   /** Per-PROCESS scratch root for every derived sink/index/checkpoint
     * path. [[Artifact]] only guards within one JVM; two concurrent JVMs

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.DecimalType
   * [[SparkEntry]]. */
 object StreamQueries {
   import Observations.{KeyCol, TsCol, ValueCol}
-  import SparkEntry.{t, events, fmtTs, sortSmall, sortBig, scratch, Artifact,
+  import SparkEntry.{t, events, fmtTs, scratch, Artifact,
     C4RulesOracle, syntheticUrls, UrlCanonCtes, e2eOracleSql, LrLabelSql,
     c4StructuredText, lrModelFor, rankFor, e2eStagesFor, e2eIngest, e2eUrl,
     e2eBenchOf, r6, DetMeanSql, ShingleCtes, BudgetAllocCtes,
@@ -357,7 +357,7 @@ object StreamQueries {
           .withColumn("host", UrlOps.hostOf(col("canon")))
           .dropDuplicates("canon")
       }
-      sortBig(res.select(col("canon"), col("host")), "canon")
+      res.select(col("canon"), col("host"))
     },
       // the streamed canonical-key set must equal the batch distinct —
       // same canonicalization CTEs, distinct tail
@@ -383,7 +383,7 @@ object StreamQueries {
     // maintained by the append/compact lifecycle the IVF/window indexes
     // already ship.
     "stream_pipeline" -> (((s, dir) => {
-      sortSmall(s.read.parquet(streamPipeFor(s, dir)), "doc_id")
+      s.read.parquet(streamPipeFor(s, dir))
     },
       // the streamed per-doc decisions must land on the batch pipeline's
       // kept set exactly — same composed replay, mix-stage tail
@@ -408,8 +408,7 @@ object StreamQueries {
           QualityModel.scoreText(col("text"), m).as("score"))
           .withColumn("pred", (col("score") > lit(0.0)).cast("int"))
       }
-      sortBig(res.select(col("doc"), col("y"), col("score"), col("pred")),
-        "doc")
+      res.select(col("doc"), col("y"), col("score"), col("pred"))
     },
       // the streamed scoring must land on the batch result bit-for-bit
       // (stateless dyadic fold) — same generated training-replay oracle
@@ -475,10 +474,9 @@ object StreamQueries {
             col("cum_tokens"), col("sub_alloc"))
           .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
       }
-      sortBig(s.read.option("basePath", sink).parquet(sink)
+      s.read.option("basePath", sink).parquet(sink)
           .select(col("doc_id"), col("lang"), col("n_chars"), col("res"),
-            col("cum_tokens"), col("sub_alloc")),
-        "doc_id")
+            col("cum_tokens"), col("sub_alloc"))
     },
       // the same allocation CTEs, sub-quotas by residue class, and
       // per-(lang, shard) window prefix fill — batch arrival order cannot
@@ -595,7 +593,7 @@ object StreamQueries {
         .join(broadcast(sub), Seq("lang", "res"))
         .withColumn("kg", col("cum_g") <= col("alloc_tokens"))
         .withColumn("ks", col("cum_s") <= col("sub_alloc"))
-      sortSmall(both.groupBy(col("lang")).agg(
+      both.groupBy(col("lang")).agg(
           sum(when(col("kg") && col("ks"), 1L).otherwise(0L))
             .as("kept_both"),
           sum(when(col("kg") && !col("ks"), 1L).otherwise(0L))
@@ -606,8 +604,7 @@ object StreamQueries {
             .as("extra_docs"),
           sum(when(!col("kg") && col("ks"), col("n_chars")).otherwise(0L))
             .cast("long").as("extra_tokens"),
-          max(col("alloc_tokens")).as("alloc_tokens")),
-        "lang")
+          max(col("alloc_tokens")).as("alloc_tokens"))
     },
       // both fills replayed over one keyed frame: per-(lang, res) prefix
       // for the sub-quota decision, per-lang prefix for the global one,
@@ -698,10 +695,9 @@ object StreamQueries {
         graft.streaming.StreamingDedup.appendShingleIndexBatch(
           b, "doc_id", "text", idx, batchId)
       }
-      sortBig(s.read.option("basePath", sink).parquet(sink)
+      s.read.option("basePath", sink).parquet(sink)
           .select(col("doc"), col("batch").cast("long").as("batch"),
-            col("dropped")),
-        "doc")
+            col("dropped"))
     },
       // prefix-batch replay of the evolving-index decisions: doc d
       // (residue/batch d % 4) is dropped iff some doc in an EARLIER
@@ -756,7 +752,7 @@ object StreamQueries {
                 (length(x) === length(acc) && x > acc), x)
                 .otherwise(acc)).as("rule"))
       }
-      sortBig(res, "doc")
+      res
     },
       // the streamed stateless decision must land on the batch blocklist
       // verdicts exactly — same oracle as doc_host_blocklist
@@ -771,14 +767,14 @@ object StreamQueries {
     // state is O(k) regardless of stream length, and the final sample
     // ≡ the batch top-k over everything streamed — same salt, same
     // kept set, same oracle as doc_sample_topk. Replayed as 8 REAL
-    // micro-batches (split source, maxFilesPerTrigger=1) so cross-batch
+    // micro-batches (one doc_id residue class each) so cross-batch
     // eviction actually executes.
     "stream_sample_topk" -> (((s, dir) => {
       val k = 100
       val p = scratch("stream_topk", dir)
       var state = Vector.empty[(String, Long, String)]
-      graft.streaming.StreamingDedup.replayForeachBatchSplit(
-        s, s"$dir/documents.parquet", s"$p/src", s"$p/ckpt", 8,
+      graft.streaming.StreamingDedup.replayForeachBatchResidue(
+        s, s"$dir/documents.parquet", s"$p/src", s"$p/ckpt", 8, "doc_id",
         org.apache.spark.sql.streaming.OutputMode.Append()) { st =>
         st.select(col("doc_id"), col("lang"),
           Corpus.sampleKey(col("doc_id")).as("sample_key"))
@@ -792,9 +788,8 @@ object StreamQueries {
         state = (state ++ top).distinct.sortBy(t => (t._1, t._2)).take(k)
       }
       import s.implicits._
-      sortSmall(state.toDF("sample_key", "doc_id", "lang")
-        .select(col("doc_id"), col("lang"), col("sample_key")),
-        "sample_key", "doc_id")
+      state.toDF("sample_key", "doc_id", "lang")
+        .select(col("doc_id"), col("lang"), col("sample_key"))
     },
       // the streamed running top-k must land on the batch top-k exactly
       // (min-wise merge ≡ global top-k) — same oracle as doc_sample_topk
@@ -814,7 +809,7 @@ object StreamQueries {
           st.select(col("doc_id"), c4StructuredText.as("text")),
           "doc_id", "text")
       }
-      sortBig(res, "doc_id")
+      res
     },
       // the stateless streamed C4 pass must equal the batch pass
       // row-for-row — same oracle
@@ -859,9 +854,9 @@ object StreamQueries {
           .agg(count(lit(1)).as("n_events"),
             graft.ops.Resample.detMean(col("value")).as("mean_value"))
       }
-      sortSmall(res.select(col("c_mktsegment"),
+      res.select(col("c_mktsegment"),
         fmtTs(col("_w").getField("start")).as("day"), col("n_events"),
-        r6(col("mean_value")).as("mean_value")), "c_mktsegment", "day")
+        r6(col("mean_value")).as("mean_value"))
     },
       // same epoch-aligned day bucket, exact-decimal mean, portable 6-dp
       s"""SELECT c_mktsegment,
@@ -888,9 +883,9 @@ object StreamQueries {
           .agg(count(lit(1)).as("n_events"),
             graft.ops.Resample.detMean(col("value")).as("mean_value"))
       }
-      sortBig(res.select(col("event_type"),
+      res.select(col("event_type"),
         fmtTs(col("_w").getField("start")).as("win_start"), col("n_events"),
-        r6(col("mean_value")).as("mean_value")), "event_type", "win_start")
+        r6(col("mean_value")).as("mean_value"))
     },
       // sliding windows ≡ two shifted tumbling buckets per event (2 h / 1 h)
       s"""WITH x AS (
@@ -914,10 +909,9 @@ object StreamQueries {
     // in-memory result) against the batch oracle.
     "stream_sink_rollup" -> (((s, dir) => {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      sortBig(s.read.parquet(streamSinkFor(s, dir))
+      s.read.parquet(streamSinkFor(s, dir))
         .select(col("event_type"), fmtTs(col("ws")).as("bucket_ts"),
-          col("n_events"), r6(col("mean_value")).as("mean_value")),
-        "event_type", "bucket_ts")
+          col("n_events"), r6(col("mean_value")).as("mean_value"))
     },
       // the disk contents must equal the direct batch rollup
       s"""SELECT event_type,
@@ -971,10 +965,9 @@ object StreamQueries {
             sum(round(col("cost"), 6).cast(dec6)).as("_c"),
             sum(col("oov")).as("_o"))
       }
-      sortBig(res.select(col("doc_id"), col("n_bigrams"),
+      res.select(col("doc_id"), col("n_bigrams"),
         r6(col("_c").cast("double") / col("n_bigrams")).as("nll"),
-        r6(col("_o").cast("double") / col("n_bigrams")).as("oov_frac")),
-        "doc_id")
+        r6(col("_o").cast("double") / col("n_bigrams")).as("oov_frac"))
     },
       // same frozen-LM lookups; contributions round per OCCURRENCE (the
       // single-streaming-aggregate form)
@@ -1033,9 +1026,9 @@ object StreamQueries {
           "s_user = p_user AND p_ts >= s_ts AND " +
             "p_ts <= s_ts + interval 7 days"))
       }
-      sortBig(res.select(col("signup_id"), col("purchase_id"),
+      res.select(col("signup_id"), col("purchase_id"),
         (EventOps.epochS(col("p_ts")) - EventOps.epochS(col("s_ts")))
-          .as("gap_s")), "signup_id", "purchase_id")
+          .as("gap_s"))
     },
       // batch self-join twin of the streaming interval join: same 7-day
       // event-time range, same floor-epoch gap
@@ -1065,7 +1058,7 @@ object StreamQueries {
           .dropDuplicatesWithinWatermark("user_id", "event_type")
           .select(col("user_id"), col("event_type"))
       }
-      sortBig(res, "user_id", "event_type")
+      res
     },
       // the watermark-bounded streaming dedup emits exactly the distinct
       // key set of the bounded replay
@@ -1090,8 +1083,8 @@ object StreamQueries {
         graft.streaming.StreamingDedup.minhashDupStream(
           s, st.where(col("doc_id") % 5 === 0), "doc_id", "text", idx, 0.9)
       }
-      sortSmall(res.select(col("doc_new"), col("doc_corpus"),
-        round(col("jaccard"), 6).as("jaccard")), "doc_new", "doc_corpus")
+      res.select(col("doc_new"), col("doc_corpus"),
+        round(col("jaccard"), 6).as("jaccard"))
     },
       // same shingle/Jaccard math as JaccardOracle, restricted to pairs
       // crossing the stream/corpus split (new = doc_id % 5 == 0)
@@ -1120,8 +1113,8 @@ object StreamQueries {
         graft.streaming.StreamingDedup.simhashDupStream(
           s, st.where(col("doc_id") % 5 === 0), "doc_id", "text", idx)
       }
-      sortSmall(res.select(col("doc_new"), col("doc_corpus"),
-        col("hamming").cast("long").as("hamming")), "doc_new", "doc_corpus")
+      res.select(col("doc_new"), col("doc_corpus"),
+        col("hamming").cast("long").as("hamming"))
     },
       // independent recomputation of the portable md5-derived 60-bit
       // simhash (same construction as Dedup.portableSimhash64: token hash
@@ -1172,8 +1165,8 @@ object StreamQueries {
       val kept = passes(t(s, dir, "documents").where(col("doc_id") % 5 === 0))
         .join(pairs.select(col("doc_new")),
           col("doc_id") === col("doc_new"), "left_anti")
-      sortSmall(kept.select(col("doc_id"), col("pred_lang"),
-        col("n_tokens")), "doc_id")
+      kept.select(col("doc_id"), col("pred_lang"),
+        col("n_tokens"))
     },
       // streaming curation decision: quality + langid (same rounded
       // expressions as the batch gates) over the new split, minus docs
@@ -1238,11 +1231,11 @@ object StreamQueries {
         .agg(count(lit(1)).cast("long").as("n_chunks"))
       val dup = hits.groupBy(col("doc_new").as("doc"))
         .agg(count(lit(1)).cast("long").as("dup_chunks"))
-      sortSmall(tot.join(dup, Seq("doc"), "left")
+      tot.join(dup, Seq("doc"), "left")
         .select(col("doc"), col("n_chunks"),
           coalesce(col("dup_chunks"), lit(0L)).as("dup_chunks"),
           (col("n_chunks") - coalesce(col("dup_chunks"), lit(0L)))
-            .as("kept_chunks")), "doc")
+            .as("kept_chunks"))
     },
       // chunk membership recomputed over chunk STRINGS: per new-split doc,
       // how many of its 16-token chunks the corpus split already contains
@@ -1314,8 +1307,8 @@ object StreamQueries {
           Observations.from(Observations.normalizeEventTs(st),
             "user_id", "ts", "value"))
       }
-      sortSmall(res.select(col("series_key"), col("n"),
-        round(col("mean"), 6).as("mean")), "series_key")
+      res.select(col("series_key"), col("n"),
+        round(col("mean"), 6).as("mean"))
     },
       // the stateful running mean reproduces the batch detMean op sequence
       // exactly (scaled-long exact sum -> decimal -> double -> / count)
@@ -1341,7 +1334,7 @@ object StreamQueries {
         graft.streaming.StreamingDedup.bloomFilterStream(
           s, st, "doc_id", "text", idx, m = 65536, k = 5)
       }
-      sortSmall(res.select(col("doc"), col("maybe_dup")), "doc")
+      res.select(col("doc"), col("maybe_dup"))
     },
       // the streaming twin probes the same portable filter over the same
       // probe/plant split, so the oracle is the batch oracle's flags CTE
@@ -1373,11 +1366,11 @@ object StreamQueries {
         .agg(count(lit(1)).cast("long").as("n_windows"))
       val dup = hits.groupBy(col("doc_new").as("doc"))
         .agg(count(lit(1)).cast("long").as("dup_windows"))
-      sortBig(tot.join(dup, Seq("doc"), "left")
+      tot.join(dup, Seq("doc"), "left")
         .select(col("doc"), col("n_windows"),
           coalesce(col("dup_windows"), lit(0L)).as("dup_windows"),
           (col("n_windows") - coalesce(col("dup_windows"), lit(0L)))
-            .as("clean_windows")), "doc")
+            .as("clean_windows"))
     },
       // identical corpus window-hash index (distinct md5 8-token windows
       // of the %5<>0 slice), identical probe slice + planted
@@ -1425,8 +1418,8 @@ object StreamQueries {
           s, st.where(col("vec_id") >= 8 && col("vec_id") < 16),
           "vec_id", "embedding", idx, k = 3, nProbe = 16)
       }
-      sortSmall(res.select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("candidate_id"), col("cosine")), "query_id", "rank")
+      res.select(col("query_id"), col("rank").cast("long").as("rank"),
+        col("candidate_id"), col("cosine"))
     },
       // exhaustive probing (nProbe = nLists) makes the streamed IVF probe
       // the exact cosine top-k, so the oracle is brute force over the same
@@ -1469,8 +1462,7 @@ object StreamQueries {
         Kmeans.semProbeStream(st, "vec_id", "embedding", m, members,
           minCosine = 0.95)
       }
-      sortBig(res.select(col("query_id"), col("n_dups"), col("first_dup")),
-        "query_id")
+      res.select(col("query_id"), col("n_dups"), col("first_dup"))
     },
       // same corpus training replay; stream queries re-derived from e
       // (copies + negations); BOTH query and member assignments replay the
@@ -1540,8 +1532,8 @@ object StreamQueries {
         s, path, "stream_sessions_result") { st =>
         graft.streaming.StreamingOps.sessionizeStream(st, 900)
       }
-      sortBig(res.select(col("series_key"), col("start_s"), col("end_s"),
-        col("n_events")), "series_key", "start_s")
+      res.select(col("series_key"), col("start_s"), col("end_s"),
+        col("n_events"))
     },
       // streaming sessionization: gap math on SECOND-truncated epochs,
       // ties ordered by (epoch-millis, value) — the exact semantics of

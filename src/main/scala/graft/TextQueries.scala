@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * Each entry pairs a declared query with its DuckDB oracle SQL; see
   * [[SparkEntry]]. */
 object TextQueries {
-  import SparkEntry.{t, sortSmall, sortBig, Artifact, unigramDictFor,
+  import SparkEntry.{t, Artifact, unigramDictFor,
     bpeMergesFor, C4RulesOracle, c4StructuredText, r6, CmsTopkCtes, Query}
   import TextAnalysis.{KnDiscount, LangIdDim}
 
@@ -178,10 +178,10 @@ object TextQueries {
           .when(col("doc_id") % 10 === 5,
             lit(" pay 5500005555555559 not 1234-5678-9012-3456"))
           .otherwise(lit(""))).as("text"))
-      sortBig(TextAnalysis.piiRedact(planted, "doc_id", "text")
+      TextAnalysis.piiRedact(planted, "doc_id", "text")
         .select(col("doc"), col("n_emails"), col("n_phones"), col("n_ips"),
           col("n_ssns"), col("n_ccs"),
-          md5(col("redacted")).as("redacted_md5")), "doc")
+          md5(col("redacted")).as("redacted_md5"))
     },
       // same plant, same RE2-compatible patterns, same
       // email->phone->ip->ssn->card replacement order; counts on the
@@ -238,8 +238,8 @@ object TextQueries {
     // corpus total broadcasts, tf joins freq on term under AQE skew
     // handling.
     "text_unigram_nll" -> (((s, dir) => {
-      sortBig(TextAnalysis.unigramNll(t(s, dir, "documents"),
-        "doc_id", "text"), "doc")
+      TextAnalysis.unigramNll(t(s, dir, "documents"),
+        "doc_id", "text")
     },
       // identical rounded-contribution decimal sum + one final IEEE
       // division; ln ulp differences die in the 6 dp round
@@ -284,8 +284,8 @@ object TextQueries {
     // note). The oracle recomputes cutoffs with quantile_cont, which
     // ts_percentiles already pinned bit-identical to Spark's percentile.
     "text_nll_buckets" -> (((s, dir) => {
-      sortBig(TextAnalysis.nllBuckets(t(s, dir, "documents"),
-        "doc_id", "text", "lang"), "doc")
+      TextAnalysis.nllBuckets(t(s, dir, "documents"),
+        "doc_id", "text", "lang")
     },
       // same nll computation, then per-language quantile_cont tercile
       // cutoffs (interpolation-identical to Spark's percentile) and the
@@ -397,7 +397,7 @@ object TextQueries {
     "text_c4_rules" -> (((s, dir) => {
       val structured = t(s, dir, "documents")
         .select(col("doc_id"), c4StructuredText.as("text"))
-      sortBig(TextAnalysis.c4Rules(structured, "doc_id", "text"), "doc_id")
+      TextAnalysis.c4Rules(structured, "doc_id", "text")
     },
       // C4 line/page rules: DuckDB list comprehension mirrors the Spark
       // filter() lambda clause for clause; kept text reassembled with the
@@ -405,8 +405,8 @@ object TextQueries {
       C4RulesOracle)),
 
     "text_nll_cuts_approx" -> (((s, dir) => {
-      sortSmall(TextAnalysis.nllCutsApprox(t(s, dir, "documents"),
-        "doc_id", "text", "lang"), "lang")
+      TextAnalysis.nllCutsApprox(t(s, dir, "documents"),
+        "doc_id", "text", "lang")
     },
       // the serving twin pins the exact tercile order statistics plus
       // TRUE for both sketch bounds — a percentile_approx answer outside
@@ -429,7 +429,7 @@ object TextQueries {
     // consume-twice: the scored frame is cached per (session, sf dir) —
     // the confusion audit reads the same predictions a pipeline would.
     "text_langid_trained" -> (((s, dir) => {
-      sortBig(langIdTrainedFor(s, dir), "doc")
+      langIdTrainedFor(s, dir)
     },
       // NB training replay: (lang, bucket) counts -> add-1 smoothed
       // 6-dp-rounded log-likelihoods -> exact-decimal per-(doc, lang)
@@ -486,8 +486,7 @@ object TextQueries {
     "text_bpe_tokens" -> (((s, dir) => {
       val docs = t(s, dir, "documents")
       val merges = bpeMergesFor(s, dir)
-      sortBig(graft.ext.Bpe.tokenCounts(docs, "doc_id", "text", merges),
-        "doc")
+      graft.ext.Bpe.tokenCounts(docs, "doc_id", "text", merges)
     },
       // generated replay of the full BPE lifecycle: 8 training rounds over
       // the word dict + the same 6-pass replace application
@@ -504,8 +503,8 @@ object TextQueries {
     // Viterbi once per dictionary word, occurrences join back.
     "text_unigram_tokens" -> (((s, dir) => {
       val docs = t(s, dir, "documents")
-      sortBig(graft.ext.Unigram.tokenCountsFromDict(docs, "doc_id", "text",
-        unigramDictFor(s, dir)), "doc")
+      graft.ext.Unigram.tokenCountsFromDict(docs, "doc_id", "text",
+        unigramDictFor(s, dir))
     },
       // generated unigram-LM training replay (seed -> 2 Viterbi-EM rounds
       // -> final segmentation), identical arithmetic and tie-breaks
@@ -559,8 +558,7 @@ object TextQueries {
     "text_bpe_tokens_typed" -> (((s, dir) => {
       val docs = t(s, dir, "documents")
       val merges = bpeMergesFor(s, dir)
-      sortBig(graft.ext.Bpe.tokenCountsTyped(docs, "doc_id", "text", merges),
-        "doc")
+      graft.ext.Bpe.tokenCountsTyped(docs, "doc_id", "text", merges)
     },
       // the type-level apply path must be the SAME function — identical
       // generated oracle, so the dict-once + join-back plan is pinned to
@@ -593,10 +591,10 @@ object TextQueries {
         .otherwise(col("text"))
       def nTok(c: Column) =
         size(regexp_extract_all(c, lit("\\S+"), lit(0))).cast("long")
-      sortBig(t(s, dir, "documents").select(col("doc_id").as("doc"),
+      t(s, dir, "documents").select(col("doc_id").as("doc"),
         planted.cast("long").as("is_cjk"),
         nTok(txt).as("ws_tokens"),
-        nTok(TextAnalysis.segmentCjk(txt)).as("seg_tokens")), "doc")
+        nTok(TextAnalysis.segmentCjk(txt)).as("seg_tokens"))
     },
       // same planted transliteration + the same literal character-class
       // ranges (TextAnalysis.CjkClass interpolated verbatim — Java regex
@@ -639,11 +637,10 @@ object TextQueries {
     // path, unlike the self-scored text_bigram_nll; oov_frac is the
     // companion filter signal
     "text_lm_score" -> (((s, dir) => {
-      sortBig(TextAnalysis.lmScore(t(s, dir, "documents"), "doc_id", "text",
+      TextAnalysis.lmScore(t(s, dir, "documents"), "doc_id", "text",
           col("lang") === "en")
         .select(col("doc").as("doc_id"), col("n_bigrams"), col("nll"),
-          col("oov_frac")),
-        "doc_id")
+          col("oov_frac"))
     },
       // identical LM counts from the en subset, identical backoff formula
       // and 6-dp contribution discipline
@@ -701,9 +698,8 @@ object TextQueries {
     // scores high even when its unigrams are common — the failure mode
     // text_unigram_nll cannot see; same skew-split token-mass join
     "text_bigram_nll" -> (((s, dir) => {
-      sortBig(TextAnalysis.bigramNll(t(s, dir, "documents"), "doc_id", "text")
-        .select(col("doc").as("doc_id"), col("n_bigrams"), col("nll")),
-        "doc_id")
+      TextAnalysis.bigramNll(t(s, dir, "documents"), "doc_id", "text")
+        .select(col("doc").as("doc_id"), col("n_bigrams"), col("nll"))
     },
       // identical bigram stream, count frames, 6-dp contribution rounds,
       // exact-decimal sum, one final division
@@ -730,9 +726,8 @@ object TextQueries {
     // token-mass join is skew-split (broadcast head). The oracle replays
     // the identical type counts and operation-ordered float formula.
     "text_kn3_nll" -> (((s, dir) => {
-      sortBig(TextAnalysis.kn3Nll(t(s, dir, "documents"), "doc_id", "text")
-        .select(col("doc").as("doc_id"), col("n_trigrams"), col("kn_nll")),
-        "doc_id")
+      TextAnalysis.kn3Nll(t(s, dir, "documents"), "doc_id", "text")
+        .select(col("doc").as("doc_id"), col("n_trigrams"), col("kn_nll"))
     },
       // interpolated Kneser–Ney trigram replay: identical type-count CTEs
       // (history / continuation / middle statistics all from the distinct
@@ -792,10 +787,10 @@ object TextQueries {
         |FROM g GROUP BY 1 ORDER BY c DESC, bigram LIMIT 40""".stripMargin)),
 
     "text_repetition" -> (((s, dir) => {
-      sortBig(TextAnalysis.repetitionStats(t(s, dir, "documents"),
+      TextAnalysis.repetitionStats(t(s, dir, "documents"),
           "doc_id", "text")
         .select(col("doc").as("doc_id"), col("n_2grams"),
-          col("top_2gram_frac"), col("dup_2gram_frac")), "doc_id")
+          col("top_2gram_frac"), col("dup_2gram_frac"))
     },
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |g AS (SELECT doc_id,
@@ -815,10 +810,10 @@ object TextQueries {
     // extraction); ranking is over the ROUNDED score so cross-engine
     // last-bit ln() differences cannot reorder ranks
     "text_tfidf" -> (((s, dir) => {
-      sortBig(TextAnalysis.tfidfTopTerms(t(s, dir, "documents"),
+      TextAnalysis.tfidfTopTerms(t(s, dir, "documents"),
           "doc_id", "text", topN = 3)
         .select(col("doc").as("doc_id"), col("rank"), col("term"),
-          col("tfidf")), "doc_id", "rank")
+          col("tfidf"))
     },
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
@@ -851,9 +846,9 @@ object TextQueries {
         .otherwise(lit("\uFB01"))
       val raw = t(s, dir, "documents")
         .select(col("doc_id"), concat(pre, lit(" "), col("text")).as("text"))
-      sortBig(TextAnalysis.nfcAudit(raw, "doc_id", "text")
+      TextAnalysis.nfcAudit(raw, "doc_id", "text")
         .select(col("doc").as("doc_id"), col("n_raw"), col("n_nfc"),
-          col("changed"), col("h")), "doc_id")
+          col("changed"), col("h"))
     },
       // same planted prefixes built from codepoints (chr), normalized with
       // DuckDB's ICU nfc_normalize — pins the JDK Normalizer NFC output,
@@ -875,10 +870,10 @@ object TextQueries {
     // terms; contributions rounded-then-decimal-summed so ranks are
     // partition- and engine-invariant
     "text_bm25" -> (((s, dir) => {
-      sortSmall(TextAnalysis.bm25TopK(t(s, dir, "documents"),
+      TextAnalysis.bm25TopK(t(s, dir, "documents"),
           "doc_id", "text", Bm25Queries, k1 = 1.2, b = 0.75, topK = 10)
         .select(col("query_id"), col("rank"), col("doc").as("doc_id"),
-          col("score")), "query_id", "rank")
+          col("score"))
     },
       // GENERATED from Bm25Queries so engine and oracle score identical
       // terms; arithmetic mirrors TextAnalysis.bm25TopK token-for-token

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * [[SparkEntry]]. */
 object TsQueries {
   import Observations.{KeyCol, TsCol, ValueCol}
-  import SparkEntry.{t, events, obsEvents, fmtTs, sortSmall, sortBig, scratch,
+  import SparkEntry.{t, events, obsEvents, fmtTs, scratch,
     Artifact, r6, DetMeanSql, Query}
 
   /** events keyed by event_type (the cross-signal alignment fixtures). */
@@ -64,10 +64,9 @@ object TsQueries {
 
     // T1 resample (pandas-parity full grid, empty buckets null)
     "ts_resample_grid" -> (((s, dir) => {
-      sortBig(Resample.transformFixed(obsEvents(s, dir), 3600, grid = true)
+      Resample.transformFixed(obsEvents(s, dir), 3600, grid = true)
         .select(col(KeyCol).as("series_key"), fmtTs(col(TsCol)).as("bucket_ts"),
-          r6(col(ValueCol)).as("value")),
-        "series_key", "bucket_ts")
+          r6(col(ValueCol)).as("value"))
     },
       s"""WITH b AS (
          |  SELECT user_id, time_bucket(INTERVAL '3600 seconds', ts) AS bt,
@@ -96,10 +95,9 @@ object TsQueries {
     // T2 linear interpolation over the gridded resample
     "ts_interpolate" -> (((s, dir) => {
       val grid = Resample.transformFixed(obsEvents(s, dir), 3600, grid = true)
-      sortBig(Interpolate.transform(grid, Parameters.empty)
+      Interpolate.transform(grid, Parameters.empty)
         .select(col(KeyCol).as("series_key"), fmtTs(col(TsCol)).as("bucket_ts"),
-          r6(col(ValueCol)).as("value")),
-        "series_key", "bucket_ts")
+          r6(col(ValueCol)).as("value"))
     },
       s"""WITH b AS (
          |  SELECT user_id, time_bucket(INTERVAL '3600 seconds', ts) AS bt,
@@ -366,14 +364,10 @@ object TsQueries {
     // (ts_percentiles pinned them ≡ quantile_cont bit-for-bit), rounded
     // 6 dp BEFORE the branch so clamp decisions are engine-portable.
     "ts_winsorize" -> (((s, dir) => {
-      sortBig(graft.ext.CrossStats.winsorize(obsEvents(s, dir), 0.05, 0.95)
+      graft.ext.CrossStats.winsorize(obsEvents(s, dir), 0.05, 0.95)
         .select(col(KeyCol).as("series_key"),
           EventOps.epochS(col(TsCol)).as("ts_s"),
-          r6(col("value_w")).as("value_w"), col("clipped")),
-        // clipped as 4th key: value == hi (clipped=0) and value > hi
-        // (clipped=1) rows tie on the first three, and the tie order
-        // would otherwise be engine-arbitrary (ADVICE r9)
-        "series_key", "ts_s", "value_w", "clipped")
+          r6(col("value_w")).as("value_w"), col("clipped"))
     },
       // identical bounds (quantile_cont ≡ Spark percentile bit-for-bit,
       // rounded 6 dp before the branch) and identical clamp decision
@@ -474,10 +468,9 @@ object TsQueries {
     "ts_int_interpolate" -> (((s, dir) => {
       val obs = events(s, dir).select(col("user_id").cast("string").as(KeyCol),
         col("event_id").as(IntAxis.IdxCol), col("value"))
-      sortBig(IntAxis.interpolate(IntAxis.resampleFixed(obs, 1000L, grid = true))
+      IntAxis.interpolate(IntAxis.resampleFixed(obs, 1000L, grid = true))
         .select(col(KeyCol).as("series_key"), col(IntAxis.IdxCol),
-          r6(col(ValueCol)).as("value")),
-        "series_key", IntAxis.IdxCol)
+          r6(col(ValueCol)).as("value"))
     },
       s"""WITH b AS (
          |  SELECT user_id, event_id - (event_id % 1000) AS bi,
@@ -1109,12 +1102,12 @@ object TsQueries {
       val back = s.read
         .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
         .json(jsonlFor(s, dir))
-      sortSmall(back.groupBy(col("lang")).agg(
+      back.groupBy(col("lang")).agg(
         count(lit(1)).as("n_docs"),
         sum(col("doc_id")).as("sum_doc_id"),
         sum(col("n_chars")).as("sum_n_chars"),
         sum(pmod(conv(substring(md5(col("text")), 1, 15), 16, 10)
-          .cast("long"), lit(1000003L))).as("checksum")), "lang")
+          .cast("long"), lit(1000003L))).as("checksum"))
     },
       // the roundtrip must preserve every byte: the oracle computes the
       // identical per-lang checksums from the SOURCE table

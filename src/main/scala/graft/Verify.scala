@@ -41,7 +41,7 @@ object Verify {
         d.mkdirs()
         Files.writeString(Paths.get(s"$outDir/$name/_ERROR"), msg + "\n")
       }
-      // Release blocks persisted by sortBig-style queries between dumps.
+      // Release blocks persisted by query fixtures between dumps.
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -19,9 +19,18 @@ object Dedup {
 
   /** Shingle width in words of the n-gram sets the Jaccard ops compare. */
   private[graft] val ShingleWidth = 3
-  /** [[minhashDupPairs]]' signature length and LSH band count. */
-  private val MinhashHashes = 64
-  private val MinhashBands = 16
+  /** The MinHash index shape: signature length and LSH band count of
+    * [[minhashDupPairs]] and of the streaming probe
+    * (`StreamingDedup.buildMinhashIndex`/`minhashDupStream`), which reads
+    * these so its hashes match the batch path by construction. */
+  private[graft] val MinhashHashes = 64
+  private[graft] val MinhashBands = 16
+  /** The SimHash index shape: the Hamming radius and block count of the
+    * combination banding ([[simhashBands]]) behind
+    * [[simhashDupPairsAtScalePortable]] and the streaming probe
+    * (`StreamingDedup.buildSimhashIndex`/`simhashDupStream`). */
+  private[graft] val SimhashMaxDist = 3
+  private[graft] val SimhashBlocks = 6
 
   /** Exact dedup: one surviving row id per distinct key, deterministic
     * keeper = min id. `SELECT min(id), count(*) GROUP BY key` — map-side
@@ -643,12 +652,11 @@ object Dedup {
     * blocks, so some combination avoids every differing block and the
     * pair collides there — the same exact-recall pigeonhole as plain chunk
     * banding, but each table key now carries ≈ 64·(nBlocks−maxDist)/
-    * nBlocks bits: with the 6-block/d=3 default that is C(6,3)=20 tables
+    * nBlocks bits: with the 6-block/d=3 shape that is C(6,3)=20 tables
     * of 32-bit keys → 2³² buckets/table, vs 2¹⁶ for the 4×16 chunking.
     * Ref: Manku, Jain, Sarma — "Detecting Near-Duplicates for Web
     * Crawling", WWW'07 §3 (public algorithm). */
-  def simhashBands(sim: DataFrame, maxDist: Int = 3,
-      nBlocks: Int = 6): DataFrame = {
+  def simhashBands(sim: DataFrame, maxDist: Int, nBlocks: Int): DataFrame = {
     require(maxDist < nBlocks, "need nBlocks > maxDist for the pigeonhole")
     val base = 64 / nBlocks
     val extra = 64 % nBlocks
@@ -670,19 +678,19 @@ object Dedup {
   /** Combination-banded near-dup pairs over the PORTABLE 60-bit
     * fingerprint ([[portableSimhash64]]) instead of the engine xxhash64
     * one. The output is fully DETERMINISTIC and engine-independent:
-    * banding guarantees every pair within `maxDist` collides in some
-    * band (pigeonhole) and the exact Hamming verify removes every
+    * banding guarantees every pair within [[SimhashMaxDist]] collides in
+    * some band (pigeonhole) and the exact Hamming verify removes every
     * false candidate, so the result is EXACTLY the set of pairs with
-    * portable-fingerprint Hamming distance <= maxDist — an independent
-    * SQL engine recomputing md5-token simhashes and an all-pairs
-    * Hamming scan reproduces it bit-for-bit. Combination banding pays
-    * C(nBlocks, nBlocks−maxDist)× the shuffle volume of a 4×16 chunk
+    * portable-fingerprint Hamming distance <= [[SimhashMaxDist]] — an
+    * independent SQL engine recomputing md5-token simhashes and an
+    * all-pairs Hamming scan reproduces it bit-for-bit. Combination
+    * banding pays C(6, 3) = 20× the shuffle volume of a 4×16 chunk
     * banding to push bucket count from ~2¹⁶ to ~2³² per band, so random
     * collisions stay negligible out to ~10⁹ docs. */
   def simhashDupPairsAtScalePortable(df: DataFrame, idCol: String,
-      textCol: String, maxDist: Int = 3, nBlocks: Int = 6): DataFrame =
+      textCol: String): DataFrame =
     dupPairsFromSim(portableSimhash64(df, idCol, textCol).cache(),
-      maxDist, nBlocks)
+      SimhashMaxDist, SimhashBlocks)
 
   /** Shared banding+verify tail: `sim` is a (doc, simhash) frame. */
   private[ext] def dupPairsFromSim(sim: DataFrame, maxDist: Int,
@@ -724,7 +732,13 @@ object Dedup {
     * SemDeDup does not call it: its pairs never cross a k-means cluster,
     * so [[Kmeans.keepWithinClusters]] resolves them per cluster in one
     * pass. */
-  def dedupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+  def dedupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    clustersWithRounds(pairs, aCol, bCol)._1
+
+  /** [[dedupClusters]] and the number of label-propagation rounds it ran
+    * (ScaleSmoke's chain tier pins the O(log diameter) claim with it). */
+  private[graft] def clustersWithRounds(pairs: DataFrame, aCol: String,
+      bCol: String): (DataFrame, Int) = {
     // eagerly checkpoint the pair frame FIRST: the two union branches
     // below execute CONCURRENTLY inside one job, and a cache() does not
     // help there — the branches race the cache population, so the second
@@ -792,14 +806,8 @@ object Dedup {
     // tripping this means a bug, not a big graph.
     require(changed == 0,
       s"dedupClusters did not converge in $rounds rounds ($changed labels still changing)")
-    lastClusterRounds = rounds
-    labels
+    (labels, rounds)
   }
-
-  /** Round count of the most recent [[dedupClusters]] call in this JVM —
-    * diagnostic only (ScaleSmoke's chain tier pins the O(log diameter)
-    * claim with it). */
-  @volatile private[graft] var lastClusterRounds: Int = 0
 
   /** doc → representative (min doc id of identical full content) — the
     * exact-duplicate grouping stage of [[dedupClustersDistinctWith]]. One

@@ -26,33 +26,21 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   */
 object StreamingDedup {
 
-  /** The MinHash index shape: shingle width in words, signature length
-    * and band count. [[buildMinhashIndex]] writes its band table in this
-    * shape and [[minhashDupStream]] bands its probes the same way, so a
-    * probe always joins on band keys its index holds. */
-  private val MinhashShingle = 3
-  private val MinhashHashes = 64
-  private val MinhashBands = 16
-
-  /** The SimHash index shape: the Hamming radius and the Manku block
-    * count, shared by [[buildSimhashIndex]] and [[simhashDupStream]]. */
-  private val SimhashMaxDist = 3
-  private val SimhashBlocks = 6
-
   /** Row-local per-document profile: sorted distinct shingle hashes, set
     * size, and MinHash signature — everything the probe needs, computed
     * without explode/groupBy so it runs as a stateless streaming stage.
     * Hash-identical to the batch path (shared column builders in
-    * [[graft.ext.Dedup]]). Documents with fewer than [[MinhashShingle]]
+    * [[graft.ext.Dedup]]). Documents with fewer than `Dedup.ShingleWidth`
     * words have no shingles and are dropped, matching the batch
     * operators. */
   def docProfiles(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("doc"), split(col(textCol), " ").as("_w"))
-      .select(col("doc"), Dedup.shingleArray(col("_w"), MinhashShingle).as("shs"))
+      .select(col("doc"),
+        Dedup.shingleArray(col("_w"), Dedup.ShingleWidth).as("shs"))
       .where(size(col("shs")) > 0)
       .select(col("doc"), sort_array(col("shs")).as("shs"),
         size(col("shs")).as("n"),
-        Dedup.minhashSignature(col("shs"), MinhashHashes).as("sig"))
+        Dedup.minhashSignature(col("shs"), Dedup.MinhashHashes).as("sig"))
 
   /** Build the persisted MinHash index of a corpus: `<path>/bands` — one
     * (doc, band, bandhash) row per document band, the candidate-join side —
@@ -63,7 +51,7 @@ object StreamingDedup {
     val prof = docProfiles(df, idCol, textCol).cache()
     try {
       Dedup.minhashBands(prof.select(col("doc"), col("sig")),
-          MinhashBands, MinhashHashes / MinhashBands)
+          Dedup.MinhashBands, Dedup.MinhashHashes / Dedup.MinhashBands)
         .sortWithinPartitions("band", "bandhash")
         .write.mode("overwrite").parquet(s"$path/bands")
       prof.select(col("doc"), col("shs"), col("n"))
@@ -88,8 +76,8 @@ object StreamingDedup {
     // later join back to the stream would be a stream-stream self join)
     val q = docProfiles(stream, idCol, textCol)
       .select(col("doc"), col("shs"), col("n"),
-        posexplode(Dedup.minhashBandKeys(col("sig"), MinhashBands,
-          MinhashHashes / MinhashBands)))
+        posexplode(Dedup.minhashBandKeys(col("sig"), Dedup.MinhashBands,
+          Dedup.MinhashHashes / Dedup.MinhashBands)))
       .toDF("doc", "shs", "n", "band", "bandhash")
     val cand = q.as("q").join(corpusBands.as("c"),
         col("q.band") === col("c.band") && col("q.bandhash") === col("c.bandhash"))
@@ -117,7 +105,7 @@ object StreamingDedup {
   def buildSimhashIndex(df: DataFrame, idCol: String, textCol: String,
       path: String): Unit =
     Dedup.simhashBands(Dedup.portableSimhash64(df, idCol, textCol),
-        SimhashMaxDist, SimhashBlocks)
+        Dedup.SimhashMaxDist, Dedup.SimhashBlocks)
       .sortWithinPartitions("band", "bandkey")
       .write.mode("overwrite").parquet(path)
 
@@ -335,7 +323,7 @@ object StreamingDedup {
   }
 
   /** Probe a stream of new documents against a [[buildSimhashIndex]]
-    * index: emits (doc_new, doc_corpus, hamming <= [[SimhashMaxDist]])
+    * index: emits (doc_new, doc_corpus, hamming <= `Dedup.SimhashMaxDist`)
     * pairs, each once. Same recall guarantee as the batch operator (the
     * pigeonhole over combination bands — EXACT within that radius, so unlike
     * the MinHash probe there is no banding-recall margin to mind). */
@@ -344,7 +332,7 @@ object StreamingDedup {
     val index = spark.read.parquet(indexPath)
       .select(col("doc"), col("simhash"), col("band"), col("bandkey"))
     val q = Dedup.simhashBands(Dedup.portableSimhash64(stream, idCol, textCol),
-      SimhashMaxDist, SimhashBlocks)
+      Dedup.SimhashMaxDist, Dedup.SimhashBlocks)
     q.as("q").join(index.as("c"),
         col("q.band") === col("c.band") && col("q.bandkey") === col("c.bandkey"))
       .where(col("q.doc") =!= col("c.doc"))
@@ -352,7 +340,7 @@ object StreamingDedup {
         col("q.simhash").as("sim_q"), col("c.simhash").as("sim_c"))
       .dropDuplicates("doc_new", "doc_corpus")
       .withColumn("hamming", bit_count(col("sim_q").bitwiseXOR(col("sim_c"))))
-      .where(col("hamming") <= SimhashMaxDist)
+      .where(col("hamming") <= Dedup.SimhashMaxDist)
       .select(col("doc_new"), col("doc_corpus"), col("hamming"))
   }
 
@@ -462,8 +450,8 @@ object StreamingDedup {
   /** Replay a parquet table as `nRes` micro-batches, each containing
     * exactly one RESIDUE CLASS (`idCol % nRes`) — the deterministic
     * batch partition hash-sharded quota twins need: batch MEMBERSHIP is
-    * a pure function of the id (unlike [[replayForeachBatchSplit]]'s
-    * round-robin repartition), so a SQL oracle can replay per-batch
+    * a pure function of the id (unlike a round-robin split), so a SQL
+    * oracle can replay per-batch
     * decisions without knowing arrival order, and any batch-keyed
     * decision is invariant to the order classes happen to arrive in.
     * One file per class (written under a leading-underscore temp dir,
@@ -536,31 +524,4 @@ object StreamingDedup {
       .foreachBatch(write)
       .option("checkpointLocation", checkpoint))
   }
-
-  /** [[replayForeachBatch]] over a MULTI-BATCH bounded replay: the batch
-    * parquet is split into `splitN` files in `scratchDir` and streamed
-    * one file per micro-batch (`maxFilesPerTrigger=1`), so cross-batch
-    * state logic actually executes `splitN` times — a single-file source
-    * collapses AvailableNow to ONE micro-batch, which can't exercise a
-    * running-state merge at all. Batch arrival order is file-listing
-    * order; callers' merge logic must be order-insensitive (top-k/set
-    * merges are), which is also the production truth: replayed streams
-    * reorder. */
-  def replayForeachBatchSplit(spark: SparkSession, parquetPath: String,
-      scratchDir: String, checkpoint: String, splitN: Int,
-      outputMode: OutputMode)
-      (probe: DataFrame => DataFrame)
-      (write: (DataFrame, Long) => Unit): Unit = {
-    require(splitN > 0, "splitN must be positive")
-    spark.read.parquet(parquetPath).repartition(splitN)
-      .write.mode("overwrite").parquet(scratchDir)
-    val schema = cachedSchema(spark, parquetPath)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(scratchDir)
-    runBounded(spark)(probe(stream).writeStream
-      .outputMode(outputMode)
-      .foreachBatch(write)
-      .option("checkpointLocation", checkpoint))
-  }
-
 }

@@ -21,26 +21,6 @@ class EngineSpec extends SparkSpec {
       DataProvenance(parameter = Some("COD"), metadataId = Some("1")))
   }
 
-  test("presentationSort conf restores each query's documented order, same row set") {
-    // the explicit form of the r16 dropped-ordering decision (r16 VERDICT
-    // item 8): default output is an unordered row set (the oracle
-    // canonicalizes); spark.graft.presentationSort=true re-enables the
-    // call-site-documented final order without changing the set.
-    val dir = "/root/testdata/sf0.001"
-    val dflt = SparkEntry.queries("doc_budget_waterfill")(spark, dir)
-      .collect().map(_.toString).sorted
-    spark.conf.set("spark.graft.presentationSort", "true")
-    try {
-      val rows = SparkEntry.queries("doc_budget_waterfill")(spark, dir)
-        .collect()
-      assert(rows.map(_.toString).sorted.sameElements(dflt), "same row set")
-      // doc_budget_waterfill declares sortSmall(..., "lang"): the
-      // opt-in run must come back lang-ascending
-      val langs = rows.map(_.getAs[String]("lang")).toSeq
-      assert(langs == langs.sorted, s"not in declared order: $langs")
-    } finally spark.conf.set("spark.graft.presentationSort", "false")
-  }
-
   test("dataset plotFrame stacks one subplot row per signal, trace modes per last step") {
     val a = fixtureSignal("A")
       .process(Seq("A#1_RAW#1"), Resample, Parameters.of("frequency" -> "30min"))

@@ -415,24 +415,6 @@ class ExtSpec extends SparkSpec {
       s"expected partition pruning on list in:\n${plan.take(1500)}")
   }
 
-  /** Jobs started while `body` runs: the stage names (call sites) of each. */
-  private def jobsDuring[T](body: => T): (T, Seq[Seq[String]]) = {
-    import org.apache.spark.graftbridge.ListenerBus
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(e.stageInfos.map(_.name))
-    }
-    ListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBus.drain(spark.sparkContext)
-      (out, jobs.toArray(Array.empty[Seq[String]]).toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   private def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
     f.delete(): Unit
@@ -450,7 +432,10 @@ class ExtSpec extends SparkSpec {
         "vec_id", "embedding", k = 5, nProbe = 4)
       .select("query_id", "rank", "candidate_id", "cosine")
       .as[(Long, Int, Long, Double)].collect().toSet
-    val (rows, jobs) = jobsDuring(probe())
+    // the probe's result and the stage names of each job it started
+    def probed() = org.apache.spark.graftbridge.ListenerBus
+      .jobsDuring(spark.sparkContext)(probe())
+    val (rows, jobs) = probed()
     def schemaReads(js: Seq[Seq[String]]) =
       js.filter(_.exists(_.startsWith("parquet at")))
     assert(rows.size == 10, rows.toString)
@@ -459,7 +444,7 @@ class ExtSpec extends SparkSpec {
     // an index built before schema.json existed: same rows through the
     // inferred read, which pays its footer job again
     assert(new java.io.File(s"$path/schema.json").delete())
-    val (fallback, fallbackJobs) = jobsDuring(probe())
+    val (fallback, fallbackJobs) = probed()
     assert(fallback == rows)
     assert(schemaReads(fallbackJobs).nonEmpty, s"no inferred read in $fallbackJobs")
   }

@@ -362,21 +362,11 @@ class KmeansSpec extends SparkSpec {
 
   test("semDedup runs as many Spark jobs on a 12-chain as on a 2-chain") {
     import org.apache.spark.graftbridge.ListenerBus
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     def jobs(corpus: DataFrame): (Int, Set[Kept]) = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          n.incrementAndGet(): Unit
-      }
-      ListenerBus.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val out = kept(Kmeans.semDedup(corpus, "vec_id", "embedding", k = 1,
-          iters = 2, minCosine = 0.99))
-        ListenerBus.drain(spark.sparkContext)
-        (n.get, out)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (out, js) = ListenerBus.jobsDuring(spark.sparkContext)(
+        kept(Kmeans.semDedup(corpus, "vec_id", "embedding", k = 1,
+          iters = 2, minCosine = 0.99)))
+      (js.size, out)
     }
     val (j2, out2) = jobs(chain2)
     val (j12, out12) = jobs(chain12)
