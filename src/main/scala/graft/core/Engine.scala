@@ -13,11 +13,22 @@ import org.apache.spark.sql.types.{DoubleType, NumericType}
   * the whole chain into one physical plan at action time) while lineage and
   * naming bookkeeping stay eager and driver-side, like the reference.
   *
+  * `data` is the signal's tall union of every series; `frames` holds each
+  * series' own frame (`key -> rows`) as the executor built it. A step reads
+  * its input from that frame, not from a filter over the union, so a chain
+  * of k steps holds each earlier step's plan once and the analyzed plan
+  * grows O(k²); a filter over the union would hold step k−1's plan twice
+  * and double it per step. The optimized plan is the same either way, since
+  * Catalyst prunes the union branches the key filter rejects. A key with no
+  * frame (signals rebuilt by `SignalIO.load`, or built by hand) falls back
+  * to the filter over `data`.
+  *
   * A deliberate divergence from the reference's in-place mutation
   * (types.py:722,1407): immutability is the Spark idiom and gives the
   * deep-copy isolation of types.py:1397-1399 for free (SURVEY.md §3.4).
   */
-final case class MeteauSignal(data: DataFrame, meta: SignalMeta) {
+final case class MeteauSignal(data: DataFrame, meta: SignalMeta,
+    frames: Map[String, DataFrame] = Map.empty) {
   import Observations._
 
   def seriesKeys: Seq[String] = meta.seriesKeys
@@ -31,7 +42,7 @@ final case class MeteauSignal(data: DataFrame, meta: SignalMeta) {
     * silently lose their non-majority-typed values. No-op (same type)
     * for single-dtype datasets, so plans are unchanged there. */
   def series(key: String): DataFrame = {
-    val df = data.filter(col(KeyCol) === key)
+    val df = frames.getOrElse(key, data.filter(col(KeyCol) === key))
     meta.seriesMeta(key).map(_.valuesDtype).filter(_.nonEmpty) match {
       case Some(dt) if dt != df.schema(ValueCol).dataType.simpleString =>
         // the cast rides inside a CASE on the same predicate as the filter:
@@ -80,7 +91,8 @@ final case class MeteauSignal(data: DataFrame, meta: SignalMeta) {
         createdOn = runAt)
       cur = MeteauSignal(
         Observations.union(cur.data, outRows),
-        cur.meta.copy(series = cur.meta.series :+ sm, lastUpdated = runAt))
+        cur.meta.copy(series = cur.meta.series :+ sm, lastUpdated = runAt),
+        cur.frames + (outKey -> outRows))
     }
     cur
   }
@@ -105,20 +117,20 @@ final case class MeteauSignal(data: DataFrame, meta: SignalMeta) {
         SeriesMeta(key, Nil, index, dtype, createdOn),
         // never rewind: registering with the default epoch timestamp must
         // not pull an existing signal's lastUpdated back to 0
-        lastUpdated = math.max(meta.lastUpdated, createdOn)))
+        lastUpdated = math.max(meta.lastUpdated, createdOn)),
+      frames + (key -> newRows))
   }
 
   /** Versioned rename of the whole signal (re-keys every series).
     * Ref: types.py:753-764 (`Signal.rename`). */
   def rename(newName: String): MeteauSignal = {
     val newPart = Naming.ensureNumbered(newName)
-    val renamed = meta.series.map { sm =>
-      val (_, seriesPart) = Naming.splitKey(sm.seriesKey)
-      sm.copy(seriesKey = s"${newPart}_$seriesPart")
-    }
+    def newKey(key: String) = s"${newPart}_${Naming.splitKey(key)._2}"
+    val renamed = meta.series.map(sm => sm.copy(seriesKey = newKey(sm.seriesKey)))
     val newData = data.withColumn(KeyCol,
       concat(lit(newPart + "_"), element_at(split(col(KeyCol), "_", 2), 2)))
-    MeteauSignal(newData, meta.copy(name = newPart, series = renamed))
+    MeteauSignal(newData, meta.copy(name = newPart, series = renamed),
+      frames.map { case (k, df) => newKey(k) -> df.withColumn(KeyCol, lit(newKey(k))) })
   }
 
   /** Plot-data operator (the engine side of the reference's plotting,
@@ -232,7 +244,8 @@ object MeteauSignal {
     val dtype = df.schema(ValueCol).dataType.simpleString
     MeteauSignal(data,
       SignalMeta(signalPart, units, provenance, createdOn, createdOn,
-        Vector(SeriesMeta(key, Nil, index, dtype, createdOn))))
+        Vector(SeriesMeta(key, Nil, index, dtype, createdOn))),
+      Map(key -> data))
   }
 }
 
@@ -282,29 +295,27 @@ final case class MeteauDataset(data: DataFrame, meta: DatasetMeta,
         s"input series must share units, got: ${units.mkString(", ")}")
     }
 
-    // Inputs flow through each owner's series(k), which re-imposes the
-    // series' CATALOG dtype (types.py:338-349) — a mixed-dtype dataset is
-    // carried as lossless strings, so filtering the raw carrier frame
+    // Inputs flow through each owner's series(k): its own frame, with the
+    // series' CATALOG dtype re-imposed (types.py:338-349) — a mixed-dtype
+    // dataset is carried as lossless strings, so the raw carrier rows
     // would feed string values to numeric transforms (lexicographic max
-    // in Pca.aligned, ANSI string→number casts downstream). Non-double
-    // numeric inputs widen to double like a pandas concat would
-    // (float64 coercion); the single-dtype fast path keeps the one
-    // isin-filter scan so unmixed plans are unchanged.
+    // in Pca.aligned, ANSI string→number casts downstream). Where some
+    // input's catalog dtype differs from the carrier's, non-double numeric
+    // inputs widen to double like a pandas concat would (float64
+    // coercion); single-dtype inputs pass through uncast.
     val carrierDt = data.schema(ValueCol).dataType.simpleString
     val needsCast = owners.zip(inputNames).exists { case (sig, k) =>
       sig.meta.seriesMeta(k).map(_.valuesDtype).filter(_.nonEmpty)
         .exists(_ != carrierDt)
     }
-    val inputRows =
-      if (!needsCast) data.filter(col(KeyCol).isin(inputNames: _*))
-      else owners.zip(inputNames).map { case (sig, k) =>
-        val df = sig.series(k)
-        df.schema(ValueCol).dataType match {
-          case dt: NumericType if dt != DoubleType =>
-            df.withColumn(ValueCol, col(ValueCol).cast(DoubleType))
-          case _ => df
-        }
-      }.reduce(Observations.union)
+    val inputRows = owners.zip(inputNames).map { case (sig, k) =>
+      val df = sig.series(k)
+      df.schema(ValueCol).dataType match {
+        case dt: NumericType if needsCast && dt != DoubleType =>
+          df.withColumn(ValueCol, col(ValueCol).cast(DoubleType))
+        case _ => df
+      }
+    }.reduce(Observations.union)
     val versioned = Naming.nextVersioned(meta.signalNames, t.signalBaseName)
     val outKey = s"${versioned}_${Naming.ensureNumbered(t.suffix)}"
 
@@ -323,7 +334,8 @@ final case class MeteauDataset(data: DataFrame, meta: DatasetMeta,
     val newSignal = MeteauSignal(outRows,
       SignalMeta(versioned, units, prov, runAt, runAt,
         Vector(SeriesMeta(outKey, lineage,
-          IndexMeta(IndexKind.DatetimeIndex), "double", runAt))))
+          IndexMeta(IndexKind.DatetimeIndex), "double", runAt))),
+      Map(outKey -> outRows))
 
     MeteauDataset(
       Observations.union(data, outRows),

@@ -22,15 +22,21 @@ object SignalIO {
   import scala.jdk.CollectionConverters._
 
   /** Save: observations partitioned by series_key (partition pruning makes
-    * single-series reads touch one directory), catalog as one JSON doc. */
+    * single-series reads touch one directory), catalog as one JSON doc.
+    * The old catalog is deleted before the data write and the new one is
+    * published last, so a save that dies in between leaves no catalog and
+    * [[load]] fails instead of describing the new rows with the old one. */
   def save(ds: MeteauDataset, path: String, format: String = "parquet"): Unit = {
+    val metaFile = new org.apache.hadoop.fs.Path(s"$path/metadata.json")
+    metaFile.getFileSystem(ds.data.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(metaFile, false)
     val writer = ds.data.write.mode(SaveMode.Overwrite).partitionBy(KeyCol)
     format match {
       case "parquet" => writer.parquet(s"$path/data")
       case "csv" => writer.option("header", "true").csv(s"$path/data")
       case other => throw new IllegalArgumentException(s"format $other")
     }
-    writeMetadata(ds.meta, s"$path/metadata.json", ds.data.sparkSession)
+    writeMetadata(ds.meta, metaFile.toString, ds.data.sparkSession)
   }
 
   /** Load: read data, cast value to each series' catalog dtype (CSV comes
@@ -786,15 +792,21 @@ object SignalIO {
     * and independent of Scala case-class encoding quirks. */
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
+  /** Writes the catalog to a temp file beside `file`, then renames it into
+    * place: a reader sees the whole document or none. */
   def writeMetadata(meta: DatasetMeta, file: String, spark: SparkSession): Unit = {
     val json = mapper.writerWithDefaultPrettyPrinter()
       .writeValueAsString(datasetToMap(meta))
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(file)
     val fs = p.getFileSystem(conf)
-    val out = fs.create(p, true)
-    out.write(json.getBytes("UTF-8"))
-    out.close()
+    val tmp = new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
+    // a Hadoop rename does not replace an existing target
+    fs.delete(p, false)
+    if (!fs.rename(tmp, p))
+      throw new java.io.IOException(s"cannot rename $tmp to $p")
   }
 
   def readMetadata(file: String, spark: SparkSession): DatasetMeta = {
@@ -802,8 +814,8 @@ object SignalIO {
     val p = new org.apache.hadoop.fs.Path(file)
     val fs = p.getFileSystem(conf)
     val in = fs.open(p)
-    val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    in.close()
+    val bytes =
+      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close()
     datasetFromMap(mapper.readValue(new String(bytes, "UTF-8"),
       classOf[java.util.Map[String, Object]]))
   }

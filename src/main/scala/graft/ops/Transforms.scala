@@ -154,8 +154,10 @@ object Resample extends SeriesTransform {
   * neighbours; leading nulls stay null, trailing nulls carry the last value
   * (pandas `interpolate(method="linear")` default semantics —
   * SURVEY.md §7.4 item 1). Ref: univariate/interpolate.py:12-52.
-  * Spark shape: two window passes over the same (key, ts) sort — Catalyst
-  * executes both frames off one shuffle+sort; no UDFs, fully codegen'd. */
+  * Spark shape: one running frame in each time direction, both computed in
+  * one projection, so the plan holds one Window operator per direction
+  * (two, each computing two accumulators) over one hash exchange on the
+  * key, with a sort before each; no UDFs, fully codegen'd. */
 object Interpolate extends SeriesTransform {
   val opName = "linear_interpolation"
   val suffix = "LIN-INT"
@@ -179,12 +181,16 @@ object Interpolate extends SeriesTransform {
     // stage the four neighbour values as columns: each window expression
     // appears exactly once in the physical Window operator (inlining the
     // Column three times would make Spark evaluate 12 running
-    // accumulators instead of 4 — observed in the executed plan)
-    val staged = series
-      .withColumn("_pv", last(v, ignoreNulls = true).over(wPrev))
-      .withColumn("_pt", last(when(v.isNotNull, tsS), ignoreNulls = true).over(wPrev))
-      .withColumn("_nv", last(v, ignoreNulls = true).over(wNextRev))
-      .withColumn("_nt", last(when(v.isNotNull, tsS), ignoreNulls = true).over(wNextRev))
+    // accumulators instead of 4 — observed in the executed plan). All four
+    // in one select: analysis groups the window expressions of one
+    // projection by spec, one Window operator per direction; a withColumn
+    // per column would stack one Window operator per column.
+    val vt = when(v.isNotNull, tsS)
+    val staged = series.select(col("*"),
+      last(v, ignoreNulls = true).over(wPrev).as("_pv"),
+      last(vt, ignoreNulls = true).over(wPrev).as("_pt"),
+      last(v, ignoreNulls = true).over(wNextRev).as("_nv"),
+      last(vt, ignoreNulls = true).over(wNextRev).as("_nt"))
     val (pv, pt, nv, nt) = (col("_pv"), col("_pt"), col("_nv"), col("_nt"))
     val interp =
       when(v.isNotNull, v)

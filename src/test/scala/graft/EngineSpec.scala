@@ -235,4 +235,72 @@ class EngineSpec extends SparkSpec {
       .select(Observations.ValueCol).as[Double].collect().toSeq
     assert(sums == Seq(3.5, 6.5), s"expected widened sums, got $sums")
   }
+
+  /** Every key's series(k) against the filter over the signal's union with
+    * the catalog dtype re-imposed: the path a key without its own frame
+    * takes. Rows compare as strings, so a string-carried union compares. */
+  private def assertFramesMatchUnion(sig: MeteauSignal): Unit = {
+    import Observations._
+    assert(sig.frames.keySet == sig.seriesKeys.toSet, sig.meta.name)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col(KeyCol), col(TsCol), col(ValueCol).cast("string"))
+        .collect().map(_.toSeq).sortBy(_.toString).toSeq
+    val viaUnion = sig.copy(frames = Map.empty)
+    sig.seriesKeys.foreach { k =>
+      val (own, filtered) = (sig.series(k), viaUnion.series(k))
+      assert(own.schema(ValueCol).dataType == filtered.schema(ValueCol).dataType, k)
+      val got = rows(own)
+      assert(got.nonEmpty, k)
+      assert(got == rows(filtered), k)
+      assert(got == rows(sig.data.filter(col(KeyCol) === k)), k)
+    }
+  }
+
+  test("series(k) reads each series' own frame: the union filter's rows after every executor") {
+    def ts(i: Int) = java.sql.Timestamp.from(
+      java.time.Instant.parse("2020-01-01T00:00:00Z").plusSeconds(i * 60L))
+    val states = Seq((ts(0), "on"), (ts(3), "off"))
+      .toDF(Observations.TsCol, Observations.ValueCol)
+    val processed = fixtureSignal("A")
+      .process(Seq("A#1_RAW#1"), ScaleValues, Parameters.of("factor" -> "3"))
+    assertFramesMatchUnion(processed)
+    // a string series turns the union into a lossless-string carrier; the
+    // next step's input is the double frame, not the string union
+    val mixed = processed.addSeries(states, seriesName = "STATE")
+    assert(mixed.data.schema(Observations.ValueCol).dataType.typeName == "string")
+    assertFramesMatchUnion(mixed)
+    val afterMixed = mixed.process(Seq("A#1_DBL#1"), ScaleValues)
+    assertFramesMatchUnion(afterMixed)
+    val renamed = afterMixed.rename("R")
+    assert(renamed.frames.keySet == Set("R#1_RAW#1", "R#1_DBL#1", "R#1_STATE#1", "R#1_DBL#2"))
+    assertFramesMatchUnion(renamed)
+    // MeteauDataset.of/add rename clashing signals; each keeps its frames
+    val ds = MeteauDataset.of("d", Seq(fixtureSignal("B"), fixtureSignal("B")))
+      .add(renamed).add(processed)
+    assert(ds.meta.signalNames == Seq("B#1", "B#2", "R#1", "A#1"))
+    ds.signals.foreach(assertFramesMatchUnion)
+    val out = ds.process(Seq("A#1_DBL#1", "R#1_DBL#2", "B#2_RAW#1"), AverageSignals)
+    out.signals.foreach(assertFramesMatchUnion)
+    // the dataset union holds the same rows as its signals' own frames
+    val viaFrames = out.signals.flatMap(s => s.seriesKeys.map(s.series))
+      .map(_.select(col(Observations.KeyCol), col(Observations.TsCol),
+        col(Observations.ValueCol).cast("string")))
+      .reduce(_ unionByName _)
+    assert(viaFrames.exceptAll(out.data).isEmpty && out.data.exceptAll(viaFrames).isEmpty)
+  }
+
+  test("a 12-step chain's analyzed plan grows linearly per step, not by doubling") {
+    val rows = (0 until 1000).map { i =>
+      (java.sql.Timestamp.from(java.time.Instant.parse("2020-01-01T00:00:00Z")
+        .plusSeconds(i * 60L)), i * 0.5)
+    }.toDF(Observations.TsCol, Observations.ValueCol)
+    val chain = (1 to 12).foldLeft(MeteauSignal.ingest(rows, "C", "mg/l")) {
+      (sig, _) => sig.process(Seq(sig.seriesKeys.last), ScaleValues)
+    }
+    assert(chain.seriesKeys.size == 13)
+    // 30,716 nodes when each step filtered the whole union
+    val nodes = chain.data.queryExecution.analyzed.collect { case p => p }.size
+    assert(nodes <= 400, s"analyzed plan has $nodes nodes")
+    assert(chain.series("C#1_DBL#12").count() == 1000)
+  }
 }

@@ -145,6 +145,25 @@ class IOSpec extends SparkSpec {
     }
   }
 
+  test("a save whose data write fails leaves no catalog, so load fails") {
+    val ds = fixture()
+    val path = "/tmp/graft_test_save_crash"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    SignalIO.save(ds, path)
+    val metaFile = new java.io.File(s"$path/metadata.json")
+    assert(metaFile.exists())
+    val failing = ds.copy(data = ds.data.withColumn(Observations.ValueCol,
+      when(col(Observations.ValueCol) > 60.0, raise_error(lit("killed mid-save")))
+        .otherwise(col(Observations.ValueCol))))
+    intercept[Exception](SignalIO.save(failing, path))
+    assert(!metaFile.exists(), "the old catalog outlived a failed save")
+    intercept[Exception](SignalIO.load(spark, path))
+    // a completed save publishes the catalog again, and no temp file stays
+    SignalIO.save(ds, path)
+    assert(SignalIO.load(spark, path).meta == ds.meta)
+    assert(new java.io.File(path).list().toSet.filter(_.contains("tmp")).isEmpty)
+  }
+
   test("CSV degrade + metadata reconstruct round trip (reference semantics)") {
     val ds = fixture()
     val path = "/tmp/graft_test_rt_csv"
