@@ -390,9 +390,10 @@ object EmbQueries {
     // lands on bit-identical centroids. Seeds = the k smallest-id
     // vectors (no RNG); empty clusters carry forward. Output: final
     // centroids + final-assignment cluster sizes (k·d rows). Scale: the
-    // working set is the cached flat (id, dim, x) frame; each round is
-    // one broadcast join + two hash aggregates with O(k·d) driver
-    // traffic — corpus-size-independent rounds (see Kmeans object doc).
+    // working set is the cached (id, vector) frame; each round is one
+    // Spark job (a treeAggregate of per-partition exact (cluster, dim)
+    // sums) with O(k·d) driver traffic — corpus-size-independent rounds
+    // (see Kmeans object doc).
     "emb_kmeans" -> (((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val m = Kmeans.train(emb, "vec_id", "embedding", k = 8, iters = 3)

@@ -2298,9 +2298,9 @@ object ScaleSmoke {
     *
     *  - trainFast (k = 32, d = 64, 3 Lloyd rounds) at 250k vs 1M
     *    clustered vectors: the serving-path trainer's wall must scale
-    *    ≲ linearly in the corpus (rounds are a fixed job count; the
-    *    literal-argmin pass is row-local, the update one hash
-    *    aggregate), trained centroids must be BIT-IDENTICAL when the 1M
+    *    ≲ linearly in the corpus (each round is one job: the
+    *    literal argmin and the exact update run in one treeAggregate),
+    *    trained centroids must be BIT-IDENTICAL when the 1M
     *    corpus is repartitioned (the decimal + 6-dp-grid update claim
     *    measured at scale), and the final assignment must recover the
     *    planted anchor structure exactly (seeds = ids 0..31 are one

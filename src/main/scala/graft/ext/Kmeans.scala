@@ -1,9 +1,13 @@
 package graft.ext
 
+import graft.functions.{Decimal12, Decimal12Sums, NearestCentroid,
+  NearestCentroidDecimal}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.internal.SQLConf
 
 /** In-engine Lloyd k-means over an embedding corpus, with the exactness
   * discipline that makes iterative float training replayable by a DuckDB
@@ -39,25 +43,25 @@ import org.apache.spark.sql.types.DecimalType
   *
   * == Scale shape ==
   *
-  * The working set is the cached (id, vector) frame. Each round is ONE
-  * shuffle, which adaptive execution runs as two jobs (the map stage,
-  * then the result stage): the row-local
-  * [[graft.functions.NearestCentroidDecimal]] argmin labels every vector
-  * inside the scan stage (exact decimal sums are order-free, so nothing
-  * about the exactness discipline needs a shuffle), posexplode feeds a
-  * map-side-combinable (cluster, dim) hash aggregate, and k·d rows reach
-  * the driver (update) — driver traffic O(k·d·iters) doubles,
-  * independent of corpus size, the
-  * [[QualityModel.trainLogReg]] contract. The pre-r16 formulation built
-  * the same decimal sums relationally (posexplode → broadcast join on
-  * dim → N·k-group aggregate → per-id window) and paid two exchanges +
-  * an N-keyed update join per round for arithmetic a row can do alone;
-  * the r16 rewrite is bit-identical (KmeansSpec pins it against the
-  * relational reference) and leaves one narrow aggregate per round.
-  * Empty clusters keep their previous centroid (no re-seed RNG). At
-  * 100 TB the same loop runs with k in the thousands: the centroid
-  * matrix rides as a task reference, and the per-round shuffle is one
-  * narrow aggregate — the canonical distributed-Lloyd layout.
+  * The working set is the cached (id, vector) frame; the seed job scans
+  * it once, which fills the cache. Each round is ONE Spark job that
+  * shuffles no rows: a `treeAggregate` whose tasks run the argmin on
+  * each vector (the row-local [[graft.functions.NearestCentroidDecimal]]
+  * arithmetic) and add the vector into per-(cluster, dim) exact decimal
+  * sums held as scaled longs ([[graft.functions.Decimal12Sums]]), so each
+  * task returns k·d sums and k counts. The driver divides and snaps them
+  * (update) — driver traffic O(k·d) per task and round, independent of
+  * corpus size, the [[QualityModel.trainLogReg]] contract. From six
+  * partitions on, the tree (depth 2) adds one combine level, a shuffle
+  * of the k·d partials only, which bounds the driver's fan-in at about
+  * √partitions and is still one job. Exact sums are order-free, so the
+  * result is that of the relational round the oracle replays
+  * (posexplode → join on dim → decimal SUM → per-id argmin → (cluster,
+  * dim) decimal SUM), bit for bit; KmeansSpec pins the rounds against
+  * that reference. Empty clusters keep their previous centroid (no
+  * re-seed RNG). At 100 TB the same loop runs with k in the thousands:
+  * the centroid matrix is broadcast once per round — the canonical
+  * distributed-Lloyd layout.
   */
 object Kmeans {
 
@@ -112,12 +116,10 @@ object Kmeans {
       .select(col("_kid"), col("_best").getField("cluster").as("_cl"),
         col("_best").getField("dist2").as("dist2"))
 
-  /** Grid-snapped seed centroids: the k smallest-id vectors. */
-  private def seedCents(df: DataFrame, idCol: String, vecCol: String,
-      k: Int): Array[Array[Double]] =
-    df.select(col(idCol).cast("long").as("_kid"),
-        col(vecCol).cast("array<double>").as("_v"))
-      .orderBy(col("_kid")).limit(k).collect()
+  /** Grid-snapped seed centroids: the k smallest-id vectors of the
+    * `(_kid, _v)` frame. */
+  private def seedCents(vdf: DataFrame, k: Int): Array[Array[Double]] =
+    vdf.orderBy(col("_kid")).limit(k).collect()
       .map(_.getSeq[Double](1).toArray.map(r6p))
 
   /** Serving/throughput assignment: centroids enter the plan as LITERAL
@@ -175,82 +177,119 @@ object Kmeans {
       best.getField("dist2").as("dist2"))
   }
 
-  /** Lloyd training on the serving-path assignment — the production
-    * trainer. Per round: one row-local literal-argmin pass (no N·k
-    * blowup) + one (cluster, dim) exact-decimal hash aggregate
-    * collecting k·d rows; centroid updates share [[train]]'s
-    * decimal + 6-dp-grid discipline, so trained centroids remain
-    * BIT-IDENTICAL across partitionings (the update is the only
-    * cross-row arithmetic). Not oracle-replayable only because the
+  /** Lloyd training on the serving-path assignment: [[train]]'s rounds
+    * with the native double-fold argmin ([[assignServing]]'s) in place of
+    * the exact-decimal one. The centroid update is [[train]]'s exact
+    * decimal sum + 6-dp grid, so trained centroids remain BIT-IDENTICAL
+    * across partitionings. Not oracle-replayable only because the
     * distance fold is double, not decimal — semantics match [[train]]
     * whenever no assignment lands on an exact distance tie. */
   def trainFast(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int): Model = {
-    val vdf = df.select(col(idCol).cast("long").as("_kid"),
-      col(vecCol).cast("array<double>").as("_v")).persist()
-    try {
-      var cents = seedCents(df, idCol, vecCol, k)
-      for (_ <- 1 to iters) {
-        val a = assignServing(vdf, "_kid", "_v", Model(cents))
-          .select(col("_kid"), col("cluster").as("_cl"))
-        val upd = vdf.join(a, "_kid")
-          .select(col("_cl"), posexplode(col("_v")).as(Seq("dim", "_x")))
-          .groupBy(col("_cl"), col("dim"))
-          .agg(r6p(sum(col("_x").cast(DecimalType(38, 12))).cast("double")
-            / count(lit(1))).as("_c"))
-          .collect()
-        val next = cents.map(_.clone)
-        upd.foreach { r =>
-          next(r.getAs[Long]("_cl").toInt)(r.getAs[Int]("dim")) =
-            r.getAs[Double]("_c")
-        }
-        cents = next
-      }
-      Model(cents)
-    } finally { vdf.unpersist(false): Unit }
-  }
+      iters: Int): Model = fit(df, idCol, vecCol, k, iters, exact = false)
 
   /** `iters` Lloyd rounds over `df`'s `vecCol`, seeded by the k smallest
     * `idCol` vectors. Cache-once / scan-per-round; see object doc for the
     * exactness and scale contracts. */
   def train(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int): Model = {
+      iters: Int): Model = fit(df, idCol, vecCol, k, iters, exact = true)
+
+  private def fit(df: DataFrame, idCol: String, vecCol: String, k: Int,
+      iters: Int, exact: Boolean): Model = {
+    require(k > 0, s"Kmeans: k must be positive, got k = $k")
+    val ansi = df.sparkSession.conf.get(SQLConf.ANSI_ENABLED.key).toBoolean
     val vdf = df.select(col(idCol).cast("long").as("_kid"),
       col(vecCol).cast("array<double>").as("_v")).persist()
     try {
-      var cents = seedCents(df, idCol, vecCol, k)
-      for (_ <- 1 to iters) {
-        // one shuffle per round: the row-local decimal argmin labels each
-        // vector in the scan stage, posexplode feeds the (cluster, dim)
-        // exact-decimal hash aggregate (map-side combinable, k·d groups
-        // collected) — the per-round explode-join/groupBy/window
-        // assignment pipeline and the N-keyed update join are gone
-        // the argmin projects BELOW the explode (its own select), so it
-        // runs once per VECTOR — in one select with posexplode the
-        // projection lands above the Generate and re-evaluates the
-        // k·d decimal loop once per exploded ROW (d× the work; the first
-        // cut of this rewrite measured exactly that in a thread dump)
-        val upd = vdf.select(col("_v"),
-            graft.functions.VectorFunctions.nearestCentroidDecimal(
-              col("_v"), cents).getField("cluster").as("_cl"))
-          .where(col("_cl").isNotNull)
-          .select(col("_cl"), posexplode(col("_v")).as(Seq("dim", "_x")))
-          .groupBy(col("_cl"), col("dim"))
-          .agg(r6p(sum(col("_x").cast(DecimalType(38, 12))).cast("double")
-            / count(lit(1))).as("_c"))
-          .collect()
-        // empty clusters keep their previous centroid (the oracle's
-        // COALESCE carry-forward) — populated clusters always emit all
-        // d dims, so the merge is per-cluster all-or-nothing
-        val next = cents.map(_.clone)
-        upd.foreach { r =>
-          next(r.getAs[Long]("_cl").toInt)(r.getAs[Int]("dim")) =
-            r.getAs[Double]("_c")
-        }
-        cents = next
-      }
+      // the seed job scans every partition, so it fills the cache the
+      // rounds read
+      var cents = seedCents(vdf, k)
+      val vecs = vdf.select(col("_v")).queryExecution.toRdd
+      for (_ <- 1 to iters if cents.nonEmpty)
+        cents = lloydRound(vecs, cents, exact, ansi)
       Model(cents)
     } finally { vdf.unpersist(false): Unit }
+  }
+
+  /** One Lloyd round as ONE Spark job: a `treeAggregate` whose tasks
+    * label each vector with the argmin and add it into per-(cluster, dim)
+    * exact DECIMAL(38,12) sums ([[RoundSums]]); the driver then takes
+    * one correctly-rounded IEEE division per component and snaps it onto
+    * the 6-dp grid. The result equals the relational update
+    * `r6p(CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE) / COUNT(*))`
+    * bit for bit, because the sums are exact and so order-free. Empty
+    * clusters keep their previous centroid. A cell of a populated cluster
+    * whose every member component is NULL (non-finite) has a NULL SUM,
+    * which the relational update read back as 0.0 through
+    * `Row.getAs[Double]`; the round keeps that value. */
+  private def lloydRound(vecs: RDD[InternalRow], cents: Array[Array[Double]],
+      exact: Boolean, ansi: Boolean): Array[Array[Double]] = {
+    val k = cents.length
+    val d = cents(0).length
+    val bc = vecs.sparkContext.broadcast(cents)
+    try {
+      val part = vecs.treeAggregate(new RoundSums(k, d))(
+        (acc, row) => acc.add(row, bc.value, exact, ansi),
+        (a, b) => a.merge(b))
+      Array.tabulate(k, d) { (cl, j) =>
+        val n = part.counts(cl)
+        val i = cl * d + j
+        if (n == 0) cents(cl)(j)
+        else if (part.sums.isEmpty(i)) 0.0
+        else if (part.sums.toBigDecimal(i).precision > 38) {
+          // SUM overflowed DECIMAL(38,12): an error under ANSI, else NULL
+          if (ansi) throw outOfRange(part.sums.toBigDecimal(i))
+          0.0
+        } else r6p(part.sums.toDouble(i) / n)
+      }
+    } finally bc.destroy()
+  }
+
+  private def outOfRange(b: java.math.BigDecimal): ArithmeticException =
+    new ArithmeticException(
+      s"${b.toPlainString} cannot be represented as Decimal(38, 12)")
+
+  /** One partition's share of a Lloyd round: per-(cluster, dim) exact
+    * sums of the members' components and per-cluster member counts. A
+    * vector the argmin cannot place (null element, wrong width, no finite
+    * distance) joins no cluster. A component casts as Spark's
+    * `CAST(x AS DECIMAL(38,12))` does: NaN and ±Infinity are NULL, which
+    * SUM skips while COUNT(*) still counts the vector; a component of
+    * 1e26 or more is out of range, an error under ANSI and NULL
+    * otherwise. */
+  private final class RoundSums(k: Int, d: Int) extends Serializable {
+    val sums = new Decimal12Sums(k * d)
+    val counts = new Array[Long](k)
+
+    def add(row: InternalRow, cents: Array[Array[Double]], exact: Boolean,
+        ansi: Boolean): RoundSums = {
+      if (!row.isNullAt(0)) {
+        val v = row.getArray(0)
+        val best =
+          if (exact) NearestCentroidDecimal.assign(v, cents)
+          else NearestCentroid.assign(v, cents)
+        val cl = if (best == null) -1 else best.getLong(1).toInt
+        if (cl >= 0) {
+          counts(cl) += 1
+          var j = 0
+          while (j < d) {
+            val x = v.getDouble(j)
+            if (java.lang.Double.isFinite(x)) {
+              if (Math.abs(x) < 1e26) sums.add(cl * d + j, x)
+              else if (ansi) throw outOfRange(Decimal12.cast(x))
+            }
+            j += 1
+          }
+        }
+      }
+      this
+    }
+
+    def merge(o: RoundSums): RoundSums = {
+      sums.merge(o.sums)
+      var i = 0
+      while (i < k) { counts(i) += o.counts(i); i += 1 }
+      this
+    }
   }
 
   /** Assignment of every vector against a trained model's (final)

@@ -385,79 +385,82 @@ object Similarity {
     import spark.implicits._
     val d = asDouble(df, vecCol)
       .select(col(idCol).as("_id"), col(vecCol).as("_v")).cache()
-    var cents: Array[Array[Double]] = d
-      .orderBy(xxhash64(col("_id")), col("_id")).limit(k)
-      .select(col("_v")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    // Training iterations as per-partition partial aggregation (the
-    // canonical distributed k-means shape, and genuine per-partition
-    // imperative logic): each partition computes local per-list
-    // (Σ value, count) partials over the broadcast centroids and emits ONE
-    // row — no shuffle, no per-iteration literal-centroid plans (a
-    // DataFrame formulation re-embeds the centroids as literals every
-    // iteration, forcing a fresh analyze+codegen cycle each time —
-    // measured as the dominant cost of the whole operator). Partials are
-    // EXACT BigDecimal sums (binary doubles are exact decimals), so the
-    // learned centroids are bit-identical under any partitioning, like
-    // the detMean discipline everywhere else.
-    val vecs = d.select(col("_v")).as[Seq[Double]]
-    var it = 0
-    while (it < iters) {
-      val bc = spark.sparkContext.broadcast(cents)
-      val partials = vecs.mapPartitions { rows =>
-        val cs = bc.value
-        val kk = cs.length
-        val dims = if (kk > 0) cs(0).length else 0
-        val cc = cs.map(c => { var a = 0.0; var i = 0
-          while (i < c.length) { a += c(i) * c(i); i += 1 }; a })
-        val sums = Array.fill(kk, dims)(java.math.BigDecimal.ZERO)
-        val counts = new Array[Long](kk)
-        rows.foreach { v =>
-          // argmin c·c − 2 v·c, ties to the lowest list id — identical to
-          // the declarative nearestList fold
-          var best = 0; var bestScore = Double.MaxValue
+    try {
+      var cents: Array[Array[Double]] = d
+        .orderBy(xxhash64(col("_id")), col("_id")).limit(k)
+        .select(col("_v")).collect()
+        .map(_.getSeq[Double](0).toArray)
+      // Training iterations as per-partition partial aggregation (the
+      // canonical distributed k-means shape, and genuine per-partition
+      // imperative logic): each partition computes local per-list
+      // (Σ value, count) partials over the broadcast centroids and emits ONE
+      // row — no shuffle, no per-iteration literal-centroid plans (a
+      // DataFrame formulation re-embeds the centroids as literals every
+      // iteration, forcing a fresh analyze+codegen cycle each time —
+      // measured as the dominant cost of the whole operator). Partials are
+      // EXACT BigDecimal sums (binary doubles are exact decimals), so the
+      // learned centroids are bit-identical under any partitioning, like
+      // the detMean discipline everywhere else.
+      val vecs = d.select(col("_v")).as[Seq[Double]]
+      var it = 0
+      while (it < iters) {
+        val bc = spark.sparkContext.broadcast(cents)
+        try {
+          val partials = vecs.mapPartitions { rows =>
+            val cs = bc.value
+            val kk = cs.length
+            val dims = if (kk > 0) cs(0).length else 0
+            val cc = cs.map(c => { var a = 0.0; var i = 0
+              while (i < c.length) { a += c(i) * c(i); i += 1 }; a })
+            val sums = Array.fill(kk, dims)(java.math.BigDecimal.ZERO)
+            val counts = new Array[Long](kk)
+            rows.foreach { v =>
+              // argmin c·c − 2 v·c, ties to the lowest list id — identical to
+              // the declarative nearestList fold
+              var best = 0; var bestScore = Double.MaxValue
+              var l = 0
+              while (l < kk) {
+                var dot = 0.0; var i = 0
+                val c = cs(l)
+                while (i < dims) { dot += v(i) * c(i); i += 1 }
+                val score = cc(l) - 2.0 * dot
+                if (score < bestScore) { best = l; bestScore = score }
+                l += 1
+              }
+              counts(best) += 1
+              var i = 0
+              while (i < dims) {
+                sums(best)(i) =
+                  sums(best)(i).add(new java.math.BigDecimal(v(i)))
+                i += 1
+              }
+            }
+            Iterator.single((sums.map(_.map(_.toString)), counts))
+          }.collect()
+          val next = cents.map(_.clone())
+          val dims = if (cents.nonEmpty) cents(0).length else 0
           var l = 0
-          while (l < kk) {
-            var dot = 0.0; var i = 0
-            val c = cs(l)
-            while (i < dims) { dot += v(i) * c(i); i += 1 }
-            val score = cc(l) - 2.0 * dot
-            if (score < bestScore) { best = l; bestScore = score }
+          while (l < cents.length) {
+            var n = 0L
+            partials.foreach { case (_, cnt) => n += cnt(l) }
+            if (n > 0) {
+              var i = 0
+              while (i < dims) {
+                var acc = java.math.BigDecimal.ZERO
+                partials.foreach { case (sm, _) =>
+                  acc = acc.add(new java.math.BigDecimal(sm(l)(i))) }
+                next(l)(i) = acc.doubleValue() / n
+                i += 1
+              }
+            } // empty lists keep their previous centroid
             l += 1
           }
-          counts(best) += 1
-          var i = 0
-          while (i < dims) {
-            sums(best)(i) = sums(best)(i).add(new java.math.BigDecimal(v(i)))
-            i += 1
-          }
-        }
-        Iterator.single((sums.map(_.map(_.toString)), counts))
-      }.collect()
-      val next = cents.map(_.clone())
-      val dims = if (cents.nonEmpty) cents(0).length else 0
-      var l = 0
-      while (l < cents.length) {
-        var n = 0L
-        partials.foreach { case (_, cnt) => n += cnt(l) }
-        if (n > 0) {
-          var i = 0
-          while (i < dims) {
-            var acc = java.math.BigDecimal.ZERO
-            partials.foreach { case (sm, _) =>
-              acc = acc.add(new java.math.BigDecimal(sm(l)(i))) }
-            next(l)(i) = acc.doubleValue() / n
-            i += 1
-          }
-        } // empty lists keep their previous centroid
-        l += 1
+          cents = next
+        } finally bc.destroy()
+        it += 1
       }
-      bc.destroy()
-      cents = next
-      it += 1
-    }
-    d.unpersist()
-    cents
+      cents
+    } finally { d.unpersist(): Unit }
   }
 
   /** IVF top-k with learned centroids: build the k-means index, assign the

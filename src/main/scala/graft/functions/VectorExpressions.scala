@@ -640,7 +640,16 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
   * plus an N-keyed window per Lloyd round purely to get order-invariant
   * decimal sums, which a row-local exact accumulation gets for free
   * (decimal addition is associative and commutative — there is no
-  * ordering to protect). */
+  * ordering to protect).
+  *
+  * Exactness bound: the terms are summed by [[Decimal12Sums]] on scaled
+  * longs. A term's cast takes the `floor(t²·1e12 + 0.5)` fast path only
+  * when `|t²·1e12| < 2^42` and its fraction lies more than 1e-3 from ½;
+  * there the double product and the shortest-repr string are together
+  * off by less than 6.9e-4 (see [[Decimal12]]), so the rounded integer
+  * is the cast's. Wider terms, near-ties and sums that overflow a `Long`
+  * fall back to `BigDecimal`, so every distance equals the one a
+  * `BigDecimal` per term gives. */
 case class NearestCentroidDecimal(child: Expression,
     cents: Array[Array[Double]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -687,37 +696,32 @@ object NearestCentroidDecimal {
     while (j < dims) { if (vec.isNullAt(j)) return null; j += 1 }
     var bestD = Double.MaxValue
     var bestJ = -1L
+    val acc = new Decimal12Sums(1)
     var i = 0
     while (i < k) {
       val c = cents(i)
       // exact decimal accumulation of the per-dim terms: each term is
-      // cast double → DECIMAL(38,12) exactly as Spark's Cast does
-      // (valueOf = shortest-decimal string, then HALF_UP to scale 12),
-      // and java.math.BigDecimal.add is exact, so the sum is the same
-      // value SUM(CAST(term AS DECIMAL(38,12))) aggregates — in any
-      // order, on any engine.
-      var acc: java.math.BigDecimal = null
+      // cast double → DECIMAL(38,12) exactly as Spark's Cast does and
+      // the sum is exact, so it is the value SUM(CAST(term AS
+      // DECIMAL(38,12))) aggregates — in any order, on any engine.
+      acc.clear(0)
       j = 0
       while (j < dims) {
         val t = vec.getDouble(j) - c(j)
         val t2 = t * t
         // non-finite guard (r16 ADVICE): the relational pipeline cast
         // each term to DECIMAL(38,12) — Infinity/NaN casts to NULL and
-        // SUM skips it — where BigDecimal.valueOf would THROW. Skip the
-        // term to reproduce the cast-to-null + skip semantics.
-        if (java.lang.Double.isFinite(t2)) {
-          val term = java.math.BigDecimal.valueOf(t2)
-            .setScale(12, java.math.RoundingMode.HALF_UP)
-          acc = if (acc == null) term else acc.add(term)
-        }
+        // SUM skips it — where Decimal12's BigDecimal path would THROW.
+        // Skip the term to reproduce the cast-to-null + skip semantics.
+        if (java.lang.Double.isFinite(t2)) acc.add(0, t2)
         j += 1
       }
       // all-null terms → NULL distance: such a centroid never wins the
       // argmin. This is the kernel's own rule, not an equivalence with an
       // ascending window (Spark sorts NULLS FIRST by default); it only
       // matters for non-finite vectors, which the contract excludes.
-      if (acc != null) {
-        val d = math.floor(acc.doubleValue() * 1000000.0 + 0.5) / 1000000.0
+      if (!acc.isEmpty(0)) {
+        val d = math.floor(acc.toDouble(0) * 1000000.0 + 0.5) / 1000000.0
         if (d < bestD) { bestD = d; bestJ = i }
       }
       i += 1

@@ -3006,4 +3006,16 @@ class ExtSpec extends SparkSpec {
     assert(del1 == 2L, s"exactly batch 0's replaced files expire: $del1")
     assert(rowsAt(3L) == 240L, "the live snapshot is untouched")
   }
+
+  test("learnCentroidArrays releases its cached frame when a round fails") {
+    // a null vector fails the round's partition loop (or the seed read,
+    // when it is drawn as a seed); either way the cached frame must go
+    val rows = (0 until 20).map(i => (i.toLong,
+      if (i == 7) null else Seq(1.0 + i, 2.0, 3.0, 4.0 - i)))
+    val df = rows.toDF("vec_id", "embedding")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception](
+      Similarity.learnCentroidArrays(df, "vec_id", "embedding", 2, 2))
+    assert(spark.sparkContext.getPersistentRDDs.size === before)
+  }
 }

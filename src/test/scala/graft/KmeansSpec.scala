@@ -1,9 +1,11 @@
 package graft
 
 import graft.ext.{Dedup, Kmeans, Similarity}
-import org.apache.spark.sql.DataFrame
+import graft.functions.{Decimal12, Decimal12Sums}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{Decimal, DecimalType}
 
 /** In-engine exact Lloyd k-means + SemDeDup semantic dedup. */
 class KmeansSpec extends SparkSpec {
@@ -153,29 +155,9 @@ class KmeansSpec extends SparkSpec {
     // inline as the reference and diff the full (id, cluster, dist2)
     // assignment on the sf0.001 embeddings fixture against the model's
     // trained centroids
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.DecimalType
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val m = Kmeans.train(emb, "vec_id", "embedding", k = 8, iters = 2)
-    def r6p(c: org.apache.spark.sql.Column) =
-      floor(c * 1000000.0 + 0.5) / 1000000.0
-    val cdf = {
-      val rows = for {
-        cl <- m.cents.indices; j <- m.cents(cl).indices
-      } yield (cl.toLong, j, m.cents(cl)(j))
-      rows.toDF("_cl", "dim", "_c")
-    }
-    val ex = emb.select(col("vec_id").cast("long").as("_kid"),
-      posexplode(col("embedding").cast("array<double>"))
-        .as(Seq("dim", "_x")))
-    val d2 = ex.join(broadcast(cdf), "dim")
-      .groupBy(col("_kid"), col("_cl"))
-      .agg(r6p(sum(((col("_x") - col("_c")) * (col("_x") - col("_c")))
-        .cast(DecimalType(38, 12))).cast("double")).as("dist2"))
-    val w = Window.partitionBy(col("_kid")).orderBy(col("dist2"), col("_cl"))
-    val relational = d2.withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .select(col("_kid"), col("_cl"), col("dist2")).collect()
+    val relational = relationalAssign(emb, m.cents).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val rowLocal = Kmeans.assignFinal(emb, "vec_id", "embedding", m)
       .collect()
@@ -213,6 +195,214 @@ class KmeansSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(rowLocal == relational,
       "row-local nearestCentroid diverged from the relational pipeline")
+  }
+
+  // --- the relational Lloyd round the row-local kernels replaced ---
+
+  private def r6p(c: Column) = floor(c * 1000000.0 + 0.5) / 1000000.0
+
+  /** (vec_id, embedding) as (_kid, dim, _x) rows. */
+  private def exploded(df: DataFrame) =
+    df.select(col("vec_id").cast("long").as("_kid"),
+      posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "_x")))
+
+  /** The relational exact-decimal assignment (_kid, _cl, dist2):
+    * posexplode → broadcast join on dim → decimal-SUM groupBy → per-id
+    * window, the op sequence the DuckDB oracle replays. */
+  private def relationalAssign(df: DataFrame,
+      cents: Array[Array[Double]]): DataFrame = {
+    val cdf = (for {
+      cl <- cents.indices; j <- cents(cl).indices
+    } yield (cl.toLong, j, cents(cl)(j))).toDF("_cl", "dim", "_c")
+    val d2 = exploded(df).join(broadcast(cdf), "dim")
+      .groupBy(col("_kid"), col("_cl"))
+      .agg(r6p(sum(((col("_x") - col("_c")) * (col("_x") - col("_c")))
+        .cast(DecimalType(38, 12))).cast("double")).as("dist2"))
+    val w = Window.partitionBy(col("_kid")).orderBy(col("dist2"), col("_cl"))
+    d2.withColumn("_rn", row_number().over(w))
+      .where(col("_rn") === 1)
+      .select(col("_kid"), col("_cl"), col("dist2"))
+  }
+
+  /** [[Kmeans.train]] as relational rounds: [[relationalAssign]], then
+    * the (cluster, dim) exact-decimal update with carry-forward. */
+  private def relationalTrain(df: DataFrame, k: Int,
+      iters: Int): Array[Array[Double]] = {
+    var cents = df.select(col("vec_id").cast("long"),
+        col("embedding").cast("array<double>"))
+      .orderBy(col("vec_id")).limit(k).collect()
+      .map(_.getSeq[Double](1).toArray
+        .map(x => math.floor(x * 1000000.0 + 0.5) / 1000000.0))
+    for (_ <- 1 to iters) {
+      val upd = exploded(df).join(relationalAssign(df, cents), "_kid")
+        .groupBy(col("_cl"), col("dim"))
+        .agg(r6p(sum(col("_x").cast(DecimalType(38, 12))).cast("double")
+          / count(lit(1))).as("_c"))
+        .collect()
+      val next = cents.map(_.clone)
+      upd.foreach { r =>
+        next(r.getLong(0).toInt)(r.getInt(1)) = r.getDouble(2) }
+      cents = next
+    }
+    cents
+  }
+
+  private def bits(cents: Array[Array[Double]]) =
+    cents.map(_.map(java.lang.Double.doubleToLongBits).toSeq).toSeq
+
+  test("Decimal12.unscaled ≡ Spark's CAST(x AS DECIMAL(38,12)) on random " +
+      "values, near-ties and the fast-path edges") {
+    /** Spark's Cast: the unscaled value, or Wide past 63 bits or 38
+      * digits. */
+    def cast12(x: Double): Long = {
+      val d = Decimal(x)
+      if (!d.changePrecision(38, 12)) Decimal12.Wide
+      else {
+        val u = d.toJavaBigDecimal.unscaledValue
+        if (u.bitLength < 64) u.longValue else Decimal12.Wide
+      }
+    }
+    val r = new scala.util.Random(13)
+    val two42 = 4398046511104.0 / 1e12
+    val edges = Seq(0.0, -0.0, Double.MinPositiveValue, -Double.MinPositiveValue,
+      1e-310, -1e-310, java.lang.Double.MIN_NORMAL, 0.5e-12, 1.5e-12,
+      two42, -two42, 9.2e6, 9.3e6, -9.3e6, 1e25) ++
+      Seq(two42, -two42).flatMap(x =>
+        Seq(Math.nextUp(x), Math.nextDown(x)))
+    val ties = (0 until 20000).flatMap { _ =>
+      val n = (r.nextDouble() * 8e12).toLong
+      val x = (if (r.nextBoolean()) 1 else -1) * (n + 0.5) * 1e-12
+      Seq(x, Math.nextUp(x), Math.nextDown(x))
+    }
+    val random = (0 until 200000).map { i =>
+      val sign = if (r.nextBoolean()) 1.0 else -1.0
+      if (i % 2 == 0) sign * r.nextDouble() * 8.0
+      else sign * math.pow(10, r.nextDouble() * 23 - 15)
+    }
+    val all = edges ++ ties ++ random
+    val bad = all.filter(x => Decimal12.unscaled(x) != cast12(x))
+    assert(bad.size === 0, s"mismatches, e.g. ${bad.take(5)}")
+    // the constructed cases through Spark's own Cast expression too
+    val viaSql = (edges ++ ties.take(300)).toDF("x")
+      .select(col("x"), col("x").cast(DecimalType(38, 12)).as("d")).collect()
+    viaSql.foreach { row =>
+      val x = row.getDouble(0)
+      val u = row.getDecimal(1).unscaledValue
+      assert((if (u.bitLength < 64) u.longValue else Decimal12.Wide) ===
+        Decimal12.unscaled(x), s"CAST($x)")
+    }
+    // the way back: Decimal12.toDouble ≡ BigDecimal.doubleValue, on both
+    // sides of 2^52
+    for (s <- (0 until 20000).map(_ => r.nextLong() >> r.nextInt(40)) ++
+        Seq(0L, 1L, -1L, (1L << 52) - 1, 1L << 52, -(1L << 52), Long.MaxValue))
+      assert(Decimal12.toDouble(s) ===
+        java.math.BigDecimal.valueOf(s, 12).doubleValue, s"toDouble($s)")
+  }
+
+  test("Decimal12Sums ≡ a BigDecimal sum of Spark casts, in any order, " +
+      "through wide terms and Long overflow") {
+    val r = new scala.util.Random(17)
+    val terms = (0 until 4000).map { i =>
+      val sign = if (r.nextBoolean()) 1.0 else -1.0
+      sign * (if (i % 3 == 0) 5e6 + r.nextDouble() * 4e6
+              else if (i % 3 == 1) r.nextDouble() * 1e20
+              else r.nextDouble() * 3)
+    }
+    val want = terms.map(Decimal12.cast).reduce(_ add _)
+    // sum 0 adds every term, sum 1 only the small ones, sum 2 none
+    val whole = new Decimal12Sums(3)
+    terms.foreach(whole.add(0, _))
+    terms.filter(math.abs(_) < 3).foreach(whole.add(1, _))
+    val parts = terms.grouped(37).map { g =>
+      val p = new Decimal12Sums(3); g.reverse.foreach(p.add(0, _)); p }.toSeq
+    val merged = new Decimal12Sums(3)
+    parts.reverse.foreach(merged.merge)
+    merged.merge(whole)
+    whole.merge(new Decimal12Sums(3))
+    assert(whole.toBigDecimal(0).compareTo(want) === 0)
+    assert(whole.toDouble(0) === want.doubleValue)
+    assert(merged.toBigDecimal(0).compareTo(want.add(want)) === 0)
+    assert(merged.toDouble(0) === want.add(want).doubleValue)
+    val small = terms.filter(math.abs(_) < 3).map(Decimal12.cast).reduce(_ add _)
+    assert(whole.toBigDecimal(1).compareTo(small) === 0)
+    assert(whole.isEmpty(2) && !whole.isEmpty(1))
+    whole.clear(0)
+    assert(whole.isEmpty(0) && whole.toBigDecimal(0).signum === 0)
+  }
+
+  test("a Lloyd round is one Spark job: train(k = 8, iters = 3) runs " +
+      "1 seed job + 3 round jobs") {
+    import org.apache.spark.graftbridge.ListenerBus
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    for (fast <- Seq(false, true)) {
+      val (_, js) = ListenerBus.jobsDuring(spark.sparkContext)(
+        if (fast) Kmeans.trainFast(emb, "vec_id", "embedding", k = 8, iters = 3)
+        else Kmeans.train(emb, "vec_id", "embedding", k = 8, iters = 3))
+      assert(js.size === 4, s"fast = $fast: ${js.size} jobs: $js")
+    }
+  }
+
+  test("train ≡ relational rounds, bit for bit, on the embeddings " +
+      "fixture and on components that force both BigDecimal fallbacks") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    // two clouds at ±5e6: every cast leaves the scaled-long fast path
+    // (cross-cloud terms are ~1e26 scaled, too wide for a Long), and two
+    // members' components already overflow a Long cell sum
+    val big = (0 until 24).map { i =>
+      val s = if (i % 2 == 0) 1.0 else -1.0
+      (i.toLong, (0 until 4).map(j =>
+        s * (5e6 + 0.37 * i + 0.123456789 * j) + 1.7 * ((i * 7 + j) % 5)))
+    }.toDF("vec_id", "embedding")
+    for ((name, df, k) <- Seq(("embeddings", emb, 8), ("big", big, 3))) {
+      val m = Kmeans.train(df, "vec_id", "embedding", k, iters = 3)
+      assert(bits(m.cents) === bits(relationalTrain(df, k, 3)),
+        s"$name: centroids differ from the relational rounds")
+      val rowLocal = Kmeans.assignFinal(df, "vec_id", "embedding", m)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val relational = relationalAssign(df, m.cents).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(rowLocal == relational, s"$name: final assignment differs")
+      if (name == "big")
+        assert(relational.groupBy(_._2).values.exists(_.size >= 2),
+          "no cluster of the big fixture sums two ~5e6 components")
+    }
+  }
+
+  test("non-finite and out-of-range components under the default ANSI " +
+      "setting: NULL in the sum, counted in the mean; 1e26 fails") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity)) {
+      // id 2 joins cluster 0 on its finite dim, its bad component is
+      // skipped by the sum but counted: dim 1 = (1.0 + NULL) / 2; id 3
+      // has no finite term and joins no cluster
+      val pts = Seq((0L, Seq(1.0, 1.0)), (1L, Seq(-1.0, -1.0)),
+        (2L, Seq(1.5, bad)), (3L, Seq(bad, bad))).toDF("vec_id", "embedding")
+      assert(Kmeans.train(pts, "vec_id", "embedding", k = 2, iters = 2)
+        .cents.map(_.toSeq).toSeq === Seq(Seq(1.25, 0.5), Seq(-1.0, -1.0)))
+      // a cluster whose only member has a NULL component: the NULL SUM
+      // reads as 0.0
+      val lone = Seq((0L, Seq(1.0, bad)), (1L, Seq(-1.0, -1.0)))
+        .toDF("vec_id", "embedding")
+      assert(Kmeans.train(lone, "vec_id", "embedding", k = 2, iters = 1)
+        .cents.map(_.toSeq).toSeq === Seq(Seq(1.0, 0.0), Seq(-1.0, -1.0)))
+    }
+    val huge = Seq((0L, Seq(1.0, 1.0)), (1L, Seq(-1.0, -1.0)),
+      (2L, Seq(1.5, 2e26))).toDF("vec_id", "embedding")
+    val e = intercept[Exception](
+      Kmeans.train(huge, "vec_id", "embedding", k = 2, iters = 1))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("cannot be represented as Decimal(38, 12)")), e)
+  }
+
+  test("k <= 0 fails at the driver with a message naming k") {
+    val df = cloud(4)
+    for (k <- Seq(0, -1); fast <- Seq(false, true)) {
+      val e = intercept[IllegalArgumentException](
+        if (fast) Kmeans.trainFast(df, "vec_id", "embedding", k, 1)
+        else Kmeans.train(df, "vec_id", "embedding", k, 1))
+      assert(e.getMessage.contains(s"k = $k"))
+    }
   }
 
   // --- SemDeDup's cluster-local tail against the global reference ---
