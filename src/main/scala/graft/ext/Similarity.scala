@@ -1,8 +1,14 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  Descending, Expression, GenericInternalRow, InterpretedOrdering, JoinedRow,
+  MutableProjection, SortOrder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType}
+import scala.collection.mutable.ArrayBuffer
 
 /** Embedding similarity search over an `array<float>` column.
   *
@@ -907,48 +913,148 @@ object Similarity {
       stats.filter(s => drifted.contains(s._1)).map(_._2).sum, before, after)
   }
 
-  /** Probe a persisted IVF index with one driver round-trip before the
-    * query itself. The query side is collected once as (query_id, qvec,
-    * _qn, nearest lists) — no job at all for a driver-built query frame.
-    * From it the driver takes the probed list ids (≤ nLists values,
-    * bounded by the index, never by the data), applied as an `isin`
-    * filter so the parquet scan statically prunes to the probed
-    * partitions, and the exploded probe rows, which join the corpus as a
-    * broadcast local relation. A query whose list array is null (null
-    * vector) contributes no probe rows, as `explode(null)` would. The
-    * corpus is read with the schema recorded at build
-    * ([[readIvfCorpus]]); an older index without `schema.json` falls back
-    * to the inferred read. The per-query top-k is the only shuffle. Same
-    * scoring/tie-break semantics as [[ivfTopKLearned]] — identical
-    * results for identical centroids. */
+  /** Probe a persisted IVF index as ONE Spark job with no shuffle. The
+    * probe runs when called and returns a local frame of (query_id,
+    * candidate_id, cosine, rank).
+    *
+    * The query side is collected once as (query_id, qvec, _qn, nearest
+    * lists) — no job at all for a driver-built query frame. From it the
+    * driver takes the probed list ids (≤ nLists values, bounded by the
+    * index, never by the data), applied as an `isin` filter so the
+    * parquet scan statically prunes to the probed partitions, and one
+    * broadcast `list -> queries` map. Each task scores its corpus rows
+    * against the queries that probe the row's list and keeps a bounded
+    * top-k per query id ([[ProbeTopK]]); one depth-1 `treeAggregate`
+    * merges the partials at the driver, whose state stays O(|Q|·k) on
+    * top of the query set it already holds. A query whose list array is
+    * null (null vector) or whose id is null probes nothing. The corpus is
+    * read with the schema recorded at build ([[readIvfCorpus]]); an older
+    * index without `schema.json` falls back to the inferred read.
+    *
+    * Results equal the relational form bit for bit: a broadcast join on
+    * `list`, `id =!= query_id`, `cosine = round(dot(qvec, v) / (_qn·_n),
+    * roundScale)` and `row_number()` over `cosine DESC NULLS LAST,
+    * candidate_id` per `query_id`, kept to rank ≤ k (ExtSpec keeps that
+    * form as the reference). The tasks evaluate that same Catalyst
+    * scoring expression, with its null, width, NaN and ANSI
+    * divide-by-zero behaviour, and rank with Spark's own ordering (NaN
+    * greatest, -0.0 equal to 0.0). Identical results to
+    * [[ivfTopKLearned]] for identical centroids. Ids are compared as
+    * longs: a query or corpus `idCol` that is not an integral type fails
+    * at the driver. */
   def ivfProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nProbe: Int = 4, roundScale: Int = RoundScale): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.BindReferences
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+      ShortType, StructField, StructType}
     import scala.jdk.CollectionConverters._
     recoverCorpus(spark, path)
     val cents = loadIvfCentroids(spark, path)
     val corpus = readIvfCorpus(spark, path)
+      .select(col(idCol), col(vecCol), col("_n"), col("list"))
     val q = asDouble(queries, vecCol)
       .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
         norm(col(vecCol)).as("_qn"),
         nearestLists(col(vecCol), cents, nProbe).as("list"))
-    val probes = q.collect().toSeq.filterNot(_.isNullAt(3)).flatMap { r =>
-      r.getSeq[Int](3).map(l => Row(r.get(0), r.get(1), r.get(2), l))
+    val (qId, cId) = (q.schema("query_id"), corpus.schema(idCol))
+    for ((side, t) <- Seq("query" -> qId.dataType, "corpus" -> cId.dataType))
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"ivfProbeIndex: the $side id column $idCol is ${t.simpleString}; " +
+          "the probe compares ids as longs and needs an integral type")
+    // `id =!= NULL` is NULL: a query without an id matches no candidate
+    val rows = q.collect().filterNot(r => r.isNullAt(0) || r.isNullAt(3))
+    // the Window partitions by query_id: queries sharing an id share a slot
+    val ids = rows.map(_.get(0)).distinct
+    val slot = ids.zipWithIndex.toMap
+    val qVec = CatalystTypeConverters.createToCatalystConverter(
+      StructType(q.schema.fields.slice(1, 3)))
+    val byList = rows.toSeq.flatMap { r =>
+      val p = new Probe(slot(r.get(0)), r.get(0).asInstanceOf[Number].longValue,
+        qVec(Row(r.get(1), r.get(2))).asInstanceOf[InternalRow])
+      r.getSeq[Int](3).map(_ -> p)
+    }.groupBy(_._1).map { case (l, ps) => l -> ps.map(_._2).toArray }
+    // the relational form's cosine, analyzed over (qvec, _qn, corpus row)
+    val shape = spark.createDataFrame(java.util.List.of[Row](),
+        StructType(q.schema.fields.slice(1, 3) ++ corpus.schema.fields))
+      .select(round(dot(col("qvec"), col(vecCol)) / (col("_qn") * col("_n")),
+        roundScale)).queryExecution.analyzed
+    val score = BindReferences.bindReference(shape.expressions.head,
+      shape.children.head.output)
+    val zero = new ProbeTopK(k, ids.length, cId.dataType, score)
+    val top =
+      if (byList.isEmpty) zero
+      else {
+        val bc = spark.sparkContext.broadcast(byList)
+        try corpus.where(col("list").isin(byList.keys.toSeq.sorted: _*))
+          .queryExecution.toRdd
+          .treeAggregate(zero)((acc, row) => acc.add(row, bc.value),
+            (a, b) => a.merge(b), depth = 1)
+        finally bc.destroy()
+      }
+    val out = ids.indices.flatMap { s =>
+      top.ranked(s).zipWithIndex.map { case (c, i) =>
+        Row(ids(s), c.get(1, cId.dataType),
+          if (c.isNullAt(0)) null else c.getDouble(0), i + 1)
+      }
     }
-    val probedLists = probes.map(_.getInt(3)).distinct.sorted
-    val qProbes = spark.createDataFrame(probes.asJava, StructType(
-      q.schema.fields.init :+ StructField("list", IntegerType, nullable = false)))
-    val scored = corpus.where(col("list").isin(probedLists: _*))
-      .join(broadcast(qProbes), Seq("list"))
-      .where(col(idCol) =!= col("query_id"))
-      .select(col("query_id"), col(idCol).as("candidate_id"),
-        round(dot(col("qvec"), col(vecCol)) / (col("_qn") * col("_n")),
-          roundScale).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("candidate_id"))
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    spark.createDataFrame(out.asJava, StructType(Seq(
+      StructField("query_id", qId.dataType, qId.nullable),
+      StructField("candidate_id", cId.dataType, cId.nullable),
+      StructField("cosine", DoubleType),
+      StructField("rank", IntegerType, nullable = false))))
+  }
+
+  /** One query's probe of a list: its top-k slot, its id as a long and
+    * its (qvec, _qn) row. */
+  private final class Probe(val slot: Int, val id: Long,
+      val vec: InternalRow) extends Serializable
+
+  /** Per-query top-k of an index probe: (cosine, candidate id) rows, cut
+    * to the k best under `cosine DESC NULLS LAST, candidate_id ASC` with
+    * Spark's ordering. `add` scores one corpus row (id, vec, _n, list)
+    * with the bound `score` expression against every probe of its list;
+    * candidates whose id equals the query's, or is null, are skipped
+    * before scoring, as the relational filter drops them before its
+    * projection. Rows tied on both keys are identical apart from their
+    * rank, so the cut keeps the result deterministic. */
+  private final class ProbeTopK(k: Int, slots: Int, idType: DataType,
+      score: Expression) extends Serializable {
+    private val best = Array.fill(slots)(ArrayBuffer.empty[InternalRow])
+    @transient private lazy val proj = MutableProjection.create(Seq(score))
+    @transient private lazy val joined = new JoinedRow
+    @transient private lazy val ordering: Ordering[InternalRow] =
+      new InterpretedOrdering(Seq(
+        SortOrder(BoundReference(0, DoubleType, nullable = true), Descending),
+        SortOrder(BoundReference(1, idType, nullable = true), Ascending)))
+
+    def add(row: InternalRow, byList: Map[Int, Array[Probe]]): ProbeTopK = {
+      if (!row.isNullAt(0)) {
+        val id = row.get(0, idType)
+        val idL = id.asInstanceOf[Number].longValue
+        for (p <- byList(row.getInt(3)) if p.id != idL) {
+          val s = proj(joined(p.vec, row))
+          keep(p.slot, new GenericInternalRow(Array[Any](
+            if (s.isNullAt(0)) null else s.getDouble(0), id)))
+        }
+      }
+      this
+    }
+
+    private def keep(s: Int, c: InternalRow): Unit = {
+      best(s) += c
+      if (best(s).length >= math.max(2 * k, 64)) best(s) = ranked(s)
+    }
+
+    def ranked(s: Int): ArrayBuffer[InternalRow] =
+      best(s).sorted(ordering).take(k)
+
+    def merge(o: ProbeTopK): ProbeTopK = {
+      for (s <- 0 until slots) { o.best(s).foreach(keep(s, _)) }
+      this
+    }
   }
 
   // ------------------------------------------------------- IVF-PQ index

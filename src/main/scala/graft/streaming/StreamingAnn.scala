@@ -24,8 +24,13 @@ import org.apache.spark.sql.functions._
 object StreamingAnn {
 
   /** Probe the index with streaming queries: emits (query_id, rank,
-    * candidate_id, cosine), top-k per query, same scoring/tie-break
-    * semantics as [[Similarity.ivfProbeIndex]]. */
+    * candidate_id, cosine), top-k per query. The cosine is the expression
+    * [[Similarity.ivfProbeIndex]] scores with, and candidates rank by
+    * ascending (1 − cosine, candidate_id), which is the batch order for
+    * finite cosines. It is not the batch order for the others: here a
+    * NULL cosine (null element, other width) ranks first and a NaN one
+    * last, where the batch probe ranks NaN first and NULL last. The
+    * query id is cast to long. */
   def ivfProbeStream(spark: SparkSession, queries: DataFrame,
       idCol: String, vecCol: String, indexPath: String, k: Int,
       nProbe: Int = 4): DataFrame = {
